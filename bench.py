@@ -195,7 +195,10 @@ def main() -> None:
         "runs_per_query": "1 warmup + 3 timed, median reported",
         "spread": spread,
         "loadavg": [load1, load5, load15],
-        "n_cpus": os.cpu_count(),
+        # the configured Spark parallelism (local[cpus]), not the host's
+        # core count: a scaling comparison across cpus settings must see
+        # the setting each run actually used
+        "n_cpus": cpus,
         # fixed-work single-core spin at invoke and at end (ms): detects
         # host CPU throttling that loadavg cannot see — compare across
         # runs on the same interpreter; 2x the host's usual figure means

@@ -1936,8 +1936,7 @@ class MarcStore:
             self._summary_name(record_type),
             {"base_segments": base_segments})
         n_after = self.backend.append_partitioned(
-            out, name, ["pt"], extra={"n_buckets": mod}, seg_prefix=name,
-            sort_col="record_id")
+            out, name, ["pt"], extra={"n_buckets": mod}, sort_col="record_id")
         self._mark_marker_committed(marker)
         try:
             # summary existence re-checked AFTER the append: if a

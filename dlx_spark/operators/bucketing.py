@@ -17,18 +17,14 @@ The 100 TB playbook the rest of the engine assumes:
   lists: partitioned by ``list_id``, probes read nprobe/n_centroids of
   the data.
 
-All index storage routes through the tableio backend seam (the same
-one the incremental dedup indexes use): indexes are named partitioned
-CATALOG tables, not raw paths, so ``refresh_ivf_index``'s full-index
-rewrite publishes via the shared ``replace``/``recover_replace``
-protocol — on the default parquet backend the catalog registration at
-the end of ``saveAsTable`` is the stage's natural commit point (a
-crash mid-write leaves files but no table, so recovery never sees a
-torn stage), and on the transactional ``VersionedTableBackend`` the
-swap is an atomic manifest commit, readers hold snapshots across it,
-and a concurrent ``append_ivf_index`` (whose rows were assigned under
-the OLD centroids) fails the refresh via ``on_conflict="fail"``
-instead of being silently lost.
+All index storage routes through the tableio backend (the same one the
+incremental dedup indexes use): indexes are named partitioned tables,
+not raw paths, so ``refresh_ivf_index``'s full-index rewrite publishes
+via the shared ``replace``/``recover_replace`` protocol — the swap is
+an atomic manifest commit, readers hold snapshots across it, and a
+concurrent ``append_ivf_index`` (whose rows were assigned under the
+OLD centroids) fails the refresh via ``on_conflict="fail"`` instead of
+being silently lost.
 """
 
 from __future__ import annotations
@@ -37,19 +33,16 @@ import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from dlx_spark import tableio
+from dlx_spark import fsio, tableio
+from dlx_spark.tableio import get_backend
 from dlx_spark.operators import similarity
-
-
-def _be() -> "tableio.ParquetTableBackend":
-    return tableio.get_backend()
 
 
 def _check_name(name: str) -> None:
     if "/" in name or ":" in name:
         raise ValueError(
             f"{name!r} looks like a filesystem path; the ANN index layouts "
-            "are catalog tables routed through the tableio backend seam "
+            "are tables routed through the tableio backend "
             "(pass a table name — see README 'Notable behavior changes')")
 
 
@@ -61,13 +54,28 @@ def write_bucketed(df: DataFrame, table: str, key: str | list[str],
     no Exchange; sorting within buckets additionally enables a
     zero-sort SortMergeJoin."""
     keys = [key] if isinstance(key, str) else list(key)
-    # a killed prior run can leave this table's managed location staged
-    # but unregistered — reclaim it or the create fails forever
-    tableio.reclaim_orphan_location(df.sparkSession, table)
+    _clear_unregistered_location(df.sparkSession, table)
     w = df.write.mode(mode).bucketBy(n_buckets, *keys)
     if sort:
         w = w.sortBy(*keys)
     w.saveAsTable(table)
+
+
+def _clear_unregistered_location(spark: SparkSession, table: str) -> None:
+    """A driver killed inside ``saveAsTable`` leaves files at the
+    managed location but no catalog entry (registration comes last, so
+    that state is never live data); without clearing it every later
+    create of the name fails LOCATION_ALREADY_EXISTS.  Spark lowercases
+    the table part of the path; ``locationUri`` carries the ``.db``
+    suffix for non-default databases."""
+    if spark.catalog.tableExists(table):
+        return
+    parts = table.replace("`", "").split(".")
+    db = parts[-2] if len(parts) > 1 else spark.catalog.currentDatabase()
+    loc = fsio.join(spark.catalog.getDatabase(db).locationUri,
+                    parts[-1].lower())
+    if fsio.exists(spark, loc):
+        fsio.rmtree(spark, loc)
 
 
 def read_table(spark: SparkSession, table: str) -> DataFrame:
@@ -96,7 +104,7 @@ def write_lsh_index(df: DataFrame, name: str, n_planes: int = 8,
     # band signature array) — joining slim keys back to the vectors
     # would pay a corpus-sized shuffle for rows a projection produces
     rows = _lsh_rows(df, n_planes, seed, vec_col, id_col, dim, bands)
-    _be().write_partitioned(rows, name, ["band", "bucket"])
+    get_backend().write_partitioned(rows, name, ["band", "bucket"])
 
 
 def _lsh_rows(df: DataFrame, n_planes: int, seed: int, vec_col: str,
@@ -123,13 +131,12 @@ def append_lsh_index(df: DataFrame, name: str, n_planes: int = 8,
     rows bucket identically to the original write — pass the SAME
     geometry arguments or the index becomes silently unprobeable.
     Unlike IVF there is no trained quantizer to drift, so LSH appends
-    never need a refresh; on the versioned backend each append adds a
-    scan root until compaction folds them (``auto_compact_at`` bounds
-    that automatically)."""
+    never need a refresh; each append adds a scan root until compaction
+    folds them (``auto_compact_at`` bounds that automatically)."""
     _check_name(name)
     dim = _infer_dim(df, vec_col, dim)
     rows = _lsh_rows(df, n_planes, seed, vec_col, id_col, dim, bands)
-    _be().append_partitioned(rows, name, ["band", "bucket"])
+    get_backend().append_partitioned(rows, name, ["band", "bucket"])
 
 
 def _infer_dim(df: DataFrame, vec_col: str, dim: int | None) -> int:
@@ -194,8 +201,7 @@ def probe_lsh_index(spark: SparkSession, name: str, query: list[float],
     _check_name(name)
     pairs = _query_band_buckets(query, n_planes, seed, bands,
                                 multiprobe_hamming)
-    _be().refresh(spark, name)
-    idx = _be().read(spark, name)
+    idx = get_backend().read(spark, name)
     if "band" not in idx.columns:       # pre-banding layout
         if bands > 1:
             raise ValueError(f"index {name} has no band column "
@@ -277,8 +283,7 @@ def knn_join_lsh_index(spark: SparkSession, name: str, probes: DataFrame,
     else:
         p = p.withColumnRenamed("b0", "bucket")
 
-    _be().refresh(spark, name)
-    idx = _be().read(spark, name)
+    idx = get_backend().read(spark, name)
     if "band" not in idx.columns:       # pre-banding layout
         if bands > 1:
             raise ValueError(f"index {name} has no band column "
@@ -317,7 +322,7 @@ def write_ivf_index(df: DataFrame, name: str, centroids: np.ndarray,
     (catalog table ``name`` via the tableio backend)."""
     _check_name(name)
     assigned = similarity.ivf_assign(df, centroids, vec_col=vec_col, id_col=id_col)
-    _be().write_partitioned(assigned, name, ["list_id"])
+    get_backend().write_partitioned(assigned, name, ["list_id"])
 
 
 def append_ivf_index(df: DataFrame, name: str, centroids: np.ndarray,
@@ -334,7 +339,7 @@ def append_ivf_index(df: DataFrame, name: str, centroids: np.ndarray,
     OPTIMIZE analog for the ANN layer."""
     _check_name(name)
     assigned = similarity.ivf_assign(df, centroids, vec_col=vec_col, id_col=id_col)
-    _be().append_partitioned(assigned, name, ["list_id"])
+    get_backend().append_partitioned(assigned, name, ["list_id"])
 
 
 def refresh_ivf_index(spark: SparkSession, name: str, n_centroids: int = 16,
@@ -349,35 +354,33 @@ def refresh_ivf_index(spark: SparkSession, name: str, n_centroids: int = 16,
     ``replace`` protocol — the same staged-swap every index rewrite in
     the engine uses (compaction, rebucket), not a bespoke one: a crash
     anywhere is repaired by ``recover_ivf_index`` → ``recover_replace``
-    on next open (on the parquet backend a staged TABLE exists only if
-    its ``saveAsTable`` completed — the catalog registration is the
-    commit point, so recovery never sees a torn stage; on the
-    versioned backend the swap is an atomic manifest commit and
-    readers hold snapshots across it).  A concurrent
-    ``append_ivf_index`` does NOT commute with re-quantization (its
-    rows were assigned under the old centroids and would be silently
-    unfindable), so the publish carries a snapshot token with
-    ``on_conflict="fail"`` — the transactional backend raises
+    on next open (a stage is visible only once its own manifest commit
+    landed, so recovery never sees a torn stage; the swap is an atomic
+    manifest commit and readers hold snapshots across it).  A
+    concurrent ``append_ivf_index`` does NOT commute with
+    re-quantization (its rows were assigned under the old centroids and
+    would be silently unfindable), so the publish carries a snapshot
+    token with ``on_conflict="fail"`` — the backend raises
     ``tableio.ConcurrentWriteError``, the stage is cleaned, and the
     caller re-runs over the grown index (same rule as
     ``EmbeddingIndex.rebucket``)."""
     _check_name(name)
-    _be().refresh(spark, name)
-    token = _be().snapshot_token(spark, name)
-    cur = _be().read(spark, name).select(F.col("id").alias("vec_id"),
-                                         F.col("vec").alias("embedding"))
+    be = get_backend()
+    token = be.snapshot_token(spark, name)
+    cur = be.read(spark, name).select(F.col("id").alias("vec_id"),
+                                      F.col("vec").alias("embedding"))
     cents = similarity.ivf_centroids(cur, n_centroids=n_centroids, iters=iters,
                                      seed=seed, vec_col="embedding",
                                      sample_cap=sample_cap)
     staged = f"{name}__refresh"
-    _be().write_partitioned(
+    be.write_partitioned(
         similarity.ivf_assign(cur, cents, vec_col="embedding",
                               id_col="vec_id"),
         staged, ["list_id"])
     try:
-        _be().replace(spark, name, staged, token=token, on_conflict="fail")
+        be.replace(spark, name, staged, token=token, on_conflict="fail")
     except tableio.ConcurrentWriteError:
-        _be().drop(spark, staged)
+        be.drop(spark, staged)
         raise
     return cents
 
@@ -390,7 +393,7 @@ def recover_ivf_index(spark: SparkSession, name: str) -> None:
     (live missing / swap uncommitted) or drops the redundant stage
     (live intact)."""
     _check_name(name)
-    _be().recover_replace(spark, name, f"{name}__refresh")
+    get_backend().recover_replace(spark, name, f"{name}__refresh")
 
 
 def probe_ivf_index(spark: SparkSession, name: str, centroids: np.ndarray,
@@ -404,8 +407,7 @@ def probe_ivf_index(spark: SparkSession, name: str, centroids: np.ndarray,
         np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12)
     probe = [int(i) for i in np.argsort(-(cn @ qn))[:nprobe]]
 
-    _be().refresh(spark, name)
-    idx = _be().read(spark, name).filter(F.col("list_id").isin(probe))
+    idx = get_backend().read(spark, name).filter(F.col("list_id").isin(probe))
     return (idx.select("id", similarity._cosine_expr("vec", [float(x) for x in q])
                        .alias("cosine"))
             .orderBy(F.desc("cosine"), F.asc("id"))
@@ -428,8 +430,7 @@ def semdedup_index(spark: SparkSession, name: str,
     ``similarity.semdedup`` with the same centroids by construction
     (pytest-pinned)."""
     _check_name(name)
-    _be().refresh(spark, name)
-    assigned = _be().read(spark, name).select(
+    assigned = get_backend().read(spark, name).select(
         "id", F.col("list_id").alias("cluster"), "vec")
     out = similarity.semdedup_prune(assigned, threshold=threshold,
                                     cluster_cap=cluster_cap)
@@ -471,8 +472,7 @@ def semdedup_append(spark: SparkSession, name: str, batch: DataFrame,
     assigned = similarity.ivf_assign(batch, centroids, vec_col=vec_col,
                                      id_col=id_col).withColumnRenamed(
                                          "list_id", "cluster").cache()
-    _be().refresh(spark, name)
-    existing = _be().read(spark, name)
+    existing = get_backend().read(spark, name)
     if replay_safe:
         existing = existing.join(assigned.select("id"), "id", "left_anti")
     near_existing = (assigned.join(
@@ -485,18 +485,18 @@ def semdedup_append(spark: SparkSession, name: str, batch: DataFrame,
                                            threshold=threshold)
     survivors = (batch_kept.join(near_existing, "id", "left_anti")
                  .join(assigned.select("id", "vec"), "id"))
-    # PIN the survivor set before the append: the index read above is
-    # resolved at ACTION time on the catalog backend, so a lazy
-    # survivors plan evaluated after the append would see the appended
-    # rows and prune every survivor against itself
+    # PIN the survivor set before the append: the replay_safe
+    # idempotence read below resolves the index again, and a lazy
+    # survivors plan must not be re-evaluated once its own rows are in
+    # the index
     survivors = survivors.localCheckpoint(eager=True)
     to_append = survivors.select("id", F.col("cluster").alias("list_id"),
                                  "vec")
     if replay_safe:
         # idempotent append: a crashed attempt's rows stay, nothing doubles
-        to_append = to_append.join(_be().read(spark, name).select("id"),
-                                   "id", "left_anti")
-    _be().append_partitioned(to_append, name, ["list_id"])
+        indexed = get_backend().read(spark, name).select("id")
+        to_append = to_append.join(indexed, "id", "left_anti")
+    get_backend().append_partitioned(to_append, name, ["list_id"])
     # the survivors checkpoint is the only thing the returned frame
     # depends on: release the per-batch assignment cache so a
     # long-lived streaming ingest does not accumulate one pinned

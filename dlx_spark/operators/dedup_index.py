@@ -6,10 +6,11 @@ increments.  Re-running full-corpus dedup per increment re-shingles and
 re-hashes everything ever ingested — O(corpus) compute per day.  These
 indexes persist the corpus's dedup STATE instead:
 
-- ``DigestIndex``     — one md5 digest per ingested document, stored as
-                        a table bucketed by digest.  Exact dedup of a
-                        batch is one anti-join whose bucketed side needs
-                        no Exchange; the corpus text is never touched.
+- ``DigestIndex``     — one md5 digest per ingested document, stored
+                        clustered by digest.  Exact dedup of a batch is
+                        one anti-join against the slim digest table
+                        (broadcast while it fits); the corpus text is
+                        never touched.
 - ``SimHashIndex``    — the 64-bit fingerprints plus their 4×16-bit
                         pigeonhole band keys, persisted the same way;
                         probes find hamming-≤3 neighbors of a batch
@@ -32,12 +33,12 @@ indexes persist the corpus's dedup STATE instead:
                         MinHash index).
 
 All indexes are append-only: after a batch is deduped, its survivors'
-state is appended (bucketed appends keep the layout), so tomorrow's
-batch sees today's survivors.  Index parameters (hash family seed,
-bands, shingle width...) are persisted in a ``*_meta`` table at create
-time and re-read at probe/append time — a probe with mismatched
-parameters would silently find nothing, so they are never re-specified
-by callers.
+state is appended (one clustered segment per append, folded by
+``compact``), so tomorrow's batch sees today's survivors.  Index
+parameters (hash family seed, bands, shingle width...) are persisted in
+a ``*_meta`` table at create time and re-read at probe/append time — a
+probe with mismatched parameters would silently find nothing, so they
+are never re-specified by callers.
 
 The reference has no incremental machinery (its dedup is the per-commit
 signature check, /root/reference/dlx/marc/__init__.py:2181-2182); this
@@ -54,70 +55,52 @@ import json
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dlx_spark import tableio
+from dlx_spark.tableio import get_backend
 from dlx_spark.operators import common, dedup
 
-
-def _be() -> "tableio.ParquetTableBackend":
-    """The active table-commit backend (dlx_spark.tableio) — every
-    catalog-table operation of the index classes routes through it, so
-    a transactional table format (Delta/Iceberg) slots in via
-    ``tableio.set_backend`` without touching any call-site here."""
-    return tableio.get_backend()
 
 # Probe-side broadcast gate: a daily-increment batch's band keys are a
 # few MB and belong in a broadcast (zero shuffle of index data), but a
 # backfill-sized batch would blow the driver/executor broadcast memory.
 # Above this many band-key rows (~50-100 MB serialized) the probe falls
-# back to a plain equi-join on (band, bucket): the index side is
-# bucketed by bucket, so its layout already satisfies the join's
-# distribution and only the batch side shuffles.
+# back to a plain shuffle equi-join on (band, bucket): both sides are
+# hash-exchanged on the join key (the index tables are path-based, so
+# no catalog bucket spec lets Spark elide the index-side exchange).
 PROBE_BROADCAST_ROW_CAP = 2_000_000
 
 
 def _compact_table(spark: SparkSession, table: str, key: str,
                    n_buckets: int, distinct: bool = False) -> None:
-    """Rewrite a bucketed table into one file per bucket.
+    """Fold an append-only index table into one fresh segment.
 
-    Append-only indexes accrete one file per bucket per appended batch
-    (a year of daily ingest = 365 × n_buckets files); this is the
-    OPTIMIZE analog, and it is SHUFFLE-FREE: forcing a bucketed scan
-    gives exactly one input partition per bucket (autoBucketedScan
-    would otherwise split by file and an explicit repartition gets
-    optimized away as redundant against the table's logical bucketing),
-    so each write task holds one whole bucket and emits one file.  The
-    swap is DROP + RENAME of a staged table; a crash between the two is
-    repaired by ``_recover_compaction`` on next open (the staged table
-    holds the full data either way).
+    Append-only indexes accrete one segment per appended batch (a year
+    of daily ingest = 365 scan roots); this is the OPTIMIZE analog.  The
+    rewrite is staged under ``{table}__compact`` and published with an
+    atomic ``replace``; a crash before the swap leaves a stage that
+    ``_recover_compaction`` finishes or drops on next open.
     """
     tmp = f"{table}__compact"
-    conf = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    old = spark.conf.get(conf)
-    spark.conf.set(conf, "false")
-    # snapshot token BEFORE resolving the source: appends landing while
-    # the compacted copy is written commute with compaction (their rows
-    # are simply not compacted yet), and a transactional backend merges
-    # them into the published version instead of dropping them
-    token = _be().snapshot_token(spark, table)
-    try:
-        src = _be().read(spark, table)
-        if distinct:
-            # fold exact-duplicate rows (e.g. replayed band appends).
-            # dropDuplicates shuffles by ALL columns, which would break
-            # the task↔bucket alignment, so explicitly re-align on the
-            # bucket key afterwards (this repartition is NOT redundant
-            # here — the aggregate's output partitioning differs)
-            src = src.dropDuplicates().repartition(n_buckets, F.col(key))
-        _be().write(src, tmp, key, n_buckets)
-    finally:
-        spark.conf.set(conf, old)
-    _be().replace(spark, table, tmp, token=token, on_conflict="merge")
+    # the token is the segment list of the very version the rewrite
+    # reads: appends landing after it commute with compaction (their
+    # rows are simply not compacted yet) and the replace merges them
+    # into the published version; a token older than the source would
+    # count an append the source already holds as "gained" and
+    # publish its rows twice
+    be = get_backend()
+    manifest = be.latest_manifest(spark, table)
+    token = list(manifest["segments"])
+    src = be.read_version(spark, table, manifest["version"])
+    if distinct:
+        # fold exact-duplicate rows (e.g. replayed band appends)
+        src = src.dropDuplicates()
+    be.write(src, tmp, key, n_buckets)
+    be.replace(spark, table, tmp, token=token, on_conflict="merge")
 
 
 def _recover_compaction(spark: SparkSession, table: str) -> None:
-    """If a compaction crashed mid-replace, finish it (backend-specific;
-    the parquet backend's DROP+RENAME window, a no-op for transactional
-    formats)."""
-    _be().recover_replace(spark, table, f"{table}__compact")
+    """If a compaction crashed around its replace, finish the swap or
+    drop the already-published stage (``recover_replace``)."""
+    get_backend().recover_replace(spark, table, f"{table}__compact")
 
 
 def _split_overcap(idx_rows: DataFrame, group_cols: list[str],
@@ -191,19 +174,21 @@ def _chain_probe_pairs(mega_corpus: DataFrame, mega_batch: DataFrame,
 
 
 def _write_meta(spark: SparkSession, name: str, params: dict) -> None:
-    _be().write_plain(
+    get_backend().write_plain(
         spark.createDataFrame([(json.dumps(params),)], "params string"),
         f"{name}_meta")
 
 
 def _read_meta(spark: SparkSession, name: str) -> dict:
-    return json.loads(_be().read(spark, f"{name}_meta").first()["params"])
+    meta = get_backend().read(spark, f"{name}_meta")
+    return json.loads(meta.first()["params"])
 
 
 class DigestIndex:
     """Exact-dedup state: the distinct content digests of every ingested
-    document, bucketed by digest so the per-batch anti-join plans with
-    no Exchange on the index side."""
+    document, clustered by digest.  The per-batch anti-join broadcasts
+    the digest table while it is under the broadcast threshold (no
+    shuffle of index rows); above it, both sides shuffle on digest."""
 
     def __init__(self, spark: SparkSession, name: str):
         self.spark = spark
@@ -224,7 +209,7 @@ class DigestIndex:
                       F.col(id_col).alias("id"))
             .groupBy("digest").agg(F.min("id").alias("keep_id"))
         )
-        _be().write(digests, f"{name}_digests", "digest", n_buckets)
+        get_backend().write(digests, f"{name}_digests", "digest", n_buckets)
         _write_meta(spark, name, {"text_col": text_col, "id_col": id_col,
                                   "n_buckets": n_buckets})
         return cls(spark, name)
@@ -234,18 +219,13 @@ class DigestIndex:
         return batch.withColumn(
             "digest", F.md5(dedup.normalized_text(F.col(p["text_col"]))))
 
-    def _refresh(self) -> None:
-        # appends may come from another session (a foreachBatch sink's
-        # micro-batch session); see MinHashIndex._refresh
-        _be().refresh(self.spark, f"{self.name}_digests")
-
     def filter_new(self, batch: DataFrame,
                    replay_safe: bool = False) -> DataFrame:
         """Batch rows whose content has never been ingested: drops rows
-        matching the index (anti-join on digest — the bucketed index
-        side satisfies the join's distribution from its layout, so only
-        the small batch side shuffles), then keeps the min-id row per
-        digest WITHIN the batch (same survivor rule as dedup_exact).
+        matching the index (anti-join on digest — a broadcast of the
+        digest table below the broadcast threshold, a shuffle join on
+        digest above it), then keeps the min-id row per digest WITHIN
+        the batch (same survivor rule as dedup_exact).
 
         ``replay_safe=True`` is the at-least-once stream mode: index
         rows whose ``keep_id`` IS one of this batch's own ids are
@@ -254,8 +234,7 @@ class DigestIndex:
         the replay).  Requires doc ids unique across the stream's
         lifetime, like ``MinHashIndex.dedup_batch``."""
         p = self.params
-        self._refresh()
-        idx = _be().read(self.spark, f"{self.name}_digests")
+        idx = get_backend().read(self.spark, f"{self.name}_digests")
         if replay_safe:
             own = batch.select(F.col(p["id_col"]).alias("keep_id"))
             idx = idx.join(own, "keep_id", "left_anti")
@@ -267,8 +246,7 @@ class DigestIndex:
 
     def append(self, batch_survivors: DataFrame,
                if_absent: bool = False) -> None:
-        """Record a deduped batch's digests (append keeps the bucketed
-        layout; Spark validates the bucket spec against the catalog).
+        """Record a deduped batch's digests (one clustered segment).
         ``if_absent=True`` makes the append idempotent (digests already
         indexed are skipped) — required for at-least-once replays."""
         p = self.params
@@ -276,13 +254,12 @@ class DigestIndex:
                    .select("digest", F.col(p["id_col"]).alias("keep_id"))
                    .groupBy("digest").agg(F.min("keep_id").alias("keep_id")))
         if if_absent:
-            self._refresh()
-            existing = _be().read(self.spark,
-                                  f"{self.name}_digests").select("digest")
+            existing = get_backend().read(
+                self.spark, f"{self.name}_digests").select("digest")
             digests = digests.join(existing, "digest", "left_anti") \
                              .localCheckpoint(eager=True)
-        _be().append(digests, f"{self.name}_digests", "digest",
-                     p["n_buckets"])
+        get_backend().append(digests, f"{self.name}_digests", "digest",
+                             p["n_buckets"])
 
     def dedup_batch(self, batch: DataFrame,
                     replay_safe: bool = False) -> DataFrame:
@@ -298,16 +275,16 @@ class DigestIndex:
         return clean
 
     def drop(self) -> None:
-        _be().drop(self.spark, f"{self.name}_digests")
-        _be().drop(self.spark, f"{self.name}_meta")
+        get_backend().drop(self.spark, f"{self.name}_digests")
+        get_backend().drop(self.spark, f"{self.name}_meta")
 
 
 class MinHashIndex:
     """Near-dedup state: persisted banded LSH keys + signatures.
 
     Tables:
-      {name}_bands  (band int, bucket int, id long)  bucketed by bucket
-      {name}_sigs   (id long, sig array<long>)       bucketed by id
+      {name}_bands  (band int, bucket int, id long)  clustered by bucket
+      {name}_sigs   (id long, sig array<long>)       clustered by id
       {name}_meta   (params json)
 
     Probe plan shape (the scale property, plan-asserted in
@@ -325,7 +302,7 @@ class MinHashIndex:
         self.params = _read_meta(spark, name)
 
     def compact(self) -> None:
-        """Fold each index table to one file per bucket (run after every
+        """Fold each index table to one segment (run after every
         N appended batches — same cadence logic as the streaming commit
         ledger's self-compaction).  Band rows are deduplicated here: a
         crash between append()'s two writes can leave duplicate band
@@ -350,10 +327,10 @@ class MinHashIndex:
                                         shingle_n, seed)
         # one pass computes signatures; bands derive from the stored sigs
         # (a cheap re-read of the compact table, not a re-shingle)
-        _be().write(sigs, f"{name}_sigs", "id", n_buckets)
-        stored = _be().read(spark, f"{name}_sigs")
-        _be().write(dedup.band_buckets(stored, bands), f"{name}_bands",
-                    "bucket", n_buckets)
+        get_backend().write(sigs, f"{name}_sigs", "id", n_buckets)
+        stored = get_backend().read(spark, f"{name}_sigs")
+        get_backend().write(dedup.band_buckets(stored, bands), f"{name}_bands",
+                            "bucket", n_buckets)
         _write_meta(spark, name, params)
         return cls(spark, name)
 
@@ -363,13 +340,6 @@ class MinHashIndex:
         p = self.params
         return dedup.minhash_signatures(batch, p["text_col"], p["id_col"],
                                         p["num_hashes"], p["shingle_n"], p["seed"])
-
-    def _refresh(self) -> None:
-        # appends may come from another session (a foreachBatch sink's
-        # micro-batch session); drop this session's cached file listing
-        # so index reads always see the latest appended state
-        for suffix in ("_sigs", "_bands"):
-            _be().refresh(self.spark, f"{self.name}{suffix}")
 
     def probe(self, batch: DataFrame, threshold: float = 0.8,
               broadcast_row_cap: int | None = None,
@@ -383,8 +353,8 @@ class MinHashIndex:
 
         The batch's band keys broadcast only while they fit
         (``broadcast_row_cap`` rows, default PROBE_BROADCAST_ROW_CAP);
-        a backfill-sized batch instead equi-joins on (band, bucket)
-        against the bucketed index, shuffling the batch side only.
+        a backfill-sized batch instead shuffle-joins on (band, bucket)
+        against the band table.
         Batch signatures are materialized via eager localCheckpoint
         (blocks reclaimed on GC — a per-micro-batch cache() here would
         accumulate for the stream's lifetime).
@@ -416,14 +386,13 @@ class MinHashIndex:
         p = self.params
         cap = PROBE_BROADCAST_ROW_CAP if broadcast_row_cap is None \
             else broadcast_row_cap
-        self._refresh()
         bbands = (dedup.band_buckets(bsigs, p["bands"])
                   .withColumnRenamed("id", "batch_id"))
         probe_keys = bbands
         if bsigs.count() * p["bands"] <= cap:
             probe_keys = F.broadcast(probe_keys)
-        ibands = _be().read(self.spark, f"{self.name}_bands")
-        isigs = _be().read(self.spark, f"{self.name}_sigs")
+        ibands = get_backend().read(self.spark, f"{self.name}_bands")
+        isigs = get_backend().read(self.spark, f"{self.name}_sigs")
         small_ibands, big = _split_overcap(ibands, ["band", "bucket"],
                                            bucket_cap)
 
@@ -472,7 +441,7 @@ class MinHashIndex:
     def append(self, batch_survivors: DataFrame, if_absent: bool = False,
                sigs: DataFrame | None = None) -> None:
         """Append a deduped batch's signatures and band keys so later
-        batches dedup against it.  Bucketed appends preserve the layout.
+        batches dedup against it (one clustered segment per table).
         ``sigs``: precomputed signatures of EXACTLY the survivor rows
         (skips re-shingling — ``dedup_batch`` passes them).
 
@@ -496,14 +465,13 @@ class MinHashIndex:
         if sigs is None:
             sigs = self._batch_sigs(batch_survivors)
         if if_absent:
-            self._refresh()
-            existing = _be().read(self.spark,
-                                  f"{self.name}_sigs").select("id")
+            existing = get_backend().read(self.spark,
+                                          f"{self.name}_sigs").select("id")
             sigs = sigs.join(existing, "id", "left_anti")
         sigs = sigs.localCheckpoint(eager=True)
-        _be().append(dedup.band_buckets(sigs, p["bands"]),
-                     f"{self.name}_bands", "bucket", p["n_buckets"])
-        _be().append(sigs, f"{self.name}_sigs", "id", p["n_buckets"])
+        get_backend().append(dedup.band_buckets(sigs, p["bands"]),
+                             f"{self.name}_bands", "bucket", p["n_buckets"])
+        get_backend().append(sigs, f"{self.name}_sigs", "id", p["n_buckets"])
 
     def dedup_batch(self, batch: DataFrame, threshold: float = 0.8,
                     bucket_cap: int | None = 1000,
@@ -562,7 +530,7 @@ class MinHashIndex:
 
     def drop(self) -> None:
         for suffix in ("_bands", "_sigs", "_meta"):
-            _be().drop(self.spark, f"{self.name}{suffix}")
+            get_backend().drop(self.spark, f"{self.name}{suffix}")
 
 
 class SimHashIndex:
@@ -572,7 +540,7 @@ class SimHashIndex:
     candidate rule, applied incrementally).
 
     Tables:
-      {name}_fps    (id long, simhash long, band int, key long)  bucketed by key
+      {name}_fps    (id long, simhash long, band int, key long) clustered by key
       {name}_meta   (params json)
 
     One table (the fingerprint rides along with each band row — 4×8
@@ -598,8 +566,8 @@ class SimHashIndex:
     def create(cls, df: DataFrame, name: str, text_col: str = "text",
                id_col: str = "doc_id", n_buckets: int = 32) -> "SimHashIndex":
         spark = df.sparkSession
-        _be().write(cls._banded_fps(df, text_col, id_col),
-                    f"{name}_fps", "key", n_buckets)
+        get_backend().write(cls._banded_fps(df, text_col, id_col),
+                            f"{name}_fps", "key", n_buckets)
         _write_meta(spark, name, {"text_col": text_col, "id_col": id_col,
                                   "n_buckets": n_buckets})
         return cls(spark, name)
@@ -610,9 +578,6 @@ class SimHashIndex:
         # rule, shared with the full-corpus self-join path
         return dedup.simhash_band_keys(
             dedup.simhash_fingerprints(df, text_col, id_col))
-
-    def _refresh(self) -> None:
-        _be().refresh(self.spark, f"{self.name}_fps")
 
     def probe(self, batch: DataFrame, max_hamming: int = 3,
               broadcast_row_cap: int | None = None,
@@ -637,13 +602,12 @@ class SimHashIndex:
         dedup.check_simhash_hamming(max_hamming)
         cap = PROBE_BROADCAST_ROW_CAP if broadcast_row_cap is None \
             else broadcast_row_cap
-        self._refresh()
         b = bfps.select(F.col("id").alias("batch_id"),
                         F.col("simhash").alias("fp_b"), "band", "key")
         probe_keys = b
         if bfps.count() <= cap:
             probe_keys = F.broadcast(probe_keys)
-        idx = _be().read(self.spark, f"{self.name}_fps")
+        idx = get_backend().read(self.spark, f"{self.name}_fps")
         small_idx, big = _split_overcap(idx, ["band", "key"], bucket_cap)
 
         hamming = F.bit_count(F.col("simhash").bitwiseXOR(F.col("fp_b")))
@@ -682,11 +646,10 @@ class SimHashIndex:
         rows = (banded_fps if banded_fps is not None
                 else self._banded_fps(batch_survivors, p["text_col"], p["id_col"]))
         if if_absent:
-            self._refresh()
-            existing = (_be().read(self.spark, f"{self.name}_fps")
+            existing = (get_backend().read(self.spark, f"{self.name}_fps")
                         .select("id").distinct())
             rows = rows.join(existing, "id", "left_anti")
-        _be().append(rows, f"{self.name}_fps", "key", p["n_buckets"])
+        get_backend().append(rows, f"{self.name}_fps", "key", p["n_buckets"])
 
     def dedup_batch(self, batch: DataFrame, max_hamming: int = 3,
                     replay_safe: bool = False,
@@ -725,7 +688,7 @@ class SimHashIndex:
 
     def drop(self) -> None:
         for suffix in ("_fps", "_meta"):
-            _be().drop(self.spark, f"{self.name}{suffix}")
+            get_backend().drop(self.spark, f"{self.name}{suffix}")
 
 
 class EmbeddingIndex:
@@ -736,8 +699,8 @@ class EmbeddingIndex:
     vectors are stored ONCE regardless of the band count).
 
     Tables:
-      {name}_vecs     (id long, vec array<...>, osig long)  bucketed by id
-      {name}_buckets  (band int, bucket long, id long)      bucketed by bucket
+      {name}_vecs     (id long, vec array<...>, osig long)  clustered by id
+      {name}_buckets  (band int, bucket long, id long)      clustered by bucket
       {name}_meta     (params json incl. the hyperplane family: n_planes,
                        bands, seed, dim — the planes themselves are
                        deterministic from these, never persisted; the
@@ -767,8 +730,8 @@ class EmbeddingIndex:
         for suffix in ("_vecs", "_buckets"):
             _recover_compaction(spark, f"{name}{suffix}")
         self._recover_rebucket()
-        if (_be().exists(spark, f"{name}_vecs")
-                and not _be().exists(spark, f"{name}_buckets")):
+        if (get_backend().exists(spark, f"{name}_vecs")
+                and not get_backend().exists(spark, f"{name}_buckets")):
             raise RuntimeError(
                 f"index {name!r} uses the pre-round single-table layout "
                 "((id, vec, bucket), no _buckets table) — rebuild it with "
@@ -810,20 +773,21 @@ class EmbeddingIndex:
         # compaction those rows cannot be merged through the swap (they
         # would be silently unfindable under the new planes), so the
         # publish detects the conflict and fails the rebucket instead
-        token = _be().snapshot_token(self.spark, f"{self.name}_buckets")
-        vecs = _be().read(self.spark, f"{self.name}_vecs")
+        be = get_backend()
+        token = be.snapshot_token(self.spark, f"{self.name}_buckets")
+        vecs = be.read(self.spark, f"{self.name}_vecs")
         keys = similarity.banded_lsh_keys(vecs, p["bands"], p["n_planes"],
                                           p["seed"], vec_col="vec",
                                           id_col="id", dim=p["dim"])
-        _be().write(keys, f"{self.name}_buckets__rebucket", "bucket",
-                    p["n_buckets"])
+        be.write(keys, f"{self.name}_buckets__rebucket", "bucket",
+                 p["n_buckets"])
         # conflict check BEFORE the commit point: once the staged meta
         # exists, a crash rolls the rebucket FORWARD on reopen — so
         # refuse to arm the commit point if an append already landed
         # (the publish itself re-checks; this narrows the crash window
         # between a detected conflict and its stage cleanup)
-        if _be().snapshot_token(self.spark, f"{self.name}_buckets") != token:
-            _be().drop(self.spark, f"{self.name}_buckets__rebucket")
+        if be.snapshot_token(self.spark, f"{self.name}_buckets") != token:
+            be.drop(self.spark, f"{self.name}_buckets__rebucket")
             raise tableio.ConcurrentWriteError(
                 f"rebucket({self.name}): index was appended to while "
                 f"re-keying — re-run rebucket")
@@ -831,20 +795,15 @@ class EmbeddingIndex:
         # derived from, so RECOVERY can re-run the same conflict check —
         # an append landing after this point (even followed by a crash)
         # is detected on reopen and the stage discarded instead of
-        # rolled forward with the append's keys dropped.  On the
-        # versioned backend the commit_section CLOSES the round-5
-        # residual window; on the parquet backend the recovery-time
-        # check is still check-then-act (token compare, then
-        # DROP+RENAME), so an append landing inside that act is only
-        # NARROWED out, not excluded — the single-writer contract is
-        # what rules it out there
-        _be().write_plain(
+        # rolled forward with the append's keys dropped (the publish
+        # re-checks the token inside the commit, so no window remains)
+        be.write_plain(
             self.spark.createDataFrame([(json.dumps(token),)],
                                        "token string"),
             f"{self.name}_rebucket_intent")
         # commit point: staged meta present => the new geometry WILL be
         # published (roll-forward); absent => staged keys are garbage
-        _be().write_plain(
+        be.write_plain(
             self.spark.createDataFrame([(json.dumps(p),)], "params string"),
             f"{self.name}_meta__rebucket")
         try:
@@ -860,7 +819,7 @@ class EmbeddingIndex:
         for t in (f"{self.name}_meta__rebucket",
                   f"{self.name}_buckets__rebucket",
                   f"{self.name}_rebucket_intent"):
-            _be().drop(self.spark, t)
+            get_backend().drop(self.spark, t)
 
     def _recover_rebucket(self, buckets_token=None) -> None:
         """Finish (or discard) an interrupted ``rebucket``: a staged
@@ -883,37 +842,38 @@ class EmbeddingIndex:
         meta_stage = f"{self.name}_meta__rebucket"
         keys_stage = f"{self.name}_buckets__rebucket"
         intent = f"{self.name}_rebucket_intent"
-        if _be().exists(spark, meta_stage):
+        be = get_backend()
+        if be.exists(spark, meta_stage):
             token = buckets_token
-            if token is None and _be().exists(spark, intent):
-                token = json.loads(_be().read(spark, intent)
+            if token is None and be.exists(spark, intent):
+                token = json.loads(be.read(spark, intent)
                                    .first()["token"])
             try:
-                if _be().exists(spark, keys_stage):
-                    if _be().replace_published(spark, f"{self.name}_buckets",
-                                               keys_stage):
+                if be.exists(spark, keys_stage):
+                    if be.replace_published(spark, f"{self.name}_buckets",
+                                            keys_stage):
                         # the buckets swap already committed and only
                         # its staged drop was lost: replaying the
                         # conflict-checked replace here would count the
                         # published segments themselves as "gained"
                         # and wrongly fail — finish the cleanup and
                         # proceed to the meta swap
-                        _be().drop(spark, keys_stage)
+                        be.drop(spark, keys_stage)
                     else:
-                        _be().replace(spark, f"{self.name}_buckets",
-                                      keys_stage, token=token,
-                                      on_conflict="fail")
-                _be().replace(spark, f"{self.name}_meta", meta_stage)
+                        be.replace(spark, f"{self.name}_buckets",
+                                   keys_stage, token=token,
+                                   on_conflict="fail")
+                be.replace(spark, f"{self.name}_meta", meta_stage)
             except tableio.ConcurrentWriteError:
                 if buckets_token is not None:
                     raise      # live rebucket: caller cleans and re-raises
                 self._drop_rebucket_stages()
                 return
-            _be().drop(spark, intent)
+            be.drop(spark, intent)
         else:
-            if _be().exists(spark, keys_stage):
-                _be().drop(spark, keys_stage)
-            _be().drop(spark, intent)
+            if be.exists(spark, keys_stage):
+                be.drop(spark, keys_stage)
+            be.drop(spark, intent)
 
     @classmethod
     def create(cls, df: DataFrame, name: str, vec_col: str = "embedding",
@@ -936,14 +896,15 @@ class EmbeddingIndex:
                           F.col(vec_col).alias("vec"),
                           similarity._order_sig_expr(vec_col, oplanes)
                           .alias("osig"))
-        _be().write(vrows, f"{name}_vecs", "id", n_buckets)
+        be = get_backend()
+        be.write(vrows, f"{name}_vecs", "id", n_buckets)
         # band keys derive from the stored vectors (a cheap columnar
         # re-read, not a second pass over the source)
-        stored = _be().read(spark, f"{name}_vecs")
-        _be().write(similarity.banded_lsh_keys(stored, bands, n_planes, seed,
-                                               vec_col="vec", id_col="id",
-                                               dim=dim),
-                    f"{name}_buckets", "bucket", n_buckets)
+        stored = be.read(spark, f"{name}_vecs")
+        be.write(similarity.banded_lsh_keys(stored, bands, n_planes, seed,
+                                            vec_col="vec", id_col="id",
+                                            dim=dim),
+                 f"{name}_buckets", "bucket", n_buckets)
         _write_meta(spark, name, params)
         return cls(spark, name)
 
@@ -966,10 +927,6 @@ class EmbeddingIndex:
         return similarity.banded_lsh_keys(vecs, p["bands"], p["n_planes"],
                                           p["seed"], vec_col="vec",
                                           id_col="id", dim=p["dim"])
-
-    def _refresh(self) -> None:
-        for suffix in ("_vecs", "_buckets"):
-            _be().refresh(self.spark, f"{self.name}{suffix}")
 
     def probe(self, batch: DataFrame, threshold: float = 0.9,
               multiprobe_hamming: int = 0,
@@ -1001,7 +958,6 @@ class EmbeddingIndex:
         if p["bands"] > 1 and multiprobe_hamming:
             raise ValueError("multiprobe applies to single-band indexes; "
                              "this index uses bands for recall")
-        self._refresh()
         bb = self._band_keys(bvecs)
         n_masks = 1
         probe_keys = bb.withColumnRenamed("id", "batch_id")
@@ -1016,8 +972,8 @@ class EmbeddingIndex:
         if bvecs.count() * p["bands"] * n_masks <= cap:
             probe_keys = F.broadcast(probe_keys)
 
-        idxb = _be().read(self.spark, f"{self.name}_buckets")
-        idxv = _be().read(self.spark, f"{self.name}_vecs")
+        idxb = get_backend().read(self.spark, f"{self.name}_buckets")
+        idxv = get_backend().read(self.spark, f"{self.name}_vecs")
 
         if bucket_cap is None:
             big = None
@@ -1109,14 +1065,13 @@ class EmbeddingIndex:
         p = self.params
         rows = vecs if vecs is not None else self._batch_vecs(batch_survivors)
         if if_absent:
-            self._refresh()
-            existing = _be().read(self.spark,
-                                  f"{self.name}_vecs").select("id")
+            existing = get_backend().read(self.spark,
+                                          f"{self.name}_vecs").select("id")
             rows = rows.join(existing, "id", "left_anti")
         rows = rows.localCheckpoint(eager=True)
-        _be().append(self._band_keys(rows), f"{self.name}_buckets",
-                     "bucket", p["n_buckets"])
-        _be().append(rows, f"{self.name}_vecs", "id", p["n_buckets"])
+        get_backend().append(self._band_keys(rows), f"{self.name}_buckets",
+                             "bucket", p["n_buckets"])
+        get_backend().append(rows, f"{self.name}_vecs", "id", p["n_buckets"])
 
     def dedup_batch(self, batch: DataFrame, threshold: float = 0.9,
                     multiprobe_hamming: int = 0,
@@ -1161,7 +1116,7 @@ class EmbeddingIndex:
 
     def drop(self) -> None:
         for suffix in ("_vecs", "_buckets", "_meta"):
-            _be().drop(self.spark, f"{self.name}{suffix}")
+            get_backend().drop(self.spark, f"{self.name}{suffix}")
         # a crashed rebucket's stages/intent must not outlive the index
         self._drop_rebucket_stages()
 
@@ -1169,13 +1124,12 @@ class EmbeddingIndex:
 class SegmentIndex:
     """Incremental corpus-level SEGMENT dedup state (the C4-style
     repeated-unit rule of ``spans.segment_dedup``, batched): the digest
-    of every segment ever KEPT, bucketed by digest.
+    of every segment ever KEPT, clustered by digest.
 
     Per-batch cost: segment the batch (map-only), one anti-join against
-    the bucketed digest table (index side satisfies the join's
-    distribution from its layout — only the batch shuffles), a
-    batch-internal first-occurrence pick, and a bucketed append of the
-    batch's kept digests.  The corpus text is never rescanned.
+    the digest table (broadcast while it fits), a batch-internal
+    first-occurrence pick, and an append of the batch's kept
+    digests.  The corpus text is never rescanned.
 
     Sequential equivalence anchor (pytest): feeding doc-id-ordered
     batches through ``dedup_batch`` produces exactly the full-corpus
@@ -1203,7 +1157,7 @@ class SegmentIndex:
             raise ValueError("unit_words must be >= 1")
         empty = spark.createDataFrame(
             [], "digest string, keep_id long")
-        _be().write(empty, f"{name}_segments", "digest", n_buckets)
+        get_backend().write(empty, f"{name}_segments", "digest", n_buckets)
         _write_meta(spark, name, {
             "text_col": text_col, "id_col": id_col,
             "unit_words": unit_words, "normalize": normalize,
@@ -1225,7 +1179,7 @@ class SegmentIndex:
                    .select(F.md5("seg_text").alias("digest"),
                            F.col("doc_id").cast("long").alias("keep_id"))
                    .groupBy("digest").agg(F.min("keep_id").alias("keep_id")))
-        _be().append(digests, f"{name}_segments", "digest", n_buckets)
+        get_backend().append(digests, f"{name}_segments", "digest", n_buckets)
         return idx
 
     def _batch_segments(self, batch: DataFrame) -> DataFrame:
@@ -1235,16 +1189,12 @@ class SegmentIndex:
                                     p["unit_words"], p["normalize"]) \
                      .withColumn("digest", F.md5("seg_text"))
 
-    def _refresh(self) -> None:
-        _be().refresh(self.spark, f"{self.name}_segments")
-
     def _kept_and_rebuilt(self, batch: DataFrame,
                           replay_safe: bool) -> tuple[DataFrame, DataFrame]:
         from dlx_spark.operators import spans as _spans
         from pyspark.sql import Window
         p = self.params
-        self._refresh()
-        idx = _be().read(self.spark, f"{self.name}_segments")
+        idx = get_backend().read(self.spark, f"{self.name}_segments")
         if replay_safe:
             own = batch.select(F.col(p["id_col"]).cast("long")
                                .alias("keep_id"))
@@ -1280,13 +1230,12 @@ class SegmentIndex:
                            F.col("doc_id").cast("long").alias("keep_id"))
                    .groupBy("digest").agg(F.min("keep_id").alias("keep_id")))
         if if_absent:
-            self._refresh()
-            existing = _be().read(self.spark,
-                                  f"{self.name}_segments").select("digest")
+            existing = get_backend().read(
+                self.spark, f"{self.name}_segments").select("digest")
             digests = digests.join(existing, "digest", "left_anti") \
                              .localCheckpoint(eager=True)
-        _be().append(digests, f"{self.name}_segments", "digest",
-                     p["n_buckets"])
+        get_backend().append(digests, f"{self.name}_segments", "digest",
+                             p["n_buckets"])
 
     def dedup_batch(self, batch: DataFrame,
                     replay_safe: bool = False) -> DataFrame:
@@ -1304,15 +1253,15 @@ class SegmentIndex:
         return rebuilt
 
     def drop(self) -> None:
-        _be().drop(self.spark, f"{self.name}_segments")
-        _be().drop(self.spark, f"{self.name}_meta")
+        get_backend().drop(self.spark, f"{self.name}_segments")
+        get_backend().drop(self.spark, f"{self.name}_meta")
 
 
 class SpanIndex:
     """Incremental duplicated-SPAN cutting (the keep-first rule of
     ``spans.cut_duplicate_spans``, batched): the digest of every
     stride-1 k-word window ever seen, with its first (doc, pos)
-    occurrence, bucketed by digest.
+    occurrence, clustered by digest.
 
     Per-batch semantics (min_docs=2, keep_first — the Lee-et-al
     setting; other configurations have no incremental form because
@@ -1350,7 +1299,7 @@ class SpanIndex:
             raise ValueError("k must be >= 1")
         empty = spark.createDataFrame(
             [], "digest string, keep_id long, keep_pos long")
-        _be().write(empty, f"{name}_windows", "digest", n_buckets)
+        get_backend().write(empty, f"{name}_windows", "digest", n_buckets)
         _write_meta(spark, name, {
             "text_col": text_col, "id_col": id_col, "k": k,
             "normalize": normalize, "n_buckets": n_buckets})
@@ -1370,19 +1319,15 @@ class SpanIndex:
                   .select("digest",
                           F.col("_f.doc_id").cast("long").alias("keep_id"),
                           F.col("_f.pos").cast("long").alias("keep_pos")))
-        _be().append(firsts, f"{name}_windows", "digest", n_buckets)
+        get_backend().append(firsts, f"{name}_windows", "digest", n_buckets)
         return idx
-
-    def _refresh(self) -> None:
-        _be().refresh(self.spark, f"{self.name}_windows")
 
     def _cut_and_fresh(self, batch: DataFrame,
                        replay_safe: bool) -> tuple[DataFrame, DataFrame,
                                                    DataFrame, DataFrame]:
         from dlx_spark.operators import spans as _spans
         p = self.params
-        self._refresh()
-        idx = _be().read(self.spark, f"{self.name}_windows")
+        idx = get_backend().read(self.spark, f"{self.name}_windows")
         if replay_safe:
             own = batch.select(F.col(p["id_col"]).cast("long")
                                .alias("keep_id"))
@@ -1425,13 +1370,12 @@ class SpanIndex:
         ``if_absent=True`` makes replays idempotent."""
         p = self.params
         if if_absent:
-            self._refresh()
-            existing = _be().read(self.spark,
-                                  f"{self.name}_windows").select("digest")
+            existing = get_backend().read(
+                self.spark, f"{self.name}_windows").select("digest")
             firsts = firsts.join(existing, "digest", "left_anti") \
                            .localCheckpoint(eager=True)
-        _be().append(firsts, f"{self.name}_windows", "digest",
-                     p["n_buckets"])
+        get_backend().append(firsts, f"{self.name}_windows", "digest",
+                             p["n_buckets"])
 
     def dedup_batch(self, batch: DataFrame,
                     replay_safe: bool = False) -> DataFrame:
@@ -1451,5 +1395,5 @@ class SpanIndex:
         return cleaned
 
     def drop(self) -> None:
-        _be().drop(self.spark, f"{self.name}_windows")
-        _be().drop(self.spark, f"{self.name}_meta")
+        get_backend().drop(self.spark, f"{self.name}_windows")
+        get_backend().drop(self.spark, f"{self.name}_meta")

@@ -18,13 +18,8 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(app_name: str = "dlx_spark", cpus: int | None = None,
-              delta: bool = False) -> SparkSession:
-    """``delta=True`` additionally wires the Delta Lake session
-    extension + catalog (needed by ``tableio_delta.DeltaTableBackend``)
-    and raises ImportError when the ``delta-spark`` package is absent.
-    It must be set on the FIRST session build of the process —
-    extensions cannot be added to a live SparkContext."""
+def get_spark(app_name: str = "dlx_spark",
+              cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -75,17 +70,5 @@ def get_spark(app_name: str = "dlx_spark", cpus: int | None = None,
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-
-    if delta:
-        # configure_spark_with_delta_pip adds the matching delta-spark
-        # maven jars; the two configs are Delta's documented session
-        # wiring (both are inert no-ops for non-Delta reads/writes)
-        from delta import configure_spark_with_delta_pip
-        builder = configure_spark_with_delta_pip(
-            builder
-            .config("spark.sql.extensions",
-                    "io.delta.sql.DeltaSparkSessionExtension")
-            .config("spark.sql.catalog.spark_catalog",
-                    "org.apache.spark.sql.delta.catalog.DeltaCatalog"))
 
     return builder.getOrCreate()

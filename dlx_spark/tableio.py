@@ -1,25 +1,19 @@
-"""Pluggable table-commit backend: the single seam through which the
-incremental indexes (operators/dedup_index.py) create, append, read,
-swap, and drop their catalog tables.
+"""The table-commit seam: the single point through which the
+incremental indexes (operators/dedup_index.py) and the ANN index
+layouts (operators/bucketing.py) create, append, read, replace, and
+drop their tables.
 
-The engine ships plain-parquet bucketed tables with staged DROP+RENAME
-swaps and marker-based crash recovery; the single-writer concurrency
-contract documented in README comes from THAT backend, not from the
-operators.  A table format with a real commit protocol (Delta, Iceberg)
-lifts the contract to multi-writer by implementing this interface —
-``write``/``append`` become transactional commits, ``replace`` becomes
-an atomic metadata swap, ``recover_replace`` becomes a no-op — without
-touching any operator call-site: the index classes never call
-``saveAsTable``/``DROP TABLE`` directly.
-
-Swap a backend in with ``set_backend`` (process-wide; the index
-classes resolve it per call through ``tableio.get_backend()``, so an
-install is picked up by already-constructed indexes too).
+The engine's one backend is the manifest-committed
+``tableio_versioned.VersionedTableBackend`` rooted at
+``<warehouse>/_versioned``: atomic replace, snapshot-isolated readers
+and optimistically-concurrent appends on plain parquet.  The index
+classes resolve the backend per call through ``get_backend()``, so a
+table format with its own commit protocol (Delta, Iceberg) — or a test
+double that records, races or crashes — slots in process-wide via
+``set_backend`` without touching any operator call-site.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -29,219 +23,22 @@ class ConcurrentWriteError(RuntimeError):
     discard the concurrent writes.  Re-derive the stage and retry."""
 
 
-def managed_location(spark: SparkSession, table: str) -> str:
-    """The directory a MANAGED table named ``table`` lives (or would
-    live) at: ``<database location>/<lowercased name>``.  Spark
-    lowercases table identifiers before deriving the directory, and the
-    database's ``locationUri`` already carries the ``.db`` suffix for
-    non-default databases."""
-    parts = table.replace("`", "").split(".")
-    db = parts[-2] if len(parts) > 1 else spark.catalog.currentDatabase()
-    loc = spark.catalog.getDatabase(db).locationUri
-    from dlx_spark import fsio
-    return fsio.join(loc, parts[-1].lower())
+_backend = None
 
 
-def reclaim_orphan_location(spark: SparkSession, table: str) -> bool:
-    """Reclaim a crash-orphaned managed-table location before a
-    ``saveAsTable``; returns whether anything was removed.  The
-    catalog-table commit point is *files staged first, catalog
-    registration last* — so catalog-absent + location-present is
-    PROVABLY an uncommitted remnant (a driver died between staging
-    files and registering the table), never live data: live data is,
-    by the commit rule, always registered.  Without this, every
-    subsequent create of the same table name fails
-    ``LOCATION_ALREADY_EXISTS`` forever (``mode("overwrite")`` only
-    overwrites catalog-registered tables), and a killed run permanently
-    bricks the name.  External tables are out of scope — the engine
-    only ever creates managed tables."""
-    if spark.catalog.tableExists(table):
-        return False
-    from dlx_spark import fsio
-    loc = managed_location(spark, table)
-    if fsio.exists(spark, loc):
-        fsio.rmtree(spark, loc)
-        return True
-    return False
-
-
-class ParquetTableBackend:
-    """Plain-parquet catalog tables: bucketed ``saveAsTable`` writes,
-    non-atomic DROP+RENAME replace repaired by ``recover_replace`` on
-    next open.  Single-writer per table (README concurrency contract)."""
-
-    def _reclaim_orphan(self, spark: SparkSession, table: str) -> None:
-        """See ``reclaim_orphan_location``.  Applies to appends too: an
-        append against a catalog-absent table CREATES it, so it hits
-        the same ``LOCATION_ALREADY_EXISTS`` wall on the same
-        remnant."""
-        reclaim_orphan_location(spark, table)
-
-    @staticmethod
-    def _aligned(df: DataFrame, key: str, n_buckets: int) -> DataFrame:
-        """Align write tasks with buckets.  A bucketed ``saveAsTable``
-        from unaligned tasks writes one file per (task × bucket) — a
-        32-task write of a 32-bucket table fragments into ~1024 small
-        files, which every later scan pays for.  ``repartition`` uses
-        the same Murmur3 ``pmod`` hash as Spark's bucket assignment, so
-        hashing to ``n_buckets`` partitions first gives each task
-        exactly one bucket → one file per bucket per write (measured
-        ~2× on index create/probe, tools/scale_probe.py --backend).
-        When the input is already bucket-aligned (the compaction path's
-        forced bucketed scan) Catalyst elides this as redundant."""
-        return df.repartition(n_buckets, F.col(key))
-
-    def write(self, df: DataFrame, table: str, key: str,
-              n_buckets: int) -> None:
-        """Create/overwrite ``table`` bucketed (and sorted) by ``key``."""
-        self._reclaim_orphan(df.sparkSession, table)
-        (self._aligned(df, key, n_buckets).write.mode("overwrite")
-         .bucketBy(n_buckets, key).sortBy(key).saveAsTable(table))
-
-    def append(self, df: DataFrame, table: str, key: str,
-               n_buckets: int) -> None:
-        """Append preserving the bucketed layout.  When the table is
-        catalog-absent the append CREATES it, so the same orphan rule
-        as ``write`` applies (see ``_reclaim_orphan``)."""
-        self._reclaim_orphan(df.sparkSession, table)
-        (self._aligned(df, key, n_buckets).write.mode("append")
-         .bucketBy(n_buckets, key).sortBy(key).saveAsTable(table))
-
-    def write_plain(self, df: DataFrame, table: str) -> None:
-        """Create/overwrite a small unbucketed table (index metadata)."""
-        self._reclaim_orphan(df.sparkSession, table)
-        df.write.mode("overwrite").saveAsTable(table)
-
-    @staticmethod
-    def _clustered(df: DataFrame, partition_cols: list[str]) -> DataFrame:
-        """One file per partition directory per write: without the
-        repartition, every task holding rows of a partition value emits
-        its own file there (tasks × partitions small files — the same
-        fragmentation `_aligned` prevents for bucketed tables)."""
-        return df.repartition(*[F.col(c) for c in partition_cols])
-
-    def write_partitioned(self, df: DataFrame, table: str,
-                          partition_cols: list[str]) -> None:
-        """Create/overwrite ``table`` partitioned by ``partition_cols``
-        — the layout the ANN indexes (operators/bucketing.py) use for
-        listing-time partition pruning: probes filter on the partition
-        columns and the scan never opens non-matching directories."""
-        self._reclaim_orphan(df.sparkSession, table)
-        (self._clustered(df, partition_cols).write.mode("overwrite")
-         .partitionBy(*partition_cols).saveAsTable(table))
-
-    def append_partitioned(self, df: DataFrame, table: str,
-                           partition_cols: list[str]) -> None:
-        self._reclaim_orphan(df.sparkSession, table)
-        (self._clustered(df, partition_cols).write.mode("append")
-         .partitionBy(*partition_cols).saveAsTable(table))
-
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.table(table)
-
-    def refresh(self, spark: SparkSession, table: str) -> None:
-        """Invalidate cached file listings (appends may come from
-        another session, e.g. a foreachBatch micro-batch session)."""
-        spark.catalog.refreshTable(table)
-
-    def exists(self, spark: SparkSession, table: str) -> bool:
-        return spark.catalog.tableExists(table)
-
-    def drop(self, spark: SparkSession, table: str) -> None:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-    def snapshot_token(self, spark: SparkSession, table: str):
-        """Opaque marker of ``table``'s state as of now, to hand back to
-        ``replace`` so commits that land while the caller derives its
-        staged rewrite can be detected (``on_conflict="fail"``) or
-        merged (transactional backends only).  Here: the sorted data
-        file listing — appends add files, so a stale token no longer
-        matches.  Detection-only: this backend cannot MERGE a raced
-        commit into a staged rewrite (no segment model), so
-        ``on_conflict="merge"`` keeps relying on the single-writer
-        contract."""
-        if not spark.catalog.tableExists(table):
-            return None
-        spark.catalog.refreshTable(table)
-        return sorted(spark.table(table).inputFiles())
-
-    def replace(self, spark: SparkSession, table: str, staged: str,
-                token=None, on_conflict: str = "merge") -> None:
-        """Publish ``staged`` as ``table``.  DROP + RENAME — not atomic;
-        a crash between the two is repaired by ``recover_replace``
-        (the staged table holds the full data either way).
-        ``IF EXISTS`` on the drop makes the call itself re-entrant: a
-        recovery path that re-runs a replace which crashed after its
-        DROP must not fail on the already-missing table.
-
-        With ``on_conflict="fail"`` and a ``token``, commits that
-        changed ``table``'s file listing since the token was captured
-        raise ConcurrentWriteError (content-transforming rewrites must
-        not publish over them — see the transactional backend's
-        docstring); ``"merge"`` is ignored here — the single-writer
-        contract is what makes compaction-class replaces safe on this
-        backend.  A MISSING target is never a conflict: under the
-        single-writer contract the only way the table vanished with the
-        stage still present is this protocol's own crashed DROP, so a
-        recovery replay must complete the rename rather than discard
-        the stage (the only surviving copy)."""
-        if on_conflict not in ("merge", "fail"):
-            raise ValueError(f"on_conflict must be merge|fail, "
-                             f"got {on_conflict!r}")
-        if token is not None and on_conflict == "fail":
-            current = self.snapshot_token(spark, table)
-            if current is not None and current != token:
-                raise ConcurrentWriteError(
-                    f"replace({table}): the table's files changed after "
-                    f"the caller's snapshot — re-derive the stage and "
-                    f"retry")
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        self._rename(spark, staged, table)
-
-    def replace_published(self, spark: SparkSession, table: str,
-                          staged: str) -> bool:
-        """Whether a prior ``replace(table, staged)`` already committed
-        and only its staged-side cleanup was lost.  This backend's
-        replace consumes the stage by RENAME, so a still-present stage
-        proves the swap did NOT complete: always False.  Transactional
-        backends override with their provenance check — crash-recovery
-        protocols that replay a conflict-checked replace must consult
-        this first, or they mistake their own published content for a
-        concurrent write."""
-        return False
-
-    @staticmethod
-    def _rename(spark: SparkSession, staged: str, table: str) -> None:
-        """Catalog rename, partition-safe: ALTER TABLE RENAME moves a
-        managed table's directory but the catalog's PARTITION entries
-        keep their absolute pre-rename locations, so a partitioned
-        table reads as EMPTY afterwards — re-discover them from the new
-        location (the repair is also what makes a recovery re-entrant:
-        re-running it on an already-repaired table is a no-op)."""
-        spark.sql(f"ALTER TABLE {staged} RENAME TO {table}")
-        if any(c.isPartition for c in spark.catalog.listColumns(table)):
-            spark.sql(f"MSCK REPAIR TABLE {table}")
-
-    def recover_replace(self, spark: SparkSession, table: str,
-                        staged: str) -> None:
-        """Finish a ``replace`` that crashed between DROP and RENAME; a
-        transactional backend overrides this with a no-op."""
-        if spark.catalog.tableExists(staged):
-            if not spark.catalog.tableExists(table):
-                self._rename(spark, staged, table)
-            else:  # crashed before DROP: staged copy is redundant
-                spark.sql(f"DROP TABLE {staged}")
-
-
-_backend: ParquetTableBackend = ParquetTableBackend()
-
-
-def get_backend() -> ParquetTableBackend:
+def get_backend():
+    """The process-wide table backend; a ``VersionedTableBackend`` over
+    the active session's warehouse unless ``set_backend`` installed
+    another."""
+    global _backend
+    if _backend is None:
+        from dlx_spark.tableio_versioned import VersionedTableBackend
+        _backend = VersionedTableBackend()
     return _backend
 
 
 def set_backend(backend) -> None:
     """Install a process-wide table backend (e.g. a Delta/Iceberg
-    implementation of the ParquetTableBackend interface)."""
+    implementation of the ``VersionedTableBackend`` interface)."""
     global _backend
     _backend = backend

@@ -183,7 +183,7 @@ class MergeOnReadTable:
             staged = f"{self.table}__morstage"
             self.backend.write_partitioned(
                 out, staged, self.partition_cols, extra=extra,
-                seg_prefix=self.table, sort_col=self.sort_col)
+                sort_col=self.sort_col)
             # on_conflict="merge" would re-apply raced deltas ON TOP of
             # the new content — correct for a rebuild-from-live, and the
             # only order-preserving choice the backend offers
@@ -193,7 +193,7 @@ class MergeOnReadTable:
         else:
             self.backend.write_partitioned(
                 out, self.table, self.partition_cols, extra=extra,
-                seg_prefix=self.table, sort_col=self.sort_col)
+                sort_col=self.sort_col)
 
     def upsert(self, rows: DataFrame | None = None,
                tombstone_keys: DataFrame | None = None,
@@ -231,8 +231,7 @@ class MergeOnReadTable:
         n_after = self.backend.append_partitioned(
             delta, self.table, self.partition_cols, extra=extra,
             extra_merge=self.extra_merge, expect_extra=expect_meta,
-            expect_create=expect_create, seg_prefix=self.table,
-            sort_col=self.sort_col)
+            expect_create=expect_create, sort_col=self.sort_col)
         if self.auto_compact_at is not None \
                 and n_after >= self.auto_compact_at:
             self.auto_compactions += 1
@@ -419,8 +418,7 @@ class MergeOnReadTable:
         staged = f"{self.table}__morfold"
         self.backend.write_partitioned(
             resolved, staged, self.partition_cols,
-            extra=manifest.get("extra"), seg_prefix=self.table,
-            sort_col=self.sort_col)
+            extra=manifest.get("extra"), sort_col=self.sort_col)
         self.backend.replace(spark, self.table, staged, token=token,
                              on_conflict="merge",
                              extra_merge=self.extra_merge)
@@ -439,8 +437,7 @@ class MergeOnReadTable:
         staged = f"{self.table}__morstage"
         self.backend.write_partitioned(
             df.withColumn(DELETED, F.lit(False)), staged,
-            self.partition_cols, extra=extra, seg_prefix=self.table,
-            sort_col=self.sort_col)
+            self.partition_cols, extra=extra, sort_col=self.sort_col)
         self.backend.replace(spark, self.table, staged,
                              token=list(manifest["segments"]),
                              on_conflict="fail",

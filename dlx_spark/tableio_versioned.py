@@ -1,19 +1,16 @@
-"""Manifest-committed versioned tables: a transactional implementation
-of the ``tableio.ParquetTableBackend`` interface on plain parquet.
-
-The default backend (tableio.ParquetTableBackend) publishes table swaps
-with DROP + RENAME — not atomic, single-writer by contract, and a reader
-holding a DataFrame across a swap can hit FileNotFoundException when the
-files it resolved are dropped underneath it.  This backend lifts all
-three limits with the commit protocol Delta/Iceberg use (re-derived here
-from the published designs — Armbrust et al., "Delta Lake: High-
-Performance ACID Table Storage over Cloud Object Stores", VLDB 2020):
+"""Manifest-committed versioned tables: the engine's table backend
+(``tableio.get_backend()``), a transactional commit protocol on plain
+parquet re-derived from the published Delta Lake design (Armbrust et
+al., "Delta Lake: High-Performance ACID Table Storage over Cloud Object
+Stores", VLDB 2020):
 
 - **Data files are immutable.**  Every write/append produces a fresh
-  segment directory ``<root>/data/<uuid>/`` that is never modified.
+  segment directory ``<root>/data/<table>-<uuid>/`` that is never
+  modified (the table name makes executed plans and disk usage
+  attributable; the uuid makes the name unique).
 - **The commit point is one file rename.**  A table version is a JSON
   manifest ``<root>/tables/<name>/v<NNNNNNNNNN>.json`` listing the
-  segment uuids that make up that version (plus layout + schema).  A
+  segment ids that make up that version (plus layout + schema).  A
   commit writes the manifest to a ``.tmp-*`` sibling and renames it to
   its version-numbered name.  Hadoop's rename never overwrites, so two
   writers racing for the same version number produce exactly one
@@ -58,14 +55,12 @@ vacuum clears remnants once a later commit exists.  Under an
 atomic-publish scheme the same state can only be external corruption
 and stays a loud error.
 
-Trade-off vs the default backend: segments are written clustered
-(hash-repartitioned by the bucket key and sorted within partitions) so
-file sizes stay balanced, but because the tables are path-based there
-is no catalog bucketing metadata, so joins against index tables shuffle
-instead of using Spark's bucketed-join elision.  Transactions cost one
-exchange per probe; the default backend keeps the shuffle-free probes
-but stays single-writer.  (Delta/Iceberg recover the clustering benefit
-with their own mechanisms — Z-ordering, sorted manifests.)
+Layout: segments are written clustered (hash-repartitioned by the
+bucket key and sorted within partitions) so file sizes stay balanced,
+but the tables are path-based, so there is no catalog bucketing
+metadata and a join against an index table that is too big to
+broadcast shuffles both sides.  (Delta/Iceberg recover the clustering
+benefit with their own mechanisms — Z-ordering, sorted manifests.)
 
 ``vacuum`` is safe to run concurrently with writers under its default
 retention horizon (``min_age_seconds``): in-flight commits — a data
@@ -85,16 +80,15 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from dlx_spark import fsio
-from dlx_spark.tableio import ConcurrentWriteError, ParquetTableBackend
+from dlx_spark.tableio import ConcurrentWriteError
 
 _MANIFEST_WIDTH = 10
 _MAX_COMMIT_RETRIES = 20
 
 
-class VersionedTableBackend(ParquetTableBackend):
+class VersionedTableBackend:
     """Snapshot-isolated, optimistically-concurrent table commits on
-    plain parquet (see module docstring).  Drop-in for
-    ``tableio.set_backend``."""
+    plain parquet (see module docstring)."""
 
     def __init__(self, root: str | None = None,
                  auto_compact_at: int | None = None):
@@ -276,15 +270,14 @@ class VersionedTableBackend(ParquetTableBackend):
     # ---------------------------------------------------- segment I/O
 
     def _write_segment(self, spark: SparkSession, df: DataFrame,
-                       key: str | None, n_buckets: int | None,
+                       table: str, key: str | None, n_buckets: int | None,
                        partition_cols: list[str] | None = None,
-                       seg_prefix: str = "",
                        sort_col: str | None = None) -> str:
-        # seg_prefix keeps segment directories legible (a table name in
-        # the path makes executed plans attributable to their source —
-        # plan tests pin "bibs_tokens" in scan paths); uniqueness still
-        # comes from the uuid
-        seg = (seg_prefix + "-" if seg_prefix else "") + uuid.uuid4().hex
+        # the table name keeps segment directories legible (executed
+        # plans and disk usage are attributable to their table — plan
+        # tests pin "bibs_tokens" in scan paths); uniqueness comes from
+        # the uuid
+        seg = f"{table}-{uuid.uuid4().hex}"
         if partition_cols:
             # hive-partitioned segment dirs: readers resolving the
             # manifest get listing-time partition pruning per segment.
@@ -304,7 +297,7 @@ class VersionedTableBackend(ParquetTableBackend):
             return seg
         if key is not None:
             # clustered layout: balanced, sorted segment files (no
-            # catalog bucket metadata — see module docstring trade-off)
+            # catalog bucket metadata — see the module docstring)
             df = df.repartition(n_buckets, F.col(key)) \
                    .sortWithinPartitions(key)
         df.write.parquet(self._data_dir(spark, seg))
@@ -337,14 +330,14 @@ class VersionedTableBackend(ParquetTableBackend):
     def write(self, df: DataFrame, table: str, key: str,
               n_buckets: int) -> None:
         spark = df.sparkSession
-        seg = self._write_segment(spark, df, key, n_buckets)
+        seg = self._write_segment(spark, df, table, key, n_buckets)
         self._commit(spark, table,
                      lambda latest: self._layout(df, key, n_buckets, [seg]))
 
     def append(self, df: DataFrame, table: str, key: str,
                n_buckets: int) -> None:
         spark = df.sparkSession
-        seg = self._write_segment(spark, df, key, n_buckets)
+        seg = self._write_segment(spark, df, table, key, n_buckets)
         n_after = 0
 
         def payload(latest):
@@ -358,18 +351,17 @@ class VersionedTableBackend(ParquetTableBackend):
 
     def write_plain(self, df: DataFrame, table: str) -> None:
         spark = df.sparkSession
-        seg = self._write_segment(spark, df, None, None)
+        seg = self._write_segment(spark, df, table, None, None)
         self._commit(spark, table,
                      lambda latest: self._layout(df, None, None, [seg]))
 
     def write_partitioned(self, df: DataFrame, table: str,
                           partition_cols: list[str], *,
                           extra: dict | None = None,
-                          seg_prefix: str = "",
                           sort_col: str | None = None) -> None:
         spark = df.sparkSession
-        seg = self._write_segment(spark, df, None, None, partition_cols,
-                                  seg_prefix=seg_prefix, sort_col=sort_col)
+        seg = self._write_segment(spark, df, table, None, None,
+                                  partition_cols, sort_col=sort_col)
         self._commit(spark, table,
                      lambda latest: self._layout(df, None, None, [seg],
                                                  partition_cols, extra,
@@ -381,7 +373,6 @@ class VersionedTableBackend(ParquetTableBackend):
                            extra_merge=None,
                            expect_extra: dict | None = None,
                            expect_create: bool = False,
-                           seg_prefix: str = "",
                            sort_col: str | None = None) -> int:
         """Append one segment; returns the committed manifest's segment
         count (callers use it to decide compaction).  ``extra`` seeds
@@ -404,8 +395,8 @@ class VersionedTableBackend(ParquetTableBackend):
         segment file is reclaimed by vacuum, like a failed replace's
         stage."""
         spark = df.sparkSession
-        seg = self._write_segment(spark, df, None, None, partition_cols,
-                                  seg_prefix=seg_prefix, sort_col=sort_col)
+        seg = self._write_segment(spark, df, table, None, None,
+                                  partition_cols, sort_col=sort_col)
         n_after = 0
 
         def payload(latest):
@@ -643,10 +634,6 @@ class VersionedTableBackend(ParquetTableBackend):
 
         self._commit(spark, table, payload)
 
-    def refresh(self, spark: SparkSession, table: str) -> None:
-        """No-op: every ``read`` resolves the latest manifest afresh;
-        already-returned DataFrames are snapshots by design."""
-
     def exists(self, spark: SparkSession, table: str) -> bool:
         return bool(self.versions(spark, table))
 
@@ -780,11 +767,14 @@ class VersionedTableBackend(ParquetTableBackend):
 
     def replace_published(self, spark: SparkSession, table: str,
                           staged: str) -> bool:
-        """Provenance check (see the base-class docstring): True iff
-        some committed manifest of ``table`` cites the stage's CURRENT
-        commit id as its swap source — the swap landed and only the
-        staged drop was lost.  Keyed on the unique commit id, never the
-        stage's version number (stage generations restart at 1)."""
+        """Whether a prior ``replace(table, staged)`` already committed
+        and only its staged drop was lost: True iff some committed
+        manifest of ``table`` cites the stage's CURRENT commit id as its
+        swap source.  Crash-recovery protocols that replay a
+        conflict-checked replace must consult this first, or they
+        mistake their own published content for a concurrent write.
+        Keyed on the unique commit id, never the stage's version number
+        (stage generations restart at 1)."""
         if not self.exists(spark, staged):
             return False
         try:
@@ -882,10 +872,9 @@ class VersionedTableBackend(ParquetTableBackend):
                              f"got {keep}")
         spark = df.sparkSession
         _, manifest = self._latest(spark, table)
-        seg = self._write_segment(spark, df, manifest.get("key"),
+        seg = self._write_segment(spark, df, table, manifest.get("key"),
                                   manifest.get("n_buckets"),
                                   manifest.get("partition_cols"),
-                                  seg_prefix=table,
                                   sort_col=sort_col
                                   or manifest.get("sort_col"))
 

@@ -31,7 +31,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from dlx_spark import get_spark
+    from dlx_spark import get_spark, tableio
     from dlx_spark.operators.dedup_index import DigestIndex, MinHashIndex
     from dlx_spark.streaming import neardedup_ingest_stream
 
@@ -99,25 +99,22 @@ def main() -> None:
               f"{clean_vecs.count()} survived cosine near-dedup vs history")
 
         # ---- maintenance: fold appended files ------------------------
-        before = len(spark.table("demo_mh_sigs").inputFiles())
+        be = tableio.get_backend()
+        before = len(be.read(spark, "demo_mh_sigs").inputFiles())
         mh.compact()
         ei.compact()
-        after = len(spark.table("demo_mh_sigs").inputFiles())
+        after = len(be.read(spark, "demo_mh_sigs").inputFiles())
         print(f"compaction: signature table {before} -> {after} files")
 
         # ---- the production posture, in one stanza --------------------
-        # On a transactional deployment the same pipeline runs with two
-        # one-time installs (object stores additionally install a CAS
-        # commit scheme) and a maintenance cadence:
+        # The index tables above are already manifest commits (safe
+        # under concurrent appends, atomic swaps, snapshot readers).  An
+        # object store additionally installs a CAS commit scheme once,
+        # and a maintenance cadence reclaims superseded segments:
         #
         #   from dlx_spark import fsio, tableio
-        #   from dlx_spark.tableio_versioned import VersionedTableBackend
         #   fsio.set_commit_scheme(fsio.SingleDriverCASScheme())  # s3a
-        #   be = VersionedTableBackend(root=".../warehouse/_versioned")
-        #   tableio.set_backend(be)
-        #   ... identical pipeline code: appends become manifest
-        #   commits (safe under concurrency), rewrites become atomic
-        #   swaps, readers hold snapshots ...
+        #   be = tableio.get_backend()
         #   be.compact_segments(spark, "demo_mh_sigs")   # fold appends
         #   be.vacuum(spark, keep_last=2)                # retention-gated
         #
@@ -128,7 +125,7 @@ def main() -> None:
         from dlx_spark.operators.dedup_index import EmbeddingIndex
         for cls, name in ((MinHashIndex, "demo_mh"), (DigestIndex, "demo_dg"),
                           (EmbeddingIndex, "demo_emb")):
-            if spark.catalog.tableExists(f"{name}_meta"):
+            if tableio.get_backend().exists(spark, f"{name}_meta"):
                 cls(spark, name).drop()
         shutil.rmtree(work, ignore_errors=True)
     print("done")

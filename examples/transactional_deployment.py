@@ -16,8 +16,6 @@ touching any operator code:
    conditional-put service (FileExternalCAS stands in; production
    implements the same 5-method interface on DynamoDB / S3
    conditional PUT)
-5. Delta Lake installed     -> DeltaTableBackend drops in behind the
-   same seam (skipped gracefully here: delta-spark not installed)
 """
 
 from __future__ import annotations
@@ -46,6 +44,7 @@ def main() -> None:
         [(i, f"document number {i} with some shared tokens alpha beta")
          for i in range(50)], "doc_id long, text string")
 
+    default_be = tableio.get_backend()
     try:
         # ---- 1. versioned backend: atomic commits, snapshot readers
         be = VersionedTableBackend(root=os.path.join(workdir, "vroot"))
@@ -85,17 +84,8 @@ def main() -> None:
               f"{be4.versions(spark, 'multi_driver_table')} "
               f"(every publish recoverable from the claim record)")
         fsio.set_commit_scheme(fsio.HadoopRenameScheme())
-
-        # ---- 5. Delta Lake behind the same seam (when installed)
-        try:
-            from dlx_spark.tableio_delta import DeltaTableBackend
-            tableio.set_backend(DeltaTableBackend(
-                root=os.path.join(workdir, "droot")))
-            print("Delta backend installed — same operators, Delta commits")
-        except ImportError as exc:
-            print(f"Delta leg skipped: {exc}")
     finally:
-        tableio.set_backend(tableio.ParquetTableBackend())
+        tableio.set_backend(default_be)
         fsio.set_commit_scheme(fsio.HadoopRenameScheme())
         if len(sys.argv) <= 1:
             shutil.rmtree(workdir, ignore_errors=True)

@@ -23,20 +23,20 @@ def spark():
 
 
 def _sweep_stale_warehouse(spark):
-    """Make the suite immune to killed predecessors: the test session's
-    catalog is in-memory, so at session START every directory under the
-    warehouse is by definition an orphan of a prior (possibly kill -9'd)
-    run — no live table can reference it.  Sweeping here means no test
-    can inherit a LOCATION_ALREADY_EXISTS from a run that died mid-write
-    (the ParquetTableBackend also self-heals per-create; this is the
-    suite-level guarantee, covering appends and the versioned root).
+    """Make the suite immune to killed predecessors: every test table
+    lives under the warehouse (the index tables in the versioned root
+    ``_versioned``, the few catalog tables beside it in the in-memory
+    catalog), so at session START every directory there is a leftover
+    of a prior (possibly kill -9'd) run.  Sweeping it means no test
+    inherits another run's manifests, segments or a catalog
+    LOCATION_ALREADY_EXISTS from a run that died mid-write.
 
     SINGLE-PROCESS ASSUMPTION: the sweep is only sound when this run is
     the warehouse's sole user.  Under pytest-xdist (or two concurrent
     runs in one checkout) a later-starting worker would delete the live
     tables of an in-flight sibling sharing cwd/spark-warehouse — so the
-    sweep is skipped there, restoring the per-create self-heal as the
-    only (still-correct) orphan defense."""
+    sweep is skipped there; tests then rely on their own teardown
+    drops."""
     if os.environ.get("PYTEST_XDIST_WORKER"):
         return
     from dlx_spark import fsio

@@ -117,9 +117,16 @@ def test_ivf_drift_and_refresh_cycle(spark, tmp_path):
     (fast ingest) quantize a drifted distribution badly; a
     ``refresh_ivf_index`` retrain-and-rewrite restores pruned-probe
     recall, and a crash mid-swap is repaired by ``recover_ivf_index``."""
-    from dlx_spark import fsio
+    from dlx_spark import tableio
     from dlx_spark.operators import bucketing
+    from dlx_spark.tableio_versioned import VersionedTableBackend
 
+    class LosesStagedDrop(VersionedTableBackend):
+        def drop(self, spark, table):
+            if not table.endswith("__refresh"):
+                super().drop(spark, table)
+
+    be = tableio.get_backend()
     rows = _clustered_vectors()
     initial = spark.createDataFrame(
         [r for r in rows if r[2] < 3],
@@ -135,7 +142,7 @@ def test_ivf_drift_and_refresh_cycle(spark, tmp_path):
         bucketing.write_ivf_index(initial, path, cents0)
         # drift: clusters 3-4 arrive, appended under the OLD quantizer
         bucketing.append_ivf_index(drifted, path, cents0)
-        assert spark.table(path).count() == combined.count()
+        assert be.read(spark, path).count() == combined.count()
 
         q = rows[4 * PER_CLUSTER][1]           # member of drifted cluster 4
         exact = {r["id"] for r in
@@ -148,25 +155,30 @@ def test_ivf_drift_and_refresh_cycle(spark, tmp_path):
             spark, path, cents1, q, k=10, nprobe=1).collect()}
         assert len(got & exact) / len(exact) >= 0.9
         # nothing lost in the rewrite
-        assert spark.table(path).count() == combined.count()
+        assert be.read(spark, path).count() == combined.count()
 
-        # crash window: live dropped, stage not yet renamed — recover
+        # crash window: stage committed, swap not yet — recover
         # publishes the stage and probes see the full index again
-        spark.sql(f"ALTER TABLE {path} RENAME TO {path}__refresh")
+        be.write_partitioned(be.read(spark, path), path + "__refresh",
+                             ["list_id"])
         bucketing.recover_ivf_index(spark, path)
-        assert spark.table(path).count() == combined.count()
+        assert not be.exists(spark, path + "__refresh")
+        assert be.read(spark, path).count() == combined.count()
         got2 = {r["id"] for r in bucketing.probe_ivf_index(
             spark, path, cents1, q, k=10, nprobe=1).collect()}
         assert got2 == got
-        # stale-stage variant: both present -> stage dropped, live intact
-        (spark.table(path).limit(5).write.mode("overwrite")
-         .saveAsTable(path + "__refresh"))
+        # swap committed, staged drop lost -> stage dropped, live intact
+        lossy = LosesStagedDrop(root=be.root(spark))
+        lossy.write_partitioned(be.read(spark, path), path + "__refresh",
+                                ["list_id"])
+        lossy.replace(spark, path, path + "__refresh")
+        assert be.exists(spark, path + "__refresh")
         bucketing.recover_ivf_index(spark, path)
-        assert not spark.catalog.tableExists(path + "__refresh")
-        assert spark.table(path).count() == combined.count()
+        assert not be.exists(spark, path + "__refresh")
+        assert be.read(spark, path).count() == combined.count()
     finally:
         for t in (path, path + "__refresh"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+            be.drop(spark, t)
 
 
 @pytest.mark.slow

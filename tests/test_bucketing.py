@@ -1,6 +1,6 @@
-"""Storage-layout tests: bucketed joins must plan WITHOUT a shuffle on
-the bucketed sides, and written ANN indexes must prune partitions at
-the scan.  These assert the PLAN (the scale property), not just the
+"""Storage-layout tests: catalog-bucketed joins must plan WITHOUT a
+shuffle on the bucketed sides, and written ANN indexes must prune
+partitions at the scan.  These assert the PLAN (the scale property), not just the
 result values."""
 
 from __future__ import annotations
@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from dlx_spark import tableio
 from dlx_spark.operators import bucketing, similarity
 
 
@@ -23,7 +24,7 @@ def _drop_ann_tables(spark):
     yield
     for t in ("t_lsh_idx", "t_lsh_idx_b", "t_ivf_idx",
               "t_lsh_single", "t_lsh_banded"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        tableio.get_backend().drop(spark, t)
 
 
 def _exchanges(df) -> int:
@@ -180,8 +181,8 @@ def test_banded_lsh_index_layout_and_recall(spark, tmp_path):
     bucketing.write_lsh_index(vecs, banded, n_planes=7, bands=4, dim=dim)
 
     # storage: one copy per band
-    n_single = spark.table(single).count()
-    n_banded = spark.table(banded).count()
+    n_single = tableio.get_backend().read(spark, single).count()
+    n_banded = tableio.get_backend().read(spark, banded).count()
     assert n_single == 240 and n_banded == 4 * 240
 
     # single-query probe finds the twin through SOME band
@@ -223,10 +224,11 @@ def test_ann_index_ops_route_through_backend_seam(spark):
     the same recording-backend pin the dedup indexes have."""
     import numpy as np
 
-    from dlx_spark import tableio
+    from dlx_spark.tableio_versioned import VersionedTableBackend
 
-    class Recording(tableio.ParquetTableBackend):
+    class Recording(VersionedTableBackend):
         def __init__(self):
+            super().__init__()
             self.calls = []
 
         def write_partitioned(self, df, table, cols):
@@ -254,6 +256,7 @@ def test_ann_index_ops_route_through_backend_seam(spark):
     rng = np.random.RandomState(11)
     rows = [(i, rng.standard_normal(8).tolist()) for i in range(40)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    prev = tableio.get_backend()
     rec = Recording()
     tableio.set_backend(rec)
     try:
@@ -282,9 +285,9 @@ def test_ann_index_ops_route_through_backend_seam(spark):
             bucketing.write_lsh_index(df, "/tmp/not/a/table", n_planes=5,
                                       dim=8)
     finally:
-        tableio.set_backend(tableio.ParquetTableBackend())
+        tableio.set_backend(prev)
         for t in ("t_seam_lsh", "t_seam_ivf", "t_seam_ivf__refresh"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+            rec.drop(spark, t)
 
 
 def test_semdedup_index_equals_onthefly_and_prunes_at_probe(spark):
@@ -307,7 +310,7 @@ def test_semdedup_index_equals_onthefly_and_prunes_at_probe(spark):
         assert from_index == on_the_fly
         assert 0 < len(from_index) < vecs.count()
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        tableio.get_backend().drop(spark, name)
 
 
 @pytest.mark.slow
@@ -358,4 +361,4 @@ def test_semdedup_append_online_ingest(spark):
             if r["vec_id"] >= 10)
         assert batch_mode == [11, 13]
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        tableio.get_backend().drop(spark, name)

@@ -39,9 +39,10 @@ class SimulatedCrash(Exception):
 
 @pytest.fixture(autouse=True)
 def restore_scheme():
+    prev = tableio.get_backend()
     yield
     fsio.set_commit_scheme(fsio.HadoopRenameScheme())
-    tableio.set_backend(tableio.ParquetTableBackend())
+    tableio.set_backend(prev)
 
 
 @pytest.fixture
@@ -317,8 +318,8 @@ def test_vacuum_retention_protects_inflight_commit(spark, be):
     resume = threading.Event()
 
     class PausingBackend(VersionedTableBackend):
-        def _write_segment(self, spark, df, key, n_buckets):
-            seg = super()._write_segment(spark, df, key, n_buckets)
+        def _write_segment(self, spark, df, table, key, n_buckets):
+            seg = super()._write_segment(spark, df, table, key, n_buckets)
             if getattr(self, "_pause_once", False):
                 self._pause_once = False
                 paused.set()

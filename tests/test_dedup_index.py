@@ -15,6 +15,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from dlx_spark import tableio
 from dlx_spark.operators import dedup
 from dlx_spark.operators.dedup_index import (DigestIndex, MinHashIndex,
                                              SimHashIndex)
@@ -65,6 +66,11 @@ def split_corpus(spark):
     corpus = df.filter(F.col("doc_id") < 200)
     batch = df.filter(F.col("doc_id") >= 200)
     return df, corpus, batch
+
+
+def _tbl(spark, name):
+    """An index table's current content, through the table backend."""
+    return tableio.get_backend().read(spark, name)
 
 
 @pytest.mark.slow
@@ -157,25 +163,23 @@ def test_digest_index_matches_full_exact_dedup(spark, split_corpus):
         idx.drop()
 
 
-def test_digest_antijoin_shuffles_batch_only(spark, split_corpus):
-    """The bucketed digest table satisfies the anti-join's distribution
-    from its layout: with broadcast disabled, the only Exchange in the
-    plan is the (small) batch side."""
+def test_digest_antijoin_broadcasts_index_side(spark, split_corpus):
+    """Below the broadcast threshold the digest table is the broadcast
+    side of the anti-join: the plan holds no shuffle Exchange at all,
+    so no index row is shuffled."""
     _, corpus, batch = split_corpus
     idx = DigestIndex.create(corpus, "t_dg_idx2")
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         fresh = idx._batch_digests(batch).join(
-            spark.table("t_dg_idx2_digests"), "digest", "left_anti")
-        fresh.count()
+            _tbl(spark, "t_dg_idx2_digests"), "digest", "left_anti")
+        assert {r["doc_id"] for r in fresh.collect()} >= set(range(240, 250))
         plan = fresh._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
+        assert "BuildRight" in plan, plan
         n_shuffles = plan.count("Exchange") - plan.count("BroadcastExchange") \
             - plan.count("ReusedExchange")
-        assert n_shuffles <= 1, plan
-        assert "SortMergeJoin" in plan and "LeftAnti" in plan
+        assert n_shuffles == 0, plan
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         idx.drop()
 
 
@@ -230,8 +234,7 @@ def test_streaming_neardedup_ingest(spark, split_corpus, tmp_path):
 
         # replay batch 1 through the raw fn (simulating a foreachBatch
         # redelivery): output identical, index unchanged
-        spark.catalog.refreshTable("t_mh_stream_sigs")  # appends came from the stream's session
-        n_sigs = spark.table("t_mh_stream_sigs").count()
+        n_sigs = _tbl(spark, "t_mh_stream_sigs").count()
         assert n_sigs > 120  # corpus + batch-0 survivors + doc 600
         # same checkpoint → same run id.  Committed-marker path: the
         # redelivery of the fully committed batch skips entirely.
@@ -244,7 +247,7 @@ def test_streaming_neardedup_ingest(spark, split_corpus, tmp_path):
             "doc_id long, text string")
         fn(replay_df, 0)
         assert read_batch(0) == clean1
-        assert spark.table("t_mh_stream_sigs").count() == n_sigs
+        assert _tbl(spark, "t_mh_stream_sigs").count() == n_sigs
 
         # crash-window path through the REAL sink: strip the committed
         # marker and plant the attempt marker (as a crashed first
@@ -258,7 +261,7 @@ def test_streaming_neardedup_ingest(spark, split_corpus, tmp_path):
         assert read_batch(0) == clean1
         assert os.path.exists(os.path.join(rdir, "_committed_batch_0"))
         assert not os.path.exists(os.path.join(rdir, "_attempt_batch_0"))
-        assert spark.table("t_mh_stream_sigs").count() == n_sigs
+        assert _tbl(spark, "t_mh_stream_sigs").count() == n_sigs
 
         # deleted-and-recreated checkpoint: batch ids restart at 0 but
         # land under a NEW run= directory — the old output is intact and
@@ -322,7 +325,7 @@ def test_streaming_neardedup_crash_window(spark, split_corpus, tmp_path):
         assert got == want
         assert not os.path.exists(out + "/run=default/_attempt_batch_0")
         # and the index holds exactly one signature row per survivor
-        dup_ids = (spark.table("t_mh_crash_sigs").groupBy("id").count()
+        dup_ids = (_tbl(spark, "t_mh_crash_sigs").groupBy("id").count()
                    .filter("count > 1").count())
         assert dup_ids == 0
     finally:
@@ -332,33 +335,34 @@ def test_streaming_neardedup_crash_window(spark, split_corpus, tmp_path):
 @pytest.mark.slow
 def test_compact_folds_appended_files(spark, split_corpus):
     """Repeated appends accrete files; compact() folds each table to one
-    file per bucket with identical probe results, and a crash between
-    DROP and RENAME is repaired on reopen."""
+    file per bucket with identical probe results, and a compaction
+    stage committed before a crash is published on reopen."""
     _, corpus, batch = split_corpus
     idx = MinHashIndex.create(corpus, "t_mh_cpt", n_buckets=4)
     try:
         for i in range(3):
             idx.append(batch.withColumn(
                 "doc_id", F.col("doc_id") + (1000 * (i + 1))))
-        before_files = len(spark.table("t_mh_cpt_sigs").inputFiles())
+        before_files = len(_tbl(spark, "t_mh_cpt_sigs").inputFiles())
         assert before_files > 4
         clone = corpus.limit(1).withColumn("doc_id", F.lit(777_777).cast("long"))
         before = {(r["corpus_id"], r["batch_id"])
                   for r in idx.probe(clone, 0.99).collect()}
 
         idx.compact()
-        assert len(spark.table("t_mh_cpt_sigs").inputFiles()) == 4
-        assert len(spark.table("t_mh_cpt_bands").inputFiles()) == 4
+        assert len(_tbl(spark, "t_mh_cpt_sigs").inputFiles()) == 4
+        assert len(_tbl(spark, "t_mh_cpt_bands").inputFiles()) == 4
         after = {(r["corpus_id"], r["batch_id"])
                  for r in idx.probe(clone, 0.99).collect()}
         assert after == before and len(after) >= 1
 
-        # simulate the crash window: staged table exists, live one dropped
-        from dlx_spark.operators.dedup_index import _compact_table
-        spark.sql("ALTER TABLE t_mh_cpt_sigs RENAME TO t_mh_cpt_sigs__compact")
+        # simulate the crash window: the stage committed, the swap not
+        be = tableio.get_backend()
+        be.write(_tbl(spark, "t_mh_cpt_sigs"), "t_mh_cpt_sigs__compact",
+                 "id", 4)
         reopened = MinHashIndex(spark, "t_mh_cpt")  # recovers on open
-        assert spark.catalog.tableExists("t_mh_cpt_sigs")
-        assert not spark.catalog.tableExists("t_mh_cpt_sigs__compact")
+        assert be.exists(spark, "t_mh_cpt_sigs")
+        assert not be.exists(spark, "t_mh_cpt_sigs__compact")
         again = {(r["corpus_id"], r["batch_id"])
                  for r in reopened.probe(clone, 0.99).collect()}
         assert again == before
@@ -380,15 +384,14 @@ def test_append_crash_between_band_and_sig_writes(spark, split_corpus):
         # simulate the crashed first attempt: bands written, sigs not
         p = idx.params
         sigs = idx._batch_sigs(batch)
-        (dedup.band_buckets(sigs, p["bands"]).write.mode("append")
-         .bucketBy(p["n_buckets"], "bucket").sortBy("bucket")
-         .saveAsTable("t_mh_crash2_bands"))
+        tableio.get_backend().append(dedup.band_buckets(sigs, p["bands"]),
+                                     "t_mh_crash2_bands", "bucket",
+                                     p["n_buckets"])
 
         # the replayed append must still index the batch fully
         idx.append(batch, if_absent=True)
-        spark.catalog.refreshTable("t_mh_crash2_sigs")
         batch_ids = {r["doc_id"] for r in batch.collect()}
-        indexed = {r["id"] for r in spark.table("t_mh_crash2_sigs").collect()}
+        indexed = {r["id"] for r in _tbl(spark, "t_mh_crash2_sigs").collect()}
         assert batch_ids <= indexed
 
         # duplicate band rows exist but probe results are still unique
@@ -399,7 +402,7 @@ def test_append_crash_between_band_and_sig_writes(spark, split_corpus):
 
         # compaction folds the duplicates away
         idx.compact()
-        bands = spark.table("t_mh_crash2_bands")
+        bands = _tbl(spark, "t_mh_crash2_bands")
         assert bands.count() == bands.distinct().count()
         assert len(bands.inputFiles()) == 4
     finally:
@@ -498,7 +501,7 @@ def test_simhash_index_probe_equals_full_cross_pairs(spark, split_corpus):
         assert idx.probe(one, max_hamming=0).count() >= 1
 
         idx.compact()
-        assert len(spark.table("t_sh_idx_fps").inputFiles()) == 4
+        assert len(_tbl(spark, "t_sh_idx_fps").inputFiles()) == 4
 
         # the 4-band pigeonhole cannot guarantee recall beyond hamming
         # 3: larger thresholds must refuse, not silently miss pairs
@@ -623,22 +626,22 @@ def test_simhash_probe_broadcast_gate(spark, split_corpus):
 
 def test_reader_during_compaction(spark, split_corpus):
     """The documented reader contract around maintenance: a handle
-    resolved BEFORE compact() may fail (stale file listing / dropped
-    table) or may still answer, but a FRESH resolution after compact()
-    always sees the complete, identical post-image."""
+    resolved BEFORE compact() is a snapshot and still answers with the
+    pre-compaction content (its segments stay until vacuum), and a FRESH
+    resolution after compact() sees the complete, identical
+    post-image."""
     _, corpus, _ = split_corpus
     idx = MinHashIndex.create(corpus, "t_mh_reader", n_buckets=4)
     try:
-        before = spark.table("t_mh_reader_sigs")
+        before = _tbl(spark, "t_mh_reader_sigs")
         want = {r["id"] for r in before.select("id").collect()}
+        idx.append(corpus.withColumn("doc_id", F.col("doc_id") + 5000))
         idx.compact()
-        try:
-            got_old = {r["id"] for r in before.select("id").collect()}
-            assert got_old == want       # if the old handle answers,
-        except Exception:                # it must not answer garbage;
-            pass                         # failing outright is allowed
+        got_old = {r["id"] for r in before.select("id").collect()}
+        assert got_old == want
+        want |= {i + 5000 for i in want}
         fresh = {r["id"] for r in
-                 spark.table("t_mh_reader_sigs").select("id").collect()}
+                 _tbl(spark, "t_mh_reader_sigs").select("id").collect()}
         assert fresh == want
     finally:
         idx.drop()
@@ -656,15 +659,15 @@ def test_digest_index_replay_safe(spark, split_corpus):
         first = idx.dedup_batch(batch, replay_safe=False)
         want = sorted(r["doc_id"] for r in first.collect())
         assert want
-        n_rows = spark.table("t_dg_replay_digests").count()
+        n_rows = _tbl(spark, "t_dg_replay_digests").count()
 
         # naive replay (no replay_safe): everything looks ingested
         assert idx.filter_new(batch).count() == 0
         # replay_safe replay: identical output, no index growth, no dups
         again = idx.dedup_batch(batch, replay_safe=True)
         assert sorted(r["doc_id"] for r in again.collect()) == want
-        assert spark.table("t_dg_replay_digests").count() == n_rows
-        dups = (spark.table("t_dg_replay_digests").groupBy("digest").count()
+        assert _tbl(spark, "t_dg_replay_digests").count() == n_rows
+        dups = (_tbl(spark, "t_dg_replay_digests").groupBy("digest").count()
                 .filter("count > 1").count())
         assert dups == 0
     finally:
@@ -693,8 +696,8 @@ def test_streaming_two_stage_exact_then_near_dedup(spark, split_corpus, tmp_path
         # dups (215-221) die in stage 2; fresh docs survive
         assert got and not any(200 <= d < 205 for d in got)
         assert not any(215 <= d <= 221 for d in got)
-        n_dg = spark.table("t_dg_two_digests").count()
-        n_mh = spark.table("t_mh_two_sigs").count()
+        n_dg = _tbl(spark, "t_dg_two_digests").count()
+        n_mh = _tbl(spark, "t_mh_two_sigs").count()
 
         # crash window: strip committed, plant attempt, replay
         fsio.remove(spark, out + "/run=default/_committed_batch_0")
@@ -702,8 +705,8 @@ def test_streaming_two_stage_exact_then_near_dedup(spark, split_corpus, tmp_path
         fn(batch, 0)
         assert {r["doc_id"] for r in
                 spark.read.parquet(out + "/run=default/batch=0").collect()} == got
-        assert spark.table("t_dg_two_digests").count() == n_dg
-        assert spark.table("t_mh_two_sigs").count() == n_mh
+        assert _tbl(spark, "t_dg_two_digests").count() == n_dg
+        assert _tbl(spark, "t_mh_two_sigs").count() == n_mh
     finally:
         DigestIndex(spark, "t_dg_two").drop()
         MinHashIndex(spark, "t_mh_two").drop()
@@ -794,7 +797,7 @@ def test_embedding_dedup_batch_and_replay(spark, emb_split):
         # clusters share members across the split, so MOST of the batch
         # is recognized as already ingested
         assert len(got) < batch.count() / 2
-        n_rows = spark.table("t_emb_idx2_vecs").count()
+        n_rows = _tbl(spark, "t_emb_idx2_vecs").count()
 
         # a genuinely new direction survives and is appended
         dim = len(_emb_rows()[0][1])
@@ -804,14 +807,12 @@ def test_embedding_dedup_batch_and_replay(spark, emb_split):
                                       "vec_id long, embedding array<double>")
         clean2 = idx.dedup_batch(novel, threshold=0.9)
         assert [r["vec_id"] for r in clean2.collect()] == [500]
-        spark.catalog.refreshTable("t_emb_idx2_vecs")
-        assert spark.table("t_emb_idx2_vecs").count() == n_rows + 1
+        assert _tbl(spark, "t_emb_idx2_vecs").count() == n_rows + 1
 
         # crash replay of the same batch: identical output, no growth
         replay = idx.dedup_batch(novel, threshold=0.9, replay_safe=True)
         assert [r["vec_id"] for r in replay.collect()] == [500]
-        spark.catalog.refreshTable("t_emb_idx2_vecs")
-        assert spark.table("t_emb_idx2_vecs").count() == n_rows + 1
+        assert _tbl(spark, "t_emb_idx2_vecs").count() == n_rows + 1
     finally:
         idx.drop()
 
@@ -868,8 +869,7 @@ def test_embedding_ingest_stream_end_to_end(spark, emb_split, tmp_path):
                  .filter(F.col("batch") == 0).collect()}
         # most batch vectors duplicate corpus cluster members
         assert len(clean) < len(rows) / 2
-        spark.catalog.refreshTable("t_emb_stream_vecs")
-        n_vecs = spark.table("t_emb_stream_vecs").count()
+        n_vecs = _tbl(spark, "t_emb_stream_vecs").count()
 
         # crash-window replay through the raw fn: identical output
         import glob as globmod
@@ -887,8 +887,7 @@ def test_embedding_ingest_stream_end_to_end(spark, emb_split, tmp_path):
         fn(replay_df, 0)
         assert {r["vec_id"] for r in spark.read.parquet(out)
                 .filter(F.col("batch") == 0).collect()} == clean
-        spark.catalog.refreshTable("t_emb_stream_vecs")
-        assert spark.table("t_emb_stream_vecs").count() == n_vecs
+        assert _tbl(spark, "t_emb_stream_vecs").count() == n_vecs
     finally:
         EmbeddingIndex(spark, "t_emb_stream").drop()
 
@@ -915,16 +914,16 @@ def test_embedding_rebucket_regrows_plane_count(spark, emb_split):
                 for r in fresh.probe(batch, threshold=0.9).collect()}
         assert got == want and len(want) >= 20
         # key table rewritten once per band, payload untouched
-        spark.catalog.refreshTable("t_emb_rb_buckets")
-        assert (spark.table("t_emb_rb_buckets").count()
-                == 2 * spark.table("t_emb_rb_vecs").count())
+        assert (_tbl(spark, "t_emb_rb_buckets").count()
+                == 2 * _tbl(spark, "t_emb_rb_vecs").count())
 
         # pre-commit crash: staged keys but NO staged meta -> discarded,
         # live geometry still answers identically
-        spark.table("t_emb_rb_buckets").limit(3).write.mode("overwrite") \
-            .saveAsTable("t_emb_rb_buckets__rebucket")
+        be = tableio.get_backend()
+        be.write(_tbl(spark, "t_emb_rb_buckets").limit(3),
+                 "t_emb_rb_buckets__rebucket", "bucket", 32)
         reopened = EmbeddingIndex(spark, "t_emb_rb")
-        assert not spark.catalog.tableExists("t_emb_rb_buckets__rebucket")
+        assert not be.exists(spark, "t_emb_rb_buckets__rebucket")
         assert reopened.params["n_planes"] == 8
 
         # post-commit crash: BOTH stages present -> rolled forward
@@ -933,16 +932,17 @@ def test_embedding_rebucket_regrows_plane_count(spark, emb_split):
         p2 = dict(reopened.params)
         p2["n_planes"], p2["bands"] = 4, 1
         keys2 = similarity.banded_lsh_keys(
-            spark.table("t_emb_rb_vecs"), 1, 4, p2["seed"],
+            _tbl(spark, "t_emb_rb_vecs"), 1, 4, p2["seed"],
             vec_col="vec", id_col="id", dim=dim)
-        keys2.write.mode("overwrite").bucketBy(p2["n_buckets"], "bucket") \
-            .sortBy("bucket").saveAsTable("t_emb_rb_buckets__rebucket")
-        spark.createDataFrame([(jsonlib.dumps(p2),)], "params string") \
-            .write.mode("overwrite").saveAsTable("t_emb_rb_meta__rebucket")
+        be.write(keys2, "t_emb_rb_buckets__rebucket", "bucket",
+                 p2["n_buckets"])
+        be.write_plain(spark.createDataFrame([(jsonlib.dumps(p2),)],
+                                             "params string"),
+                       "t_emb_rb_meta__rebucket")
         rolled = EmbeddingIndex(spark, "t_emb_rb")
         assert rolled.params["n_planes"] == 4 and rolled.params["bands"] == 1
-        assert not spark.catalog.tableExists("t_emb_rb_meta__rebucket")
-        assert not spark.catalog.tableExists("t_emb_rb_buckets__rebucket")
+        assert not be.exists(spark, "t_emb_rb_meta__rebucket")
+        assert not be.exists(spark, "t_emb_rb_buckets__rebucket")
         back = {(r["corpus_id"], r["batch_id"])
                 for r in rolled.probe(batch, threshold=0.9).collect()}
         assert back  # the rolled-forward geometry answers
@@ -950,7 +950,7 @@ def test_embedding_rebucket_regrows_plane_count(spark, emb_split):
         idx.drop()
         fresh.drop()
         for t in ("t_emb_rb_buckets__rebucket", "t_emb_rb_meta__rebucket"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+            tableio.get_backend().drop(spark, t)
 
 
 @pytest.mark.slow
@@ -1022,7 +1022,7 @@ def test_simhash_probe_mega_bucket_cap_stays_linear(spark):
 
 @pytest.mark.slow
 def test_rebucket_intent_discards_stage_when_append_raced_the_crash(spark):
-    """Round-6 verdict item: the parquet-backend residual window.  An
+    """Round-6 verdict item: the rebucket residual window.  An
     append lands AFTER rebucket's conflict check armed the commit point
     and the process crashes — the old roll-forward published the staged
     keys and silently dropped the appended vector's keys.  The intent
@@ -1033,7 +1033,6 @@ def test_rebucket_intent_discards_stage_when_append_raced_the_crash(spark):
     import json as jsonlib
     import random
 
-    from dlx_spark import tableio
     from dlx_spark.operators import similarity
     from dlx_spark.operators.dedup_index import EmbeddingIndex
 
@@ -1083,7 +1082,7 @@ def test_rebucket_intent_discards_stage_when_append_raced_the_crash(spark):
         assert (500, 501) in hits        # the raced append is findable
     finally:
         idx.drop()
-        spark.sql("DROP TABLE IF EXISTS t_rbi_rebucket_intent")
+        be.drop(spark, "t_rbi_rebucket_intent")
 
     # no race: the same crash state rolls FORWARD to the new geometry
     idx2 = EmbeddingIndex.create(corpus, "t_rbi2", n_planes=4, dim=6)
@@ -1094,33 +1093,24 @@ def test_rebucket_intent_discards_stage_when_append_raced_the_crash(spark):
         assert not be.exists(spark, "t_rbi2_rebucket_intent")
     finally:
         idx2.drop()
-        spark.sql("DROP TABLE IF EXISTS t_rbi2_rebucket_intent")
+        be.drop(spark, "t_rbi2_rebucket_intent")
 
 
 @pytest.mark.slow
-def test_rebucket_recovery_mid_swap_crash_states_on_both_backends(spark,
-                                                                  tmp_path):
-    """Review regressions (reproduced, then fixed): the conflict-checked
-    recovery replay must not destroy its own progress.
-
-    Parquet backend: a crash between the buckets replace's DROP and
-    RENAME leaves the target MISSING — the replay must treat that as
-    its own crashed DROP and complete the rename, not read the None
-    snapshot as a concurrent write and delete the staged keys (the only
-    surviving copy).
-
-    Versioned backend: a crash between the buckets-swap manifest commit
-    and the staged drop leaves the stage present with its content
-    already published — the replay must consult provenance and finish
-    the cleanup, not count its own published segments as 'gained',
-    fail, and roll back the meta stage (leaving keys and params under
-    mismatched geometries)."""
+def test_rebucket_recovery_after_lost_staged_drop(spark, tmp_path):
+    """Review regression (reproduced, then fixed): the conflict-checked
+    recovery replay must not destroy its own progress.  A crash between
+    the buckets-swap manifest commit and the staged drop leaves the
+    stage present with its content already published — the replay must
+    consult provenance and finish the cleanup, not count its own
+    published segments as 'gained', fail, and roll back the meta stage
+    (leaving keys and params under mismatched geometries)."""
     import json as jsonlib
     import random
 
-    from dlx_spark import tableio
     from dlx_spark.operators import similarity
     from dlx_spark.operators.dedup_index import EmbeddingIndex
+    from dlx_spark.tableio_versioned import VersionedTableBackend
 
     rng = random.Random(29)
     vecs = [[rng.gauss(0, 1) for _ in range(6)] for _ in range(20)]
@@ -1145,33 +1135,12 @@ def test_rebucket_recovery_mid_swap_crash_states_on_both_backends(spark,
             f"{name}_meta__rebucket")
         return token
 
-    # --- parquet: crash between the swap's DROP and RENAME -----------
-    be = tableio.get_backend()
-    idx = EmbeddingIndex.create(corpus, "t_rbmw", n_planes=4, dim=6)
-    try:
-        stage_rebucket("t_rbmw", idx, be)
-        spark.sql("DROP TABLE t_rbmw_buckets")        # the crashed DROP
-        rolled = EmbeddingIndex(spark, "t_rbmw")      # recovery on open
-        assert rolled.params["n_planes"] == 5         # rolled FORWARD
-        assert spark.catalog.tableExists("t_rbmw_buckets")
-        # keys readable and consistent with the new geometry
-        assert (spark.table("t_rbmw_buckets").count()
-                == spark.table("t_rbmw_vecs").count())
-        probe = spark.createDataFrame(
-            [(900, [x + 0.001 for x in vecs[0]])],
-            "vec_id long, embedding array<double>")
-        assert rolled.probe(probe, threshold=0.99).count() >= 1
-    finally:
-        idx.drop()
-
-    # --- versioned: swap committed, staged drop lost -----------------
-    from dlx_spark.tableio_versioned import VersionedTableBackend
-
+    prev = tableio.get_backend()
     vbe = VersionedTableBackend(root=str(tmp_path / "vroot_mw"))
     tableio.set_backend(vbe)
     try:
         idx2 = EmbeddingIndex.create(corpus, "t_rbmw2", n_planes=4, dim=6)
-        token = stage_rebucket("t_rbmw2", idx2, vbe)
+        stage_rebucket("t_rbmw2", idx2, vbe)
         # the swap commit itself (replace minus its staged drop):
         sm = vbe._latest(spark, "t_rbmw2_buckets__rebucket")[1]
         vbe._commit(spark, "t_rbmw2_buckets", lambda latest: {
@@ -1182,13 +1151,16 @@ def test_rebucket_recovery_mid_swap_crash_states_on_both_backends(spark,
         assert rolled2.params["n_planes"] == 5        # meta published
         assert not vbe.exists(spark, "t_rbmw2_buckets__rebucket")
         assert not vbe.exists(spark, "t_rbmw2_rebucket_intent")
+        # keys readable and consistent with the new geometry
+        assert (vbe.read(spark, "t_rbmw2_buckets").count()
+                == vbe.read(spark, "t_rbmw2_vecs").count())
         probe = spark.createDataFrame(
             [(900, [x + 0.001 for x in vecs[0]])],
             "vec_id long, embedding array<double>")
         assert rolled2.probe(probe, threshold=0.99).count() >= 1
         rolled2.drop()
     finally:
-        tableio.set_backend(tableio.ParquetTableBackend())
+        tableio.set_backend(prev)
 
 
 # ---------------------------------------------------------------------------
@@ -1248,17 +1220,16 @@ def test_segment_index_create_from_corpus_then_batch(spark, split_corpus):
 @pytest.mark.slow
 def test_segment_index_replay_safe_idempotent(spark, split_corpus):
     from dlx_spark.operators.dedup_index import SegmentIndex
-    from dlx_spark import tableio
     _, corpus, batch = split_corpus
     idx = SegmentIndex.create(corpus, "t_seg_rpl", unit_words=10,
                               normalize=False)
     try:
         first = _seg_rows(idx.dedup_batch(batch, replay_safe=True))
-        n_after_first = tableio.ParquetTableBackend().read(
+        n_after_first = tableio.get_backend().read(
             spark, "t_seg_rpl_segments").count()
         replay = _seg_rows(idx.dedup_batch(batch, replay_safe=True))
         assert replay == first
-        n_after_replay = tableio.ParquetTableBackend().read(
+        n_after_replay = tableio.get_backend().read(
             spark, "t_seg_rpl_segments").count()
         assert n_after_replay == n_after_first
     finally:
@@ -1355,17 +1326,62 @@ def test_span_index_future_occurrence_of_unique_window_is_cut(spark):
 @pytest.mark.slow
 def test_span_index_replay_safe_idempotent(spark, split_corpus):
     from dlx_spark.operators.dedup_index import SpanIndex
-    from dlx_spark import tableio
     _, corpus, batch = split_corpus
     idx = SpanIndex.create(corpus, "t_spn_rpl", k=10, normalize=False)
     try:
         first = _cut_rows(idx.dedup_batch(batch, replay_safe=True))
-        n1 = tableio.ParquetTableBackend().read(
+        n1 = tableio.get_backend().read(
             spark, "t_spn_rpl_windows").count()
         replay = _cut_rows(idx.dedup_batch(batch, replay_safe=True))
         assert replay == first
-        n2 = tableio.ParquetTableBackend().read(
+        n2 = tableio.get_backend().read(
             spark, "t_spn_rpl_windows").count()
         assert n2 == n1
     finally:
         idx.drop()
+
+
+def test_index_lifecycle_registers_no_catalog_tables(spark, split_corpus,
+                                                     emb_split):
+    """Index tables live in the table backend, not the Spark catalog: a
+    create → dedup_batch → compact → drop cycle of every index family,
+    and of an IVF index (write → semdedup_append → refresh → drop),
+    leaves ``spark.catalog.listTables()`` unchanged at every step."""
+    from dlx_spark.operators import bucketing, similarity
+    from dlx_spark.operators.dedup_index import (EmbeddingIndex,
+                                                 SegmentIndex, SpanIndex)
+
+    def tables():
+        return sorted(t.name for t in spark.catalog.listTables())
+
+    _, corpus, batch = split_corpus
+    corpus, batch = corpus.limit(20), batch.limit(10)
+    _, vcorpus, vbatch = emb_split
+    before = tables()
+    text_families = [
+        (DigestIndex, {}), (MinHashIndex, {}), (SimHashIndex, {}),
+        (SegmentIndex, {"unit_words": 5}), (SpanIndex, {"k": 5}),
+    ]
+    for cls, kw in text_families:
+        idx = cls.create(corpus, f"t_nocat_{cls.__name__.lower()}",
+                         n_buckets=2, **kw)
+        assert tables() == before, cls.__name__
+        idx.dedup_batch(batch).collect()
+        idx.compact()
+        assert tables() == before, cls.__name__
+        idx.drop()
+    emb = EmbeddingIndex.create(vcorpus, "t_nocat_emb", n_planes=4,
+                                n_buckets=2)
+    emb.dedup_batch(vbatch).collect()
+    emb.compact()
+    assert tables() == before
+    emb.drop()
+
+    cents = similarity.ivf_centroids(vcorpus, n_centroids=3, seed=3)
+    bucketing.write_ivf_index(vcorpus, "t_nocat_ivf", cents)
+    bucketing.semdedup_append(spark, "t_nocat_ivf", vbatch, cents,
+                              threshold=0.99).collect()
+    bucketing.refresh_ivf_index(spark, "t_nocat_ivf", n_centroids=3, seed=4)
+    assert tables() == before
+    tableio.get_backend().drop(spark, "t_nocat_ivf")
+    assert tables() == before

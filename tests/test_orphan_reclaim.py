@@ -1,16 +1,19 @@
-"""Crash-orphan reclaim: a driver killed between staging a managed
-table's files and registering it in the catalog leaves a location with
-no catalog entry.  Under the parquet backend's registration-last commit
-rule that state is provably uncommitted, so every create path must
-reclaim it instead of failing LOCATION_ALREADY_EXISTS forever (the
-round-6 reproduced defect: stale ``spark-warehouse/t_*`` dirs from a
-killed run bricked `DigestIndex.create`).
+"""Crash remnants: a driver killed mid-commit leaves files that no
+committed manifest references — a data segment written before its
+manifest commit, and a ``.tmp-*`` manifest written before its rename.
+Neither is visible to readers, so every create path must succeed over
+them (the round-6 reproduced defect: stale warehouse dirs from a killed
+run bricked `DigestIndex.create`), and ``vacuum`` reclaims them.
 
-One test per index family plants the orphan for every table the family
-creates, then asserts create + read-back is green.
+One test per index family plants the remnants for every table the
+family creates, then asserts create + read-back is green.  The catalog
+helper ``bucketing.write_bucketed`` keeps its own guard for a managed
+location staged but never registered.
 """
 
 from __future__ import annotations
+
+import uuid
 
 import numpy as np
 import pytest
@@ -22,15 +25,20 @@ from dlx_spark.operators.dedup_index import (DigestIndex, EmbeddingIndex,
                                              MinHashIndex, SimHashIndex)
 
 
-def _plant_orphan(spark, table: str) -> str:
-    """Simulate a killed run: files at the managed location, no catalog
-    entry."""
-    loc = tableio.managed_location(spark, table)
-    fsio.mkdirs(spark, loc)
-    fsio.write_text(spark, fsio.join(loc, "part-00000.parquet"),
+def _plant_orphan(spark, be, table: str) -> tuple[str, str]:
+    """Simulate a killed run on ``table``: a segment directory no
+    manifest references and a torn ``.tmp-*`` manifest beside the
+    (absent) committed versions."""
+    seg = fsio.join(be.root(spark), "data", f"{table}-{uuid.uuid4().hex}")
+    fsio.mkdirs(spark, seg)
+    fsio.write_text(spark, fsio.join(seg, "part-00000.parquet"),
                     "torn remnant of a killed write")
-    assert not spark.catalog.tableExists(table)
-    return loc
+    tdir = fsio.join(be.root(spark), "tables", table)
+    fsio.mkdirs(spark, tdir)
+    tmp = fsio.join(tdir, f".tmp-{uuid.uuid4().hex}.json")
+    fsio.write_text(spark, tmp, '{"segments": [')
+    assert not be.exists(spark, table)
+    return seg, tmp
 
 
 @pytest.fixture(scope="module")
@@ -47,20 +55,23 @@ def vecs(spark):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
-def test_reclaim_unit(spark):
-    """Direct contract: orphan removed (True); registered table
-    untouched (False); absent location a no-op (False)."""
-    loc = _plant_orphan(spark, "t_orph_unit")
-    assert tableio.reclaim_orphan_location(spark, "t_orph_unit") is True
-    assert not fsio.exists(spark, loc)
-    assert tableio.reclaim_orphan_location(spark, "t_orph_unit") is False
+def test_reclaim_unit(spark, tmp_path):
+    """Direct contract: vacuum removes both remnants of a killed
+    commit; a live table beside them keeps its segment and reads
+    unchanged."""
+    from dlx_spark.tableio_versioned import VersionedTableBackend
 
-    spark.range(3).write.saveAsTable("t_orph_live")
-    try:
-        assert tableio.reclaim_orphan_location(spark, "t_orph_live") is False
-        assert spark.table("t_orph_live").count() == 3
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_orph_live")
+    be = VersionedTableBackend(root=str(tmp_path / "vroot"))
+    seg, tmp = _plant_orphan(spark, be, "t_orph_unit")
+    be.write(spark.range(3).select(F.col("id").alias("k")),
+             "t_orph_live", "k", 2)
+    live_seg = be.latest_manifest(spark, "t_orph_live")["segments"][0]
+    deleted = be.vacuum(spark, min_age_seconds=0)
+    assert deleted == [seg.rsplit("/", 1)[-1]]
+    assert not fsio.exists(spark, seg) and not fsio.exists(spark, tmp)
+    assert live_seg not in deleted
+    assert be.read(spark, "t_orph_live").count() == 3
+    assert not be.exists(spark, "t_orph_unit")
 
 
 @pytest.mark.parametrize("family,suffixes", [
@@ -70,44 +81,54 @@ def test_reclaim_unit(spark):
     ("embedding", ["_vecs", "_buckets", "_meta"]),
 ])
 def test_index_create_reclaims_orphans(spark, docs, vecs, family, suffixes):
+    be = tableio.get_backend()
     name = f"t_orph_{family}"
     for sfx in suffixes:
-        _plant_orphan(spark, name + sfx)
+        _plant_orphan(spark, be, name + sfx)
     try:
         if family == "digest":
             idx = DigestIndex.create(docs, name)
-            assert spark.table(f"{name}_digests").count() > 0
+            assert be.read(spark, f"{name}_digests").count() > 0
         elif family == "minhash":
             idx = MinHashIndex.create(docs, name)
-            assert spark.table(f"{name}_sigs").count() == 40
+            assert be.read(spark, f"{name}_sigs").count() == 40
         elif family == "simhash":
             idx = SimHashIndex.create(docs, name)
-            assert spark.table(f"{name}_fps").count() > 0
+            assert be.read(spark, f"{name}_fps").count() > 0
         else:
             idx = EmbeddingIndex.create(vecs, name)
-            assert spark.table(f"{name}_vecs").count() == 40
-        idx  # created green over every planted orphan
+            assert be.read(spark, f"{name}_vecs").count() == 40
+        idx  # created green over every planted remnant
     finally:
         for sfx in suffixes:
-            spark.sql(f"DROP TABLE IF EXISTS {name}{sfx}")
+            be.drop(spark, name + sfx)
 
 
 def test_lsh_and_ivf_create_reclaim_orphans(spark, vecs):
+    be = tableio.get_backend()
     for name in ("t_orph_lsh", "t_orph_ivf"):
-        _plant_orphan(spark, name)
+        _plant_orphan(spark, be, name)
     try:
         bucketing.write_lsh_index(vecs, "t_orph_lsh", n_planes=4)
-        assert spark.table("t_orph_lsh").count() == 40
+        assert be.read(spark, "t_orph_lsh").count() == 40
         centroids = np.array([[1.0] * 8, [5.0] * 8, [9.0] * 8])
         bucketing.write_ivf_index(vecs, "t_orph_ivf", centroids)
-        assert spark.table("t_orph_ivf").count() == 40
+        assert be.read(spark, "t_orph_ivf").count() == 40
     finally:
-        spark.sql("DROP TABLE IF EXISTS t_orph_lsh")
-        spark.sql("DROP TABLE IF EXISTS t_orph_ivf")
+        be.drop(spark, "t_orph_lsh")
+        be.drop(spark, "t_orph_ivf")
 
 
 def test_write_bucketed_reclaims_orphan(spark):
-    _plant_orphan(spark, "t_orph_bkt")
+    """The catalog helper's guard: files at the managed location of an
+    unregistered table (a killed ``saveAsTable``) are cleared before
+    the create."""
+    db = spark.catalog.getDatabase(spark.catalog.currentDatabase())
+    loc = fsio.join(db.locationUri, "t_orph_bkt")
+    fsio.mkdirs(spark, loc)
+    fsio.write_text(spark, fsio.join(loc, "part-00000.parquet"),
+                    "torn remnant of a killed write")
+    assert not spark.catalog.tableExists("t_orph_bkt")
     try:
         bucketing.write_bucketed(
             spark.range(100).select(F.col("id").alias("k")),
@@ -118,17 +139,17 @@ def test_write_bucketed_reclaims_orphan(spark):
 
 
 def test_append_creates_over_orphan(spark):
-    """An append against a catalog-absent table CREATES it, so it hits
-    the same remnant — the backend reclaims there too."""
-    _plant_orphan(spark, "t_orph_app")
+    """An append against an absent table CREATES it, so it meets the
+    same remnants — they neither block it nor leak into its reads."""
+    be = tableio.get_backend()
+    _plant_orphan(spark, be, "t_orph_app")
     try:
-        be = tableio.ParquetTableBackend()
         be.append(spark.range(10).select(F.col("id").alias("k")),
                   "t_orph_app", "k", 4)
-        assert spark.table("t_orph_app").count() == 10
-        # and a SECOND append onto the now-registered table appends
+        assert be.read(spark, "t_orph_app").count() == 10
+        # and a SECOND append onto the now-committed table appends
         be.append(spark.range(10).select(F.col("id").alias("k")),
                   "t_orph_app", "k", 4)
-        assert spark.table("t_orph_app").count() == 20
+        assert be.read(spark, "t_orph_app").count() == 20
     finally:
-        spark.sql("DROP TABLE IF EXISTS t_orph_app")
+        be.drop(spark, "t_orph_app")

@@ -53,22 +53,28 @@ def test_fsio_remove_missing_semantics_unchanged(spark, tmp_path):
 # IVF refresh publication through the shared tableio replace protocol
 # ---------------------------------------------------------------------------
 #
-# Round 6 replaced the bespoke rename-aside + _STAGE_COMPLETE protocol
-# with the backend seam's replace/recover_replace (the IVF index is now
-# a partitioned catalog table).  The crash states collapse accordingly:
-# a staged TABLE is visible only if its saveAsTable completed (catalog
-# registration is the commit point), so recovery never has to reason
-# about torn stages.
+# The IVF index is a partitioned table on the tableio backend, so a
+# refresh publishes through replace/recover_replace.  The crash states
+# follow the manifest commits: a stage is visible only once its own
+# manifest commit landed (a torn stage is invisible), and a committed
+# stage whose swap never landed is the full post-image, which recovery
+# publishes.
+
+
+def _be():
+    from dlx_spark import tableio
+    return tableio.get_backend()
 
 
 def _write_idx(spark, table, ids):
-    (spark.createDataFrame([(int(i), [float(i)], 0) for i in ids],
-                           "id long, vec array<double>, list_id int")
-     .write.mode("overwrite").partitionBy("list_id").saveAsTable(table))
+    _be().write_partitioned(
+        spark.createDataFrame([(int(i), [float(i)], 0) for i in ids],
+                              "id long, vec array<double>, list_id int"),
+        table, ["list_id"])
 
 
 def _idx_ids(spark, table):
-    return {r["id"] for r in spark.table(table).select("id").collect()}
+    return {r["id"] for r in _be().read(spark, table).select("id").collect()}
 
 
 @pytest.fixture(autouse=True)
@@ -77,55 +83,78 @@ def _drop_ivf_tables(spark):
     for t in ("t_r6_ivf", "t_r6_ivf__refresh", "t_r6_ivf2",
               "t_r6_ivf2__refresh", "t_r6_ivf3", "t_r6_ivf3__refresh",
               "t_r6_ivf5", "t_r6_ivf5__refresh"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        _be().drop(spark, t)
 
 
-def test_recover_ivf_pre_publish_crash_keeps_live(spark):
-    """Stage complete, live intact: the crash predates the swap's DROP —
-    the live index wins and the (re-derivable) stage is dropped."""
-    from dlx_spark.operators import bucketing
+def test_recover_ivf_pre_publish_crash_keeps_live(spark, tmp_path):
+    """A refresh killed before its stage's manifest commit: the live
+    index is untouched, the stage never became visible, and recovery
+    has nothing to publish."""
+    from dlx_spark import tableio
+    from dlx_spark.operators import bucketing, similarity
+    from dlx_spark.tableio_versioned import VersionedTableBackend
 
-    _write_idx(spark, "t_r6_ivf", [1, 2, 3])
-    _write_idx(spark, "t_r6_ivf__refresh", [10, 11])
-    bucketing.recover_ivf_index(spark, "t_r6_ivf")
-    assert _idx_ids(spark, "t_r6_ivf") == {1, 2, 3}
-    assert not spark.catalog.tableExists("t_r6_ivf__refresh")
+    class KilledAtStageCommit(VersionedTableBackend):
+        def _commit(self, spark, table, payload_fn):
+            if table.endswith("__refresh"):
+                raise RuntimeError("driver killed before the stage commit")
+            return super()._commit(spark, table, payload_fn)
+
+    rng = np.random.RandomState(4)
+    rows = [(i, rng.standard_normal(6).tolist()) for i in range(30)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = similarity.ivf_centroids(df, n_centroids=3, seed=4)
+    prev = tableio.get_backend()
+    be = KilledAtStageCommit(root=str(tmp_path / "vroot"))
+    tableio.set_backend(be)
+    try:
+        bucketing.write_ivf_index(df, "t_r6_ivf", cents)
+        with pytest.raises(RuntimeError, match="killed"):
+            bucketing.refresh_ivf_index(spark, "t_r6_ivf", n_centroids=3,
+                                        seed=5)
+        assert not be.exists(spark, "t_r6_ivf__refresh")
+        bucketing.recover_ivf_index(spark, "t_r6_ivf")
+        assert _idx_ids(spark, "t_r6_ivf") == set(range(30))
+        assert be.versions(spark, "t_r6_ivf") == [1]
+    finally:
+        tableio.set_backend(prev)
 
 
 def test_recover_ivf_mid_swap_crash_publishes_stage(spark):
-    """Crash between the swap's DROP and RENAME: the staged table is
-    the full post-image — recovery publishes it, INCLUDING the
-    partition-metadata repair (the catalog keeps absolute partition
-    locations across a rename; without the repair the recovered index
-    reads as empty)."""
+    """Crash after the stage committed but before the swap: the staged
+    table is the full post-image — recovery publishes it over the live
+    index and drops the stage; running recovery again is a no-op."""
     from dlx_spark.operators import bucketing
 
+    _write_idx(spark, "t_r6_ivf2", [1, 2, 3])
     _write_idx(spark, "t_r6_ivf2__refresh", [10, 11, 12])
     bucketing.recover_ivf_index(spark, "t_r6_ivf2")
     assert _idx_ids(spark, "t_r6_ivf2") == {10, 11, 12}
-    assert not spark.catalog.tableExists("t_r6_ivf2__refresh")
-    # re-entrant: running recovery again is a no-op
+    assert not _be().exists(spark, "t_r6_ivf2__refresh")
     bucketing.recover_ivf_index(spark, "t_r6_ivf2")
     assert _idx_ids(spark, "t_r6_ivf2") == {10, 11, 12}
 
 
 def test_torn_staged_write_is_invisible_to_recovery(spark):
-    """The commit point claim itself: a staged write that died before
-    its catalog registration leaves FILES but no TABLE — recovery sees
-    nothing staged and leaves the live index untouched (the reason the
-    bespoke _STAGE_COMPLETE marker is no longer needed)."""
+    """The commit point claim itself: a stage whose manifest never got
+    past its ``.tmp-*`` file (segment written, rename not done) is no
+    table — recovery sees nothing staged and leaves the live index
+    untouched."""
     from dlx_spark.operators import bucketing
 
+    be = _be()
     _write_idx(spark, "t_r6_ivf3", [1, 2, 3])
-    loc = str(spark.conf.get("spark.sql.warehouse.dir")).replace(
-        "file:", "") + "/t_r6_ivf3__refresh"
-    (spark.createDataFrame([(99, [9.0], 0)],
-                           "id long, vec array<double>, list_id int")
-     .write.mode("overwrite").partitionBy("list_id").parquet(loc))
-    assert not spark.catalog.tableExists("t_r6_ivf3__refresh")
+    seg = be._write_segment(
+        spark, spark.createDataFrame([(99, [9.0], 0)],
+                                     "id long, vec array<double>, list_id int"),
+        "t_r6_ivf3__refresh", None, None, ["list_id"])
+    tdir = be._table_dir(spark, "t_r6_ivf3__refresh")
+    fsio.mkdirs(spark, tdir)
+    fsio.write_text(spark, fsio.join(tdir, ".tmp-torn.json"),
+                    json.dumps({"segments": [seg]}))
+    assert not be.exists(spark, "t_r6_ivf3__refresh")
     bucketing.recover_ivf_index(spark, "t_r6_ivf3")
     assert _idx_ids(spark, "t_r6_ivf3") == {1, 2, 3}
-    fsio.rmtree(spark, loc)
 
 
 def test_refresh_ivf_swap_leaves_no_residue(spark):
@@ -139,14 +168,13 @@ def test_refresh_ivf_swap_leaves_no_residue(spark):
     cents = similarity.ivf_centroids(df, n_centroids=4, seed=3)
     bucketing.write_ivf_index(df, "t_r6_ivf5", cents)
     bucketing.refresh_ivf_index(spark, "t_r6_ivf5", n_centroids=4, seed=3)
-    assert not spark.catalog.tableExists("t_r6_ivf5__refresh")
+    assert not _be().exists(spark, "t_r6_ivf5__refresh")
     assert len(_idx_ids(spark, "t_r6_ivf5")) == 60
 
 
 @pytest.mark.slow
 def test_refresh_ivf_fails_clean_on_concurrent_append(spark, tmp_path):
-    """On the transactional backend, an append_ivf_index racing the
-    refresh (its rows assigned under the OLD centroids) must fail the
+    """An append_ivf_index racing the refresh (its rows assigned under the OLD centroids) must fail the
     refresh via the snapshot-token conflict, leave the live index
     exactly as the appender sees it, and clean the stage — the upgrade
     over the old path protocol, which silently lost such appends."""
@@ -169,6 +197,7 @@ def test_refresh_ivf_fails_clean_on_concurrent_append(spark, tmp_path):
                 self._raced = True
                 bucketing.append_ivf_index(extra, "t_v_ivf_race", cents)
 
+    prev = tableio.get_backend()
     rb = RacingBackend(root=str(tmp_path / "vroot"))
     tableio.set_backend(rb)
     try:
@@ -184,7 +213,7 @@ def test_refresh_ivf_fails_clean_on_concurrent_append(spark, tmp_path):
                                     n_centroids=3, seed=5)
         assert rb.read(spark, "t_v_ivf_race").count() == 41
     finally:
-        tableio.set_backend(tableio.ParquetTableBackend())
+        tableio.set_backend(prev)
 
 
 # ---------------------------------------------------------------------------
@@ -269,13 +298,14 @@ def test_dedup_index_meta_garbage_raises_clearly(spark, tmp_path):
     from dlx_spark.operators import dedup_index
 
     name = "torn_meta_idx"
-    spark.createDataFrame([("{not json",)], "params string") \
-        .write.mode("overwrite").saveAsTable(f"{name}_meta")
+    _be().write_plain(
+        spark.createDataFrame([("{not json",)], "params string"),
+        f"{name}_meta")
     try:
         with pytest.raises(ValueError):
             dedup_index._read_meta(spark, name)
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name}_meta")
+        _be().drop(spark, f"{name}_meta")
 
 
 @pytest.mark.slow
@@ -310,11 +340,11 @@ def test_streaming_sink_tolerates_torn_attempt_marker(spark, tmp_path):
 
 
 def test_reader_during_ivf_refresh(spark, tmp_path):
-    """Reader contract around refresh_ivf_index's rename-aside swap: a
-    handle resolved BEFORE the refresh may fail (its file listing names
-    renamed-away paths) or may still answer, but must never answer
-    garbage; a FRESH read after the swap sees the complete re-assigned
-    index (same ids, same vectors, new list layout)."""
+    """Reader contract around refresh_ivf_index's swap: a handle
+    resolved BEFORE the refresh is a snapshot and still answers with the
+    pre-refresh content (its segments are never touched until vacuum);
+    a FRESH read after the swap sees the complete re-assigned index
+    (same ids, same vectors, new list layout)."""
     from dlx_spark.operators import bucketing, similarity
 
     rng = np.random.RandomState(9)
@@ -325,36 +355,35 @@ def test_reader_during_ivf_refresh(spark, tmp_path):
     try:
         bucketing.write_ivf_index(df, path, cents)
 
-        before = spark.table(path)
+        before = _be().read(spark, path)
         want = {r["id"] for r in before.select("id").collect()}
         assert want == set(range(80))
 
         bucketing.refresh_ivf_index(spark, path, n_centroids=4, seed=10)
-        try:
-            got_old = {r["id"] for r in before.select("id").collect()}
-            assert got_old == want      # stale handle: right answer
-        except Exception:
-            pass                        # or a clean failure — never garbage
+        got_old = {r["id"] for r in before.select("id").collect()}
+        assert got_old == want          # the snapshot still answers
         fresh = {r["id"] for r in
-                 spark.table(path).select("id").collect()}
+                 _be().read(spark, path).select("id").collect()}
         assert fresh == want
-        assert not spark.catalog.tableExists(path + "__refresh")
+        assert not _be().exists(spark, path + "__refresh")
     finally:
         for t in (path, path + "__refresh"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+            _be().drop(spark, t)
 
 
 def test_table_backend_seam_routes_every_index_operation(spark):
     """The pluggable table-commit backend (dlx_spark.tableio): a
-    recording subclass installed via set_backend must see EVERY catalog
+    recording subclass installed via set_backend must see EVERY table
     operation of an index create/probe/append/compact/drop cycle — no
-    index call-site may reach saveAsTable/DROP TABLE directly — and the
-    results through the recording backend equal the plain run."""
+    index call-site may reach the storage directly — and the results
+    through the recording backend equal the plain run."""
     from dlx_spark import tableio
     from dlx_spark.operators.dedup_index import DigestIndex
+    from dlx_spark.tableio_versioned import VersionedTableBackend
 
-    class Recording(tableio.ParquetTableBackend):
+    class Recording(VersionedTableBackend):
         def __init__(self):
+            super().__init__()
             self.calls = []
 
         def write(self, df, table, key, n_buckets):
@@ -390,6 +419,7 @@ def test_table_backend_seam_routes_every_index_operation(spark):
         [(10, "alpha beta"), (11, "epsilon zeta")],
         "doc_id long, text string")
 
+    prev = tableio.get_backend()
     rec = Recording()
     tableio.set_backend(rec)
     try:
@@ -400,7 +430,7 @@ def test_table_backend_seam_routes_every_index_operation(spark):
         idx.compact()
         idx.drop()
     finally:
-        tableio.set_backend(tableio.ParquetTableBackend())
+        tableio.set_backend(prev)
 
     ops = {op for op, _ in rec.calls}
     assert {"write", "write_plain", "append", "read",
@@ -413,21 +443,30 @@ def test_table_backend_seam_routes_every_index_operation(spark):
 # Self-review fixes: re-entrant replace, banded probe defaults, legacy layouts
 # ---------------------------------------------------------------------------
 
-def test_tableio_replace_is_reentrant_after_drop_crash(spark):
-    """A replace that crashed after its DROP but before the RENAME must
-    be re-runnable by recovery: the second call cannot fail on the
-    already-missing target table."""
-    from dlx_spark import tableio
+def test_tableio_replace_is_reentrant_after_drop_crash(spark, tmp_path):
+    """A replace whose swap committed but whose staged DROP was lost
+    must be re-runnable by recovery: the replay publishes nothing new
+    (the provenance check finds its own commit) and only drops the
+    stage — appends that landed after the swap survive."""
+    from dlx_spark.tableio_versioned import VersionedTableBackend
 
-    be = tableio.ParquetTableBackend()
+    class LosesStagedDrop(VersionedTableBackend):
+        def drop(self, spark, table):
+            if not table.endswith("__stage"):
+                super().drop(spark, table)
+
+    be = LosesStagedDrop(root=str(tmp_path / "vroot"))
     df = spark.createDataFrame([(1,)], "x long")
     be.write_plain(df, "t_reent")
-    be.write_plain(df, "t_reent__stage")
-    spark.sql("DROP TABLE t_reent")          # simulate crash-after-DROP
-    be.replace(spark, "t_reent", "t_reent__stage")   # recovery re-runs
-    assert {r["x"] for r in be.read(spark, "t_reent").collect()} == {1}
+    be.write_plain(spark.createDataFrame([(2,)], "x long"), "t_reent__stage")
+    be.replace(spark, "t_reent", "t_reent__stage")   # drop "crashes"
+    assert be.exists(spark, "t_reent__stage")
+    be.append(df, "t_reent", "x", 1)
+    VersionedTableBackend(root=be._root).recover_replace(
+        spark, "t_reent", "t_reent__stage")
+    assert sorted(r["x"] for r in be.read(spark, "t_reent").collect()) \
+        == [1, 2]
     assert not be.exists(spark, "t_reent__stage")
-    be.drop(spark, "t_reent")
 
 
 def test_banded_probe_defaults_do_not_conflict(spark, tmp_path):
@@ -454,7 +493,7 @@ def test_banded_probe_defaults_do_not_conflict(spark, tmp_path):
     with pytest.raises(ValueError):
         bucketing.probe_lsh_index(spark, path, q, bands=3,
                                   multiprobe_hamming=1)
-    spark.sql(f"DROP TABLE IF EXISTS {path}")
+    _be().drop(spark, path)
 
 
 def test_legacy_single_band_lsh_index_still_probes(spark, tmp_path):
@@ -469,8 +508,8 @@ def test_legacy_single_band_lsh_index_still_probes(spark, tmp_path):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     path = "t_r6_legacy_lsh"
     # the OLD layout: (id, bucket, vec) partitioned by bucket, no band
-    (similarity.lsh_buckets(df, n_planes=5, dim=8)
-     .write.mode("overwrite").partitionBy("bucket").saveAsTable(path))
+    _be().write_partitioned(similarity.lsh_buckets(df, n_planes=5, dim=8),
+                            path, ["bucket"])
 
     q = rows[0][1]
     got = bucketing.probe_lsh_index(spark, path, q, k=3, n_planes=5).collect()
@@ -480,7 +519,7 @@ def test_legacy_single_band_lsh_index_still_probes(spark, tmp_path):
     assert got2.count() > 0
     with pytest.raises(ValueError):
         bucketing.probe_lsh_index(spark, path, q, n_planes=5, bands=2)
-    spark.sql(f"DROP TABLE IF EXISTS {path}")
+    _be().drop(spark, path)
 
 
 def test_embedding_index_legacy_layout_raises_clearly(spark):
@@ -489,9 +528,10 @@ def test_embedding_index_legacy_layout_raises_clearly(spark):
     buckets table."""
     from dlx_spark.operators.dedup_index import EmbeddingIndex, _write_meta
 
-    spark.createDataFrame([(1, [1.0, 0.0], 3)],
-                          "id long, vec array<double>, bucket long") \
-        .write.mode("overwrite").saveAsTable("t_legacy_emb_vecs")
+    _be().write_plain(
+        spark.createDataFrame([(1, [1.0, 0.0], 3)],
+                              "id long, vec array<double>, bucket long"),
+        "t_legacy_emb_vecs")
     _write_meta(spark, "t_legacy_emb",
                 {"vec_col": "embedding", "id_col": "vec_id",
                  "n_planes": 8, "seed": 42, "dim": 2, "n_buckets": 32})
@@ -500,4 +540,4 @@ def test_embedding_index_legacy_layout_raises_clearly(spark):
             EmbeddingIndex(spark, "t_legacy_emb")
     finally:
         for t in ("t_legacy_emb_vecs", "t_legacy_emb_meta"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+            _be().drop(spark, t)

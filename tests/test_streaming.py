@@ -606,7 +606,8 @@ def test_semdedup_ingest_stream_cross_batch_leaders(spark, tmp_path):
         got = {r["vec_id"] for r in spark.read.parquet(out).collect()}
         assert got == {11, 21}
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        from dlx_spark import tableio
+        tableio.get_backend().drop(spark, name)
 
 
 @pytest.mark.slow
@@ -656,7 +657,7 @@ def test_segment_dedup_ingest_stream_cross_batch_and_replay(spark, tmp_path):
         # crash-replay: calling the batch fn again with an already-
         # committed batch id must reproduce the output and leave the
         # index row count unchanged
-        n_before = tableio.ParquetTableBackend().read(
+        n_before = tableio.get_backend().read(
             spark, f"{name}_segments").count()
         fn = make_segment_dedup_batch_fn(name, out,
                                          checkpoint=str(tmp_path / "ckpt"))
@@ -666,7 +667,7 @@ def test_segment_dedup_ingest_stream_cross_batch_and_replay(spark, tmp_path):
         got = {r["doc_id"]: r["cleaned_text"]
                for r in spark.read.parquet(out).collect()}
         assert got[20] == "m n o"
-        n_after = tableio.ParquetTableBackend().read(
+        n_after = tableio.get_backend().read(
             spark, f"{name}_segments").count()
         assert n_after == n_before
     finally:

@@ -1,13 +1,9 @@
-"""The tableio backend CONTRACT, parameterized over every
-implementation: plain parquet catalog, manifest-versioned, and Delta —
-one suite proving the seam's interface is sufficient for each backend
-to honor the same observable semantics, so the index classes
-(dedup_index/bucketing) can be pointed at any of them unchanged.
-
-The delta leg skips cleanly where the ``delta-spark`` package is
-absent (this sandbox) or where the active session was built without
-the Delta extension; the moment the package lands, the whole contract
-lights up against it with zero test changes.
+"""The tableio backend CONTRACT: the observable semantics the index
+classes (dedup_index/bucketing) rely on, parameterized over backend
+implementations.  The engine ships one, the manifest-versioned backend;
+a table format plugged in through ``tableio.set_backend`` (Delta,
+Iceberg) adds its constructor to ``BACKENDS`` / ``MOR_IMPLS`` and must
+pass the same suite.
 """
 
 from __future__ import annotations
@@ -18,58 +14,19 @@ from pyspark.sql import functions as F
 from dlx_spark import tableio
 
 
-def _parquet_backend(spark, tmp_path):
-    return tableio.ParquetTableBackend()
-
-
 def _versioned_backend(spark, tmp_path):
     from dlx_spark.tableio_versioned import VersionedTableBackend
     return VersionedTableBackend(root=str(tmp_path / "vroot"))
 
 
-def _delta_backend(spark, tmp_path):
-    pytest.importorskip(
-        "delta", reason="delta-spark not installed — the DeltaTableBackend "
-        "leg lights up where it is")
-    if "DeltaSparkSessionExtension" not in spark.conf.get(
-            "spark.sql.extensions", ""):
-        pytest.skip("session built without the Delta extension — use "
-                    "dlx_spark.session.get_spark(delta=True)")
-    from dlx_spark.tableio_delta import DeltaTableBackend
-    return DeltaTableBackend(root=str(tmp_path / "droot"))
-
-
 BACKENDS = {
-    "parquet": _parquet_backend,
     "versioned": _versioned_backend,
-    "delta": _delta_backend,
 }
 
 
 @pytest.fixture(params=sorted(BACKENDS))
 def be(request, spark, tmp_path):
-    backend = BACKENDS[request.param](spark, tmp_path)
-    made = []
-
-    class Recorder:
-        """Pass-through that records created tables for cleanup (the
-        parquet leg writes into the shared catalog)."""
-
-        backend_name = request.param
-
-        def __getattr__(self, name):
-            attr = getattr(backend, name)
-            if name in ("write", "append", "write_plain",
-                        "write_partitioned", "append_partitioned"):
-                def wrap(df, table, *a, **k):
-                    made.append(table)
-                    return attr(df, table, *a, **k)
-                return wrap
-            return attr
-
-    yield Recorder()
-    for t in dict.fromkeys(made):
-        backend.drop(spark, t)
+    return BACKENDS[request.param](spark, tmp_path)
 
 
 def _df(spark, rows, schema="id long, text string"):
@@ -83,12 +40,10 @@ def test_contract_write_read_append_exists_drop(spark, be):
     assert be.exists(spark, "c_t1")
     assert sorted(r["id"] for r in be.read(spark, "c_t1").collect()) == [1, 2]
     be.append(_df(spark, [(3, "c")]), "c_t1", "id", 2)
-    be.refresh(spark, "c_t1")
     assert sorted(r["id"] for r in be.read(spark, "c_t1").collect()) \
         == [1, 2, 3]
     # overwrite replaces, not merges
     be.write(_df(spark, [(9, "z")]), "c_t1", "id", 2)
-    be.refresh(spark, "c_t1")
     assert [r["id"] for r in be.read(spark, "c_t1").collect()] == [9]
     be.drop(spark, "c_t1")
     assert not be.exists(spark, "c_t1")
@@ -100,13 +55,12 @@ def test_contract_partitioned_roundtrip_and_pruned_scan(spark, be):
     be.write_partitioned(df, "c_t2", ["part"])
     be.append_partitioned(_df(spark, [(100, "c")], "id long, part string"),
                           "c_t2", ["part"])
-    be.refresh(spark, "c_t2")
     got = be.read(spark, "c_t2")
     assert got.count() == 9
     probe = got.filter(F.col("part") == "c")
     assert [r["id"] for r in probe.collect()] == [100]
     # the partition filter must reach the scan (pruning, not post-filter
-    # only): every backend stores hive-partitioned layouts
+    # only)
     plan = probe._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan
     assert "part" in plan.split("PartitionFilters")[1][:200]
@@ -118,7 +72,6 @@ def test_contract_write_plain_and_schema_change(spark, be):
     # full overwrite may change the schema (index metadata tables do)
     be.write_plain(spark.createDataFrame([(1, 2.5)], "k long, v double"),
                    "c_t3")
-    be.refresh(spark, "c_t3")
     assert be.read(spark, "c_t3").columns == ["k", "v"]
 
 
@@ -126,7 +79,6 @@ def test_contract_replace_publishes_stage_and_consumes_it(spark, be):
     be.write(_df(spark, [(1, "old")]), "c_t4", "id", 2)
     be.write(_df(spark, [(2, "new"), (3, "new")]), "c_t4__stage", "id", 2)
     be.replace(spark, "c_t4", "c_t4__stage")
-    be.refresh(spark, "c_t4")
     assert sorted(r["id"] for r in be.read(spark, "c_t4").collect()) \
         == [2, 3]
     assert not be.exists(spark, "c_t4__stage")
@@ -147,7 +99,6 @@ def test_contract_replace_fail_detects_raced_commit(spark, be):
         be.replace(spark, "c_t5", "c_t5__stage", token=token,
                    on_conflict="fail")
     # target untouched by the refused swap
-    be.refresh(spark, "c_t5")
     assert sorted(r["id"] for r in be.read(spark, "c_t5").collect()) \
         == [1, 2]
     be.drop(spark, "c_t5__stage")
@@ -169,13 +120,7 @@ def test_contract_snapshot_token_none_for_missing_table(spark, be):
 @pytest.mark.slow
 def test_contract_replace_merge_carries_raced_append(spark, be):
     """Merge-on-conflict: appends that land between the token capture
-    and the swap survive the rewrite (the compaction contract).  The
-    parquet backend documents merge as single-writer reliant — its
-    replace ignores the token under 'merge' — so this is only asserted
-    on transactional backends."""
-    if be.backend_name == "parquet":
-        pytest.skip("parquet backend: merge relies on the single-writer "
-                    "contract (documented)")
+    and the swap survive the rewrite (the compaction contract)."""
     be.write(_df(spark, [(1, "a"), (1, "a")]), "c_t7", "id", 2)
     token = be.snapshot_token(spark, "c_t7")
     # the 'rewrite': dedup of the snapshot the token describes
@@ -183,19 +128,16 @@ def test_contract_replace_merge_carries_raced_append(spark, be):
     be.append(_df(spark, [(2, "raced")]), "c_t7", "id", 2)
     be.replace(spark, "c_t7", "c_t7__stage", token=token,
                on_conflict="merge")
-    be.refresh(spark, "c_t7")
     assert sorted((r["id"], r["text"]) for r in
                   be.read(spark, "c_t7").collect()) \
         == [(1, "a"), (2, "raced")]
 
 
 # ---------------------------------------------------------------------------
-# The keyed-upsert (merge-on-read) CONTRACT, parameterized over the
-# implementations that can honor it: MergeOnReadTable on the versioned
-# backend (runs here) and DeltaMergeTable on Delta (skips until
-# delta-spark exists — r11, VERDICT task 5: structurally ready so the
-# leg lights up the moment the package lands, zero test changes).
-# Unique-key shape (the store's live / deleted-summary tables).
+# The keyed-upsert (merge-on-read) CONTRACT: MergeOnReadTable on the
+# versioned backend; another table format's keyed-upsert table joins
+# MOR_IMPLS.  Unique-key shape (the store's live / deleted-summary
+# tables).
 # ---------------------------------------------------------------------------
 
 
@@ -210,24 +152,7 @@ def _mor_versioned(spark, tmp_path):
     return make
 
 
-def _mor_delta(spark, tmp_path):
-    pytest.importorskip(
-        "delta", reason="delta-spark not installed — the DeltaMergeTable "
-        "leg lights up where it is")
-    if "DeltaSparkSessionExtension" not in spark.conf.get(
-            "spark.sql.extensions", ""):
-        pytest.skip("session built without the Delta extension — use "
-                    "dlx_spark.session.get_spark(delta=True)")
-    from dlx_spark.tableio_delta import DeltaMergeTable, DeltaTableBackend
-    be = DeltaTableBackend(root=str(tmp_path / "mor_droot"))
-
-    def make(name, key, pcols):
-        return DeltaMergeTable(be, name, key=key, partition_cols=pcols)
-
-    return make
-
-
-MOR_IMPLS = {"versioned": _mor_versioned, "delta": _mor_delta}
+MOR_IMPLS = {"versioned": _mor_versioned}
 
 
 @pytest.fixture(params=sorted(MOR_IMPLS))

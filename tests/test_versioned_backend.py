@@ -2,10 +2,10 @@
 single-rename commits, snapshot-isolated readers, optimistic-concurrency
 appends, provenance-proved replace recovery, time travel, vacuum.
 
-This is the transactional implementation of the tableio seam the README
-concurrency contract points to (the Delta-protocol stand-in on plain
-parquet); every test here exercises the backend either directly or
-through an unmodified index class from operators/dedup_index.py.
+This is the engine's table backend (``tableio.get_backend()``, the
+Delta-protocol analog on plain parquet); every test here exercises the
+backend either directly or through an unmodified index class from
+operators/dedup_index.py.
 """
 
 from __future__ import annotations
@@ -75,7 +75,8 @@ def test_commit_retries_after_losing_version_race(spark, be):
     be.write(_df(spark, [(1, "a")]), "t4", "id", 1)
     # simulate a concurrent append committing version 2 under us:
     # write its segment through the backend, then hand-commit a manifest
-    other_seg = be._write_segment(spark, _df(spark, [(2, "b")]), "id", 1)
+    other_seg = be._write_segment(spark, _df(spark, [(2, "b")]), "t4", "id",
+                                  1)
     m1 = be._read_manifest(spark, "t4", 1)
     fsio.write_text(spark, be._manifest_path(spark, "t4", 2), json.dumps(
         {**m1, "version": 2, "segments": m1["segments"] + [other_seg]}))
@@ -209,14 +210,45 @@ def test_compaction_keeps_append_racing_the_stage_build(spark, be):
 
     rb = RacingBackend(root=be._root)
     rb.write(_df(spark, [(1, "a"), (1, "a"), (2, "b")]), "tr", "id", 2)
+    prev = tableio.get_backend()
     tableio.set_backend(rb)
     try:
         _compact_table(spark, "tr", "id", 2, distinct=True)
     finally:
-        tableio.set_backend(tableio.ParquetTableBackend())
+        tableio.set_backend(prev)
     got = sorted(r["id"] for r in rb.read(spark, "tr").collect())
     assert got == [1, 2, 99]   # dupes folded AND the raced row kept
     assert rb._raced
+
+
+def test_compaction_source_and_token_share_one_snapshot(spark, be):
+    """An append committing right after _compact_table resolves the
+    table's head must be carried through the swap exactly once: the
+    rewrite reads the version its token names, so the raced rows are
+    neither folded into the stage nor merged in a second time."""
+    from dlx_spark.operators.dedup_index import _compact_table
+    from dlx_spark.tableio_versioned import VersionedTableBackend
+
+    class RacingBackend(VersionedTableBackend):
+        def _latest(self, spark, table):
+            out = super()._latest(spark, table)
+            if table == "tr2" and not getattr(self, "_raced", False):
+                self._raced = True
+                self.append(_df(spark, [(99, "raced")]), "tr2", "id", 2)
+            return out
+
+    rb = RacingBackend(root=be._root)
+    rb.write(_df(spark, [(1, "a"), (2, "b")]), "tr2", "id", 2)
+    rb._raced = False
+    prev = tableio.get_backend()
+    tableio.set_backend(rb)
+    try:
+        _compact_table(spark, "tr2", "id", 2)
+    finally:
+        tableio.set_backend(prev)
+    assert rb._raced
+    got = sorted(r["id"] for r in rb.read(spark, "tr2").collect())
+    assert got == [1, 2, 99]
 
 
 @pytest.mark.slow
@@ -248,6 +280,7 @@ def test_rebucket_conflict_fails_clean_on_concurrent_append(spark, be):
                 idx_live.append(extra)
 
     rb = RacingBackend(root=be._root)
+    prev = tableio.get_backend()
     tableio.set_backend(rb)
     try:
         idx = EmbeddingIndex.create(corpus, "t_rbc", n_planes=4, dim=6)
@@ -265,7 +298,7 @@ def test_rebucket_conflict_fails_clean_on_concurrent_append(spark, be):
         assert EmbeddingIndex(spark, "t_rbc").params["n_planes"] == 6
         reopened.drop()
     finally:
-        tableio.set_backend(tableio.ParquetTableBackend())
+        tableio.set_backend(prev)
 
 
 def test_vacuum_completes_crashed_replace_instead_of_eating_provenance(
@@ -339,7 +372,7 @@ def test_minhash_index_end_to_end_on_versioned_backend(spark, be, tmp_path):
     """An unmodified MinHashIndex running entirely through the
     versioned backend — create, dedup_batch, append-on-survive, reopen,
     compact (exercises replace + recover seam) — must produce the same
-    survivors as the default parquet backend."""
+    survivors as the default (warehouse-rooted) backend."""
     from dlx_spark.operators.dedup_index import MinHashIndex
 
     corpus = _df(spark, [
@@ -363,11 +396,12 @@ def test_minhash_index_end_to_end_on_versioned_backend(spark, be, tmp_path):
         idx.drop()
         return clean, again
 
+    prev = tableio.get_backend()
     tableio.set_backend(be)
     try:
         versioned = run("t_v_mh")
     finally:
-        tableio.set_backend(tableio.ParquetTableBackend())
+        tableio.set_backend(prev)
     plain = run("t_p_mh")
     assert versioned == plain == ([11], [])
 
@@ -395,6 +429,7 @@ def test_embedding_index_rebucket_rollforward_on_versioned_backend(spark, be):
         return {(r["corpus_id"], r["batch_id"], round(r["cosine"], 6))
                 for r in idx.probe(batch, threshold=0.95).collect()}
 
+    prev = tableio.get_backend()
     tableio.set_backend(be)
     try:
         idx = EmbeddingIndex.create(corpus, "t_v_emb", n_planes=4, dim=8)
@@ -425,7 +460,7 @@ def test_embedding_index_rebucket_rollforward_on_versioned_backend(spark, be):
         assert probe_set(rolled) and probe_set(rolled) <= rb
         rolled.drop()
     finally:
-        tableio.set_backend(tableio.ParquetTableBackend())
+        tableio.set_backend(prev)
 
     # cross-backend equivalence: same geometry, default backend
     idx_p = EmbeddingIndex.create(corpus, "t_p_emb", n_planes=4, dim=8)
@@ -441,9 +476,8 @@ def test_streaming_ingest_appends_through_versioned_backend(
     """The exactly-once streaming ingest (foreachBatch ->
     MinHashIndex.dedup_batch) with the versioned backend installed:
     cross-batch dedup works, every micro-batch append lands as a
-    manifest commit, and cross-session appends are visible WITHOUT a
-    catalog refresh (reads resolve the latest manifest each time —
-    the property the catalog backend needs refreshTable for)."""
+    manifest commit, and cross-session appends are visible WITHOUT any
+    refresh (reads resolve the latest manifest each time)."""
     import json as jsonlib
 
     from dlx_spark.operators.dedup_index import MinHashIndex
@@ -455,6 +489,7 @@ def test_streaming_ingest_appends_through_versioned_backend(
         for i in range(20)
     ], "doc_id long, text string")
 
+    prev = tableio.get_backend()
     tableio.set_backend(be)
     try:
         MinHashIndex.create(corpus, "t_v_stream", n_buckets=4)
@@ -492,7 +527,7 @@ def test_streaming_ingest_appends_through_versioned_backend(
         assert be.read(spark, "t_v_stream_sigs").count() == 21  # 20 + 101
         idx.drop()
     finally:
-        tableio.set_backend(tableio.ParquetTableBackend())
+        tableio.set_backend(prev)
 
 
 def test_digest_index_recovery_path_on_versioned_backend(spark, be):
@@ -504,6 +539,7 @@ def test_digest_index_recovery_path_on_versioned_backend(spark, be):
 
     corpus = _df(spark, [(1, "alpha beta"), (2, "gamma delta")],
                  "doc_id long, text string")
+    prev = tableio.get_backend()
     tableio.set_backend(be)
     try:
         DigestIndex.create(corpus, "t_v_dg", n_buckets=2)
@@ -521,7 +557,7 @@ def test_digest_index_recovery_path_on_versioned_backend(spark, be):
         _compact_table(spark, "t_v_dg_digests", "digest", 2)
         idx.drop()
     finally:
-        tableio.set_backend(tableio.ParquetTableBackend())
+        tableio.set_backend(prev)
 
 
 @pytest.mark.slow
@@ -581,6 +617,7 @@ def test_partition_pruning_survives_versioned_segments(spark, be):
     rows = [(i, rng.standard_normal(6).tolist()) for i in range(40)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cents = similarity.ivf_centroids(df, n_centroids=4, seed=17)
+    prev = tableio.get_backend()
     tableio.set_backend(be)
     try:
         bucketing.write_ivf_index(df.limit(20), "t_v_prune", cents)
@@ -593,7 +630,7 @@ def test_partition_pruning_survives_versioned_segments(spark, be):
         assert "list_id" in plan.split("PartitionFilters")[1][:200]
         assert probed.count() > 0
     finally:
-        tableio.set_backend(tableio.ParquetTableBackend())
+        tableio.set_backend(prev)
 
 
 def test_vacuum_age_gates_superseded_manifests_and_compactseg_stages(
@@ -729,6 +766,7 @@ def test_multisegment_ann_probes_never_full_scan(spark, be):
     rng = np.random.RandomState(17)
     rows = [(i, rng.standard_normal(8).tolist()) for i in range(60)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    prev = tableio.get_backend()
     tableio.set_backend(be)
     try:
         # ---- IVF: 1 write + 3 appends = 4 segments
@@ -781,7 +819,7 @@ def test_multisegment_ann_probes_never_full_scan(spark, be):
              for r in want.collect()}
         assert g == w and len(g) > 0
     finally:
-        tableio.set_backend(tableio.ParquetTableBackend())
+        tableio.set_backend(prev)
 
 
 def test_compact_segments_preserves_extra_metadata(spark, tmp_path):

@@ -12,7 +12,6 @@ Usage: python tools/scale_probe.py [multiplier]
        python tools/scale_probe.py --incremental [multiplier]
        python tools/scale_probe.py --embedding [multiplier]
        python tools/scale_probe.py --spans [steps]
-       python tools/scale_probe.py --backend [multiplier]
        python tools/scale_probe.py --autocompact [n_appends]
        python tools/scale_probe.py --contention [appends_per_thread]
        python tools/scale_probe.py --casgrowth [n_cycles]
@@ -46,15 +45,6 @@ what a full re-run of minhash LSH over corpus+batch would cost.  The
 probe's cost should track the BATCH (plus a map-side scan of the
 compact index), not the corpus — the gap widens linearly with corpus
 size, which is exactly the 100 TB argument.
-
-``--backend`` prices the transactional table backend's documented
-trade-off (tableio_versioned.py): the same MinHashIndex lifecycle —
-create, probe, dedup_batch, compact — timed through the default
-bucketed-catalog backend (shuffle-free probes, single-writer) and the
-manifest-committed VersionedTableBackend (snapshot isolation +
-multi-writer appends, but path-based tables shuffle on probe joins).
-The delta per operation is what a deployment pays for transactions
-without Delta/Iceberg.
 
 ``--skew`` is the mega-bucket stress: it plants ``n_clones`` (default
 3000) identical documents in the sf corpus — every clone collides in
@@ -260,136 +250,6 @@ def _disjoint_corpus_and_batch(spark, docs, mult, cpus, workdir):
     batch.write.parquet(os.path.join(workdir, "batch"))
     return (spark.read.parquet(os.path.join(workdir, "corpus")),
             spark.read.parquet(os.path.join(workdir, "batch")))
-
-
-def backend_main() -> None:
-    """Parquet-catalog vs versioned-manifest backend A/B on one
-    MinHashIndex lifecycle (see module docstring)."""
-    mult = int(sys.argv[2]) if len(sys.argv) > 2 else 10
-
-    from pyspark.sql import functions as F
-
-    from dlx_spark import get_spark, tableio
-    from dlx_spark.operators.dedup_index import MinHashIndex
-    from dlx_spark.tableio_versioned import VersionedTableBackend
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("backend_probe", cpus=cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-
-    workdir = tempfile.mkdtemp(prefix="dlx_spark_be_")
-    try:
-        corpus, batch = _disjoint_corpus_and_batch(
-            spark, docs, mult, cpus, workdir)
-        n_corpus = corpus.count()
-        n_batch = batch.count()
-
-        out = {"metric": "backend_probe", "n_corpus": n_corpus,
-               "n_batch": n_batch, "multiplier": mult}
-
-        def lifecycle(label, backend):
-            tableio.set_backend(backend)
-            timings = {}
-            try:
-                t0 = time.time()
-                idx = MinHashIndex.create(corpus, "probe_be_idx")
-                timings["create_sec"] = round(time.time() - t0, 2)
-                try:
-                    t0 = time.time()
-                    timings["probe_links"] = idx.probe(
-                        batch, threshold=0.8).count()
-                    timings["probe_sec"] = round(time.time() - t0, 2)
-
-                    t0 = time.time()
-                    timings["dedup_clean"] = idx.dedup_batch(
-                        batch.withColumn("doc_id", F.col("doc_id") + 1),
-                        threshold=0.8).count()
-                    timings["dedup_batch_sec"] = round(time.time() - t0, 2)
-
-                    t0 = time.time()
-                    idx.compact()
-                    timings["compact_sec"] = round(time.time() - t0, 2)
-
-                    if isinstance(backend, VersionedTableBackend):
-                        t0 = time.time()
-                        n_vac = len(backend.vacuum(spark, keep_last=1, min_age_seconds=0))
-                        timings["vacuum_sec"] = round(time.time() - t0, 2)
-                        timings["vacuumed_segments"] = n_vac
-                finally:
-                    idx.drop()
-            finally:
-                tableio.set_backend(tableio.ParquetTableBackend())
-            out[label] = timings
-
-        lifecycle("parquet_catalog", tableio.ParquetTableBackend())
-        lifecycle("versioned_manifest", VersionedTableBackend(
-            root=os.path.join(workdir, "vroot")))
-
-        # the ANN (IVF) lifecycle through the same seam — the round-6
-        # port's measured number: write, 3 appends (segment/scan-root
-        # accumulation on the versioned backend), probe against the
-        # fragmented state, refresh (the staged replace), probe again
-        from dlx_spark.operators import bucketing, similarity
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        big_emb = None
-        for i in range(mult):
-            d = emb.withColumn("vec_id",
-                               F.col("vec_id") + F.lit(i * 10_000_000))
-            big_emb = d if big_emb is None else big_emb.unionByName(d)
-        emb_path = os.path.join(workdir, "emb")
-        big_emb.repartition(cpus).write.mode("overwrite").parquet(emb_path)
-        vecs = spark.read.parquet(emb_path)
-        out["n_vectors"] = vecs.count()
-        qvec = emb.first()["embedding"]
-
-        def ann_lifecycle(label, backend):
-            tableio.set_backend(backend)
-            timings = {}
-            try:
-                cents = similarity.ivf_centroids(vecs, n_centroids=16,
-                                                 seed=7)
-                t0 = time.time()
-                bucketing.write_ivf_index(vecs, "probe_be_ivf", cents)
-                timings["ivf_write_sec"] = round(time.time() - t0, 2)
-                t0 = time.time()
-                for j in range(3):
-                    bucketing.append_ivf_index(
-                        vecs.limit(2000).withColumn(
-                            "vec_id", F.col("vec_id") + (j + 1) * 10**9),
-                        "probe_be_ivf", cents)
-                timings["ivf_3appends_sec"] = round(time.time() - t0, 2)
-                t0 = time.time()
-                timings["ivf_probe_rows"] = bucketing.probe_ivf_index(
-                    spark, "probe_be_ivf", cents, qvec, k=10,
-                    nprobe=2).count()
-                timings["ivf_probe_fragmented_sec"] = round(
-                    time.time() - t0, 2)
-                t0 = time.time()
-                cents2 = bucketing.refresh_ivf_index(
-                    spark, "probe_be_ivf", n_centroids=16, seed=8)
-                timings["ivf_refresh_sec"] = round(time.time() - t0, 2)
-                t0 = time.time()
-                bucketing.probe_ivf_index(spark, "probe_be_ivf", cents2,
-                                          qvec, k=10, nprobe=2).count()
-                timings["ivf_probe_refreshed_sec"] = round(
-                    time.time() - t0, 2)
-            finally:
-                be = tableio.get_backend()
-                be.drop(spark, "probe_be_ivf")
-                tableio.set_backend(tableio.ParquetTableBackend())
-            out[f"ann_{label}"] = timings
-
-        ann_lifecycle("parquet_catalog", tableio.ParquetTableBackend())
-        ann_lifecycle("versioned_manifest", VersionedTableBackend(
-            root=os.path.join(workdir, "vroot_ann")))
-        print(json.dumps(out))
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-    spark.stop()
 
 
 def incremental_main() -> None:
@@ -964,9 +824,6 @@ def main() -> None:
         return
     if len(sys.argv) > 1 and sys.argv[1] == "--capfamilies":
         capfamilies_main()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--backend":
-        backend_main()
         return
     if len(sys.argv) > 1 and sys.argv[1] == "--contention":
         contention_main()
