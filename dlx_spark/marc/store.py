@@ -825,22 +825,23 @@ class MarcStore:
 
     def _refresh_tokens_for_batch(self, record_type: str,
                                   new_df: DataFrame | None = None,
-                                  removed_ids: list[int] | None = None) -> None:
+                                  removed_ids: list[int] = ()) -> None:
         """O(batch) index maintenance: tombstone every touched
         record_id (so stale rows — and deleted records' rows — die) and
         append the batch's freshly-derived token rows in ONE delta
         segment."""
-        tokens = self._tokens(record_type)
+        fresh = stones = None
+        if removed_ids:
+            stones = self.spark.createDataFrame(
+                [(int(i),) for i in removed_ids], "record_id long")
         if new_df is not None:
             fresh = mdf.subfield_token_rows(new_df, record_type,
                                             headings=self.headings(),
                                             hint=self.headings_hint())
-            stones = new_df.select(F.col("_id").alias("record_id")).distinct()
-            tokens.upsert(rows=fresh, tombstone_keys=stones)
-        elif removed_ids:
-            stones = self.spark.createDataFrame(
-                [(int(i),) for i in removed_ids], "record_id long")
-            tokens.upsert(tombstone_keys=stones)
+            touched = new_df.select(F.col("_id").alias("record_id")).distinct()
+            stones = touched if stones is None else stones.unionByName(touched)
+        if stones is not None:
+            self._tokens(record_type).upsert(rows=fresh, tombstone_keys=stones)
 
     #: affected-record sets up to this size are collected to the driver
     #: and pushed into the live scan as an ``_id IN (...)`` predicate
@@ -1184,98 +1185,116 @@ class MarcStore:
         # Materialize ONCE to a scratch parquet (distributed) instead of
         # the old collect()/createDataFrame driver round-trip, so bulk
         # batches never funnel record rows through the driver.
-        name = "bibs" if record_type == "bib" else "auths"
+        name = self._live_name(record_type)
         new_df = self.spark.createDataFrame([r.to_row() for r in records],
                                             schema=schemas.MARC)
         derived = mdf.derive_text_words(new_df, headings=None)
         derived = mdf.derive_logical_fields(derived, record_type, headings=None)
-        staged = self._stage(derived, f"_stage_commit_{name}")
-
-        # 5. history append (full new doc = next version) — one
-        # distributed job over the staged frame
         prev_id_df = self.spark.createDataFrame(
             [(int(i),) for i in prev_rows], "record_id long")
-        self._append_history_frame(record_type, staged, user, now,
-                                   prev_id_df=prev_id_df, small=True)
-
-        # heading changes affect the BIB token index through values the
-        # index denormalizes: mark it dirty (full) BEFORE the auth
-        # commit lands.  When propagation follows, its own commit_frame
-        # refreshes exactly the attached records and supersedes the
-        # marker; when it doesn't (update_attached=False), the marker
-        # stays and the bib index rebuilds lazily — without this, the
-        # persisted index would keep old heading-overlaid values while
-        # the derived view overlays current ones (diverging results)
-        changed = []
-        heading_markers: list[str] = []
+        changed_ids = []
         if record_type == "auth":
-            changed = [r for r in records
-                       if r.id in prev_headings
-                       and prev_headings[r.id] is not None
-                       and prev_headings[r.id] != self._heading_signature(r)]
-            if changed:
-                # BOTH indexed record types denormalize auth headings
-                # (bibs through 6xx/7xx links, auths through 5xx
-                # see-also links), so both persisted indexes go stale
-                # when a heading changes without propagation.  The
-                # marker carries the changed auth ids, so replay
-                # refreshes only the ATTACHED records (one xref
-                # semi-join) instead of rebuilding the whole index
-                payload = self._heading_marker_payload(
-                    [r.id for r in changed])
-                for rt2 in ("bib", "auth"):
-                    if self._tokens(rt2).exists(self.spark):
-                        heading_markers.append(self._write_dirty_marker(
-                            rt2, dict(payload)))
+            changed_ids = [r.id for r in records
+                           if prev_headings.get(r.id) is not None
+                           and prev_headings[r.id] != self._heading_signature(r)]
 
-        # 6. merge-on-read upsert (O(batch) delta segment)
-        try:
-            self._upsert(record_type, staged)
-        except BaseException:
-            # the upsert MAY still have landed (e.g. the post-publish
-            # auto-compaction raised), so the flags cannot be dropped;
-            # stamping them committed is correct either way — if the
-            # commit landed the staleness is real, if it did not the
-            # replay's refresh derives from unchanged headings (a
-            # no-op) and settles the flag instead of re-refreshing on
-            # every search until grace expiry
-            for m in heading_markers:
-                self._mark_marker_committed(m)
-            raise
-        # the heading markers flag staleness CAUSED by this auth commit:
-        # stamp them committed now that it landed, so a rebuild that
-        # derives from post-commit headings can settle them — a rebuild
-        # racing the commit (derivation read before this point) leaves
-        # them for the next replay instead of clearing a still-stale flag
-        for m in heading_markers:
-            self._mark_marker_committed(m)
-        self._unstage(f"_stage_commit_{name}")
+        # 5. history, heading flags, live commit (the shared tail)
+        staged = self._stage(derived, f"_stage_commit_{name}")
+        heading_markers = self._publish(
+            record_type, staged, prev_id_df, user, now, all_new=False,
+            small=True, batch_max=max(ids), changed_ids=changed_ids)
 
-        out = ids
-
-        # 7. heading-change propagation (reference 1154-1232)
-        if changed and update_attached:
-            self._propagate_heading_changes([r.id for r in changed], user, now)
+        # 6. heading-change propagation (reference 1154-1232)
+        if changed_ids and update_attached:
+            self._propagate_heading_changes(changed_ids, user, now)
             # propagation recommitted every attached record (both
             # types), refreshing their token rows through its own
             # per-commit marker dance (a failed refresh there leaves
-            # ITS marker) — the full markers above are superseded; a
+            # ITS marker) — the flags the tail wrote are superseded; a
             # crash before this line costs one extra, safe, rebuild on
             # replay
             for m in heading_markers:
                 fsio.remove(self.spark, m)
-        return out
+        return ids
+
+    #: the commit heads' scratch stages (suffixed by live table name)
+    _SCRATCH = ("_stage_ingest", "_stage_ingest_ids", "_stage_prevlive",
+                "_stage_commit")
+
+    def _unstage_commit_scratch(self, name: str) -> None:
+        for scratch in self._SCRATCH:
+            self._unstage(f"{scratch}_{name}")
+
+    def _publish(self, record_type: str, staged: DataFrame,
+                 prev_id_df: DataFrame, user: str, now: datetime, *,
+                 all_new: bool, small: bool, batch_max: int,
+                 changed_ids: list[int]) -> list[str]:
+        """The publish tail both commit heads share: history append →
+        heading-staleness flags → live commit (``_upsert``: write-ahead
+        marker, geometry-checked CAS, token refresh) → flags stamped
+        committed.  The heads' scratch stages are removed on every
+        exit, success or failure.
+
+        ``staged`` is the head's derived, staged batch; ``prev_id_df``
+        (one ``record_id`` column) the ids that existed pre-commit;
+        ``batch_max`` the batch's exact max id; ``changed_ids`` the
+        pre-existing auth ids whose heading the batch changes.  Returns
+        the heading flags written, so a caller that propagates the
+        change can remove the flags its propagation supersedes."""
+        try:
+            self._append_history_frame(record_type, staged, user, now,
+                                       prev_id_df=prev_id_df,
+                                       all_new=all_new, small=small)
+            # heading changes affect the token indexes through values
+            # they denormalize (bibs through 6xx/7xx links, auths
+            # through 5xx see-also links): flag both BEFORE the auth
+            # commit lands.  Without the flag the persisted index would
+            # keep old heading-overlaid values while the derived view
+            # overlays current ones.  The flag carries the changed ids,
+            # so replay refreshes only the ATTACHED records (one xref
+            # semi-join) instead of rebuilding the whole index
+            heading_markers: list[str] = []
+            if changed_ids:
+                payload = self._heading_marker_payload(changed_ids)
+                for rt2 in ("bib", "auth"):
+                    if self._tokens(rt2).exists(self.spark):
+                        heading_markers.append(self._write_dirty_marker(
+                            rt2, dict(payload)))
+            try:
+                self._upsert(record_type, staged, batch_max=batch_max)
+            finally:
+                # stamped committed whether or not the upsert raised:
+                # it MAY still have landed (e.g. the post-publish
+                # auto-compaction raised), so the flags cannot be
+                # dropped.  If it landed the staleness is real; if not,
+                # the replay's refresh derives from unchanged headings
+                # (a no-op) and settles the flag instead of
+                # re-refreshing on every search until grace expiry.  A
+                # rebuild racing the commit (derivation read before
+                # this point) leaves them for the next replay
+                for m in heading_markers:
+                    self._mark_marker_committed(m)
+            return heading_markers
+        finally:
+            self._unstage_commit_scratch(self._live_name(record_type))
 
     def commit_frame(self, df: DataFrame, record_type: str = "bib",
                      user: str = "admin", now: datetime | None = None,
                      auth_check: bool = True,
                      prev_ids: DataFrame | None = None) -> int:
-        """Bulk-ingest commit: the whole pipeline (id assignment, auth
-        validation, audit stamps, derived columns, history, upsert) as
-        distributed jobs over a MARC-schema DataFrame — record rows
-        never materialize on the driver.  This is the 100 TB path used
-        by ``scripts/marc_import.py`` and the streaming ingest sink; the
-        record-object ``commit`` remains the interactive facade.
+        """Bulk-ingest commit, the frame head of the store's one write
+        protocol.  Id assignment, auth validation, audit stamps and
+        derived columns (linked values resolved by a headings join) run
+        as distributed jobs over a MARC-schema DataFrame — record rows
+        never materialize on the driver — and then the publish tail
+        the record API's ``commit`` shares (``_publish``: history,
+        heading-staleness flags, the live commit, committed stamps,
+        scratch cleanup) lands the batch.  This is the 100 TB path
+        used by ``scripts/marc_import.py`` and the streaming ingest
+        sink.  ``commit`` keeps its own driver-side head (validation
+        and derive over ``Marc`` objects, no headings join), which at a
+        few records runs about half the Spark jobs of this head, and
+        only ``commit`` propagates heading changes.
 
         Input ``_id`` may be NULL (new records get ``max_id + seq``);
         non-null ids upsert.  Ids must be unique within the frame.
@@ -1297,15 +1316,15 @@ class MarcStore:
         from pyspark.sql import Window
 
         now = now or datetime.now(timezone.utc).replace(tzinfo=None)
-        name = "bibs" if record_type == "bib" else "auths"
+        name = self._live_name(record_type)
         src = self._stage(df, f"_stage_ingest_{name}")
         try:
             # ONE single-column aggregate over the staged batch answers
             # every shape probe the pipeline needs (r12): row count,
             # non-null-id count, and the frame's max id.  The previous
             # form fired five separate jobs for the same facts (three
-            # limit(1) probes, a max() agg, and _broadcastable_batch's
-            # count) — per COMMIT, which the streaming sink pays per
+            # limit(1) probes, a max() agg, and a batch-size count) —
+            # per COMMIT, which the streaming sink pays per
             # micro-batch; at bulk scale the fused agg reads one column
             # of the staged parquet instead of five passes.
             shape = src.agg(F.count(F.lit(1)).alias("n"),
@@ -1314,6 +1333,7 @@ class MarcStore:
             n_rows, n_with_id = int(shape["n"]), int(shape["n_ids"])
             frame_max = int(shape["mx"] or 0)
             if n_rows == 0:
+                self._unstage_commit_scratch(name)
                 return 0
             # a frame of only NULL ids is a pure insert: every id is
             # assigned fresh above max_id, so nothing can pre-exist —
@@ -1422,7 +1442,7 @@ class MarcStore:
             staged = self._stage(derived, f"_stage_commit_{name}")
 
             # prev-id set for history created-stamps, computed as a join
-            # (lazily — the history write below runs before the upsert
+            # (lazily — the history write runs before the upsert
             # overwrites the live table it reads)
             if all_new:
                 prev_id_df = self.spark.createDataFrame(
@@ -1435,57 +1455,29 @@ class MarcStore:
                                     .select(F.col("_id").alias("record_id")))
                 prev_id_df = self._prev_id_frame(staged, prev_source,
                                                  small=small)
-            self._append_history_frame(record_type, staged, user, now,
-                                       prev_id_df=prev_id_df,
-                                       all_new=all_new, small=small)
-            n = staged.count()
             # commit_frame NEVER propagates heading changes (structural
-            # recursion guard) — so an auth bulk write that changes
-            # headings over an indexed bib table must mark the BIB token
-            # index dirty (full): its rows denormalize the old heading
-            # values while the derived view would overlay current ones.
-            # The diff is O(batch): the staged frame joined to the
-            # pre-commit live rows on _id, heading signatures compared
-            heading_markers: list[str] = []
+            # recursion guard), so the tail flags the token indexes an
+            # auth frame's heading changes leave stale.  The diff is
+            # O(batch): the staged frame joined to the pre-commit live
+            # rows on _id, heading signatures compared
+            changed_ids: list[int] = []
             if (record_type == "auth"
                     and not all_new        # fresh ids: nothing changed
                     and (self._tokens("bib").exists(self.spark)
                          or self._tokens("auth").exists(self.spark))):
                 changed_ids = self._frame_changed_heading_ids(staged)
-                if changed_ids:
-                    # both record types denormalize headings (bib
-                    # 6xx/7xx, auth 5xx see-also) — mark every live
-                    # index; targeted (changed auth ids) when the set
-                    # fits the marker cap, full past it
-                    payload = self._heading_marker_payload(changed_ids)
-                    for rt2 in ("bib", "auth"):
-                        if self._tokens(rt2).exists(self.spark):
-                            heading_markers.append(
-                                self._write_dirty_marker(
-                                    rt2, dict(payload)))
-            try:
-                self._upsert(record_type, staged, batch_max=frame_max)
-            except BaseException:
-                # the upsert MAY still have landed (post-publish
-                # auto-compaction raise): stamp committed — correct if
-                # it landed (staleness real), and a settle-after-one-
-                # no-op-refresh if it did not (see commit())
-                for m in heading_markers:
-                    self._mark_marker_committed(m)
-                raise
-            # staleness flagged above is now real (the auth commit
-            # landed): stamp the flags committed so a rebuild deriving
-            # from post-commit headings can settle them
-            for m in heading_markers:
-                self._mark_marker_committed(m)
+        except BaseException:
+            # the publish tail, which removes the scratch, never ran
+            self._unstage_commit_scratch(name)
+            raise
+        try:
+            self._publish(record_type, staged, prev_id_df, user, now,
+                          all_new=all_new, small=small, batch_max=frame_max,
+                          changed_ids=changed_ids)
         finally:
-            for scratch in (f"_stage_ingest_{name}", f"_stage_ingest_ids_{name}",
-                            f"_stage_prevlive_{name}",
-                            f"_stage_commit_{name}"):
-                self._unstage(scratch)
             if record_type == "auth":
                 self._invalidate_auth_index()
-        return n
+        return n_rows
 
     #: heading-staleness markers carry the CHANGED auth ids up to this
     #: many, so replay can refresh only the records linking to them
@@ -1556,14 +1548,23 @@ class MarcStore:
             "pt", F.pmod(F.col(key),
                          F.lit(self.n_buckets(record_type))).cast("int"))
 
-    def _upsert(self, record_type: str, new_df: DataFrame,
-                batch_max: int | None = None) -> None:
-        """Commit the batch as ONE appended merge-on-read delta segment
-        — O(batch) I/O at any store size (the Delta/Iceberg
-        MERGE-on-read shape; the backend's manifest CAS is the commit
-        point).  When a persisted token index exists, its O(batch)
-        refresh follows under a write-ahead dirty marker recording the
-        live table's PRE-commit segment list: a crash between the two
+    def _upsert(self, record_type: str, rows: DataFrame | None = None,
+                removed_ids: list[int] = (), *, batch_max: int) -> None:
+        """The one live-commit step: every write (both commit heads,
+        ``delete``, ``scripts/rebuild_derived.py``) reaches the live
+        table here.  ``rows`` replace their ids' records,
+        ``removed_ids`` are deleted as tombstones, and both land as ONE
+        appended merge-on-read delta segment — O(batch) I/O at any
+        store size (the Delta/Iceberg MERGE-on-read shape; the
+        backend's manifest CAS is the commit point).  ``batch_max`` is
+        the batch's exact max id, folded into the manifest's monotonic
+        ``max_id`` hint so the next commit's id assignment is O(1)
+        metadata instead of a live ∪ history scan (the hint never
+        decreases, so a tombstone-only batch passes 0).
+
+        When a persisted token index exists, its O(batch) refresh
+        follows under a write-ahead dirty marker recording the live
+        table's PRE-commit segment list: a crash between the two
         commits replays exactly the batch (the segments added since) on
         the next search or store open.  A refresh FAILURE after the
         durable live commit does not fail the commit — the marker stays
@@ -1584,18 +1585,6 @@ class MarcStore:
             record_type,
             {"base_segments": (live.segments(self.spark)
                                if live.exists(self.spark) else [])})
-        # fold the batch's max id into the manifest's monotonic hint
-        # (one O(batch) agg) so the next commit's id assignment is O(1)
-        # metadata instead of a live ∪ history scan.  A store whose
-        # manifest predates the hint seeds it from the full scan ONCE —
-        # the batch max alone could understate an existing higher id
-        # (explicit-id commit_frame below the store's max) and a low
-        # hint would reuse ids.
-        # commit_frame already knows the batch's exact max id (its shape
-        # probe plus the dense assigned range); recomputing it here was
-        # one more full pass over the batch's _id column per commit
-        if batch_max is None:
-            batch_max = int(new_df.agg(F.max("_id")).first()[0] or 0)
         for attempt in (0, 1):
             # existence, modulus, and metadata are ALL re-derived per
             # attempt: a lost creation race or raced rebucket changes
@@ -1614,8 +1603,13 @@ class MarcStore:
             # the new geometry's modulus back in the merge
             extra = ({"max_id": bmax} if exists
                      else {"n_buckets": nb, "max_id": bmax})
+            stones = (self.spark.createDataFrame(
+                [(int(i), int(i) % nb) for i in removed_ids],
+                "_id long, pt int") if removed_ids else None)
             try:
-                live.upsert(rows=self._with_bucket(new_df, record_type),
+                live.upsert(rows=(self._with_bucket(rows, record_type)
+                                  if rows is not None else None),
+                            tombstone_keys=stones,
                             extra=extra,
                             expect_meta=({"n_buckets": nb}
                                          if exists else None),
@@ -1648,7 +1642,8 @@ class MarcStore:
         # covers it instead)
         if self._tokens(record_type).exists(self.spark):
             try:
-                self._refresh_tokens_for_batch(record_type, new_df=new_df)
+                self._refresh_tokens_for_batch(record_type, new_df=rows,
+                                               removed_ids=removed_ids)
             except Exception as exc:
                 warnings.warn(
                     f"commit of {record_type} batch is durable but the "
@@ -1795,10 +1790,6 @@ class MarcStore:
     #: MergeOnReadTable.BROADCAST_MAX_DELTA_ROWS.
     SMALL_BATCH_MAX_ROWS = 4_000_000
 
-    def _broadcastable_batch(self, df: DataFrame) -> bool:
-        return (df.limit(self.SMALL_BATCH_MAX_ROWS + 1).count()
-                <= self.SMALL_BATCH_MAX_ROWS)
-
     def _with_audit_stamps(self, src: DataFrame, live: DataFrame,
                            user: str, now: datetime, *,
                            small: bool) -> DataFrame:
@@ -1839,9 +1830,8 @@ class MarcStore:
 
     def _append_history_frame(self, record_type: str, df: DataFrame,
                               user: str, now: datetime,
-                              prev_id_df: DataFrame | None = None,
-                              all_new: bool = False,
-                              small: bool | None = None) -> None:
+                              prev_id_df: DataFrame, *, all_new: bool,
+                              small: bool) -> None:
         """History append as ONE distributed job over the committed
         frame: per-id version bases come from a semi-join-filtered
         aggregate of the existing history, new-vs-update from a left
@@ -1858,8 +1848,6 @@ class MarcStore:
                     .withColumn("_vbase", F.lit(None).cast("int")))
         else:
             existing = self.history_df(record_type)
-            if small is None:     # caller didn't size the batch already
-                small = self._broadcastable_batch(df)
             ids_df = df.select(F.col("_id").alias("record_id"))
             if small:
                 ids_df = F.broadcast(ids_df)
@@ -1868,13 +1856,10 @@ class MarcStore:
                      .agg(F.max("version").alias("_vbase")))
             base = df.select(F.col("_id").alias("record_id"), doc) \
                      .join(vbase, "record_id", "left")
-        if prev_id_df is not None:
-            prev = prev_id_df.select("record_id", F.lit(True).alias("_prev"))
-            if small:
-                prev = F.broadcast(prev)
-            base = base.join(prev, "record_id", "left")
-        else:
-            base = base.withColumn("_prev", F.lit(None).cast("boolean"))
+        prev = prev_id_df.select("record_id", F.lit(True).alias("_prev"))
+        if small:
+            prev = F.broadcast(prev)
+        base = base.join(prev, "record_id", "left")
         is_new = F.col("_prev").isNull()
         actions_t = schemas.HISTORY["actions"].dataType.simpleString()
         hist = base.select(
@@ -2172,50 +2157,12 @@ class MarcStore:
         self._append_history_rows(
             record_type,
             self.spark.createDataFrame(hist_rows, schema=schemas.HISTORY))
-        self._remove_live(record_type, [rid])
+        self._upsert(record_type, removed_ids=[rid], batch_max=0)
         if record_type == "auth":
             # the memoized index tracks commits incrementally (commit
             # mutates it in step with the upsert); deletes drop the whole
             # cache — cheap relative to their frequency
             self._invalidate_auth_index()
-
-    def _remove_live(self, record_type: str, ids: list[int]) -> None:
-        """Delete ids as merge-on-read tombstones — one appended
-        segment, O(batch), same marker protocol as ``_upsert``."""
-        live = self._live(record_type)
-        if not live.exists(self.spark):
-            return
-        # unconditional marker + post-CAS existence re-check: same
-        # build-race bridging as _upsert (see the comment there)
-        marker = self._write_dirty_marker(
-            record_type, {"base_segments": live.segments(self.spark)})
-        for attempt in (0, 1):
-            n = self.n_buckets(record_type)
-            stones = self.spark.createDataFrame(
-                [(int(i), int(i) % n) for i in ids], "_id long, pt int")
-            try:
-                live.upsert(tombstone_keys=stones,
-                            expect_meta={"n_buckets": n})
-                break
-            except ConcurrentWriteError:
-                if attempt:
-                    raise   # raced rebucket persists: surface it
-        self._mark_marker_committed(marker)
-        if record_type == "auth":
-            self._headings_hint_memo = None
-        self._invalidate_query_contexts()
-        if self._tokens(record_type).exists(self.spark):
-            try:
-                self._refresh_tokens_for_batch(record_type,
-                                               removed_ids=list(ids))
-            except Exception as exc:
-                warnings.warn(
-                    f"delete of {record_type} ids is durable but the "
-                    f"search index refresh failed ({exc}); the index "
-                    f"re-converges from the dirty marker on the next "
-                    f"search or store open")
-                return
-        fsio.remove(self.spark, marker)
 
     def restore(self, record_type: str, rid: int, user: str = "admin",
                 now: datetime | None = None) -> Marc:

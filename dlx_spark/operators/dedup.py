@@ -253,8 +253,7 @@ def lsh_candidate_pairs(signatures: DataFrame, bands: int = 16,
 
 
 def lsh_verified_pairs(signatures: DataFrame, bands: int = 16,
-                       min_match: int | None = None,
-                       carry_signatures: bool | None = None) -> DataFrame:
+                       min_match: int | None = None) -> DataFrame:
     """Banded LSH candidates with the signature-match verification
     INLINE — the one-shuffle formulation of
     ``lsh_candidate_pairs + distinct + join-back-to-signatures``.
@@ -264,36 +263,16 @@ def lsh_verified_pairs(signatures: DataFrame, bands: int = 16,
     eliminated WITHOUT a ``distinct`` exchange — once both signatures
     sit in the joined row, each side's band hashes are recomputable
     in-expression, so the pair is kept only in its FIRST colliding
-    band: exact dedup as a filter.  How the signatures reach the
-    joined row is a size-dependent choice (``carry_signatures``):
-
-    - ``False`` (small corpora): slim (id, band, bucket) band
-      self-join, then plain joins back to the signature relation —
-      Catalyst broadcasts them below the autoBroadcast threshold.
-      ONE exchange total (the band-bucket partitioning, reused across
-      both sides); measured faster than the distinct-based pipeline
-      on the bench headline (1.12 s vs 1.15 s at sf0.1, and the
-      distinct exchange is gone from the plan).
-    - ``True``: the band explode carries the full signature alongside
-      the bucket key, so the self-join already holds both signatures —
-      no join back at all.  The trade is shuffle/explode WIDTH:
-      ``bands`` signature copies per doc (≈ 8 KB at 16×64 longs).
-    - ``None`` (default): the slim form.  r11's auto rule flipped to
-      carry when Catalyst's estimate of ``signatures`` outgrew the
-      autoBroadcast threshold ("the safe direction at scale") — r12
-      MEASURED that assumption and it lost: at 20× corpus scale
-      (exactly where the estimate crosses the threshold) the carry leg
-      ran 92–99 s vs 37.5 s for the slim form, interleaved
-      3×, identical output pairs, healthy cpu probes (A/B recorded in
-      plans/r12/bench_evidence.md).  Arithmetic agrees: carrying
-      duplicates every signature ``bands``× through the explode
-      (~8 KB/doc), while the join-back moves each signature once more
-      (~0.5 KB/doc) plus the candidate ids — and when the signature
-      relation outgrows a broadcast, the join-back degrades to an
-      ordinary shuffle join, not a cliff.  So the default is the slim
-      form at every size; ``True`` stays for callers whose candidate
-      sets are so dense that one join-back per pair costs more than
-      bands-wide duplication (none measured).
+    band: exact dedup as a filter.  The signatures reach the joined
+    row through a slim (id, band, bucket) band self-join and a plain
+    join back to the signature relation, which Catalyst broadcasts
+    below the autoBroadcast threshold: ONE exchange total (the
+    band-bucket partitioning, reused across both sides).  Carrying the
+    full signature through the band explode instead duplicates it
+    ``bands``× (~8 KB/doc) and measured 92–99 s against 37.5 s for
+    this form at 20× corpus scale (plans/r12/bench_evidence.md); past
+    the broadcast threshold the join-back degrades to an ordinary
+    shuffle join, not a cliff.
 
     Same mega-bucket caveat as the uncapped ``lsh_candidate_pairs``;
     use that function's ``bucket_cap`` star for connectivity-only
@@ -302,52 +281,33 @@ def lsh_verified_pairs(signatures: DataFrame, bands: int = 16,
     Output: (id_a, id_b, n_match) with id_a < id_b, one row per pair;
     ``min_match`` filters on the matching-position count (e.g. 32 of
     64 ≈ Jaccard 0.5)."""
-    if carry_signatures is None:
-        carry_signatures = False
-
     # NOTE: this stays an op chain, NOT sql_over — ``signatures`` is
     # normally a cached relation, and routing a cached frame through a
     # temp view blocks CacheManager substitution (the signature pipeline
     # would silently recompute per reference; measured on the plan:
     # 3 exchanges and no InMemoryTableScan)
-    if carry_signatures:
-        banded = signatures.select(
-            "id", "sig",
-            F.posexplode(_band_hash_expr("sig", bands)).alias("band",
-                                                              "bucket"))
-        joined = (banded.alias("l")
-                  .join(banded.alias("r"),
-                        on=[F.col("l.band") == F.col("r.band"),
-                            F.col("l.bucket") == F.col("r.bucket"),
-                            F.col("l.id") < F.col("r.id")])
-                  .select(F.col("l.id").alias("id_a"),
-                          F.col("r.id").alias("id_b"),
-                          F.col("l.sig").alias("sig_a"),
-                          F.col("r.sig").alias("sig_b"),
-                          F.col("l.band").alias("band")))
-    else:
-        # the PROBE side carries its signature through the band join
-        # for free (no broadcast, no shuffle — the rows just keep the
-        # column), so only id_b needs a join back to the signature
-        # relation: one broadcast build per run instead of two
-        probe = signatures.select(
-            "id", "sig",
-            F.posexplode(_band_hash_expr("sig", bands)).alias("band",
-                                                              "bucket"))
-        slim = band_buckets(signatures, bands)
-        cands = (probe.alias("l")
-                 .join(slim.alias("r"),
-                       on=[F.col("l.band") == F.col("r.band"),
-                           F.col("l.bucket") == F.col("r.bucket"),
-                           F.col("l.id") < F.col("r.id")])
-                 .select(F.col("l.id").alias("id_a"),
-                         F.col("r.id").alias("id_b"),
-                         F.col("l.sig").alias("sig_a"),
-                         F.col("l.band").alias("band")))
-        joined = cands.join(
-            signatures.select(F.col("id").alias("id_b"),
-                              F.col("sig").alias("sig_b")),
-            "id_b")
+    #
+    # the PROBE side carries its signature through the band join for
+    # free (no broadcast, no shuffle — the rows just keep the column),
+    # so only id_b needs a join back to the signature relation: one
+    # broadcast build per run instead of two
+    probe = signatures.select(
+        "id", "sig",
+        F.posexplode(_band_hash_expr("sig", bands)).alias("band", "bucket"))
+    slim = band_buckets(signatures, bands)
+    cands = (probe.alias("l")
+             .join(slim.alias("r"),
+                   on=[F.col("l.band") == F.col("r.band"),
+                       F.col("l.bucket") == F.col("r.bucket"),
+                       F.col("l.id") < F.col("r.id")])
+             .select(F.col("l.id").alias("id_a"),
+                     F.col("r.id").alias("id_b"),
+                     F.col("l.sig").alias("sig_a"),
+                     F.col("l.band").alias("band")))
+    joined = cands.join(
+        signatures.select(F.col("id").alias("id_b"),
+                          F.col("sig").alias("sig_b")),
+        "id_b")
     first_band = cached_expr(f"""
         element_at(filter(sequence(0, {bands - 1}),
                           b -> {_SLICE_HASH.format(sig='sig_a', bands=bands)}

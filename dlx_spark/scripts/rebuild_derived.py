@@ -45,13 +45,12 @@ def run(argv=None) -> int:
             continue
         t0 = time.time()
         # refresh linked-value caches from current headings, then derive;
-        # _upsert stages the result before overwriting, so the lazy read
-        # of the same parquet path is safe.  ids=None = full-rebuild
-        # mode: the touched set is an anti-join, so no id list is ever
-        # collected to the driver (100M records = GB-scale otherwise)
+        # the result lands through the store's live-commit step as one
+        # delta segment superseding every record (no history version:
+        # the records' content is unchanged, only what derives from it)
         derived = mdf.derive_text_words(base, headings=headings)
         derived = mdf.derive_logical_fields(derived, rtype, headings=None)
-        store._upsert(rtype, derived, ids=None)
+        store._upsert(rtype, derived, batch_max=store.max_id(rtype))
         print(f"{rtype}: rebuilt derived state for {n} records "
               f"in {time.time() - t0:.1f}s")
     return 0

@@ -341,7 +341,7 @@ def test_failed_auth_upsert_settles_heading_flags(store, monkeypatch):
 
     orig = MarcStore._upsert
 
-    def boom(self, record_type, new_df):
+    def boom(self, record_type, rows=None, removed_ids=(), *, batch_max):
         raise RuntimeError("injected upsert failure")
 
     monkeypatch.setattr(MarcStore, "_upsert", boom)

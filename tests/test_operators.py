@@ -684,12 +684,10 @@ def test_epoch_seconds_ntz_is_timezone_stable(spark):
 
 
 @pytest.mark.slow
-def test_lsh_verified_pairs_both_formulations_match_reference_pipeline(spark):
+def test_lsh_verified_pairs_matches_reference_pipeline(spark):
     """lsh_verified_pairs (round 8, the one-shuffle candidates+verify)
     must equal the three-stage reference pipeline (lsh_candidate_pairs
-    -> distinct -> join-back verify) pair-for-pair in BOTH formulations:
-    slim join-back (carry_signatures=False) and signature-carrying
-    (True), plus the auto default."""
+    -> distinct -> join-back verify) pair-for-pair."""
     from pyspark.sql import functions as F
 
     from dlx_spark.operators import dedup
@@ -710,15 +708,11 @@ def test_lsh_verified_pairs_both_formulations_match_reference_pipeline(spark):
              .select("id_a", "id_b", "n_match").collect())}
     assert want
 
-    for carry in (False, True, None):
-        got = {(r["id_a"], r["id_b"], r["n_match"]) for r in
-               dedup.lsh_verified_pairs(
-                   sigs, bands=16, carry_signatures=carry).collect()}
-        assert got == want, f"carry_signatures={carry}"
-        # exactly one row per pair (the first-band dedup is exact)
-        n_rows = dedup.lsh_verified_pairs(
-            sigs, bands=16, carry_signatures=carry).count()
-        assert n_rows == len(want)
+    got = {(r["id_a"], r["id_b"], r["n_match"]) for r in
+           dedup.lsh_verified_pairs(sigs, bands=16).collect()}
+    assert got == want
+    # exactly one row per pair (the first-band dedup is exact)
+    assert dedup.lsh_verified_pairs(sigs, bands=16).count() == len(want)
 
     # min_match filter parity
     got32 = {(r["id_a"], r["id_b"]) for r in dedup.lsh_verified_pairs(

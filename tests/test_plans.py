@@ -162,20 +162,12 @@ def test_lsh_verified_pairs_slim_regime_single_exchange(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     sigs = minhash_signatures(docs).cache()
     try:
-        pairs = lsh_verified_pairs(sigs, bands=16, min_match=32,
-                                   carry_signatures=False)
+        pairs = lsh_verified_pairs(sigs, bands=16, min_match=32)
         plan = plans.simple_plan(pairs)
         # one exchange (band-bucket, reused by both self-join sides);
         # a distinct-based regression adds a second — this is the pin
         assert plans.shuffle_count(pairs) <= 1, plan
         assert plans.sort_merge_join_count(pairs) == 0
-        # carry regime: the self-join already holds both signatures —
-        # no signature join-backs at all
-        carried = lsh_verified_pairs(sigs, bands=16, min_match=32,
-                                     carry_signatures=True)
-        cplan = plans.simple_plan(carried)
-        assert plans.shuffle_count(carried) <= 1, cplan
-        assert plans.broadcast_join_count(carried) <= 1
     finally:
         sigs.unpersist()
 

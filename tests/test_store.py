@@ -569,12 +569,13 @@ def test_crash_mid_rebucket_recovers_on_open(spark, tmp_path, monkeypatch):
 
 
 @pytest.mark.slow
-def test_remove_live_tombstones_ids(spark, tmp_path):
-    """Multi-id removal lands as tombstones in one delta segment; the
-    resolved table never shows the ids again (including after a
-    compaction folds the tombstones away)."""
+def test_upsert_tombstones_ids(spark, tmp_path):
+    """Multi-id removal through the live-commit step lands as
+    tombstones in one delta segment; the resolved table never shows the
+    ids again (including after a compaction folds the tombstones
+    away)."""
     st = _seed_plain(spark, tmp_path, "wh_rm", n=32)
-    st._remove_live("bib", [1, 17, 2])
+    st._upsert("bib", removed_ids=[1, 17, 2], batch_max=0)
     ids = sorted(r["_id"] for r in st.bibs().select("_id").collect())
     assert ids == sorted(set(range(1, 33)) - {1, 17, 2})
     st.compact("bib")
@@ -1030,3 +1031,107 @@ def test_keyset_pagination_after_id(store):
         store.search("bib", "245__a:keyset", skip=2, after_id=1)
     with pytest.raises(ValueError, match="keyset"):
         store.search("bib", "245__a:keyset", sort=["updated"], after_id=1)
+
+
+def _jobs(spark, fn) -> int:
+    """The number of Spark jobs ``fn`` runs, counted through a job
+    group (job counts do not move with machine load)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed asynchronously by the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_record_commit_job_budget(store):
+    """A one-record commit: the record head plus the shared publish
+    tail, which takes the batch's max id from the head (no aggregate
+    over the staged batch)."""
+    bib1 = store.get("bib", 1)
+    bib1.set("245", "a", "Budgeted", auth_control=False)
+    n = _jobs(store.spark, lambda: store.commit([bib1], now=T1))
+    assert store.get("bib", 1).get_value("245", "a") == "Budgeted"
+    assert n <= 11, n
+
+
+def test_commit_frame_upsert_job_budget(store):
+    """A commit_frame upsert of existing rows: its shape probe answers
+    the returned row count and the batch's max id (no count or
+    aggregate over the staged batch)."""
+    frame = store.bibs().withColumn(
+        "datafields", F.expr("filter(datafields, f -> f.tag != '520')"))
+    out = []
+    n = _jobs(store.spark,
+              lambda: out.append(store.commit_frame(frame, now=T1)))
+    assert out == [2]
+    assert n <= 30, n
+
+
+def test_delete_job_budget(store):
+    """A delete reaches the live table through the same live-commit
+    step as a commit, as one tombstone."""
+    n = _jobs(store.spark, lambda: store.delete("bib", 2, now=T1))
+    assert store.get("bib", 2) is None
+    assert n <= 7, n
+
+
+def test_failed_record_commit_leaves_no_scratch(store, monkeypatch):
+    """The publish tail removes the commit scratch on failure too."""
+    from dlx_spark import fsio
+
+    def boom(self, *args, **kwargs):
+        raise RuntimeError("injected upsert failure")
+
+    monkeypatch.setattr(MarcStore, "_upsert", boom)
+    bib1 = store.get("bib", 1)
+    bib1.set("245", "a", "Never lands", auth_control=False)
+    with pytest.raises(RuntimeError, match="injected"):
+        store.commit([bib1], now=T1)
+    assert fsio.glob(store.spark, fsio.join(store.root, "_stage_*")) == []
+
+
+def test_propagated_heading_change_leaves_no_markers(store):
+    """Propagation supersedes the heading flags the publish tail wrote:
+    the record head removes them, leaving no marker on either type."""
+    store.build_search_index("bib")
+    a1 = store.get("auth", 1)
+    a1.set("150", "a", "Propagated header", auth_control=False)
+    store.commit([a1], user="editor", now=T1)
+    assert store._dirty_markers("bib") == []
+    assert store._dirty_markers("auth") == []
+    assert sorted(r["_id"] for r in
+                  store.search("bib", "650__a:propagated").collect()) == [1, 2]
+
+
+def test_rebuild_derived_script_refreshes_linked_values(store):
+    """``python -m dlx_spark.scripts.rebuild_derived`` re-derives linked
+    values and search columns through the live-commit step, without a
+    history version."""
+    from dlx_spark.scripts import rebuild_derived
+
+    a1 = store.get("auth", 1)
+    a1.set("150", "a", "Rebuilt heading", auth_control=False)
+    store.commit([a1], user="editor", now=T1, update_attached=False)
+    n_versions = store.history_df("bib").count()
+    spark = store.spark
+    # the script starts its session through get_spark, which re-applies
+    # the package's runtime configuration to the running session
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        assert rebuild_derived.run(
+            ["--store", store.root, "--type", "bib"]) == 0
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    for row in store.bibs().collect():
+        sub = [s for f in row["datafields"] if f["tag"] == "650"
+               for s in f["subfields"]][0]
+        assert sub["value"] == "Rebuilt heading"
+        assert "rebuilt" in list(row["words"])
+    assert store.history_df("bib").count() == n_versions
