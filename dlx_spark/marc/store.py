@@ -29,7 +29,9 @@ Layout under ``root``::
                             (``committed`` + gap ⊆ derivation) or the
                             in-flight grace expired — never on the mere
                             presence of OTHER writers' segments
-    _stage_*/               scratch parquet for pipeline materialization
+    stage_*/                scratch parquet for pipeline materialization
+                            (no leading underscore: Spark treats
+                            ``_``-prefixed paths as hidden)
 
 Per-commit pipeline (replacing the reference's per-record round-trips
 and 4 thread families, dlx/marc/__init__.py:856-1234):
@@ -1199,7 +1201,7 @@ class MarcStore:
                            and prev_headings[r.id] != self._heading_signature(r)]
 
         # 5. history, heading flags, live commit (the shared tail)
-        staged = self._stage(derived, f"_stage_commit_{name}")
+        staged = self._stage(derived, f"stage_commit_{name}")
         heading_markers = self._publish(
             record_type, staged, prev_id_df, user, now, all_new=False,
             small=True, batch_max=max(ids), changed_ids=changed_ids)
@@ -1218,8 +1220,8 @@ class MarcStore:
         return ids
 
     #: the commit heads' scratch stages (suffixed by live table name)
-    _SCRATCH = ("_stage_ingest", "_stage_ingest_ids", "_stage_prevlive",
-                "_stage_commit")
+    _SCRATCH = ("stage_ingest", "stage_ingest_ids", "stage_prevlive",
+                "stage_commit")
 
     def _unstage_commit_scratch(self, name: str) -> None:
         for scratch in self._SCRATCH:
@@ -1317,7 +1319,7 @@ class MarcStore:
 
         now = now or datetime.now(timezone.utc).replace(tzinfo=None)
         name = self._live_name(record_type)
-        src = self._stage(df, f"_stage_ingest_{name}")
+        src = self._stage(df, f"stage_ingest_{name}")
         try:
             # ONE single-column aggregate over the staged batch answers
             # every shape probe the pipeline needs (r12): row count,
@@ -1372,7 +1374,7 @@ class MarcStore:
                 tmp = self._stage(
                     src.withColumn("_pid", F.spark_partition_id())
                        .withColumn("_mid", F.monotonically_increasing_id()),
-                    f"_stage_ingest_ids_{name}")
+                    f"stage_ingest_ids_{name}")
                 counts = (tmp.filter(F.col("_id").isNull())
                           .groupBy("_pid").count().collect())
                 offsets, acc = {}, 0
@@ -1428,7 +1430,7 @@ class MarcStore:
                     pruned = self._stage(
                         live.join(F.broadcast(src.select("_id")),
                                   "_id", "left_semi"),
-                        f"_stage_prevlive_{name}")
+                        f"stage_prevlive_{name}")
                     stamped = self._with_audit_stamps(
                         src, F.broadcast(pruned), user, now, small=False)
                 else:
@@ -1439,7 +1441,7 @@ class MarcStore:
             derived = mdf.derive_text_words(stamped, headings=self.headings(),
                                             hint=self.headings_hint())
             derived = mdf.derive_logical_fields(derived, record_type, headings=None)
-            staged = self._stage(derived, f"_stage_commit_{name}")
+            staged = self._stage(derived, f"stage_commit_{name}")
 
             # prev-id set for history created-stamps, computed as a join
             # (lazily — the history write runs before the upsert
@@ -1695,15 +1697,17 @@ class MarcStore:
         files stay on disk until vacuumed.  Delegates to the versioned
         backend's retention-guarded vacuum (default 1 h horizon — safe
         to run concurrently with writers; pass ``min_age_seconds=0``
-        only with writers quiesced).  Also sweeps aged ``_stage_*``
-        scratch directories orphaned by crashed drivers (scratch names
+        only with writers quiesced).  Also sweeps aged ``stage_*``
+        scratch directories orphaned by crashed drivers, and aged
+        ``_stage_*`` ones, the name earlier releases used (scratch names
         are per-store-instance unique, so a dead driver's staging is
         never reclaimed by a live one's ``_unstage``; the same age
         horizon protects in-flight commits).  Returns the reclaimed
         segment ids."""
         import time as _time
         horizon = _time.time() - min_age_seconds
-        for p in fsio.glob(self.spark, fsio.join(self.root, "_stage_*")):
+        for p in (fsio.glob(self.spark, fsio.join(self.root, "stage_*"))
+                  + fsio.glob(self.spark, fsio.join(self.root, "_stage_*"))):
             try:
                 if fsio.newest_mtime(self.spark, p) <= horizon:
                     fsio.rmtree(self.spark, p)

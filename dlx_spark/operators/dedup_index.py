@@ -33,8 +33,13 @@ indexes persist the corpus's dedup STATE instead:
                         MinHash index).
 
 All indexes are append-only: after a batch is deduped, its survivors'
-state is appended (one clustered segment per append, folded by
-``compact``), so tomorrow's batch sees today's survivors.  Index
+state is appended (one segment per append, clustered by the table's key
+and sized to its rows — a few-hundred-doc increment writes one file per
+table — and folded by ``compact``), so tomorrow's batch sees today's
+survivors.  The three near-dup families (MinHash, SimHash, Embedding)
+run one increment body, ``_dedup_increment``: the corpus probe runs
+once per ``dedup_batch``, its batch-sized drop set pinned before the
+intra-batch pass and the survivor rule read it.  Index
 parameters (hash family seed, bands, shingle width...) are persisted in
 a ``*_meta`` table at create time and re-read at probe/append time — a
 probe with mismatched parameters would silently find nothing, so they
@@ -70,7 +75,7 @@ PROBE_BROADCAST_ROW_CAP = 2_000_000
 
 
 def _compact_table(spark: SparkSession, table: str, key: str,
-                   n_buckets: int, distinct: bool = False) -> None:
+                   distinct: bool = False) -> None:
     """Fold an append-only index table into one fresh segment.
 
     Append-only indexes accrete one segment per appended batch (a year
@@ -93,7 +98,7 @@ def _compact_table(spark: SparkSession, table: str, key: str,
     if distinct:
         # fold exact-duplicate rows (e.g. replayed band appends)
         src = src.dropDuplicates()
-    be.write(src, tmp, key, n_buckets)
+    be.write(src, tmp, key)
     be.replace(spark, table, tmp, token=token, on_conflict="merge")
 
 
@@ -126,7 +131,7 @@ def _split_overcap(idx_rows: DataFrame, group_cols: list[str],
 
 
 def _chain_probe_pairs(mega_corpus: DataFrame, mega_batch: DataFrame,
-                       group_cols: list[str]) -> DataFrame:
+                       group_cols: list[str], order: str = "pay") -> DataFrame:
     """Linear-output candidate pairs for OVER-CAP probe groups — the
     corpus-side analog of the intra-batch mega-bucket chains
     (dedup.minhash_pairs_from_signatures / simhash_pairs_from_fingerprints)
@@ -139,19 +144,20 @@ def _chain_probe_pairs(mega_corpus: DataFrame, mega_batch: DataFrame,
     O(|corpus group| × |batch group|).
 
     Inputs carry ``group_cols + (id, pay)`` where ``pay`` is the
-    verification payload that also serves as the order key (minhash
-    signature array / simhash fingerprint — near-identical payloads
-    sort adjacent, the property the chain relies on; same
-    approximation class as the intra-batch chains).  Returns
-    ``(corpus_id, batch_id, pay_a, pay_b)`` pairs for the caller's
-    verify expression."""
+    verification payload, and the ``order`` column (by default the
+    payload itself: minhash signature array / simhash fingerprint;
+    the embedding index orders vectors by their ordering signature) —
+    near-identical payloads sort adjacent, the property the chain
+    relies on; same approximation class as the intra-batch chains.
+    Returns ``(corpus_id, batch_id, pay_a, pay_b)`` pairs for the
+    caller's verify expression."""
     from pyspark.sql import Window
 
     from dlx_spark.operators.similarity import CHAIN_WINDOW
 
     u = (mega_corpus.withColumn("is_corpus", F.lit(True))
          .unionByName(mega_batch.withColumn("is_corpus", F.lit(False))))
-    w = Window.partitionBy(*group_cols).orderBy("pay", "id", "is_corpus")
+    w = Window.partitionBy(*group_cols).orderBy(order, "id", "is_corpus")
     cstruct = F.when(F.col("is_corpus"),
                      F.struct(F.col("id").alias("cid"),
                               F.col("pay").alias("cpay")))
@@ -171,6 +177,42 @@ def _chain_probe_pairs(mega_corpus: DataFrame, mega_batch: DataFrame,
         .select(F.col("_c.cid").alias("corpus_id"), "batch_id",
                 F.col("_c.cpay").alias("pay_a"), "pay_b")
         .distinct())
+
+
+def _dedup_increment(batch: DataFrame, id_col: str, payload: DataFrame,
+                     vs_corpus: DataFrame, intra_pairs,
+                     replay_safe: bool) -> tuple[DataFrame, DataFrame]:
+    """The near-dup increment the MinHash, SimHash and Embedding indexes
+    share: drop batch docs the probe linked to the corpus (corpus always
+    wins), dedup the remainder against itself (min-id survivor per
+    connected component), and return ``(clean, kept)`` — the clean batch
+    rows, materialized, and the ``payload`` rows of exactly those docs
+    for the family's append.
+
+    ``payload`` is the family's materialized per-doc state keyed by
+    ``id`` (signatures, banded fingerprints, vectors); ``vs_corpus`` its
+    lazy probe over that payload, with ``(corpus_id, batch_id)``;
+    ``intra_pairs(rows)`` its ``(id_a, id_b)`` pairs among payload
+    rows.  The drop set is pinned with one eager checkpoint: it is
+    batch-sized, and both the remainder's payload and its rows read it,
+    so the probe (band join plus over-cap aggregate) runs once.
+
+    ``replay_safe``: links whose corpus side is one of this batch's own
+    ids are ignored (a crashed prior attempt may have appended this very
+    batch)."""
+    if replay_safe:
+        own = batch.select(F.col(id_col).alias("corpus_id"))
+        vs_corpus = vs_corpus.join(own, "corpus_id", "left_anti")
+    drop = (vs_corpus.select(F.col("batch_id").alias("id")).distinct()
+            .localCheckpoint(eager=True))
+    remaining = batch.join(drop.withColumnRenamed("id", "_dup"),
+                           F.col(id_col) == F.col("_dup"), "left_anti")
+    intra = intra_pairs(payload.join(drop, "id", "left_anti"))
+    clean = dedup.dedup_near(remaining, intra, id_col) \
+                 .localCheckpoint(eager=True)
+    kept = payload.join(clean.select(F.col(id_col).alias("id")), "id",
+                        "left_semi")
+    return clean, kept
 
 
 def _write_meta(spark: SparkSession, name: str, params: dict) -> None:
@@ -197,21 +239,19 @@ class DigestIndex:
         self.params = _read_meta(spark, name)
 
     def compact(self) -> None:
-        _compact_table(self.spark, f"{self.name}_digests", "digest",
-                       self.params["n_buckets"])
+        _compact_table(self.spark, f"{self.name}_digests", "digest")
 
     @classmethod
     def create(cls, df: DataFrame, name: str, text_col: str = "text",
-               id_col: str = "doc_id", n_buckets: int = 32) -> "DigestIndex":
+               id_col: str = "doc_id") -> "DigestIndex":
         spark = df.sparkSession
         digests = (
             df.select(F.md5(dedup.normalized_text(F.col(text_col))).alias("digest"),
                       F.col(id_col).alias("id"))
             .groupBy("digest").agg(F.min("id").alias("keep_id"))
         )
-        get_backend().write(digests, f"{name}_digests", "digest", n_buckets)
-        _write_meta(spark, name, {"text_col": text_col, "id_col": id_col,
-                                  "n_buckets": n_buckets})
+        get_backend().write(digests, f"{name}_digests", "digest")
+        _write_meta(spark, name, {"text_col": text_col, "id_col": id_col})
         return cls(spark, name)
 
     def _batch_digests(self, batch: DataFrame) -> DataFrame:
@@ -258,8 +298,7 @@ class DigestIndex:
                 self.spark, f"{self.name}_digests").select("digest")
             digests = digests.join(existing, "digest", "left_anti") \
                              .localCheckpoint(eager=True)
-        get_backend().append(digests, f"{self.name}_digests", "digest",
-                             p["n_buckets"])
+        get_backend().append(digests, f"{self.name}_digests", "digest")
 
     def dedup_batch(self, batch: DataFrame,
                     replay_safe: bool = False) -> DataFrame:
@@ -307,30 +346,28 @@ class MinHashIndex:
         ledger's self-compaction).  Band rows are deduplicated here: a
         crash between append()'s two writes can leave duplicate band
         keys (harmless to probe correctness, see append)."""
-        _compact_table(self.spark, f"{self.name}_sigs", "id",
-                       self.params["n_buckets"])
+        _compact_table(self.spark, f"{self.name}_sigs", "id")
         _compact_table(self.spark, f"{self.name}_bands", "bucket",
-                       self.params["n_buckets"], distinct=True)
+                       distinct=True)
 
     # -- construction -------------------------------------------------
 
     @classmethod
     def create(cls, df: DataFrame, name: str, text_col: str = "text",
                id_col: str = "doc_id", num_hashes: int = 64, bands: int = 16,
-               shingle_n: int = 3, seed: int = 42,
-               n_buckets: int = 32) -> "MinHashIndex":
+               shingle_n: int = 3, seed: int = 42) -> "MinHashIndex":
         spark = df.sparkSession
         params = {"text_col": text_col, "id_col": id_col,
                   "num_hashes": num_hashes, "bands": bands,
-                  "shingle_n": shingle_n, "seed": seed, "n_buckets": n_buckets}
+                  "shingle_n": shingle_n, "seed": seed}
         sigs = dedup.minhash_signatures(df, text_col, id_col, num_hashes,
                                         shingle_n, seed)
         # one pass computes signatures; bands derive from the stored sigs
         # (a cheap re-read of the compact table, not a re-shingle)
-        get_backend().write(sigs, f"{name}_sigs", "id", n_buckets)
+        get_backend().write(sigs, f"{name}_sigs", "id")
         stored = get_backend().read(spark, f"{name}_sigs")
         get_backend().write(dedup.band_buckets(stored, bands), f"{name}_bands",
-                            "bucket", n_buckets)
+                            "bucket")
         _write_meta(spark, name, params)
         return cls(spark, name)
 
@@ -470,8 +507,8 @@ class MinHashIndex:
             sigs = sigs.join(existing, "id", "left_anti")
         sigs = sigs.localCheckpoint(eager=True)
         get_backend().append(dedup.band_buckets(sigs, p["bands"]),
-                             f"{self.name}_bands", "bucket", p["n_buckets"])
-        get_backend().append(sigs, f"{self.name}_sigs", "id", p["n_buckets"])
+                             f"{self.name}_bands", "bucket")
+        get_backend().append(sigs, f"{self.name}_sigs", "id")
 
     def dedup_batch(self, batch: DataFrame, threshold: float = 0.8,
                     bucket_cap: int | None = 1000,
@@ -503,29 +540,19 @@ class MinHashIndex:
         ``minhash_near_duplicates``); pass ``None`` for the uncapped
         exact-w.r.t.-banding mode."""
         p = self.params
-        id_col = p["id_col"]
         # ONE signature pass for the whole increment: probe, intra-batch
         # dedup, and the index append all reuse this materialized frame
         # (signatures are the dominant per-batch map cost — md5 over
         # every shingle × num_hashes; re-deriving a subset is a cheap
-        # semi-join against the checkpointed blocks)
+        # join against the checkpointed blocks)
         bsigs = self._batch_sigs(batch).localCheckpoint(eager=True)
-        vs_corpus = self._probe_with_sigs(bsigs, threshold,
-                                          bucket_cap=bucket_cap)
-        if replay_safe:
-            own = batch.select(F.col(id_col).alias("corpus_id"))
-            vs_corpus = vs_corpus.join(own, "corpus_id", "left_anti")
-        vs_corpus = vs_corpus.select(F.col("batch_id").alias("_dup")).distinct()
-        remaining = batch.join(vs_corpus, F.col(id_col) == F.col("_dup"), "left_anti")
-
-        def _sigs_of(rows: DataFrame) -> DataFrame:
-            return bsigs.join(rows.select(F.col(id_col).alias("id")),
-                              "id", "left_semi")
-
-        intra = dedup.minhash_pairs_from_signatures(
-            _sigs_of(remaining), p["bands"], threshold, bucket_cap)
-        clean = dedup.dedup_near(remaining, intra, id_col).localCheckpoint(eager=True)
-        self.append(clean, if_absent=replay_safe, sigs=_sigs_of(clean))
+        clean, sigs = _dedup_increment(
+            batch, p["id_col"], bsigs,
+            self._probe_with_sigs(bsigs, threshold, bucket_cap=bucket_cap),
+            lambda rows: dedup.minhash_pairs_from_signatures(
+                rows, p["bands"], threshold, bucket_cap),
+            replay_safe)
+        self.append(clean, if_absent=replay_safe, sigs=sigs)
         return clean
 
     def drop(self) -> None:
@@ -559,17 +586,15 @@ class SimHashIndex:
         self.params = _read_meta(spark, name)
 
     def compact(self) -> None:
-        _compact_table(self.spark, f"{self.name}_fps", "key",
-                       self.params["n_buckets"], distinct=True)
+        _compact_table(self.spark, f"{self.name}_fps", "key", distinct=True)
 
     @classmethod
     def create(cls, df: DataFrame, name: str, text_col: str = "text",
-               id_col: str = "doc_id", n_buckets: int = 32) -> "SimHashIndex":
+               id_col: str = "doc_id") -> "SimHashIndex":
         spark = df.sparkSession
         get_backend().write(cls._banded_fps(df, text_col, id_col),
-                            f"{name}_fps", "key", n_buckets)
-        _write_meta(spark, name, {"text_col": text_col, "id_col": id_col,
-                                  "n_buckets": n_buckets})
+                            f"{name}_fps", "key")
+        _write_meta(spark, name, {"text_col": text_col, "id_col": id_col})
         return cls(spark, name)
 
     @classmethod
@@ -649,7 +674,7 @@ class SimHashIndex:
             existing = (get_backend().read(self.spark, f"{self.name}_fps")
                         .select("id").distinct())
             rows = rows.join(existing, "id", "left_anti")
-        get_backend().append(rows, f"{self.name}_fps", "key", p["n_buckets"])
+        get_backend().append(rows, f"{self.name}_fps", "key")
 
     def dedup_batch(self, batch: DataFrame, max_hamming: int = 3,
                     replay_safe: bool = False,
@@ -662,28 +687,18 @@ class SimHashIndex:
         mega-bucket expansion with verified chain edges (see
         ``simhash_pairs_from_fingerprints``); ``None`` = uncapped."""
         p = self.params
-        id_col = p["id_col"]
         # ONE fingerprint pass for the whole increment (see
         # MinHashIndex.dedup_batch — same reuse rationale)
         bfps = (self._banded_fps(batch, p["text_col"], p["id_col"])
                 .localCheckpoint(eager=True))
-        vs_corpus = self._probe_with_fps(bfps, max_hamming,
-                                         bucket_cap=bucket_cap)
-        if replay_safe:
-            own = batch.select(F.col(id_col).alias("corpus_id"))
-            vs_corpus = vs_corpus.join(own, "corpus_id", "left_anti")
-        drop = vs_corpus.select(F.col("batch_id").alias("_dup")).distinct()
-        remaining = batch.join(drop, F.col(id_col) == F.col("_dup"), "left_anti")
-
-        def _fps_of(rows: DataFrame) -> DataFrame:
-            return bfps.join(rows.select(F.col(id_col).alias("id")),
-                             "id", "left_semi")
-
-        intra = dedup.simhash_pairs_from_fingerprints(
-            _fps_of(remaining).select("id", "simhash").distinct(), max_hamming,
-            bucket_cap)
-        clean = dedup.dedup_near(remaining, intra, id_col).localCheckpoint(eager=True)
-        self.append(clean, if_absent=replay_safe, banded_fps=_fps_of(clean))
+        clean, kept = _dedup_increment(
+            batch, p["id_col"], bfps,
+            self._probe_with_fps(bfps, max_hamming, bucket_cap=bucket_cap),
+            lambda rows: dedup.simhash_pairs_from_fingerprints(
+                rows.select("id", "simhash").distinct(), max_hamming,
+                bucket_cap),
+            replay_safe)
+        self.append(clean, if_absent=replay_safe, banded_fps=kept)
         return clean
 
     def drop(self) -> None:
@@ -743,10 +758,9 @@ class EmbeddingIndex:
         self.params.setdefault("bands", 1)
 
     def compact(self) -> None:
-        _compact_table(self.spark, f"{self.name}_vecs", "id",
-                       self.params["n_buckets"])
+        _compact_table(self.spark, f"{self.name}_vecs", "id")
         _compact_table(self.spark, f"{self.name}_buckets", "bucket",
-                       self.params["n_buckets"], distinct=True)
+                       distinct=True)
 
     def rebucket(self, n_planes: int | None = None,
                  bands: int | None = None) -> None:
@@ -779,8 +793,7 @@ class EmbeddingIndex:
         keys = similarity.banded_lsh_keys(vecs, p["bands"], p["n_planes"],
                                           p["seed"], vec_col="vec",
                                           id_col="id", dim=p["dim"])
-        be.write(keys, f"{self.name}_buckets__rebucket", "bucket",
-                 p["n_buckets"])
+        be.write(keys, f"{self.name}_buckets__rebucket", "bucket")
         # conflict check BEFORE the commit point: once the staged meta
         # exists, a crash rolls the rebucket FORWARD on reopen — so
         # refuse to arm the commit point if an append already landed
@@ -878,7 +891,7 @@ class EmbeddingIndex:
     @classmethod
     def create(cls, df: DataFrame, name: str, vec_col: str = "embedding",
                id_col: str = "vec_id", n_planes: int = 8, bands: int = 1,
-               seed: int = 42, n_buckets: int = 32,
+               seed: int = 42,
                dim: int | None = None) -> "EmbeddingIndex":
         from dlx_spark.operators import similarity
 
@@ -889,22 +902,21 @@ class EmbeddingIndex:
                 raise ValueError("cannot infer dim from an empty frame — pass dim")
             dim = len(head[0])
         params = {"vec_col": vec_col, "id_col": id_col, "n_planes": n_planes,
-                  "bands": bands, "seed": seed, "dim": dim,
-                  "n_buckets": n_buckets}
+                  "bands": bands, "seed": seed, "dim": dim}
         oplanes = similarity.order_planes(dim, seed)
         vrows = df.select(F.col(id_col).alias("id"),
                           F.col(vec_col).alias("vec"),
                           similarity._order_sig_expr(vec_col, oplanes)
                           .alias("osig"))
         be = get_backend()
-        be.write(vrows, f"{name}_vecs", "id", n_buckets)
+        be.write(vrows, f"{name}_vecs", "id")
         # band keys derive from the stored vectors (a cheap columnar
         # re-read, not a second pass over the source)
         stored = be.read(spark, f"{name}_vecs")
         be.write(similarity.banded_lsh_keys(stored, bands, n_planes, seed,
                                             vec_col="vec", id_col="id",
                                             dim=dim),
-                 f"{name}_buckets", "bucket", n_buckets)
+                 f"{name}_buckets", "bucket")
         _write_meta(spark, name, params)
         return cls(spark, name)
 
@@ -948,8 +960,6 @@ class EmbeddingIndex:
                          multiprobe_hamming: int = 0,
                          broadcast_row_cap: int | None = None,
                          bucket_cap: int | None = 1000) -> DataFrame:
-        from pyspark.sql import Window
-
         from dlx_spark.operators import similarity
 
         p = self.params
@@ -974,17 +984,8 @@ class EmbeddingIndex:
 
         idxb = get_backend().read(self.spark, f"{self.name}_buckets")
         idxv = get_backend().read(self.spark, f"{self.name}_vecs")
-
-        if bucket_cap is None:
-            big = None
-            small_idxb = idxb
-        else:
-            big = (idxb.groupBy("band", "bucket")
-                   .agg(F.count(F.lit(1)).alias("_n"))
-                   .filter(F.col("_n") > int(bucket_cap))
-                   .select("band", "bucket"))
-            small_idxb = idxb.join(F.broadcast(big), ["band", "bucket"],
-                                   "left_anti")
+        small_idxb, big = _split_overcap(idxb, ["band", "bucket"],
+                                         bucket_cap)
 
         cands = (small_idxb.join(probe_keys, ["band", "bucket"])
                  .select(F.col("id").alias("corpus_id"), "batch_id")
@@ -1000,50 +1001,26 @@ class EmbeddingIndex:
             .select("corpus_id", "batch_id", "cosine"))
 
         if big is not None:
-            # mega-buckets: sort corpus + batch members together in
-            # (osig, id) order; each batch vector is verified against
-            # the nearest corpus row on each side (however far — the
-            # ignorenulls scan skips interleaved batch rows) PLUS any
-            # corpus rows within CHAIN_WINDOW union positions, so up to
-            # a few closer-in-projection foreign corpus rows cannot
-            # hide the true match.  Linear output; a true near-dup
+            # mega-buckets: each batch vector is verified against its
+            # nearest corpus neighbors in ordering-signature order
+            # (``_chain_probe_pairs``) — linear output; a true near-dup
             # sorts within ε of its match on the continuous projection.
             # (Multiprobe edges INTO a mega-bucket are dropped — the
             # m × probe-row expansion is the blow-up the cap prevents.)
-            CW = similarity.CHAIN_WINDOW
-            mega_c = (idxb.join(F.broadcast(big), ["band", "bucket"],
-                                "left_semi")
+            mega_c = (idxb.join(big, ["band", "bucket"], "left_semi")
                       .join(idxv, "id")
-                      .select("band", "bucket", "id", "vec", "osig",
-                              F.lit(True).alias("is_corpus")))
-            mega_b = (bb.join(F.broadcast(big), ["band", "bucket"],
-                              "left_semi")
+                      .select("band", "bucket", "id", "osig",
+                              F.col("vec").alias("pay")))
+            mega_b = (bb.join(big, ["band", "bucket"], "left_semi")
                       .join(bvecs, "id")
-                      .select("band", "bucket", "id", "vec", "osig",
-                              F.lit(False).alias("is_corpus")))
-            u = mega_c.unionByName(mega_b)
-            w = Window.partitionBy("band", "bucket").orderBy(
-                "osig", "id", "is_corpus")
-            cstruct = F.when(F.col("is_corpus"),
-                             F.struct(F.col("id").alias("cid"),
-                                      F.col("vec").alias("cvec")))
-            neighbors = [
-                F.last(cstruct, ignorenulls=True).over(
-                    w.rowsBetween(Window.unboundedPreceding, -1)),
-                F.first(cstruct, ignorenulls=True).over(
-                    w.rowsBetween(1, Window.unboundedFollowing)),
-            ] + [F.lag(cstruct, k).over(w) for k in range(1, CW + 1)] \
-              + [F.lead(cstruct, k).over(w) for k in range(1, CW + 1)]
+                      .select("band", "bucket", "id", "osig",
+                              F.col("vec").alias("pay")))
             chain = (
-                u.withColumn("_cands", F.array_compact(F.array(*neighbors)))
-                .filter(~F.col("is_corpus"))
-                .select(F.col("id").alias("batch_id"),
-                        F.col("vec").alias("pvec"),
-                        F.explode("_cands").alias("c"))
-                .select("batch_id", "pvec",
-                        F.col("c.cid").alias("corpus_id"),
-                        F.col("c.cvec").alias("cvec"))
-                .distinct()
+                _chain_probe_pairs(mega_c, mega_b, ["band", "bucket"],
+                                   order="osig")
+                .select("corpus_id", "batch_id",
+                        F.col("pay_a").alias("cvec"),
+                        F.col("pay_b").alias("pvec"))
                 .withColumn("cosine", similarity.pairwise_cosine_expr())
                 .filter(F.col("cosine") >= threshold)
                 .select("corpus_id", "batch_id", "cosine"))
@@ -1062,7 +1039,6 @@ class EmbeddingIndex:
         replay guard keys on the LAST-written table (_vecs), so a crash
         between the writes at worst duplicates band rows (probe dedups
         candidates; compact physically drops them)."""
-        p = self.params
         rows = vecs if vecs is not None else self._batch_vecs(batch_survivors)
         if if_absent:
             existing = get_backend().read(self.spark,
@@ -1070,8 +1046,8 @@ class EmbeddingIndex:
             rows = rows.join(existing, "id", "left_anti")
         rows = rows.localCheckpoint(eager=True)
         get_backend().append(self._band_keys(rows), f"{self.name}_buckets",
-                             "bucket", p["n_buckets"])
-        get_backend().append(rows, f"{self.name}_vecs", "id", p["n_buckets"])
+                             "bucket")
+        get_backend().append(rows, f"{self.name}_vecs", "id")
 
     def dedup_batch(self, batch: DataFrame, threshold: float = 0.9,
                     multiprobe_hamming: int = 0,
@@ -1087,31 +1063,20 @@ class EmbeddingIndex:
         from dlx_spark.operators import similarity
 
         p = self.params
-        id_col = p["id_col"]
-        # ONE vector/ordering pass feeds probe, intra dedup, and append
-        bvecs = self._batch_vecs(batch).localCheckpoint(eager=True)
-        vs_corpus = self._probe_with_vecs(bvecs, threshold,
-                                          multiprobe_hamming,
-                                          bucket_cap=bucket_cap)
-        if replay_safe:
-            own = batch.select(F.col(id_col).alias("corpus_id"))
-            vs_corpus = vs_corpus.join(own, "corpus_id", "left_anti")
-        drop = vs_corpus.select(F.col("batch_id").alias("_dup")).distinct()
-        remaining = batch.join(drop, F.col(id_col) == F.col("_dup"), "left_anti")
-
-        def _vecs_of(rows: DataFrame) -> DataFrame:
-            return bvecs.join(rows.select(F.col(id_col).alias("id")),
-                              "id", "left_semi")
-
-        rem = _vecs_of(remaining)
         masks = (similarity.multiprobe_masks(p["n_planes"],
                                              multiprobe_hamming)
                  if multiprobe_hamming else None)
-        intra = (similarity.cosine_pairs_from_keys(
-            self._band_keys(rem), rem, threshold, bucket_cap, masks)
-            .select("id_a", "id_b"))
-        clean = dedup.dedup_near(remaining, intra, id_col).localCheckpoint(eager=True)
-        self.append(clean, if_absent=replay_safe, vecs=_vecs_of(clean))
+        # ONE vector/ordering pass feeds probe, intra dedup, and append
+        bvecs = self._batch_vecs(batch).localCheckpoint(eager=True)
+        clean, vecs = _dedup_increment(
+            batch, p["id_col"], bvecs,
+            self._probe_with_vecs(bvecs, threshold, multiprobe_hamming,
+                                  bucket_cap=bucket_cap),
+            lambda rows: similarity.cosine_pairs_from_keys(
+                self._band_keys(rows), rows, threshold, bucket_cap, masks)
+            .select("id_a", "id_b"),
+            replay_safe)
+        self.append(clean, if_absent=replay_safe, vecs=vecs)
         return clean
 
     def drop(self) -> None:
@@ -1143,35 +1108,33 @@ class SegmentIndex:
         self.params = _read_meta(spark, name)
 
     def compact(self) -> None:
-        _compact_table(self.spark, f"{self.name}_segments", "digest",
-                       self.params["n_buckets"])
+        _compact_table(self.spark, f"{self.name}_segments", "digest")
 
     @classmethod
     def create_empty(cls, spark: SparkSession, name: str,
                      text_col: str = "text", id_col: str = "doc_id",
-                     unit_words: int = 10, normalize: bool = True,
-                     n_buckets: int = 32) -> "SegmentIndex":
+                     unit_words: int = 10,
+                     normalize: bool = True) -> "SegmentIndex":
         """An empty index: the stream-ingest shape, where every corpus
         batch (including the first) flows through ``dedup_batch``."""
         if unit_words < 1:
             raise ValueError("unit_words must be >= 1")
         empty = spark.createDataFrame(
             [], "digest string, keep_id long")
-        get_backend().write(empty, f"{name}_segments", "digest", n_buckets)
+        get_backend().write(empty, f"{name}_segments", "digest")
         _write_meta(spark, name, {
             "text_col": text_col, "id_col": id_col,
-            "unit_words": unit_words, "normalize": normalize,
-            "n_buckets": n_buckets})
+            "unit_words": unit_words, "normalize": normalize})
         return cls(spark, name)
 
     @classmethod
     def create(cls, df: DataFrame, name: str, text_col: str = "text",
                id_col: str = "doc_id", unit_words: int = 10,
-               normalize: bool = True, n_buckets: int = 32) -> "SegmentIndex":
+               normalize: bool = True) -> "SegmentIndex":
         """Index an existing corpus: every distinct segment digest with
         the id of the document whose copy was kept."""
         idx = cls.create_empty(df.sparkSession, name, text_col, id_col,
-                               unit_words, normalize, n_buckets)
+                               unit_words, normalize)
         from dlx_spark.operators import spans as _spans
         segs = _spans.word_segments(df, text_col, id_col, unit_words,
                                     normalize)
@@ -1179,7 +1142,7 @@ class SegmentIndex:
                    .select(F.md5("seg_text").alias("digest"),
                            F.col("doc_id").cast("long").alias("keep_id"))
                    .groupBy("digest").agg(F.min("keep_id").alias("keep_id")))
-        get_backend().append(digests, f"{name}_segments", "digest", n_buckets)
+        get_backend().append(digests, f"{name}_segments", "digest")
         return idx
 
     def _batch_segments(self, batch: DataFrame) -> DataFrame:
@@ -1224,7 +1187,6 @@ class SegmentIndex:
                     if_absent: bool = False) -> None:
         """Record kept segments' digests.  ``if_absent=True`` makes the
         append idempotent for at-least-once replays."""
-        p = self.params
         digests = (kept_segments
                    .select("digest",
                            F.col("doc_id").cast("long").alias("keep_id"))
@@ -1234,8 +1196,7 @@ class SegmentIndex:
                 self.spark, f"{self.name}_segments").select("digest")
             digests = digests.join(existing, "digest", "left_anti") \
                              .localCheckpoint(eager=True)
-        get_backend().append(digests, f"{self.name}_segments", "digest",
-                             p["n_buckets"])
+        get_backend().append(digests, f"{self.name}_segments", "digest")
 
     def dedup_batch(self, batch: DataFrame,
                     replay_safe: bool = False) -> DataFrame:
@@ -1287,31 +1248,29 @@ class SpanIndex:
         self.params = _read_meta(spark, name)
 
     def compact(self) -> None:
-        _compact_table(self.spark, f"{self.name}_windows", "digest",
-                       self.params["n_buckets"])
+        _compact_table(self.spark, f"{self.name}_windows", "digest")
 
     @classmethod
     def create_empty(cls, spark: SparkSession, name: str,
                      text_col: str = "text", id_col: str = "doc_id",
-                     k: int = 15, normalize: bool = True,
-                     n_buckets: int = 32) -> "SpanIndex":
+                     k: int = 15, normalize: bool = True) -> "SpanIndex":
         if k < 1:
             raise ValueError("k must be >= 1")
         empty = spark.createDataFrame(
             [], "digest string, keep_id long, keep_pos long")
-        get_backend().write(empty, f"{name}_windows", "digest", n_buckets)
+        get_backend().write(empty, f"{name}_windows", "digest")
         _write_meta(spark, name, {
             "text_col": text_col, "id_col": id_col, "k": k,
-            "normalize": normalize, "n_buckets": n_buckets})
+            "normalize": normalize})
         return cls(spark, name)
 
     @classmethod
     def create(cls, df: DataFrame, name: str, text_col: str = "text",
                id_col: str = "doc_id", k: int = 15,
-               normalize: bool = True, n_buckets: int = 32) -> "SpanIndex":
+               normalize: bool = True) -> "SpanIndex":
         """Index an existing corpus's windows (first occurrences)."""
         idx = cls.create_empty(df.sparkSession, name, text_col, id_col,
-                               k, normalize, n_buckets)
+                               k, normalize)
         from dlx_spark.operators import spans as _spans
         wins = _spans.word_windows(df, text_col, id_col, k, normalize)
         firsts = (wins.groupBy("digest")
@@ -1319,7 +1278,7 @@ class SpanIndex:
                   .select("digest",
                           F.col("_f.doc_id").cast("long").alias("keep_id"),
                           F.col("_f.pos").cast("long").alias("keep_pos")))
-        get_backend().append(firsts, f"{name}_windows", "digest", n_buckets)
+        get_backend().append(firsts, f"{name}_windows", "digest")
         return idx
 
     def _cut_and_fresh(self, batch: DataFrame,
@@ -1368,14 +1327,12 @@ class SpanIndex:
                       if_absent: bool = False) -> None:
         """Record a batch's fresh window digests (first occurrences).
         ``if_absent=True`` makes replays idempotent."""
-        p = self.params
         if if_absent:
             existing = get_backend().read(
                 self.spark, f"{self.name}_windows").select("digest")
             firsts = firsts.join(existing, "digest", "left_anti") \
                            .localCheckpoint(eager=True)
-        get_backend().append(firsts, f"{self.name}_windows", "digest",
-                             p["n_buckets"])
+        get_backend().append(firsts, f"{self.name}_windows", "digest")
 
     def dedup_batch(self, batch: DataFrame,
                     replay_safe: bool = False) -> DataFrame:

@@ -9,12 +9,16 @@ setting here is chosen to also hold on a large multi-executor cluster:
 - UTC session timezone so timestamp semantics match a UTC-naive oracle
   (DuckDB) and are stable across machines
 - Arrow enabled for the (rare) pandas-UDF paths
+
+A session that is already running is returned as it is: none of these
+settings is applied to it.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import SparkSession
 
 
@@ -23,6 +27,14 @@ def get_spark(app_name: str = "dlx_spark",
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+    # a running session is returned untouched: its runtime conf belongs
+    # to whoever started it (a script entry called in-process must not
+    # reset the caller's shuffle partitions, which also size keyed
+    # index writes)
+    try:
+        running = SparkSession.active()
+    except PySparkRuntimeError:
+        running = None
     # make the package importable in Python workers regardless of the
     # caller's cwd (UDF closures reference dlx_spark modules); on a real
     # cluster ship the package with --py-files instead.  The env var only
@@ -31,7 +43,7 @@ def get_spark(app_name: str = "dlx_spark",
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     existing = os.environ.get("PYTHONPATH", "")
     if pkg_root not in existing.split(os.pathsep):
-        if SparkSession.getActiveSession() is not None:
+        if running is not None:
             import warnings
             warnings.warn(
                 "get_spark(): a SparkSession already exists, so its Python "
@@ -40,6 +52,8 @@ def get_spark(app_name: str = "dlx_spark",
                 "get_spark() first, or ship the package with --py-files.")
         else:
             os.environ["PYTHONPATH"] = (pkg_root + os.pathsep + existing) if existing else pkg_root
+    if running is not None:
+        return running
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -55,12 +55,16 @@ vacuum clears remnants once a later commit exists.  Under an
 atomic-publish scheme the same state can only be external corruption
 and stays a loud error.
 
-Layout: segments are written clustered (hash-repartitioned by the
-bucket key and sorted within partitions) so file sizes stay balanced,
-but the tables are path-based, so there is no catalog bucketing
-metadata and a join against an index table that is too big to
-broadcast shuffles both sides.  (Delta/Iceberg recover the clustering
-benefit with their own mechanisms — Z-ordering, sorted manifests.)
+Layout: a keyed segment is written clustered — hash-repartitioned by
+its key with no fixed partition count, so AQE coalesces the shuffle to
+the data's size (a few-hundred-row append is one file per table, a
+large write splits at ``spark.sql.adaptive.advisoryPartitionSizeInBytes``)
+— and sorted by key within each file for row-group pruning.  The tables
+are path-based, so there is no catalog bucketing metadata and a join
+against an index table that is too big to broadcast shuffles both
+sides.  (Delta/Iceberg recover the clustering benefit with their own
+mechanisms — Z-ordering, sorted manifests.)  Manifests written before
+this layout carry an ``n_buckets`` field; it is never read.
 
 ``vacuum`` is safe to run concurrently with writers under its default
 retention horizon (``min_age_seconds``): in-flight commits — a data
@@ -270,7 +274,7 @@ class VersionedTableBackend:
     # ---------------------------------------------------- segment I/O
 
     def _write_segment(self, spark: SparkSession, df: DataFrame,
-                       table: str, key: str | None, n_buckets: int | None,
+                       table: str, key: str | None,
                        partition_cols: list[str] | None = None,
                        sort_col: str | None = None) -> str:
         # the table name keeps segment directories legible (executed
@@ -296,21 +300,19 @@ class VersionedTableBackend:
              .parquet(self._data_dir(spark, seg)))
             return seg
         if key is not None:
-            # clustered layout: balanced, sorted segment files (no
-            # catalog bucket metadata — see the module docstring)
-            df = df.repartition(n_buckets, F.col(key)) \
-                   .sortWithinPartitions(key)
+            # clustered layout: hash-clustered by key and sorted, with
+            # no partition count, so AQE sizes the files to the data
+            # (see the module docstring)
+            df = df.repartition(F.col(key)).sortWithinPartitions(key)
         df.write.parquet(self._data_dir(spark, seg))
         return seg
 
     @staticmethod
-    def _layout(df: DataFrame, key: str | None,
-                n_buckets: int | None, segments: list[str],
+    def _layout(df: DataFrame, key: str | None, segments: list[str],
                 partition_cols: list[str] | None = None,
                 extra: dict | None = None,
                 sort_col: str | None = None) -> dict:
-        doc = {"segments": segments, "key": key, "n_buckets": n_buckets,
-               "schema": df.schema.json()}
+        doc = {"segments": segments, "key": key, "schema": df.schema.json()}
         if partition_cols:
             doc["partition_cols"] = list(partition_cols)
         if sort_col:
@@ -327,43 +329,41 @@ class VersionedTableBackend:
 
     # ------------------------------------------- tableio interface
 
-    def write(self, df: DataFrame, table: str, key: str,
-              n_buckets: int) -> None:
+    def write(self, df: DataFrame, table: str, key: str) -> None:
         spark = df.sparkSession
-        seg = self._write_segment(spark, df, table, key, n_buckets)
+        seg = self._write_segment(spark, df, table, key)
         self._commit(spark, table,
-                     lambda latest: self._layout(df, key, n_buckets, [seg]))
+                     lambda latest: self._layout(df, key, [seg]))
 
-    def append(self, df: DataFrame, table: str, key: str,
-               n_buckets: int) -> None:
+    def append(self, df: DataFrame, table: str, key: str) -> None:
         spark = df.sparkSession
-        seg = self._write_segment(spark, df, table, key, n_buckets)
+        seg = self._write_segment(spark, df, table, key)
         n_after = 0
 
         def payload(latest):
             nonlocal n_after
             segs = (latest["segments"] if latest else []) + [seg]
             n_after = len(segs)
-            return self._layout(df, key, n_buckets, segs)
+            return self._layout(df, key, segs)
 
         self._commit(spark, table, payload)
         self._maybe_auto_compact(spark, table, n_after)
 
     def write_plain(self, df: DataFrame, table: str) -> None:
         spark = df.sparkSession
-        seg = self._write_segment(spark, df, table, None, None)
+        seg = self._write_segment(spark, df, table, None)
         self._commit(spark, table,
-                     lambda latest: self._layout(df, None, None, [seg]))
+                     lambda latest: self._layout(df, None, [seg]))
 
     def write_partitioned(self, df: DataFrame, table: str,
                           partition_cols: list[str], *,
                           extra: dict | None = None,
                           sort_col: str | None = None) -> None:
         spark = df.sparkSession
-        seg = self._write_segment(spark, df, table, None, None,
+        seg = self._write_segment(spark, df, table, None,
                                   partition_cols, sort_col=sort_col)
         self._commit(spark, table,
-                     lambda latest: self._layout(df, None, None, [seg],
+                     lambda latest: self._layout(df, None, [seg],
                                                  partition_cols, extra,
                                                  sort_col=sort_col))
 
@@ -395,7 +395,7 @@ class VersionedTableBackend:
         segment file is reclaimed by vacuum, like a failed replace's
         stage."""
         spark = df.sparkSession
-        seg = self._write_segment(spark, df, table, None, None,
+        seg = self._write_segment(spark, df, table, None,
                                   partition_cols, sort_col=sort_col)
         n_after = 0
 
@@ -429,7 +429,7 @@ class VersionedTableBackend:
             else:
                 keep = latest.get("extra") if latest else extra
             sc = sort_col or (latest.get("sort_col") if latest else None)
-            return self._layout(df, None, None, segs, partition_cols,
+            return self._layout(df, None, segs, partition_cols,
                                 keep, sort_col=sc)
 
         self._commit(spark, table, payload)
@@ -545,7 +545,7 @@ class VersionedTableBackend:
                        if k not in ("version", "id")}
                 doc["extra"] = out
                 return doc
-            return {"segments": [], "key": None, "n_buckets": None,
+            return {"segments": [], "key": None,
                     "schema": T.StructType([]).json(), "extra": out}
 
         self._commit(spark, table, payload)
@@ -626,7 +626,7 @@ class VersionedTableBackend:
 
         def payload(latest):
             doc = {k: manifest[k] for k in
-                   ("segments", "key", "n_buckets", "schema")}
+                   ("segments", "key", "schema")}
             for opt in ("partition_cols", "extra"):
                 if opt in manifest:
                     doc[opt] = manifest[opt]
@@ -714,7 +714,7 @@ class VersionedTableBackend:
                     f"committed after the caller's snapshot — re-derive "
                     f"the stage and retry")
             doc = {k: manifest[k] for k in
-                   ("segments", "key", "n_buckets", "schema")}
+                   ("segments", "key", "schema")}
             for opt in ("partition_cols", "extra", "sort_col"):
                 if opt in manifest:
                     doc[opt] = manifest[opt]
@@ -834,7 +834,7 @@ class VersionedTableBackend:
                                    extra=manifest.get("extra"),
                                    sort_col=manifest.get("sort_col"))
         elif manifest.get("key") is not None:
-            self.write(df, staged, manifest["key"], manifest["n_buckets"])
+            self.write(df, staged, manifest["key"])
         else:
             self.write_plain(df, staged)
         self.replace(spark, table, staged, token=token, on_conflict="merge")
@@ -864,7 +864,7 @@ class VersionedTableBackend:
 
         ``token`` must be the segment list of the very manifest ``df``
         was derived from (same rule as ``compact_segments``); layout
-        metadata (key / buckets / schema / partition_cols / extra) is
+        metadata (key / schema / partition_cols / extra) is
         taken from the HEAD at commit time — this is a data-layout
         operation that never changes table geometry or metadata."""
         if not 0 <= keep < len(token):
@@ -873,7 +873,6 @@ class VersionedTableBackend:
         spark = df.sparkSession
         _, manifest = self._latest(spark, table)
         seg = self._write_segment(spark, df, table, manifest.get("key"),
-                                  manifest.get("n_buckets"),
                                   manifest.get("partition_cols"),
                                   sort_col=sort_col
                                   or manifest.get("sort_col"))
@@ -886,7 +885,7 @@ class VersionedTableBackend:
                     f"was replaced (not appended to) after the caller's "
                     f"snapshot — re-derive the fold and retry")
             doc = {k: latest[k] for k in
-                   ("segments", "key", "n_buckets", "schema")}
+                   ("segments", "key", "schema")}
             for opt in ("partition_cols", "extra", "sort_col"):
                 if opt in latest:
                     doc[opt] = latest[opt]

@@ -61,7 +61,7 @@ def main() -> None:
                                    auto_compact_at=4)
         for day in range(10):
             ab.append(docs.withColumn("doc_id", F.col("doc_id") + day * 100),
-                      "daily_feed", "doc_id", 4)
+                      "daily_feed", "doc_id")
         print(f"10 appends, auto_compact_at=4 -> "
               f"{len(ab.snapshot_token(spark, 'daily_feed'))} segment(s), "
               f"{ab.auto_compactions} auto-compaction(s)")
@@ -69,7 +69,7 @@ def main() -> None:
         # ---- 3. object store, single driver
         fsio.set_commit_scheme(fsio.SingleDriverCASScheme())
         be3 = VersionedTableBackend(root=os.path.join(workdir, "vroot_s3"))
-        be3.write(docs, "single_driver_table", "doc_id", 4)
+        be3.write(docs, "single_driver_table", "doc_id")
         print(f"single-driver CAS commit: "
               f"v{be3.versions(spark, 'single_driver_table')[-1]}")
 
@@ -77,9 +77,9 @@ def main() -> None:
         cas = fsio.FileExternalCAS(os.path.join(workdir, "cas_service"))
         fsio.set_commit_scheme(fsio.ExternalCASScheme(cas))
         be4 = VersionedTableBackend(root=os.path.join(workdir, "vroot_mp"))
-        be4.write(docs, "multi_driver_table", "doc_id", 4)
+        be4.write(docs, "multi_driver_table", "doc_id")
         be4.append(docs.withColumn("doc_id", F.col("doc_id") + 9000),
-                   "multi_driver_table", "doc_id", 4)
+                   "multi_driver_table", "doc_id")
         print(f"external-CAS commits: versions "
               f"{be4.versions(spark, 'multi_driver_table')} "
               f"(every publish recoverable from the claim record)")

@@ -141,7 +141,7 @@ def test_versioned_backend_refuses_scheme_without_cas(spark, be):
     The backend must refuse loudly at the first commit, not corrupt."""
     fsio.set_commit_scheme(fsio.NonAtomicRenameScheme())
     with pytest.raises(RuntimeError, match="put-if-absent"):
-        be.write(_df(spark, [(1, "a")]), "t_refuse", "id", 1)
+        be.write(_df(spark, [(1, "a")]), "t_refuse", "id")
     assert not be.exists(spark, "t_refuse")
 
 
@@ -186,18 +186,18 @@ def test_versioned_lifecycle_on_cas_scheme_over_object_store(spark, be):
     isolation, replace, provenance-proved recovery, time travel — on
     copy+delete rename with the driver-local CAS installed."""
     fsio.set_commit_scheme(fsio.SingleDriverCASScheme())
-    be.write(_df(spark, [(1, "a"), (2, "b")]), "t_cas", "id", 2)
+    be.write(_df(spark, [(1, "a"), (2, "b")]), "t_cas", "id")
     snap = be.read(spark, "t_cas")
-    be.append(_df(spark, [(3, "c")]), "t_cas", "id", 2)
+    be.append(_df(spark, [(3, "c")]), "t_cas", "id")
     assert snap.count() == 2
     assert be.read(spark, "t_cas").count() == 3
     assert [r["id"] for r in be.read_version(spark, "t_cas", 1)
             .orderBy("id").collect()] == [1, 2]
     # replace + crashed-drop recovery, all through copy+delete publishes
-    be.write(_df(spark, [(9, "staged")]), "t_cas__stage", "id", 1)
+    be.write(_df(spark, [(9, "staged")]), "t_cas__stage", "id")
     be.replace(spark, "t_cas", "t_cas__stage")
     assert [r["id"] for r in be.read(spark, "t_cas").collect()] == [9]
-    be.write(_df(spark, [(10, "s2")]), "t_cas__stage", "id", 1)
+    be.write(_df(spark, [(10, "s2")]), "t_cas__stage", "id")
     be.recover_replace(spark, "t_cas", "t_cas__stage")
     assert [r["id"] for r in be.read(spark, "t_cas").collect()] == [10]
     assert not be.exists(spark, "t_cas__stage")
@@ -209,12 +209,12 @@ def test_concurrent_appends_race_through_cas_scheme(spark, be):
     plus commit retries must serialize every append with no lost
     update — the exact scenario the raw scheme loses."""
     fsio.set_commit_scheme(fsio.SingleDriverCASScheme())
-    be.write(_df(spark, [(0, "base")]), "t_casrace", "id", 2)
+    be.write(_df(spark, [(0, "base")]), "t_casrace", "id")
     errors = []
 
     def appender(i):
         try:
-            be.append(_df(spark, [(i, f"t{i}")]), "t_casrace", "id", 2)
+            be.append(_df(spark, [(i, f"t{i}")]), "t_casrace", "id")
         except Exception as exc:
             errors.append((i, exc))
 
@@ -238,13 +238,13 @@ def test_torn_manifest_skipped_and_number_never_reused(spark, be):
     remnant with a live commit); time travel to it errors clearly; and
     vacuum clears it once aged."""
     fsio.set_commit_scheme(fsio.SingleDriverCASScheme())
-    be.write(_df(spark, [(1, "v1")]), "t_torn", "id", 1)
+    be.write(_df(spark, [(1, "v1")]), "t_torn", "id")
 
     # crash the NEXT commit mid-copy of its manifest publish
     fsio.set_commit_scheme(fsio.SingleDriverCASScheme(
         fault=crash_at("mid_copy")))
     with pytest.raises(SimulatedCrash):
-        be.append(_df(spark, [(2, "v2")]), "t_torn", "id", 1)
+        be.append(_df(spark, [(2, "v2")]), "t_torn", "id")
     fsio.set_commit_scheme(fsio.SingleDriverCASScheme())
 
     assert be.versions(spark, "t_torn") == [1, 2]       # remnant listed
@@ -255,7 +255,7 @@ def test_torn_manifest_skipped_and_number_never_reused(spark, be):
     with pytest.raises(FileNotFoundError, match="torn"):
         be.read_version(spark, "t_torn", 2)
     # the writer's retry lands ABOVE the remnant and merges the v1 head
-    be.append(_df(spark, [(2, "v2")]), "t_torn", "id", 1)
+    be.append(_df(spark, [(2, "v2")]), "t_torn", "id")
     assert be.versions(spark, "t_torn") == [1, 2, 3]
     assert sorted(r["id"] for r in be.read(spark, "t_torn").collect()) \
         == [1, 2]
@@ -270,7 +270,7 @@ def test_torn_manifest_stays_loud_on_atomic_scheme(spark, be):
     """Under the default atomic-rename scheme a torn committed manifest
     can only be EXTERNAL corruption — skipping it would silently roll
     the table back, so it must keep raising (the round-5 contract)."""
-    be.write(_df(spark, [(1, "a")]), "t_loud", "id", 1)
+    be.write(_df(spark, [(1, "a")]), "t_loud", "id")
     fsio.write_text(spark, be._manifest_path(spark, "t_loud", 2), "{ torn")
     with pytest.raises(ValueError, match="corrupt manifest"):
         be.read(spark, "t_loud")
@@ -293,7 +293,7 @@ def test_index_end_to_end_on_cas_scheme(spark, be):
         (10, "the quick brown fox jumps over the lazy dog today"),
         (11, "novel content that matches nothing in the corpus"),
     ], "doc_id long, text string")
-    idx = MinHashIndex.create(corpus, "t_cas_mh", n_buckets=2)
+    idx = MinHashIndex.create(corpus, "t_cas_mh")
     clean = sorted(r["doc_id"] for r in
                    idx.dedup_batch(batch, threshold=0.7).collect())
     assert clean == [11]
@@ -318,8 +318,8 @@ def test_vacuum_retention_protects_inflight_commit(spark, be):
     resume = threading.Event()
 
     class PausingBackend(VersionedTableBackend):
-        def _write_segment(self, spark, df, table, key, n_buckets):
-            seg = super()._write_segment(spark, df, table, key, n_buckets)
+        def _write_segment(self, spark, df, table, key):
+            seg = super()._write_segment(spark, df, table, key)
             if getattr(self, "_pause_once", False):
                 self._pause_once = False
                 paused.set()
@@ -329,7 +329,7 @@ def test_vacuum_retention_protects_inflight_commit(spark, be):
     def run_race(min_age):
         pb = PausingBackend(root=be._root)
         table = f"t_vac_{int(min_age)}"
-        pb.write(_df(spark, [(1, "base")]), table, "id", 1)
+        pb.write(_df(spark, [(1, "base")]), table, "id")
         paused.clear()
         resume.clear()
         pb._pause_once = True
@@ -337,7 +337,7 @@ def test_vacuum_retention_protects_inflight_commit(spark, be):
 
         def appender():
             try:
-                pb.append(_df(spark, [(2, "inflight")]), table, "id", 1)
+                pb.append(_df(spark, [(2, "inflight")]), table, "id")
             except Exception as exc:
                 err.append(exc)
 
@@ -366,7 +366,7 @@ def test_vacuum_retention_keeps_young_tmp_manifests(spark, be):
     """A writer's not-yet-renamed .tmp manifest must survive a
     concurrent vacuum under the default horizon (zero horizon clears
     it — the quiesced-maintenance fast path)."""
-    be.write(_df(spark, [(1, "a")]), "t_tmp", "id", 1)
+    be.write(_df(spark, [(1, "a")]), "t_tmp", "id")
     tmp = fsio.join(be._table_dir(spark, "t_tmp"), ".tmp-live.json")
     fsio.write_text(spark, tmp, '{"half": ')
     be.vacuum(spark, keep_last=1)                       # default horizon
@@ -396,7 +396,7 @@ def test_streaming_ingest_composes_all_three_seams(spark, be, tmp_path):
             f"tok{i}_{j}" for j in range(20)))
         for i in range(20)
     ], "doc_id long, text string")
-    MinHashIndex.create(corpus, "t_cas_stream", n_buckets=4)
+    MinHashIndex.create(corpus, "t_cas_stream")
     v0 = be.versions(spark, "t_cas_stream_sigs")[-1]
 
     indir = tmp_path / "in"
@@ -489,7 +489,7 @@ def test_versioned_protocol_randomized_crash_fuzz(spark, be):
         acknowledged: set[int] = set()
         may_surface: set[int] = set()       # durable-but-unacknowledged
         next_id = 0
-        be.write(_df(spark, [(next_id, "base")]), table, "id", 2)
+        be.write(_df(spark, [(next_id, "base")]), table, "id")
         acknowledged.add(next_id)
         last_version = be.versions(spark, table)[-1]
         for _ in range(10):
@@ -500,7 +500,7 @@ def test_versioned_protocol_randomized_crash_fuzz(spark, be):
                 fault_plan["event"] = rng.choice(events)
                 try:
                     be.append(_df(spark, [(next_id, f"row {next_id}")]),
-                              table, "id", 2)
+                              table, "id")
                     acknowledged.add(next_id)
                 except SimulatedCrash as exc:
                     # post-copy crashes leave a COMPLETE manifest: the
@@ -560,14 +560,14 @@ def test_external_cas_commit_crash_states_all_recoverable(spark, be, ecas):
         fsio.set_commit_scheme(scheme)
         try:
             with pytest.raises(SimulatedCrash):
-                b.write(_df(spark, [(1, event)]), "t_ecas", "id", 1)
+                b.write(_df(spark, [(1, event)]), "t_ecas", "id")
             # the acquire happened -> the commit is visible and whole
             scheme.fault = lambda e, p: None
             assert [r["text"] for r in b.read(spark, "t_ecas").collect()] \
                 == [event]
             assert b.versions(spark, "t_ecas") == [1]
             # and the table keeps accepting commits afterwards
-            b.append(_df(spark, [(2, "after")]), "t_ecas", "id", 1)
+            b.append(_df(spark, [(2, "after")]), "t_ecas", "id")
             assert b.read(spark, "t_ecas").count() == 2
         finally:
             fsio.set_commit_scheme(fsio.HadoopRenameScheme())
@@ -630,14 +630,14 @@ def test_versioned_lifecycle_and_thread_race_on_external_cas(
     the scheme whose contract extends to multiple drivers."""
     fsio.set_commit_scheme(fsio.ExternalCASScheme(ecas))
     be = VersionedTableBackend(root=str(tmp_path / "vroot_ecas"))
-    be.write(_df(spark, [(0, "seed")]), "t_race", "id", 2)
+    be.write(_df(spark, [(0, "seed")]), "t_race", "id")
     errors = []
 
     def appender(i):
         try:
             for j in range(3):
                 be.append(_df(spark, [(i * 100 + j, f"w{i}")]),
-                          "t_race", "id", 2)
+                          "t_race", "id")
         except Exception as exc:   # noqa: BLE001
             errors.append(repr(exc))
 
@@ -676,7 +676,7 @@ def test_streaming_ingest_auto_compaction_bounds_segments(
             f"tok{i}_{j}" for j in range(20)))
         for i in range(10)
     ], "doc_id long, text string")
-    MinHashIndex.create(corpus, "t_ac_stream", n_buckets=4)
+    MinHashIndex.create(corpus, "t_ac_stream")
 
     indir = tmp_path / "in"
     indir.mkdir()
@@ -719,9 +719,9 @@ def test_external_cas_claims_released_on_vacuum_and_drop(
 
     fsio.set_commit_scheme(fsio.ExternalCASScheme(ecas))
     be = VersionedTableBackend(root=str(tmp_path / "vroot_claims"))
-    be.write(_df(spark, [(1, "v1")]), "t_claims", "id", 1)
-    be.append(_df(spark, [(2, "v2")]), "t_claims", "id", 1)
-    be.append(_df(spark, [(3, "v3")]), "t_claims", "id", 1)
+    be.write(_df(spark, [(1, "v1")]), "t_claims", "id")
+    be.append(_df(spark, [(2, "v2")]), "t_claims", "id")
+    be.append(_df(spark, [(3, "v3")]), "t_claims", "id")
 
     def n_claims():
         return sum(1 for f in _os.listdir(ecas.directory)
@@ -736,7 +736,7 @@ def test_external_cas_claims_released_on_vacuum_and_drop(
     # the recreate-livelock regression: drop, then write the SAME name
     be.drop(spark, "t_claims")
     assert n_claims() == 0
-    be.write(_df(spark, [(9, "fresh")]), "t_claims", "id", 1)
+    be.write(_df(spark, [(9, "fresh")]), "t_claims", "id")
     assert [r["id"] for r in be.read(spark, "t_claims").collect()] == [9]
     assert be.versions(spark, "t_claims") == [1]
 
@@ -769,7 +769,7 @@ def test_external_cas_protocol_randomized_crash_fuzz(spark, tmp_path, ecas):
         acknowledged: set[int] = set()
         will_surface: set[int] = set()
         next_id = 0
-        be.write(_df(spark, [(next_id, "base")]), table, "id", 2)
+        be.write(_df(spark, [(next_id, "base")]), table, "id")
         acknowledged.add(next_id)
         last_version = be.versions(spark, table)[-1]
         for _ in range(8):
@@ -780,7 +780,7 @@ def test_external_cas_protocol_randomized_crash_fuzz(spark, tmp_path, ecas):
                 fault_plan["event"] = rng.choice(events)
                 try:
                     be.append(_df(spark, [(next_id, f"row {next_id}")]),
-                              table, "id", 2)
+                              table, "id")
                     acknowledged.add(next_id)
                 except SimulatedCrash:
                     # the acquire preceded every injectable event: the
@@ -1006,7 +1006,7 @@ def test_vacuum_tmp_sweep_upholds_claim_tmp_invariant(
     scheme = fsio.ExternalCASScheme(ecas)
     fsio.set_commit_scheme(scheme)
     be = VersionedTableBackend(root=str(tmp_path / "vroot_inv"))
-    be.write(_df(spark, [(1, "a")]), "t_inv", "id", 1)
+    be.write(_df(spark, [(1, "a")]), "t_inv", "id")
     tdir = be._table_dir(spark, "t_inv")
     retained = [n for n in fsio.listdir(spark, tdir)
                 if n.startswith(".tmp-")]
@@ -1051,8 +1051,8 @@ def test_local_fs_default_scheme_warns_once(spark, tmp_path):
     be = VersionedTableBackend(root=str(tmp_path / "vroot_warn"))
     with w.catch_warnings(record=True) as rec:
         w.simplefilter("always")
-        be.write(_df(spark, [(1, "a")]), "t_warn", "id", 1)
-        be.append(_df(spark, [(2, "b")]), "t_warn", "id", 1)
+        be.write(_df(spark, [(1, "a")]), "t_warn", "id")
+        be.append(_df(spark, [(2, "b")]), "t_warn", "id")
     hits = [r for r in rec
             if issubclass(r.category, fsio.LocalFSMultiDriverWarning)]
     assert len(hits) == 1
@@ -1062,7 +1062,7 @@ def test_local_fs_default_scheme_warns_once(spark, tmp_path):
     fsio.set_commit_scheme(fsio.SingleDriverCASScheme())
     with w.catch_warnings(record=True) as rec2:
         w.simplefilter("always")
-        be.append(_df(spark, [(3, "c")]), "t_warn", "id", 1)
+        be.append(_df(spark, [(3, "c")]), "t_warn", "id")
     assert [r for r in rec2
             if issubclass(r.category, fsio.LocalFSMultiDriverWarning)] == []
 

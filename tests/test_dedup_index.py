@@ -73,6 +73,11 @@ def _tbl(spark, name):
     return tableio.get_backend().read(spark, name)
 
 
+def _segments(spark, name):
+    """Segments in an index table's latest manifest."""
+    return len(tableio.get_backend().latest_manifest(spark, name)["segments"])
+
+
 @pytest.mark.slow
 def test_minhash_probe_equals_full_cross_pairs(spark, split_corpus):
     full_df, corpus, batch = split_corpus
@@ -116,6 +121,42 @@ def test_minhash_dedup_batch_matches_full_survivor_rule(spark, split_corpus):
         reprobe = idx.probe(one.withColumn("doc_id", F.col("doc_id") + 100000),
                             threshold=0.99)
         assert reprobe.count() >= 1
+    finally:
+        idx.drop()
+
+
+def _jobs(spark, fn):
+    """(Spark jobs ``fn`` ran, its result), counted through a job
+    group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed asynchronously by the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_minhash_dedup_batch_job_budget(spark, split_corpus):
+    """One increment runs the corpus probe once (its drop set is pinned
+    before the intra-batch pass and the survivor rule read it), and its
+    append writes one file per index table."""
+    _, corpus, batch = split_corpus
+    idx = MinHashIndex.create(corpus, "t_mh_budget")
+    try:
+        n, clean = _jobs(spark, lambda: idx.dedup_batch(batch))
+        assert n <= 68, n
+        assert clean.count() > 0
+        be = tableio.get_backend()
+        for t in ("t_mh_budget_sigs", "t_mh_budget_bands"):
+            manifest = be.latest_manifest(spark, t)
+            assert len(manifest["segments"]) == 2
+            assert len(be.segment_df(spark, manifest, 1).inputFiles()) == 1
     finally:
         idx.drop()
 
@@ -334,24 +375,27 @@ def test_streaming_neardedup_crash_window(spark, split_corpus, tmp_path):
 
 @pytest.mark.slow
 def test_compact_folds_appended_files(spark, split_corpus):
-    """Repeated appends accrete files; compact() folds each table to one
-    file per bucket with identical probe results, and a compaction
-    stage committed before a crash is published on reopen."""
+    """Repeated appends accrete segments; compact() folds each table to
+    one segment holding fewer files than before, with identical probe
+    results, and a compaction stage committed before a crash is
+    published on reopen."""
     _, corpus, batch = split_corpus
-    idx = MinHashIndex.create(corpus, "t_mh_cpt", n_buckets=4)
+    idx = MinHashIndex.create(corpus, "t_mh_cpt")
     try:
         for i in range(3):
             idx.append(batch.withColumn(
                 "doc_id", F.col("doc_id") + (1000 * (i + 1))))
-        before_files = len(_tbl(spark, "t_mh_cpt_sigs").inputFiles())
-        assert before_files > 4
+        tables = ("t_mh_cpt_sigs", "t_mh_cpt_bands")
+        assert all(_segments(spark, t) == 4 for t in tables)
+        before_files = {t: len(_tbl(spark, t).inputFiles()) for t in tables}
         clone = corpus.limit(1).withColumn("doc_id", F.lit(777_777).cast("long"))
         before = {(r["corpus_id"], r["batch_id"])
                   for r in idx.probe(clone, 0.99).collect()}
 
         idx.compact()
-        assert len(_tbl(spark, "t_mh_cpt_sigs").inputFiles()) == 4
-        assert len(_tbl(spark, "t_mh_cpt_bands").inputFiles()) == 4
+        for t in tables:
+            assert _segments(spark, t) == 1
+            assert len(_tbl(spark, t).inputFiles()) < before_files[t]
         after = {(r["corpus_id"], r["batch_id"])
                  for r in idx.probe(clone, 0.99).collect()}
         assert after == before and len(after) >= 1
@@ -359,7 +403,7 @@ def test_compact_folds_appended_files(spark, split_corpus):
         # simulate the crash window: the stage committed, the swap not
         be = tableio.get_backend()
         be.write(_tbl(spark, "t_mh_cpt_sigs"), "t_mh_cpt_sigs__compact",
-                 "id", 4)
+                 "id")
         reopened = MinHashIndex(spark, "t_mh_cpt")  # recovers on open
         assert be.exists(spark, "t_mh_cpt_sigs")
         assert not be.exists(spark, "t_mh_cpt_sigs__compact")
@@ -379,14 +423,13 @@ def test_append_crash_between_band_and_sig_writes(spark, split_corpus):
     from dlx_spark.operators import dedup
 
     _, corpus, batch = split_corpus
-    idx = MinHashIndex.create(corpus, "t_mh_crash2", n_buckets=4)
+    idx = MinHashIndex.create(corpus, "t_mh_crash2")
     try:
         # simulate the crashed first attempt: bands written, sigs not
         p = idx.params
         sigs = idx._batch_sigs(batch)
         tableio.get_backend().append(dedup.band_buckets(sigs, p["bands"]),
-                                     "t_mh_crash2_bands", "bucket",
-                                     p["n_buckets"])
+                                     "t_mh_crash2_bands", "bucket")
 
         # the replayed append must still index the batch fully
         idx.append(batch, if_absent=True)
@@ -401,10 +444,12 @@ def test_append_crash_between_band_and_sig_writes(spark, split_corpus):
         assert len(keys) == len(set(keys)) and len(keys) >= 1
 
         # compaction folds the duplicates away
+        before_files = len(_tbl(spark, "t_mh_crash2_bands").inputFiles())
         idx.compact()
         bands = _tbl(spark, "t_mh_crash2_bands")
         assert bands.count() == bands.distinct().count()
-        assert len(bands.inputFiles()) == 4
+        assert _segments(spark, "t_mh_crash2_bands") == 1
+        assert len(bands.inputFiles()) < before_files
     finally:
         idx.drop()
 
@@ -476,7 +521,7 @@ def test_capped_mega_bucket_does_not_link_dissimilar_colliders(spark):
 @pytest.mark.slow
 def test_simhash_index_probe_equals_full_cross_pairs(spark, split_corpus):
     full_df, corpus, batch = split_corpus
-    idx = SimHashIndex.create(corpus, "t_sh_idx", n_buckets=4)
+    idx = SimHashIndex.create(corpus, "t_sh_idx")
     try:
         got = {(r["corpus_id"], r["batch_id"], r["hamming"])
                for r in idx.probe(batch, max_hamming=3).collect()}
@@ -500,8 +545,10 @@ def test_simhash_index_probe_equals_full_cross_pairs(spark, split_corpus):
         one = clean.limit(1).withColumn("doc_id", F.lit(555_555).cast("long"))
         assert idx.probe(one, max_hamming=0).count() >= 1
 
+        before_files = len(_tbl(spark, "t_sh_idx_fps").inputFiles())
         idx.compact()
-        assert len(_tbl(spark, "t_sh_idx_fps").inputFiles()) == 4
+        assert _segments(spark, "t_sh_idx_fps") == 1
+        assert len(_tbl(spark, "t_sh_idx_fps").inputFiles()) < before_files
 
         # the 4-band pigeonhole cannot guarantee recall beyond hamming
         # 3: larger thresholds must refuse, not silently miss pairs
@@ -578,7 +625,7 @@ def test_probe_broadcast_gate(spark, split_corpus):
     explicit hint survives it, the ungated path doesn't — and the
     results are identical either way (VERDICT r3 item 2's contract)."""
     _, corpus, batch = split_corpus
-    idx = MinHashIndex.create(corpus, "t_mh_gate", n_buckets=4)
+    idx = MinHashIndex.create(corpus, "t_mh_gate")
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -605,7 +652,7 @@ def test_probe_broadcast_gate(spark, split_corpus):
 
 def test_simhash_probe_broadcast_gate(spark, split_corpus):
     _, corpus, batch = split_corpus
-    idx = SimHashIndex.create(corpus, "t_sh_gate", n_buckets=4)
+    idx = SimHashIndex.create(corpus, "t_sh_gate")
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -631,7 +678,7 @@ def test_reader_during_compaction(spark, split_corpus):
     resolution after compact() sees the complete, identical
     post-image."""
     _, corpus, _ = split_corpus
-    idx = MinHashIndex.create(corpus, "t_mh_reader", n_buckets=4)
+    idx = MinHashIndex.create(corpus, "t_mh_reader")
     try:
         before = _tbl(spark, "t_mh_reader_sigs")
         want = {r["id"] for r in before.select("id").collect()}
@@ -921,7 +968,7 @@ def test_embedding_rebucket_regrows_plane_count(spark, emb_split):
         # live geometry still answers identically
         be = tableio.get_backend()
         be.write(_tbl(spark, "t_emb_rb_buckets").limit(3),
-                 "t_emb_rb_buckets__rebucket", "bucket", 32)
+                 "t_emb_rb_buckets__rebucket", "bucket")
         reopened = EmbeddingIndex(spark, "t_emb_rb")
         assert not be.exists(spark, "t_emb_rb_buckets__rebucket")
         assert reopened.params["n_planes"] == 8
@@ -934,8 +981,7 @@ def test_embedding_rebucket_regrows_plane_count(spark, emb_split):
         keys2 = similarity.banded_lsh_keys(
             _tbl(spark, "t_emb_rb_vecs"), 1, 4, p2["seed"],
             vec_col="vec", id_col="id", dim=dim)
-        be.write(keys2, "t_emb_rb_buckets__rebucket", "bucket",
-                 p2["n_buckets"])
+        be.write(keys2, "t_emb_rb_buckets__rebucket", "bucket")
         be.write_plain(spark.createDataFrame([(jsonlib.dumps(p2),)],
                                              "params string"),
                        "t_emb_rb_meta__rebucket")
@@ -968,7 +1014,7 @@ def test_minhash_probe_mega_bucket_cap_stays_linear(spark):
         [(100, base),
          (101, "completely unrelated novel content about spark internals")],
         "doc_id long, text string")
-    idx = MinHashIndex.create(corpus, "t_mh_mega", n_buckets=2)
+    idx = MinHashIndex.create(corpus, "t_mh_mega")
     try:
         capped = idx.probe(batch, threshold=0.8, bucket_cap=5)
         uncapped = idx.probe(batch, threshold=0.8, bucket_cap=None)
@@ -1003,7 +1049,7 @@ def test_simhash_probe_mega_bucket_cap_stays_linear(spark):
         [(100, base),
          (101, " ".join(f"other{i} thing{i}" for i in range(30)))],
         "doc_id long, text string")
-    idx = SimHashIndex.create(corpus, "t_sh_mega", n_buckets=2)
+    idx = SimHashIndex.create(corpus, "t_sh_mega")
     try:
         capped = idx.probe(batch, max_hamming=3, bucket_cap=5)
         uncapped = idx.probe(batch, max_hamming=3, bucket_cap=None)
@@ -1056,8 +1102,7 @@ def test_rebucket_intent_discards_stage_when_append_raced_the_crash(spark):
         keys = similarity.banded_lsh_keys(
             be.read(spark, f"{name}_vecs"), p["bands"], 5, p["seed"],
             vec_col="vec", id_col="id", dim=6)
-        be.write(keys, f"{name}_buckets__rebucket", "bucket",
-                 p["n_buckets"])
+        be.write(keys, f"{name}_buckets__rebucket", "bucket")
         be.write_plain(spark.createDataFrame(
             [(jsonlib.dumps(token),)], "token string"),
             f"{name}_rebucket_intent")
@@ -1125,8 +1170,7 @@ def test_rebucket_recovery_after_lost_staged_drop(spark, tmp_path):
         keys = similarity.banded_lsh_keys(
             be.read(spark, f"{name}_vecs"), p["bands"], 5, p["seed"],
             vec_col="vec", id_col="id", dim=6)
-        be.write(keys, f"{name}_buckets__rebucket", "bucket",
-                 p["n_buckets"])
+        be.write(keys, f"{name}_buckets__rebucket", "bucket")
         be.write_plain(spark.createDataFrame(
             [(jsonlib.dumps(token),)], "token string"),
             f"{name}_rebucket_intent")
@@ -1144,8 +1188,7 @@ def test_rebucket_recovery_after_lost_staged_drop(spark, tmp_path):
         # the swap commit itself (replace minus its staged drop):
         sm = vbe._latest(spark, "t_rbmw2_buckets__rebucket")[1]
         vbe._commit(spark, "t_rbmw2_buckets", lambda latest: {
-            **{k: sm[k] for k in ("segments", "key", "n_buckets",
-                                  "schema")},
+            **{k: sm[k] for k in ("segments", "key", "schema")},
             "source": ["t_rbmw2_buckets__rebucket", sm["id"]]})
         rolled2 = EmbeddingIndex(spark, "t_rbmw2")
         assert rolled2.params["n_planes"] == 5        # meta published
@@ -1363,15 +1406,13 @@ def test_index_lifecycle_registers_no_catalog_tables(spark, split_corpus,
         (SegmentIndex, {"unit_words": 5}), (SpanIndex, {"k": 5}),
     ]
     for cls, kw in text_families:
-        idx = cls.create(corpus, f"t_nocat_{cls.__name__.lower()}",
-                         n_buckets=2, **kw)
+        idx = cls.create(corpus, f"t_nocat_{cls.__name__.lower()}", **kw)
         assert tables() == before, cls.__name__
         idx.dedup_batch(batch).collect()
         idx.compact()
         assert tables() == before, cls.__name__
         idx.drop()
-    emb = EmbeddingIndex.create(vcorpus, "t_nocat_emb", n_planes=4,
-                                n_buckets=2)
+    emb = EmbeddingIndex.create(vcorpus, "t_nocat_emb", n_planes=4)
     emb.dedup_batch(vbatch).collect()
     emb.compact()
     assert tables() == before

@@ -57,7 +57,7 @@ from pyspark.sql import functions as F
 for i in range(n):
     df = spark.range(1).select(
         F.lit("worker").alias("writer"), F.lit(i).alias("seq"))
-    be.append(df, "%s", "writer", 2)
+    be.append(df, "%s", "writer")
 print("WORKER_DONE races_lost=%%d" %% be.races_lost, flush=True)
 """ % TABLE
 
@@ -70,7 +70,7 @@ def test_two_driver_processes_no_lost_update(spark, tmp_path):
     be = VersionedTableBackend(root=root)
     seed = spark.range(1).select(F.lit("main").alias("writer"),
                                  F.lit(-1).alias("seq"))
-    be.write(seed, TABLE, "writer", 2)          # version 1
+    be.write(seed, TABLE, "writer")          # version 1
 
     script = tmp_path / "worker.py"
     script.write_text(_WORKER)
@@ -95,7 +95,7 @@ def test_two_driver_processes_no_lost_update(spark, tmp_path):
         for i in range(N_EACH):
             df = spark.range(1).select(F.lit("main").alias("writer"),
                                        F.lit(i).alias("seq"))
-            be.append(df, TABLE, "writer", 2)
+            be.append(df, TABLE, "writer")
         out, _ = proc.communicate(timeout=240)
         assert proc.returncode == 0, f"worker failed:\n{out[-3000:]}"
         assert "WORKER_DONE" in out
@@ -135,7 +135,7 @@ from pyspark.sql import functions as F
 for i in range(n):
     df = spark.range(1).select(
         F.lit("worker").alias("writer"), F.lit(i).alias("seq"))
-    be.append(df, "%s", "writer", 2)
+    be.append(df, "%s", "writer")
 print("WORKER_DONE races_lost=%%d" %% be.races_lost, flush=True)
 """ % TABLE
 
@@ -159,7 +159,7 @@ def test_two_driver_processes_external_cas_no_lost_update(spark, tmp_path):
         be = VersionedTableBackend(root=root)
         seed = spark.range(1).select(F.lit("main").alias("writer"),
                                      F.lit(-1).alias("seq"))
-        be.write(seed, TABLE, "writer", 2)      # version 1
+        be.write(seed, TABLE, "writer")      # version 1
 
         script = tmp_path / "worker_ecas.py"
         script.write_text(_WORKER_ECAS)
@@ -183,7 +183,7 @@ def test_two_driver_processes_external_cas_no_lost_update(spark, tmp_path):
             for i in range(N_EACH):
                 df = spark.range(1).select(F.lit("main").alias("writer"),
                                            F.lit(i).alias("seq"))
-                be.append(df, TABLE, "writer", 2)
+                be.append(df, TABLE, "writer")
             out, _ = proc.communicate(timeout=240)
             assert proc.returncode == 0, f"worker failed:\n{out[-3000:]}"
             assert "WORKER_DONE" in out

@@ -64,7 +64,7 @@ def test_reclaim_unit(spark, tmp_path):
     be = VersionedTableBackend(root=str(tmp_path / "vroot"))
     seg, tmp = _plant_orphan(spark, be, "t_orph_unit")
     be.write(spark.range(3).select(F.col("id").alias("k")),
-             "t_orph_live", "k", 2)
+             "t_orph_live", "k")
     live_seg = be.latest_manifest(spark, "t_orph_live")["segments"][0]
     deleted = be.vacuum(spark, min_age_seconds=0)
     assert deleted == [seg.rsplit("/", 1)[-1]]
@@ -145,11 +145,11 @@ def test_append_creates_over_orphan(spark):
     _plant_orphan(spark, be, "t_orph_app")
     try:
         be.append(spark.range(10).select(F.col("id").alias("k")),
-                  "t_orph_app", "k", 4)
+                  "t_orph_app", "k")
         assert be.read(spark, "t_orph_app").count() == 10
         # and a SECOND append onto the now-committed table appends
         be.append(spark.range(10).select(F.col("id").alias("k")),
-                  "t_orph_app", "k", 4)
+                  "t_orph_app", "k")
         assert be.read(spark, "t_orph_app").count() == 20
     finally:
         be.drop(spark, "t_orph_app")

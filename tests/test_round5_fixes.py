@@ -320,7 +320,7 @@ def test_streaming_sink_tolerates_torn_attempt_marker(spark, tmp_path):
     docs = [(1, "alpha beta gamma delta epsilon zeta eta theta"),
             (2, "totally different content with its own words here")]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    MinHashIndex.create(df.limit(0), "torn_sink_idx", n_buckets=4)
+    MinHashIndex.create(df.limit(0), "torn_sink_idx")
     out = str(tmp_path / "torn_out")
     try:
         fn = streaming.make_neardedup_batch_fn("torn_sink_idx", out)
@@ -386,17 +386,17 @@ def test_table_backend_seam_routes_every_index_operation(spark):
             super().__init__()
             self.calls = []
 
-        def write(self, df, table, key, n_buckets):
+        def write(self, df, table, key):
             self.calls.append(("write", table))
-            super().write(df, table, key, n_buckets)
+            super().write(df, table, key)
 
         def write_plain(self, df, table):
             self.calls.append(("write_plain", table))
             super().write_plain(df, table)
 
-        def append(self, df, table, key, n_buckets):
+        def append(self, df, table, key):
             self.calls.append(("append", table))
-            super().append(df, table, key, n_buckets)
+            super().append(df, table, key)
 
         def read(self, spark, table):
             self.calls.append(("read", table))
@@ -423,7 +423,7 @@ def test_table_backend_seam_routes_every_index_operation(spark):
     rec = Recording()
     tableio.set_backend(rec)
     try:
-        idx = DigestIndex.create(docs, "t_seam_idx", n_buckets=2)
+        idx = DigestIndex.create(docs, "t_seam_idx")
         clean = sorted(r["doc_id"] for r in
                        idx.dedup_batch(batch).collect())
         assert clean == [11]
@@ -461,7 +461,7 @@ def test_tableio_replace_is_reentrant_after_drop_crash(spark, tmp_path):
     be.write_plain(spark.createDataFrame([(2,)], "x long"), "t_reent__stage")
     be.replace(spark, "t_reent", "t_reent__stage")   # drop "crashes"
     assert be.exists(spark, "t_reent__stage")
-    be.append(df, "t_reent", "x", 1)
+    be.append(df, "t_reent", "x")
     VersionedTableBackend(root=be._root).recover_replace(
         spark, "t_reent", "t_reent__stage")
     assert sorted(r["x"] for r in be.read(spark, "t_reent").collect()) \

@@ -1094,6 +1094,27 @@ def test_failed_record_commit_leaves_no_scratch(store, monkeypatch):
     bib1.set("245", "a", "Never lands", auth_control=False)
     with pytest.raises(RuntimeError, match="injected"):
         store.commit([bib1], now=T1)
+    for prefix in ("stage_*", "_stage_*"):
+        assert fsio.glob(store.spark, fsio.join(store.root, prefix)) == []
+
+
+def test_vacuum_reclaims_aged_old_prefix_scratch(store):
+    """Scratch stages named ``_stage_*`` (the name earlier releases
+    used) are swept by vacuum once aged, like ``stage_*`` ones."""
+    import os
+    import time
+
+    from dlx_spark import fsio
+
+    old = os.path.join(store.root, "_stage_commit_bibs.deadbeef")
+    os.makedirs(old)
+    with open(os.path.join(old, "part-0.parquet"), "wb") as fh:
+        fh.write(b"orphan")
+    aged = time.time() - 7200
+    os.utime(os.path.join(old, "part-0.parquet"), (aged, aged))
+    os.utime(old, (aged, aged))
+    store.vacuum()
+    assert not os.path.exists(old)
     assert fsio.glob(store.spark, fsio.join(store.root, "_stage_*")) == []
 
 
@@ -1120,15 +1141,7 @@ def test_rebuild_derived_script_refreshes_linked_values(store):
     a1.set("150", "a", "Rebuilt heading", auth_control=False)
     store.commit([a1], user="editor", now=T1, update_attached=False)
     n_versions = store.history_df("bib").count()
-    spark = store.spark
-    # the script starts its session through get_spark, which re-applies
-    # the package's runtime configuration to the running session
-    partitions = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        assert rebuild_derived.run(
-            ["--store", store.root, "--type", "bib"]) == 0
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    assert rebuild_derived.run(["--store", store.root, "--type", "bib"]) == 0
     for row in store.bibs().collect():
         sub = [s for f in row["datafields"] if f["tag"] == "650"
                for s in f["subfields"]][0]

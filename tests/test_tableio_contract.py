@@ -36,14 +36,14 @@ def _df(spark, rows, schema="id long, text string"):
 def test_contract_write_read_append_exists_drop(spark, be):
     df = _df(spark, [(1, "a"), (2, "b")])
     assert not be.exists(spark, "c_t1")
-    be.write(df, "c_t1", "id", 2)
+    be.write(df, "c_t1", "id")
     assert be.exists(spark, "c_t1")
     assert sorted(r["id"] for r in be.read(spark, "c_t1").collect()) == [1, 2]
-    be.append(_df(spark, [(3, "c")]), "c_t1", "id", 2)
+    be.append(_df(spark, [(3, "c")]), "c_t1", "id")
     assert sorted(r["id"] for r in be.read(spark, "c_t1").collect()) \
         == [1, 2, 3]
     # overwrite replaces, not merges
-    be.write(_df(spark, [(9, "z")]), "c_t1", "id", 2)
+    be.write(_df(spark, [(9, "z")]), "c_t1", "id")
     assert [r["id"] for r in be.read(spark, "c_t1").collect()] == [9]
     be.drop(spark, "c_t1")
     assert not be.exists(spark, "c_t1")
@@ -76,8 +76,8 @@ def test_contract_write_plain_and_schema_change(spark, be):
 
 
 def test_contract_replace_publishes_stage_and_consumes_it(spark, be):
-    be.write(_df(spark, [(1, "old")]), "c_t4", "id", 2)
-    be.write(_df(spark, [(2, "new"), (3, "new")]), "c_t4__stage", "id", 2)
+    be.write(_df(spark, [(1, "old")]), "c_t4", "id")
+    be.write(_df(spark, [(2, "new"), (3, "new")]), "c_t4__stage", "id")
     be.replace(spark, "c_t4", "c_t4__stage")
     assert sorted(r["id"] for r in be.read(spark, "c_t4").collect()) \
         == [2, 3]
@@ -90,11 +90,11 @@ def test_contract_replace_publishes_stage_and_consumes_it(spark, be):
 
 @pytest.mark.slow
 def test_contract_replace_fail_detects_raced_commit(spark, be):
-    be.write(_df(spark, [(1, "base")]), "c_t5", "id", 2)
+    be.write(_df(spark, [(1, "base")]), "c_t5", "id")
     token = be.snapshot_token(spark, "c_t5")
-    be.write(be.read(spark, "c_t5"), "c_t5__stage", "id", 2)
+    be.write(be.read(spark, "c_t5"), "c_t5__stage", "id")
     # a commit lands after the token was captured
-    be.append(_df(spark, [(2, "raced")]), "c_t5", "id", 2)
+    be.append(_df(spark, [(2, "raced")]), "c_t5", "id")
     with pytest.raises(tableio.ConcurrentWriteError):
         be.replace(spark, "c_t5", "c_t5__stage", token=token,
                    on_conflict="fail")
@@ -106,8 +106,8 @@ def test_contract_replace_fail_detects_raced_commit(spark, be):
 
 @pytest.mark.slow
 def test_contract_replace_rejects_bad_on_conflict(spark, be):
-    be.write(_df(spark, [(1, "x")]), "c_t6", "id", 2)
-    be.write(_df(spark, [(1, "x")]), "c_t6__stage", "id", 2)
+    be.write(_df(spark, [(1, "x")]), "c_t6", "id")
+    be.write(_df(spark, [(1, "x")]), "c_t6__stage", "id")
     with pytest.raises(ValueError, match="on_conflict"):
         be.replace(spark, "c_t6", "c_t6__stage", on_conflict="clobber")
     be.drop(spark, "c_t6__stage")
@@ -121,11 +121,11 @@ def test_contract_snapshot_token_none_for_missing_table(spark, be):
 def test_contract_replace_merge_carries_raced_append(spark, be):
     """Merge-on-conflict: appends that land between the token capture
     and the swap survive the rewrite (the compaction contract)."""
-    be.write(_df(spark, [(1, "a"), (1, "a")]), "c_t7", "id", 2)
+    be.write(_df(spark, [(1, "a"), (1, "a")]), "c_t7", "id")
     token = be.snapshot_token(spark, "c_t7")
     # the 'rewrite': dedup of the snapshot the token describes
-    be.write(be.read(spark, "c_t7").distinct(), "c_t7__stage", "id", 2)
-    be.append(_df(spark, [(2, "raced")]), "c_t7", "id", 2)
+    be.write(be.read(spark, "c_t7").distinct(), "c_t7__stage", "id")
+    be.append(_df(spark, [(2, "raced")]), "c_t7", "id")
     be.replace(spark, "c_t7", "c_t7__stage", token=token,
                on_conflict="merge")
     assert sorted((r["id"], r["text"]) for r in

@@ -30,23 +30,64 @@ def _df(spark, rows, schema="id long, text string"):
 
 def test_write_read_roundtrip_and_clustered_segments(spark, be):
     df = _df(spark, [(i, f"doc {i}") for i in range(20)])
-    be.write(df, "t1", "id", 4)
+    be.write(df, "t1", "id")
     got = sorted(r["id"] for r in be.read(spark, "t1").collect())
     assert got == list(range(20))
     assert be.exists(spark, "t1")
-    # exactly one committed manifest; segment written clustered into
-    # n_buckets files (hash-repartitioned by key)
+    # exactly one committed manifest; the clustered segment is sized
+    # to its rows: AQE coalesces 20 rows into one key-sorted file
     assert be.versions(spark, "t1") == [1]
     seg = be._read_manifest(spark, "t1", 1)["segments"][0]
-    parts = [n for n in fsio.listdir(spark, be._data_dir(spark, seg))
-             if n.startswith("part-")]
-    assert len(parts) == 4
+    assert _part_ids(spark, be, seg) == [list(range(20))]
+
+
+def _part_ids(spark, be, seg):
+    """The ``id`` column of each data file of a segment, in file order."""
+    import pyarrow.parquet as pq
+
+    seg_dir = be._data_dir(spark, seg)
+    return [pq.read_table(fsio.join(seg_dir, n))
+            .column("id").to_pylist()
+            for n in sorted(fsio.listdir(spark, seg_dir))
+            if n.startswith("part-")]
+
+
+def test_keyed_append_of_few_rows_writes_one_file(spark, be):
+    """A small append is one data file, whatever the shuffle partition
+    count: no fixed bucket count forces a file per bucket."""
+    be.write(_df(spark, [(i, "base") for i in range(50)]), "t_small", "id")
+    be.append(_df(spark, [(7, "c"), (3, "a"), (5, "b")]), "t_small", "id")
+    seg = be.latest_manifest(spark, "t_small")["segments"][-1]
+    assert _part_ids(spark, be, seg) == [[3, 5, 7]]
+
+
+def test_keyed_write_splits_at_advisory_size_and_sorts_files(spark, be):
+    """Segment sizing is AQE's, not a coalesce to one file: under a
+    lowered advisory partition size a keyed write spreads over several
+    files, each holding its own keys sorted."""
+    confs = {"spark.sql.adaptive.advisoryPartitionSizeInBytes": "16k",
+             "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1k"}
+    saved = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        be.write(spark.range(5000).select(
+            (F.col("id") * 7919 % 5000).alias("id"),
+            F.repeat(F.lit("x"), 40).alias("text")), "t_split", "id")
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    seg = be.latest_manifest(spark, "t_split")["segments"][0]
+    files = _part_ids(spark, be, seg)
+    assert len(files) > 1
+    assert all(ids == sorted(ids) for ids in files)
+    assert sorted(i for ids in files for i in ids) == list(range(5000))
 
 
 def test_append_and_snapshot_isolation(spark, be):
-    be.write(_df(spark, [(1, "a"), (2, "b")]), "t2", "id", 2)
+    be.write(_df(spark, [(1, "a"), (2, "b")]), "t2", "id")
     snapshot = be.read(spark, "t2")        # resolved BEFORE the append
-    be.append(_df(spark, [(3, "c")]), "t2", "id", 2)
+    be.append(_df(spark, [(3, "c")]), "t2", "id")
     # the old DataFrame is pinned to version-1 segments
     assert snapshot.count() == 2
     assert be.read(spark, "t2").count() == 3
@@ -54,9 +95,9 @@ def test_append_and_snapshot_isolation(spark, be):
 
 
 def test_overwrite_keeps_old_reader_valid_and_time_travel(spark, be):
-    be.write(_df(spark, [(1, "old")]), "t3", "id", 1)
+    be.write(_df(spark, [(1, "old")]), "t3", "id")
     old_reader = be.read(spark, "t3")
-    be.write(_df(spark, [(2, "new"), (3, "new")]), "t3", "id", 1)
+    be.write(_df(spark, [(2, "new"), (3, "new")]), "t3", "id")
     # reader across the overwrite: still the old rows, no dead files
     assert [r["id"] for r in old_reader.collect()] == [1]
     assert old_reader.count() == 1
@@ -72,15 +113,14 @@ def test_commit_retries_after_losing_version_race(spark, be):
     """Optimistic concurrency: a competing writer's manifest landing
     first makes the commit re-read the head and take the next number —
     for appends, re-merging the fresh head's segment list."""
-    be.write(_df(spark, [(1, "a")]), "t4", "id", 1)
+    be.write(_df(spark, [(1, "a")]), "t4", "id")
     # simulate a concurrent append committing version 2 under us:
     # write its segment through the backend, then hand-commit a manifest
-    other_seg = be._write_segment(spark, _df(spark, [(2, "b")]), "t4", "id",
-                                  1)
+    other_seg = be._write_segment(spark, _df(spark, [(2, "b")]), "t4", "id")
     m1 = be._read_manifest(spark, "t4", 1)
     fsio.write_text(spark, be._manifest_path(spark, "t4", 2), json.dumps(
         {**m1, "version": 2, "segments": m1["segments"] + [other_seg]}))
-    be.append(_df(spark, [(3, "c")]), "t4", "id", 1)
+    be.append(_df(spark, [(3, "c")]), "t4", "id")
     assert be.versions(spark, "t4") == [1, 2, 3]
     # the append merged onto the competing head: all three rows live
     assert sorted(r["id"] for r in be.read(spark, "t4").collect()) == [1, 2, 3]
@@ -94,12 +134,12 @@ def test_concurrent_appends_from_threads_lose_no_updates(spark, be):
     the final table and every commit got its own version."""
     import threading
 
-    be.write(_df(spark, [(0, "base")]), "tc", "id", 2)
+    be.write(_df(spark, [(0, "base")]), "tc", "id")
     errors = []
 
     def appender(i):
         try:
-            be.append(_df(spark, [(i, f"thread {i}")]), "tc", "id", 2)
+            be.append(_df(spark, [(i, f"thread {i}")]), "tc", "id")
         except Exception as exc:  # surfaced after join
             errors.append((i, exc))
 
@@ -116,7 +156,7 @@ def test_concurrent_appends_from_threads_lose_no_updates(spark, be):
 
 
 def test_torn_tmp_ignored_and_corrupt_manifest_raises(spark, be):
-    be.write(_df(spark, [(1, "a")]), "t5", "id", 1)
+    be.write(_df(spark, [(1, "a")]), "t5", "id")
     # a crashed writer leaves only an invisible tmp — reads unaffected
     fsio.write_text(spark, fsio.join(be._table_dir(spark, "t5"),
                                      ".tmp-dead.json"), "{ torn")
@@ -129,8 +169,8 @@ def test_torn_tmp_ignored_and_corrupt_manifest_raises(spark, be):
 
 
 def test_replace_is_atomic_and_recovery_is_provenance_proved(spark, be):
-    be.write(_df(spark, [(1, "live")]), "t6", "id", 1)
-    be.write(_df(spark, [(2, "staged"), (3, "staged")]), "t6__stage", "id", 1)
+    be.write(_df(spark, [(1, "live")]), "t6", "id")
+    be.write(_df(spark, [(2, "staged"), (3, "staged")]), "t6__stage", "id")
     stage_commit_id = be._latest(spark, "t6__stage")[1]["id"]
     live_reader = be.read(spark, "t6")
     be.replace(spark, "t6", "t6__stage")
@@ -146,7 +186,7 @@ def test_replace_is_atomic_and_recovery_is_provenance_proved(spark, be):
     # NEW stage generation also starts at version 1 — a version-keyed
     # provenance check would wrongly match the earlier swap and discard
     # the stage (the regression the commit-id fixes)
-    be.write(_df(spark, [(4, "s2")]), "t6__stage", "id", 1)
+    be.write(_df(spark, [(4, "s2")]), "t6__stage", "id")
     be.recover_replace(spark, "t6", "t6__stage")
     assert [r["id"] for r in be.read(spark, "t6").collect()] == [4]
     assert not be.exists(spark, "t6__stage")
@@ -154,12 +194,12 @@ def test_replace_is_atomic_and_recovery_is_provenance_proved(spark, be):
     # crash AFTER the swap commit but before the stage drop, with a
     # later append already advancing the table: recovery must drop the
     # stage WITHOUT rolling back the append
-    be.write(_df(spark, [(5, "s3")]), "t6__stage", "id", 1)
+    be.write(_df(spark, [(5, "s3")]), "t6__stage", "id")
     sm = be._latest(spark, "t6__stage")[1]
     be._commit(spark, "t6", lambda latest: {
-        **{k: sm[k] for k in ("segments", "key", "n_buckets", "schema")},
+        **{k: sm[k] for k in ("segments", "key", "schema")},
         "source": ["t6__stage", sm["id"]]})   # the swap commit, drop lost
-    be.append(_df(spark, [(6, "later")]), "t6", "id", 1)
+    be.append(_df(spark, [(6, "later")]), "t6", "id")
     be.recover_replace(spark, "t6", "t6__stage")
     assert not be.exists(spark, "t6__stage")
     assert sorted(r["id"] for r in be.read(spark, "t6").collect()) == [5, 6]
@@ -169,11 +209,11 @@ def test_replace_merges_concurrent_append_with_token(spark, be):
     """Compaction-class replace: an append landing between the caller's
     snapshot and the swap commit must survive the swap (merged into the
     new version), not be silently dropped."""
-    be.write(_df(spark, [(1, "a"), (2, "b")]), "tm", "id", 1)
+    be.write(_df(spark, [(1, "a"), (2, "b")]), "tm", "id")
     token = be.snapshot_token(spark, "tm")
     staged = be.read(spark, "tm")          # the rewrite's source snapshot
-    be.write(staged, "tm__stage", "id", 1)
-    be.append(_df(spark, [(3, "concurrent")]), "tm", "id", 1)  # races in
+    be.write(staged, "tm__stage", "id")
+    be.append(_df(spark, [(3, "concurrent")]), "tm", "id")  # races in
     be.replace(spark, "tm", "tm__stage", token=token, on_conflict="merge")
     assert sorted(r["id"] for r in be.read(spark, "tm").collect()) == [1, 2, 3]
 
@@ -181,10 +221,10 @@ def test_replace_merges_concurrent_append_with_token(spark, be):
 def test_replace_fail_mode_raises_on_concurrent_append(spark, be):
     from dlx_spark.tableio import ConcurrentWriteError
 
-    be.write(_df(spark, [(1, "a")]), "tf", "id", 1)
+    be.write(_df(spark, [(1, "a")]), "tf", "id")
     token = be.snapshot_token(spark, "tf")
-    be.write(be.read(spark, "tf"), "tf__stage", "id", 1)
-    be.append(_df(spark, [(2, "concurrent")]), "tf", "id", 1)
+    be.write(be.read(spark, "tf"), "tf__stage", "id")
+    be.append(_df(spark, [(2, "concurrent")]), "tf", "id")
     with pytest.raises(ConcurrentWriteError):
         be.replace(spark, "tf", "tf__stage", token=token, on_conflict="fail")
     # table and stage untouched by the failed swap
@@ -200,20 +240,20 @@ def test_compaction_keeps_append_racing_the_stage_build(spark, be):
     from dlx_spark.tableio_versioned import VersionedTableBackend
 
     class RacingBackend(VersionedTableBackend):
-        def write(self, df, table, key, n_buckets):
+        def write(self, df, table, key):
             if table.endswith("__compact") and not getattr(
                     self, "_raced", False):
                 self._raced = True
                 self.append(_df(df.sparkSession, [(99, "raced")]),
-                            "tr", key, n_buckets)
-            super().write(df, table, key, n_buckets)
+                            "tr", key)
+            super().write(df, table, key)
 
     rb = RacingBackend(root=be._root)
-    rb.write(_df(spark, [(1, "a"), (1, "a"), (2, "b")]), "tr", "id", 2)
+    rb.write(_df(spark, [(1, "a"), (1, "a"), (2, "b")]), "tr", "id")
     prev = tableio.get_backend()
     tableio.set_backend(rb)
     try:
-        _compact_table(spark, "tr", "id", 2, distinct=True)
+        _compact_table(spark, "tr", "id", distinct=True)
     finally:
         tableio.set_backend(prev)
     got = sorted(r["id"] for r in rb.read(spark, "tr").collect())
@@ -234,16 +274,16 @@ def test_compaction_source_and_token_share_one_snapshot(spark, be):
             out = super()._latest(spark, table)
             if table == "tr2" and not getattr(self, "_raced", False):
                 self._raced = True
-                self.append(_df(spark, [(99, "raced")]), "tr2", "id", 2)
+                self.append(_df(spark, [(99, "raced")]), "tr2", "id")
             return out
 
     rb = RacingBackend(root=be._root)
-    rb.write(_df(spark, [(1, "a"), (2, "b")]), "tr2", "id", 2)
+    rb.write(_df(spark, [(1, "a"), (2, "b")]), "tr2", "id")
     rb._raced = False
     prev = tableio.get_backend()
     tableio.set_backend(rb)
     try:
-        _compact_table(spark, "tr2", "id", 2)
+        _compact_table(spark, "tr2", "id")
     finally:
         tableio.set_backend(prev)
     assert rb._raced
@@ -271,8 +311,8 @@ def test_rebucket_conflict_fails_clean_on_concurrent_append(spark, be):
                                   "vec_id long, embedding array<double>")
 
     class RacingBackend(VersionedTableBackend):
-        def write(self, df, table, key, n_buckets):
-            super().write(df, table, key, n_buckets)
+        def write(self, df, table, key):
+            super().write(df, table, key)
             if table.endswith("_buckets__rebucket") and not getattr(
                     self, "_raced", False):
                 self._raced = True
@@ -308,14 +348,14 @@ def test_vacuum_completes_crashed_replace_instead_of_eating_provenance(
     delete the swap-commit manifest (the only provenance) while the
     stage survives — it completes the crashed drop instead, so the next
     recover_replace is a no-op and the append is preserved."""
-    be.write(_df(spark, [(1, "live")]), "tv", "id", 1)
-    be.write(_df(spark, [(2, "staged")]), "tv__stage", "id", 1)
+    be.write(_df(spark, [(1, "live")]), "tv", "id")
+    be.write(_df(spark, [(2, "staged")]), "tv__stage", "id")
     sm = be._latest(spark, "tv__stage")[1]
     # the swap commit, with the stage drop lost to a crash
     be._commit(spark, "tv", lambda latest: {
-        **{k: sm[k] for k in ("segments", "key", "n_buckets", "schema")},
+        **{k: sm[k] for k in ("segments", "key", "schema")},
         "source": ["tv__stage", sm["id"]]})
-    be.append(_df(spark, [(3, "later")]), "tv", "id", 1)
+    be.append(_df(spark, [(3, "later")]), "tv", "id")
     be.vacuum(spark, keep_last=1, min_age_seconds=0)
     # vacuum finished the crashed drop; recovery finds nothing to do
     assert not be.exists(spark, "tv__stage")
@@ -324,8 +364,8 @@ def test_vacuum_completes_crashed_replace_instead_of_eating_provenance(
 
 
 def test_vacuum_reclaims_unreferenced_segments(spark, be):
-    be.write(_df(spark, [(1, "v1")]), "t7", "id", 1)
-    be.write(_df(spark, [(2, "v2")]), "t7", "id", 1)
+    be.write(_df(spark, [(1, "v1")]), "t7", "id")
+    be.write(_df(spark, [(2, "v2")]), "t7", "id")
     seg_v1 = be._read_manifest(spark, "t7", 1)["segments"][0]
     assert fsio.exists(spark, be._data_dir(spark, seg_v1))
     # min_age_seconds=0: the writers-quiesced fast path (the default
@@ -343,8 +383,8 @@ def test_vacuum_keeps_segments_shared_via_replace(spark, be):
     """replace() re-points the target at the stage's segments; after the
     stage's manifests are dropped, vacuum must still see the segments as
     referenced (by the target) and keep them."""
-    be.write(_df(spark, [(1, "live")]), "t8", "id", 1)
-    be.write(_df(spark, [(2, "staged")]), "t8__stage", "id", 1)
+    be.write(_df(spark, [(1, "live")]), "t8", "id")
+    be.write(_df(spark, [(2, "staged")]), "t8__stage", "id")
     be.replace(spark, "t8", "t8__stage")
     be.vacuum(spark, keep_last=1, min_age_seconds=0)
     assert [r["id"] for r in be.read(spark, "t8").collect()] == [2]
@@ -385,7 +425,7 @@ def test_minhash_index_end_to_end_on_versioned_backend(spark, be, tmp_path):
     ], "doc_id long, text string")
 
     def run(name):
-        idx = MinHashIndex.create(corpus, name, n_buckets=2)
+        idx = MinHashIndex.create(corpus, name)
         clean = sorted(r["doc_id"] for r in
                        idx.dedup_batch(batch, threshold=0.7).collect())
         idx.compact()
@@ -448,8 +488,7 @@ def test_embedding_index_rebucket_rollforward_on_versioned_backend(spark, be):
         keys = similarity.banded_lsh_keys(
             be.read(spark, "t_v_emb_vecs"), 1, 4, p_old["seed"],
             vec_col="vec", id_col="id", dim=8)
-        be.write(keys, "t_v_emb_buckets__rebucket", "bucket",
-                 p_old["n_buckets"])
+        be.write(keys, "t_v_emb_buckets__rebucket", "bucket")
         be.write_plain(spark.createDataFrame(
             [(json.dumps(p_old),)], "params string"),
             "t_v_emb_meta__rebucket")
@@ -492,7 +531,7 @@ def test_streaming_ingest_appends_through_versioned_backend(
     prev = tableio.get_backend()
     tableio.set_backend(be)
     try:
-        MinHashIndex.create(corpus, "t_v_stream", n_buckets=4)
+        MinHashIndex.create(corpus, "t_v_stream")
         v_before = be.versions(spark, "t_v_stream_sigs")[-1]
         indir = tmp_path / "in"
         indir.mkdir()
@@ -542,10 +581,10 @@ def test_digest_index_recovery_path_on_versioned_backend(spark, be):
     prev = tableio.get_backend()
     tableio.set_backend(be)
     try:
-        DigestIndex.create(corpus, "t_v_dg", n_buckets=2)
+        DigestIndex.create(corpus, "t_v_dg")
         # simulate the crash: stage the compacted copy but lose the swap
         src = be.read(spark, "t_v_dg_digests")
-        be.write(src, "t_v_dg_digests__compact", "digest", 2)
+        be.write(src, "t_v_dg_digests__compact", "digest")
         _recover_compaction(spark, "t_v_dg_digests")
         assert not be.exists(spark, "t_v_dg_digests__compact")
         idx = DigestIndex(spark, "t_v_dg")
@@ -554,7 +593,7 @@ def test_digest_index_recovery_path_on_versioned_backend(spark, be):
                 "doc_id long, text string")).collect())
         assert clean == [6]
         # and a full normal compaction still works end-to-end
-        _compact_table(spark, "t_v_dg_digests", "digest", 2)
+        _compact_table(spark, "t_v_dg_digests", "digest")
         idx.drop()
     finally:
         tableio.set_backend(prev)
@@ -640,8 +679,8 @@ def test_vacuum_age_gates_superseded_manifests_and_compactseg_stages(
     must be able to read it and retry, not die on a vanished file;
     (b) an aged crashed compact_segments stage is dropped by vacuum
     (it is always re-derivable), freeing its segments."""
-    be.write(_df(spark, [(1, "v1")]), "t_age", "id", 1)
-    be.write(_df(spark, [(2, "v2")]), "t_age", "id", 1)
+    be.write(_df(spark, [(1, "v1")]), "t_age", "id")
+    be.write(_df(spark, [(2, "v2")]), "t_age", "id")
     be.vacuum(spark, keep_last=1)                 # default horizon
     # the superseded v1 manifest is young: still present and readable
     assert be.versions(spark, "t_age") == [1, 2]
@@ -653,9 +692,9 @@ def test_vacuum_age_gates_superseded_manifests_and_compactseg_stages(
 
     # crashed compact_segments stage: stage table exists, swap never
     # committed -> aged vacuum drops it and reclaims its segment
-    be.write(_df(spark, [(1, "a")]), "t_cs", "id", 1)
-    be.append(_df(spark, [(2, "b")]), "t_cs", "id", 1)
-    be.write(be.read(spark, "t_cs"), "t_cs__compactseg", "id", 1)
+    be.write(_df(spark, [(1, "a")]), "t_cs", "id")
+    be.append(_df(spark, [(2, "b")]), "t_cs", "id")
+    be.write(be.read(spark, "t_cs"), "t_cs__compactseg", "id")
     seg = be.snapshot_token(spark, "t_cs__compactseg")[0]
     be.vacuum(spark, keep_last=1)                 # young: stage kept
     assert be.exists(spark, "t_cs__compactseg")
@@ -674,9 +713,9 @@ def test_auto_compact_bounds_segment_count_on_append_heavy_ingest(
     each threshold-crossing append folds the table inline, and the
     fold is invisible to correctness (same rows, same layout kind)."""
     ab = VersionedTableBackend(root=be._root, auto_compact_at=4)
-    ab.write(_df(spark, [(0, "seed")]), "t_ac", "id", 2)
+    ab.write(_df(spark, [(0, "seed")]), "t_ac", "id")
     for i in range(1, 11):
-        ab.append(_df(spark, [(i, f"row {i}")]), "t_ac", "id", 2)
+        ab.append(_df(spark, [(i, f"row {i}")]), "t_ac", "id")
         assert len(ab.snapshot_token(spark, "t_ac")) <= 4
     assert ab.auto_compactions >= 2
     assert sorted(r["id"] for r in ab.read(spark, "t_ac").collect()) \
@@ -698,7 +737,7 @@ def test_auto_compact_bounds_segment_count_on_append_heavy_ingest(
     # manual-only backend on the same table keeps accumulating (the
     # behavior auto_compact_at exists to bound)
     for i in range(11, 14):
-        be.append(_df(spark, [(i, f"row {i}")]), "t_ac", "id", 2)
+        be.append(_df(spark, [(i, f"row {i}")]), "t_ac", "id")
     assert len(be.snapshot_token(spark, "t_ac")) > 1
 
 
@@ -726,10 +765,10 @@ def test_auto_compact_crash_between_stage_and_swap_loses_no_data(
                             on_conflict=on_conflict)
 
     cb = CrashyBackend(root=be._root, auto_compact_at=3)
-    cb.write(_df(spark, [(0, "seed")]), "t_acc", "id", 2)
-    cb.append(_df(spark, [(1, "one")]), "t_acc", "id", 2)
+    cb.write(_df(spark, [(0, "seed")]), "t_acc", "id")
+    cb.append(_df(spark, [(1, "one")]), "t_acc", "id")
     with pytest.raises(Crash):
-        cb.append(_df(spark, [(2, "two")]), "t_acc", "id", 2)
+        cb.append(_df(spark, [(2, "two")]), "t_acc", "id")
     # (a)+(b): the append that triggered the crash is durable; the
     # table reads fine on its 3-segment head; the stage is stranded
     assert sorted(r["id"] for r in cb.read(spark, "t_acc").collect()) \
@@ -740,7 +779,7 @@ def test_auto_compact_crash_between_stage_and_swap_loses_no_data(
     cb.vacuum(spark, keep_last=1, min_age_seconds=0)
     assert not cb.exists(spark, "t_acc__compactseg")
     # ...and the next threshold-crossing append re-triggers a clean fold
-    cb.append(_df(spark, [(3, "three")]), "t_acc", "id", 2)
+    cb.append(_df(spark, [(3, "three")]), "t_acc", "id")
     assert len(cb.snapshot_token(spark, "t_acc")) == 1
     assert sorted(r["id"] for r in cb.read(spark, "t_acc").collect()) \
         == [0, 1, 2, 3]
@@ -874,8 +913,8 @@ def test_compact_segment_suffix_aborts_on_replaced_list(spark, be):
     """A raced full rewrite invalidates suffix surgery: the fold must
     abort, leaving the rewrite's result standing."""
     be.write_plain(_df(spark, [(1, "a")]), "t_sfx_race")
-    be.append(_df(spark, [(2, "b")]), "t_sfx_race", "id", 2)
-    be.append(_df(spark, [(3, "c")]), "t_sfx_race", "id", 2)
+    be.append(_df(spark, [(2, "b")]), "t_sfx_race", "id")
+    be.append(_df(spark, [(3, "c")]), "t_sfx_race", "id")
     _, manifest = be._latest(spark, "t_sfx_race")
     token = list(manifest["segments"])
     df = be.segment_df(spark, manifest, 1).unionByName(

@@ -583,12 +583,12 @@ def casgrowth_main() -> None:
             fsio.ExternalCASScheme(fsio.FileExternalCAS(cas_dir)))
         be = VersionedTableBackend(root=os.path.join(workdir, "vroot"))
         be.write(spark.createDataFrame([(0, -1)], "id long, v long"),
-                 "growth", "id", 2)
+                 "growth", "id")
         t0 = time.time()
         post_vacuum_counts = []
         for i in range(1, n_cycles + 1):
             be.append(spark.createDataFrame([(i, i)], "id long, v long"),
-                      "growth", "id", 2)
+                      "growth", "id")
             if i % 50 == 0:
                 be.vacuum(spark, keep_last=1, min_age_seconds=0)
                 c = n_claims()
@@ -644,7 +644,7 @@ def contention_main() -> None:
                 root=os.path.join(workdir, f"vroot_{n_threads}"))
             table = "cont_probe"
             be.write(spark.createDataFrame([(0, -1)], "id long, w long"),
-                     table, "id", 2)
+                     table, "id")
             errors = []
 
             def appender(w):
@@ -652,7 +652,7 @@ def contention_main() -> None:
                     for j in range(per_thread):
                         be.append(spark.createDataFrame(
                             [(w * 10_000 + j, w)], "id long, w long"),
-                            table, "id", 2)
+                            table, "id")
                 except Exception as exc:
                     errors.append((w, repr(exc)))
 
