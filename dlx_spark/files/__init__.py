@@ -1,9 +1,11 @@
 """File-metadata store: md5 content identity, import conflict rules,
 identifier queries, latest-by-identifier+language.
 
-Semantics mirror the reference file module
-(``/root/reference/dlx/file/__init__.py:72-332``); storage is a parquet
-table (schemas.FILE) instead of a Mongo collection, and the content
+Semantics mirror the reference's file module
+(``dlx/file/__init__.py:72-332``); storage is a
+merge-on-read table keyed by ``_id`` (schemas.FILE) on the versioned
+backend under ``<root>/_v`` instead of a Mongo collection — each import
+is one O(batch) upsert committed by one manifest commit — and the content
 upload target is a pluggable callable (the reference hardcodes S3 —
 here any ``upload(payload: bytes, checksum: str, mimetype: str) -> bool``;
 an S3 implementation would call boto3 from ``foreachPartition`` for
@@ -19,6 +21,8 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dlx_spark import fsio, schemas
+from dlx_spark.tableio_mor import MergeOnReadTable
+from dlx_spark.tableio_versioned import VersionedTableBackend
 
 # ISO 639-1 two-letter codes (public table); validation mirror of the
 # reference's ISO6391 map (dlx/util.py:185-375)
@@ -82,22 +86,21 @@ def encode_fn(identifiers, languages, extension: str) -> str:
 
 
 class FileStore:
-    """Parquet-backed files table + pluggable content uploader."""
+    """Merge-on-read files table + pluggable content uploader."""
 
     def __init__(self, spark: SparkSession, root: str, uploader=None):
         self.spark = spark
         self.root = root
         self.uploader = uploader or (lambda payload, checksum, mimetype: True)
         fsio.mkdirs(spark, root)
-
-    @property
-    def _path(self) -> str:
-        return fsio.join(self.root, "files")
+        self._table = MergeOnReadTable(
+            VersionedTableBackend(root=fsio.join(root, "_v")), "files",
+            key="_id", partition_cols=[])
 
     def df(self) -> DataFrame:
-        if not fsio.listdir(self.spark, self._path):
+        if not self._table.exists(self.spark):
             return self.spark.createDataFrame([], schema=schemas.FILE)
-        return self.spark.read.parquet(self._path)
+        return self._table.read(self.spark)
 
     # --- imports ---------------------------------------------------------------
 
@@ -132,20 +135,14 @@ class FileStore:
             "uri": f"files.invalid/{checksum}",
             "user": user,
         }
-        existing = self.df().filter(F.col("_id") != checksum) if overwrite else self.df()
-        new_df = self.spark.createDataFrame([row], schema=schemas.FILE)
-        union = existing.unionByName(new_df)
-        staged = fsio.join(self.root, "_stage_files")
-        union.write.mode("overwrite").parquet(staged)
-        self.spark.read.parquet(staged).write.mode("overwrite").parquet(self._path)
-        fsio.rmtree(self.spark, staged)
+        # the upsert supersedes an overwritten file's row by key
+        self._table.upsert(self.spark.createDataFrame([row], schema=schemas.FILE))
         return row
 
     def import_batch(self, items: list[dict], overwrite: bool = False,
                      now: datetime | None = None) -> list[dict]:
-        """Set-scale import: ONE table rewrite for N files (the per-file
-        ``import_from_binary`` rewrites the table each call — fine for
-        interactive use, quadratic for bulk loads).  Each item: {data:
+        """Set-scale import: ONE upsert commit for N files (the per-file
+        ``import_from_binary`` commits once per call).  Each item: {data:
         bytes, identifiers: [Identifier], languages, mimetype, source,
         filename?, user?}.  Conflict rules are applied per item against
         the pre-batch state + earlier items in the batch; conflicting
@@ -187,13 +184,7 @@ class FileStore:
             })
         if not rows:
             return []
-        new_ids = [r["_id"] for r in rows]
-        existing = self.df().filter(~F.col("_id").isin(new_ids))
-        union = existing.unionByName(self.spark.createDataFrame(rows, schema=schemas.FILE))
-        staged = fsio.join(self.root, "_stage_files")
-        union.write.mode("overwrite").parquet(staged)
-        self.spark.read.parquet(staged).write.mode("overwrite").parquet(self._path)
-        fsio.rmtree(self.spark, staged)
+        self._table.upsert(self.spark.createDataFrame(rows, schema=schemas.FILE))
         return rows
 
     def import_from_path(self, path: str, **kwargs) -> dict:

@@ -1717,10 +1717,11 @@ class MarcStore:
                                    min_age_seconds=min_age_seconds)
 
     def rebucket(self, record_type: str, n_buckets: int) -> None:
-        """Change the live table's bucket modulus IN PLACE — one staged,
-        crash-safe rewrite (pt recomputed, new modulus committed in the
-        same manifest as the data it describes, so readers can never
-        mis-prune).  The knob a growing store owns: 16 buckets at 100 TB
+        """Change the live table's bucket modulus IN PLACE — one
+        backend rewrite, one manifest commit (pt recomputed, new modulus
+        committed with the data it describes, so readers can never
+        mis-prune); a commit that races it raises ConcurrentWriteError
+        and leaves the table as it was.  The knob a growing store owns: 16 buckets at 100 TB
         would be ~6 TB per bucket — too coarse for point-read pruning —
         and the reference's Mongo ``_id`` index has no such choice to
         make, so this is engine-specific surface.  Token tables
@@ -1732,28 +1733,20 @@ class MarcStore:
         if not live.exists(self.spark):
             self._default_n_buckets = int(n_buckets)
             return
-        resolved = (live.read(self.spark).drop("pt")
-                    .withColumn("pt", F.pmod(F.col("_id"),
-                                             F.lit(int(n_buckets))).cast("int")))
-        live.repartition_table(resolved, extra={"n_buckets": int(n_buckets)})
+        live.repartition_table(
+            self.spark,
+            lambda resolved: resolved.drop("pt").withColumn(
+                "pt", F.pmod(F.col("_id"), F.lit(int(n_buckets))).cast("int")),
+            extra={"n_buckets": int(n_buckets)})
         self._invalidate_query_contexts()
 
     def _recover(self) -> None:
         """Replay pending token-index markers on open (live-table crash
-        consistency is the backend's job — manifest commits are atomic
-        and staged replaces self-recover).  Markers are ALSO checked
-        lazily by ``_search_index_df``, so recovery here only matters
-        for stores that go straight to writing."""
-        # finish any crashed merge-on-read stage swap FIRST (rebucket /
-        # compact / rebuild — the backend proves which side of the
-        # commit the crash was on), so marker replay below derives from
-        # the settled live table
-        for rt in ("bib", "auth"):
-            for t in (self._live_name(rt), self._tokens_name(rt)):
-                for suffix in ("__morstage", "__morfold"):
-                    if self.backend.exists(self.spark, t + suffix):
-                        self.backend.recover_replace(self.spark, t,
-                                                     t + suffix)
+        consistency is the backend's job — every commit, rewrites
+        included, is one atomic manifest commit, so a rewrite that
+        crashed before it has simply not happened).  Markers are ALSO
+        checked lazily by ``_search_index_df``, so recovery here only
+        matters for stores that go straight to writing."""
         pending = {("bib" if fsio.basename(m).startswith("_dirty_bibs")
                     else "auth")
                    for m in fsio.glob(

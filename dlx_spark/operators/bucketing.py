@@ -1,14 +1,7 @@
-"""Storage-layout operators: bucketed tables for shuffle-free joins and
-partition-pruned ANN indexes.
+"""Storage-layout operators: partition-pruned ANN indexes.
 
 The 100 TB playbook the rest of the engine assumes:
 
-- ``write_bucketed`` / ``read_table`` — persist both sides of a
-  recurring equi-join bucketed (and sort-within-bucket) on the join
-  key.  Spark's bucketed scan then satisfies the join's distribution
-  requirement from the LAYOUT, so the join plans with zero Exchange on
-  the bucketed side(s) — the single biggest saving for a fact table
-  that joins on the same key every day.
 - ``write_lsh_index`` / ``probe_lsh_index`` — materialize the
   hyperplane-LSH bucket assignment partitioned BY BUCKET, so a top-k
   probe prunes to the multiprobe bucket set at the file listing (the
@@ -19,12 +12,11 @@ The 100 TB playbook the rest of the engine assumes:
 
 All index storage routes through the tableio backend (the same one the
 incremental dedup indexes use): indexes are named partitioned tables,
-not raw paths, so ``refresh_ivf_index``'s full-index rewrite publishes
-via the shared ``replace``/``recover_replace`` protocol — the swap is
-an atomic manifest commit, readers hold snapshots across it, and a
-concurrent ``append_ivf_index`` (whose rows were assigned under the
-OLD centroids) fails the refresh via ``on_conflict="fail"`` instead of
-being silently lost.
+not raw paths, so ``refresh_ivf_index``'s full-index rewrite is one
+backend ``rewrite`` — one manifest commit, readers hold snapshots
+across it, and a concurrent ``append_ivf_index`` (whose rows were
+assigned under the OLD centroids) fails the refresh instead of being
+silently lost.
 """
 
 from __future__ import annotations
@@ -33,7 +25,7 @@ import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from dlx_spark import fsio, tableio
+from dlx_spark import tableio
 from dlx_spark.tableio import get_backend
 from dlx_spark.operators import similarity
 
@@ -44,42 +36,6 @@ def _check_name(name: str) -> None:
             f"{name!r} looks like a filesystem path; the ANN index layouts "
             "are tables routed through the tableio backend "
             "(pass a table name — see README 'Notable behavior changes')")
-
-
-def write_bucketed(df: DataFrame, table: str, key: str | list[str],
-                   n_buckets: int = 32, sort: bool = True,
-                   mode: str = "overwrite") -> None:
-    """Persist ``df`` bucketed (and sorted) by ``key`` into the catalog.
-    Joining two tables bucketed the same way on the same key plans with
-    no Exchange; sorting within buckets additionally enables a
-    zero-sort SortMergeJoin."""
-    keys = [key] if isinstance(key, str) else list(key)
-    _clear_unregistered_location(df.sparkSession, table)
-    w = df.write.mode(mode).bucketBy(n_buckets, *keys)
-    if sort:
-        w = w.sortBy(*keys)
-    w.saveAsTable(table)
-
-
-def _clear_unregistered_location(spark: SparkSession, table: str) -> None:
-    """A driver killed inside ``saveAsTable`` leaves files at the
-    managed location but no catalog entry (registration comes last, so
-    that state is never live data); without clearing it every later
-    create of the name fails LOCATION_ALREADY_EXISTS.  Spark lowercases
-    the table part of the path; ``locationUri`` carries the ``.db``
-    suffix for non-default databases."""
-    if spark.catalog.tableExists(table):
-        return
-    parts = table.replace("`", "").split(".")
-    db = parts[-2] if len(parts) > 1 else spark.catalog.currentDatabase()
-    loc = fsio.join(spark.catalog.getDatabase(db).locationUri,
-                    parts[-1].lower())
-    if fsio.exists(spark, loc):
-        fsio.rmtree(spark, loc)
-
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
 
 
 def write_lsh_index(df: DataFrame, name: str, n_planes: int = 8,
@@ -350,20 +306,16 @@ def refresh_ivf_index(spark: SparkSession, name: str, n_centroids: int = 16,
     lists; returns the new centroids (probes need them — persist
     alongside the index).
 
-    One full-index rewrite published through the backend seam's shared
-    ``replace`` protocol — the same staged-swap every index rewrite in
-    the engine uses (compaction, rebucket), not a bespoke one: a crash
-    anywhere is repaired by ``recover_ivf_index`` → ``recover_replace``
-    on next open (a stage is visible only once its own manifest commit
-    landed, so recovery never sees a torn stage; the swap is an atomic
-    manifest commit and readers hold snapshots across it).  A
-    concurrent ``append_ivf_index`` does NOT commute with
+    One full-index backend ``rewrite`` — the same one-commit rewrite
+    every index fold and re-derive in the engine uses (compaction,
+    rebucket): readers hold snapshots across it, and a crash before its
+    manifest commit leaves the index as it was (the orphan segment is
+    vacuum's).  A concurrent ``append_ivf_index`` does NOT commute with
     re-quantization (its rows were assigned under the old centroids and
-    would be silently unfindable), so the publish carries a snapshot
-    token with ``on_conflict="fail"`` — the backend raises
-    ``tableio.ConcurrentWriteError``, the stage is cleaned, and the
-    caller re-runs over the grown index (same rule as
-    ``EmbeddingIndex.rebucket``)."""
+    would be silently unfindable), so the commit requires the index to
+    be exactly the snapshot the assignment was derived from and raises
+    ``tableio.ConcurrentWriteError`` otherwise — the caller re-runs over
+    the grown index (same rule as ``EmbeddingIndex.rebucket``)."""
     _check_name(name)
     be = get_backend()
     token = be.snapshot_token(spark, name)
@@ -372,28 +324,13 @@ def refresh_ivf_index(spark: SparkSession, name: str, n_centroids: int = 16,
     cents = similarity.ivf_centroids(cur, n_centroids=n_centroids, iters=iters,
                                      seed=seed, vec_col="embedding",
                                      sample_cap=sample_cap)
-    staged = f"{name}__refresh"
-    be.write_partitioned(
-        similarity.ivf_assign(cur, cents, vec_col="embedding",
-                              id_col="vec_id"),
-        staged, ["list_id"])
-    try:
-        be.replace(spark, name, staged, token=token, on_conflict="fail")
-    except tableio.ConcurrentWriteError:
-        be.drop(spark, staged)
-        raise
+    assigned = similarity.ivf_assign(cur, cents, vec_col="embedding",
+                                     id_col="vec_id")
+    if not be.rewrite(assigned, name, token, exact=True):
+        raise tableio.ConcurrentWriteError(
+            f"refresh_ivf_index({name}): the index was appended to while "
+            f"re-quantizing — re-run the refresh")
     return cents
-
-
-def recover_ivf_index(spark: SparkSession, name: str) -> None:
-    """Finish (or discard) a ``refresh_ivf_index`` that crashed
-    mid-publish — delegates to the backend's shared
-    ``recover_replace``: a visible stage is complete by construction
-    (see ``refresh_ivf_index``), so recovery either finishes the swap
-    (live missing / swap uncommitted) or drops the redundant stage
-    (live intact)."""
-    _check_name(name)
-    get_backend().recover_replace(spark, name, f"{name}__refresh")
 
 
 def probe_ivf_index(spark: SparkSession, name: str, centroids: np.ndarray,

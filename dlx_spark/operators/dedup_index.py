@@ -35,15 +35,18 @@ indexes persist the corpus's dedup STATE instead:
 All indexes are append-only: after a batch is deduped, its survivors'
 state is appended (one segment per append, clustered by the table's key
 and sized to its rows — a few-hundred-doc increment writes one file per
-table — and folded by ``compact``), so tomorrow's batch sees today's
-survivors.  The three near-dup families (MinHash, SimHash, Embedding)
-run one increment body, ``_dedup_increment``: the corpus probe runs
+table — and folded by ``compact``, one backend ``compact_segments``
+commit per table), so tomorrow's batch sees today's survivors.  The
+three near-dup families (MinHash, SimHash, Embedding) run one increment
+body, ``_dedup_increment``: the corpus probe runs
 once per ``dedup_batch``, its batch-sized drop set pinned before the
 intra-batch pass and the survivor rule read it.  Index
 parameters (hash family seed, bands, shingle width...) are persisted in
 a ``*_meta`` table at create time and re-read at probe/append time — a
 probe with mismatched parameters would silently find nothing, so they
-are never re-specified by callers.
+are never re-specified by callers.  The one geometry that changes after
+create, ``EmbeddingIndex.rebucket``'s, is committed in the key table's
+own manifest together with the keys.
 
 The reference has no incremental machinery (its dedup is the per-commit
 signature check, /root/reference/dlx/marc/__init__.py:2181-2182); this
@@ -72,40 +75,6 @@ from dlx_spark.operators import common, dedup
 # hash-exchanged on the join key (the index tables are path-based, so
 # no catalog bucket spec lets Spark elide the index-side exchange).
 PROBE_BROADCAST_ROW_CAP = 2_000_000
-
-
-def _compact_table(spark: SparkSession, table: str, key: str,
-                   distinct: bool = False) -> None:
-    """Fold an append-only index table into one fresh segment.
-
-    Append-only indexes accrete one segment per appended batch (a year
-    of daily ingest = 365 scan roots); this is the OPTIMIZE analog.  The
-    rewrite is staged under ``{table}__compact`` and published with an
-    atomic ``replace``; a crash before the swap leaves a stage that
-    ``_recover_compaction`` finishes or drops on next open.
-    """
-    tmp = f"{table}__compact"
-    # the token is the segment list of the very version the rewrite
-    # reads: appends landing after it commute with compaction (their
-    # rows are simply not compacted yet) and the replace merges them
-    # into the published version; a token older than the source would
-    # count an append the source already holds as "gained" and
-    # publish its rows twice
-    be = get_backend()
-    manifest = be.latest_manifest(spark, table)
-    token = list(manifest["segments"])
-    src = be.read_version(spark, table, manifest["version"])
-    if distinct:
-        # fold exact-duplicate rows (e.g. replayed band appends)
-        src = src.dropDuplicates()
-    be.write(src, tmp, key)
-    be.replace(spark, table, tmp, token=token, on_conflict="merge")
-
-
-def _recover_compaction(spark: SparkSession, table: str) -> None:
-    """If a compaction crashed around its replace, finish the swap or
-    drop the already-published stage (``recover_replace``)."""
-    get_backend().recover_replace(spark, table, f"{table}__compact")
 
 
 def _split_overcap(idx_rows: DataFrame, group_cols: list[str],
@@ -235,11 +204,10 @@ class DigestIndex:
     def __init__(self, spark: SparkSession, name: str):
         self.spark = spark
         self.name = name
-        _recover_compaction(spark, f"{name}_digests")
         self.params = _read_meta(spark, name)
 
     def compact(self) -> None:
-        _compact_table(self.spark, f"{self.name}_digests", "digest")
+        get_backend().compact_segments(self.spark, f"{self.name}_digests")
 
     @classmethod
     def create(cls, df: DataFrame, name: str, text_col: str = "text",
@@ -336,8 +304,6 @@ class MinHashIndex:
     def __init__(self, spark: SparkSession, name: str):
         self.spark = spark
         self.name = name
-        for suffix in ("_sigs", "_bands"):
-            _recover_compaction(spark, f"{name}{suffix}")
         self.params = _read_meta(spark, name)
 
     def compact(self) -> None:
@@ -346,9 +312,9 @@ class MinHashIndex:
         ledger's self-compaction).  Band rows are deduplicated here: a
         crash between append()'s two writes can leave duplicate band
         keys (harmless to probe correctness, see append)."""
-        _compact_table(self.spark, f"{self.name}_sigs", "id")
-        _compact_table(self.spark, f"{self.name}_bands", "bucket",
-                       distinct=True)
+        be = get_backend()
+        be.compact_segments(self.spark, f"{self.name}_sigs")
+        be.compact_segments(self.spark, f"{self.name}_bands", distinct=True)
 
     # -- construction -------------------------------------------------
 
@@ -582,11 +548,11 @@ class SimHashIndex:
     def __init__(self, spark: SparkSession, name: str):
         self.spark = spark
         self.name = name
-        _recover_compaction(spark, f"{name}_fps")
         self.params = _read_meta(spark, name)
 
     def compact(self) -> None:
-        _compact_table(self.spark, f"{self.name}_fps", "key", distinct=True)
+        get_backend().compact_segments(self.spark, f"{self.name}_fps",
+                                       distinct=True)
 
     @classmethod
     def create(cls, df: DataFrame, name: str, text_col: str = "text",
@@ -715,7 +681,8 @@ class EmbeddingIndex:
 
     Tables:
       {name}_vecs     (id long, vec array<...>, osig long)  clustered by id
-      {name}_buckets  (band int, bucket long, id long)      clustered by bucket
+      {name}_buckets  (band int, bucket long, id long)      clustered by bucket;
+                      a rebucket's n_planes/bands ride in its manifest
       {name}_meta     (params json incl. the hyperplane family: n_planes,
                        bands, seed, dim — the planes themselves are
                        deterministic from these, never persisted; the
@@ -742,25 +709,30 @@ class EmbeddingIndex:
     def __init__(self, spark: SparkSession, name: str):
         self.spark = spark
         self.name = name
-        for suffix in ("_vecs", "_buckets"):
-            _recover_compaction(spark, f"{name}{suffix}")
-        self._recover_rebucket()
-        if (get_backend().exists(spark, f"{name}_vecs")
-                and not get_backend().exists(spark, f"{name}_buckets")):
-            raise RuntimeError(
-                f"index {name!r} uses the pre-round single-table layout "
-                "((id, vec, bucket), no _buckets table) — rebuild it with "
-                "EmbeddingIndex.create from the source vectors (the old "
-                "layout stored no ordering signature, so it cannot be "
-                "migrated in place)")
+        be = get_backend()
+        try:
+            buckets = be.latest_manifest(spark, f"{name}_buckets")
+        except FileNotFoundError:
+            if be.exists(spark, f"{name}_vecs"):
+                raise RuntimeError(
+                    f"index {name!r} uses the pre-round single-table layout "
+                    "((id, vec, bucket), no _buckets table) — rebuild it "
+                    "with EmbeddingIndex.create from the source vectors "
+                    "(the old layout stored no ordering signature, so it "
+                    "cannot be migrated in place)") from None
+            buckets = {}
         self.params = _read_meta(spark, name)
         # meta written before the banded layout carries no bands key
         self.params.setdefault("bands", 1)
+        # the key geometry a rebucket committed rides in the buckets
+        # manifest, so keys and planes flip in one commit; an index
+        # never rebucketed keeps its create-time geometry in the meta
+        self.params.update(buckets.get("extra") or {})
 
     def compact(self) -> None:
-        _compact_table(self.spark, f"{self.name}_vecs", "id")
-        _compact_table(self.spark, f"{self.name}_buckets", "bucket",
-                       distinct=True)
+        be = get_backend()
+        be.compact_segments(self.spark, f"{self.name}_vecs")
+        be.compact_segments(self.spark, f"{self.name}_buckets", distinct=True)
 
     def rebucket(self, n_planes: int | None = None,
                  bands: int | None = None) -> None:
@@ -772,121 +744,37 @@ class EmbeddingIndex:
         are only that many buckets per band), so an index created for
         last quarter's corpus size gradually loses its pruning power.
         This rewrites ONLY the slim key table (the vectors are the
-        payload table and are untouched), staged-then-swapped like
-        compaction: the staged META table is the commit point — written
-        last, so a crash beforehand leaves the live geometry fully
-        consistent and the re-run starts over, while recovery on next
-        open rolls a committed rebucket FORWARD (buckets swap, then
-        meta swap) so probes never see mismatched planes-vs-keys."""
+        payload table and are untouched) in one backend ``rewrite``:
+        the new keys and their geometry (``n_planes``, ``bands``, kept
+        in the key table's manifest metadata) publish in ONE manifest
+        commit, so probes never see mismatched planes-vs-keys, and a
+        crash before it leaves the old geometry fully in place.
+
+        A concurrent append lands keys under the OLD geometry; unlike
+        compaction those rows cannot be carried through the rewrite
+        (they would be silently unfindable under the new planes), so
+        the commit requires the key table to be exactly the snapshot
+        the keys were derived from and raises ConcurrentWriteError
+        otherwise — the caller re-runs rebucket over the grown
+        corpus."""
         from dlx_spark.operators import similarity
 
         p = dict(self.params)
-        p["n_planes"] = int(n_planes or p["n_planes"])
-        p["bands"] = int(bands or p["bands"])
-        # a concurrent append lands keys under the OLD geometry; unlike
-        # compaction those rows cannot be merged through the swap (they
-        # would be silently unfindable under the new planes), so the
-        # publish detects the conflict and fails the rebucket instead
+        geometry = {"n_planes": int(n_planes or p["n_planes"]),
+                    "bands": int(bands or p["bands"])}
+        p.update(geometry)
         be = get_backend()
         token = be.snapshot_token(self.spark, f"{self.name}_buckets")
         vecs = be.read(self.spark, f"{self.name}_vecs")
         keys = similarity.banded_lsh_keys(vecs, p["bands"], p["n_planes"],
                                           p["seed"], vec_col="vec",
                                           id_col="id", dim=p["dim"])
-        be.write(keys, f"{self.name}_buckets__rebucket", "bucket")
-        # conflict check BEFORE the commit point: once the staged meta
-        # exists, a crash rolls the rebucket FORWARD on reopen — so
-        # refuse to arm the commit point if an append already landed
-        # (the publish itself re-checks; this narrows the crash window
-        # between a detected conflict and its stage cleanup)
-        if be.snapshot_token(self.spark, f"{self.name}_buckets") != token:
-            be.drop(self.spark, f"{self.name}_buckets__rebucket")
+        if not be.rewrite(keys, f"{self.name}_buckets", token, exact=True,
+                          extra=geometry):
             raise tableio.ConcurrentWriteError(
                 f"rebucket({self.name}): index was appended to while "
                 f"re-keying — re-run rebucket")
-        # intent: persist the snapshot token the staged keys were
-        # derived from, so RECOVERY can re-run the same conflict check —
-        # an append landing after this point (even followed by a crash)
-        # is detected on reopen and the stage discarded instead of
-        # rolled forward with the append's keys dropped (the publish
-        # re-checks the token inside the commit, so no window remains)
-        be.write_plain(
-            self.spark.createDataFrame([(json.dumps(token),)],
-                                       "token string"),
-            f"{self.name}_rebucket_intent")
-        # commit point: staged meta present => the new geometry WILL be
-        # published (roll-forward); absent => staged keys are garbage
-        be.write_plain(
-            self.spark.createDataFrame([(json.dumps(p),)], "params string"),
-            f"{self.name}_meta__rebucket")
-        try:
-            self._recover_rebucket(buckets_token=token)
-        except tableio.ConcurrentWriteError:
-            # leave the live index exactly as the concurrent writer
-            # sees it; the caller re-runs rebucket over the grown corpus
-            self._drop_rebucket_stages()
-            raise
-        self.params = _read_meta(self.spark, self.name)
-
-    def _drop_rebucket_stages(self) -> None:
-        for t in (f"{self.name}_meta__rebucket",
-                  f"{self.name}_buckets__rebucket",
-                  f"{self.name}_rebucket_intent"):
-            get_backend().drop(self.spark, t)
-
-    def _recover_rebucket(self, buckets_token=None) -> None:
-        """Finish (or discard) an interrupted ``rebucket``: a staged
-        meta table means the swap was committed — publish keys then
-        meta, in that order, so a crash mid-recovery re-enters here; a
-        staged key table WITHOUT the meta commit point is a dead stage
-        from a pre-commit crash and is dropped.
-
-        ``buckets_token`` is only passed by the live ``rebucket`` call;
-        the reopen-recovery path reads the token the crashed rebucket
-        persisted in ``{name}_rebucket_intent`` and re-runs the SAME
-        conflict-fail publish — an append that landed between the
-        crashed run's conflict check and its crash is therefore
-        detected on reopen and the stage DISCARDED (old geometry kept,
-        the appended keys live), instead of rolled forward with those
-        keys dropped.  A meta stage without an intent (pre-round-6
-        crash state) replays tokenlessly — the crashed protocol owned
-        the table under the old contract."""
-        spark = self.spark
-        meta_stage = f"{self.name}_meta__rebucket"
-        keys_stage = f"{self.name}_buckets__rebucket"
-        intent = f"{self.name}_rebucket_intent"
-        be = get_backend()
-        if be.exists(spark, meta_stage):
-            token = buckets_token
-            if token is None and be.exists(spark, intent):
-                token = json.loads(be.read(spark, intent)
-                                   .first()["token"])
-            try:
-                if be.exists(spark, keys_stage):
-                    if be.replace_published(spark, f"{self.name}_buckets",
-                                            keys_stage):
-                        # the buckets swap already committed and only
-                        # its staged drop was lost: replaying the
-                        # conflict-checked replace here would count the
-                        # published segments themselves as "gained"
-                        # and wrongly fail — finish the cleanup and
-                        # proceed to the meta swap
-                        be.drop(spark, keys_stage)
-                    else:
-                        be.replace(spark, f"{self.name}_buckets",
-                                   keys_stage, token=token,
-                                   on_conflict="fail")
-                be.replace(spark, f"{self.name}_meta", meta_stage)
-            except tableio.ConcurrentWriteError:
-                if buckets_token is not None:
-                    raise      # live rebucket: caller cleans and re-raises
-                self._drop_rebucket_stages()
-                return
-            be.drop(spark, intent)
-        else:
-            if be.exists(spark, keys_stage):
-                be.drop(spark, keys_stage)
-            be.drop(spark, intent)
+        self.params = p
 
     @classmethod
     def create(cls, df: DataFrame, name: str, vec_col: str = "embedding",
@@ -1082,8 +970,6 @@ class EmbeddingIndex:
     def drop(self) -> None:
         for suffix in ("_vecs", "_buckets", "_meta"):
             get_backend().drop(self.spark, f"{self.name}{suffix}")
-        # a crashed rebucket's stages/intent must not outlive the index
-        self._drop_rebucket_stages()
 
 
 class SegmentIndex:
@@ -1104,11 +990,10 @@ class SegmentIndex:
     def __init__(self, spark: SparkSession, name: str):
         self.spark = spark
         self.name = name
-        _recover_compaction(spark, f"{name}_segments")
         self.params = _read_meta(spark, name)
 
     def compact(self) -> None:
-        _compact_table(self.spark, f"{self.name}_segments", "digest")
+        get_backend().compact_segments(self.spark, f"{self.name}_segments")
 
     @classmethod
     def create_empty(cls, spark: SparkSession, name: str,
@@ -1244,11 +1129,10 @@ class SpanIndex:
     def __init__(self, spark: SparkSession, name: str):
         self.spark = spark
         self.name = name
-        _recover_compaction(spark, f"{name}_windows")
         self.params = _read_meta(spark, name)
 
     def compact(self) -> None:
-        _compact_table(self.spark, f"{self.name}_windows", "digest")
+        get_backend().compact_segments(self.spark, f"{self.name}_windows")
 
     @classmethod
     def create_empty(cls, spark: SparkSession, name: str,

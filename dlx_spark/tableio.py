@@ -1,12 +1,12 @@
 """The table-commit seam: the single point through which the
 incremental indexes (operators/dedup_index.py) and the ANN index
-layouts (operators/bucketing.py) create, append, read, replace, and
+layouts (operators/bucketing.py) create, append, read, rewrite, and
 drop their tables.
 
 The engine's one backend is the manifest-committed
 ``tableio_versioned.VersionedTableBackend`` rooted at
-``<warehouse>/_versioned``: atomic replace, snapshot-isolated readers
-and optimistically-concurrent appends on plain parquet.  The index
+``<warehouse>/_versioned``: one-commit rewrites, snapshot-isolated
+readers and optimistically-concurrent appends on plain parquet.  The index
 classes resolve the backend per call through ``get_backend()``, so a
 table format with its own commit protocol (Delta, Iceberg) — or a test
 double that records, races or crashes — slots in process-wide via
@@ -17,10 +17,12 @@ from __future__ import annotations
 
 
 class ConcurrentWriteError(RuntimeError):
-    """A ``replace(on_conflict="fail")`` found commits on the target
-    table that postdate the caller's ``snapshot_token`` — the staged
-    content was derived from a stale snapshot and publishing it would
-    discard the concurrent writes.  Re-derive the stage and retry."""
+    """A re-derive (a merge-on-read overwrite or geometry change, an
+    index rebucket, an IVF refresh) found that the table's segment list
+    changed after the snapshot it was derived from — publishing would
+    discard or contradict the concurrent writes — or an append's rows
+    were derived under table metadata a concurrent commit changed.
+    Nothing was committed; re-derive and retry."""
 
 
 _backend = None

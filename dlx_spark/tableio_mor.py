@@ -24,17 +24,18 @@ precedence) using only that backend's primitives:
   applied among the deltas, tombstones preserved, the store-sized base
   referenced by id and never read — so steady maintenance is
   O(accumulated batches); ``compact()`` (FULL) folds the resolved
-  table into one fresh segment via the backend's snapshot-token
-  ``replace(on_conflict="merge")``.  Appends racing either fold are
-  carried with precedence preserved (the minor fold aborts instead
-  when a raced FULL rewrite replaced the segment list).
+  table into one fresh segment.  Each fold is one backend ``rewrite``
+  (one segment, one manifest commit): appends racing it are carried
+  with precedence preserved, and a fold whose segment list a raced
+  rewrite replaced commits nothing.
   ``auto_compact_at`` bounds how many delta segments a read ever pays
   for, folding minor while deltas stay under
   ``MINOR_COMPACT_MAX_DELTA_FRACTION`` of the base.
 - **Crash safety and multi-writer are inherited**, not re-implemented:
   the commit point is the backend's manifest CAS (atomic rename /
   external CAS service), readers are snapshot-isolated, ``vacuum``
-  reclaims superseded segments.
+  reclaims superseded segments and the orphan segment of a rewrite
+  that crashed before its commit.
 
 Tombstones ride as rows with ``_mor_deleted = true`` and NULL payload
 columns, so one uniform resolution covers upsert, delete, and
@@ -56,6 +57,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from dlx_spark.tableio import ConcurrentWriteError
 from dlx_spark.tableio_versioned import VersionedTableBackend
 
 #: internal columns (never visible through read())
@@ -112,14 +114,14 @@ class MergeOnReadTable:
         #: its key only ever feeds hash joins that gain nothing from
         #: sortedness).
         self.sort_col = sort_col or key
-        #: ``extra_merge(new_or_staged_extra, head_extra) -> dict`` —
-        #: when set, EVERY publish of this table (upsert append,
-        #: compact/overwrite replace, rebucket) folds its metadata onto
-        #: the committed head's inside the commit, instead of taking
-        #: one side verbatim.  Required for metadata that must survive
-        #: races: a compaction staged from an old snapshot would
-        #: otherwise roll back e.g. a monotonic max-assigned-id hint a
-        #: raced commit had advanced.
+        #: ``extra_merge(new_extra, head_extra) -> dict`` — when set,
+        #: EVERY publish of this table (upsert append, compact /
+        #: overwrite / rebucket rewrite) folds its metadata onto the
+        #: committed head's inside the commit, instead of taking one
+        #: side verbatim.  Required for metadata that must survive
+        #: races: a write derived from an old snapshot must not roll
+        #: back e.g. a monotonic max-assigned-id hint a raced commit
+        #: had advanced.
         self.extra_merge = extra_merge
         #: compactions triggered inline by upsert (probe observable);
         #: ``auto_compactions_minor`` counts the subset that folded
@@ -172,24 +174,15 @@ class MergeOnReadTable:
     def overwrite(self, df: DataFrame, extra: dict | None = None) -> None:
         """Replace the whole table with ``df`` (the bulk-load / rebuild
         path — one clustered segment, no read-side resolution work).
-        ``df`` must carry the key and partition columns."""
+        ``df`` must carry the key and partition columns.  Deltas that
+        race the rewrite are re-applied ON TOP of the new content
+        (correct for a rebuild-from-live); a raced rewrite that
+        replaced the segment list raises ConcurrentWriteError."""
         spark = df.sparkSession
         out = df.withColumn(DELETED, F.lit(False))
         if self.exists(spark):
-            manifest = self.manifest(spark)
-            token = list(manifest["segments"])
-            if extra is None:
-                extra = manifest.get("extra")
-            staged = f"{self.table}__morstage"
-            self.backend.write_partitioned(
-                out, staged, self.partition_cols, extra=extra,
-                sort_col=self.sort_col)
-            # on_conflict="merge" would re-apply raced deltas ON TOP of
-            # the new content — correct for a rebuild-from-live, and the
-            # only order-preserving choice the backend offers
-            self.backend.replace(spark, self.table, staged, token=token,
-                                 on_conflict="merge",
-                                 extra_merge=self.extra_merge)
+            token = list(self.manifest(spark)["segments"])
+            self._rewrite(out, token, extra=extra)
         else:
             self.backend.write_partitioned(
                 out, self.table, self.partition_cols, extra=extra,
@@ -364,8 +357,8 @@ class MergeOnReadTable:
 
         Returns the number of delta segments folded (0 when there is
         at most one delta, or when a raced full rewrite replaced the
-        segment list — the backend aborts suffix surgery on a replaced
-        list and the raced rewrite already did the maintenance)."""
+        segment list — the backend's ``rewrite`` commits nothing then,
+        and the raced rewrite already did the maintenance)."""
         try:
             manifest = self.manifest(spark)
         except FileNotFoundError:
@@ -375,9 +368,8 @@ class MergeOnReadTable:
             return 0
         merged = self._conform(self._merged_deltas(spark, manifest),
                                self._schema(manifest))
-        ok = self.backend.replace_segment_suffix(merged, self.table,
-                                                 token, keep=1,
-                                                 sort_col=self.sort_col)
+        ok = self.backend.rewrite(merged, self.table, token, keep=1,
+                                  sort_col=self.sort_col)
         if ok:
             self._delta_rows_memo = None
         return len(token) - 1 if ok else 0
@@ -404,8 +396,8 @@ class MergeOnReadTable:
     def compact(self, spark: SparkSession) -> int:
         """Fold the resolved table into one segment (precedence applied
         and discarded).  Returns the number of segments folded, 0 if
-        already compact.  Raced appends are carried unfolded via the
-        backend's snapshot-token merge."""
+        already compact or a raced rewrite replaced the segment list.
+        Raced appends are carried unfolded."""
         try:
             manifest = self.manifest(spark)
         except FileNotFoundError:
@@ -415,33 +407,35 @@ class MergeOnReadTable:
             return 0
         resolved = (self._resolve(spark, manifest, hint=False)
                     .withColumn(DELETED, F.lit(False)))
-        staged = f"{self.table}__morfold"
-        self.backend.write_partitioned(
-            resolved, staged, self.partition_cols,
-            extra=manifest.get("extra"), sort_col=self.sort_col)
-        self.backend.replace(spark, self.table, staged, token=token,
-                             on_conflict="merge",
-                             extra_merge=self.extra_merge)
-        return len(token)
+        ok = self.backend.rewrite(resolved, self.table, token,
+                                  extra_merge=self.extra_merge,
+                                  sort_col=self.sort_col)
+        return len(token) if ok else 0
 
-    def repartition_table(self, df: DataFrame, extra: dict) -> None:
-        """Atomic geometry change (REBUCKET): publish ``df`` — the
-        resolved table with RECOMPUTED partition columns — together
-        with the ``extra`` metadata describing the new geometry, as one
-        manifest commit.  ``on_conflict="fail"``: a commit that raced
-        the rewrite carries OLD-geometry partition values, which would
-        silently mis-prune after the swap — the caller re-derives and
-        retries instead."""
-        spark = df.sparkSession
+    def repartition_table(self, spark: SparkSession, derive,
+                          extra: dict) -> None:
+        """Atomic geometry change (REBUCKET): publish ``derive(resolved)``
+        — the resolved table with RECOMPUTED partition columns —
+        together with the ``extra`` metadata describing the new
+        geometry, as one manifest commit.  The commit requires the
+        segment list to be exactly the one ``resolved`` was read from:
+        a commit that raced the rewrite carries OLD-geometry partition
+        values, which would silently mis-prune after it, so
+        ConcurrentWriteError is raised and the caller re-derives."""
         manifest = self.manifest(spark)
-        staged = f"{self.table}__morstage"
-        self.backend.write_partitioned(
-            df.withColumn(DELETED, F.lit(False)), staged,
-            self.partition_cols, extra=extra, sort_col=self.sort_col)
-        self.backend.replace(spark, self.table, staged,
-                             token=list(manifest["segments"]),
-                             on_conflict="fail",
-                             extra_merge=self.extra_merge)
+        df = derive(self._resolve(spark, manifest, hint=False))
+        self._rewrite(df.withColumn(DELETED, F.lit(False)),
+                      list(manifest["segments"]), exact=True, extra=extra)
+
+    def _rewrite(self, df: DataFrame, token: list[str], **kw) -> None:
+        """A re-derive's rewrite: one backend ``rewrite`` whose conflict
+        raises instead of returning."""
+        if not self.backend.rewrite(df, self.table, token,
+                                    extra_merge=self.extra_merge,
+                                    sort_col=self.sort_col, **kw):
+            raise ConcurrentWriteError(
+                f"{self.table}: the segment list changed while the "
+                f"rewrite was derived — re-derive and retry")
 
     def drop(self, spark: SparkSession) -> None:
         self.backend.drop(spark, self.table)

@@ -24,14 +24,16 @@ Stores", VLDB 2020):
   commits add new manifests and segments but never touch resolved
   files, so a DataFrame stays valid across any number of overwrites
   until ``vacuum`` reclaims unreferenced segments.
-- **``replace`` is an atomic metadata swap** (commit the staged table's
-  segment list as the target's next version), and ``recover_replace``
-  needs no guesswork: a staged table is visible ONLY if its own commit
-  completed, so "staged exists" proves the staged content is complete.
-  Each replace-commit records its provenance (staged name + staged
-  version), letting recovery distinguish "crashed before publishing"
-  (finish the swap) from "crashed after" (just drop the stage) even
-  when later appends have already advanced the target.
+- **A rewrite is one commit.**  Every fold and re-derive (compaction,
+  a merge-on-read overwrite, a rebucket, an IVF refresh) goes through
+  ``rewrite``: it writes one fresh segment and publishes it in one
+  manifest commit that is checked against the caller's snapshot of the
+  segment list — the way Delta's OPTIMIZE is one log commit.  Appends
+  that raced the rewrite are carried; a raced rewrite that replaced the
+  list makes this one commit nothing.  Until that commit the rewrite is
+  unpublished: a crash leaves only an unreferenced segment for
+  ``vacuum``, and nothing is re-published when the table is next
+  opened.
 
 Scheme contract (TESTED, not just documented — tests/test_commit_schemes.py):
 the manifest publish routes through fsio's pluggable commit scheme, the
@@ -88,6 +90,11 @@ from dlx_spark.tableio import ConcurrentWriteError
 
 _MANIFEST_WIDTH = 10
 _MAX_COMMIT_RETRIES = 20
+#: table-name suffixes of the staged-swap protocol earlier releases
+#: used for rewrites; ``vacuum`` drops aged tables with these names
+_RETIRED_STAGE_SUFFIXES = ("__morstage", "__morfold", "__compactseg",
+                           "__compact", "__refresh", "__rebucket",
+                           "_rebucket_intent")
 
 
 class VersionedTableBackend:
@@ -256,8 +263,7 @@ class VersionedTableBackend:
                 doc = dict(payload_fn(latest))
                 doc["version"] = version
                 # globally-unique commit identity: version numbers
-                # restart at 1 whenever a (staged) table is dropped and
-                # rebuilt, so provenance tracking must not key on them
+                # restart at 1 whenever a table is dropped and rebuilt
                 doc["id"] = uuid.uuid4().hex
                 dest = self._manifest_path(spark, table, version)
                 tmp = fsio.join(self._table_dir(spark, table),
@@ -322,7 +328,7 @@ class VersionedTableBackend:
             doc["sort_col"] = sort_col
         if extra:
             # caller-owned table metadata (e.g. a merge-on-read store's
-            # bucket modulus), carried on every subsequent append/replace
+            # bucket modulus), carried on every subsequent append/rewrite
             # so it flips ATOMICALLY with the data it describes
             doc["extra"] = dict(extra)
         return doc
@@ -344,7 +350,10 @@ class VersionedTableBackend:
             nonlocal n_after
             segs = (latest["segments"] if latest else []) + [seg]
             n_after = len(segs)
-            return self._layout(df, key, segs)
+            # the head's metadata rides along (an embedding index's
+            # bucket geometry lives there)
+            return self._layout(df, key, segs,
+                                extra=latest.get("extra") if latest else None)
 
         self._commit(spark, table, payload)
         self._maybe_auto_compact(spark, table, n_after)
@@ -392,8 +401,7 @@ class VersionedTableBackend:
         metadata read and its append would otherwise accept delta rows
         whose partition values are wrong under the new modulus, making
         partition-pruned reads silently MISS them.  The orphaned
-        segment file is reclaimed by vacuum, like a failed replace's
-        stage."""
+        segment file is reclaimed by vacuum, like a failed rewrite's."""
         spark = df.sparkSession
         seg = self._write_segment(spark, df, table, None,
                                   partition_cols, sort_col=sort_col)
@@ -458,17 +466,16 @@ class VersionedTableBackend:
 
         Ordering is load-bearing: the trigger runs AFTER the append's
         own commit, so the appended rows are durable before any
-        compaction work starts — a crash mid-compaction loses only the
-        re-derivable ``__compactseg`` stage (vacuum clears aged ones),
-        never data, and the next threshold-crossing append simply
-        re-triggers.  The fold publishes through the same
-        snapshot-token ``replace(on_conflict="merge")`` as manual
-        compaction, so appends racing it are carried into the new
-        version.  Two writers crossing the threshold together both
-        compact (wasted work, correct result — the second fold sees the
-        first's output plus any raced segments); deployments with many
-        concurrent appenders should prefer a single maintenance-cadence
-        ``compact_segments`` and leave this off."""
+        compaction work starts — a crash mid-compaction loses only an
+        unreferenced segment (vacuum reclaims it), never data, and the
+        next threshold-crossing append simply re-triggers.  The fold is
+        the same one-commit ``rewrite`` as manual compaction, so appends
+        racing it are carried into the new version.  Two writers
+        crossing the threshold together both fold, and the later commit
+        finds the list replaced and publishes nothing (wasted work,
+        correct result); deployments with many concurrent appenders
+        should prefer a single maintenance-cadence ``compact_segments``
+        and leave this off."""
         if self.auto_compact_at is None or n_segments < self.auto_compact_at:
             return
         self.auto_compactions += 1
@@ -497,7 +504,8 @@ class VersionedTableBackend:
         return suffix <= base * self.MINOR_COMPACT_MAX_SUFFIX_FRACTION
 
     def compact_segment_suffix(self, spark: SparkSession, table: str,
-                               keep: int = 1) -> int:
+                               keep: int = 1,
+                               distinct: bool = False) -> int:
         """Fold ``segments[keep:]`` into ONE segment, leaving the
         prefix untouched — the MINOR-compaction analog for plain and
         partitioned append tables, whose reads union segments with no
@@ -505,21 +513,27 @@ class VersionedTableBackend:
         content-preserving by construction).  O(folded suffix) I/O;
         bounds scan-root amplification exactly like the full
         ``compact_segments`` while never rewriting the table-sized
-        base.  Returns the number of segments folded (0 when there is
-        nothing to fold or a raced full rewrite replaced the list —
-        the abort leaves the raced rewrite's result standing)."""
+        base.  One ``rewrite(keep=...)``; ``distinct=True`` also folds
+        exact-duplicate rows of the suffix.  Returns the number of
+        segments folded (0 when there is nothing to fold or a raced
+        full rewrite replaced the list — the abort leaves the raced
+        rewrite's result standing)."""
         try:
             _, manifest = self._latest(spark, table)
         except FileNotFoundError:
             return 0
+        # the token MUST be the segment list of the very manifest the
+        # fold reads: a fresher list could include an append that
+        # committed between the two lookups, whose rows would then be
+        # both folded AND carried as a raced segment — duplicated
         token = list(manifest["segments"])
         if len(token) - keep <= 1:
             return 0
-        df = None
-        for i in range(keep, len(token)):
-            part = self.segment_df(spark, manifest, i)
-            df = part if df is None else df.unionByName(part)
-        ok = self.replace_segment_suffix(df, table, token, keep)
+        df = self._read_manifest_df(spark,
+                                    {**manifest, "segments": token[keep:]})
+        if distinct:
+            df = df.dropDuplicates()
+        ok = self.rewrite(df, table, token, keep)
         return len(token) - keep if ok else 0
 
     def update_extra(self, spark: SparkSession, table: str, fn) -> dict:
@@ -639,7 +653,7 @@ class VersionedTableBackend:
 
     def drop(self, spark: SparkSession, table: str) -> None:
         """Remove the table's manifests.  Its segments stay in the data
-        pool (they may be shared with a replace target) until vacuum.
+        pool until vacuum.
         Any external commit records for the removed names are dropped
         too — a recreated table restarts at version 1, and a stale
         acknowledged claim for the OLD v1 would make every new
@@ -655,218 +669,70 @@ class VersionedTableBackend:
 
     def snapshot_token(self, spark: SparkSession, table: str):
         """The table's current segment list (None for a new table) —
-        capture BEFORE reading the snapshot a staged rewrite derives
-        from, and hand back to ``replace`` so it can reconcile commits
-        that landed in between."""
+        capture BEFORE reading the snapshot a rewrite derives from, and
+        hand it to ``rewrite`` as its ``token`` so the commit can check
+        what landed in between."""
         try:
             _, manifest = self._latest(spark, table)
         except FileNotFoundError:
             return None
         return list(manifest["segments"])
 
-    def replace(self, spark: SparkSession, table: str, staged: str,
-                token=None, on_conflict: str = "merge",
-                extra_merge=None) -> None:
-        """Atomic metadata swap: commit ``staged``'s current segment
-        list as ``table``'s next version, then drop the staged table's
-        manifests.  The provenance recorded in the commit lets
-        ``recover_replace`` prove which side of the commit a crash
-        happened on.
-
-        With a ``token`` (the segment list ``staged`` was derived
-        from), commits that advanced ``table`` past the token are
-        reconciled per ``on_conflict``:
-
-        - ``"merge"`` — segments the head gained since the token are
-          carried into the new version alongside the staged content.
-          Correct when the rewrite preserves content and concurrent
-          appends commute with it (compaction: the appended rows are
-          simply not compacted yet).
-        - ``"fail"`` — raise ConcurrentWriteError, leaving table and
-          stage untouched.  For rewrites that TRANSFORM content (e.g.
-          re-keying under a new geometry), where a concurrent append's
-          rows would be silently wrong after the swap.
-
-        Without a token, the staged content becomes the entire next
-        version — only correct when nothing else writes the table
-        (the recovery path's replay, where the crashed protocol owns
-        the table).
-
-        ``extra_merge(staged_extra, head_extra)``, when given, decides
-        the published metadata instead of the staged manifest's copy.
-        This matters exactly for ``"merge"``: the staged content was
-        derived from the token-time head, so metadata a raced commit
-        updated since (e.g. a monotonic max-assigned-id hint) would be
-        silently rolled back by taking the staged copy — the same
-        lost-update the segment carry prevents for data."""
-        if on_conflict not in ("merge", "fail"):
-            raise ValueError(f"on_conflict must be merge|fail, "
-                             f"got {on_conflict!r}")
-        _, manifest = self._latest(spark, staged)
-        base = set(token or [])
-
-        def payload(latest):
-            head = list(latest["segments"]) if latest else []
-            gained = [s for s in head if s not in base]
-            if gained and token is not None and on_conflict == "fail":
-                raise ConcurrentWriteError(
-                    f"replace({table}): {len(gained)} segment(s) were "
-                    f"committed after the caller's snapshot — re-derive "
-                    f"the stage and retry")
-            doc = {k: manifest[k] for k in
-                   ("segments", "key", "schema")}
-            for opt in ("partition_cols", "extra", "sort_col"):
-                if opt in manifest:
-                    doc[opt] = manifest[opt]
-            if extra_merge is not None:
-                head_extra = dict((latest.get("extra") if latest
-                                   else None) or {})
-                merged = extra_merge(manifest.get("extra"), head_extra)
-                if merged:
-                    doc["extra"] = merged
-                else:
-                    doc.pop("extra", None)
-            if token is not None:
-                doc["segments"] = list(manifest["segments"]) + gained
-            doc["source"] = [staged, manifest["id"]]
-            return doc
-
-        self._commit(spark, table, payload)
-        self.drop(spark, staged)
-
-    def recover_replace(self, spark: SparkSession, table: str,
-                        staged: str) -> None:
-        """Finish a ``replace`` that crashed.  A staged table is visible
-        only if its own commit completed (the manifest rename IS the
-        commit), so its presence proves the staged content is complete:
-
-        - no manifest of ``table`` carries this stage's provenance →
-          the crash predates the swap commit → re-run the replace;
-        - some manifest does → the swap committed and only the staged
-          drop was lost → drop the stage, preserving any appends that
-          already advanced ``table`` past the swap.
-
-        Provenance keys on the staged manifest's unique commit id, not
-        its version number: staged versions restart at 1 whenever the
-        stage is dropped and rebuilt, so a version-keyed check would
-        mistake a NEW stage generation for an already-published one and
-        silently discard it."""
-        if not self.exists(spark, staged):
-            return
-        try:
-            self._latest(spark, staged)
-        except FileNotFoundError:
-            # the stage's only manifest is a torn remnant — its commit
-            # never completed, so there is nothing publishable: clear it
-            self.drop(spark, staged)
-            return
-        if self.replace_published(spark, table, staged):
-            self.drop(spark, staged)
-            return
-        self.replace(spark, table, staged)
-
-    def replace_published(self, spark: SparkSession, table: str,
-                          staged: str) -> bool:
-        """Whether a prior ``replace(table, staged)`` already committed
-        and only its staged drop was lost: True iff some committed
-        manifest of ``table`` cites the stage's CURRENT commit id as its
-        swap source.  Crash-recovery protocols that replay a
-        conflict-checked replace must consult this first, or they
-        mistake their own published content for a concurrent write.
-        Keyed on the unique commit id, never the stage's version number
-        (stage generations restart at 1)."""
-        if not self.exists(spark, staged):
-            return False
-        try:
-            _, staged_manifest = self._latest(spark, staged)
-        except FileNotFoundError:
-            return False
-        for v in reversed(self.versions(spark, table)):
-            manifest = self._manifest_or_none(spark, table, v)
-            if manifest is not None and (manifest.get("source")
-                    == [staged, staged_manifest["id"]]):
-                return True
-        return False
-
     # --------------------------------------------------- maintenance
 
-    def compact_segments(self, spark: SparkSession, table: str) -> int:
+    def compact_segments(self, spark: SparkSession, table: str,
+                         distinct: bool = False) -> int:
         """Fold a multi-segment table into ONE fresh segment (the
-        OPTIMIZE analog for this backend).  Matters most for
-        partitioned tables, whose reads union one partition-discovered
-        scan per segment: a long append history (e.g. daily
-        ``append_ivf_index`` increments) accumulates scan roots until
-        a rewrite folds them — exactly what table formats schedule as
-        OPTIMIZE.  Publishes through the same optimistic commit as
-        every write; appends racing the rewrite are merged via the
-        snapshot token (their segments are simply not compacted yet).
-        Returns the number of segments folded (0 = already compact,
-        nothing written).
+        OPTIMIZE analog for this backend): ``compact_segment_suffix``
+        with ``keep=0``.  Matters most for partitioned tables, whose
+        reads union one partition-discovered scan per segment: a long
+        append history (e.g. daily ``append_ivf_index`` increments)
+        accumulates scan roots until a rewrite folds them — exactly
+        what table formats schedule as OPTIMIZE.  Appends racing the
+        fold are carried (their segments are simply not compacted yet),
+        and a raced rewrite that replaced the list wins — this fold then
+        commits nothing.  ``distinct=True`` also folds exact-duplicate
+        rows (e.g. band keys a crashed append replayed).  Returns the
+        number of segments folded (0 = already compact, or a raced
+        rewrite already did the work)."""
+        return self.compact_segment_suffix(spark, table, keep=0,
+                                           distinct=distinct)
 
-        A crash between staging and the swap strands the
-        ``{table}__compactseg`` stage; ``vacuum`` drops aged ones (a
-        compaction stage is always re-derivable, so dropping loses
-        only work, never data — and a stage whose swap DID commit is
-        already cleaned by vacuum's provenance pass)."""
-        try:
-            _, manifest = self._latest(spark, table)
-        except FileNotFoundError:
-            return 0
-        # the token MUST be the segment list of the very manifest the
-        # rewrite reads: a fresher snapshot_token could include an
-        # append that committed between the two lookups, whose rows
-        # would then be both folded into the stage AND re-merged as a
-        # "gained" segment by the swap — duplicated
-        token = list(manifest["segments"])
-        if len(token) <= 1:
-            return 0
-        staged = f"{table}__compactseg"
-        pcols = manifest.get("partition_cols")
-        df = self._read_manifest_df(spark, manifest)
-        if pcols:
-            # carry the table's 'extra' metadata through the fold:
-            # replace() publishes the STAGED manifest's copy, so staging
-            # without it would silently strip e.g. a history table's
-            # bucket modulus on the first auto-compaction (per-record
-            # history reads then lose their pt pruning) — and likewise
-            # the advisory sort_col, so the fold re-clusters
-            self.write_partitioned(df, staged, pcols,
-                                   extra=manifest.get("extra"),
-                                   sort_col=manifest.get("sort_col"))
-        elif manifest.get("key") is not None:
-            self.write(df, staged, manifest["key"])
-        else:
-            self.write_plain(df, staged)
-        self.replace(spark, table, staged, token=token, on_conflict="merge")
-        return len(token)
+    def rewrite(self, df: DataFrame, table: str, token: list[str],
+                keep: int = 0, *, exact: bool = False,
+                extra: dict | None = None, extra_merge=None,
+                sort_col: str | None = None) -> bool:
+        """The one rewrite primitive: every fold and re-derive publishes
+        through it.  Writes ``df`` as ONE segment in the head's layout
+        (key / partition_cols / sort_col) and makes ONE manifest commit
+        of ``token[:keep] + [seg] + gained``, where ``token`` is the
+        segment list of the very manifest ``df`` was derived from and
+        ``gained`` is whatever the head appended past it (carried in
+        order, so raced batches keep their precedence over the
+        rewritten content).  ``keep`` > 0 is the MINOR fold: the
+        prefix — at 100 TB the store-sized base — is referenced by id,
+        never rewritten, so the I/O is O(folded suffix).
 
-    def replace_segment_suffix(self, df: DataFrame, table: str,
-                               token: list[str], keep: int,
-                               sort_col: str | None = None) -> bool:
-        """Fold ``token[keep:]`` into ONE fresh segment holding ``df``
-        — the MINOR-compaction primitive: the committed segment list
-        becomes ``token[:keep] + [new_seg] + gained``, where ``gained``
-        is whatever the head appended past ``token`` (carried in
-        order, so raced batches keep their precedence over the folded
-        content, exactly like ``replace(on_conflict="merge")``).  The
-        prefix — at 100 TB the store-sized base a merge-on-read table
-        never wants to rewrite — is referenced by id, NOT restaged:
-        this commit's I/O is O(folded suffix).
+        The commit happens only while the head's list still STARTS
+        WITH ``token``; ``exact=True`` (re-derives that TRANSFORM
+        content under a new geometry, whose rows a raced append would
+        silently contradict) requires the head to EQUAL it.  On a
+        conflict nothing is committed, the orphan segment is removed
+        best-effort, and the call returns False: a fold returns 0 (the
+        raced rewrite already did the work), a re-derive raises
+        ``ConcurrentWriteError``.
 
-        Aborts (returns False, nothing committed, the orphan segment
-        removed best-effort) when the head's list no longer STARTS
-        WITH ``token``: something REPLACED the list (a full
-        ``compact_segments``/``replace``/``restore_version``), and
-        suffix surgery derived from the superseded list could
-        resurrect rows the replacement folded away.  The caller simply
-        retries from a fresh snapshot — or skips, since the raced
-        replacement already did the maintenance.
+        A rewrite is unpublished until that single commit: a crash
+        before it leaves only an unreferenced segment, which
+        ``vacuum``'s age-gated sweep reclaims.  Nothing is recovered
+        when the table is next opened — a rewrite that never returned
+        has not happened.
 
-        ``token`` must be the segment list of the very manifest ``df``
-        was derived from (same rule as ``compact_segments``); layout
-        metadata (key / schema / partition_cols / extra) is
-        taken from the HEAD at commit time — this is a data-layout
-        operation that never changes table geometry or metadata."""
+        Metadata flips in the same commit as the data: the published
+        ``extra`` is ``extra_merge(extra, head_extra)`` when a merge is
+        given, else ``extra`` when given, else the head's.  The schema
+        is ``df``'s for a whole-table rewrite (``keep=0``) and the
+        head's otherwise."""
         if not 0 <= keep < len(token):
             raise ValueError(f"keep must be in [0, {len(token)}), "
                              f"got {keep}")
@@ -879,17 +745,24 @@ class VersionedTableBackend:
 
         def payload(latest):
             head = list(latest["segments"]) if latest else []
-            if head[:len(token)] != token:
+            if head[:len(token)] != token or (exact and head != token):
                 raise ConcurrentWriteError(
-                    f"replace_segment_suffix({table}): the segment list "
-                    f"was replaced (not appended to) after the caller's "
-                    f"snapshot — re-derive the fold and retry")
-            doc = {k: latest[k] for k in
-                   ("segments", "key", "schema")}
-            for opt in ("partition_cols", "extra", "sort_col"):
+                    f"rewrite({table}): the segment list changed after "
+                    f"the caller's snapshot — re-derive and retry")
+            doc = {k: latest[k] for k in ("key", "schema")}
+            for opt in ("partition_cols", "sort_col"):
                 if opt in latest:
                     doc[opt] = latest[opt]
             doc["segments"] = token[:keep] + [seg] + head[len(token):]
+            if keep == 0:
+                doc["schema"] = df.schema.json()
+            head_extra = latest.get("extra")
+            if extra_merge is not None:
+                merged = extra_merge(extra, dict(head_extra or {}))
+            else:
+                merged = extra if extra is not None else head_extra
+            if merged:
+                doc["extra"] = dict(merged)
             return doc
 
         try:
@@ -939,7 +812,7 @@ class VersionedTableBackend:
         horizon = time.time() - min_age_seconds
         age_skipped = 0
         # counts EVERY reclamation kind (superseded manifests, torn
-        # remnants, stale .tmp files, dropped stages), not just data
+        # remnants, stale .tmp files, retired stages), not just data
         # segments: a run that cleaned real garbage but no segments
         # must not warn that nothing was reclaimed
         other_reclaimed = 0
@@ -965,8 +838,8 @@ class VersionedTableBackend:
 
         tables_dir = fsio.join(self.root(spark), "tables")
         # ONE manifest read per (table, version) for the whole vacuum:
-        # the provenance pass, head resolution, and retention logic all
-        # reuse this map (each read is a driver round-trip — tripling
+        # the retired-stage pass, head resolution, and retention logic
+        # all reuse this map (each read is a driver round-trip — tripling
         # them tripled vacuum wall time on many-table warehouses)
         manifests_by_table: dict[str, dict[int, dict | None]] = {
             table: {v: self._manifest_or_none(spark, table, v)
@@ -974,34 +847,15 @@ class VersionedTableBackend:
             for table in fsio.listdir(spark, tables_dir)
         }
 
-        # First, finish crashed replaces whose staged-drop was lost: a
-        # stage whose CURRENT commit id is cited as a swap source by any
-        # manifest was published — drop it now.  Trimming first could
-        # delete the citing manifest while the stage survives, and the
-        # next recover_replace would then re-run the stale swap,
-        # rolling the table back over every post-swap commit.
-        cited: set[tuple[str, str]] = set()
-        for manifests in manifests_by_table.values():
-            for manifest in manifests.values():
-                src = manifest.get("source") if manifest else None
-                if src:
-                    cited.add((src[0], src[1]))
         for table, manifests in manifests_by_table.items():
-            live = [v for v in sorted(manifests) if manifests[v] is not None]
-            if not live:
-                continue   # only torn remnants — handled below
-            head = manifests[live[-1]]
-            if (table, head["id"]) in cited:
-                self.drop(spark, table)
-                manifests_by_table[table] = {}
-                other_reclaimed += 1
-            elif (table.endswith("__compactseg") and
-                    old_enough(self._manifest_path(spark, table,
-                                                   max(manifests)))):
-                # a compact_segments stage whose swap never committed
-                # (otherwise the provenance pass above dropped it): the
-                # stage is always re-derivable, so an aged one is a
-                # crash leftover — drop it, freeing its segments
+            if (table.endswith(_RETIRED_STAGE_SUFFIXES) and manifests
+                    and old_enough(self._manifest_path(spark, table,
+                                                       max(manifests)))):
+                # a stage table of the retired staged-swap protocol
+                # (written by an earlier release; no rewrite stages
+                # anything now): aged, it is a crash leftover whose
+                # content was either published or never acknowledged —
+                # drop it so it stops pinning its segments
                 self.drop(spark, table)
                 manifests_by_table[table] = {}
                 other_reclaimed += 1

@@ -116,15 +116,10 @@ def test_ivf_drift_and_refresh_cycle(spark, tmp_path):
     """IVF index maintenance: vectors APPENDED with stale centroids
     (fast ingest) quantize a drifted distribution badly; a
     ``refresh_ivf_index`` retrain-and-rewrite restores pruned-probe
-    recall, and a crash mid-swap is repaired by ``recover_ivf_index``."""
+    recall, and a refresh that crashes before its commit leaves the
+    refreshed index it would have replaced."""
     from dlx_spark import tableio
     from dlx_spark.operators import bucketing
-    from dlx_spark.tableio_versioned import VersionedTableBackend
-
-    class LosesStagedDrop(VersionedTableBackend):
-        def drop(self, spark, table):
-            if not table.endswith("__refresh"):
-                super().drop(spark, table)
 
     be = tableio.get_backend()
     rows = _clustered_vectors()
@@ -157,28 +152,27 @@ def test_ivf_drift_and_refresh_cycle(spark, tmp_path):
         # nothing lost in the rewrite
         assert be.read(spark, path).count() == combined.count()
 
-        # crash window: stage committed, swap not yet — recover
-        # publishes the stage and probes see the full index again
-        be.write_partitioned(be.read(spark, path), path + "__refresh",
-                             ["list_id"])
-        bucketing.recover_ivf_index(spark, path)
-        assert not be.exists(spark, path + "__refresh")
+        # crash at the commit of a second refresh: the index keeps the
+        # first refresh's lists, so probes with its centroids still hit
+        head = be.snapshot_token(spark, path)
+
+        def crash(spark, table, payload_fn):
+            raise RuntimeError("simulated crash at the refresh commit")
+
+        be._commit = crash
+        try:
+            with pytest.raises(RuntimeError, match="simulated crash"):
+                bucketing.refresh_ivf_index(spark, path, n_centroids=4,
+                                            seed=8)
+        finally:
+            del be._commit
+        assert be.snapshot_token(spark, path) == head
         assert be.read(spark, path).count() == combined.count()
         got2 = {r["id"] for r in bucketing.probe_ivf_index(
             spark, path, cents1, q, k=10, nprobe=1).collect()}
         assert got2 == got
-        # swap committed, staged drop lost -> stage dropped, live intact
-        lossy = LosesStagedDrop(root=be.root(spark))
-        lossy.write_partitioned(be.read(spark, path), path + "__refresh",
-                                ["list_id"])
-        lossy.replace(spark, path, path + "__refresh")
-        assert be.exists(spark, path + "__refresh")
-        bucketing.recover_ivf_index(spark, path)
-        assert not be.exists(spark, path + "__refresh")
-        assert be.read(spark, path).count() == combined.count()
     finally:
-        for t in (path, path + "__refresh"):
-            be.drop(spark, t)
+        be.drop(spark, path)
 
 
 @pytest.mark.slow

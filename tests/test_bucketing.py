@@ -33,28 +33,10 @@ def _exchanges(df) -> int:
         - plan.count("ReusedExchange")
 
 
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    left = spark.range(0, 10_000).select(
-        F.col("id").alias("k"), (F.col("id") % 7).alias("a"))
-    right = spark.range(0, 10_000).select(
-        F.col("id").alias("k"), (F.col("id") % 11).alias("b"))
-    bucketing.write_bucketed(left, "t_left_bkt", "k", n_buckets=8)
-    bucketing.write_bucketed(right, "t_right_bkt", "k", n_buckets=8)
-    try:
-        l = bucketing.read_table(spark, "t_left_bkt")
-        r = bucketing.read_table(spark, "t_right_bkt")
-        # keep the join sort-merge so the bucketed layout is what
-        # satisfies the distribution (a broadcast would hide it)
-        joined = l.hint("merge").join(r, "k")
-        assert joined.count() == 10_000
-        assert _exchanges(joined) == 0, "bucketed join must not shuffle"
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_left_bkt")
-        spark.sql("DROP TABLE IF EXISTS t_right_bkt")
-
-
 def test_unbucketed_join_does_shuffle(spark):
-    """Control: the same join without bucketing shuffles both sides."""
+    """A sort-merge join of two unbucketed frames shuffles both sides
+    (the engine's tables are path-based, with no bucket spec to elide
+    an exchange)."""
     left = spark.range(0, 10_000).select(F.col("id").alias("k"))
     right = spark.range(0, 10_000).select(F.col("id").alias("k"))
     joined = left.hint("merge").join(right, "k")
@@ -243,15 +225,9 @@ def test_ann_index_ops_route_through_backend_seam(spark):
             self.calls.append(("read", table))
             return super().read(spark, table)
 
-        def replace(self, spark, table, staged, token=None,
-                    on_conflict="merge", **kw):
-            self.calls.append(("replace", table, staged, on_conflict))
-            super().replace(spark, table, staged, token=token,
-                            on_conflict=on_conflict, **kw)
-
-        def recover_replace(self, spark, table, staged):
-            self.calls.append(("recover_replace", table, staged))
-            super().recover_replace(spark, table, staged)
+        def rewrite(self, df, table, token, keep=0, **kw):
+            self.calls.append(("rewrite", table, keep, kw.get("exact")))
+            return super().rewrite(df, table, token, keep, **kw)
 
     rng = np.random.RandomState(11)
     rows = [(i, rng.standard_normal(8).tolist()) for i in range(40)]
@@ -268,15 +244,13 @@ def test_ann_index_ops_route_through_backend_seam(spark):
         bucketing.append_ivf_index(df, "t_seam_ivf", cents)
         bucketing.refresh_ivf_index(spark, "t_seam_ivf", n_centroids=3,
                                     seed=11)
-        bucketing.recover_ivf_index(spark, "t_seam_ivf")
         bucketing.probe_ivf_index(spark, "t_seam_ivf", cents, rows[0][1],
                                   k=3, nprobe=1).collect()
         ops = {c[0] for c in rec.calls}
         assert ops >= {"write_partitioned", "append_partitioned", "read",
-                       "replace", "recover_replace"}
+                       "rewrite"}
         # the refresh publishes conflict-checked, through the seam
-        assert ("replace", "t_seam_ivf", "t_seam_ivf__refresh",
-                "fail") in rec.calls
+        assert ("rewrite", "t_seam_ivf", 0, True) in rec.calls
         assert ("write_partitioned", "t_seam_lsh",
                 ("band", "bucket")) in rec.calls
         assert ("write_partitioned", "t_seam_ivf", ("list_id",)) in rec.calls
@@ -286,7 +260,7 @@ def test_ann_index_ops_route_through_backend_seam(spark):
                                       dim=8)
     finally:
         tableio.set_backend(prev)
-        for t in ("t_seam_lsh", "t_seam_ivf", "t_seam_ivf__refresh"):
+        for t in ("t_seam_lsh", "t_seam_ivf"):
             rec.drop(spark, t)
 
 

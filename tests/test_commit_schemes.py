@@ -183,7 +183,7 @@ def test_lost_update_without_cas_and_exactly_one_winner_with(
 
 def test_versioned_lifecycle_on_cas_scheme_over_object_store(spark, be):
     """The full versioned-table lifecycle — write, append, snapshot
-    isolation, replace, provenance-proved recovery, time travel — on
+    isolation, rewrite (carried and refused races), time travel — on
     copy+delete rename with the driver-local CAS installed."""
     fsio.set_commit_scheme(fsio.SingleDriverCASScheme())
     be.write(_df(spark, [(1, "a"), (2, "b")]), "t_cas", "id")
@@ -193,14 +193,17 @@ def test_versioned_lifecycle_on_cas_scheme_over_object_store(spark, be):
     assert be.read(spark, "t_cas").count() == 3
     assert [r["id"] for r in be.read_version(spark, "t_cas", 1)
             .orderBy("id").collect()] == [1, 2]
-    # replace + crashed-drop recovery, all through copy+delete publishes
-    be.write(_df(spark, [(9, "staged")]), "t_cas__stage", "id")
-    be.replace(spark, "t_cas", "t_cas__stage")
-    assert [r["id"] for r in be.read(spark, "t_cas").collect()] == [9]
-    be.write(_df(spark, [(10, "s2")]), "t_cas__stage", "id")
-    be.recover_replace(spark, "t_cas", "t_cas__stage")
-    assert [r["id"] for r in be.read(spark, "t_cas").collect()] == [10]
-    assert not be.exists(spark, "t_cas__stage")
+    # rewrites, all through copy+delete publishes: a raced append is
+    # carried, and a re-derive from a stale snapshot is refused
+    token = be.snapshot_token(spark, "t_cas")
+    be.append(_df(spark, [(10, "raced")]), "t_cas", "id")
+    assert be.rewrite(_df(spark, [(9, "rewritten")]), "t_cas", token)
+    assert sorted(r["id"] for r in be.read(spark, "t_cas").collect()) \
+        == [9, 10]
+    assert not be.rewrite(_df(spark, [(11, "stale")]), "t_cas", token,
+                          exact=True)
+    assert sorted(r["id"] for r in be.read(spark, "t_cas").collect()) \
+        == [9, 10]
 
 
 def test_concurrent_appends_race_through_cas_scheme(spark, be):

@@ -373,12 +373,47 @@ def test_streaming_neardedup_crash_window(spark, split_corpus, tmp_path):
         idx.drop()
 
 
+def test_append_after_failed_compaction_survives_reopen(spark, monkeypatch):
+    """A DigestIndex compaction that fails before it publishes, then an
+    acknowledged append, then a reopen: the appended digest must still
+    be indexed.  (A staged-swap compaction left a stage that the reopen
+    published over the append, so ``filter_new`` called the appended
+    document new again.)"""
+    from dlx_spark.tableio_versioned import VersionedTableBackend
+
+    name = "t_dg_cfail"
+    docs = spark.createDataFrame([(1, "alpha beta"), (2, "gamma delta")],
+                                 "doc_id long, text string")
+    idx = DigestIndex.create(docs, name)
+    try:
+        idx.append(spark.createDataFrame([(3, "epsilon zeta")],
+                                         "doc_id long, text string"))
+        commit = VersionedTableBackend._commit
+
+        def fail_on_digests(self, spark, table, payload_fn):
+            if table == f"{name}_digests":
+                raise RuntimeError("simulated crash at the compaction commit")
+            return commit(self, spark, table, payload_fn)
+
+        monkeypatch.setattr(VersionedTableBackend, "_commit", fail_on_digests)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            idx.compact()
+        monkeypatch.undo()
+        appended = spark.createDataFrame([(4, "eta theta iota")],
+                                         "doc_id long, text string")
+        idx.append(appended)
+        reopened = DigestIndex(spark, name)
+        assert reopened.filter_new(appended).count() == 0
+        assert reopened.filter_new(docs).count() == 0
+    finally:
+        idx.drop()
+
+
 @pytest.mark.slow
 def test_compact_folds_appended_files(spark, split_corpus):
     """Repeated appends accrete segments; compact() folds each table to
     one segment holding fewer files than before, with identical probe
-    results, and a compaction stage committed before a crash is
-    published on reopen."""
+    results before and after a reopen."""
     _, corpus, batch = split_corpus
     idx = MinHashIndex.create(corpus, "t_mh_cpt")
     try:
@@ -400,13 +435,7 @@ def test_compact_folds_appended_files(spark, split_corpus):
                  for r in idx.probe(clone, 0.99).collect()}
         assert after == before and len(after) >= 1
 
-        # simulate the crash window: the stage committed, the swap not
-        be = tableio.get_backend()
-        be.write(_tbl(spark, "t_mh_cpt_sigs"), "t_mh_cpt_sigs__compact",
-                 "id")
-        reopened = MinHashIndex(spark, "t_mh_cpt")  # recovers on open
-        assert be.exists(spark, "t_mh_cpt_sigs")
-        assert not be.exists(spark, "t_mh_cpt_sigs__compact")
+        reopened = MinHashIndex(spark, "t_mh_cpt")
         again = {(r["corpus_id"], r["batch_id"])
                  for r in reopened.probe(clone, 0.99).collect()}
         assert again == before
@@ -943,8 +972,9 @@ def test_embedding_ingest_stream_end_to_end(spark, emb_split, tmp_path):
 def test_embedding_rebucket_regrows_plane_count(spark, emb_split):
     """EmbeddingIndex.rebucket: re-deriving the key table under a new
     hyperplane geometry must leave probe results equal to a FRESH index
-    created with that geometry (same payload, same seed), and the meta
-    commit-point protocol must survive crashes on either side of it."""
+    created with that geometry (same payload, same seed), and a rebucket
+    that crashes before its one commit must leave the committed geometry
+    answering on reopen."""
     from dlx_spark.operators.dedup_index import EmbeddingIndex
 
     _, corpus, batch = emb_split
@@ -964,39 +994,28 @@ def test_embedding_rebucket_regrows_plane_count(spark, emb_split):
         assert (_tbl(spark, "t_emb_rb_buckets").count()
                 == 2 * _tbl(spark, "t_emb_rb_vecs").count())
 
-        # pre-commit crash: staged keys but NO staged meta -> discarded,
-        # live geometry still answers identically
+        # a crash at the commit of a second rebucket: nothing lands,
+        # the committed geometry still answers identically on reopen
         be = tableio.get_backend()
-        be.write(_tbl(spark, "t_emb_rb_buckets").limit(3),
-                 "t_emb_rb_buckets__rebucket", "bucket")
-        reopened = EmbeddingIndex(spark, "t_emb_rb")
-        assert not be.exists(spark, "t_emb_rb_buckets__rebucket")
-        assert reopened.params["n_planes"] == 8
 
-        # post-commit crash: BOTH stages present -> rolled forward
-        from dlx_spark.operators import similarity
-        import json as jsonlib
-        p2 = dict(reopened.params)
-        p2["n_planes"], p2["bands"] = 4, 1
-        keys2 = similarity.banded_lsh_keys(
-            _tbl(spark, "t_emb_rb_vecs"), 1, 4, p2["seed"],
-            vec_col="vec", id_col="id", dim=dim)
-        be.write(keys2, "t_emb_rb_buckets__rebucket", "bucket")
-        be.write_plain(spark.createDataFrame([(jsonlib.dumps(p2),)],
-                                             "params string"),
-                       "t_emb_rb_meta__rebucket")
-        rolled = EmbeddingIndex(spark, "t_emb_rb")
-        assert rolled.params["n_planes"] == 4 and rolled.params["bands"] == 1
-        assert not be.exists(spark, "t_emb_rb_meta__rebucket")
-        assert not be.exists(spark, "t_emb_rb_buckets__rebucket")
-        back = {(r["corpus_id"], r["batch_id"])
-                for r in rolled.probe(batch, threshold=0.9).collect()}
-        assert back  # the rolled-forward geometry answers
+        def crash(spark, table, payload_fn):
+            raise RuntimeError("simulated crash at the rebucket commit")
+
+        be._commit = crash
+        try:
+            with pytest.raises(RuntimeError, match="simulated crash"):
+                idx.rebucket(n_planes=4, bands=1)
+        finally:
+            del be._commit
+        reopened = EmbeddingIndex(spark, "t_emb_rb")
+        assert reopened.params["n_planes"] == 8
+        assert reopened.params["bands"] == 2
+        again = {(r["corpus_id"], r["batch_id"], round(r["cosine"], 6))
+                 for r in reopened.probe(batch, threshold=0.9).collect()}
+        assert again == got
     finally:
         idx.drop()
         fresh.drop()
-        for t in ("t_emb_rb_buckets__rebucket", "t_emb_rb_meta__rebucket"):
-            tableio.get_backend().drop(spark, t)
 
 
 @pytest.mark.slow
@@ -1067,19 +1086,13 @@ def test_simhash_probe_mega_bucket_cap_stays_linear(spark):
 
 
 @pytest.mark.slow
-def test_rebucket_intent_discards_stage_when_append_raced_the_crash(spark):
-    """Round-6 verdict item: the rebucket residual window.  An
-    append lands AFTER rebucket's conflict check armed the commit point
-    and the process crashes — the old roll-forward published the staged
-    keys and silently dropped the appended vector's keys.  The intent
-    table (the snapshot token persisted at commit-point time) lets
-    reopen-recovery re-run the conflict check: the stage is discarded,
-    the live geometry is kept, and the appended vector stays findable.
-    A crash WITHOUT a raced append still rolls forward."""
-    import json as jsonlib
+def test_rebucket_geometry_rides_the_key_table_manifest(spark):
+    """EmbeddingIndex.rebucket commits its geometry in the key table's
+    manifest, with the keys: a later append and a compaction keep it,
+    an append that races a rebucket fails it and stays findable, and a
+    reopen reads the committed geometry over the create-time meta."""
     import random
 
-    from dlx_spark.operators import similarity
     from dlx_spark.operators.dedup_index import EmbeddingIndex
 
     rng = random.Random(23)
@@ -1087,123 +1100,51 @@ def test_rebucket_intent_discards_stage_when_append_raced_the_crash(spark):
     corpus = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vecs)],
         "vec_id long, embedding array<double>")
-    extra_vec = [x + 0.001 for x in vecs[0]]
-    extra = spark.createDataFrame([(500, extra_vec)],
+    extra = spark.createDataFrame([(500, [x + 0.001 for x in vecs[0]])],
                                   "vec_id long, embedding array<double>")
+    probe = extra.withColumn("vec_id", F.col("vec_id") + 1)
     be = tableio.get_backend()
-
-    def stage_crashed_rebucket(name, idx, race_append):
-        """Reproduce the crash state: staged keys + intent + staged
-        meta written, publish lost — with an append optionally racing
-        in after the intent (inside the old protocol's blind window)."""
-        p = dict(idx.params)
-        p["n_planes"] = 5
-        token = be.snapshot_token(spark, f"{name}_buckets")
-        keys = similarity.banded_lsh_keys(
-            be.read(spark, f"{name}_vecs"), p["bands"], 5, p["seed"],
-            vec_col="vec", id_col="id", dim=6)
-        be.write(keys, f"{name}_buckets__rebucket", "bucket")
-        be.write_plain(spark.createDataFrame(
-            [(jsonlib.dumps(token),)], "token string"),
-            f"{name}_rebucket_intent")
-        if race_append:
-            idx.append(extra)             # lands under the OLD geometry
-        be.write_plain(spark.createDataFrame(
-            [(jsonlib.dumps(p),)], "params string"),
-            f"{name}_meta__rebucket")
-
-    # raced append: reopen must DISCARD the stage and keep the append
-    idx = EmbeddingIndex.create(corpus, "t_rbi", n_planes=4, dim=6)
+    idx = EmbeddingIndex.create(corpus, "t_rbg", n_planes=4, dim=6)
     try:
-        stage_crashed_rebucket("t_rbi", idx, race_append=True)
-        reopened = EmbeddingIndex(spark, "t_rbi")
-        assert reopened.params["n_planes"] == 4          # old geometry
-        for t in ("t_rbi_meta__rebucket", "t_rbi_buckets__rebucket",
-                  "t_rbi_rebucket_intent"):
-            assert not be.exists(spark, t)
-        hits = {(r["corpus_id"], r["batch_id"]) for r in reopened.probe(
-            extra.withColumn("vec_id", F.col("vec_id") + 1),
-            threshold=0.99).collect()}
-        assert (500, 501) in hits        # the raced append is findable
+        assert "extra" not in be.latest_manifest(spark, "t_rbg_buckets")
+        idx.rebucket(n_planes=5)
+        assert (be.latest_manifest(spark, "t_rbg_buckets")["extra"]
+                == {"n_planes": 5, "bands": 1})
+        idx.append(extra)
+        idx.compact()
+        reopened = EmbeddingIndex(spark, "t_rbg")
+        assert reopened.params["n_planes"] == 5
+        hits = {(r["corpus_id"], r["batch_id"]) for r in
+                reopened.probe(probe, threshold=0.99).collect()}
+        assert (500, 501) in hits
+
+        # an append racing the re-key (it reads the vectors after the
+        # key table's snapshot) fails the rebucket; the append's keys
+        # stay under the committed geometry, findable
+        token = be.snapshot_token(spark, "t_rbg_buckets")
+        read = be.read
+
+        def read_then_append(spark, table):
+            if table == "t_rbg_vecs":
+                be.read = read
+                reopened.append(extra.withColumn("vec_id", F.lit(600).cast("long")))
+            return read(spark, table)
+
+        be.read = read_then_append
+        try:
+            with pytest.raises(tableio.ConcurrentWriteError):
+                reopened.rebucket(n_planes=7)
+        finally:
+            be.__dict__.pop("read", None)
+        assert be.snapshot_token(spark, "t_rbg_buckets")[:len(token)] \
+            == token
+        again = EmbeddingIndex(spark, "t_rbg")
+        assert again.params["n_planes"] == 5
+        hits = {r["corpus_id"] for r in
+                again.probe(probe, threshold=0.99).collect()}
+        assert {500, 600} <= hits
     finally:
         idx.drop()
-        be.drop(spark, "t_rbi_rebucket_intent")
-
-    # no race: the same crash state rolls FORWARD to the new geometry
-    idx2 = EmbeddingIndex.create(corpus, "t_rbi2", n_planes=4, dim=6)
-    try:
-        stage_crashed_rebucket("t_rbi2", idx2, race_append=False)
-        rolled = EmbeddingIndex(spark, "t_rbi2")
-        assert rolled.params["n_planes"] == 5
-        assert not be.exists(spark, "t_rbi2_rebucket_intent")
-    finally:
-        idx2.drop()
-        be.drop(spark, "t_rbi2_rebucket_intent")
-
-
-@pytest.mark.slow
-def test_rebucket_recovery_after_lost_staged_drop(spark, tmp_path):
-    """Review regression (reproduced, then fixed): the conflict-checked
-    recovery replay must not destroy its own progress.  A crash between
-    the buckets-swap manifest commit and the staged drop leaves the
-    stage present with its content already published — the replay must
-    consult provenance and finish the cleanup, not count its own
-    published segments as 'gained', fail, and roll back the meta stage
-    (leaving keys and params under mismatched geometries)."""
-    import json as jsonlib
-    import random
-
-    from dlx_spark.operators import similarity
-    from dlx_spark.operators.dedup_index import EmbeddingIndex
-    from dlx_spark.tableio_versioned import VersionedTableBackend
-
-    rng = random.Random(29)
-    vecs = [[rng.gauss(0, 1) for _ in range(6)] for _ in range(20)]
-    corpus = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<double>")
-
-    def stage_rebucket(name, idx, be):
-        p = dict(idx.params)
-        p["n_planes"] = 5
-        token = be.snapshot_token(spark, f"{name}_buckets")
-        keys = similarity.banded_lsh_keys(
-            be.read(spark, f"{name}_vecs"), p["bands"], 5, p["seed"],
-            vec_col="vec", id_col="id", dim=6)
-        be.write(keys, f"{name}_buckets__rebucket", "bucket")
-        be.write_plain(spark.createDataFrame(
-            [(jsonlib.dumps(token),)], "token string"),
-            f"{name}_rebucket_intent")
-        be.write_plain(spark.createDataFrame(
-            [(jsonlib.dumps(p),)], "params string"),
-            f"{name}_meta__rebucket")
-        return token
-
-    prev = tableio.get_backend()
-    vbe = VersionedTableBackend(root=str(tmp_path / "vroot_mw"))
-    tableio.set_backend(vbe)
-    try:
-        idx2 = EmbeddingIndex.create(corpus, "t_rbmw2", n_planes=4, dim=6)
-        stage_rebucket("t_rbmw2", idx2, vbe)
-        # the swap commit itself (replace minus its staged drop):
-        sm = vbe._latest(spark, "t_rbmw2_buckets__rebucket")[1]
-        vbe._commit(spark, "t_rbmw2_buckets", lambda latest: {
-            **{k: sm[k] for k in ("segments", "key", "schema")},
-            "source": ["t_rbmw2_buckets__rebucket", sm["id"]]})
-        rolled2 = EmbeddingIndex(spark, "t_rbmw2")
-        assert rolled2.params["n_planes"] == 5        # meta published
-        assert not vbe.exists(spark, "t_rbmw2_buckets__rebucket")
-        assert not vbe.exists(spark, "t_rbmw2_rebucket_intent")
-        # keys readable and consistent with the new geometry
-        assert (vbe.read(spark, "t_rbmw2_buckets").count()
-                == vbe.read(spark, "t_rbmw2_vecs").count())
-        probe = spark.createDataFrame(
-            [(900, [x + 0.001 for x in vecs[0]])],
-            "vec_id long, embedding array<double>")
-        assert rolled2.probe(probe, threshold=0.99).count() >= 1
-        rolled2.drop()
-    finally:
-        tableio.set_backend(prev)
 
 
 # ---------------------------------------------------------------------------

@@ -89,6 +89,50 @@ def test_find_by_date(fstore):
     assert fstore.find_by_date(T0).count() == 2
 
 
+def test_import_commits_through_the_backend_and_leaves_no_stage(fstore):
+    """Each import is one upsert on the files table's manifest: no
+    staging directory is left beside it, and an overwrite supersedes
+    the file's row by key."""
+    import os
+
+    fstore.import_from_binary(b"doc", identifiers=[Identifier("isbn", "x")],
+                              languages=["EN"], mimetype="t", source="s",
+                              now=T0)
+    fstore.import_batch([
+        {"data": b"doc2", "identifiers": [Identifier("isbn", "y")],
+         "languages": ["EN"], "mimetype": "t", "source": "s"}], now=T0)
+    fstore.import_from_binary(b"doc", identifiers=[Identifier("isbn", "z")],
+                              languages=["FR"], mimetype="t", source="s2",
+                              overwrite=True, now=T1)
+    assert sorted(os.listdir(fstore.root)) == ["_v"]
+    rows = {r["_id"]: r for r in fstore.df().collect()}
+    assert len(rows) == 2
+    checksum = __import__("hashlib").md5(b"doc").hexdigest()
+    assert rows[checksum]["source"] == "s2"
+    assert list(rows[checksum]["languages"]) == ["FR"]
+
+
+def test_failed_import_commit_leaves_earlier_rows(fstore, monkeypatch):
+    """An import whose commit fails leaves the rows committed before it
+    readable (an in-place overwrite of the table lost them all)."""
+    from dlx_spark.tableio_versioned import VersionedTableBackend
+
+    fstore.import_from_binary(b"kept", identifiers=[Identifier("isbn", "k")],
+                              languages=["EN"], mimetype="t", source="s",
+                              now=T0)
+
+    def boom(self, spark, table, payload_fn):
+        raise RuntimeError("crash at the import commit")
+
+    monkeypatch.setattr(VersionedTableBackend, "_commit", boom)
+    with pytest.raises(RuntimeError, match="crash at the import"):
+        fstore.import_from_binary(b"lost", identifiers=[Identifier("isbn", "l")],
+                                  languages=["EN"], mimetype="t", source="s",
+                                  now=T1)
+    monkeypatch.undo()
+    assert [r["source"] for r in fstore.df().collect()] == ["s"]
+
+
 def test_encode_fn():
     assert encode_fn(["A/RES/1"], ["en"], "pdf") == "A_RES_1-EN.pdf"
     assert encode_fn("S [2020]*x:y;z", "fr", "txt") == "S_^2020^!x#y%z-FR.txt"

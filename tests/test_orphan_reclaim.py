@@ -6,9 +6,9 @@ them (the round-6 reproduced defect: stale warehouse dirs from a killed
 run bricked `DigestIndex.create`), and ``vacuum`` reclaims them.
 
 One test per index family plants the remnants for every table the
-family creates, then asserts create + read-back is green.  The catalog
-helper ``bucketing.write_bucketed`` keeps its own guard for a managed
-location staged but never registered.
+family creates, then asserts create + read-back is green.  A rewrite
+(compaction, rebucket, refresh) that dies before its manifest commit
+leaves the same kind of remnant: one unreferenced data segment.
 """
 
 from __future__ import annotations
@@ -117,25 +117,6 @@ def test_lsh_and_ivf_create_reclaim_orphans(spark, vecs):
     finally:
         be.drop(spark, "t_orph_lsh")
         be.drop(spark, "t_orph_ivf")
-
-
-def test_write_bucketed_reclaims_orphan(spark):
-    """The catalog helper's guard: files at the managed location of an
-    unregistered table (a killed ``saveAsTable``) are cleared before
-    the create."""
-    db = spark.catalog.getDatabase(spark.catalog.currentDatabase())
-    loc = fsio.join(db.locationUri, "t_orph_bkt")
-    fsio.mkdirs(spark, loc)
-    fsio.write_text(spark, fsio.join(loc, "part-00000.parquet"),
-                    "torn remnant of a killed write")
-    assert not spark.catalog.tableExists("t_orph_bkt")
-    try:
-        bucketing.write_bucketed(
-            spark.range(100).select(F.col("id").alias("k")),
-            "t_orph_bkt", "k", n_buckets=4)
-        assert spark.table("t_orph_bkt").count() == 100
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_orph_bkt")
 
 
 def test_append_creates_over_orphan(spark):

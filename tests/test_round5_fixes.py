@@ -50,15 +50,14 @@ def test_fsio_remove_missing_semantics_unchanged(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# IVF refresh publication through the shared tableio replace protocol
+# IVF refresh publication through the backend's one-commit rewrite
 # ---------------------------------------------------------------------------
 #
 # The IVF index is a partitioned table on the tableio backend, so a
-# refresh publishes through replace/recover_replace.  The crash states
-# follow the manifest commits: a stage is visible only once its own
-# manifest commit landed (a torn stage is invisible), and a committed
-# stage whose swap never landed is the full post-image, which recovery
-# publishes.
+# refresh publishes through ``rewrite``: one segment, one manifest
+# commit.  A refresh that dies before that commit (or whose manifest
+# never got past its ``.tmp-*`` file) has not happened; nothing is
+# recovered on the next open.
 
 
 def _be():
@@ -80,24 +79,21 @@ def _idx_ids(spark, table):
 @pytest.fixture(autouse=True)
 def _drop_ivf_tables(spark):
     yield
-    for t in ("t_r6_ivf", "t_r6_ivf__refresh", "t_r6_ivf2",
-              "t_r6_ivf2__refresh", "t_r6_ivf3", "t_r6_ivf3__refresh",
-              "t_r6_ivf5", "t_r6_ivf5__refresh"):
+    for t in ("t_r6_ivf", "t_r6_ivf3", "t_r6_ivf5"):
         _be().drop(spark, t)
 
 
 def test_recover_ivf_pre_publish_crash_keeps_live(spark, tmp_path):
-    """A refresh killed before its stage's manifest commit: the live
-    index is untouched, the stage never became visible, and recovery
-    has nothing to publish."""
+    """A refresh killed before its manifest commit: the live index is
+    untouched on the next read — there is nothing to recover."""
     from dlx_spark import tableio
     from dlx_spark.operators import bucketing, similarity
     from dlx_spark.tableio_versioned import VersionedTableBackend
 
-    class KilledAtStageCommit(VersionedTableBackend):
+    class KilledAtRewriteCommit(VersionedTableBackend):
         def _commit(self, spark, table, payload_fn):
-            if table.endswith("__refresh"):
-                raise RuntimeError("driver killed before the stage commit")
+            if getattr(self, "armed", False):
+                raise RuntimeError("driver killed before the commit")
             return super()._commit(spark, table, payload_fn)
 
     rng = np.random.RandomState(4)
@@ -105,61 +101,42 @@ def test_recover_ivf_pre_publish_crash_keeps_live(spark, tmp_path):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cents = similarity.ivf_centroids(df, n_centroids=3, seed=4)
     prev = tableio.get_backend()
-    be = KilledAtStageCommit(root=str(tmp_path / "vroot"))
+    be = KilledAtRewriteCommit(root=str(tmp_path / "vroot"))
     tableio.set_backend(be)
     try:
         bucketing.write_ivf_index(df, "t_r6_ivf", cents)
+        be.armed = True
         with pytest.raises(RuntimeError, match="killed"):
             bucketing.refresh_ivf_index(spark, "t_r6_ivf", n_centroids=3,
                                         seed=5)
-        assert not be.exists(spark, "t_r6_ivf__refresh")
-        bucketing.recover_ivf_index(spark, "t_r6_ivf")
-        assert _idx_ids(spark, "t_r6_ivf") == set(range(30))
-        assert be.versions(spark, "t_r6_ivf") == [1]
+        reopened = VersionedTableBackend(root=be._root)
+        assert {r["id"] for r in reopened.read(spark, "t_r6_ivf")
+                .select("id").collect()} == set(range(30))
+        assert reopened.versions(spark, "t_r6_ivf") == [1]
     finally:
         tableio.set_backend(prev)
 
 
-def test_recover_ivf_mid_swap_crash_publishes_stage(spark):
-    """Crash after the stage committed but before the swap: the staged
-    table is the full post-image — recovery publishes it over the live
-    index and drops the stage; running recovery again is a no-op."""
-    from dlx_spark.operators import bucketing
-
-    _write_idx(spark, "t_r6_ivf2", [1, 2, 3])
-    _write_idx(spark, "t_r6_ivf2__refresh", [10, 11, 12])
-    bucketing.recover_ivf_index(spark, "t_r6_ivf2")
-    assert _idx_ids(spark, "t_r6_ivf2") == {10, 11, 12}
-    assert not _be().exists(spark, "t_r6_ivf2__refresh")
-    bucketing.recover_ivf_index(spark, "t_r6_ivf2")
-    assert _idx_ids(spark, "t_r6_ivf2") == {10, 11, 12}
-
-
 def test_torn_staged_write_is_invisible_to_recovery(spark):
-    """The commit point claim itself: a stage whose manifest never got
-    past its ``.tmp-*`` file (segment written, rename not done) is no
-    table — recovery sees nothing staged and leaves the live index
-    untouched."""
-    from dlx_spark.operators import bucketing
-
+    """The commit point claim itself: a rewrite whose manifest never got
+    past its ``.tmp-*`` file (segment written, rename not done) is not
+    a version — the live index reads as before."""
     be = _be()
     _write_idx(spark, "t_r6_ivf3", [1, 2, 3])
     seg = be._write_segment(
         spark, spark.createDataFrame([(99, [9.0], 0)],
                                      "id long, vec array<double>, list_id int"),
-        "t_r6_ivf3__refresh", None, None, ["list_id"])
-    tdir = be._table_dir(spark, "t_r6_ivf3__refresh")
-    fsio.mkdirs(spark, tdir)
-    fsio.write_text(spark, fsio.join(tdir, ".tmp-torn.json"),
+        "t_r6_ivf3", None, ["list_id"])
+    fsio.write_text(spark, fsio.join(be._table_dir(spark, "t_r6_ivf3"),
+                                     ".tmp-torn.json"),
                     json.dumps({"segments": [seg]}))
-    assert not be.exists(spark, "t_r6_ivf3__refresh")
-    bucketing.recover_ivf_index(spark, "t_r6_ivf3")
+    assert be.versions(spark, "t_r6_ivf3") == [1]
     assert _idx_ids(spark, "t_r6_ivf3") == {1, 2, 3}
 
 
 def test_refresh_ivf_swap_leaves_no_residue(spark):
-    """A clean refresh ends with exactly the live table: no __refresh,
-    contents preserved, probes see the new quantization."""
+    """A clean refresh ends with exactly the live table: one segment,
+    no side table, contents preserved."""
     from dlx_spark.operators import bucketing, similarity
 
     rng = np.random.RandomState(3)
@@ -168,16 +145,18 @@ def test_refresh_ivf_swap_leaves_no_residue(spark):
     cents = similarity.ivf_centroids(df, n_centroids=4, seed=3)
     bucketing.write_ivf_index(df, "t_r6_ivf5", cents)
     bucketing.refresh_ivf_index(spark, "t_r6_ivf5", n_centroids=4, seed=3)
-    assert not _be().exists(spark, "t_r6_ivf5__refresh")
+    tables = fsio.listdir(spark, fsio.join(_be().root(spark), "tables"))
+    assert [t for t in tables if t.startswith("t_r6_ivf5")] == ["t_r6_ivf5"]
+    assert len(_be().snapshot_token(spark, "t_r6_ivf5")) == 1
     assert len(_idx_ids(spark, "t_r6_ivf5")) == 60
 
 
 @pytest.mark.slow
 def test_refresh_ivf_fails_clean_on_concurrent_append(spark, tmp_path):
     """An append_ivf_index racing the refresh (its rows assigned under the OLD centroids) must fail the
-    refresh via the snapshot-token conflict, leave the live index
-    exactly as the appender sees it, and clean the stage — the upgrade
-    over the old path protocol, which silently lost such appends."""
+    refresh via the snapshot-token conflict and leave the live index
+    exactly as the appender sees it — the upgrade over the old path
+    protocol, which silently lost such appends."""
     from dlx_spark import tableio
     from dlx_spark.operators import bucketing, similarity
     from dlx_spark.tableio_versioned import VersionedTableBackend
@@ -190,23 +169,23 @@ def test_refresh_ivf_fails_clean_on_concurrent_append(spark, tmp_path):
     cents = similarity.ivf_centroids(df, n_centroids=3, seed=5)
 
     class RacingBackend(VersionedTableBackend):
-        def write_partitioned(self, d, table, cols):
-            super().write_partitioned(d, table, cols)
-            if table.endswith("__refresh") and not getattr(
+        def _write_segment(self, *a, **kw):
+            if getattr(self, "_armed", False) and not getattr(
                     self, "_raced", False):
                 self._raced = True
                 bucketing.append_ivf_index(extra, "t_v_ivf_race", cents)
+            return super()._write_segment(*a, **kw)
 
     prev = tableio.get_backend()
     rb = RacingBackend(root=str(tmp_path / "vroot"))
     tableio.set_backend(rb)
     try:
         bucketing.write_ivf_index(df, "t_v_ivf_race", cents)
+        rb._armed = True
         with pytest.raises(tableio.ConcurrentWriteError):
             bucketing.refresh_ivf_index(spark, "t_v_ivf_race",
                                         n_centroids=3, seed=5)
         assert rb._raced
-        assert not rb.exists(spark, "t_v_ivf_race__refresh")
         assert rb.read(spark, "t_v_ivf_race").count() == 41  # append kept
         # the re-run (no race) succeeds over the grown index
         bucketing.refresh_ivf_index(spark, "t_v_ivf_race",
@@ -365,10 +344,8 @@ def test_reader_during_ivf_refresh(spark, tmp_path):
         fresh = {r["id"] for r in
                  _be().read(spark, path).select("id").collect()}
         assert fresh == want
-        assert not _be().exists(spark, path + "__refresh")
     finally:
-        for t in (path, path + "__refresh"):
-            _be().drop(spark, t)
+        _be().drop(spark, path)
 
 
 def test_table_backend_seam_routes_every_index_operation(spark):
@@ -402,11 +379,11 @@ def test_table_backend_seam_routes_every_index_operation(spark):
             self.calls.append(("read", table))
             return super().read(spark, table)
 
-        def replace(self, spark, table, staged, **kw):
-            # the seam's conflict-handling kwargs (token/on_conflict)
+        def rewrite(self, df, table, token, *a, **kw):
+            # the seam's conflict-handling arguments (keep/exact/extra)
             # must pass through overriding backends
-            self.calls.append(("replace", table))
-            super().replace(spark, table, staged, **kw)
+            self.calls.append(("rewrite", table))
+            return super().rewrite(df, table, token, *a, **kw)
 
         def drop(self, spark, table):
             self.calls.append(("drop", table))
@@ -434,40 +411,14 @@ def test_table_backend_seam_routes_every_index_operation(spark):
 
     ops = {op for op, _ in rec.calls}
     assert {"write", "write_plain", "append", "read",
-            "replace", "drop"} <= ops
+            "rewrite", "drop"} <= ops
     tables = {t for _, t in rec.calls}
     assert "t_seam_idx_digests" in tables and "t_seam_idx_meta" in tables
 
 
 # ---------------------------------------------------------------------------
-# Self-review fixes: re-entrant replace, banded probe defaults, legacy layouts
+# Self-review fixes: banded probe defaults, legacy layouts
 # ---------------------------------------------------------------------------
-
-def test_tableio_replace_is_reentrant_after_drop_crash(spark, tmp_path):
-    """A replace whose swap committed but whose staged DROP was lost
-    must be re-runnable by recovery: the replay publishes nothing new
-    (the provenance check finds its own commit) and only drops the
-    stage — appends that landed after the swap survive."""
-    from dlx_spark.tableio_versioned import VersionedTableBackend
-
-    class LosesStagedDrop(VersionedTableBackend):
-        def drop(self, spark, table):
-            if not table.endswith("__stage"):
-                super().drop(spark, table)
-
-    be = LosesStagedDrop(root=str(tmp_path / "vroot"))
-    df = spark.createDataFrame([(1,)], "x long")
-    be.write_plain(df, "t_reent")
-    be.write_plain(spark.createDataFrame([(2,)], "x long"), "t_reent__stage")
-    be.replace(spark, "t_reent", "t_reent__stage")   # drop "crashes"
-    assert be.exists(spark, "t_reent__stage")
-    be.append(df, "t_reent", "x")
-    VersionedTableBackend(root=be._root).recover_replace(
-        spark, "t_reent", "t_reent__stage")
-    assert sorted(r["x"] for r in be.read(spark, "t_reent").collect()) \
-        == [1, 2]
-    assert not be.exists(spark, "t_reent__stage")
-
 
 def test_banded_probe_defaults_do_not_conflict(spark, tmp_path):
     """bands>1 with the DEFAULT multiprobe argument must work (the

@@ -540,28 +540,60 @@ def test_crash_before_live_commit_leaves_store_untouched(
     assert st2.get("bib", 1).get_value("245", "a") == "Changed title"
 
 
+def test_commit_after_failed_rebucket_survives_reopen(
+        spark, tmp_path, monkeypatch):
+    """A rebucket that fails before it publishes, then an acknowledged
+    one-record commit, then a reopen: the commit is kept and the
+    modulus stays the committed one.  (A staged-swap rebucket left a
+    stage that the reopen published over the commit: 8 bibs, modulus
+    32.)"""
+    from dlx_spark.tableio_versioned import VersionedTableBackend
+
+    st = _seed_plain(spark, tmp_path, "wh_rb_fail")
+    real = VersionedTableBackend._commit
+
+    def boom(self, spark_, table, payload_fn):
+        if table == "bibs":
+            raise RuntimeError("crash at the rebucket commit")
+        return real(self, spark_, table, payload_fn)
+    monkeypatch.setattr(VersionedTableBackend, "_commit", boom)
+    with pytest.raises(RuntimeError, match="crash at the rebucket"):
+        st.rebucket("bib", 32)
+    monkeypatch.undo()
+    st.commit([Bib().set("245", "a", "After", auth_control=False)],
+              user="u", now=T1)
+
+    st2 = MarcStore(spark, st.root)
+    assert st2.bibs().count() == 9
+    assert st2.n_buckets("bib") == 16
+
+
 @pytest.mark.slow
-def test_crash_mid_rebucket_recovers_on_open(spark, tmp_path, monkeypatch):
-    """A rebucket that crashes after staging but before the atomic swap
-    is finished (or dropped) by recover_replace on the next open — the
-    modulus and the data it describes always flip together."""
+def test_crash_mid_rebucket_leaves_store_untouched(spark, tmp_path,
+                                                   monkeypatch):
+    """A rebucket that crashes after writing its segment but before its
+    one manifest commit has not happened: the next open finds the old
+    modulus and data, and a re-run lands both together."""
     from dlx_spark.tableio_versioned import VersionedTableBackend
 
     st = _seed_plain(spark, tmp_path, "wh_crash2", n=16)
     assert st.n_buckets("bib") == 16
+    real = VersionedTableBackend._commit
 
-    def boom(self, spark_, table, staged, token=None, on_conflict="merge",
-             **kwargs):
-        raise RuntimeError("crash before swap")
-    monkeypatch.setattr(VersionedTableBackend, "replace", boom)
+    def boom(self, spark_, table, payload_fn):
+        if table == "bibs":
+            raise RuntimeError("crash before the rewrite commit")
+        return real(self, spark_, table, payload_fn)
+    monkeypatch.setattr(VersionedTableBackend, "_commit", boom)
     with pytest.raises(RuntimeError):
         st.rebucket("bib", 32)
     monkeypatch.undo()
 
-    st2 = MarcStore(spark, st.root)           # recover_replace runs here
+    st2 = MarcStore(spark, st.root)
     assert st2.bibs().count() == 16
-    assert st2.n_buckets("bib") == 32         # the staged rebucket landed
-    assert not st2.backend.exists(spark, "bibs__morstage")
+    assert st2.n_buckets("bib") == 16         # nothing rolled forward
+    st2.rebucket("bib", 32)
+    assert st2.n_buckets("bib") == 32
     assert st2.get("bib", 1).get_value("245", "a") == "Doc 0"
     # point reads prune on the NEW modulus
     raw = st2._raw("bib").filter((F.col("pt") == 1 % 32) & (F.col("_id") == 1))

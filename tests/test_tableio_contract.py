@@ -75,62 +75,78 @@ def test_contract_write_plain_and_schema_change(spark, be):
     assert be.read(spark, "c_t3").columns == ["k", "v"]
 
 
-def test_contract_replace_publishes_stage_and_consumes_it(spark, be):
-    be.write(_df(spark, [(1, "old")]), "c_t4", "id")
-    be.write(_df(spark, [(2, "new"), (3, "new")]), "c_t4__stage", "id")
-    be.replace(spark, "c_t4", "c_t4__stage")
-    assert sorted(r["id"] for r in be.read(spark, "c_t4").collect()) \
-        == [2, 3]
-    assert not be.exists(spark, "c_t4__stage")
-    # recovery on a clean state is a no-op
-    be.recover_replace(spark, "c_t4", "c_t4__stage")
-    assert sorted(r["id"] for r in be.read(spark, "c_t4").collect()) \
-        == [2, 3]
+def test_contract_rewrite_carries_raced_append(spark, be):
+    """A rewrite publishes its content as one segment in one commit;
+    appends that land between the snapshot and the commit survive it
+    (the compaction contract)."""
+    be.write(_df(spark, [(1, "a"), (1, "a")]), "c_t4", "id")
+    token = be.snapshot_token(spark, "c_t4")
+    # the 'rewrite': dedup of the snapshot the token describes
+    folded = be.read(spark, "c_t4").distinct()
+    be.append(_df(spark, [(2, "raced")]), "c_t4", "id")
+    assert be.rewrite(folded, "c_t4", token)
+    assert sorted((r["id"], r["text"]) for r in
+                  be.read(spark, "c_t4").collect()) \
+        == [(1, "a"), (2, "raced")]
+    assert len(be.snapshot_token(spark, "c_t4")) == 2
 
 
-@pytest.mark.slow
-def test_contract_replace_fail_detects_raced_commit(spark, be):
+def test_contract_rewrite_fail_mode_refuses_raced_append(spark, be):
     be.write(_df(spark, [(1, "base")]), "c_t5", "id")
     token = be.snapshot_token(spark, "c_t5")
-    be.write(be.read(spark, "c_t5"), "c_t5__stage", "id")
+    snapshot = be.read(spark, "c_t5")
     # a commit lands after the token was captured
     be.append(_df(spark, [(2, "raced")]), "c_t5", "id")
-    with pytest.raises(tableio.ConcurrentWriteError):
-        be.replace(spark, "c_t5", "c_t5__stage", token=token,
-                   on_conflict="fail")
-    # target untouched by the refused swap
+    assert not be.rewrite(snapshot, "c_t5", token, exact=True)
+    # target untouched by the refused rewrite
     assert sorted(r["id"] for r in be.read(spark, "c_t5").collect()) \
         == [1, 2]
-    be.drop(spark, "c_t5__stage")
+    # with no race the same re-derive commits
+    token = be.snapshot_token(spark, "c_t5")
+    assert be.rewrite(be.read(spark, "c_t5").filter("id = 2"), "c_t5",
+                      token, exact=True)
+    assert [r["id"] for r in be.read(spark, "c_t5").collect()] == [2]
 
 
-@pytest.mark.slow
-def test_contract_replace_rejects_bad_on_conflict(spark, be):
-    be.write(_df(spark, [(1, "x")]), "c_t6", "id")
-    be.write(_df(spark, [(1, "x")]), "c_t6__stage", "id")
-    with pytest.raises(ValueError, match="on_conflict"):
-        be.replace(spark, "c_t6", "c_t6__stage", on_conflict="clobber")
-    be.drop(spark, "c_t6__stage")
+def test_contract_rewrite_aborts_on_replaced_list(spark, be):
+    """A rewrite derived from a list another rewrite replaced commits
+    nothing: carrying the other's segment would count rows twice."""
+    be.write(_df(spark, [(1, "a")]), "c_t6", "id")
+    be.append(_df(spark, [(2, "b")]), "c_t6", "id")
+    token = be.snapshot_token(spark, "c_t6")
+    stale = be.read(spark, "c_t6")
+    assert be.rewrite(be.read(spark, "c_t6"), "c_t6", token)   # the race
+    head = be.snapshot_token(spark, "c_t6")
+    assert not be.rewrite(stale, "c_t6", token)
+    assert be.snapshot_token(spark, "c_t6") == head
+    assert sorted(r["id"] for r in be.read(spark, "c_t6").collect()) \
+        == [1, 2]
 
 
 def test_contract_snapshot_token_none_for_missing_table(spark, be):
     assert be.snapshot_token(spark, "c_never_created") is None
 
 
-@pytest.mark.slow
-def test_contract_replace_merge_carries_raced_append(spark, be):
-    """Merge-on-conflict: appends that land between the token capture
-    and the swap survive the rewrite (the compaction contract)."""
-    be.write(_df(spark, [(1, "a"), (1, "a")]), "c_t7", "id")
+def test_contract_rewrite_failure_before_commit_leaves_only_a_segment(
+        spark, be, monkeypatch):
+    """A rewrite is unpublished until its one commit: a failure there
+    leaves the table as it was, and its segment is garbage that
+    ``vacuum(min_age_seconds=0)`` reclaims."""
+    be.write(_df(spark, [(1, "a")]), "c_t7", "id")
     token = be.snapshot_token(spark, "c_t7")
-    # the 'rewrite': dedup of the snapshot the token describes
-    be.write(be.read(spark, "c_t7").distinct(), "c_t7__stage", "id")
-    be.append(_df(spark, [(2, "raced")]), "c_t7", "id")
-    be.replace(spark, "c_t7", "c_t7__stage", token=token,
-               on_conflict="merge")
-    assert sorted((r["id"], r["text"]) for r in
-                  be.read(spark, "c_t7").collect()) \
-        == [(1, "a"), (2, "raced")]
+
+    def crash(spark, table, payload_fn):
+        raise RuntimeError("simulated crash at the rewrite commit")
+
+    monkeypatch.setattr(be, "_commit", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        be.rewrite(_df(spark, [(9, "never")]), "c_t7", token)
+    monkeypatch.undo()
+    assert be.snapshot_token(spark, "c_t7") == token
+    assert [r["id"] for r in be.read(spark, "c_t7").collect()] == [1]
+    deleted = be.vacuum(spark, keep_last=1, min_age_seconds=0)
+    assert len(deleted) == 1 and deleted[0] not in token
+    assert [r["id"] for r in be.read(spark, "c_t7").collect()] == [1]
 
 
 # ---------------------------------------------------------------------------

@@ -157,9 +157,10 @@ def test_repartition_table_changes_geometry_atomically(spark, be):
     t = MergeOnReadTable(be, "t7", key="k", partition_cols=["pt"])
     t.overwrite(_rows(spark, [(i, f"v{i}") for i in range(16)], n_buckets=4),
                 extra={"n_buckets": 4})
-    resolved = t.read(spark)
     t.repartition_table(
-        resolved.withColumn("pt", F.pmod("k", F.lit(8)).cast("int")),
+        spark,
+        lambda resolved: resolved.withColumn(
+            "pt", F.pmod("k", F.lit(8)).cast("int")),
         extra={"n_buckets": 8})
     assert t.meta(spark) == {"n_buckets": 8}
     assert len(t.segments(spark)) == 1
@@ -228,10 +229,10 @@ def test_huge_delta_disables_forced_broadcast(spark, be):
 
 @pytest.mark.slow
 def test_extra_merge_survives_stale_compaction(spark, be):
-    """A compaction staged from an old manifest snapshot must not roll
+    """A compaction derived from an old manifest snapshot must not roll
     back metadata a raced commit advanced: with extra_merge, the
-    replace folds the staged extra onto the HEAD's (monotonic max for
-    the hint), and the raced segment's rows are carried."""
+    rewrite folds its extra onto the HEAD's (monotonic max for the
+    hint), and the raced segment's rows are carried."""
     def merge(new, head):
         out = dict(head or {})
         out.update(new or {})
@@ -331,7 +332,7 @@ def test_compact_deltas_carries_raced_appends(spark, be):
     merged = t._conform(t._merged_deltas(spark, stale), t._schema(stale))
     # the race: another writer updates key 1 past the fold's snapshot
     t.upsert(rows=_rows(spark, [(1, "RACED")]))
-    assert t.backend.replace_segment_suffix(merged, "mc2", token, keep=1)
+    assert t.backend.rewrite(merged, "mc2", token, keep=1)
     assert len(t.segments(spark)) == 3             # base, merged, raced
     assert _read_sorted(t, spark) == [(1, "RACED"), (2, "d2")]
 
@@ -351,8 +352,7 @@ def test_compact_deltas_aborts_on_replaced_list(spark, be):
     merged = t._conform(t._merged_deltas(spark, stale), t._schema(stale))
     assert t.compact(spark) == 3                   # the raced full fold
     want = _read_sorted(t, spark)
-    assert not t.backend.replace_segment_suffix(merged, "mc3", token,
-                                                keep=1)
+    assert not t.backend.rewrite(merged, "mc3", token, keep=1)
     assert len(t.segments(spark)) == 1             # nothing committed
     assert _read_sorted(t, spark) == want
     # compact_deltas itself reports 0 via the same abort

@@ -1,6 +1,6 @@
 """VersionedTableBackend: manifest-committed parquet tables — atomic
 single-rename commits, snapshot-isolated readers, optimistic-concurrency
-appends, provenance-proved replace recovery, time travel, vacuum.
+appends, one-commit rewrites, time travel, vacuum.
 
 This is the engine's table backend (``tableio.get_backend()``, the
 Delta-protocol analog on plain parquet); every test here exercises the
@@ -168,107 +168,80 @@ def test_torn_tmp_ignored_and_corrupt_manifest_raises(spark, be):
         be.read(spark, "t5")
 
 
-def test_replace_is_atomic_and_recovery_is_provenance_proved(spark, be):
-    be.write(_df(spark, [(1, "live")]), "t6", "id")
-    be.write(_df(spark, [(2, "staged"), (3, "staged")]), "t6__stage", "id")
-    stage_commit_id = be._latest(spark, "t6__stage")[1]["id"]
-    live_reader = be.read(spark, "t6")
-    be.replace(spark, "t6", "t6__stage")
-    assert not be.exists(spark, "t6__stage")
-    assert sorted(r["id"] for r in be.read(spark, "t6").collect()) == [2, 3]
-    assert live_reader.count() == 1        # snapshot across the swap
-    # provenance keys on the stage's unique commit id (NOT its version:
-    # versions restart at 1 per stage generation)
-    v, m = be._latest(spark, "t6")
-    assert m["source"] == ["t6__stage", stage_commit_id]
-
-    # crash BEFORE the swap commit: stage present, no provenance.  This
-    # NEW stage generation also starts at version 1 — a version-keyed
-    # provenance check would wrongly match the earlier swap and discard
-    # the stage (the regression the commit-id fixes)
-    be.write(_df(spark, [(4, "s2")]), "t6__stage", "id")
-    be.recover_replace(spark, "t6", "t6__stage")
-    assert [r["id"] for r in be.read(spark, "t6").collect()] == [4]
-    assert not be.exists(spark, "t6__stage")
-
-    # crash AFTER the swap commit but before the stage drop, with a
-    # later append already advancing the table: recovery must drop the
-    # stage WITHOUT rolling back the append
-    be.write(_df(spark, [(5, "s3")]), "t6__stage", "id")
-    sm = be._latest(spark, "t6__stage")[1]
-    be._commit(spark, "t6", lambda latest: {
-        **{k: sm[k] for k in ("segments", "key", "schema")},
-        "source": ["t6__stage", sm["id"]]})   # the swap commit, drop lost
-    be.append(_df(spark, [(6, "later")]), "t6", "id")
-    be.recover_replace(spark, "t6", "t6__stage")
-    assert not be.exists(spark, "t6__stage")
-    assert sorted(r["id"] for r in be.read(spark, "t6").collect()) == [5, 6]
-
-
 def test_replace_merges_concurrent_append_with_token(spark, be):
-    """Compaction-class replace: an append landing between the caller's
-    snapshot and the swap commit must survive the swap (merged into the
-    new version), not be silently dropped."""
+    """Compaction-class rewrite: an append landing between the caller's
+    snapshot and the rewrite's commit must survive it (carried into the
+    new version after the rewritten segment), not be silently
+    dropped."""
     be.write(_df(spark, [(1, "a"), (2, "b")]), "tm", "id")
     token = be.snapshot_token(spark, "tm")
-    staged = be.read(spark, "tm")          # the rewrite's source snapshot
-    be.write(staged, "tm__stage", "id")
+    snapshot = be.read(spark, "tm")        # the rewrite's source snapshot
     be.append(_df(spark, [(3, "concurrent")]), "tm", "id")  # races in
-    be.replace(spark, "tm", "tm__stage", token=token, on_conflict="merge")
+    assert be.rewrite(snapshot, "tm", token)
     assert sorted(r["id"] for r in be.read(spark, "tm").collect()) == [1, 2, 3]
+    assert len(be.snapshot_token(spark, "tm")) == 2
 
 
 def test_replace_fail_mode_raises_on_concurrent_append(spark, be):
+    """A re-derive (``exact=True``) commits nothing when an append raced
+    it, removes its orphan segment, and the merge-on-read re-derive on
+    top of it raises ConcurrentWriteError."""
     from dlx_spark.tableio import ConcurrentWriteError
+    from dlx_spark.tableio_mor import MergeOnReadTable
 
     be.write(_df(spark, [(1, "a")]), "tf", "id")
     token = be.snapshot_token(spark, "tf")
-    be.write(be.read(spark, "tf"), "tf__stage", "id")
+    snapshot = be.read(spark, "tf")
     be.append(_df(spark, [(2, "concurrent")]), "tf", "id")
-    with pytest.raises(ConcurrentWriteError):
-        be.replace(spark, "tf", "tf__stage", token=token, on_conflict="fail")
-    # table and stage untouched by the failed swap
+    segs_before = set(fsio.listdir(spark, fsio.join(be._root, "data")))
+    assert not be.rewrite(snapshot, "tf", token, exact=True)
+    # table untouched by the failed rewrite, its segment removed
     assert sorted(r["id"] for r in be.read(spark, "tf").collect()) == [1, 2]
-    assert be.exists(spark, "tf__stage")
+    assert set(fsio.listdir(spark, fsio.join(be._root, "data"))) \
+        == segs_before
+
+    t = MergeOnReadTable(be, "tf_mor", key="id", partition_cols=["pt"])
+    t.overwrite(_df(spark, [(1, 0)], "id long, pt int"))
+
+    def derive_while_a_commit_lands(resolved):
+        t.upsert(rows=_df(spark, [(2, 0)], "id long, pt int"))
+        return resolved.withColumn("pt", F.lit(1))
+
+    with pytest.raises(ConcurrentWriteError):
+        t.repartition_table(spark, derive_while_a_commit_lands,
+                            extra={"n_buckets": 2})
+    assert sorted((r["id"], r["pt"]) for r in t.read(spark).collect()) \
+        == [(1, 0), (2, 0)]
 
 
 def test_compaction_keeps_append_racing_the_stage_build(spark, be):
-    """End-to-end through _compact_table: an append that lands while
-    the compacted copy is being written (injected via a backend hook on
-    the stage write) is merged through the swap."""
-    from dlx_spark.operators.dedup_index import _compact_table
-    from dlx_spark.tableio_versioned import VersionedTableBackend
-
+    """End-to-end through an index-style ``compact_segments(distinct=
+    True)``: an append that lands while the compacted segment is being
+    written (injected via a backend hook on the segment write) is
+    carried through the rewrite's commit."""
     class RacingBackend(VersionedTableBackend):
-        def write(self, df, table, key):
-            if table.endswith("__compact") and not getattr(
+        def _write_segment(self, spark, df, table, key, *a, **kw):
+            if getattr(self, "_armed", False) and not getattr(
                     self, "_raced", False):
                 self._raced = True
-                self.append(_df(df.sparkSession, [(99, "raced")]),
-                            "tr", key)
-            super().write(df, table, key)
+                self.append(_df(spark, [(99, "raced")]), "tr", key)
+            return super()._write_segment(spark, df, table, key, *a, **kw)
 
     rb = RacingBackend(root=be._root)
-    rb.write(_df(spark, [(1, "a"), (1, "a"), (2, "b")]), "tr", "id")
-    prev = tableio.get_backend()
-    tableio.set_backend(rb)
-    try:
-        _compact_table(spark, "tr", "id", distinct=True)
-    finally:
-        tableio.set_backend(prev)
+    rb.write(_df(spark, [(1, "a"), (2, "b")]), "tr", "id")
+    rb.append(_df(spark, [(1, "a")]), "tr", "id")
+    rb._armed = True
+    assert rb.compact_segments(spark, "tr", distinct=True) == 2
     got = sorted(r["id"] for r in rb.read(spark, "tr").collect())
     assert got == [1, 2, 99]   # dupes folded AND the raced row kept
     assert rb._raced
 
 
 def test_compaction_source_and_token_share_one_snapshot(spark, be):
-    """An append committing right after _compact_table resolves the
-    table's head must be carried through the swap exactly once: the
-    rewrite reads the version its token names, so the raced rows are
-    neither folded into the stage nor merged in a second time."""
-    from dlx_spark.operators.dedup_index import _compact_table
-    from dlx_spark.tableio_versioned import VersionedTableBackend
-
+    """An append committing right after compact_segments resolves the
+    table's head must be carried through the rewrite exactly once: the
+    fold reads the version its token names, so the raced rows are
+    neither folded into the new segment nor carried a second time."""
     class RacingBackend(VersionedTableBackend):
         def _latest(self, spark, table):
             out = super()._latest(spark, table)
@@ -278,24 +251,46 @@ def test_compaction_source_and_token_share_one_snapshot(spark, be):
             return out
 
     rb = RacingBackend(root=be._root)
-    rb.write(_df(spark, [(1, "a"), (2, "b")]), "tr2", "id")
+    rb.write(_df(spark, [(1, "a")]), "tr2", "id")
+    rb.append(_df(spark, [(2, "b")]), "tr2", "id")
     rb._raced = False
-    prev = tableio.get_backend()
-    tableio.set_backend(rb)
-    try:
-        _compact_table(spark, "tr2", "id")
-    finally:
-        tableio.set_backend(prev)
+    assert rb.compact_segments(spark, "tr2") == 2
     assert rb._raced
     got = sorted(r["id"] for r in rb.read(spark, "tr2").collect())
     assert got == [1, 2, 99]
+
+
+def test_overlapping_folds_of_one_table_keep_each_row_once(spark, be):
+    """Two drivers folding the same 20-row, 2-segment table at once:
+    the later commit finds its snapshot replaced by the earlier fold
+    and publishes nothing, so every row is read exactly once (a
+    stage-merge protocol carried the other fold's segment on top of its
+    own and read 40)."""
+    other_driver = VersionedTableBackend(root=be._root)
+
+    class NestedFoldBackend(VersionedTableBackend):
+        def _write_segment(self, *a, **kw):
+            if not getattr(self, "_nested", False):
+                self._nested = True
+                assert other_driver.compact_segments(spark, "t_ovl") == 2
+            return super()._write_segment(*a, **kw)
+
+    nb = NestedFoldBackend(root=be._root)
+    be.write(_df(spark, [(i, "a") for i in range(10)]), "t_ovl", "id")
+    be.append(_df(spark, [(i, "b") for i in range(10, 20)]), "t_ovl", "id")
+    folded = nb.compact_segments(spark, "t_ovl")
+    got = sorted(r["id"] for r in be.read(spark, "t_ovl").collect())
+    assert got == list(range(20))
+    assert folded == 0
+    assert len(be.snapshot_token(spark, "t_ovl")) == 1
 
 
 @pytest.mark.slow
 def test_rebucket_conflict_fails_clean_on_concurrent_append(spark, be):
     """Appends do NOT commute with rebucket (their keys are under the
     old geometry): a racing append must fail the rebucket, leave the
-    live index exactly as the appender sees it, and clean the stages."""
+    live index exactly as the appender sees it, and leave no table
+    beside the index's own."""
     import random
 
     from dlx_spark.operators.dedup_index import EmbeddingIndex
@@ -311,25 +306,25 @@ def test_rebucket_conflict_fails_clean_on_concurrent_append(spark, be):
                                   "vec_id long, embedding array<double>")
 
     class RacingBackend(VersionedTableBackend):
-        def write(self, df, table, key):
-            super().write(df, table, key)
-            if table.endswith("_buckets__rebucket") and not getattr(
+        def _write_segment(self, spark, df, table, *a, **kw):
+            if getattr(self, "_armed", False) and not getattr(
                     self, "_raced", False):
                 self._raced = True
-                idx_live = EmbeddingIndex(df.sparkSession, "t_rbc")
-                idx_live.append(extra)
+                EmbeddingIndex(spark, "t_rbc").append(extra)
+            return super()._write_segment(spark, df, table, *a, **kw)
 
     rb = RacingBackend(root=be._root)
     prev = tableio.get_backend()
     tableio.set_backend(rb)
     try:
         idx = EmbeddingIndex.create(corpus, "t_rbc", n_planes=4, dim=6)
+        rb._armed = True
         with pytest.raises(ConcurrentWriteError):
             idx.rebucket(n_planes=6)
         assert rb._raced
-        # stages cleaned, live geometry unchanged, raced append present
-        assert not rb.exists(spark, "t_rbc_buckets__rebucket")
-        assert not rb.exists(spark, "t_rbc_meta__rebucket")
+        # live geometry unchanged, raced append present, no side table
+        assert sorted(fsio.listdir(spark, fsio.join(be._root, "tables"))) \
+            == ["t_rbc_buckets", "t_rbc_meta", "t_rbc_vecs"]
         reopened = EmbeddingIndex(spark, "t_rbc")
         assert reopened.params["n_planes"] == 4
         assert rb.read(spark, "t_rbc_vecs").count() == 21
@@ -339,28 +334,6 @@ def test_rebucket_conflict_fails_clean_on_concurrent_append(spark, be):
         reopened.drop()
     finally:
         tableio.set_backend(prev)
-
-
-def test_vacuum_completes_crashed_replace_instead_of_eating_provenance(
-        spark, be):
-    """A replace that committed its swap but crashed before dropping
-    the stage, followed by an append and a vacuum: vacuum must not
-    delete the swap-commit manifest (the only provenance) while the
-    stage survives — it completes the crashed drop instead, so the next
-    recover_replace is a no-op and the append is preserved."""
-    be.write(_df(spark, [(1, "live")]), "tv", "id")
-    be.write(_df(spark, [(2, "staged")]), "tv__stage", "id")
-    sm = be._latest(spark, "tv__stage")[1]
-    # the swap commit, with the stage drop lost to a crash
-    be._commit(spark, "tv", lambda latest: {
-        **{k: sm[k] for k in ("segments", "key", "schema")},
-        "source": ["tv__stage", sm["id"]]})
-    be.append(_df(spark, [(3, "later")]), "tv", "id")
-    be.vacuum(spark, keep_last=1, min_age_seconds=0)
-    # vacuum finished the crashed drop; recovery finds nothing to do
-    assert not be.exists(spark, "tv__stage")
-    be.recover_replace(spark, "tv", "tv__stage")
-    assert sorted(r["id"] for r in be.read(spark, "tv").collect()) == [2, 3]
 
 
 def test_vacuum_reclaims_unreferenced_segments(spark, be):
@@ -380,14 +353,19 @@ def test_vacuum_reclaims_unreferenced_segments(spark, be):
 
 
 def test_vacuum_keeps_segments_shared_via_replace(spark, be):
-    """replace() re-points the target at the stage's segments; after the
-    stage's manifests are dropped, vacuum must still see the segments as
-    referenced (by the target) and keep them."""
-    be.write(_df(spark, [(1, "live")]), "t8", "id")
-    be.write(_df(spark, [(2, "staged")]), "t8__stage", "id")
-    be.replace(spark, "t8", "t8__stage")
-    be.vacuum(spark, keep_last=1, min_age_seconds=0)
-    assert [r["id"] for r in be.read(spark, "t8").collect()] == [2]
+    """A suffix rewrite (``keep=1``) references the base segment by id
+    from both the old and the new version; vacuum keeping only the new
+    one must keep that shared segment and reclaim the folded one."""
+    be.write(_df(spark, [(1, "base")]), "t8", "id")
+    be.append(_df(spark, [(2, "delta")]), "t8", "id")
+    _, manifest = be._latest(spark, "t8")
+    base, folded = manifest["segments"]
+    # a one-segment suffix is folded only through the primitive itself
+    assert be.rewrite(be.segment_df(spark, manifest, 1), "t8",
+                      [base, folded], keep=1)
+    deleted = be.vacuum(spark, keep_last=1, min_age_seconds=0)
+    assert folded in deleted and base not in deleted
+    assert sorted(r["id"] for r in be.read(spark, "t8").collect()) == [1, 2]
 
 
 def test_empty_dataframe_roundtrip(spark, be):
@@ -411,7 +389,7 @@ def test_drop_and_exists(spark, be):
 def test_minhash_index_end_to_end_on_versioned_backend(spark, be, tmp_path):
     """An unmodified MinHashIndex running entirely through the
     versioned backend — create, dedup_batch, append-on-survive, reopen,
-    compact (exercises replace + recover seam) — must produce the same
+    compact (exercises the rewrite seam) — must produce the same
     survivors as the default (warehouse-rooted) backend."""
     from dlx_spark.operators.dedup_index import MinHashIndex
 
@@ -447,11 +425,12 @@ def test_minhash_index_end_to_end_on_versioned_backend(spark, be, tmp_path):
 
 
 @pytest.mark.slow
-def test_embedding_index_rebucket_rollforward_on_versioned_backend(spark, be):
-    """The most protocol-heavy index path — EmbeddingIndex rebucket's
-    staged-keys + staged-meta commit point — through the versioned
+def test_embedding_index_rebucket_on_versioned_backend(spark, be):
+    """The most protocol-heavy index path — EmbeddingIndex rebucket,
+    keys and geometry in one rewrite commit — through the versioned
     backend: probe results match the default backend exactly, and a
-    crash after the meta commit rolls FORWARD on reopen."""
+    rebucket that fails before its commit leaves the committed
+    geometry in place on reopen (nothing rolls forward)."""
     import random
 
     from dlx_spark.operators.dedup_index import EmbeddingIndex
@@ -469,35 +448,33 @@ def test_embedding_index_rebucket_rollforward_on_versioned_backend(spark, be):
         return {(r["corpus_id"], r["batch_id"], round(r["cosine"], 6))
                 for r in idx.probe(batch, threshold=0.95).collect()}
 
+    class Crash(RuntimeError):
+        pass
+
     prev = tableio.get_backend()
     tableio.set_backend(be)
     try:
         idx = EmbeddingIndex.create(corpus, "t_v_emb", n_planes=4, dim=8)
         got = probe_set(idx)
-        # rebucket commits through replace(): provenance-proved swap
         idx.rebucket(n_planes=6, bands=2)
         assert idx.params["n_planes"] == 6 and idx.params["bands"] == 2
         rb = probe_set(EmbeddingIndex(spark, "t_v_emb"))
         assert rb >= got and len(got) >= 5  # banding only widens recall
 
-        # crash AFTER the meta commit point: stage both tables through
-        # the backend, then reopen — must roll forward (keys then meta)
-        p_old = dict(idx.params)
-        p_old["n_planes"], p_old["bands"] = 4, 1
-        from dlx_spark.operators import similarity
-        keys = similarity.banded_lsh_keys(
-            be.read(spark, "t_v_emb_vecs"), 1, 4, p_old["seed"],
-            vec_col="vec", id_col="id", dim=8)
-        be.write(keys, "t_v_emb_buckets__rebucket", "bucket")
-        be.write_plain(spark.createDataFrame(
-            [(json.dumps(p_old),)], "params string"),
-            "t_v_emb_meta__rebucket")
-        rolled = EmbeddingIndex(spark, "t_v_emb")
-        assert rolled.params["n_planes"] == 4 and rolled.params["bands"] == 1
-        assert not be.exists(spark, "t_v_emb_meta__rebucket")
-        assert not be.exists(spark, "t_v_emb_buckets__rebucket")
-        assert probe_set(rolled) and probe_set(rolled) <= rb
-        rolled.drop()
+        # a crash at the commit of a second rebucket: the reopened
+        # index keeps the geometry that committed
+        def crash(spark, table, payload_fn):
+            raise Crash("simulated crash at the rebucket commit")
+
+        be._commit = crash
+        with pytest.raises(Crash):
+            idx.rebucket(n_planes=4, bands=1)
+        del be._commit
+        reopened = EmbeddingIndex(spark, "t_v_emb")
+        assert reopened.params["n_planes"] == 6
+        assert reopened.params["bands"] == 2
+        assert probe_set(reopened) == rb
+        reopened.drop()
     finally:
         tableio.set_backend(prev)
 
@@ -570,30 +547,44 @@ def test_streaming_ingest_appends_through_versioned_backend(
 
 
 def test_digest_index_recovery_path_on_versioned_backend(spark, be):
-    """_recover_compaction through the versioned backend: a compaction
-    whose stage committed but whose publish was lost is finished by
-    provenance-checked recover_replace on the next open."""
-    from dlx_spark.operators.dedup_index import (
-        DigestIndex, _compact_table, _recover_compaction)
+    """The recovery path is that there is nothing to recover: a
+    DigestIndex compaction that fails before its commit leaves the
+    index exactly as it was on the next open, its orphan segment is
+    reclaimed by vacuum, and a normal compaction still works."""
+    from dlx_spark.operators.dedup_index import DigestIndex
 
     corpus = _df(spark, [(1, "alpha beta"), (2, "gamma delta")],
                  "doc_id long, text string")
+    batch = _df(spark, [(5, "alpha beta"), (6, "zeta")],
+                "doc_id long, text string")
     prev = tableio.get_backend()
     tableio.set_backend(be)
     try:
-        DigestIndex.create(corpus, "t_v_dg")
-        # simulate the crash: stage the compacted copy but lose the swap
-        src = be.read(spark, "t_v_dg_digests")
-        be.write(src, "t_v_dg_digests__compact", "digest")
-        _recover_compaction(spark, "t_v_dg_digests")
-        assert not be.exists(spark, "t_v_dg_digests__compact")
+        idx = DigestIndex.create(corpus, "t_v_dg")
+        idx.append(_df(spark, [(3, "eta theta")],
+                       "doc_id long, text string"))
+        head = be.snapshot_token(spark, "t_v_dg_digests")
+
+        def crash(spark, table, payload_fn):
+            raise RuntimeError("simulated crash at the compaction commit")
+
+        be._commit = crash
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            idx.compact()
+        del be._commit
         idx = DigestIndex(spark, "t_v_dg")
-        clean = sorted(r["doc_id"] for r in idx.dedup_batch(
-            _df(spark, [(5, "alpha beta"), (6, "zeta")],
-                "doc_id long, text string")).collect())
+        assert be.snapshot_token(spark, "t_v_dg_digests") == head
+        be.vacuum(spark, keep_last=1, min_age_seconds=0)
+        assert sorted(fsio.listdir(spark, fsio.join(be._root, "data"))) \
+            == sorted(be.snapshot_token(spark, "t_v_dg_digests")
+                      + be.snapshot_token(spark, "t_v_dg_meta"))
+        clean = sorted(r["doc_id"] for r in idx.filter_new(batch).collect())
         assert clean == [6]
         # and a full normal compaction still works end-to-end
-        _compact_table(spark, "t_v_dg_digests", "digest")
+        idx.compact()
+        assert len(be.snapshot_token(spark, "t_v_dg_digests")) == 1
+        assert sorted(r["doc_id"] for r in idx.filter_new(batch).collect()) \
+            == [6]
         idx.drop()
     finally:
         tableio.set_backend(prev)
@@ -603,8 +594,8 @@ def test_digest_index_recovery_path_on_versioned_backend(spark, be):
 def test_compact_segments_folds_append_history(spark, be):
     """The OPTIMIZE analog: appends accumulate one segment (and, for
     partitioned tables, one scan root) per commit; compact_segments
-    folds them into one fresh segment through the same optimistic
-    commit, merging any append that races the rewrite."""
+    folds them into one fresh segment in one rewrite commit, carrying
+    any append that races the rewrite."""
     be.write_partitioned(_df(spark, [(1, "a")], "id long, part string"),
                          "t_cseg", ["part"])
     for i in range(2, 5):
@@ -622,22 +613,23 @@ def test_compact_segments_folds_append_history(spark, be):
     assert be.compact_segments(spark, "t_cseg") == 0
     assert be.versions(spark, "t_cseg")[-1] == v
 
-    # racing append is merged through the swap (token carry)
+    # racing append is carried through the rewrite (token carry)
     class RacingBackend(VersionedTableBackend):
-        def write_partitioned(self, df, table, cols, **kwargs):
-            if table.endswith("__compactseg") and not getattr(
+        def _write_segment(self, spark, df, table, key, cols=None, **kw):
+            if getattr(self, "_armed", False) and not getattr(
                     self, "_raced", False):
                 self._raced = True
                 self.append_partitioned(
-                    _df(df.sparkSession, [(99, "c")],
-                        "id long, part string"), "t_cseg2", cols)
-            super().write_partitioned(df, table, cols, **kwargs)
+                    _df(spark, [(99, "c")], "id long, part string"),
+                    "t_cseg2", cols)
+            return super()._write_segment(spark, df, table, key, cols, **kw)
 
     rb = RacingBackend(root=be._root)
     rb.write_partitioned(_df(spark, [(1, "a")], "id long, part string"),
                          "t_cseg2", ["part"])
     rb.append_partitioned(_df(spark, [(2, "b")], "id long, part string"),
                           "t_cseg2", ["part"])
+    rb._armed = True
     assert rb.compact_segments(spark, "t_cseg2") == 2
     assert rb._raced
     assert sorted(r["id"] for r in rb.read(spark, "t_cseg2").collect()) \
@@ -677,8 +669,9 @@ def test_vacuum_age_gates_superseded_manifests_and_compactseg_stages(
     """Review fixes: (a) superseded manifests younger than the horizon
     survive vacuum — a concurrent committer that listed the old head
     must be able to read it and retry, not die on a vanished file;
-    (b) an aged crashed compact_segments stage is dropped by vacuum
-    (it is always re-derivable), freeing its segments."""
+    (b) an aged stage table of the retired staged-swap protocol (an
+    earlier release's crashed compact_segments or rebucket) is dropped
+    by vacuum, freeing its segments."""
     be.write(_df(spark, [(1, "v1")]), "t_age", "id")
     be.write(_df(spark, [(2, "v2")]), "t_age", "id")
     be.vacuum(spark, keep_last=1)                 # default horizon
@@ -690,17 +683,21 @@ def test_vacuum_age_gates_superseded_manifests_and_compactseg_stages(
     be.vacuum(spark, keep_last=1, min_age_seconds=0)
     assert be.versions(spark, "t_age") == [2]
 
-    # crashed compact_segments stage: stage table exists, swap never
-    # committed -> aged vacuum drops it and reclaims its segment
+    # an earlier release's crashed stages: the tables exist, their
+    # swap never committed -> aged vacuum drops them and reclaims the
+    # segments
     be.write(_df(spark, [(1, "a")]), "t_cs", "id")
     be.append(_df(spark, [(2, "b")]), "t_cs", "id")
-    be.write(be.read(spark, "t_cs"), "t_cs__compactseg", "id")
-    seg = be.snapshot_token(spark, "t_cs__compactseg")[0]
-    be.vacuum(spark, keep_last=1)                 # young: stage kept
-    assert be.exists(spark, "t_cs__compactseg")
+    stages = ("t_cs__compactseg", "t_cs_rebucket_intent")
+    for stage in stages:
+        be.write(be.read(spark, "t_cs"), stage, "id")
+    segs = [be.snapshot_token(spark, t)[0] for t in stages]
+    be.vacuum(spark, keep_last=1)                 # young: stages kept
+    assert all(be.exists(spark, t) for t in stages)
     be.vacuum(spark, keep_last=1, min_age_seconds=0)
-    assert not be.exists(spark, "t_cs__compactseg")
-    assert not fsio.exists(spark, be._data_dir(spark, seg))
+    assert not any(be.exists(spark, t) for t in stages)
+    assert not any(fsio.exists(spark, be._data_dir(spark, seg))
+                   for seg in segs)
     # the live table is untouched
     assert sorted(r["id"] for r in be.read(spark, "t_cs").collect()) == [1, 2]
 
@@ -744,25 +741,33 @@ def test_auto_compact_bounds_segment_count_on_append_heavy_ingest(
 @pytest.mark.slow
 def test_auto_compact_crash_between_stage_and_swap_loses_no_data(
         spark, be):
-    """A crash inside the auto-triggered compaction — after the stage
-    is written, before the swap commits — must (a) keep the appended
-    rows durable (the append committed first), (b) leave the live
-    table readable on its un-compacted head, and (c) be fully repaired
-    by the existing machinery: vacuum clears the re-derivable stage,
-    and the next threshold-crossing append re-triggers a clean fold."""
+    """A crash inside the auto-triggered compaction — after its segment
+    is written, before its commit — must (a) keep the appended rows
+    durable (the append committed first), (b) leave the live table
+    readable on its un-compacted head, and (c) be fully repaired by the
+    existing machinery: vacuum reclaims the orphan segment, and the
+    next threshold-crossing append re-triggers a clean fold."""
 
     class Crash(RuntimeError):
         pass
 
     class CrashyBackend(VersionedTableBackend):
-        def replace(self, spark, table, staged, token=None,
-                    on_conflict="merge"):
-            if staged.endswith("__compactseg") and not getattr(
+        def rewrite(self, *a, **kw):
+            self._rewriting = True
+            try:
+                return super().rewrite(*a, **kw)
+            finally:
+                self._rewriting = False
+
+        def _commit(self, spark, table, payload_fn):
+            if getattr(self, "_rewriting", False) and not getattr(
                     self, "_crashed", False):
                 self._crashed = True
-                raise Crash("simulated crash between stage and swap")
-            super().replace(spark, table, staged, token=token,
-                            on_conflict=on_conflict)
+                raise Crash("simulated crash between segment and commit")
+            return super()._commit(spark, table, payload_fn)
+
+    def data_segments():
+        return set(fsio.listdir(spark, fsio.join(be._root, "data")))
 
     cb = CrashyBackend(root=be._root, auto_compact_at=3)
     cb.write(_df(spark, [(0, "seed")]), "t_acc", "id")
@@ -770,14 +775,15 @@ def test_auto_compact_crash_between_stage_and_swap_loses_no_data(
     with pytest.raises(Crash):
         cb.append(_df(spark, [(2, "two")]), "t_acc", "id")
     # (a)+(b): the append that triggered the crash is durable; the
-    # table reads fine on its 3-segment head; the stage is stranded
+    # table reads fine on its 3-segment head; one orphan segment
     assert sorted(r["id"] for r in cb.read(spark, "t_acc").collect()) \
         == [0, 1, 2]
-    assert len(cb.snapshot_token(spark, "t_acc")) == 3
-    assert cb.exists(spark, "t_acc__compactseg")
-    # (c) vacuum clears the aged stage (always re-derivable)...
+    head = cb.snapshot_token(spark, "t_acc")
+    assert len(head) == 3
+    assert len(data_segments() - set(head)) == 1
+    # (c) vacuum reclaims the orphan...
     cb.vacuum(spark, keep_last=1, min_age_seconds=0)
-    assert not cb.exists(spark, "t_acc__compactseg")
+    assert data_segments() == set(head)
     # ...and the next threshold-crossing append re-triggers a clean fold
     cb.append(_df(spark, [(3, "three")]), "t_acc", "id")
     assert len(cb.snapshot_token(spark, "t_acc")) == 1
@@ -861,6 +867,47 @@ def test_multisegment_ann_probes_never_full_scan(spark, be):
         tableio.set_backend(prev)
 
 
+def test_rewrites_leave_no_side_table(spark, be):
+    """Compact, rebucket, IVF refresh and merge-on-read overwrite each
+    publish in the table's own manifest: no other table appears under
+    ``tables/`` (no stage is ever written)."""
+    from dlx_spark.operators import bucketing, similarity
+    from dlx_spark.operators.dedup_index import EmbeddingIndex
+    from dlx_spark.tableio_mor import MergeOnReadTable
+
+    def tables():
+        return set(fsio.listdir(spark, fsio.join(be._root, "tables")))
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 3), float(i % 5), 1.0]) for i in range(12)],
+        "vec_id long, embedding array<double>")
+    more = vecs.withColumn("vec_id", F.col("vec_id") + 100)
+    prev = tableio.get_backend()
+    tableio.set_backend(be)
+    try:
+        idx = EmbeddingIndex.create(vecs, "t_ns_emb", n_planes=3, dim=3)
+        idx.append(more)
+        cents = similarity.ivf_centroids(vecs, n_centroids=2, seed=1)
+        bucketing.write_ivf_index(vecs, "t_ns_ivf", cents)
+        bucketing.append_ivf_index(more, "t_ns_ivf", cents)
+        t = MergeOnReadTable(be, "t_ns_mor", key="id", partition_cols=["pt"])
+        t.overwrite(_df(spark, [(1, 0)], "id long, pt int"))
+        t.upsert(rows=_df(spark, [(2, 0)], "id long, pt int"))
+        created = tables()
+
+        idx.compact()
+        idx.rebucket(n_planes=4)
+        bucketing.refresh_ivf_index(spark, "t_ns_ivf", n_centroids=2,
+                                    seed=2)
+        t.overwrite(t.read(spark))
+        t.upsert(rows=_df(spark, [(3, 0)], "id long, pt int"))
+        assert t.compact(spark) == 2
+        assert tables() == created
+        assert sorted(r["id"] for r in t.read(spark).collect()) == [1, 2, 3]
+    finally:
+        tableio.set_backend(prev)
+
+
 def test_compact_segments_preserves_extra_metadata(spark, tmp_path):
     """Folding a partitioned table must carry its 'extra' metadata into
     the published manifest — dropping it silently disabled e.g. the
@@ -920,7 +967,7 @@ def test_compact_segment_suffix_aborts_on_replaced_list(spark, be):
     df = be.segment_df(spark, manifest, 1).unionByName(
         be.segment_df(spark, manifest, 2))
     be.compact_segments(spark, "t_sfx_race")       # the raced rewrite
-    assert not be.replace_segment_suffix(df, "t_sfx_race", token, keep=1)
+    assert not be.rewrite(df, "t_sfx_race", token, keep=1)
     assert len(be.snapshot_token(spark, "t_sfx_race")) == 1
     assert sorted(r["id"] for r in
                   be.read(spark, "t_sfx_race").collect()) == [1, 2, 3]
