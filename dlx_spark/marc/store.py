@@ -278,9 +278,6 @@ class MarcStore:
     #: theirs from the live table's manifest (``n_buckets``), and
     #: ``rebucket`` changes it in place as the store grows
     N_BUCKETS = 16
-    #: delta segments a merge-on-read table accumulates before an
-    #: inline fold (bounds read-side resolution work per table)
-    AUTO_COMPACT_AT = 16
 
     def __init__(self, spark: SparkSession, root: str,
                  n_buckets: int | None = None,
@@ -338,7 +335,6 @@ class MarcStore:
         if name not in self._mor:
             self._mor[name] = MergeOnReadTable(
                 self.backend, name, key="_id", partition_cols=["pt"],
-                auto_compact_at=self.AUTO_COMPACT_AT,
                 extra_merge=self._live_extra_merge)
         return self._mor[name]
 
@@ -352,9 +348,7 @@ class MarcStore:
             # which gain nothing from sortedness
             self._mor[name] = MergeOnReadTable(
                 self.backend, name, key="record_id",
-                partition_cols=["tag"],
-                auto_compact_at=self.AUTO_COMPACT_AT,
-                sort_col="value_norm")
+                partition_cols=["tag"], sort_col="value_norm")
         return self._mor[name]
 
     def n_buckets(self, record_type: str = "bib") -> int:
@@ -1267,7 +1261,7 @@ class MarcStore:
             finally:
                 # stamped committed whether or not the upsert raised:
                 # it MAY still have landed (e.g. the post-publish
-                # auto-compaction raised), so the flags cannot be
+                # inline fold raised), so the flags cannot be
                 # dropped.  If it landed the staleness is real; if not,
                 # the replay's refresh derives from unchanged headings
                 # (a no-op) and settles the flag instead of
@@ -1658,8 +1652,9 @@ class MarcStore:
     def compact(self, record_type: str, minor: bool = False) -> None:
         """Fold each table's delta segments into one — the maintenance
         job any upsert-heavy layout needs (the Delta/Iceberg OPTIMIZE
-        analog), also triggered inline by ``AUTO_COMPACT_AT``.  One
-        distributed rewrite per table; no rows touch the driver.
+        analog), also run inline by every table's own appends at the
+        backend's ``AUTO_COMPACT_AT`` segments.  One distributed
+        rewrite per table; no rows touch the driver.
 
         ``minor=True`` folds only each merge-on-read table's DELTA
         suffix (``compact_deltas`` — O(accumulated batches), the
@@ -1667,8 +1662,8 @@ class MarcStore:
         FREQUENTLY at 100 TB, where the default full fold is a rewrite
         of the world reserved for occasional deep-cleans.  Results are
         identical either way (tombstones survive a minor fold).  The
-        append-only history table is skipped in minor mode — its own
-        append auto-compaction bounds it."""
+        append-only history table is skipped in minor mode — the
+        backend's inline suffix fold bounds it."""
         if minor:
             self._live(record_type).compact_deltas(self.spark)
             if self._tokens(record_type).exists(self.spark):
@@ -1885,8 +1880,9 @@ class MarcStore:
         """Append version rows to the history table: one immutable
         segment per commit (atomic manifest publish), partitioned by
         pt = record_id % HISTORY_BUCKETS so per-record history reads
-        prune, folded by ``AUTO_COMPACT_AT`` so a long commit history
-        never accretes unbounded scan roots.
+        prune, folded by the append itself (the backend's suffix fold at
+        ``AUTO_COMPACT_AT`` segments, segment 0 kept) so a long commit
+        history never accretes unbounded scan roots.
 
         When a persisted deleted-records summary exists it is
         maintained here — the one choke point every history write
@@ -1917,8 +1913,8 @@ class MarcStore:
         marker = self._write_marker_for(
             self._summary_name(record_type),
             {"base_segments": base_segments})
-        n_after = self.backend.append_partitioned(
-            out, name, ["pt"], extra={"n_buckets": mod}, sort_col="record_id")
+        self.backend.append(out, name, partition_cols=["pt"],
+                            extra={"n_buckets": mod}, sort_col="record_id")
         self._mark_marker_committed(marker)
         try:
             # summary existence re-checked AFTER the append: if a
@@ -1946,8 +1942,6 @@ class MarcStore:
                 f"the deleted-summary refresh failed ({exc}); the "
                 f"summary re-converges from the dirty marker on the "
                 f"next find_deleted or store open")
-        if n_after >= self.AUTO_COMPACT_AT:
-            self.backend.compact_segments(self.spark, name)
 
     # --- deleted-records summary ----------------------------------------------
     #
@@ -1970,8 +1964,7 @@ class MarcStore:
         name = self._summary_name(record_type)
         if name not in self._mor:
             self._mor[name] = MergeOnReadTable(
-                self.backend, name, key="record_id", partition_cols=[],
-                auto_compact_at=self.AUTO_COMPACT_AT)
+                self.backend, name, key="record_id", partition_cols=[])
         return self._mor[name]
 
     @staticmethod

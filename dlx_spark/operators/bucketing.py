@@ -60,7 +60,7 @@ def write_lsh_index(df: DataFrame, name: str, n_planes: int = 8,
     # band signature array) — joining slim keys back to the vectors
     # would pay a corpus-sized shuffle for rows a projection produces
     rows = _lsh_rows(df, n_planes, seed, vec_col, id_col, dim, bands)
-    get_backend().write_partitioned(rows, name, ["band", "bucket"])
+    get_backend().write(rows, name, partition_cols=["band", "bucket"])
 
 
 def _lsh_rows(df: DataFrame, n_planes: int, seed: int, vec_col: str,
@@ -87,12 +87,13 @@ def append_lsh_index(df: DataFrame, name: str, n_planes: int = 8,
     rows bucket identically to the original write — pass the SAME
     geometry arguments or the index becomes silently unprobeable.
     Unlike IVF there is no trained quantizer to drift, so LSH appends
-    never need a refresh; each append adds a scan root until compaction
-    folds them (``auto_compact_at`` bounds that automatically)."""
+    never need a refresh; each append adds a scan root until a fold
+    merges them (the backend's appends fold at ``AUTO_COMPACT_AT``
+    segments)."""
     _check_name(name)
     dim = _infer_dim(df, vec_col, dim)
     rows = _lsh_rows(df, n_planes, seed, vec_col, id_col, dim, bands)
-    get_backend().append_partitioned(rows, name, ["band", "bucket"])
+    get_backend().append(rows, name, partition_cols=["band", "bucket"])
 
 
 def _infer_dim(df: DataFrame, vec_col: str, dim: int | None) -> int:
@@ -278,7 +279,7 @@ def write_ivf_index(df: DataFrame, name: str, centroids: np.ndarray,
     (catalog table ``name`` via the tableio backend)."""
     _check_name(name)
     assigned = similarity.ivf_assign(df, centroids, vec_col=vec_col, id_col=id_col)
-    get_backend().write_partitioned(assigned, name, ["list_id"])
+    get_backend().write(assigned, name, partition_cols=["list_id"])
 
 
 def append_ivf_index(df: DataFrame, name: str, centroids: np.ndarray,
@@ -295,7 +296,7 @@ def append_ivf_index(df: DataFrame, name: str, centroids: np.ndarray,
     OPTIMIZE analog for the ANN layer."""
     _check_name(name)
     assigned = similarity.ivf_assign(df, centroids, vec_col=vec_col, id_col=id_col)
-    get_backend().append_partitioned(assigned, name, ["list_id"])
+    get_backend().append(assigned, name, partition_cols=["list_id"])
 
 
 def refresh_ivf_index(spark: SparkSession, name: str, n_centroids: int = 16,
@@ -433,7 +434,7 @@ def semdedup_append(spark: SparkSession, name: str, batch: DataFrame,
         # idempotent append: a crashed attempt's rows stay, nothing doubles
         indexed = get_backend().read(spark, name).select("id")
         to_append = to_append.join(indexed, "id", "left_anti")
-    get_backend().append_partitioned(to_append, name, ["list_id"])
+    get_backend().append(to_append, name, partition_cols=["list_id"])
     # the survivors checkpoint is the only thing the returned frame
     # depends on: release the per-batch assignment cache so a
     # long-lived streaming ingest does not accumulate one pinned

@@ -185,7 +185,7 @@ def _dedup_increment(batch: DataFrame, id_col: str, payload: DataFrame,
 
 
 def _write_meta(spark: SparkSession, name: str, params: dict) -> None:
-    get_backend().write_plain(
+    get_backend().write(
         spark.createDataFrame([(json.dumps(params),)], "params string"),
         f"{name}_meta")
 

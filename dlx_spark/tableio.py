@@ -6,7 +6,11 @@ drop their tables.
 The engine's one backend is the manifest-committed
 ``tableio_versioned.VersionedTableBackend`` rooted at
 ``<warehouse>/_versioned``: one-commit rewrites, snapshot-isolated
-readers and optimistically-concurrent appends on plain parquet.  The index
+readers and optimistically-concurrent appends on plain parquet.  A
+table is written through two calls — ``write`` replaces it, ``append``
+adds a segment and folds the table once it reaches the backend's
+``AUTO_COMPACT_AT`` segments — each taking the layout (clustering key,
+partition columns, sort column) as arguments.  The index
 classes resolve the backend per call through ``get_backend()``, so a
 table format with its own commit protocol (Delta, Iceberg) — or a test
 double that records, races or crashes — slots in process-wide via

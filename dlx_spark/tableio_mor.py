@@ -28,9 +28,12 @@ precedence) using only that backend's primitives:
   (one segment, one manifest commit): appends racing it are carried
   with precedence preserved, and a fold whose segment list a raced
   rewrite replaced commits nothing.
-  ``auto_compact_at`` bounds how many delta segments a read ever pays
-  for, folding minor while deltas stay under
-  ``MINOR_COMPACT_MAX_DELTA_FRACTION`` of the base.
+  ``upsert`` folds inline at the backend's ``AUTO_COMPACT_AT``
+  segments — bounding how many deltas a read ever pays for — minor
+  while the backend's ``prefers_minor_fold`` rule holds (and the
+  deltas stay under the broadcast gate), full otherwise.  Its appends
+  skip the backend's own fold: a concatenating fold would resurrect
+  superseded rows.
 - **Crash safety and multi-writer are inherited**, not re-implemented:
   the commit point is the backend's manifest CAS (atomic rename /
   external CAS service), readers are snapshot-isolated, ``vacuum``
@@ -84,28 +87,13 @@ class MergeOnReadTable:
     #: readers pay nothing.
     BROADCAST_MAX_DELTA_ROWS = 4_000_000
 
-    #: auto-compaction policy split (see ``compact_deltas``): while the
-    #: delta rows are at most this fraction of the base segment's rows
-    #: (AND under the broadcast gate, so reads keep the no-shuffle fast
-    #: path), the inline compaction triggered by ``upsert`` folds only
-    #: the DELTAS — O(deltas) maintenance I/O — and the store-sized
-    #: base is rewritten only once deltas actually accumulate past the
-    #: fraction.  At 100 TB this is the difference between rewriting
-    #: the store every ``auto_compact_at`` batches and rewriting it
-    #: every ~(fraction × store / batch) batches.
-    MINOR_COMPACT_MAX_DELTA_FRACTION = 0.10
-
     def __init__(self, backend: VersionedTableBackend, table: str,
                  key: str, partition_cols: list[str] | None = None,
-                 auto_compact_at: int | None = 16,
                  extra_merge=None, sort_col: str | None = None):
-        if auto_compact_at is not None and auto_compact_at < 2:
-            raise ValueError("auto_compact_at must be >= 2")
         self.backend = backend
         self.table = table
         self.key = key
         self.partition_cols = list(partition_cols or [])
-        self.auto_compact_at = auto_compact_at
         #: within-partition clustering column for every segment write
         #: (advisory — parquet row-group min/max pruning).  Defaults to
         #: the key (point-read shape); tables whose hot filter is a
@@ -125,7 +113,7 @@ class MergeOnReadTable:
         self.extra_merge = extra_merge
         #: compactions triggered inline by upsert (probe observable);
         #: ``auto_compactions_minor`` counts the subset that folded
-        #: only the delta suffix (see MINOR_COMPACT_MAX_DELTA_FRACTION)
+        #: only the delta suffix (see ``_should_minor_compact``)
         self.auto_compactions = 0
         self.auto_compactions_minor = 0
         # (segments tuple) -> total delta rows, for the broadcast guard
@@ -159,18 +147,6 @@ class MergeOnReadTable:
 
     # ----------------------------------------------------------- write
 
-    def _conform(self, df: DataFrame, schema: T.StructType) -> DataFrame:
-        """Align ``df`` to the table schema: missing columns become
-        typed NULLs (tombstone padding), order normalized."""
-        cols = []
-        have = set(df.columns)
-        for f in schema.fields:
-            if f.name in have:
-                cols.append(F.col(f.name).cast(f.dataType))
-            else:
-                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-        return df.select(*cols)
-
     def overwrite(self, df: DataFrame, extra: dict | None = None) -> None:
         """Replace the whole table with ``df`` (the bulk-load / rebuild
         path — one clustered segment, no read-side resolution work).
@@ -184,9 +160,9 @@ class MergeOnReadTable:
             token = list(self.manifest(spark)["segments"])
             self._rewrite(out, token, extra=extra)
         else:
-            self.backend.write_partitioned(
-                out, self.table, self.partition_cols, extra=extra,
-                sort_col=self.sort_col)
+            self.backend.write(
+                out, self.table, partition_cols=self.partition_cols,
+                extra=extra, sort_col=self.sort_col)
 
     def upsert(self, rows: DataFrame | None = None,
                tombstone_keys: DataFrame | None = None,
@@ -215,18 +191,18 @@ class MergeOnReadTable:
             schema = rows.withColumn(DELETED, F.lit(False)).schema
         parts = []
         if rows is not None:
-            parts.append(self._conform(
+            parts.append(self.backend._conform(
                 rows.withColumn(DELETED, F.lit(False)), schema))
         if tombstone_keys is not None:
-            parts.append(self._conform(
+            parts.append(self.backend._conform(
                 tombstone_keys.withColumn(DELETED, F.lit(True)), schema))
         delta = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-        n_after = self.backend.append_partitioned(
-            delta, self.table, self.partition_cols, extra=extra,
-            extra_merge=self.extra_merge, expect_extra=expect_meta,
-            expect_create=expect_create, sort_col=self.sort_col)
-        if self.auto_compact_at is not None \
-                and n_after >= self.auto_compact_at:
+        n_after = self.backend.append(
+            delta, self.table, partition_cols=self.partition_cols,
+            extra=extra, extra_merge=self.extra_merge,
+            expect_extra=expect_meta, expect_create=expect_create,
+            sort_col=self.sort_col, fold=False)
+        if n_after >= self.backend.AUTO_COMPACT_AT:
             self.auto_compactions += 1
             manifest = self.manifest(spark)
             if self._should_minor_compact(spark, manifest):
@@ -266,7 +242,7 @@ class MergeOnReadTable:
             # base once is the correct plan until compact() folds it
             hint = False
         if hint:
-            # deltas are batch-sized by construction (auto_compact_at
+            # deltas are batch-sized by construction (AUTO_COMPACT_AT
             # bounds how many batches accumulate), and Catalyst's
             # post-aggregate size estimate can silently promote this to
             # a shuffle of the full base — force the broadcast.  Bulk
@@ -332,16 +308,15 @@ class MergeOnReadTable:
         """True when folding only the deltas keeps the read fast path:
         the folded delta (upper-bounded by the footer-count of delta
         rows — merging only shrinks) stays under the broadcast gate AND
-        under ``MINOR_COMPACT_MAX_DELTA_FRACTION`` of the base.  Above
-        either bound the table has outgrown delta-resolution and the
-        full fold is the right maintenance."""
-        if len(manifest["segments"]) <= 2:
-            return False
+        the backend's ``prefers_minor_fold`` rule holds.  Past either
+        the table has outgrown delta-resolution and the full fold is
+        the right maintenance."""
         d = self._delta_rows(spark, manifest)
         if d > self.BROADCAST_MAX_DELTA_ROWS:
             return False
         base = self.backend.segment_df(spark, manifest, 0).count()
-        return d <= max(1, int(base * self.MINOR_COMPACT_MAX_DELTA_FRACTION))
+        return self.backend.prefers_minor_fold(
+            len(manifest["segments"]), base, d)
 
     def compact_deltas(self, spark: SparkSession) -> int:
         """MINOR compaction: fold the delta segments (everything past
@@ -366,8 +341,8 @@ class MergeOnReadTable:
         token = list(manifest["segments"])
         if len(token) <= 2:
             return 0
-        merged = self._conform(self._merged_deltas(spark, manifest),
-                               self._schema(manifest))
+        merged = self.backend._conform(self._merged_deltas(spark, manifest),
+                                       self._schema(manifest))
         ok = self.backend.rewrite(merged, self.table, token, keep=1,
                                   sort_col=self.sort_col)
         if ok:

@@ -8,6 +8,10 @@ Stores", VLDB 2020):
   segment directory ``<root>/data/<table>-<uuid>/`` that is never
   modified (the table name makes executed plans and disk usage
   attributable; the uuid makes the name unique).
+- **Two write calls.**  ``write`` replaces a table with one segment;
+  ``append`` adds one, conformed to the head's schema.  Both take the
+  layout as arguments (a clustering ``key``, hive ``partition_cols``,
+  a within-partition ``sort_col``) and caller-owned ``extra`` metadata.
 - **The commit point is one file rename.**  A table version is a JSON
   manifest ``<root>/tables/<name>/v<NNNNNNNNNN>.json`` listing the
   segment ids that make up that version (plus layout + schema).  A
@@ -34,6 +38,13 @@ Stores", VLDB 2020):
   unpublished: a crash leaves only an unreferenced segment for
   ``vacuum``, and nothing is re-published when the table is next
   opened.
+- **Appends fold themselves.**  An append whose commit leaves
+  ``AUTO_COMPACT_AT`` segments folds the table with one such rewrite:
+  only the appended suffix while it is small next to segment 0
+  (``MINOR_FOLD_MAX_FRACTION``), the whole table otherwise — the way
+  Delta treats compaction as an ordinary table commit rather than a
+  per-caller policy.  Merge-on-read tables, whose segment order is key
+  precedence, opt out and fold with their own resolution.
 
 Scheme contract (TESTED, not just documented — tests/test_commit_schemes.py):
 the manifest publish routes through fsio's pluggable commit scheme, the
@@ -101,8 +112,7 @@ class VersionedTableBackend:
     """Snapshot-isolated, optimistically-concurrent table commits on
     plain parquet (see module docstring)."""
 
-    def __init__(self, root: str | None = None,
-                 auto_compact_at: int | None = None):
+    def __init__(self, root: str | None = None):
         # root resolved lazily against the active session's warehouse
         # dir when not given (the session may not exist at import time)
         self._root = root
@@ -110,18 +120,6 @@ class VersionedTableBackend:
         #: lifetime — the observable the contention probe reports
         #: (tools/scale_probe.py --contention); advisory, not synchronized
         self.races_lost = 0
-        #: segment-count threshold that triggers an inline
-        #: ``compact_segments`` after an append commits (the OPTIMIZE
-        #: auto-trigger, see ``_maybe_auto_compact``); None = manual only
-        if auto_compact_at is not None and auto_compact_at < 2:
-            raise ValueError("auto_compact_at must be >= 2 (a 1-segment "
-                             "table is already compact)")
-        self.auto_compact_at = auto_compact_at
-        #: auto-compactions run (observable for the scale probe);
-        #: ``_minor`` counts the subset that folded only the appended
-        #: suffix (see MINOR_COMPACT_MAX_SUFFIX_FRACTION)
-        self.auto_compactions = 0
-        self.auto_compactions_minor = 0
 
     # ---------------------------------------------------------- paths
 
@@ -335,63 +333,41 @@ class VersionedTableBackend:
 
     # ------------------------------------------- tableio interface
 
-    def write(self, df: DataFrame, table: str, key: str) -> None:
+    def write(self, df: DataFrame, table: str, key: str | None = None, *,
+              partition_cols: list[str] | None = None,
+              sort_col: str | None = None,
+              extra: dict | None = None) -> None:
+        """Replace the table with ``df`` as one segment: clustered by
+        ``key`` when given, hive-partitioned by ``partition_cols`` (and
+        sorted by ``sort_col`` within each partition) when given, plain
+        otherwise.  ``extra`` is the new version's table metadata."""
         spark = df.sparkSession
-        seg = self._write_segment(spark, df, table, key)
+        seg = self._write_segment(spark, df, table, key, partition_cols,
+                                  sort_col=sort_col)
         self._commit(spark, table,
-                     lambda latest: self._layout(df, key, [seg]))
-
-    def append(self, df: DataFrame, table: str, key: str) -> None:
-        spark = df.sparkSession
-        seg = self._write_segment(spark, df, table, key)
-        n_after = 0
-
-        def payload(latest):
-            nonlocal n_after
-            segs = (latest["segments"] if latest else []) + [seg]
-            n_after = len(segs)
-            # the head's metadata rides along (an embedding index's
-            # bucket geometry lives there)
-            return self._layout(df, key, segs,
-                                extra=latest.get("extra") if latest else None)
-
-        self._commit(spark, table, payload)
-        self._maybe_auto_compact(spark, table, n_after)
-
-    def write_plain(self, df: DataFrame, table: str) -> None:
-        spark = df.sparkSession
-        seg = self._write_segment(spark, df, table, None)
-        self._commit(spark, table,
-                     lambda latest: self._layout(df, None, [seg]))
-
-    def write_partitioned(self, df: DataFrame, table: str,
-                          partition_cols: list[str], *,
-                          extra: dict | None = None,
-                          sort_col: str | None = None) -> None:
-        spark = df.sparkSession
-        seg = self._write_segment(spark, df, table, None,
-                                  partition_cols, sort_col=sort_col)
-        self._commit(spark, table,
-                     lambda latest: self._layout(df, None, [seg],
+                     lambda latest: self._layout(df, key, [seg],
                                                  partition_cols, extra,
                                                  sort_col=sort_col))
 
-    def append_partitioned(self, df: DataFrame, table: str,
-                           partition_cols: list[str], *,
-                           extra: dict | None = None,
-                           extra_merge=None,
-                           expect_extra: dict | None = None,
-                           expect_create: bool = False,
-                           sort_col: str | None = None) -> int:
-        """Append one segment; returns the committed manifest's segment
-        count (callers use it to decide compaction).  ``extra`` seeds
-        table metadata only when this append CREATES the table; on an
-        existing table the head's metadata is preserved (appends never
-        change table geometry) — unless ``extra_merge(new, head)`` is
-        given, which folds this call's ``extra`` onto the HEAD's
-        metadata inside the commit (re-invoked on every CAS retry, so
-        two racing writers both land their updates — the hook monotonic
-        counters like a max-assigned-id hint need).
+    def append(self, df: DataFrame, table: str, key: str | None = None, *,
+               partition_cols: list[str] | None = None,
+               sort_col: str | None = None,
+               extra: dict | None = None,
+               extra_merge=None,
+               expect_extra: dict | None = None,
+               expect_create: bool = False,
+               fold: bool = True) -> int:
+        """Append one segment in ``write``'s layout; returns the
+        committed manifest's segment count.  ``df`` is first conformed
+        to the head's schema (``_conform``), so an append never changes
+        the table's column types.  ``extra`` seeds table metadata only
+        when this append CREATES the table; on an existing table the
+        head's metadata is preserved (appends never change table
+        geometry) — unless ``extra_merge(new, head)`` is given, which
+        folds this call's ``extra`` onto the HEAD's metadata inside the
+        commit (re-invoked on every CAS retry, so two racing writers
+        both land their updates — the hook monotonic counters like a
+        max-assigned-id hint need).
 
         ``expect_extra`` asserts metadata the appended ROWS were
         derived under, checked against the head INSIDE the commit: a
@@ -401,10 +377,22 @@ class VersionedTableBackend:
         metadata read and its append would otherwise accept delta rows
         whose partition values are wrong under the new modulus, making
         partition-pruned reads silently MISS them.  The orphaned
-        segment file is reclaimed by vacuum, like a failed rewrite's."""
+        segment file is reclaimed by vacuum, like a failed rewrite's.
+
+        ``fold`` runs the inline fold (``_fold``) once the commit
+        leaves ``AUTO_COMPACT_AT`` segments; a layered table whose
+        segment order carries precedence (merge-on-read) passes False
+        and folds with its own resolution."""
         spark = df.sparkSession
-        seg = self._write_segment(spark, df, table, None,
-                                  partition_cols, sort_col=sort_col)
+        try:
+            _, head = self._latest(spark, table)
+        except FileNotFoundError:
+            head = None
+        if head is not None and head["segments"]:
+            df = self._conform(df, T.StructType.fromJson(
+                json.loads(head["schema"])))
+        seg = self._write_segment(spark, df, table, key, partition_cols,
+                                  sort_col=sort_col)
         n_after = 0
 
         def payload(latest):
@@ -437,71 +425,76 @@ class VersionedTableBackend:
             else:
                 keep = latest.get("extra") if latest else extra
             sc = sort_col or (latest.get("sort_col") if latest else None)
-            return self._layout(df, None, segs, partition_cols,
+            return self._layout(df, key, segs, partition_cols,
                                 keep, sort_col=sc)
 
         self._commit(spark, table, payload)
-        self._maybe_auto_compact(spark, table, n_after)
+        if fold and n_after >= self.AUTO_COMPACT_AT:
+            self._fold(spark, table)
         return n_after
 
-    #: auto-compaction policy split (mirror of MergeOnReadTable's —
-    #: see tableio_mor.MINOR_COMPACT_MAX_DELTA_FRACTION): while the
-    #: appended-suffix rows are at most this fraction of segment 0,
-    #: the inline fold is SUFFIX-ONLY (compact_segment_suffix —
-    #: O(appended batches), the base never read or rewritten).  For
-    #: an append-only table that keeps growing (the store's history
-    #: log), this makes steady maintenance O(recent batches) instead
-    #: of a full-log rewrite every ``auto_compact_at`` appends.
-    MINOR_COMPACT_MAX_SUFFIX_FRACTION = 0.10
+    @staticmethod
+    def _conform(df: DataFrame, schema: T.StructType) -> DataFrame:
+        """Align ``df`` to ``schema``: columns cast by name, missing
+        columns become typed NULLs (tombstone padding), order
+        normalized, columns the schema lacks dropped."""
+        have = set(df.columns)
+        return df.select(*[
+            F.col(f.name).cast(f.dataType) if f.name in have
+            else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in schema.fields])
 
-    def _maybe_auto_compact(self, spark: SparkSession, table: str,
-                            n_segments: int) -> None:
-        """The OPTIMIZE auto-trigger: when an append's committed
-        manifest reaches ``auto_compact_at`` segments, fold the table
-        inline via ``compact_segments``.  Without this, append-heavy
-        ingest (the streaming near-dedup sink appends one segment per
-        micro-batch; partitioned ANN indexes one SCAN ROOT per append)
-        accumulates segments without bound and every read pays the
-        amplification — measured in tools/scale_probe.py --autocompact.
+    #: the package's one inline-fold threshold: an append whose commit
+    #: leaves this many segments folds the table (merge-on-read tables
+    #: apply the same threshold to their precedence-aware fold)
+    AUTO_COMPACT_AT = 16
+    #: the one minor-vs-full rule: while the rows past segment 0 are at
+    #: most this fraction of segment 0's, a fold rewrites only that
+    #: suffix (the base — store-sized for the history log — is kept by
+    #: id); past it the table is rewritten whole, which also merges the
+    #: base's small files
+    MINOR_FOLD_MAX_FRACTION = 0.10
 
-        Ordering is load-bearing: the trigger runs AFTER the append's
-        own commit, so the appended rows are durable before any
-        compaction work starts — a crash mid-compaction loses only an
-        unreferenced segment (vacuum reclaims it), never data, and the
-        next threshold-crossing append simply re-triggers.  The fold is
-        the same one-commit ``rewrite`` as manual compaction, so appends
-        racing it are carried into the new version.  Two writers
-        crossing the threshold together both fold, and the later commit
-        finds the list replaced and publishes nothing (wasted work,
-        correct result); deployments with many concurrent appenders
-        should prefer a single maintenance-cadence ``compact_segments``
-        and leave this off."""
-        if self.auto_compact_at is None or n_segments < self.auto_compact_at:
-            return
-        self.auto_compactions += 1
-        if self._should_minor_compact(spark, table):
-            self.auto_compactions_minor += 1
-            self.compact_segment_suffix(spark, table)
-        else:
-            self.compact_segments(spark, table)
+    @classmethod
+    def prefers_minor_fold(cls, n_segments: int, base_rows: int,
+                           suffix_rows: int) -> bool:
+        """The minor-vs-full rule (see ``MINOR_FOLD_MAX_FRACTION``);
+        with two segments there is no suffix of more than one to fold."""
+        return n_segments > 2 and suffix_rows <= max(
+            1, int(base_rows * cls.MINOR_FOLD_MAX_FRACTION))
 
-    def _should_minor_compact(self, spark: SparkSession,
-                              table: str) -> bool:
-        """True when the appended suffix is small relative to segment 0
-        (footer-only zero-column counts — cheap) so a suffix fold keeps
-        maintenance O(suffix); tiny or rewrite-heavy tables stay on the
-        full fold, which also merges the base's small files."""
+    def _fold(self, spark: SparkSession, table: str) -> None:
+        """The inline fold (Delta's OPTIMIZE as an ordinary table
+        commit): the suffix fold while ``prefers_minor_fold``, else the
+        full ``compact_segments``.  Without it, append-heavy ingest (a
+        streaming sink's micro-batches, an ANN index's increments, the
+        store's history log) accumulates segments without bound and
+        every read pays the amplification.
+
+        It runs AFTER the append's own commit, so the appended rows are
+        durable before any fold work starts — a crash mid-fold loses
+        only an unreferenced segment (vacuum reclaims it), and the next
+        threshold-crossing append re-folds.  The fold is the same
+        one-commit ``rewrite`` as manual compaction, so appends racing
+        it are carried; two writers crossing the threshold together
+        both fold, and the later commit finds the list replaced and
+        publishes nothing."""
         try:
             _, manifest = self._latest(spark, table)
         except FileNotFoundError:
-            return False
+            return
         segs = manifest["segments"]
-        if len(segs) <= 2:
-            return False
+        if len(segs) < 2:
+            return
+        # footer-only zero-column counts: the base, and the whole
+        # suffix in one scan
         base = self.segment_df(spark, manifest, 0).count()
-        suffix = sum(self.segment_df(spark, manifest, i).count()
-                     for i in range(1, len(segs)))
-        return suffix <= base * self.MINOR_COMPACT_MAX_SUFFIX_FRACTION
+        suffix = self._read_manifest_df(
+            spark, {**manifest, "segments": segs[1:]}).count()
+        if self.prefers_minor_fold(len(segs), base, suffix):
+            self.compact_segment_suffix(spark, table)
+        else:
+            self.compact_segments(spark, table)
 
     def compact_segment_suffix(self, spark: SparkSession, table: str,
                                keep: int = 1,

@@ -8,8 +8,9 @@ touching any operator code:
 
 1. local/HDFS, single app   -> VersionedTableBackend on the default
    rename scheme (atomic manifest commits, snapshot readers)
-2. append-heavy ingest      -> auto_compact_at bounds read
-   amplification with zero manual maintenance
+2. append-heavy ingest      -> appends fold the table at
+   AUTO_COMPACT_AT segments: read amplification bounded with zero
+   configuration or manual maintenance
 3. object store, one driver -> SingleDriverCASScheme
 4. object store, MANY drivers with no atomic primitives at all
                             -> ExternalCASScheme + an external
@@ -56,15 +57,15 @@ def main() -> None:
               f"head: {be.read(spark, 'demo_idx_sigs').count()} rows")
         idx.drop()
 
-        # ---- 2. auto-compaction: bounded segments on append-heavy ingest
-        ab = VersionedTableBackend(root=os.path.join(workdir, "vroot_ac"),
-                                   auto_compact_at=4)
-        for day in range(10):
+        # ---- 2. append-heavy ingest: the appends fold themselves
+        ab = VersionedTableBackend(root=os.path.join(workdir, "vroot_ac"))
+        n_days = ab.AUTO_COMPACT_AT + 4
+        for day in range(n_days):
             ab.append(docs.withColumn("doc_id", F.col("doc_id") + day * 100),
                       "daily_feed", "doc_id")
-        print(f"10 appends, auto_compact_at=4 -> "
+        print(f"{n_days} appends, fold at {ab.AUTO_COMPACT_AT} segments -> "
               f"{len(ab.snapshot_token(spark, 'daily_feed'))} segment(s), "
-              f"{ab.auto_compactions} auto-compaction(s)")
+              f"{ab.read(spark, 'daily_feed').count()} rows")
 
         # ---- 3. object store, single driver
         fsio.set_commit_scheme(fsio.SingleDriverCASScheme())

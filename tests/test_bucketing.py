@@ -213,13 +213,15 @@ def test_ann_index_ops_route_through_backend_seam(spark):
             super().__init__()
             self.calls = []
 
-        def write_partitioned(self, df, table, cols):
-            self.calls.append(("write_partitioned", table, tuple(cols)))
-            super().write_partitioned(df, table, cols)
+        def write(self, df, table, key=None, **kw):
+            self.calls.append(("write", table,
+                               tuple(kw.get("partition_cols") or ())))
+            super().write(df, table, key, **kw)
 
-        def append_partitioned(self, df, table, cols):
-            self.calls.append(("append_partitioned", table, tuple(cols)))
-            super().append_partitioned(df, table, cols)
+        def append(self, df, table, key=None, **kw):
+            self.calls.append(("append", table,
+                               tuple(kw.get("partition_cols") or ())))
+            return super().append(df, table, key, **kw)
 
         def read(self, spark, table):
             self.calls.append(("read", table))
@@ -247,13 +249,12 @@ def test_ann_index_ops_route_through_backend_seam(spark):
         bucketing.probe_ivf_index(spark, "t_seam_ivf", cents, rows[0][1],
                                   k=3, nprobe=1).collect()
         ops = {c[0] for c in rec.calls}
-        assert ops >= {"write_partitioned", "append_partitioned", "read",
-                       "rewrite"}
+        assert ops >= {"write", "append", "read", "rewrite"}
         # the refresh publishes conflict-checked, through the seam
         assert ("rewrite", "t_seam_ivf", 0, True) in rec.calls
-        assert ("write_partitioned", "t_seam_lsh",
-                ("band", "bucket")) in rec.calls
-        assert ("write_partitioned", "t_seam_ivf", ("list_id",)) in rec.calls
+        assert ("write", "t_seam_lsh", ("band", "bucket")) in rec.calls
+        assert ("write", "t_seam_ivf", ("list_id",)) in rec.calls
+        assert ("append", "t_seam_ivf", ("list_id",)) in rec.calls
         # path-spelled names are refused with a migration pointer
         with pytest.raises(ValueError, match="tableio"):
             bucketing.write_lsh_index(df, "/tmp/not/a/table", n_planes=5,

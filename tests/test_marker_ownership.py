@@ -96,8 +96,8 @@ def test_foreign_summary_marker_survives_concurrent_writers_replay(store):
 
     # B's append lands; B stamps committed, then dies before its fold
     hist, mod = _history_delete_rows(store, rid=1, version=2)
-    store.backend.append_partitioned(hist, "bib_history", ["pt"],
-                                     extra={"n_buckets": mod})
+    store.backend.append(hist, "bib_history", partition_cols=["pt"],
+                         extra={"n_buckets": mod})
     store._mark_marker_committed(m_b)
 
     # the next read replays B's marker: folds B's batch, settles it

@@ -554,8 +554,7 @@ def test_mor_random_op_sequences_match_dict_model(spark, ops):
     root = tempfile.mkdtemp(prefix="mor_prop_")
     try:
         be = VersionedTableBackend(root=root)
-        t = MergeOnReadTable(be, "t", key="k", partition_cols=["pt"],
-                             auto_compact_at=None)
+        t = MergeOnReadTable(be, "t", key="k", partition_cols=["pt"])
         model: dict[int, str] = {}
         for op in ops:
             if op[0] == "upsert":

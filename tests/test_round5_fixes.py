@@ -66,10 +66,10 @@ def _be():
 
 
 def _write_idx(spark, table, ids):
-    _be().write_partitioned(
+    _be().write(
         spark.createDataFrame([(int(i), [float(i)], 0) for i in ids],
                               "id long, vec array<double>, list_id int"),
-        table, ["list_id"])
+        table, partition_cols=["list_id"])
 
 
 def _idx_ids(spark, table):
@@ -277,7 +277,7 @@ def test_dedup_index_meta_garbage_raises_clearly(spark, tmp_path):
     from dlx_spark.operators import dedup_index
 
     name = "torn_meta_idx"
-    _be().write_plain(
+    _be().write(
         spark.createDataFrame([("{not json",)], "params string"),
         f"{name}_meta")
     try:
@@ -363,17 +363,13 @@ def test_table_backend_seam_routes_every_index_operation(spark):
             super().__init__()
             self.calls = []
 
-        def write(self, df, table, key):
+        def write(self, df, table, key=None, **kw):
             self.calls.append(("write", table))
-            super().write(df, table, key)
+            super().write(df, table, key, **kw)
 
-        def write_plain(self, df, table):
-            self.calls.append(("write_plain", table))
-            super().write_plain(df, table)
-
-        def append(self, df, table, key):
+        def append(self, df, table, key=None, **kw):
             self.calls.append(("append", table))
-            super().append(df, table, key)
+            return super().append(df, table, key, **kw)
 
         def read(self, spark, table):
             self.calls.append(("read", table))
@@ -410,8 +406,7 @@ def test_table_backend_seam_routes_every_index_operation(spark):
         tableio.set_backend(prev)
 
     ops = {op for op, _ in rec.calls}
-    assert {"write", "write_plain", "append", "read",
-            "rewrite", "drop"} <= ops
+    assert {"write", "append", "read", "rewrite", "drop"} <= ops
     tables = {t for _, t in rec.calls}
     assert "t_seam_idx_digests" in tables and "t_seam_idx_meta" in tables
 
@@ -459,8 +454,8 @@ def test_legacy_single_band_lsh_index_still_probes(spark, tmp_path):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     path = "t_r6_legacy_lsh"
     # the OLD layout: (id, bucket, vec) partitioned by bucket, no band
-    _be().write_partitioned(similarity.lsh_buckets(df, n_planes=5, dim=8),
-                            path, ["bucket"])
+    _be().write(similarity.lsh_buckets(df, n_planes=5, dim=8),
+                path, partition_cols=["bucket"])
 
     q = rows[0][1]
     got = bucketing.probe_lsh_index(spark, path, q, k=3, n_planes=5).collect()
@@ -479,7 +474,7 @@ def test_embedding_index_legacy_layout_raises_clearly(spark):
     buckets table."""
     from dlx_spark.operators.dedup_index import EmbeddingIndex, _write_meta
 
-    _be().write_plain(
+    _be().write(
         spark.createDataFrame([(1, [1.0, 0.0], 3)],
                               "id long, vec array<double>, bucket long"),
         "t_legacy_emb_vecs")

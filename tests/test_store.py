@@ -371,6 +371,53 @@ def test_commit_frame_distributed_auth_check(spark, tmp_path, auth_docs):
     assert sub["value"] == "Header" and sub["xref"] == 1
 
 
+def test_history_log_takes_the_suffix_fold(spark, tmp_path, monkeypatch):
+    """The history log only grows (one segment per commit), and its
+    first segment is the bulk of it: the inline fold must rewrite only
+    the appended suffix, keeping segment 0 by id, under the same
+    segment bound and with per-record history unchanged."""
+    from dlx_spark import schemas
+    from dlx_spark.tableio_versioned import VersionedTableBackend
+
+    monkeypatch.setattr(VersionedTableBackend, "AUTO_COMPACT_AT", 3)
+    store = MarcStore(spark, str(tmp_path / "wh_hist_fold"))
+    frame = spark.range(50).select(
+        F.lit(None).cast("long").alias("_id"),
+        F.lit(None).cast("string").alias("leader"),
+        F.lit(None).cast(schemas.MARC["controlfields"].dataType)
+        .alias("controlfields"),
+        F.array(F.struct(
+            F.lit("245").alias("tag"), F.lit(" ").alias("ind1"),
+            F.lit(" ").alias("ind2"),
+            F.array(F.struct(
+                F.lit("a").alias("code"),
+                F.concat(F.lit("Title "), F.col("id")).alias("value"),
+                F.lit(None).cast("long").alias("xref"))).alias("subfields"),
+        )).alias("datafields"),
+        *[F.lit(None).cast(schemas.MARC[c].dataType).alias(c)
+          for c in ("created", "created_user", "updated", "user",
+                    "basket", "text", "words")])
+    assert store.commit_frame(frame, record_type="bib", user="bulk",
+                              auth_check=False, now=T0) == 50
+
+    def segments():
+        return store.backend.latest_manifest(spark, "bib_history")["segments"]
+
+    base = segments()[0]
+    before = [v.get_value("245", "a") for v in store.history("bib", 7)]
+    counts = []
+    for i in range(3):
+        rec = Bib().set("245", "a", f"one {i}", auth_control=False)
+        store.commit([rec], user="u", now=T1)
+        counts.append(len(segments()))
+        assert segments()[0] == base
+    # without a fold the log would hold 4 segments by now
+    assert max(counts) <= 3 and counts[-1] == 2
+    assert [v.get_value("245", "a")
+            for v in store.history("bib", 7)] == before
+    assert store.history_df("bib").count() == 53
+
+
 @pytest.mark.slow
 def test_commit_frame_small_batch_is_o_batch(spark, tmp_path):
     """A small commit_frame batch must land as ONE appended delta

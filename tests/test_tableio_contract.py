@@ -52,9 +52,9 @@ def test_contract_write_read_append_exists_drop(spark, be):
 def test_contract_partitioned_roundtrip_and_pruned_scan(spark, be):
     df = _df(spark, [(i, "a" if i % 2 else "b") for i in range(8)],
              "id long, part string")
-    be.write_partitioned(df, "c_t2", ["part"])
-    be.append_partitioned(_df(spark, [(100, "c")], "id long, part string"),
-                          "c_t2", ["part"])
+    be.write(df, "c_t2", partition_cols=["part"])
+    be.append(_df(spark, [(100, "c")], "id long, part string"),
+              "c_t2", partition_cols=["part"])
     got = be.read(spark, "c_t2")
     assert got.count() == 9
     probe = got.filter(F.col("part") == "c")
@@ -66,13 +66,26 @@ def test_contract_partitioned_roundtrip_and_pruned_scan(spark, be):
     assert "part" in plan.split("PartitionFilters")[1][:200]
 
 
-def test_contract_write_plain_and_schema_change(spark, be):
-    be.write_plain(_df(spark, [(1, "a")]), "c_t3")
+def test_contract_unkeyed_write_and_schema_change(spark, be):
+    be.write(_df(spark, [(1, "a")]), "c_t3")
     assert be.read(spark, "c_t3").columns == ["id", "text"]
     # full overwrite may change the schema (index metadata tables do)
-    be.write_plain(spark.createDataFrame([(1, 2.5)], "k long, v double"),
-                   "c_t3")
+    be.write(spark.createDataFrame([(1, 2.5)], "k long, v double"),
+             "c_t3")
     assert be.read(spark, "c_t3").columns == ["k", "v"]
+
+
+def test_contract_append_keeps_the_head_schema(spark, be):
+    """An append is conformed to the table's schema: a keyed append of
+    an int column onto a long one must neither retype the table nor
+    leave a segment the table's readers cannot decode."""
+    be.write(_df(spark, [(1, "a")]), "c_t4", "id")
+    be.append(spark.range(1).select(F.lit(600).alias("id"),
+                                    F.lit("b").alias("text")),
+              "c_t4", "id")
+    got = be.read(spark, "c_t4")
+    assert got.schema["id"].dataType.typeName() == "long"
+    assert sorted(r["id"] for r in got.collect()) == [1, 600]
 
 
 def test_contract_rewrite_carries_raced_append(spark, be):

@@ -81,8 +81,7 @@ def test_upsert_is_o_batch_and_compact_folds(spark, be):
     """A small upsert must append ONE segment and leave every existing
     data file untouched (the write-amplification contract); compact
     folds all segments into one with identical content."""
-    t = MergeOnReadTable(be, "t3", key="k", partition_cols=["pt"],
-                         auto_compact_at=None)
+    t = MergeOnReadTable(be, "t3", key="k", partition_cols=["pt"])
     t.overwrite(_rows(spark, [(i, f"v{i}") for i in range(32)]))
     data_dir = fsio.join(be.root(spark), "data")
 
@@ -110,9 +109,9 @@ def test_upsert_is_o_batch_and_compact_folds(spark, be):
 
 
 @pytest.mark.slow
-def test_auto_compact_bounds_segments(spark, be):
-    t = MergeOnReadTable(be, "t4", key="k", partition_cols=["pt"],
-                         auto_compact_at=3)
+def test_auto_compact_bounds_segments(spark, be, monkeypatch):
+    monkeypatch.setattr(VersionedTableBackend, "AUTO_COMPACT_AT", 3)
+    t = MergeOnReadTable(be, "t4", key="k", partition_cols=["pt"])
     t.overwrite(_rows(spark, [(1, "a")]))
     for i in range(5):
         t.upsert(rows=_rows(spark, [(10 + i, f"n{i}")]))
@@ -120,6 +119,22 @@ def test_auto_compact_bounds_segments(spark, be):
     assert t.auto_compactions >= 1
     assert _read_sorted(t, spark) == [(1, "a")] + [
         (10 + i, f"n{i}") for i in range(5)]
+
+
+def test_inline_fold_keeps_one_row_per_key(spark, be, monkeypatch):
+    """Past the fold threshold a key upserted many times still resolves
+    to its latest row and a tombstoned key stays gone: the fold that
+    runs inline is the precedence-aware one, never the backend's
+    concatenating fold (which would keep every superseded row of the
+    key in one segment)."""
+    monkeypatch.setattr(VersionedTableBackend, "AUTO_COMPACT_AT", 3)
+    t = MergeOnReadTable(be, "t_fold", key="k", partition_cols=["pt"])
+    t.overwrite(_rows(spark, [(1, "v0"), (2, "b")]))
+    for i in range(1, 5):
+        t.upsert(rows=_rows(spark, [(1, f"v{i}")]))
+    t.upsert(tombstone_keys=_rows(spark, [(2, None)]).select("k", "pt"))
+    assert len(t.segments(spark)) < 3
+    assert _read_sorted(t, spark) == [(1, "v4")]
 
 
 def test_resolution_plan_base_not_shuffled_and_keys_broadcast(spark, be):
@@ -292,8 +307,7 @@ def test_compact_deltas_folds_suffix_base_untouched(spark, be):
     id — no base file rewritten — and the resolved content is
     byte-identical.  Tombstones survive the fold (a later full compact
     and reads both still see the deletion)."""
-    t = MergeOnReadTable(be, "mc1", key="k", partition_cols=["pt"],
-                         auto_compact_at=None)
+    t = MergeOnReadTable(be, "mc1", key="k", partition_cols=["pt"])
     t.overwrite(_rows(spark, [(i, f"v{i}") for i in range(64)]))
     base_seg = t.segments(spark)[0]
     base_files = _file_set(spark, be)
@@ -322,14 +336,13 @@ def test_compact_deltas_folds_suffix_base_untouched(spark, be):
 def test_compact_deltas_carries_raced_appends(spark, be):
     """A batch that lands between the fold's snapshot and its commit is
     carried AFTER the merged delta, so its precedence is preserved."""
-    t = MergeOnReadTable(be, "mc2", key="k", partition_cols=["pt"],
-                         auto_compact_at=None)
+    t = MergeOnReadTable(be, "mc2", key="k", partition_cols=["pt"])
     t.overwrite(_rows(spark, [(1, "a"), (2, "b")]))
     t.upsert(rows=_rows(spark, [(1, "d1")]))
     t.upsert(rows=_rows(spark, [(2, "d2")]))
     stale = t.manifest(spark)
     token = list(stale["segments"])
-    merged = t._conform(t._merged_deltas(spark, stale), t._schema(stale))
+    merged = be._conform(t._merged_deltas(spark, stale), t._schema(stale))
     # the race: another writer updates key 1 past the fold's snapshot
     t.upsert(rows=_rows(spark, [(1, "RACED")]))
     assert t.backend.rewrite(merged, "mc2", token, keep=1)
@@ -342,14 +355,13 @@ def test_compact_deltas_aborts_on_replaced_list(spark, be):
     """A raced FULL rewrite (compact/rebucket) replaces the segment
     list; suffix surgery derived from the superseded list must abort
     without committing."""
-    t = MergeOnReadTable(be, "mc3", key="k", partition_cols=["pt"],
-                         auto_compact_at=None)
+    t = MergeOnReadTable(be, "mc3", key="k", partition_cols=["pt"])
     t.overwrite(_rows(spark, [(1, "a"), (2, "b")]))
     t.upsert(rows=_rows(spark, [(1, "A")]))
     t.upsert(rows=_rows(spark, [(3, "c")]))
     stale = t.manifest(spark)
     token = list(stale["segments"])
-    merged = t._conform(t._merged_deltas(spark, stale), t._schema(stale))
+    merged = be._conform(t._merged_deltas(spark, stale), t._schema(stale))
     assert t.compact(spark) == 3                   # the raced full fold
     want = _read_sorted(t, spark)
     assert not t.backend.rewrite(merged, "mc3", token, keep=1)
@@ -360,12 +372,13 @@ def test_compact_deltas_aborts_on_replaced_list(spark, be):
 
 
 @pytest.mark.slow
-def test_auto_compact_prefers_minor_on_large_base(spark, be):
+def test_auto_compact_prefers_minor_on_large_base(spark, be,
+                                                  monkeypatch):
     """The upsert-triggered compaction folds only the deltas while they
     are a small fraction of the base — the base segment survives the
     whole run unrewritten (O(batch) maintenance, not O(store))."""
-    t = MergeOnReadTable(be, "mc4", key="k", partition_cols=["pt"],
-                         auto_compact_at=3)
+    monkeypatch.setattr(VersionedTableBackend, "AUTO_COMPACT_AT", 3)
+    t = MergeOnReadTable(be, "mc4", key="k", partition_cols=["pt"])
     t.overwrite(_rows(spark, [(i, f"v{i}") for i in range(500)]))
     base_seg = t.segments(spark)[0]
     for i in range(6):
@@ -379,12 +392,13 @@ def test_auto_compact_prefers_minor_on_large_base(spark, be):
 
 
 @pytest.mark.slow
-def test_auto_compact_falls_back_to_full_when_deltas_large(spark, be):
-    """Deltas past MINOR_COMPACT_MAX_DELTA_FRACTION of the base make
+def test_auto_compact_falls_back_to_full_when_deltas_large(spark, be,
+                                                          monkeypatch):
+    """Deltas past MINOR_FOLD_MAX_FRACTION of the base make
     the trigger do the full fold (delta-resolution has outgrown the
     fast path)."""
-    t = MergeOnReadTable(be, "mc5", key="k", partition_cols=["pt"],
-                         auto_compact_at=3)
+    monkeypatch.setattr(VersionedTableBackend, "AUTO_COMPACT_AT", 3)
+    t = MergeOnReadTable(be, "mc5", key="k", partition_cols=["pt"])
     t.overwrite(_rows(spark, [(1, "a")]))
     for i in range(4):
         t.upsert(rows=_rows(spark, [(10 + i, f"n{i}")]))
@@ -402,8 +416,7 @@ def test_segments_cluster_rows_by_key_within_buckets(spark, be):
     the scan-level point-read optimization that matters once buckets
     span many row groups (measured 39% faster at 4M rows with
     row-group-sized files)."""
-    t = MergeOnReadTable(be, "sc1", key="k", partition_cols=["pt"],
-                         auto_compact_at=None)
+    t = MergeOnReadTable(be, "sc1", key="k", partition_cols=["pt"])
     # deliberately unsorted input
     t.overwrite(_rows(spark, [(i * 37 % 64, f"v{i}") for i in range(64)]))
     t.upsert(rows=_rows(spark, [(50 - i, f"u{i}") for i in range(20)]))
@@ -436,7 +449,7 @@ def test_custom_sort_col_clusters_by_that_column(spark, be):
     cluster by a different scalar; the manifest records it and folds
     preserve it."""
     t = MergeOnReadTable(be, "sc2", key="k", partition_cols=["pt"],
-                         auto_compact_at=None, sort_col="v")
+                         sort_col="v")
     t.overwrite(_rows(spark, [(i, f"v{(i * 31) % 40:02d}")
                               for i in range(40)]))
     t.upsert(rows=_rows(spark, [(i, f"u{(9 - i) % 7}") for i in range(7)]))
@@ -464,8 +477,7 @@ def test_compact_deltas_above_broadcast_gate_unhinted(spark, be, monkeypatch):
     correctly — the latest-mention resolution just runs unhinted (same
     size gate as the read path, same rationale: never force-broadcast
     a bulk-sized key set)."""
-    t = MergeOnReadTable(be, "mc6", key="k", partition_cols=["pt"],
-                         auto_compact_at=None)
+    t = MergeOnReadTable(be, "mc6", key="k", partition_cols=["pt"])
     t.overwrite(_rows(spark, [(i, f"v{i}") for i in range(8)]))
     t.upsert(rows=_rows(spark, [(1, "A"), (9, "w")]))
     t.upsert(rows=_rows(spark, [(1, "B")]),
@@ -483,8 +495,7 @@ def test_vacuum_reclaims_minor_folded_deltas(spark, be):
     """The delta segments a minor fold superseded are unreferenced by
     the retained manifest and must be reclaimed by vacuum; the base and
     the merged delta survive."""
-    t = MergeOnReadTable(be, "mc7", key="k", partition_cols=["pt"],
-                         auto_compact_at=None)
+    t = MergeOnReadTable(be, "mc7", key="k", partition_cols=["pt"])
     t.overwrite(_rows(spark, [(i, f"v{i}") for i in range(16)]))
     for i in range(3):
         t.upsert(rows=_rows(spark, [(i, f"u{i}")]))

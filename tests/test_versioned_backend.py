@@ -251,6 +251,7 @@ def test_compaction_source_and_token_share_one_snapshot(spark, be):
             return out
 
     rb = RacingBackend(root=be._root)
+    rb._raced = True        # unarmed while the append reads the head
     rb.write(_df(spark, [(1, "a")]), "tr2", "id")
     rb.append(_df(spark, [(2, "b")]), "tr2", "id")
     rb._raced = False
@@ -370,14 +371,14 @@ def test_vacuum_keeps_segments_shared_via_replace(spark, be):
 
 def test_empty_dataframe_roundtrip(spark, be):
     df = _df(spark, [], "id long, text string").limit(0)
-    be.write_plain(df, "t9")
+    be.write(df, "t9")
     got = be.read(spark, "t9")
     assert got.count() == 0
     assert [f.name for f in got.schema.fields] == ["id", "text"]
 
 
 def test_drop_and_exists(spark, be):
-    be.write_plain(_df(spark, [(1, "a")]), "t10")
+    be.write(_df(spark, [(1, "a")]), "t10")
     assert be.exists(spark, "t10")
     be.drop(spark, "t10")
     assert not be.exists(spark, "t10")
@@ -596,12 +597,12 @@ def test_compact_segments_folds_append_history(spark, be):
     partitioned tables, one scan root) per commit; compact_segments
     folds them into one fresh segment in one rewrite commit, carrying
     any append that races the rewrite."""
-    be.write_partitioned(_df(spark, [(1, "a")], "id long, part string"),
-                         "t_cseg", ["part"])
+    be.write(_df(spark, [(1, "a")], "id long, part string"),
+             "t_cseg", partition_cols=["part"])
     for i in range(2, 5):
-        be.append_partitioned(_df(spark, [(i, "a" if i % 2 else "b")],
-                                  "id long, part string"),
-                              "t_cseg", ["part"])
+        be.append(_df(spark, [(i, "a" if i % 2 else "b")],
+                      "id long, part string"),
+                  "t_cseg", partition_cols=["part"])
     assert len(be.snapshot_token(spark, "t_cseg")) == 4
     folded = be.compact_segments(spark, "t_cseg")
     assert folded == 4
@@ -619,16 +620,16 @@ def test_compact_segments_folds_append_history(spark, be):
             if getattr(self, "_armed", False) and not getattr(
                     self, "_raced", False):
                 self._raced = True
-                self.append_partitioned(
+                self.append(
                     _df(spark, [(99, "c")], "id long, part string"),
-                    "t_cseg2", cols)
+                    "t_cseg2", partition_cols=cols)
             return super()._write_segment(spark, df, table, key, cols, **kw)
 
     rb = RacingBackend(root=be._root)
-    rb.write_partitioned(_df(spark, [(1, "a")], "id long, part string"),
-                         "t_cseg2", ["part"])
-    rb.append_partitioned(_df(spark, [(2, "b")], "id long, part string"),
-                          "t_cseg2", ["part"])
+    rb.write(_df(spark, [(1, "a")], "id long, part string"),
+             "t_cseg2", partition_cols=["part"])
+    rb.append(_df(spark, [(2, "b")], "id long, part string"),
+              "t_cseg2", partition_cols=["part"])
     rb._armed = True
     assert rb.compact_segments(spark, "t_cseg2") == 2
     assert rb._raced
@@ -704,43 +705,46 @@ def test_vacuum_age_gates_superseded_manifests_and_compactseg_stages(
 
 @pytest.mark.slow
 def test_auto_compact_bounds_segment_count_on_append_heavy_ingest(
-        spark, be):
-    """The OPTIMIZE auto-trigger: with ``auto_compact_at=N``, an
-    append-heavy history can never leave more than N segments behind —
-    each threshold-crossing append folds the table inline, and the
-    fold is invisible to correctness (same rows, same layout kind)."""
-    ab = VersionedTableBackend(root=be._root, auto_compact_at=4)
-    ab.write(_df(spark, [(0, "seed")]), "t_ac", "id")
+        spark, be, monkeypatch):
+    """The inline fold: an append-heavy history can never leave more
+    than ``AUTO_COMPACT_AT`` segments behind — each threshold-crossing
+    append folds the table, and the fold is invisible to correctness
+    (same rows, same layout kind)."""
+    monkeypatch.setattr(VersionedTableBackend, "AUTO_COMPACT_AT", 4)
+    be.write(_df(spark, [(0, "seed")]), "t_ac", "id")
+    seen = []
     for i in range(1, 11):
-        ab.append(_df(spark, [(i, f"row {i}")]), "t_ac", "id")
-        assert len(ab.snapshot_token(spark, "t_ac")) <= 4
-    assert ab.auto_compactions >= 2
-    assert sorted(r["id"] for r in ab.read(spark, "t_ac").collect()) \
+        be.append(_df(spark, [(i, f"row {i}")]), "t_ac", "id")
+        seen.append(len(be.snapshot_token(spark, "t_ac")))
+    assert max(seen) <= 3
+    # a 1-row base never carries a suffix this large: full folds
+    assert seen.count(1) >= 2
+    assert sorted(r["id"] for r in be.read(spark, "t_ac").collect()) \
         == list(range(11))
     # partitioned layout: scan-root count is the read-amplification
     # axis there — same bound, layout preserved
-    ab.write_partitioned(_df(spark, [(0, "a")], "id long, part string"),
-                         "t_acp", ["part"])
+    be.write(_df(spark, [(0, "a")], "id long, part string"),
+             "t_acp", partition_cols=["part"])
     for i in range(1, 9):
-        ab.append_partitioned(
+        be.append(
             _df(spark, [(i, "a" if i % 2 else "b")],
-                "id long, part string"), "t_acp", ["part"])
-        assert len(ab.snapshot_token(spark, "t_acp")) <= 4
-    manifest = ab._read_manifest(spark, "t_acp",
-                                 ab.versions(spark, "t_acp")[-1])
+                "id long, part string"), "t_acp", partition_cols=["part"])
+        assert len(be.snapshot_token(spark, "t_acp")) <= 3
+    manifest = be._read_manifest(spark, "t_acp",
+                                 be.versions(spark, "t_acp")[-1])
     assert manifest["partition_cols"] == ["part"]
-    assert sorted(r["id"] for r in ab.read(spark, "t_acp").collect()) \
+    assert sorted(r["id"] for r in be.read(spark, "t_acp").collect()) \
         == list(range(9))
-    # manual-only backend on the same table keeps accumulating (the
-    # behavior auto_compact_at exists to bound)
-    for i in range(11, 14):
-        be.append(_df(spark, [(i, f"row {i}")]), "t_ac", "id")
-    assert len(be.snapshot_token(spark, "t_ac")) > 1
+    # fold=False (the merge-on-read opt-out) keeps accumulating
+    n = len(be.snapshot_token(spark, "t_ac"))
+    for i in range(11, 15):
+        be.append(_df(spark, [(i, f"row {i}")]), "t_ac", "id", fold=False)
+    assert len(be.snapshot_token(spark, "t_ac")) == n + 4
 
 
 @pytest.mark.slow
 def test_auto_compact_crash_between_stage_and_swap_loses_no_data(
-        spark, be):
+        spark, be, monkeypatch):
     """A crash inside the auto-triggered compaction — after its segment
     is written, before its commit — must (a) keep the appended rows
     durable (the append committed first), (b) leave the live table
@@ -769,7 +773,8 @@ def test_auto_compact_crash_between_stage_and_swap_loses_no_data(
     def data_segments():
         return set(fsio.listdir(spark, fsio.join(be._root, "data")))
 
-    cb = CrashyBackend(root=be._root, auto_compact_at=3)
+    monkeypatch.setattr(VersionedTableBackend, "AUTO_COMPACT_AT", 3)
+    cb = CrashyBackend(root=be._root)
     cb.write(_df(spark, [(0, "seed")]), "t_acc", "id")
     cb.append(_df(spark, [(1, "one")]), "t_acc", "id")
     with pytest.raises(Crash):
@@ -917,49 +922,52 @@ def test_compact_segments_preserves_extra_metadata(spark, tmp_path):
     be = VersionedTableBackend(root=str(tmp_path / "wh_extra"))
     rows = (spark.range(8).select(F.col("id").alias("k"))
             .withColumn("pt", F.pmod("k", F.lit(4)).cast("int")))
-    be.append_partitioned(rows, "t", ["pt"], extra={"n_buckets": 4})
-    be.append_partitioned(rows, "t", ["pt"])
+    be.append(rows, "t", partition_cols=["pt"], extra={"n_buckets": 4})
+    be.append(rows, "t", partition_cols=["pt"])
     assert be.compact_segments(spark, "t") == 2
     assert (be.latest_manifest(spark, "t").get("extra") or {}) \
         == {"n_buckets": 4}
 
 
 @pytest.mark.slow
-def test_auto_compact_prefers_suffix_fold_on_large_base(spark, be):
+def test_auto_compact_prefers_suffix_fold_on_large_base(spark, be,
+                                                        monkeypatch):
     """An append-heavy table whose base dwarfs its recent appends (the
     history-log shape) must auto-maintain by folding ONLY the appended
     suffix — segment 0 survives by id, never read or rewritten — while
     keeping the same segment-count bound and content."""
-    ab = VersionedTableBackend(root=be._root, auto_compact_at=3)
-    ab.write_partitioned(
+    monkeypatch.setattr(VersionedTableBackend, "AUTO_COMPACT_AT", 3)
+    be.write(
         _df(spark, [(i, f"base {i}") for i in range(400)],
             "id long, part string").withColumn(
             "part", (F.col("id") % 2).cast("string")),
-        "t_sfx", ["part"], sort_col="id")
-    base_seg = ab.snapshot_token(spark, "t_sfx")[0]
+        "t_sfx", partition_cols=["part"], sort_col="id")
+    base_seg = be.snapshot_token(spark, "t_sfx")[0]
+    seen = []
     for i in range(400, 408):
-        ab.append_partitioned(
+        be.append(
             _df(spark, [(i, "a")], "id long, part string"),
-            "t_sfx", ["part"], sort_col="id")
-        assert len(ab.snapshot_token(spark, "t_sfx")) <= 3
-    assert ab.auto_compactions_minor >= 2
-    assert ab.snapshot_token(spark, "t_sfx")[0] == base_seg
-    assert sorted(r["id"] for r in ab.read(spark, "t_sfx").collect()) \
+            "t_sfx", partition_cols=["part"], sort_col="id")
+        seen.append(len(be.snapshot_token(spark, "t_sfx")))
+        assert be.snapshot_token(spark, "t_sfx")[0] == base_seg
+    # every threshold crossing folded the suffix into one segment
+    assert set(seen) == {2}
+    assert sorted(r["id"] for r in be.read(spark, "t_sfx").collect()) \
         == list(range(408))
     # manifest still carries the advisory sort through suffix folds
-    manifest = ab._read_manifest(spark, "t_sfx",
-                                 ab.versions(spark, "t_sfx")[-1])
+    manifest = be._read_manifest(spark, "t_sfx",
+                                 be.versions(spark, "t_sfx")[-1])
     assert manifest.get("sort_col") == "id"
     # the manual suffix fold squeezes the remainder to base + 1
-    folded = ab.compact_segment_suffix(spark, "t_sfx")
-    assert folded >= 0 and len(ab.snapshot_token(spark, "t_sfx")) <= 2
-    assert ab.snapshot_token(spark, "t_sfx")[0] == base_seg
+    folded = be.compact_segment_suffix(spark, "t_sfx")
+    assert folded >= 0 and len(be.snapshot_token(spark, "t_sfx")) <= 2
+    assert be.snapshot_token(spark, "t_sfx")[0] == base_seg
 
 
 def test_compact_segment_suffix_aborts_on_replaced_list(spark, be):
     """A raced full rewrite invalidates suffix surgery: the fold must
     abort, leaving the rewrite's result standing."""
-    be.write_plain(_df(spark, [(1, "a")]), "t_sfx_race")
+    be.write(_df(spark, [(1, "a")]), "t_sfx_race")
     be.append(_df(spark, [(2, "b")]), "t_sfx_race", "id")
     be.append(_df(spark, [(3, "c")]), "t_sfx_race", "id")
     _, manifest = be._latest(spark, "t_sfx_race")

@@ -12,7 +12,6 @@ Usage: python tools/scale_probe.py [multiplier]
        python tools/scale_probe.py --incremental [multiplier]
        python tools/scale_probe.py --embedding [multiplier]
        python tools/scale_probe.py --spans [steps]
-       python tools/scale_probe.py --autocompact [n_appends]
        python tools/scale_probe.py --contention [appends_per_thread]
        python tools/scale_probe.py --casgrowth [n_cycles]
        python tools/scale_probe.py --headline [multiplier] [cpus_hi,cpus_lo]
@@ -483,72 +482,6 @@ def embedding_main() -> None:
     spark.stop()
 
 
-def autocompact_main() -> None:
-    """--autocompact [n_appends]: the read-amplification bound of the
-    versioned backend's OPTIMIZE auto-trigger, measured.  The same
-    append-heavy ingest (one partitioned append per 'micro-batch',
-    the streaming near-dedup sink's shape) runs twice: manual-only
-    (segments accumulate one scan root per append) and
-    ``auto_compact_at=6`` (each threshold-crossing append folds the
-    table inline, zero manual calls).  Reports per-leg ingest wall
-    time, the post-ingest segment count, and the full-read time over
-    the final state — the number the bound exists to protect."""
-    n_appends = int(sys.argv[2]) if len(sys.argv) > 2 else 24
-
-    from pyspark.sql import functions as F
-
-    from dlx_spark import get_spark
-    from dlx_spark.tableio_versioned import VersionedTableBackend
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("autocompact_probe", cpus=cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .select("doc_id", "text", "lang"))
-    n_docs = docs.count()
-    batch_n = max(1, n_docs // n_appends)
-
-    workdir = tempfile.mkdtemp(prefix="dlx_spark_ac_")
-    out = {"metric": "autocompact_probe", "n_appends": n_appends,
-           "batch_rows": batch_n}
-    try:
-        for label, threshold in (("manual_only", None),
-                                 ("auto_compact_at_6", 6)):
-            be = VersionedTableBackend(
-                root=os.path.join(workdir, f"vroot_{label}"),
-                auto_compact_at=threshold)
-            table = "ac_probe"
-            t0 = time.time()
-            for i in range(n_appends):
-                batch = (docs.filter(
-                    (F.col("doc_id") % n_appends) == i)
-                    .withColumn("doc_id", F.col("doc_id") + i))
-                be.append_partitioned(batch, table, ["lang"])
-            t_ingest = round(time.time() - t0, 2)
-            n_segments = len(be.snapshot_token(spark, table))
-            t0 = time.time()
-            n_rows = be.read(spark, table).count()
-            t_read = round(time.time() - t0, 2)
-            out[label] = {
-                "ingest_sec": t_ingest,
-                "segments_after": n_segments,
-                "auto_compactions": be.auto_compactions,
-                "read_sec": t_read,
-                "rows": n_rows,
-            }
-        m, a = out["manual_only"], out["auto_compact_at_6"]
-        assert m["rows"] == a["rows"], (m["rows"], a["rows"])
-        assert a["segments_after"] <= 6, a["segments_after"]
-        out["read_amplification_bound"] = round(
-            m["segments_after"] / max(a["segments_after"], 1), 1)
-        print(json.dumps(out))
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-    spark.stop()
-
-
 def casgrowth_main() -> None:
     """--casgrowth [n_cycles]: external-CAS claim-store growth bound.
     The ExternalCASScheme docstring promises claims are released with
@@ -599,8 +532,8 @@ def casgrowth_main() -> None:
         final = n_claims()
         live_versions = len(be.versions(spark, "growth"))
         # flat curve: the last checkpoint must not exceed the first by
-        # more than a small constant (auto-compaction stage tables come
-        # and go between checkpoints)
+        # more than a small constant (the appends' inline folds commit
+        # between checkpoints)
         assert final <= live_versions + 8, (final, live_versions)
         assert post_vacuum_counts[-1] <= post_vacuum_counts[0] + 8, \
             post_vacuum_counts
@@ -830,9 +763,6 @@ def main() -> None:
         return
     if len(sys.argv) > 1 and sys.argv[1] == "--casgrowth":
         casgrowth_main()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--autocompact":
-        autocompact_main()
         return
     if len(sys.argv) > 1 and sys.argv[1] == "--headline":
         headline_main()
