@@ -320,7 +320,8 @@ class HadoopRenameScheme:
     a hard atomic CAS on HDFS (server-side atomic rename-with-
     overwrite-flag), and on local FS a dest-exists check + POSIX
     rename that NARROWS but does not close the cross-process
-    check-then-act window (see ``rename_no_overwrite``) — the same
+    check-then-act window (see ``rename_no_overwrite``; publishes from
+    threads of one process are serialized by a lock) — the same
     caveat Delta documents for HDFSLogStore on ``file://``.  Scheme
     contract: correctness of the CAS still requires the underlying
     rename to be atomic (local/HDFS yes; object-store "filesystems"
@@ -403,10 +404,18 @@ class HadoopRenameScheme:
         aged)."""
         return {}
 
+    #: serializes this process's put-if-absent publishes: on ``file://``
+    #: the no-overwrite rename is a dest-exists check, then a clobbering
+    #: rename of the data file and another of its ``.crc``, so two
+    #: threads could both pass the check and leave one racer's bytes
+    #: under another's checksum.  Cross-process racers keep the window.
+    _publish_lock = threading.Lock()
+
     def put_if_absent(self, spark: SparkSession, tmp: str,
                       dest: str) -> bool:
         try:
-            rename_no_overwrite(spark, tmp, dest)
+            with self._publish_lock:
+                rename_no_overwrite(spark, tmp, dest)
         except FileExistsError:
             remove(spark, tmp, missing_ok=True)
             return False             # lost the race — dest is the winner's

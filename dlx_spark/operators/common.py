@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 
 #: parsed-expression memo: SQL text -> Column.  ``F.expr`` pays one py4j
@@ -294,3 +294,30 @@ def bypass_cap(df: DataFrame, cap, auto_bypass_bytes: int | None):
     except Exception:
         return cap
     return None if small else cap
+
+
+def observed(df: DataFrame, **metrics: Column):
+    """``df`` with the named aggregate ``metrics`` attached, and a reader
+    for them: called after the first action on the returned frame (an
+    eager checkpoint, say), it gives ``{name: value}`` at no extra job.
+    An observed node the optimizer drops over an input it proved empty
+    (also at run time, under AQE) reads as None values, as over no rows
+    — true only of the frame the action runs on, since AQE also drops a
+    node BELOW a join it proves empty: observe the frame you pin.  The
+    reader never blocks: it returns None if the action reported
+    nothing."""
+    obs = Observation()
+    out = df.observe(obs, *[c.alias(k) for k, c in metrics.items()])
+
+    def read() -> dict | None:
+        done = obs._jo.future().isCompleted
+        if not done():
+            # the metrics arrive through the listener bus
+            df.sparkSession.sparkContext._jsc.sc().listenerBus() \
+                .waitUntilEmpty()
+            if not done():
+                return None
+        if obs._jo.getRow().length() == 0:
+            return dict.fromkeys(metrics)
+        return obs.get
+    return out, read

@@ -23,7 +23,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from dlx_spark.functions.tokenizer import PUNCT_CLASS_JAVA
-from dlx_spark.operators.common import (bypass_cap, cached_expr,
+from dlx_spark.operators.common import (bypass_cap, cached_expr, observed,
                                         spread_for_compute, sql_over)
 
 # a large 32-bit prime for the minhash permutation family
@@ -341,8 +341,11 @@ def _band_hash_expr(sig_col: str, bands: int):
                   b -> {_SLICE_HASH.format(sig=sig_col, bands=bands)})""")
 
 
-_EST_JACCARD = ("size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v))"
-                " / size(sig_a)")
+def est_jaccard_expr(sig_a: str = "sig_a", sig_b: str = "sig_b"):
+    """Estimated Jaccard of two signature columns: the fraction of
+    agreeing components."""
+    return cached_expr(f"size(filter(zip_with({sig_a}, {sig_b}, "
+                       f"(x, y) -> x = y), v -> v)) / size({sig_a})")
 
 
 def minhash_near_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -398,21 +401,17 @@ def minhash_pairs_from_signatures(sigs: DataFrame, bands: int = 16,
                                   bucket_cap: int | None = 1000,
                                   auto_bypass_bytes: int | None = None) -> DataFrame:
     """``minhash_near_duplicates`` from a PRECOMPUTED ``(id, sig)``
-    relation — the reuse point for callers that already hold batch
-    signatures (``MinHashIndex.dedup_batch`` computes them once and
-    feeds probe, intra-batch dedup, and the index append from the same
-    materialized frame instead of re-shingling three times).
-
-    ``sigs`` is referenced by several plan branches; pass a MATERIALIZED
-    relation (cached / checkpointed / a table read), or the signature
-    projection re-runs per branch."""
+    relation (``MinHashIndex.dedup_batch`` runs it over a batch larger
+    than its cap).  ``sigs`` feeds several plan branches: pass a
+    MATERIALIZED relation, or the signature projection re-runs per
+    branch."""
     bucket_cap = bypass_cap(sigs, bucket_cap, auto_bypass_bytes)
     a = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     b = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
 
     # est_jaccard tails fused to filter+select (r11): fewer Dataset hops
     # per construction; codegen CSE keeps the expression single-eval
-    est = cached_expr(_EST_JACCARD)
+    est = est_jaccard_expr()
     if bucket_cap is None:
         cands = lsh_candidate_pairs(sigs, bands)
         return (cands.join(a, "id_a").join(b, "id_b")
@@ -810,9 +809,15 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b
 
     e = pairs.select(F.col(id_a).cast("long").alias("a"),
                      F.col(id_b).cast("long").alias("b"))
-    edges = _ckpt(e.unionByName(
+    edges, seen = observed(e.unionByName(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct(),
-        eager=False)
+        n=F.count(F.lit(1)))
+    edges = _ckpt(edges, eager=True)
+    n_edges = seen()
+    if not (n_edges["n"] if n_edges is not None else edges.count()):
+        if stats is not None:
+            stats.update(rounds=0, converged=True)
+        return pairs.sparkSession.createDataFrame([], "id long, component long")
     labels = _ckpt(edges.select(F.col("a").alias("id")).distinct()
                    .withColumn("comp", F.col("id")), eager=False)
     converged = False
@@ -830,19 +835,22 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b
         # start as ids and only take min() over other labels), so one
         # join against the label relation resolves comp(comp) — the
         # shortcut that makes convergence O(log diameter).  The
-        # convergence flag folds into the same pass: one count on the
-        # checkpointed result per round, no extra comparison join.
+        # convergence flag folds into the same pass: the round's one
+        # action, the eager checkpoint, also observes how many labels
+        # moved — no count job, no extra comparison join.
         rep = labels.select(F.col("id").alias("_c1"),
                             F.col("comp").alias("_c2"))
         jumped = F.least(F.col("_c1"), F.coalesce(F.col("_c2"), F.col("_c1")))
-        new = _ckpt(
+        new, moved = observed(
             stepped.join(rep, "_c1", "left")
             .select("id", jumped.alias("_comp"),
                     (jumped < F.col("comp")).alias("_changed"))
             .withColumnRenamed("_comp", "comp"),
-            eager=True)
-        changed = new.filter(F.col("_changed")).count()
-        labels = new.drop("_changed")
+            changed=F.sum(F.col("_changed").cast("long")))
+        labels = _ckpt(new.drop("_changed"), eager=True)
+        moved = moved()
+        changed = ((moved["changed"] or 0) if moved is not None
+                   else new.filter(F.col("_changed")).count())
         if changed == 0:
             converged = True
             break

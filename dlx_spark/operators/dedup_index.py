@@ -19,13 +19,14 @@ indexes persist the corpus's dedup STATE instead:
                         64-hash signatures (id, sig), both persisted.
                         Probing a batch computes signatures for the
                         BATCH ONLY (a map-only projection), broadcasts
-                        its band keys into a map-side join against the
-                        band table, and verifies candidates against the
-                        signature table.  Per-increment cost: one
+                        its band keys into a map-side semi-join against
+                        the band table, and verifies candidates against
+                        the signature table.  Per-increment cost: one
                         broadcast-join scan of the compact index tables
                         (signatures + bands are ~1-2 % of corpus text
-                        bytes) with ZERO shuffle of index data, plus
-                        work proportional to the batch.
+                        bytes); only the rows of the buckets the batch
+                        touches are shuffled, plus work proportional to
+                        the batch.
 - ``EmbeddingIndex``  — vectors with hyperplane-LSH bucket keys; probes
                         find cosine-≥threshold neighbors of a batch
                         against all history with exact-cosine
@@ -36,12 +37,24 @@ All indexes are append-only: after a batch is deduped, its survivors'
 state is appended (one segment per append, clustered by the table's key
 and sized to its rows — a few-hundred-doc increment writes one file per
 table — and folded by ``compact``, one backend ``compact_segments``
-commit per table), so tomorrow's batch sees today's survivors.  The
-three near-dup families (MinHash, SimHash, Embedding) run one increment
-body, ``_dedup_increment``: the corpus probe runs
-once per ``dedup_batch``, its batch-sized drop set pinned before the
-intra-batch pass and the survivor rule read it.  Index
-parameters (hash family seed, bands, shingle width...) are persisted in
+commit per table), so tomorrow's batch sees today's survivors.
+
+The near-dup families (MinHash, SimHash, Embedding) share one candidate
+kernel, ``_Grouping``, and one increment body, ``_dedup_increment``.
+One band grouping holds the index key rows of every bucket the batch
+touches plus the batch's key rows; a bucket yields corpus×batch pairs
+while its corpus side is within ``bucket_cap`` (the rule of the deleted
+full-index ``_split_overcap`` aggregate, read off the touched buckets)
+and batch×batch pairs while its batch side is; ``probe()`` omits the
+latter.  The pins observe, in the same actions, what every gate needs:
+the corpus chain runs only for a bucket over the cap on its corpus
+side, the capped intra-batch pass only for one over it on its batch
+side (a batch larger than the cap), connected components only when
+batch links exist, and the payload pin counts the broadcast gate's rows
+— no ``count()`` job.  An uncapped increment warns on an over-cap
+bucket.
+
+Index parameters (hash family seed, bands, shingle width...) are persisted in
 a ``*_meta`` table at create time and re-read at probe/append time — a
 probe with mismatched parameters would silently find nothing, so they
 are never re-specified by callers.  The one geometry that changes after
@@ -59,8 +72,9 @@ cross-partition subset of the (driver-oracled) full-corpus
 from __future__ import annotations
 
 import json
+import warnings
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from dlx_spark import tableio
 from dlx_spark.tableio import get_backend
@@ -76,109 +90,239 @@ from dlx_spark.operators import common, dedup
 # no catalog bucket spec lets Spark elide the index-side exchange).
 PROBE_BROADCAST_ROW_CAP = 2_000_000
 
-
-def _split_overcap(idx_rows: DataFrame, group_cols: list[str],
-                   bucket_cap: int | None):
-    """(small, big): the index key rows outside over-cap groups, and
-    the broadcast over-cap group list (None when uncapped).  Over-cap
-    groups are rare by construction, so ``big`` is tiny and the split
-    costs one map-side-combined aggregate scan of the slim key table —
-    the price of bounding the worst case.  That scan is the same cost
-    class as the probe's candidate join (which also streams the full
-    key table), so the cap roughly doubles the slim-table scan per
-    probe rather than changing its asymptotics; callers probing a
-    known-deduped index on a latency budget can pass
-    ``bucket_cap=None`` to skip it."""
-    if bucket_cap is None:
-        return idx_rows, None
-    big = F.broadcast(
-        idx_rows.groupBy(*group_cols)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > int(bucket_cap))
-        .select(*group_cols))
-    return idx_rows.join(big, group_cols, "left_anti"), big
+#: the default ``bucket_cap`` of the near-dup families: a band bucket
+#: with more index rows than this is verified as a chain, not expanded
+#: into all pairs.  An uncapped increment warns past it.
+BUCKET_CAP = 1000
 
 
-def _chain_probe_pairs(mega_corpus: DataFrame, mega_batch: DataFrame,
-                       group_cols: list[str], order: str = "pay") -> DataFrame:
-    """Linear-output candidate pairs for OVER-CAP probe groups — the
-    corpus-side analog of the intra-batch mega-bucket chains
-    (dedup.minhash_pairs_from_signatures / simhash_pairs_from_fingerprints)
-    and the same shape as ``EmbeddingIndex``'s mega path: sort corpus
-    and batch members of each over-cap group together in (pay, id)
-    order and verify each batch row against the nearest corpus row on
-    each side (however far — the ignorenulls scans skip interleaved
-    batch rows) plus any corpus rows within CHAIN_WINDOW positions.
-    Output is O(batch members × window), never
-    O(|corpus group| × |batch group|).
-
-    Inputs carry ``group_cols + (id, pay)`` where ``pay`` is the
-    verification payload, and the ``order`` column (by default the
-    payload itself: minhash signature array / simhash fingerprint;
-    the embedding index orders vectors by their ordering signature) —
-    near-identical payloads sort adjacent, the property the chain
-    relies on; same approximation class as the intra-batch chains.
-    Returns ``(corpus_id, batch_id, pay_a, pay_b)`` pairs for the
-    caller's verify expression."""
-    from pyspark.sql import Window
-
-    from dlx_spark.operators.similarity import CHAIN_WINDOW
-
-    u = (mega_corpus.withColumn("is_corpus", F.lit(True))
-         .unionByName(mega_batch.withColumn("is_corpus", F.lit(False))))
-    w = Window.partitionBy(*group_cols).orderBy(order, "id", "is_corpus")
-    cstruct = F.when(F.col("is_corpus"),
-                     F.struct(F.col("id").alias("cid"),
-                              F.col("pay").alias("cpay")))
-    neighbors = [
-        F.last(cstruct, ignorenulls=True).over(
-            w.rowsBetween(Window.unboundedPreceding, -1)),
-        F.first(cstruct, ignorenulls=True).over(
-            w.rowsBetween(1, Window.unboundedFollowing)),
-    ] + [F.lag(cstruct, k).over(w) for k in range(1, CHAIN_WINDOW + 1)] \
-      + [F.lead(cstruct, k).over(w) for k in range(1, CHAIN_WINDOW + 1)]
-    return (
-        u.withColumn("_cands", F.array_compact(F.array(*neighbors)))
-        .filter(~F.col("is_corpus"))
-        .select(F.col("id").alias("batch_id"),
-                F.col("pay").alias("pay_b"),
-                F.explode("_cands").alias("_c"))
-        .select(F.col("_c.cid").alias("corpus_id"), "batch_id",
-                F.col("_c.cpay").alias("pay_a"), "pay_b")
-        .distinct())
+def _pinned(rows: DataFrame) -> tuple[DataFrame, int]:
+    """``rows`` pinned by one eager localCheckpoint, with the row count
+    that checkpoint observed (the broadcast gate's input)."""
+    rows, seen = common.observed(rows, n=F.count(F.lit(1)))
+    rows = rows.localCheckpoint(eager=True)
+    seen = seen()
+    return rows, ((seen["n"] or 0) if seen is not None else rows.count())
 
 
-def _dedup_increment(batch: DataFrame, id_col: str, payload: DataFrame,
-                     vs_corpus: DataFrame, intra_pairs,
+def _pairs_expr(intra: bool):
+    """A bucket's candidate pairs ``array<struct<a, b, intra>>``: corpus
+    × batch ids, and with ``intra`` the eligible batch pairs (a < b)."""
+    corpus = ("flatten(transform(cids, x -> transform(concat(bids, pids), "
+              "y -> named_struct('a', x, 'b', y, 'intra', false))))")
+    if not intra:
+        return common.cached_expr(corpus)
+    pair = "named_struct('a', least(x, y), 'b', greatest(x, y), 'intra', true)"
+    return common.cached_expr(
+        f"concat({corpus}, "
+        f"flatten(transform(ibids, (x, i) -> transform("
+        f"slice(ibids, i + 2, size(ibids) - i - 1), y -> {pair}))), "
+        f"flatten(transform(pids, x -> transform("
+        f"filter(ibids, y -> y != x), y -> {pair}))))")
+
+
+class _Grouping:
+    """One band grouping of a pinned batch against an index: the
+    candidate kernel of every near-dup ``probe`` and ``dedup_batch``.
+
+    Its rows are the index key rows of every bucket the batch touches
+    (the key table semi-joined to the broadcast batch keys keeps every
+    row of a touched bucket, so a bucket's corpus side is the whole
+    index bucket), the batch's key rows and, for multiprobe, its probe
+    rows; one window sizes each bucket's corpus and batch side.  A
+    bucket yields corpus×batch pairs while its corpus side is within
+    ``bucket_cap`` (``chain`` covers the rest) and batch×batch pairs
+    while its batch side is; ``score`` (a Column over ``pay_a`` and
+    ``pay_b``) verifies them on the payloads joined back by id, and
+    ``keep`` (a Column over ``score``) filters them.
+
+    Keys are (band, bucket, id); payloads are (id, pay) plus the chain's
+    ``order`` column.  Batch-sized relations are forced to broadcast
+    while ``key_rows`` is within ``broadcast_row_cap``."""
+
+    def __init__(self, index_keys, corpus_pay, batch_keys, batch_pay,
+                 score, keep, key_rows, bucket_cap, broadcast_row_cap=None,
+                 probe_keys=None, order="pay"):
+        self.row_cap = PROBE_BROADCAST_ROW_CAP if broadcast_row_cap is None \
+            else broadcast_row_cap
+        self.hint = self._hint(key_rows)
+        self.corpus_pay, self.batch_pay = corpus_pay, batch_pay
+        self.score, self.keep, self.order = score, keep, order
+        self.bucket_cap = bucket_cap
+        keys = batch_keys.select("band", "bucket", "id", F.lit(1).alias("_side"))
+        if probe_keys is not None:
+            keys = keys.unionByName(probe_keys.select(
+                "band", "bucket", "id", F.lit(2).alias("_side")))
+        corpus = (index_keys.join(self.hint(keys.select("band", "bucket")),
+                                  ["band", "bucket"], "left_semi")
+                  .select("band", "bucket", "id", F.lit(0).alias("_side")))
+        w = Window.partitionBy("band", "bucket")
+        n = lambda side: F.sum((F.col("_side") == side).cast("int")).over(w)
+        self.rows = corpus.unionByName(keys).select(
+            "*", n(0).alias("_nc"), n(1).alias("_nb"),
+            F.count(F.lit(1)).over(w).alias("_n"))
+
+    def _hint(self, rows: int):
+        return F.broadcast if rows <= self.row_cap else (lambda df: df)
+
+    @staticmethod
+    def _side(pay: DataFrame, side: str, *intra: bool):
+        return pay.select(F.col("id").alias(side),
+                          F.col("pay").alias(f"pay_{side}"),
+                          *[F.lit(i).alias("intra") for i in intra])
+
+    def over(self, seen: dict | None, side: str) -> bool:
+        """A bucket over the cap on ``side``?  Unknown counts as yes."""
+        return self.bucket_cap is not None and (
+            seen is None or seen[side] > self.bucket_cap)
+
+    def links(self, intra: bool, pin: bool = False):
+        """``(links, seen)``: verified links ``(a, b, intra, score)`` —
+        corpus links (a the corpus id) and, with ``intra``, batch links
+        (a < b).  The grouping's rows are pinned by one eager checkpoint
+        observing (at its root: ``common.observed``) the largest
+        ``corpus_max``/``batch_max`` side and ``largest`` bucket and the
+        candidate ``pairs`` bound (their broadcast gate) as ``seen``;
+        ``pin`` pins the links too, observing the batch links ``intra``."""
+        side = F.col("_side")
+        small_c = small = F.lit(True)
+        if self.bucket_cap is not None:
+            small_c = F.col("_nc") <= self.bucket_cap
+            small = F.col("_nb") <= self.bucket_cap
+        # ``pairs`` bounds the candidates: a listed corpus row pairs with
+        # its bucket's batch rows, a batch row with at most its batch side
+        rows, sizes = common.observed(
+            self.rows, corpus_max=F.max("_nc"), batch_max=F.max("_nb"),
+            largest=F.max(F.col("_nc") + F.col("_nb")),
+            pairs=F.sum(F.when((side == 0) & small_c,
+                               F.col("_n") - F.col("_nc"))
+                        .when((side != 0) & small, F.col("_nb"))))
+        self.rows = rows = rows.localCheckpoint(eager=True)
+        seen = sizes()
+        ids = lambda cond, name: F.collect_list(
+            F.when(cond, F.col("id"))).alias(name)
+        lists = [ids(side == 0, "cids"), ids(side == 1, "bids"),
+                 ids(side == 2, "pids")]
+        if intra:
+            lists.append(ids((side == 1) & small, "ibids"))
+        cands = (rows.filter((side != 0) | small_c)
+                 .groupBy("band", "bucket").agg(*lists)
+                 .select(F.explode(_pairs_expr(intra)).alias("p"))
+                 .select("p.a", "p.b", "p.intra"))
+        # candidates within the broadcast cap broadcast, so the index
+        # payload streams map-side; an intra pair's ``a`` is a batch row
+        pay_a = self._side(self.corpus_pay, "a", False)
+        if intra:
+            pay_a = pay_a.unionByName(self._side(self.batch_pay, "a", True))
+        if seen is not None:
+            seen = {k: v or 0 for k, v in seen.items()}
+            cands = self._hint(seen["pairs"])(cands)
+        links = (cands.join(pay_a, ["a", "intra"])
+                 .join(self.hint(self._side(self.batch_pay, "b")), "b")
+                 .select("a", "b", "intra", self.score.alias("score"))
+                 .filter(self.keep))
+        if not pin:
+            return links, seen
+        links, n_intra = common.observed(
+            links, intra=F.sum(F.col("intra").cast("long")))
+        links = links.localCheckpoint(eager=True)
+        n_intra = n_intra()
+        if seen is None or n_intra is None:
+            return links, None
+        return links, {**seen, "intra": n_intra["intra"] or 0}
+
+    def chain(self) -> DataFrame:
+        """Verified corpus links of the buckets over the cap on their
+        corpus side, linear in size: a bucket's rows sort in (order, id)
+        order, and each batch row is verified against the nearest corpus
+        row on each side plus the corpus rows within CHAIN_WINDOW.
+        Near-identical payloads sort adjacent (the approximation class
+        of the intra-batch chains)."""
+        from dlx_spark.operators.similarity import CHAIN_WINDOW
+
+        tag = lambda pay, side: pay.withColumn("_side", F.lit(side))
+        rows = (self.rows.filter(F.col("_nc") > self.bucket_cap)
+                .join(tag(self.corpus_pay, 0)
+                      .unionByName(tag(self.batch_pay, 1)), ["id", "_side"]))
+        w = (Window.partitionBy("band", "bucket")
+             .orderBy(self.order, "id", F.desc("_side")))
+        corpus = F.when(F.col("_side") == 0, F.struct(
+            F.col("id").alias("a"), F.col("pay").alias("pay_a")))
+        near = [F.last(corpus, ignorenulls=True).over(
+                    w.rowsBetween(Window.unboundedPreceding, -1)),
+                F.first(corpus, ignorenulls=True).over(
+                    w.rowsBetween(1, Window.unboundedFollowing))] + \
+            [f(corpus, k).over(w) for f in (F.lag, F.lead)
+             for k in range(1, CHAIN_WINDOW + 1)]
+        return (rows.withColumn("_near", F.array_compact(F.array(*near)))
+                .filter(F.col("_side") == 1)
+                .select(F.col("id").alias("b"), F.col("pay").alias("pay_b"),
+                        F.explode("_near").alias("_c"))
+                .select("_c.a", "b", "_c.pay_a", "pay_b")
+                .select("a", "b", F.lit(False).alias("intra"),
+                        self.score.alias("score"))
+                .filter(self.keep))
+
+    def probe(self, score_name: str) -> DataFrame:
+        """(corpus_id, batch_id, <score_name>): the corpus links, lazy
+        over the pinned grouping."""
+        links, seen = self.links(intra=False)
+        if self.over(seen, "corpus_max"):
+            links = links.unionByName(self.chain())
+        # a pair can surface in several bands and on both paths; its
+        # score is a pure function of the two payloads, so max() dedups
+        return (links.groupBy(F.col("a").alias("corpus_id"),
+                              F.col("b").alias("batch_id"))
+                .agg(F.max("score").alias(score_name)))
+
+
+def _dedup_increment(g: _Grouping, batch: DataFrame, id_col: str,
+                     payload: DataFrame, intra_pairs,
                      replay_safe: bool) -> tuple[DataFrame, DataFrame]:
-    """The near-dup increment the MinHash, SimHash and Embedding indexes
-    share: drop batch docs the probe linked to the corpus (corpus always
-    wins), dedup the remainder against itself (min-id survivor per
-    connected component), and return ``(clean, kept)`` — the clean batch
-    rows, materialized, and the ``payload`` rows of exactly those docs
-    for the family's append.
+    """The near-dup increment of the MinHash, SimHash and Embedding
+    indexes: drop batch docs linked to the corpus (corpus always wins),
+    dedup the remainder against itself (min-id survivor per connected
+    component), and return ``(clean, kept)`` — the clean batch rows,
+    materialized, and the ``payload`` rows of exactly those docs for the
+    family's append.
 
-    ``payload`` is the family's materialized per-doc state keyed by
-    ``id`` (signatures, banded fingerprints, vectors); ``vs_corpus`` its
-    lazy probe over that payload, with ``(corpus_id, batch_id)``;
-    ``intra_pairs(rows)`` its ``(id_a, id_b)`` pairs among payload
-    rows.  The drop set is pinned with one eager checkpoint: it is
-    batch-sized, and both the remainder's payload and its rows read it,
-    so the probe (band join plus over-cap aggregate) runs once.
-
-    ``replay_safe``: links whose corpus side is one of this batch's own
-    ids are ignored (a crashed prior attempt may have appended this very
-    batch)."""
+    ``g`` pins the corpus and batch links and observes what every gate
+    needs: the corpus chain runs only for a touched bucket over the cap
+    on its corpus side; the family's capped intra-batch pass
+    (``intra_pairs(rows)``: ``(id_a, id_b)`` among payload rows) over
+    the remainder only for one over it on its batch side; connected
+    components only when batch links exist.  Otherwise the batch links
+    not touching a dropped doc are exactly that pass's pairs.
+    ``replay_safe``: corpus links to this batch's own ids are ignored (a
+    crashed prior attempt may have appended this very batch)."""
+    links, seen = g.links(intra=True, pin=True)
+    if g.bucket_cap is None and seen is not None \
+            and seen["largest"] > BUCKET_CAP:
+        warnings.warn(
+            f"uncapped dedup_batch met a band bucket of {seen['largest']} "
+            f"rows (over {BUCKET_CAP}): its candidate pairs grow with the "
+            f"product of its sides; pass bucket_cap to bound them",
+            RuntimeWarning, stacklevel=3)
+    corpus = links.filter(~F.col("intra"))
+    if g.over(seen, "corpus_max"):
+        corpus = corpus.unionByName(g.chain())
     if replay_safe:
-        own = batch.select(F.col(id_col).alias("corpus_id"))
-        vs_corpus = vs_corpus.join(own, "corpus_id", "left_anti")
-    drop = (vs_corpus.select(F.col("batch_id").alias("id")).distinct()
-            .localCheckpoint(eager=True))
+        corpus = corpus.join(g.hint(payload.select(F.col("id").alias("a"))),
+                             "a", "left_anti")
+    drop = g.hint(corpus.select(F.col("b").alias("id")))
     remaining = batch.join(drop.withColumnRenamed("id", "_dup"),
                            F.col(id_col) == F.col("_dup"), "left_anti")
-    intra = intra_pairs(payload.join(drop, "id", "left_anti"))
-    clean = dedup.dedup_near(remaining, intra, id_col) \
-                 .localCheckpoint(eager=True)
+    intra = None
+    if g.over(seen, "batch_max"):
+        intra = intra_pairs(payload.join(drop, "id", "left_anti"))
+    elif seen is None or seen["intra"]:
+        intra = (links.filter(F.col("intra"))
+                 .select(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
+                 .join(drop.withColumnRenamed("id", "id_a"), "id_a", "left_anti")
+                 .join(drop.withColumnRenamed("id", "id_b"), "id_b", "left_anti"))
+    clean = remaining if intra is None \
+        else dedup.dedup_near(remaining, intra, id_col)
+    clean = clean.localCheckpoint(eager=True)
     kept = payload.join(clean.select(F.col(id_col).alias("id")), "id",
                         "left_semi")
     return clean, kept
@@ -195,11 +339,14 @@ def _read_meta(spark: SparkSession, name: str) -> dict:
     return json.loads(meta.first()["params"])
 
 
-class DigestIndex:
-    """Exact-dedup state: the distinct content digests of every ingested
-    document, clustered by digest.  The per-batch anti-join broadcasts
-    the digest table while it is under the broadcast threshold (no
-    shuffle of index rows); above it, both sides shuffle on digest."""
+class _Index:
+    """What every index shares: ``{name}_meta`` parameters read on open,
+    and ``_TABLES`` (suffix → whether ``compact`` drops duplicate rows,
+    which a crash between an append's two writes can leave in a key
+    table).  ``compact`` folds each table to one segment, one backend
+    commit each (run it every N appended batches)."""
+
+    _TABLES: dict[str, bool] = {}
 
     def __init__(self, spark: SparkSession, name: str):
         self.spark = spark
@@ -207,7 +354,29 @@ class DigestIndex:
         self.params = _read_meta(spark, name)
 
     def compact(self) -> None:
-        get_backend().compact_segments(self.spark, f"{self.name}_digests")
+        for suffix, distinct in self._TABLES.items():
+            get_backend().compact_segments(self.spark, f"{self.name}{suffix}",
+                                           distinct=distinct)
+
+    def drop(self) -> None:
+        for suffix in (*self._TABLES, "_meta"):
+            get_backend().drop(self.spark, f"{self.name}{suffix}")
+
+    def _absent(self, rows: DataFrame, suffix: str, col: str) -> DataFrame:
+        """``rows`` whose ``col`` is not in the ``suffix`` table yet,
+        pinned: the anti-join must not re-run against the grown table."""
+        existing = get_backend().read(self.spark, f"{self.name}{suffix}")
+        return rows.join(existing.select(col), col, "left_anti") \
+                   .localCheckpoint(eager=True)
+
+
+class DigestIndex(_Index):
+    """Exact-dedup state: the distinct content digests of every ingested
+    document, clustered by digest.  The per-batch anti-join broadcasts
+    the digest table while it is under the broadcast threshold (no
+    shuffle of index rows); above it, both sides shuffle on digest."""
+
+    _TABLES = {"_digests": False}
 
     @classmethod
     def create(cls, df: DataFrame, name: str, text_col: str = "text",
@@ -247,10 +416,13 @@ class DigestIndex:
             own = batch.select(F.col(p["id_col"]).alias("keep_id"))
             idx = idx.join(own, "keep_id", "left_anti")
         fresh = self._batch_digests(batch).join(idx, "digest", "left_anti")
-        keep = (fresh.groupBy("digest")
-                .agg(F.min(F.col(p["id_col"])).alias("_kid")))
-        return (fresh.join(keep, on=F.col(p["id_col"]) == F.col("_kid"), how="leftsemi")
-                .drop("digest"))
+        # min-id rows per digest (rank keeps ties): one digest broadcast
+        kid = F.col(p["id_col"])
+        first = F.rank().over(Window.partitionBy("digest")
+                              .orderBy(kid.asc_nulls_last()))
+        return (fresh.withColumn("_r", first)
+                .filter((F.col("_r") == 1) & kid.isNotNull())
+                .drop("_r", "digest"))
 
     def append(self, batch_survivors: DataFrame,
                if_absent: bool = False) -> None:
@@ -262,10 +434,7 @@ class DigestIndex:
                    .select("digest", F.col(p["id_col"]).alias("keep_id"))
                    .groupBy("digest").agg(F.min("keep_id").alias("keep_id")))
         if if_absent:
-            existing = get_backend().read(
-                self.spark, f"{self.name}_digests").select("digest")
-            digests = digests.join(existing, "digest", "left_anti") \
-                             .localCheckpoint(eager=True)
+            digests = self._absent(digests, "_digests", "digest")
         get_backend().append(digests, f"{self.name}_digests", "digest")
 
     def dedup_batch(self, batch: DataFrame,
@@ -281,12 +450,8 @@ class DigestIndex:
         self.append(clean, if_absent=replay_safe)
         return clean
 
-    def drop(self) -> None:
-        get_backend().drop(self.spark, f"{self.name}_digests")
-        get_backend().drop(self.spark, f"{self.name}_meta")
 
-
-class MinHashIndex:
+class MinHashIndex(_Index):
     """Near-dedup state: persisted banded LSH keys + signatures.
 
     Tables:
@@ -296,25 +461,14 @@ class MinHashIndex:
 
     Probe plan shape (the scale property, plan-asserted in
     tests/test_dedup_index.py): the batch's band keys are explicitly
-    broadcast, so the band table streams map-side — no Exchange touches
-    index data; the verify step joins only the (small) candidate id set
-    against the signature table.  Corpus text is never read.
+    broadcast into a semi-join, so the band table streams map-side and
+    only the rows of the buckets the batch touches reach the grouping's
+    shuffle; the candidates broadcast (gated) into the verify join, so
+    the signature table streams map-side too.  Corpus text is
+    never read.
     """
 
-    def __init__(self, spark: SparkSession, name: str):
-        self.spark = spark
-        self.name = name
-        self.params = _read_meta(spark, name)
-
-    def compact(self) -> None:
-        """Fold each index table to one segment (run after every
-        N appended batches — same cadence logic as the streaming commit
-        ledger's self-compaction).  Band rows are deduplicated here: a
-        crash between append()'s two writes can leave duplicate band
-        keys (harmless to probe correctness, see append)."""
-        be = get_backend()
-        be.compact_segments(self.spark, f"{self.name}_sigs")
-        be.compact_segments(self.spark, f"{self.name}_bands", distinct=True)
+    _TABLES = {"_sigs": False, "_bands": True}
 
     # -- construction -------------------------------------------------
 
@@ -346,7 +500,7 @@ class MinHashIndex:
 
     def probe(self, batch: DataFrame, threshold: float = 0.8,
               broadcast_row_cap: int | None = None,
-              bucket_cap: int | None = 1000) -> DataFrame:
+              bucket_cap: int | None = BUCKET_CAP) -> DataFrame:
         """(corpus_id, batch_id, est_jaccard): near-duplicate links from
         each batch document to already-ingested documents.
 
@@ -357,87 +511,40 @@ class MinHashIndex:
         The batch's band keys broadcast only while they fit
         (``broadcast_row_cap`` rows, default PROBE_BROADCAST_ROW_CAP);
         a backfill-sized batch instead shuffle-joins on (band, bucket)
-        against the band table.
-        Batch signatures are materialized via eager localCheckpoint
-        (blocks reclaimed on GC — a per-micro-batch cache() here would
-        accumulate for the stream's lifetime).
+        against the band table.  Batch signatures are materialized via
+        eager localCheckpoint (GC-reclaimed, unlike a per-micro-batch
+        cache()).
 
-        ``bucket_cap`` (default 1000, ``None`` = uncapped) bounds the
-        corpus×batch candidate join against over-cap index buckets,
-        exactly like every other family path: the index normally holds
-        dedup SURVIVORS (band buckets live in a ~2^64 key space, so
-        concentration needs near-identical signature slices, which
-        dedup removes), but an index built over an UN-deduped corpus,
-        or probed below the threshold it was deduped at, can hold mega
-        buckets — without the cap those make the candidate join
-        O(|corpus bucket| × |batch bucket|).  Over-cap buckets emit
-        chain-verified candidates in signature order instead
-        (``_chain_probe_pairs``): linear output, and a true near-dup
-        still finds its match because near-identical signatures sort
-        adjacent."""
-        bsigs = self._batch_sigs(batch).localCheckpoint(eager=True)
-        return self._probe_with_sigs(bsigs, threshold, broadcast_row_cap,
-                                     bucket_cap)
+        ``bucket_cap`` (``None`` = uncapped) bounds the corpus×batch
+        candidates of over-cap index buckets: the index normally holds
+        dedup SURVIVORS, but one built over an UN-deduped corpus, or
+        probed below the threshold it was deduped at, can hold mega
+        buckets, which would make the candidates O(|corpus bucket| ×
+        |batch bucket|).  Over-cap buckets emit chain-verified
+        candidates in signature order instead (``_Grouping.chain``):
+        linear output, and a true near-dup still finds its match
+        because near-identical signatures sort adjacent."""
+        _, g = self._grouping(batch, threshold, bucket_cap,
+                              broadcast_row_cap)
+        return g.probe("est_jaccard")
 
-    def _probe_with_sigs(self, bsigs: DataFrame, threshold: float,
-                         broadcast_row_cap: int | None = None,
-                         bucket_cap: int | None = 1000) -> DataFrame:
-        """Probe core over MATERIALIZED batch signatures — the reuse
-        point for ``dedup_batch``, which computes the batch signatures
-        once and feeds probe, intra-batch dedup, and the append from
-        the same frame."""
+    def _grouping(self, batch: DataFrame, threshold: float,
+                  bucket_cap: int | None,
+                  broadcast_row_cap: int | None = None):
+        """The batch signatures, pinned (the probe, intra dedup and
+        append reuse them), and their band grouping."""
         p = self.params
-        cap = PROBE_BROADCAST_ROW_CAP if broadcast_row_cap is None \
-            else broadcast_row_cap
-        bbands = (dedup.band_buckets(bsigs, p["bands"])
-                  .withColumnRenamed("id", "batch_id"))
-        probe_keys = bbands
-        if bsigs.count() * p["bands"] <= cap:
-            probe_keys = F.broadcast(probe_keys)
-        ibands = get_backend().read(self.spark, f"{self.name}_bands")
-        isigs = get_backend().read(self.spark, f"{self.name}_sigs")
-        small_ibands, big = _split_overcap(ibands, ["band", "bucket"],
-                                           bucket_cap)
-
-        cands = (small_ibands.join(probe_keys, ["band", "bucket"])
-                 .select(F.col("id").alias("corpus_id"), "batch_id")
-                 .distinct())
-        verified = (
-            cands
-            .join(isigs.select(F.col("id").alias("corpus_id"),
-                               F.col("sig").alias("sig_a")), "corpus_id")
-            .join(bsigs.select(F.col("id").alias("batch_id"),
-                               F.col("sig").alias("sig_b")), "batch_id")
-            .withColumn("est_jaccard", common.cached_expr(dedup._EST_JACCARD))
-            .filter(F.col("est_jaccard") >= threshold)
-            .select("corpus_id", "batch_id", "est_jaccard")
-        )
-        if big is None:
-            return verified
-        mega_c = (ibands.join(big, ["band", "bucket"], "left_semi")
-                  .join(isigs, "id")
-                  .select("band", "bucket", "id",
-                          F.col("sig").alias("pay")))
-        mega_b = (bbands.join(big, ["band", "bucket"], "left_semi")
-                  .join(bsigs.select(F.col("id").alias("batch_id"), "sig"),
-                        "batch_id")
-                  .select("band", "bucket",
-                          F.col("batch_id").alias("id"),
-                          F.col("sig").alias("pay")))
-        chain = (
-            _chain_probe_pairs(mega_c, mega_b, ["band", "bucket"])
-            .select("corpus_id", "batch_id",
-                    F.col("pay_a").alias("sig_a"),
-                    F.col("pay_b").alias("sig_b"))
-            .withColumn("est_jaccard", common.cached_expr(dedup._EST_JACCARD))
-            .filter(F.col("est_jaccard") >= threshold)
-            .select("corpus_id", "batch_id", "est_jaccard"))
-        # a pair can surface on both paths (small bucket in one band,
-        # over-cap in another); est_jaccard is a pure function of the
-        # two signatures, so max() is just deduplication
-        return (verified.unionByName(chain)
-                .groupBy("corpus_id", "batch_id")
-                .agg(F.max("est_jaccard").alias("est_jaccard")))
+        bsigs, n = _pinned(self._batch_sigs(batch))
+        be = get_backend()
+        return bsigs, _Grouping(
+            be.read(self.spark, f"{self.name}_bands"),
+            be.read(self.spark, f"{self.name}_sigs")
+            .withColumnRenamed("sig", "pay"),
+            dedup.band_buckets(bsigs, p["bands"]),
+            bsigs.withColumnRenamed("sig", "pay"),
+            dedup.est_jaccard_expr("pay_a", "pay_b"),
+            F.col("score") >= threshold, n * p["bands"], bucket_cap,
+            broadcast_row_cap)
 
     # -- write paths ---------------------------------------------------
 
@@ -445,8 +552,9 @@ class MinHashIndex:
                sigs: DataFrame | None = None) -> None:
         """Append a deduped batch's signatures and band keys so later
         batches dedup against it (one clustered segment per table).
-        ``sigs``: precomputed signatures of EXACTLY the survivor rows
-        (skips re-shingling — ``dedup_batch`` passes them).
+        ``sigs``: precomputed, materialized signatures of EXACTLY the
+        survivor rows (skips re-shingling and, unless ``if_absent``, the
+        checkpoint — ``dedup_batch`` passes them).
 
         ``if_absent=True`` makes the append idempotent (only ids not
         already indexed are added) — required for at-least-once stream
@@ -460,24 +568,21 @@ class MinHashIndex:
         (_sigs).  A crash between the writes leaves band keys without
         signatures; the replay's anti-join still sees those ids as
         absent, so both writes re-run — at worst duplicating band rows,
-        which probe() dedups (candidates pass through distinct()) and
-        compact() physically drops.  The reverse order would lose the
+        which probe() dedups (one row per pair) and compact()
+        physically drops.  The reverse order would lose the
         batch's band keys forever (the guard would see the sigs and
         skip), silently disabling dedup against those documents."""
         p = self.params
         if sigs is None:
-            sigs = self._batch_sigs(batch_survivors)
+            sigs = self._batch_sigs(batch_survivors).localCheckpoint(eager=True)
         if if_absent:
-            existing = get_backend().read(self.spark,
-                                          f"{self.name}_sigs").select("id")
-            sigs = sigs.join(existing, "id", "left_anti")
-        sigs = sigs.localCheckpoint(eager=True)
+            sigs = self._absent(sigs, "_sigs", "id")
         get_backend().append(dedup.band_buckets(sigs, p["bands"]),
                              f"{self.name}_bands", "bucket")
         get_backend().append(sigs, f"{self.name}_sigs", "id")
 
     def dedup_batch(self, batch: DataFrame, threshold: float = 0.8,
-                    bucket_cap: int | None = 1000,
+                    bucket_cap: int | None = BUCKET_CAP,
                     replay_safe: bool = False) -> DataFrame:
         """The per-increment near-dedup: drop batch docs near-duplicating
         the corpus (corpus always wins — it was ingested first), then
@@ -501,32 +606,23 @@ class MinHashIndex:
         SAME clean frame as its first attempt and leaves the index
         unchanged.
 
-        ``bucket_cap`` defaults to 1000 (linear worst-case intra-batch
-        pair expansion, all pairs verified — see
-        ``minhash_near_duplicates``); pass ``None`` for the uncapped
-        exact-w.r.t.-banding mode."""
+        ``bucket_cap`` bounds candidate expansion in both directions
+        (linear worst case, all pairs verified — see ``probe`` and
+        ``minhash_near_duplicates``); ``None`` is the uncapped
+        exact-w.r.t.-banding mode, which warns on a bucket over
+        BUCKET_CAP."""
         p = self.params
-        # ONE signature pass for the whole increment: probe, intra-batch
-        # dedup, and the index append all reuse this materialized frame
-        # (signatures are the dominant per-batch map cost — md5 over
-        # every shingle × num_hashes; re-deriving a subset is a cheap
-        # join against the checkpointed blocks)
-        bsigs = self._batch_sigs(batch).localCheckpoint(eager=True)
+        bsigs, g = self._grouping(batch, threshold, bucket_cap)
         clean, sigs = _dedup_increment(
-            batch, p["id_col"], bsigs,
-            self._probe_with_sigs(bsigs, threshold, bucket_cap=bucket_cap),
+            g, batch, p["id_col"], bsigs,
             lambda rows: dedup.minhash_pairs_from_signatures(
                 rows, p["bands"], threshold, bucket_cap),
             replay_safe)
         self.append(clean, if_absent=replay_safe, sigs=sigs)
         return clean
 
-    def drop(self) -> None:
-        for suffix in ("_bands", "_sigs", "_meta"):
-            get_backend().drop(self.spark, f"{self.name}{suffix}")
 
-
-class SimHashIndex:
+class SimHashIndex(_Index):
     """Hamming-near-dup state: persisted 64-bit fingerprints plus their
     4×16-bit pigeonhole band keys (two fingerprints within hamming 3
     must agree on at least one band — dedup.simhash_near_duplicates'
@@ -536,23 +632,16 @@ class SimHashIndex:
       {name}_fps    (id long, simhash long, band int, key long) clustered by key
       {name}_meta   (params json)
 
-    One table (the fingerprint rides along with each band row — 4×8
-    bytes of duplication buys the verify step a join-free plan): a probe
-    computes the batch's fingerprints (pure JVM expression), broadcasts
-    its band keys, and evaluates hamming distance directly on the
-    joined rows.  Probe results are pytest-locked to equal the
+    One table (the fingerprint rides along with each band row, so band
+    0's rows double as the payload): a probe computes the batch's
+    fingerprints (pure JVM expression), broadcasts its band keys into
+    the band grouping, and verifies hamming distance against band 0's
+    fingerprints.  Probe results are pytest-locked to equal the
     cross-partition subset of the full-corpus (oracle-green)
     ``simhash_near_duplicates``.
     """
 
-    def __init__(self, spark: SparkSession, name: str):
-        self.spark = spark
-        self.name = name
-        self.params = _read_meta(spark, name)
-
-    def compact(self) -> None:
-        get_backend().compact_segments(self.spark, f"{self.name}_fps",
-                                       distinct=True)
+    _TABLES = {"_fps": True}
 
     @classmethod
     def create(cls, df: DataFrame, name: str, text_col: str = "text",
@@ -572,7 +661,7 @@ class SimHashIndex:
 
     def probe(self, batch: DataFrame, max_hamming: int = 3,
               broadcast_row_cap: int | None = None,
-              bucket_cap: int | None = 1000) -> DataFrame:
+              bucket_cap: int | None = BUCKET_CAP) -> DataFrame:
         """(corpus_id, batch_id, hamming): every batch doc within
         ``max_hamming`` of an already-ingested fingerprint.  Broadcast
         gating and eager materialization as in ``MinHashIndex.probe``;
@@ -580,53 +669,26 @@ class SimHashIndex:
         chain-verified candidates in fingerprint order (see
         ``MinHashIndex.probe`` — same rationale, same kernel;
         ``None`` = uncapped)."""
-        p = self.params
-        bfps = (self._banded_fps(batch, p["text_col"], p["id_col"])
-                .localCheckpoint(eager=True))
-        return self._probe_with_fps(bfps, max_hamming, broadcast_row_cap,
-                                    bucket_cap)
+        _, g = self._grouping(batch, max_hamming, bucket_cap,
+                              broadcast_row_cap)
+        return g.probe("hamming")
 
-    def _probe_with_fps(self, bfps: DataFrame, max_hamming: int,
-                        broadcast_row_cap: int | None = None,
-                        bucket_cap: int | None = 1000) -> DataFrame:
-        """Probe core over MATERIALIZED banded batch fingerprints."""
+    def _grouping(self, batch: DataFrame, max_hamming: int,
+                  bucket_cap: int | None,
+                  broadcast_row_cap: int | None = None):
+        """The batch's banded fingerprints, pinned, and their band
+        grouping (band 0's rows carry the payload)."""
         dedup.check_simhash_hamming(max_hamming)
-        cap = PROBE_BROADCAST_ROW_CAP if broadcast_row_cap is None \
-            else broadcast_row_cap
-        b = bfps.select(F.col("id").alias("batch_id"),
-                        F.col("simhash").alias("fp_b"), "band", "key")
-        probe_keys = b
-        if bfps.count() <= cap:
-            probe_keys = F.broadcast(probe_keys)
+        p = self.params
+        bfps, n = _pinned(self._banded_fps(batch, p["text_col"], p["id_col"]))
         idx = get_backend().read(self.spark, f"{self.name}_fps")
-        small_idx, big = _split_overcap(idx, ["band", "key"], bucket_cap)
-
-        hamming = F.bit_count(F.col("simhash").bitwiseXOR(F.col("fp_b")))
-        verified = (
-            small_idx.join(probe_keys, ["band", "key"])
-            .withColumn("hamming", hamming)
-            .filter(F.col("hamming") <= max_hamming)
-            .select(F.col("id").alias("corpus_id"), "batch_id", "hamming")
-            .distinct()
-        )
-        if big is None:
-            return verified
-        mega_c = (idx.join(big, ["band", "key"], "left_semi")
-                  .select("band", "key", "id",
-                          F.col("simhash").alias("pay")))
-        mega_b = (b.join(big, ["band", "key"], "left_semi")
-                  .select("band", "key",
-                          F.col("batch_id").alias("id"),
-                          F.col("fp_b").alias("pay")))
-        chain = (
-            _chain_probe_pairs(mega_c, mega_b, ["band", "key"])
-            .withColumn("hamming", F.bit_count(
-                F.col("pay_a").bitwiseXOR(F.col("pay_b"))))
-            .filter(F.col("hamming") <= max_hamming)
-            .select("corpus_id", "batch_id", "hamming"))
-        return (verified.unionByName(chain)
-                .groupBy("corpus_id", "batch_id")
-                .agg(F.min("hamming").alias("hamming")))
+        keys = lambda df: df.select("band", F.col("key").alias("bucket"), "id")
+        pay = lambda df: (df.filter(F.col("band") == 0)
+                          .select("id", F.col("simhash").alias("pay")))
+        return bfps, _Grouping(
+            keys(idx), pay(idx), keys(bfps), pay(bfps),
+            F.bit_count(F.col("pay_a").bitwiseXOR(F.col("pay_b"))),
+            F.col("score") <= max_hamming, n, bucket_cap, broadcast_row_cap)
 
     def append(self, batch_survivors: DataFrame, if_absent: bool = False,
                banded_fps: DataFrame | None = None) -> None:
@@ -637,14 +699,12 @@ class SimHashIndex:
         rows = (banded_fps if banded_fps is not None
                 else self._banded_fps(batch_survivors, p["text_col"], p["id_col"]))
         if if_absent:
-            existing = (get_backend().read(self.spark, f"{self.name}_fps")
-                        .select("id").distinct())
-            rows = rows.join(existing, "id", "left_anti")
+            rows = self._absent(rows, "_fps", "id")
         get_backend().append(rows, f"{self.name}_fps", "key")
 
     def dedup_batch(self, batch: DataFrame, max_hamming: int = 3,
                     replay_safe: bool = False,
-                    bucket_cap: int | None = 1000) -> DataFrame:
+                    bucket_cap: int | None = BUCKET_CAP) -> DataFrame:
         """Drop batch docs within ``max_hamming`` of the corpus, then
         hamming-dedup the remainder against itself (min-id survivor per
         connected component), append survivors, return the clean batch.
@@ -653,13 +713,9 @@ class SimHashIndex:
         mega-bucket expansion with verified chain edges (see
         ``simhash_pairs_from_fingerprints``); ``None`` = uncapped."""
         p = self.params
-        # ONE fingerprint pass for the whole increment (see
-        # MinHashIndex.dedup_batch — same reuse rationale)
-        bfps = (self._banded_fps(batch, p["text_col"], p["id_col"])
-                .localCheckpoint(eager=True))
+        bfps, g = self._grouping(batch, max_hamming, bucket_cap)
         clean, kept = _dedup_increment(
-            batch, p["id_col"], bfps,
-            self._probe_with_fps(bfps, max_hamming, bucket_cap=bucket_cap),
+            g, batch, p["id_col"], bfps,
             lambda rows: dedup.simhash_pairs_from_fingerprints(
                 rows.select("id", "simhash").distinct(), max_hamming,
                 bucket_cap),
@@ -667,12 +723,8 @@ class SimHashIndex:
         self.append(clean, if_absent=replay_safe, banded_fps=kept)
         return clean
 
-    def drop(self) -> None:
-        for suffix in ("_fps", "_meta"):
-            get_backend().drop(self.spark, f"{self.name}{suffix}")
 
-
-class EmbeddingIndex:
+class EmbeddingIndex(_Index):
     """Embedding-cosine near-dup state: persisted vectors with their
     banded hyperplane-LSH keys — the embedding-side member of the
     incremental index family (digest / minhash / simhash / embedding),
@@ -689,22 +741,17 @@ class EmbeddingIndex:
                        chain-ordering family derives from the same seed)
 
     A probe computes the batch's band keys map-side (pure JVM sign-bit
-    expressions), broadcasts the batch side while it fits (size-gated
-    like ``MinHashIndex.probe``), joins the slim bucket table, and
-    verifies candidates with the exact cosine on the vectors joined
-    back by id.  ``bucket_cap`` bounds mega-bucket candidate output:
-    with only 2^n_planes buckets per band a dense embedding region
-    concentrates in one bucket, and an uncapped corpus×batch join there
-    is O(|corpus_bucket| × |batch_bucket|); over-cap buckets instead
-    verify each batch vector against its nearest corpus neighbors in
-    chain-ordering-signature order — linear output, and a true
-    near-duplicate still finds a verified corpus match because
-    near-identical vectors sort adjacent.  Probe results are
-    pytest-locked to equal the cross-partition subset of the
-    full-corpus ``similarity.cosine_near_duplicates`` run with the same
-    family (exact equality below the cap; the capped path preserves the
-    drop/keep decision).
+    expressions) and verifies the shared band grouping's candidates
+    (``_Grouping``) with the exact cosine; over-cap buckets (a dense
+    region concentrates in one of the 2^n_planes buckets of a band)
+    chain in ordering-signature order.  Probe results are pytest-locked
+    to equal the cross-partition subset of the full-corpus
+    ``similarity.cosine_near_duplicates`` run with the same family
+    (exact below the cap; the capped path keeps the drop/keep
+    decision).
     """
+
+    _TABLES = {"_vecs": False, "_buckets": True}
 
     def __init__(self, spark: SparkSession, name: str):
         self.spark = spark
@@ -728,11 +775,6 @@ class EmbeddingIndex:
         # manifest, so keys and planes flip in one commit; an index
         # never rebucketed keeps its create-time geometry in the meta
         self.params.update(buckets.get("extra") or {})
-
-    def compact(self) -> None:
-        be = get_backend()
-        be.compact_segments(self.spark, f"{self.name}_vecs")
-        be.compact_segments(self.spark, f"{self.name}_buckets", distinct=True)
 
     def rebucket(self, n_planes: int | None = None,
                  bands: int | None = None) -> None:
@@ -831,7 +873,7 @@ class EmbeddingIndex:
     def probe(self, batch: DataFrame, threshold: float = 0.9,
               multiprobe_hamming: int = 0,
               broadcast_row_cap: int | None = None,
-              bucket_cap: int | None = 1000) -> DataFrame:
+              bucket_cap: int | None = BUCKET_CAP) -> DataFrame:
         """(corpus_id, batch_id, cosine): every batch vector whose exact
         cosine to an already-ingested vector clears ``threshold``, among
         LSH candidates.  Recall levers as in
@@ -840,99 +882,54 @@ class EmbeddingIndex:
         ``multiprobe_hamming`` is the single-band legacy knob.
         ``bucket_cap`` (default 1000, ``None`` = uncapped) bounds
         mega-bucket candidates via the nearest-in-order chain."""
-        bvecs = self._batch_vecs(batch).localCheckpoint(eager=True)
-        return self._probe_with_vecs(bvecs, threshold, multiprobe_hamming,
-                                     broadcast_row_cap, bucket_cap)
+        _, g = self._grouping(batch, threshold, multiprobe_hamming,
+                              bucket_cap, broadcast_row_cap)
+        return g.probe("cosine")
 
-    def _probe_with_vecs(self, bvecs: DataFrame, threshold: float,
-                         multiprobe_hamming: int = 0,
-                         broadcast_row_cap: int | None = None,
-                         bucket_cap: int | None = 1000) -> DataFrame:
+    def _grouping(self, batch: DataFrame, threshold: float,
+                  multiprobe_hamming: int, bucket_cap: int | None,
+                  broadcast_row_cap: int | None = None):
+        """The batch's (id, vec, osig) rows, pinned, and their band
+        grouping; multiprobe adds the nonzero-mask neighbor keys as
+        probe rows (none reaches an over-cap bucket's chain)."""
         from dlx_spark.operators import similarity
 
         p = self.params
-        cap = PROBE_BROADCAST_ROW_CAP if broadcast_row_cap is None \
-            else broadcast_row_cap
         if p["bands"] > 1 and multiprobe_hamming:
             raise ValueError("multiprobe applies to single-band indexes; "
                              "this index uses bands for recall")
+        bvecs, n = _pinned(self._batch_vecs(batch))
         bb = self._band_keys(bvecs)
-        n_masks = 1
-        probe_keys = bb.withColumnRenamed("id", "batch_id")
-        if multiprobe_hamming:
-            masks = similarity.multiprobe_masks(p["n_planes"],
-                                                multiprobe_hamming)
-            n_masks = len(masks)
-            probe_keys = probe_keys.select(
-                "batch_id", "band",
-                F.explode(F.array(*[F.col("bucket").bitwiseXOR(F.lit(m))
-                                    for m in masks])).alias("bucket"))
-        if bvecs.count() * p["bands"] * n_masks <= cap:
-            probe_keys = F.broadcast(probe_keys)
-
-        idxb = get_backend().read(self.spark, f"{self.name}_buckets")
-        idxv = get_backend().read(self.spark, f"{self.name}_vecs")
-        small_idxb, big = _split_overcap(idxb, ["band", "bucket"],
-                                         bucket_cap)
-
-        cands = (small_idxb.join(probe_keys, ["band", "bucket"])
-                 .select(F.col("id").alias("corpus_id"), "batch_id")
-                 .distinct())
-        verified = (
-            cands
-            .join(idxv.select(F.col("id").alias("corpus_id"),
-                              F.col("vec").alias("cvec")), "corpus_id")
-            .join(bvecs.select(F.col("id").alias("batch_id"),
-                               F.col("vec").alias("pvec")), "batch_id")
-            .withColumn("cosine", similarity.pairwise_cosine_expr())
-            .filter(F.col("cosine") >= threshold)
-            .select("corpus_id", "batch_id", "cosine"))
-
-        if big is not None:
-            # mega-buckets: each batch vector is verified against its
-            # nearest corpus neighbors in ordering-signature order
-            # (``_chain_probe_pairs``) — linear output; a true near-dup
-            # sorts within ε of its match on the continuous projection.
-            # (Multiprobe edges INTO a mega-bucket are dropped — the
-            # m × probe-row expansion is the blow-up the cap prevents.)
-            mega_c = (idxb.join(big, ["band", "bucket"], "left_semi")
-                      .join(idxv, "id")
-                      .select("band", "bucket", "id", "osig",
-                              F.col("vec").alias("pay")))
-            mega_b = (bb.join(big, ["band", "bucket"], "left_semi")
-                      .join(bvecs, "id")
-                      .select("band", "bucket", "id", "osig",
-                              F.col("vec").alias("pay")))
-            chain = (
-                _chain_probe_pairs(mega_c, mega_b, ["band", "bucket"],
-                                   order="osig")
-                .select("corpus_id", "batch_id",
-                        F.col("pay_a").alias("cvec"),
-                        F.col("pay_b").alias("pvec"))
-                .withColumn("cosine", similarity.pairwise_cosine_expr())
-                .filter(F.col("cosine") >= threshold)
-                .select("corpus_id", "batch_id", "cosine"))
-            verified = verified.unionByName(chain)
-
-        return (verified.groupBy("corpus_id", "batch_id")
-                .agg(F.max("cosine").alias("cosine")))
+        masks = [m for m in similarity.multiprobe_masks(
+            p["n_planes"], multiprobe_hamming) if m]
+        probe_keys = bb.select("band", "id", F.explode(F.array(*[
+            F.col("bucket").bitwiseXOR(F.lit(m)) for m in masks]))
+            .alias("bucket")) if masks else None
+        be = get_backend()
+        pay = lambda df: df.select("id", F.col("vec").alias("pay"), "osig")
+        return bvecs, _Grouping(
+            be.read(self.spark, f"{self.name}_buckets"),
+            pay(be.read(self.spark, f"{self.name}_vecs")), bb, pay(bvecs),
+            similarity.pairwise_cosine_expr("pay_b", "pay_a"),
+            F.col("score") >= threshold,
+            n * p["bands"] * (len(masks) + 1), bucket_cap, broadcast_row_cap,
+            probe_keys=probe_keys, order="osig")
 
     def append(self, batch_survivors: DataFrame, if_absent: bool = False,
                vecs: DataFrame | None = None) -> None:
-        """``vecs``: precomputed (id, vec, osig) rows of EXACTLY the
-        survivor rows (``dedup_batch`` passes them).
+        """``vecs``: precomputed, materialized (id, vec, osig) rows of
+        EXACTLY the survivor rows (``dedup_batch`` passes them; they are
+        written without a second checkpoint unless ``if_absent``).
 
         Crash-safety across the two table writes mirrors
         ``MinHashIndex.append``: band keys are written FIRST and the
         replay guard keys on the LAST-written table (_vecs), so a crash
         between the writes at worst duplicates band rows (probe dedups
         candidates; compact physically drops them)."""
-        rows = vecs if vecs is not None else self._batch_vecs(batch_survivors)
+        rows = vecs if vecs is not None else \
+            self._batch_vecs(batch_survivors).localCheckpoint(eager=True)
         if if_absent:
-            existing = get_backend().read(self.spark,
-                                          f"{self.name}_vecs").select("id")
-            rows = rows.join(existing, "id", "left_anti")
-        rows = rows.localCheckpoint(eager=True)
+            rows = self._absent(rows, "_vecs", "id")
         get_backend().append(self._band_keys(rows), f"{self.name}_buckets",
                              "bucket")
         get_backend().append(rows, f"{self.name}_vecs", "id")
@@ -940,7 +937,7 @@ class EmbeddingIndex:
     def dedup_batch(self, batch: DataFrame, threshold: float = 0.9,
                     multiprobe_hamming: int = 0,
                     replay_safe: bool = False,
-                    bucket_cap: int | None = 1000) -> DataFrame:
+                    bucket_cap: int | None = BUCKET_CAP) -> DataFrame:
         """Drop batch vectors near-duplicating the corpus (corpus wins),
         cosine-dedup the remainder against itself (min-id survivor per
         connected component), append survivors, return the clean batch.
@@ -954,12 +951,10 @@ class EmbeddingIndex:
         masks = (similarity.multiprobe_masks(p["n_planes"],
                                              multiprobe_hamming)
                  if multiprobe_hamming else None)
-        # ONE vector/ordering pass feeds probe, intra dedup, and append
-        bvecs = self._batch_vecs(batch).localCheckpoint(eager=True)
+        bvecs, g = self._grouping(batch, threshold, multiprobe_hamming,
+                                  bucket_cap)
         clean, vecs = _dedup_increment(
-            batch, p["id_col"], bvecs,
-            self._probe_with_vecs(bvecs, threshold, multiprobe_hamming,
-                                  bucket_cap=bucket_cap),
+            g, batch, p["id_col"], bvecs,
             lambda rows: similarity.cosine_pairs_from_keys(
                 self._band_keys(rows), rows, threshold, bucket_cap, masks)
             .select("id_a", "id_b"),
@@ -967,12 +962,8 @@ class EmbeddingIndex:
         self.append(clean, if_absent=replay_safe, vecs=vecs)
         return clean
 
-    def drop(self) -> None:
-        for suffix in ("_vecs", "_buckets", "_meta"):
-            get_backend().drop(self.spark, f"{self.name}{suffix}")
 
-
-class SegmentIndex:
+class SegmentIndex(_Index):
     """Incremental corpus-level SEGMENT dedup state (the C4-style
     repeated-unit rule of ``spans.segment_dedup``, batched): the digest
     of every segment ever KEPT, clustered by digest.
@@ -987,13 +978,7 @@ class SegmentIndex:
     ``spans.segment_dedup`` output, because the global first-occurrence
     order (doc_id, seg_idx) is the batch arrival order."""
 
-    def __init__(self, spark: SparkSession, name: str):
-        self.spark = spark
-        self.name = name
-        self.params = _read_meta(spark, name)
-
-    def compact(self) -> None:
-        get_backend().compact_segments(self.spark, f"{self.name}_segments")
+    _TABLES = {"_segments": False}
 
     @classmethod
     def create_empty(cls, spark: SparkSession, name: str,
@@ -1040,7 +1025,6 @@ class SegmentIndex:
     def _kept_and_rebuilt(self, batch: DataFrame,
                           replay_safe: bool) -> tuple[DataFrame, DataFrame]:
         from dlx_spark.operators import spans as _spans
-        from pyspark.sql import Window
         p = self.params
         idx = get_backend().read(self.spark, f"{self.name}_segments")
         if replay_safe:
@@ -1077,10 +1061,7 @@ class SegmentIndex:
                            F.col("doc_id").cast("long").alias("keep_id"))
                    .groupBy("digest").agg(F.min("keep_id").alias("keep_id")))
         if if_absent:
-            existing = get_backend().read(
-                self.spark, f"{self.name}_segments").select("digest")
-            digests = digests.join(existing, "digest", "left_anti") \
-                             .localCheckpoint(eager=True)
+            digests = self._absent(digests, "_segments", "digest")
         get_backend().append(digests, f"{self.name}_segments", "digest")
 
     def dedup_batch(self, batch: DataFrame,
@@ -1098,12 +1079,8 @@ class SegmentIndex:
         self.append_kept(kept, if_absent=replay_safe)
         return rebuilt
 
-    def drop(self) -> None:
-        get_backend().drop(self.spark, f"{self.name}_segments")
-        get_backend().drop(self.spark, f"{self.name}_meta")
 
-
-class SpanIndex:
+class SpanIndex(_Index):
     """Incremental duplicated-SPAN cutting (the keep-first rule of
     ``spans.cut_duplicate_spans``, batched): the digest of every
     stride-1 k-word window ever seen, with its first (doc, pos)
@@ -1126,13 +1103,7 @@ class SpanIndex:
     because a window's global first occurrence is its first arrival.
     """
 
-    def __init__(self, spark: SparkSession, name: str):
-        self.spark = spark
-        self.name = name
-        self.params = _read_meta(spark, name)
-
-    def compact(self) -> None:
-        get_backend().compact_segments(self.spark, f"{self.name}_windows")
+    _TABLES = {"_windows": False}
 
     @classmethod
     def create_empty(cls, spark: SparkSession, name: str,
@@ -1212,10 +1183,7 @@ class SpanIndex:
         """Record a batch's fresh window digests (first occurrences).
         ``if_absent=True`` makes replays idempotent."""
         if if_absent:
-            existing = get_backend().read(
-                self.spark, f"{self.name}_windows").select("digest")
-            firsts = firsts.join(existing, "digest", "left_anti") \
-                           .localCheckpoint(eager=True)
+            firsts = self._absent(firsts, "_windows", "digest")
         get_backend().append(firsts, f"{self.name}_windows", "digest")
 
     def dedup_batch(self, batch: DataFrame,
@@ -1235,6 +1203,3 @@ class SpanIndex:
         self.append_firsts(firsts, if_absent=replay_safe)
         return cleaned
 
-    def drop(self) -> None:
-        get_backend().drop(self.spark, f"{self.name}_windows")
-        get_backend().drop(self.spark, f"{self.name}_meta")

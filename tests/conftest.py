@@ -22,6 +22,27 @@ def spark():
     yield spark
 
 
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)``: (the Spark jobs ``fn`` ran, its result),
+    counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"budget-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status tracker is fed asynchronously by the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+    return run
+
+
 def _sweep_stale_warehouse(spark):
     """Make the suite immune to killed predecessors: every test table
     lives under the warehouse (the index tables in the versioned root

@@ -135,6 +135,48 @@ def test_torn_marker_from_midcopy_crash_reads_as_safe(spark, tmp_path):
 # ------------------------------------------- versioned backend + schemes
 
 
+def test_same_process_put_if_absent_race_has_one_winner(spark, tmp_path):
+    """The default scheme on ``file://``: threads of one process racing
+    put-if-absent of their own tmp files onto one destination.  Every
+    round has exactly one winner, and the destination reads back whole
+    with a valid checksum (the local filesystem renames the data file
+    and its ``.crc`` separately, so two interleaved renames could pair
+    one racer's bytes with another's checksum)."""
+    import sys
+
+    fsio.set_commit_scheme(fsio.HadoopRenameScheme())
+    base = "file://" + str(tmp_path)
+    n = 8
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for rnd in range(50):
+            dest = f"{base}/v{rnd:03d}.json"
+            tmps = [f"{base}/v{rnd:03d}.json.{i}.tmp" for i in range(n)]
+            for i, tmp in enumerate(tmps):
+                fsio.write_text(spark, tmp, f"racer {i} " + "x" * (64 + i))
+            go = threading.Barrier(n)
+            won = [None] * n
+
+            def race(i):
+                go.wait(timeout=60)
+                won[i] = fsio.put_if_absent(spark, tmps[i], dest)
+
+            threads = [threading.Thread(target=race, args=(i,))
+                       for i in range(n)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=60)
+            assert not any(t.is_alive() for t in threads)
+            assert won.count(True) == 1, (rnd, won)
+            winner = won.index(True)
+            assert fsio.read_text(spark, dest) == \
+                f"racer {winner} " + "x" * (64 + winner)
+    finally:
+        sys.setswitchinterval(interval)
+
+
 def test_versioned_backend_refuses_scheme_without_cas(spark, be):
     """Raw object-store rename has no atomic put-if-absent: two racers
     could both publish the same version and silently lose one commit.

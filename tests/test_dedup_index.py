@@ -78,7 +78,6 @@ def _segments(spark, name):
     return len(tableio.get_backend().latest_manifest(spark, name)["segments"])
 
 
-@pytest.mark.slow
 def test_minhash_probe_equals_full_cross_pairs(spark, split_corpus):
     full_df, corpus, batch = split_corpus
     idx = MinHashIndex.create(corpus, "t_mh_idx")
@@ -125,38 +124,48 @@ def test_minhash_dedup_batch_matches_full_survivor_rule(spark, split_corpus):
         idx.drop()
 
 
-def _jobs(spark, fn):
-    """(Spark jobs ``fn`` ran, its result), counted through a job
-    group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"budget-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # the status tracker is fed asynchronously by the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group)), out
-
-
-def test_minhash_dedup_batch_job_budget(spark, split_corpus):
-    """One increment runs the corpus probe once (its drop set is pinned
-    before the intra-batch pass and the survivor rule read it), and its
-    append writes one file per index table."""
+def test_minhash_dedup_batch_job_budget(spark, split_corpus, count_jobs):
+    """One increment runs one band grouping: the corpus and batch links
+    come out of one pinned pass whose observation answers every gate,
+    so a batch without intra-batch near duplicates runs no connected
+    components at all.  Its append writes one file per index table."""
     _, corpus, batch = split_corpus
-    idx = MinHashIndex.create(corpus, "t_mh_budget")
+    # 260-262 are the batch's intra-batch duplicates
+    for name, rows, budget in (("t_mh_budget", batch, 45),
+                               ("t_mh_budget2",
+                                batch.filter(F.col("doc_id") < 260), 20)):
+        idx = MinHashIndex.create(corpus, name)
+        try:
+            n, clean = count_jobs(lambda: idx.dedup_batch(rows))
+            assert n <= budget, (name, n)
+            assert clean.count() > 0
+            be = tableio.get_backend()
+            for t in (f"{name}_sigs", f"{name}_bands"):
+                manifest = be.latest_manifest(spark, t)
+                assert len(manifest["segments"]) == 2
+                assert len(be.segment_df(spark, manifest, 1).inputFiles()) == 1
+        finally:
+            idx.drop()
+
+
+def test_uncapped_dedup_batch_warns_on_an_overcap_bucket(spark):
+    """``bucket_cap=None`` is exact but unbounded: an increment whose
+    band grouping meets a bucket larger than the default cap says so
+    once.  The default cap verifies that bucket as a chain, silently."""
+    import warnings
+
+    text = " ".join(f"w{i}" for i in range(25))
+    corpus = spark.createDataFrame([(i, text) for i in range(1001)],
+                                   "doc_id long, text string")
+    idx = MinHashIndex.create(corpus, "t_mh_loud")
     try:
-        n, clean = _jobs(spark, lambda: idx.dedup_batch(batch))
-        assert n <= 68, n
-        assert clean.count() > 0
-        be = tableio.get_backend()
-        for t in ("t_mh_budget_sigs", "t_mh_budget_bands"):
-            manifest = be.latest_manifest(spark, t)
-            assert len(manifest["segments"]) == 2
-            assert len(be.segment_df(spark, manifest, 1).inputFiles()) == 1
+        one = lambda i: spark.createDataFrame([(i, text)],
+                                              "doc_id long, text string")
+        with pytest.warns(RuntimeWarning, match="uncapped"):
+            assert idx.dedup_batch(one(5000), bucket_cap=None).count() == 0
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", RuntimeWarning)
+            assert idx.dedup_batch(one(5001)).count() == 0
     finally:
         idx.drop()
 
@@ -220,6 +229,23 @@ def test_digest_antijoin_broadcasts_index_side(spark, split_corpus):
         n_shuffles = plan.count("Exchange") - plan.count("BroadcastExchange") \
             - plan.count("ReusedExchange")
         assert n_shuffles == 0, plan
+    finally:
+        idx.drop()
+
+
+def test_digest_filter_new_scans_the_index_once(spark, split_corpus):
+    """filter_new keeps the min-id rows per digest with one window over
+    the fresh rows, so its plan broadcasts the digest table once."""
+    _, corpus, batch = split_corpus
+    idx = DigestIndex.create(corpus, "t_dg_once")
+    try:
+        fresh = idx.filter_new(batch)
+        got = sorted(r["doc_id"] for r in fresh.collect())
+        # 200-204 repeat corpus docs; 260 repeats 240, 262 repeats 241
+        assert got == [*range(215, 222), *range(240, 250), 261]
+        plan = fresh._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        assert final.count("BroadcastExchange") == 1, plan
     finally:
         idx.drop()
 
@@ -818,7 +844,6 @@ def emb_split(spark):
     return df, df.filter("vec_id < 100"), df.filter("vec_id >= 100")
 
 
-@pytest.mark.slow
 def test_embedding_probe_equals_full_cross_pairs(spark, emb_split):
     """EmbeddingIndex.probe == the cross-partition subset of the
     full-corpus cosine_near_duplicates run with the same hyperplane
@@ -1018,7 +1043,6 @@ def test_embedding_rebucket_regrows_plane_count(spark, emb_split):
         fresh.drop()
 
 
-@pytest.mark.slow
 def test_minhash_probe_mega_bucket_cap_stays_linear(spark):
     """Adversarial corpus for the probe path: an index built over an
     UN-deduped corpus (40 near-identical docs) concentrates whole band
@@ -1054,7 +1078,6 @@ def test_minhash_probe_mega_bucket_cap_stays_linear(spark):
         idx.drop()
 
 
-@pytest.mark.slow
 def test_simhash_probe_mega_bucket_cap_stays_linear(spark):
     """Same adversarial shape for the SimHash index: 40 identical
     fingerprints co-bucket every band; the capped probe bounds the

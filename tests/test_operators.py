@@ -425,6 +425,33 @@ def test_connected_components_chain_converges_log_rounds(spark):
     assert stats["rounds"] <= 10, stats
 
 
+def test_connected_components_round_runs_one_action(spark, count_jobs):
+    """Each propagation round's eager checkpoint also observes how many
+    labels moved, so a round runs one action, not a checkpoint plus a
+    count.  A 3-round chain ran 35 jobs with the per-round count (8
+    shuffle partitions, as this session sets)."""
+    from dlx_spark.operators.dedup import connected_components
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    stats: dict = {}
+    n, out = count_jobs(lambda: connected_components(pairs, stats=stats))
+    assert stats == {"rounds": 3, "converged": True}
+    assert n < 35, n
+    assert {(r.id, r.component) for r in out.collect()} == \
+        {(1, 1), (2, 1), (3, 1)}
+
+
+def test_connected_components_empty_pairs_return_at_once(spark, count_jobs):
+    """An empty edge set is seen by the edge pin itself: an empty label
+    frame comes back with no propagation round."""
+    from dlx_spark.operators.dedup import connected_components
+    pairs = spark.createDataFrame([], "id_a long, id_b long")
+    stats: dict = {}
+    n, out = count_jobs(lambda: connected_components(pairs, stats=stats))
+    assert stats == {"rounds": 0, "converged": True}
+    assert n <= 1, n
+    assert out.collect() == []
+
+
 def test_connected_components_nonconvergence_raises_loudly(spark):
     """Partial labels silently split clusters downstream, so hitting
     max_iter is an ERROR by default; on_nonconverge='warn' restores the
