@@ -31,7 +31,10 @@ indexes persist the corpus's dedup STATE instead:
                         find cosine-≥threshold neighbors of a batch
                         against all history with exact-cosine
                         verification (the embedding-side analog of the
-                        MinHash index).
+                        MinHash index).  ``knn`` (a probe frame) and
+                        ``topk`` (one query vector) answer top-k
+                        nearest neighbors from the same persisted
+                        state: every candidate ranked by exact cosine.
 
 All indexes are append-only: after a batch is deduped, its survivors'
 state is appended (one segment per append, clustered by the table's key
@@ -78,7 +81,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from dlx_spark import tableio
 from dlx_spark.tableio import get_backend
-from dlx_spark.operators import common, dedup
+from dlx_spark.operators import common, dedup, similarity
 
 
 # Probe-side broadcast gate: a daily-increment batch's band keys are a
@@ -749,6 +752,12 @@ class EmbeddingIndex(_Index):
     ``similarity.cosine_near_duplicates`` run with the same family
     (exact below the cap; the capped path keeps the drop/keep
     decision).
+
+    ``knn`` and ``topk`` are the top-k probes over the same grouping
+    with no threshold: every candidate is ranked by exact cosine, and
+    the geometry is the index's own (callers pass none).  ``knn`` is
+    pytest-locked to equal ``similarity.knn_join`` with the same
+    planes and seed.
     """
 
     _TABLES = {"_vecs": False, "_buckets": True}
@@ -799,8 +808,6 @@ class EmbeddingIndex(_Index):
         the keys were derived from and raises ConcurrentWriteError
         otherwise — the caller re-runs rebucket over the grown
         corpus."""
-        from dlx_spark.operators import similarity
-
         p = dict(self.params)
         geometry = {"n_planes": int(n_planes or p["n_planes"]),
                     "bands": int(bands or p["bands"])}
@@ -823,14 +830,8 @@ class EmbeddingIndex(_Index):
                id_col: str = "vec_id", n_planes: int = 8, bands: int = 1,
                seed: int = 42,
                dim: int | None = None) -> "EmbeddingIndex":
-        from dlx_spark.operators import similarity
-
         spark = df.sparkSession
-        if dim is None:
-            head = df.select(vec_col).first()
-            if head is None:
-                raise ValueError("cannot infer dim from an empty frame — pass dim")
-            dim = len(head[0])
+        dim = similarity.infer_dim(df, vec_col, dim)
         params = {"vec_col": vec_col, "id_col": id_col, "n_planes": n_planes,
                   "bands": bands, "seed": seed, "dim": dim}
         oplanes = similarity.order_planes(dim, seed)
@@ -853,8 +854,6 @@ class EmbeddingIndex(_Index):
     def _batch_vecs(self, batch: DataFrame) -> DataFrame:
         """(id, vec, osig) rows of a batch — the ONE per-increment
         projection that probe, intra dedup, and append all reuse."""
-        from dlx_spark.operators import similarity
-
         p = self.params
         oplanes = similarity.order_planes(p["dim"], p["seed"])
         return batch.select(F.col(p["id_col"]).alias("id"),
@@ -863,8 +862,6 @@ class EmbeddingIndex(_Index):
                             .alias("osig"))
 
     def _band_keys(self, vecs: DataFrame) -> DataFrame:
-        from dlx_spark.operators import similarity
-
         p = self.params
         return similarity.banded_lsh_keys(vecs, p["bands"], p["n_planes"],
                                           p["seed"], vec_col="vec",
@@ -886,14 +883,56 @@ class EmbeddingIndex(_Index):
                               bucket_cap, broadcast_row_cap)
         return g.probe("cosine")
 
-    def _grouping(self, batch: DataFrame, threshold: float,
+    def knn(self, probes: DataFrame, k: int = 5,
+            multiprobe_hamming: int = 0,
+            bucket_cap: int | None = BUCKET_CAP,
+            broadcast_row_cap: int | None = None) -> DataFrame:
+        """(probe_id, corpus_id, cosine, rank): the ``k`` nearest indexed
+        vectors of every probe row by exact cosine, among the band
+        grouping's candidates (no threshold), ranked per probe by
+        (cosine desc, corpus_id asc) — the schema and ranking of
+        ``similarity.knn_join``, which it equals under the same
+        ``n_planes`` and seed at hamming 0 while no bucket is over
+        ``bucket_cap``.  An over-cap bucket contributes its chain
+        neighbors only.  As in ``knn_join``, an indexed row never
+        ranks as its own neighbor (``corpus_id == probe_id`` is
+        dropped), so re-probing indexed rows spends no slot on
+        themselves."""
+        _, g = self._grouping(probes, None, multiprobe_hamming, bucket_cap,
+                              broadcast_row_cap)
+        w = Window.partitionBy("probe_id").orderBy(F.desc("cosine"),
+                                                   F.asc("corpus_id"))
+        return (g.probe("cosine")
+                .filter(F.col("corpus_id") != F.col("batch_id"))
+                .select(F.col("batch_id").alias("probe_id"), "corpus_id",
+                        "cosine")
+                .withColumn("rank", F.row_number().over(w))
+                .filter(F.col("rank") <= k))
+
+    def topk(self, query, k: int = 10,
+             multiprobe_hamming: int = 0) -> DataFrame:
+        """(id, cosine), best first: the ``k`` nearest indexed vectors of
+        one query vector — ``knn``'s candidates for a one-row batch.  A
+        query has no id, so an indexed copy of it is returned."""
+        p = self.params
+        q = [float(x) for x in query]
+        if len(q) != p["dim"]:
+            raise ValueError(f"query has {len(q)} dimensions; index "
+                             f"{self.name!r} holds {p['dim']}")
+        one = self.spark.createDataFrame(
+            [(0, q)], f"`{p['id_col']}` long, `{p['vec_col']}` array<double>")
+        _, g = self._grouping(one, None, multiprobe_hamming, BUCKET_CAP)
+        return (g.probe("cosine").select(F.col("corpus_id").alias("id"),
+                                         "cosine")
+                .orderBy(F.desc("cosine"), F.asc("id")).limit(k))
+
+    def _grouping(self, batch: DataFrame, threshold: float | None,
                   multiprobe_hamming: int, bucket_cap: int | None,
                   broadcast_row_cap: int | None = None):
         """The batch's (id, vec, osig) rows, pinned, and their band
         grouping; multiprobe adds the nonzero-mask neighbor keys as
-        probe rows (none reaches an over-cap bucket's chain)."""
-        from dlx_spark.operators import similarity
-
+        probe rows (none reaches an over-cap bucket's chain).  With no
+        ``threshold`` every candidate is kept (the top-k probes)."""
         p = self.params
         if p["bands"] > 1 and multiprobe_hamming:
             raise ValueError("multiprobe applies to single-band indexes; "
@@ -911,7 +950,7 @@ class EmbeddingIndex(_Index):
             be.read(self.spark, f"{self.name}_buckets"),
             pay(be.read(self.spark, f"{self.name}_vecs")), bb, pay(bvecs),
             similarity.pairwise_cosine_expr("pay_b", "pay_a"),
-            F.col("score") >= threshold,
+            F.lit(True) if threshold is None else F.col("score") >= threshold,
             n * p["bands"] * (len(masks) + 1), bucket_cap, broadcast_row_cap,
             probe_keys=probe_keys, order="osig")
 
@@ -945,8 +984,6 @@ class EmbeddingIndex(_Index):
         ``MinHashIndex.dedup_batch``.  The intra-batch dedup runs the
         SAME candidate rule as the probe — bands, multiprobe neighbor
         expansion, and the mega-bucket cap all apply to both sides."""
-        from dlx_spark.operators import similarity
-
         p = self.params
         masks = (similarity.multiprobe_masks(p["n_planes"],
                                              multiprobe_hamming)

@@ -121,6 +121,20 @@ def _order_sig_expr(vec_col: str, oplanes: np.ndarray):
         " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
 
 
+def infer_dim(df: DataFrame, vec_col: str, dim: int | None = None) -> int:
+    """Vector dimensionality: ``dim`` when given, else the length of the
+    first row's vector (one ``first()`` job).  Raises ``ValueError``
+    when that cannot be read: an empty frame or a NULL first vector."""
+    if dim is not None:
+        return dim
+    head = df.select(vec_col).first()
+    if head is None or head[0] is None:
+        raise ValueError(f"cannot infer the dimension of {vec_col!r}: the "
+                         "frame is empty or its first vector is NULL — "
+                         "pass dim")
+    return len(head[0])
+
+
 def banded_lsh_keys(df: DataFrame, bands: int, n_planes: int, seed: int,
                     vec_col: str = "embedding", id_col: str = "vec_id",
                     dim: int | None = None) -> DataFrame:
@@ -135,7 +149,7 @@ def banded_lsh_keys(df: DataFrame, bands: int, n_planes: int, seed: int,
     bucket explosion.  Pure per-row projection (posexplode of the band
     signature array); the only shuffles are whatever the consumer joins
     on."""
-    dim = dim if dim is not None else len(df.select(vec_col).first()[0])
+    dim = infer_dim(df, vec_col, dim)
     planes = hyperplanes(dim, bands * n_planes, seed)
     sigs = [_signature_expr(vec_col, planes[b * n_planes:(b + 1) * n_planes])
             for b in range(bands)]
@@ -163,7 +177,7 @@ def lsh_buckets(df: DataFrame, n_planes: int = 16, seed: int = 42,
 
     Pass ``dim`` to keep plan construction action-free; the ``first()``
     probe is only a convenience fallback."""
-    dim = dim if dim is not None else len(df.select(vec_col).first()[0])
+    dim = infer_dim(df, vec_col, dim)
     planes = hyperplanes(dim, n_planes, seed)
     return spread_for_compute(df).select(F.col(id_col).alias("id"),
                      _signature_expr(vec_col, planes).alias("bucket"),
@@ -286,8 +300,8 @@ def ivf_topk(df: DataFrame, query: list[float], k: int = 10,
 
 def pairwise_cosine_expr(pvec: str = "pvec", cvec: str = "cvec") -> F.Column:
     """Cosine between two vector COLUMNS as a pure JVM expression (the
-    shared rerank kernel of ``knn_join`` and the persisted-index probe,
-    bucketing.knn_join_lsh_index)."""
+    shared rerank kernel of ``knn_join`` and the persisted-index probes,
+    ``dedup_index.EmbeddingIndex.knn`` among them)."""
     dot = (f"aggregate(zip_with({pvec}, {cvec}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
            " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
     norm = lambda v: (f"sqrt(aggregate({v}, CAST(0.0 AS DOUBLE),"
@@ -478,7 +492,7 @@ def cosine_near_duplicates(df: DataFrame, threshold: float = 0.9,
         raise ValueError("multiprobe applies to the single-band form; "
                          "use bands for recall amplification instead")
     bucket_cap = bypass_cap(df, bucket_cap, auto_bypass_bytes)
-    dim = dim if dim is not None else len(df.select(vec_col).first()[0])
+    dim = infer_dim(df, vec_col, dim)
     bb = banded_lsh_keys(df, bands, n_planes, seed, vec_col, id_col, dim)
     # the kernel references vecs from several plan branches; the (lazy)
     # cache keeps the scan + osig projection from re-running per branch
@@ -528,7 +542,7 @@ def knn_join(probes: DataFrame, corpus: DataFrame, k: int = 5,
 
     Pass ``dim`` to keep plan construction action-free; the ``first()``
     probe is only a convenience fallback."""
-    dim = dim if dim is not None else len(corpus.select(vec_col).first()[0])
+    dim = infer_dim(corpus, vec_col, dim)
     planes = hyperplanes(dim, n_planes, seed)
 
     p = probes.select(F.col(id_col).alias("probe_id"), F.col(vec_col).alias("pvec"),

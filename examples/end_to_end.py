@@ -111,19 +111,18 @@ def main() -> None:
           f"{n_dup_docs} docs carry duplicated 15-word spans; "
           f"export manifest certifies {n_shards} shards")
 
-    # 6. storage-layout operators: a written LSH index probes with
-    # partition pruning; bulk ingest commits a DataFrame end-to-end with
-    # no record rows on the driver
-    from dlx_spark.operators import bucketing
+    # 6. persisted state: an embedding index answers top-k from its
+    # stored vectors and LSH keys; bulk ingest commits a DataFrame
+    # end-to-end with no record rows on the driver
+    from dlx_spark.operators.dedup_index import EmbeddingIndex
     from dlx_spark.marc.store import MarcStore
     from dlx_spark.sources import marc_io
 
     with tempfile.TemporaryDirectory() as tmp:
-        bucketing.write_lsh_index(emb, "example_lsh_idx", n_planes=6, dim=64)
-        probed = bucketing.probe_lsh_index(spark, "example_lsh_idx", qvec, k=3,
-                                           n_planes=6).collect()
-        spark.sql("DROP TABLE IF EXISTS example_lsh_idx")
-        print(f"LSH index probe (partition-pruned): "
+        idx = EmbeddingIndex.create(emb, "example_emb_idx", n_planes=6, dim=64)
+        probed = idx.topk(qvec, k=3, multiprobe_hamming=1).collect()
+        idx.drop()
+        print(f"LSH index top-k (EmbeddingIndex): "
               f"{[(r.id, round(r.cosine, 3)) for r in probed]}")
 
         store = MarcStore(spark, f"{tmp}/wh")

@@ -43,6 +43,32 @@ def count_jobs(spark):
     return run
 
 
+@pytest.fixture
+def touched_buckets():
+    """``touched_buckets(idx, probes)``: ``(grouped, brute)``, both
+    sorted (band, bucket, id) lists — the corpus rows of an
+    ``EmbeddingIndex``'s band grouping for ``probes``, and by brute
+    force the index key rows of the buckets the probes touch (the whole
+    key table joined on the probes' band keys)."""
+    from pyspark.sql import functions as F
+
+    from dlx_spark.tableio import get_backend
+    from dlx_spark.operators import similarity
+
+    def run(idx, probes):
+        _, g = idx._grouping(probes, None, 0, None)
+        grouped = g.rows.filter(F.col("_side") == 0)
+        p = idx.params
+        keys = similarity.banded_lsh_keys(
+            probes, p["bands"], p["n_planes"], p["seed"], p["vec_col"],
+            p["id_col"], p["dim"]).select("band", "bucket").distinct()
+        brute = get_backend().read(idx.spark, f"{idx.name}_buckets") \
+            .join(keys, ["band", "bucket"])
+        return tuple(sorted(tuple(r) for r in df.select(
+            "band", "bucket", "id").collect()) for df in (grouped, brute))
+    return run
+
+
 def _sweep_stale_warehouse(spark):
     """Make the suite immune to killed predecessors: every test table
     lives under the warehouse (the index tables in the versioned root

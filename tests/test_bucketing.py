@@ -1,7 +1,8 @@
-"""Storage-layout tests: catalog-bucketed joins must plan WITHOUT a
-shuffle on the bucketed sides, and written ANN indexes must prune
-partitions at the scan.  These assert the PLAN (the scale property), not just the
-result values."""
+"""Vector-index tests: the written IVF index prunes partitions at the
+scan, ``EmbeddingIndex``'s top-k probes equal the on-the-fly
+``knn_join`` while reading only the buckets the probes touch, and
+SemDeDup runs over the IVF layout.  The IVF tests assert the PLAN (the
+scale property), not just the result values."""
 
 from __future__ import annotations
 
@@ -10,21 +11,17 @@ from pyspark.sql import functions as F
 
 from dlx_spark import tableio
 from dlx_spark.operators import bucketing, similarity
-
-
-@pytest.fixture(scope="module")
-def warehouse(spark, tmp_path_factory):
-    # saveAsTable needs a writable warehouse; the session fixture already
-    # set one up under the test run's tmp dir via derby defaults
-    return spark
+from dlx_spark.operators.dedup_index import EmbeddingIndex
 
 
 @pytest.fixture(autouse=True)
 def _drop_ann_tables(spark):
     yield
-    for t in ("t_lsh_idx", "t_lsh_idx_b", "t_ivf_idx",
-              "t_lsh_single", "t_lsh_banded"):
-        tableio.get_backend().drop(spark, t)
+    be = tableio.get_backend()
+    be.drop(spark, "t_ivf_idx")
+    for name in ("t_emb_idx", "t_emb_single", "t_emb_banded"):
+        for sfx in ("_vecs", "_buckets", "_meta"):
+            be.drop(spark, name + sfx)
 
 
 def _exchanges(df) -> int:
@@ -57,57 +54,61 @@ def _vectors(spark):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
-def test_lsh_index_prunes_partitions_and_matches_exact(spark, tmp_path):
+def test_embedding_index_topk_matches_exact(spark):
+    """The single-query probe: near-exact top-k on clustered data, and
+    an indexed copy of the query ranks first (a query has no id, so no
+    self-match filter applies)."""
     vecs = _vectors(spark)
-    path = "t_lsh_idx"
-    bucketing.write_lsh_index(vecs, path, n_planes=6, dim=8)
+    idx = EmbeddingIndex.create(vecs, "t_emb_idx", n_planes=6)
     qvec = [r["embedding"] for r in vecs.filter(F.col("vec_id") == 0).collect()][0]
 
-    probed = bucketing.probe_lsh_index(spark, path, qvec, k=5, n_planes=6,
-                                       multiprobe_hamming=1)
-    # partition pruning: the scan's partition filters mention bucket
-    plan = probed._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [bucket" in plan.replace("\n", " ") or \
-           "bucket#" in plan.split("PartitionFilters")[1][:200]
-    got = [r["id"] for r in probed.collect()]
+    got = idx.topk(qvec, k=5, multiprobe_hamming=1).collect()
+    assert got[0]["id"] == 0 and got[0]["cosine"] == pytest.approx(1.0)
+    assert [r["cosine"] for r in got] == sorted(
+        (r["cosine"] for r in got), reverse=True)
     exact = [r["id"] for r in similarity.cosine_topk(vecs, qvec, k=5).collect()]
-    assert len(set(got) & set(exact)) >= 4   # clustered data: near-exact
+    assert len({r["id"] for r in got} & set(exact)) >= 4   # near-exact
+    with pytest.raises(ValueError, match="dimensions"):
+        idx.topk(qvec[:4])
 
 
-@pytest.mark.slow
-def test_knn_join_lsh_index_matches_onthefly_and_prunes(spark, tmp_path):
-    """Batch probe against the written index must equal the on-the-fly
-    knn_join at hamming 0 (same planes), and its scan must be pruned by
-    dynamic partition pruning from the broadcast probe side."""
+def test_embedding_index_knn_matches_onthefly_and_prunes(spark,
+                                                         touched_buckets):
+    """Batch probe against the index equals the on-the-fly knn_join at
+    hamming 0 (same planes and seed) for fresh probes and for re-probed
+    indexed rows (no row ranks as its own neighbor), and its band
+    grouping reads exactly the key rows of the buckets the probes
+    touch."""
     vecs = _vectors(spark)
-    path = "t_lsh_idx_b"
-    bucketing.write_lsh_index(vecs, path, n_planes=6, dim=8)
+    idx = EmbeddingIndex.create(vecs, "t_emb_idx", n_planes=6)
 
     probes = vecs.filter(F.col("vec_id") % 10 == 0).select(
         (F.col("vec_id") + 1000).alias("vec_id"), "embedding")
+    for batch in (probes, vecs.filter(F.col("vec_id") % 10 == 0)):
+        got = idx.knn(batch, k=3)
+        want = similarity.knn_join(batch, vecs, k=3, n_planes=6, dim=8)
+        g = {(r["probe_id"], r["corpus_id"], r["rank"]) for r in got.collect()}
+        w = {(r["probe_id"], r["corpus_id"], r["rank"])
+             for r in want.collect()}
+        assert g == w and len(g) > 0
 
-    got = bucketing.knn_join_lsh_index(
-        spark, path, probes, k=3, n_planes=6, multiprobe_hamming=0, dim=8)
-    want = similarity.knn_join(probes, vecs, k=3, n_planes=6, dim=8)
-    g = {(r["probe_id"], r["corpus_id"], r["rank"]) for r in got.collect()}
-    w = {(r["probe_id"], r["corpus_id"], r["rank"]) for r in want.collect()}
-    assert g == w and len(g) > 0
-
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower(), plan[:2000]
+    # one cluster's probes (all ten touch every occupied bucket)
+    grouped, brute = touched_buckets(idx, probes.filter(F.col("vec_id") < 1025))
+    assert grouped == brute
+    assert 0 < len(brute) < vecs.count()
 
     # multiprobe recall: hamming-1 probe must contain the exact best
     # neighbor for most probes (clustered data)
-    got1 = bucketing.knn_join_lsh_index(
-        spark, path, probes, k=3, n_planes=6, multiprobe_hamming=1, dim=8)
+    got1 = idx.knn(probes, k=3, multiprobe_hamming=1).collect()
+    corpus = vecs.collect()       # unit vectors: the dot is the cosine
     hits = 0
     probes_rows = probes.collect()
     for r in probes_rows:
-        exact = [x["id"] for x in similarity.cosine_topk(
-            vecs, r["embedding"], k=1).collect()]
-        mine = [x["corpus_id"] for x in got1.filter(
-            F.col("probe_id") == r["vec_id"]).collect()]
-        hits += int(exact[0] in mine)
+        exact = max(corpus, key=lambda c: (
+            sum(a * b for a, b in zip(r["embedding"], c["embedding"])),
+            -c["vec_id"]))["vec_id"]
+        mine = [x["corpus_id"] for x in got1 if x["probe_id"] == r["vec_id"]]
+        hits += int(exact in mine)
     assert hits >= len(probes_rows) - 1
 
 
@@ -126,12 +127,10 @@ def test_ivf_index_prunes_partitions_and_matches_exact(spark, tmp_path):
     assert len(set(got) & set(exact)) >= 4
 
 
-@pytest.mark.slow
-def test_banded_lsh_index_layout_and_recall(spark, tmp_path):
-    """Banded persisted LSH index (LSH-forest layout): each vector is
-    stored once per band, probes OR one pruned (band, bucket) partition
-    per band, and banded recall on the diffuse-twin fixture beats the
-    single-band layout at the same planes-per-band."""
+def test_banded_embedding_index_layout_and_recall(spark):
+    """Banded EmbeddingIndex: each vector is stored once and keyed once
+    per band, probes OR one bucket per band, and banded recall on the
+    diffuse-twin fixture beats a single band of the same planes."""
     import math
     import random
 
@@ -157,40 +156,41 @@ def test_banded_lsh_index_layout_and_recall(spark, tmp_path):
         twins[2 * i] = 2 * i + 1
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    single = "t_lsh_single"
-    banded = "t_lsh_banded"
-    bucketing.write_lsh_index(vecs, single, n_planes=7, dim=dim)
-    bucketing.write_lsh_index(vecs, banded, n_planes=7, bands=4, dim=dim)
+    single = EmbeddingIndex.create(vecs, "t_emb_single", n_planes=7)
+    banded = EmbeddingIndex.create(vecs, "t_emb_banded", n_planes=7, bands=4)
 
-    # storage: one copy per band
-    n_single = tableio.get_backend().read(spark, single).count()
-    n_banded = tableio.get_backend().read(spark, banded).count()
-    assert n_single == 240 and n_banded == 4 * 240
+    # storage: vectors once, one key row per band
+    be = tableio.get_backend()
+    for name, keys in (("t_emb_single", 240), ("t_emb_banded", 4 * 240)):
+        assert be.read(spark, f"{name}_vecs").count() == 240
+        assert be.read(spark, f"{name}_buckets").count() == keys
 
-    # single-query probe finds the twin through SOME band
-    hits_s = hits_b = 0
-    probe_ids = [2 * i for i in range(0, 40)]
+    # an indexed copy of the probe ranks first, so k=2 finds the twin
+    # iff SOME band put it in a probed bucket
     by_id = dict(rows)
-    for pid in probe_ids:
-        q = by_id[pid]
-        got_s = {r["id"] for r in bucketing.probe_lsh_index(
-            spark, single, q, k=2, n_planes=7,
-            multiprobe_hamming=0).collect()}
-        got_b = {r["id"] for r in bucketing.probe_lsh_index(
-            spark, banded, q, k=2, n_planes=7, bands=4,
-            multiprobe_hamming=0).collect()}
-        hits_s += int(twins[pid] in got_s)
-        hits_b += int(twins[pid] in got_b)
+    pids = range(0, 80, 2)
+    probes = spark.createDataFrame(
+        [(pid + 10_000, by_id[pid]) for pid in pids],
+        "vec_id long, embedding array<double>")
+    found = {idx: {(r["probe_id"] - 10_000, r["corpus_id"])
+                   for r in idx.knn(probes, k=2).collect()}
+             for idx in (single, banded)}
+    hits_s, hits_b = (sum((pid, twins[pid]) in found[idx] for pid in pids)
+                      for idx in (single, banded))
     assert hits_b > hits_s            # banding buys recall
-    assert hits_b >= 0.6 * len(probe_ids)
+    assert hits_b >= 0.6 * len(pids)
+    # the single-query form ranks the same candidates
+    assert {r["id"] for r in banded.topk(by_id[0], k=2).collect()} \
+        == {c for p, c in found[banded] if p == 0}
+    # the two recall levers are exclusive: bands refuse multiprobe
+    with pytest.raises(ValueError, match="multiprobe"):
+        banded.knn(probes, multiprobe_hamming=1)
 
-    # batch probe against the banded layout: candidates deduped across
+    # batch probe against the banded index: candidates deduped across
     # bands (one rank row per (probe, corpus) pair), every probe answered
     probes = vecs.filter(F.col("vec_id") % 2 == 0).limit(20).select(
         (F.col("vec_id") + 10_000).alias("vec_id"), "embedding")
-    got = bucketing.knn_join_lsh_index(
-        spark, banded, probes, k=3, n_planes=7, bands=4,
-        multiprobe_hamming=0, dim=dim).collect()
+    got = banded.knn(probes, k=3).collect()
     per_probe = {}
     for r in got:
         per_probe.setdefault(r["probe_id"], []).append(r["corpus_id"])
@@ -200,7 +200,7 @@ def test_banded_lsh_index_layout_and_recall(spark, tmp_path):
 
 @pytest.mark.slow
 def test_ann_index_ops_route_through_backend_seam(spark):
-    """Round-6 port: every LSH/IVF index operation must go through the
+    """Round-6 port: every IVF index operation must go through the
     tableio backend (no direct path I/O, no bespoke swap protocol), so
     a transactional backend upgrades them without touching call sites —
     the same recording-backend pin the dedup indexes have."""
@@ -238,9 +238,6 @@ def test_ann_index_ops_route_through_backend_seam(spark):
     rec = Recording()
     tableio.set_backend(rec)
     try:
-        bucketing.write_lsh_index(df, "t_seam_lsh", n_planes=5, dim=8)
-        bucketing.probe_lsh_index(spark, "t_seam_lsh", rows[0][1], k=3,
-                                  n_planes=5).collect()
         cents = similarity.ivf_centroids(df, n_centroids=3, seed=11)
         bucketing.write_ivf_index(df.limit(20), "t_seam_ivf", cents)
         bucketing.append_ivf_index(df, "t_seam_ivf", cents)
@@ -252,17 +249,14 @@ def test_ann_index_ops_route_through_backend_seam(spark):
         assert ops >= {"write", "append", "read", "rewrite"}
         # the refresh publishes conflict-checked, through the seam
         assert ("rewrite", "t_seam_ivf", 0, True) in rec.calls
-        assert ("write", "t_seam_lsh", ("band", "bucket")) in rec.calls
         assert ("write", "t_seam_ivf", ("list_id",)) in rec.calls
         assert ("append", "t_seam_ivf", ("list_id",)) in rec.calls
         # path-spelled names are refused with a migration pointer
         with pytest.raises(ValueError, match="tableio"):
-            bucketing.write_lsh_index(df, "/tmp/not/a/table", n_planes=5,
-                                      dim=8)
+            bucketing.write_ivf_index(df, "/tmp/not/a/table", cents)
     finally:
         tableio.set_backend(prev)
-        for t in ("t_seam_lsh", "t_seam_ivf"):
-            rec.drop(spark, t)
+        rec.drop(spark, "t_seam_ivf")
 
 
 def test_semdedup_index_equals_onthefly_and_prunes_at_probe(spark):
@@ -337,3 +331,29 @@ def test_semdedup_append_online_ingest(spark):
         assert batch_mode == [11, 13]
     finally:
         tableio.get_backend().drop(spark, name)
+
+
+def test_semdedup_append_releases_cache_when_append_fails(spark, monkeypatch):
+    """A micro-batch whose append raises (a lost commit race) leaves no
+    cached relation behind: the per-batch assignment cache is released
+    on every exit, not only on success."""
+    vecs = _vectors(spark)
+    name = "t_semdedup_fail"
+    cents = similarity.ivf_centroids(vecs, n_centroids=4, seed=7)
+    be = tableio.get_backend()
+    bucketing.write_ivf_index(vecs.filter(F.col("vec_id") < 50), name, cents)
+    cached = spark._jsparkSession.sharedState().cacheManager().cachedData
+    try:
+        before = cached().size()
+
+        def lost_race(*args, **kwargs):
+            raise tableio.ConcurrentWriteError("lost the commit race")
+
+        monkeypatch.setattr(be, "append", lost_race)
+        with pytest.raises(tableio.ConcurrentWriteError):
+            bucketing.semdedup_append(
+                spark, name, vecs.filter(F.col("vec_id") >= 50), cents)
+        assert cached().size() <= before
+    finally:
+        monkeypatch.undo()
+        be.drop(spark, name)

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dlx_spark.operators import dedup, multimodal, similarity, textstats
+from dlx_spark.operators.dedup_index import EmbeddingIndex
 
 
 @pytest.fixture(scope="module")
@@ -95,6 +96,24 @@ def test_lsh_topk_contains_exact_best(spark, vectors):
                               n_planes=4, multiprobe_hamming=2)
     ids = [r.id for r in out.collect()]
     assert ids[0] == 0
+
+
+@pytest.mark.parametrize("call", [
+    lambda df: similarity.banded_lsh_keys(df, 2, 4, 42),
+    lambda df: similarity.lsh_buckets(df),
+    lambda df: similarity.cosine_near_duplicates(df),
+    lambda df: similarity.knn_join(df, df),
+    lambda df: EmbeddingIndex.create(df, "t_dim_emb"),
+], ids=["banded_lsh_keys", "lsh_buckets", "cosine_near_duplicates",
+        "knn_join", "EmbeddingIndex.create"])
+@pytest.mark.parametrize("rows", [[], [(1, None), (2, [1.0, 0.0])]],
+                         ids=["empty", "null_first"])
+def test_dim_inference_raises_value_error(spark, call, rows):
+    """Without ``dim``, a frame whose first vector cannot be read is a
+    clear ValueError asking for ``dim`` at every inferring site."""
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="pass dim"):
+        call(df)
 
 
 def test_ivf_topk(spark, vectors):

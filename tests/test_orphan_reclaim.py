@@ -104,18 +104,14 @@ def test_index_create_reclaims_orphans(spark, docs, vecs, family, suffixes):
             be.drop(spark, name + sfx)
 
 
-def test_lsh_and_ivf_create_reclaim_orphans(spark, vecs):
+def test_ivf_create_reclaims_orphans(spark, vecs):
     be = tableio.get_backend()
-    for name in ("t_orph_lsh", "t_orph_ivf"):
-        _plant_orphan(spark, be, name)
+    _plant_orphan(spark, be, "t_orph_ivf")
     try:
-        bucketing.write_lsh_index(vecs, "t_orph_lsh", n_planes=4)
-        assert be.read(spark, "t_orph_lsh").count() == 40
         centroids = np.array([[1.0] * 8, [5.0] * 8, [9.0] * 8])
         bucketing.write_ivf_index(vecs, "t_orph_ivf", centroids)
         assert be.read(spark, "t_orph_ivf").count() == 40
     finally:
-        be.drop(spark, "t_orph_lsh")
         be.drop(spark, "t_orph_ivf")
 
 

@@ -412,61 +412,8 @@ def test_table_backend_seam_routes_every_index_operation(spark):
 
 
 # ---------------------------------------------------------------------------
-# Self-review fixes: banded probe defaults, legacy layouts
+# Self-review fixes: legacy layouts
 # ---------------------------------------------------------------------------
-
-def test_banded_probe_defaults_do_not_conflict(spark, tmp_path):
-    """bands>1 with the DEFAULT multiprobe argument must work (the
-    single-band convenience default resolves to 0 for banded layouts
-    instead of raising)."""
-    import numpy as np
-    from dlx_spark.operators import bucketing
-
-    rng = np.random.RandomState(5)
-    rows = [(i, rng.standard_normal(8).tolist()) for i in range(40)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    path = "t_r6_banded_defaults"
-    bucketing.write_lsh_index(df, path, n_planes=5, bands=3, dim=8)
-    q = rows[0][1]
-    got = bucketing.probe_lsh_index(spark, path, q, k=3, n_planes=5,
-                                    bands=3).collect()
-    assert rows[0][0] in {r["id"] for r in got}
-    probes = df.limit(5)
-    got2 = bucketing.knn_join_lsh_index(spark, path, probes, k=2,
-                                        n_planes=5, bands=3, dim=8)
-    assert got2.count() > 0
-    # explicit multiprobe with bands>1 still refuses
-    with pytest.raises(ValueError):
-        bucketing.probe_lsh_index(spark, path, q, bands=3,
-                                  multiprobe_hamming=1)
-    _be().drop(spark, path)
-
-
-def test_legacy_single_band_lsh_index_still_probes(spark, tmp_path):
-    """Indexes written by the pre-banding layout (no band column,
-    partitioned by bucket only) keep working through both probes, and
-    a banded probe against them raises a clear error."""
-    import numpy as np
-    from dlx_spark.operators import bucketing, similarity
-
-    rng = np.random.RandomState(6)
-    rows = [(i, rng.standard_normal(8).tolist()) for i in range(40)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    path = "t_r6_legacy_lsh"
-    # the OLD layout: (id, bucket, vec) partitioned by bucket, no band
-    _be().write(similarity.lsh_buckets(df, n_planes=5, dim=8),
-                path, partition_cols=["bucket"])
-
-    q = rows[0][1]
-    got = bucketing.probe_lsh_index(spark, path, q, k=3, n_planes=5).collect()
-    assert rows[0][0] in {r["id"] for r in got}
-    got2 = bucketing.knn_join_lsh_index(spark, path, df.limit(5), k=2,
-                                        n_planes=5, dim=8)
-    assert got2.count() > 0
-    with pytest.raises(ValueError):
-        bucketing.probe_lsh_index(spark, path, q, n_planes=5, bands=2)
-    _be().drop(spark, path)
-
 
 def test_embedding_index_legacy_layout_raises_clearly(spark):
     """Opening an EmbeddingIndex whose tables predate the two-table

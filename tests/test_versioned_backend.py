@@ -796,22 +796,21 @@ def test_auto_compact_crash_between_stage_and_swap_loses_no_data(
         == [0, 1, 2, 3]
 
 
-@pytest.mark.slow
-def test_multisegment_ann_probes_never_full_scan(spark, be):
-    """Executed-plan pins for the ANN layouts on a ≥3-segment versioned
-    index (the round-7 verdict's ask — PLANS.md's prose claims, now
-    assertions that FAIL on a regression to a full-index scan):
+def test_multisegment_ann_probes_never_full_scan(spark, be, touched_buckets):
+    """Pruning pins for the ANN indexes on a ≥3-segment versioned
+    index, assertions that FAIL on a regression to a full-index scan:
 
     - IVF probe (literal nprobe filter): every per-segment scan carries
       a non-empty list_id PartitionFilter — one pruned scan per
       segment, zero unfiltered branches;
-    - LSH knn_join (dynamic probe-side keys): runtime dynamic partition
-      pruning survives the versioned union-of-segments scan, and no
-      branch scans unfiltered.
+    - EmbeddingIndex knn (dynamic probe-side keys) over a 3-segment
+      index: the band grouping reads exactly the key rows of the
+      buckets the probes touch, and the appended rows are probeable.
     """
     import numpy as np
 
     from dlx_spark.operators import bucketing, similarity
+    from dlx_spark.operators.dedup_index import EmbeddingIndex
 
     rng = np.random.RandomState(17)
     rows = [(i, rng.standard_normal(8).tolist()) for i in range(60)]
@@ -839,23 +838,19 @@ def test_multisegment_ann_probes_never_full_scan(spark, be):
         for section in plan.split("PartitionFilters: [")[1:]:
             assert "list_id" in section[:200], section[:300]
 
-        # ---- LSH: 1 write + 2 appends = 3 segments, dynamic probe keys
-        bucketing.write_lsh_index(df.limit(20), "t_ms_lsh",
-                                  n_planes=6, dim=8)
+        # ---- EmbeddingIndex: create + 2 appends = 3 segments per table
+        idx = EmbeddingIndex.create(df.limit(20), "t_ms_emb", n_planes=6)
         for j in range(2):
-            bucketing.append_lsh_index(
-                df.withColumn("vec_id", F.col("vec_id") + (j + 1) * 1000),
-                "t_ms_lsh", n_planes=6, dim=8)
-        assert len(be.snapshot_token(spark, "t_ms_lsh")) == 3
+            idx.append(df.withColumn("vec_id",
+                                     F.col("vec_id") + (j + 1) * 1000))
+        assert len(be.snapshot_token(spark, "t_ms_emb_vecs")) == 3
+        assert len(be.snapshot_token(spark, "t_ms_emb_buckets")) == 3
         probes = df.filter(F.col("vec_id") % 10 == 0).select(
             (F.col("vec_id") + 9000).alias("vec_id"), "embedding")
-        got = bucketing.knn_join_lsh_index(
-            spark, "t_ms_lsh", probes, k=3, n_planes=6,
-            multiprobe_hamming=0, dim=8)
-        got.collect()
-        plan2 = got._jdf.queryExecution().executedPlan().toString()
-        assert "dynamicpruning" in plan2.lower(), plan2[:1500]
-        assert "PartitionFilters: []" not in plan2
+        got = idx.knn(probes, k=3)
+        grouped, brute = touched_buckets(idx, probes)
+        assert grouped == brute
+        assert 0 < len(brute) < be.read(spark, "t_ms_emb_buckets").count()
         # appended rows are probeable (same seeded hyperplane family):
         # compare against on-the-fly knn over the SAME corpus the index
         # holds — limit(20) of the write + the two appended replicas

@@ -72,14 +72,13 @@ def _incremental_plans(spark, sf_dir: str) -> list[str]:
     """Plans of the incremental-index probes (round-3 scale layer):
     built against throwaway indexes on the sf documents/embeddings so
     the dossier shows the probe-side shapes (no corpus-text scan, batch
-    band keys broadcast, digest anti-join, DPP at the ANN index scan)."""
+    band keys broadcast, digest anti-join, the embedding top-k)."""
     import re
     import tempfile
 
     from pyspark.sql import functions as F
 
     from dlx_spark import plans
-    from dlx_spark.operators import bucketing
     from dlx_spark.operators.dedup_index import (DigestIndex, EmbeddingIndex,
                                                  MinHashIndex)
 
@@ -126,17 +125,16 @@ def _incremental_plans(spark, sf_dir: str) -> list[str]:
                 "corpus text absent from every scan")
             add("digest_index_filter_new", dg.filter_new(batch),
                 "anti-join against the digest table bucketed by digest")
-            bucketing.write_lsh_index(emb, "plans_lsh", n_planes=6, dim=dim)
+            ei = EmbeddingIndex.create(emb, "plans_knn", n_planes=6, dim=dim)
             probes = emb.filter(F.col("vec_id") % 100 == 0).select(
                 (F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding")
-            # hamming 0 keeps the probe's bucket set a small fraction of
-            # the index — the regime where Spark's cost-based dynamic
-            # partition pruning engages (wider multiprobes cover most
-            # buckets and the planner correctly skips DPP)
-            add("knn_join_lsh_index", bucketing.knn_join_lsh_index(
-                spark, "plans_lsh", probes, k=5, n_planes=6,
-                multiprobe_hamming=0, dim=dim),
-                "index scan pruned at runtime from the broadcast probe side")
+            try:
+                add("embedding_index_knn", ei.knn(probes, k=5),
+                    "candidates of the pinned band grouping broadcast; "
+                    "the vector table streams map-side against them; "
+                    "per-probe rank window")
+            finally:
+                ei.drop()
             ei = EmbeddingIndex.create(emb.filter(F.col("vec_id") % 2 == 0),
                                        "plans_emb", n_planes=6, dim=dim)
             try:
@@ -158,7 +156,6 @@ def _incremental_plans(spark, sf_dir: str) -> list[str]:
         finally:
             mh.drop()
             dg.drop()
-            spark.sql("DROP TABLE IF EXISTS plans_lsh")
     return out
 
 
