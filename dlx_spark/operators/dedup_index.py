@@ -884,24 +884,21 @@ class EmbeddingIndex(_Index):
         return g.probe("cosine")
 
     def knn(self, probes: DataFrame, k: int = 5,
-            multiprobe_hamming: int = 0,
-            bucket_cap: int | None = BUCKET_CAP,
-            broadcast_row_cap: int | None = None) -> DataFrame:
+            multiprobe_hamming: int = 0) -> DataFrame:
         """(probe_id, corpus_id, cosine, rank): the ``k`` nearest indexed
         vectors of every probe row by exact cosine, among the band
-        grouping's candidates (no threshold), ranked per probe by
-        (cosine desc, corpus_id asc) — the schema and ranking of
+        grouping's candidates (no threshold, no bucket cap: every row of
+        a probed bucket is ranked), ranked per probe by (cosine desc,
+        corpus_id asc) — the schema and ranking of
         ``similarity.knn_join``, which it equals under the same
-        ``n_planes`` and seed at hamming 0 while no bucket is over
-        ``bucket_cap``.  An over-cap bucket contributes its chain
-        neighbors only.  As in ``knn_join``, an indexed row never
-        ranks as its own neighbor (``corpus_id == probe_id`` is
-        dropped), so re-probing indexed rows spends no slot on
-        themselves."""
-        _, g = self._grouping(probes, None, multiprobe_hamming, bucket_cap,
-                              broadcast_row_cap)
+        ``n_planes`` and seed at hamming 0.  As in ``knn_join``, an
+        indexed row never ranks as its own neighbor (``corpus_id ==
+        probe_id`` is dropped), so re-probing indexed rows spends no
+        slot on themselves."""
         w = Window.partitionBy("probe_id").orderBy(F.desc("cosine"),
                                                    F.asc("corpus_id"))
+        # uncapped: an over-cap bucket is ranked whole, not by its chain
+        _, g = self._grouping(probes, None, multiprobe_hamming, None)
         return (g.probe("cosine")
                 .filter(F.col("corpus_id") != F.col("batch_id"))
                 .select(F.col("batch_id").alias("probe_id"), "corpus_id",
@@ -921,7 +918,7 @@ class EmbeddingIndex(_Index):
                              f"{self.name!r} holds {p['dim']}")
         one = self.spark.createDataFrame(
             [(0, q)], f"`{p['id_col']}` long, `{p['vec_col']}` array<double>")
-        _, g = self._grouping(one, None, multiprobe_hamming, BUCKET_CAP)
+        _, g = self._grouping(one, None, multiprobe_hamming, None)
         return (g.probe("cosine").select(F.col("corpus_id").alias("id"),
                                          "cosine")
                 .orderBy(F.desc("cosine"), F.asc("id")).limit(k))

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from dlx_spark import tableio
 from dlx_spark.operators import bucketing, similarity
-from dlx_spark.operators.dedup_index import EmbeddingIndex
+from dlx_spark.operators.dedup_index import BUCKET_CAP, EmbeddingIndex
 
 
 @pytest.fixture(autouse=True)
@@ -19,7 +19,8 @@ def _drop_ann_tables(spark):
     yield
     be = tableio.get_backend()
     be.drop(spark, "t_ivf_idx")
-    for name in ("t_emb_idx", "t_emb_single", "t_emb_banded"):
+    for name in ("t_emb_idx", "t_emb_single", "t_emb_banded",
+                 "t_emb_overcap"):
         for sfx in ("_vecs", "_buckets", "_meta"):
             be.drop(spark, name + sfx)
 
@@ -110,6 +111,36 @@ def test_embedding_index_knn_matches_onthefly_and_prunes(spark,
         mine = [x["corpus_id"] for x in got1 if x["probe_id"] == r["vec_id"]]
         hits += int(exact in mine)
     assert hits >= len(probes_rows) - 1
+
+
+def test_embedding_index_ranks_an_over_cap_bucket_whole(spark):
+    """A probed bucket holding more than BUCKET_CAP indexed rows is
+    ranked whole, not by its ordering chain: knn equals the uncapped
+    on-the-fly knn_join, and topk agrees with it."""
+    import random
+
+    rnd = random.Random(5)
+    vec = lambda: [1.0] + [rnd.uniform(-0.01, 0.01) for _ in range(7)]
+    n = BUCKET_CAP + 200
+    corpus = spark.createDataFrame([(i, vec()) for i in range(n)],
+                                   "vec_id long, embedding array<double>")
+    probes = spark.createDataFrame([(100_000 + i, vec()) for i in range(8)],
+                                   "vec_id long, embedding array<double>")
+    idx = EmbeddingIndex.create(corpus, "t_emb_overcap", n_planes=2, dim=8)
+    largest = (tableio.get_backend().read(spark, "t_emb_overcap_buckets")
+               .groupBy("bucket").count().agg(F.max("count")).first()[0])
+    assert largest > BUCKET_CAP
+
+    got = {(r["probe_id"], r["corpus_id"], r["rank"])
+           for r in idx.knn(probes, k=3).collect()}
+    want = {(r["probe_id"], r["corpus_id"], r["rank"])
+            for r in similarity.knn_join(probes, corpus, k=3, n_planes=2,
+                                         dim=8).collect()}
+    assert got == want and len(got) == 8 * 3
+    q = probes.first()
+    top = [r["id"] for r in idx.topk(q["embedding"], k=3).collect()]
+    assert top == [c for _, c in sorted(
+        (rank, c) for p, c, rank in want if p == q["vec_id"])]
 
 
 def test_ivf_index_prunes_partitions_and_matches_exact(spark, tmp_path):

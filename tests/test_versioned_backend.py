@@ -797,15 +797,17 @@ def test_auto_compact_crash_between_stage_and_swap_loses_no_data(
 
 
 def test_multisegment_ann_probes_never_full_scan(spark, be, touched_buckets):
-    """Pruning pins for the ANN indexes on a ≥3-segment versioned
-    index, assertions that FAIL on a regression to a full-index scan:
+    """Scan pins for the ANN indexes on a ≥3-segment versioned index:
 
     - IVF probe (literal nprobe filter): every per-segment scan carries
       a non-empty list_id PartitionFilter — one pruned scan per
-      segment, zero unfiltered branches;
-    - EmbeddingIndex knn (dynamic probe-side keys) over a 3-segment
-      index: the band grouping reads exactly the key rows of the
-      buckets the probes touch, and the appended rows are probeable.
+      segment, zero unfiltered branches; FAILS on a regression to a
+      full-index scan;
+    - EmbeddingIndex knn over a 3-segment index: the band grouping
+      reads exactly the key rows of the buckets the probes touch, the
+      vector table streams map-side into a broadcast join against the
+      candidates (FAILS if it is shuffled or sort-merge joined), and
+      the appended rows are probeable.
     """
     import numpy as np
 
@@ -863,8 +865,65 @@ def test_multisegment_ann_probes_never_full_scan(spark, be, touched_buckets):
         w = {(r["probe_id"], r["corpus_id"], r["rank"])
              for r in want.collect()}
         assert g == w and len(g) > 0
+        # the vector table is read whole but never shuffled: each of its
+        # scans feeds the streamed side of a BroadcastHashJoin whose
+        # build side is the broadcast candidates, through row-wise
+        # operators only
+        joins = _scan_joins(got._jdf.queryExecution().executedPlan(),
+                            "t_ms_emb_vecs")
+        assert joins
+        for between, join, build in joins:
+            assert join == "BroadcastHashJoinExec", (join, between)
+            assert set(between) <= {"ProjectExec", "FilterExec",
+                                    "ColumnarToRowExec", "InputAdapter",
+                                    "WholeStageCodegenExec"}, between
+            assert build in ("BroadcastQueryStageExec",
+                             "BroadcastExchangeExec"), build
     finally:
         tableio.set_backend(prev)
+
+
+def _scan_joins(plan, table):
+    """``[(between, join, build)]`` for every file scan of ``table`` in
+    an executed plan (adaptive stages unwrapped): the node names from
+    the scan up to its first join, that join's name, and the name of
+    the join's other child when the scan is on its streamed side
+    (``None`` when the scan is on its build side)."""
+    name = lambda n: n.getClass().getSimpleName()
+
+    def kids(n):
+        if name(n) == "AdaptiveSparkPlanExec":
+            return [n.executedPlan()]
+        if name(n).endswith("QueryStageExec"):
+            return [n.plan()]
+        ch = n.children()
+        return [ch.apply(i) for i in range(ch.size())]
+
+    def walk(n, path):
+        path = path + [n]
+        if name(n) == "FileSourceScanExec" and any(
+                f"/{table}-" in p for p in
+                n.relation().location().rootPaths().toString().split(", ")):
+            yield path
+        for c in kids(n):
+            yield from walk(c, path)
+
+    out = []
+    for path in walk(plan, []):
+        up = path[::-1]
+        j = next(i for i, n in enumerate(up) if name(n).endswith("JoinExec"))
+        join, child = up[j], up[j - 1]
+        build = None
+        if name(join) == "BroadcastHashJoinExec":
+            left = join.buildSide().toString() == "BuildLeft"
+            build_child, stream_child = ((join.left(), join.right()) if left
+                                         else (join.right(), join.left()))
+            while name(build_child) == "InputAdapter":
+                build_child = build_child.child()
+            if stream_child.equals(child):
+                build = name(build_child)
+        out.append(([name(n) for n in up[1:j]], name(join), build))
+    return out
 
 
 def test_rewrites_leave_no_side_table(spark, be):
