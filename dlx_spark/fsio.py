@@ -1,8 +1,9 @@
 """Marker/ledger I/O through the Hadoop FileSystem API.
 
-The engine's crash-safety protocols — the store's write-ahead bucket-swap
-markers (marc/store.py), the streaming commit ledger and intent markers,
-and the near-dedup sink's attempt/committed markers (streaming/) — need
+The engine's crash-safety protocols — the versioned backend's manifest
+logs (tableio_versioned.py), the streaming commit ledger and intent
+markers, and the near-dedup sink's attempt/committed markers
+(streaming/) — need
 a handful of tiny filesystem operations: touch a marker, atomically
 publish a small JSON file, list/glob/remove.  Routing them through
 ``org.apache.hadoop.fs.FileSystem`` (resolved per-path from the active
@@ -115,6 +116,15 @@ def mtime(spark: SparkSession, path: str) -> float:
     return fs.getFileStatus(_jpath(spark, path)).getModificationTime() / 1000.0
 
 
+def local_path(spark: SparkSession, path: str) -> str | None:
+    """``path`` as an absolute path of the driver's local filesystem,
+    or None when it lives on another filesystem."""
+    fs = _fs(spark, path)
+    if fs.getUri().getScheme() != "file":
+        return None
+    return fs.makeQualified(_jpath(spark, path)).toUri().getPath()
+
+
 def newest_mtime(spark: SparkSession, path: str) -> float:
     """Newest modification time (epoch seconds) among ``path`` and
     every FILE under it, recursively.  The honest age signal for a
@@ -129,11 +139,6 @@ def newest_mtime(spark: SparkSession, path: str) -> float:
         while it.hasNext():
             newest = max(newest, it.next().getModificationTime())
     return newest / 1000.0
-
-
-def is_dir(spark: SparkSession, path: str) -> bool:
-    fs, p = _fs(spark, path), _jpath(spark, path)
-    return fs.exists(p) and fs.getFileStatus(p).isDirectory()
 
 
 def mkdirs(spark: SparkSession, path: str) -> None:

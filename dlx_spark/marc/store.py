@@ -6,29 +6,23 @@ Layout under ``root``::
 
     _v/                     versioned backend (manifest-committed,
                             snapshot-isolated — tableio_versioned)
-      tables/bibs, auths         live records: merge-on-read, hive-
+      tables/marc           ONE manifest log for the store's table
+                            group, so every write is one commit:
+        bibs, auths              live records: merge-on-read, hive-
                                  partitioned by pt = _id % n_buckets
                                  (the modulus rides in the manifest
                                  ``extra`` and is REBUCKETABLE)
-      tables/{bibs,auths}_tokens persisted search index: merge-on-read,
+        {bibs,auths}_tokens      persisted search index: merge-on-read,
                                  partitioned by TAG (the engine's
                                  analog of the reference's per-tag
                                  ``_index_{tag}`` collections,
-                                 dlx/marc/query.py:112-148)
-      tables/{bib,auth}_history  append-only version log (one segment
+                                 dlx/marc/query.py:112-148); its
+                                 ``extra`` carries the heading flag
+        {bib,auth}_history       append-only version log (one segment
                                  per commit, folded by compaction)
+        {bib,auth}_deleted       deleted-records summary (optional)
+      tables/{bibs,auths}_idalloc  id counters, outside the group
     merge_log/              auth merge audit rows
-    _dirty_*.json           write-ahead markers bracketing each
-                            source-table commit and its derived-table
-                            (token index / deleted summary) refresh.
-                            Written BEFORE the source CAS, stamped
-                            ``committed`` right after it, removed by
-                            their OWNER once its own refresh lands;
-                            other writers settle a foreign marker only
-                            when its commit is provably covered
-                            (``committed`` + gap ⊆ derivation) or the
-                            in-flight grace expired — never on the mere
-                            presence of OTHER writers' segments
     stage_*/                scratch parquet for pipeline materialization
                             (no leading underscore: Spark treats
                             ``_``-prefixed paths as hidden)
@@ -45,16 +39,20 @@ and 4 thread families, dlx/marc/__init__.py:856-1234):
 3. audit stamps — ``created`` preserved from the previous version;
 4. derived columns (text/words, logical fields) recomputed for the
    touched records as one DataFrame job;
-5. history append — the full new doc becomes the next version (one
-   immutable segment, atomic manifest commit);
-6. merge-on-read upsert — the batch lands as ONE appended delta segment
-   plus tombstones; commit I/O is O(batch) regardless of store size
-   (the rewrite-the-bucket layout this replaces made a 1% batch cost
-   ~35% of a full rebuild at 1M records);
-7. token-index maintenance — the same O(batch) upsert against the
-   tag-partitioned token table, bracketed by a write-ahead dirty
-   marker so a crash between the two commits re-converges (replayed
-   lazily on the next search or store open);
+5. staging — the history rows (the full new doc becomes the next
+   version), the merge-on-read live delta (the batch as ONE delta
+   segment plus tombstones: commit I/O is O(batch) regardless of store
+   size — the rewrite-the-bucket layout this replaces made a 1% batch
+   cost ~35% of a full rebuild at 1M records), and, where a token index
+   or deleted summary exists, the batch's rows for it, each written as
+   an unpublished segment;
+6. one group commit publishes all of them, with the heading flags of an
+   auth heading change, as one version of the ``marc`` log — a crash
+   before it leaves every table as it was (as the reference's
+   ``Marc.commit`` maintains history and the ``_index_{tag}``
+   collections in one step);
+7. inline folds of any table the commit left at ``AUTO_COMPACT_AT``
+   segments;
 8. heading-change propagation — attached records are recommitted as one
    follow-up batch (cached linked values refresh; feedback-loop guarded
    by ``update_attached=False`` on the recursive call, mirroring the
@@ -73,6 +71,7 @@ from __future__ import annotations
 
 import warnings
 from datetime import datetime, timezone
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -279,9 +278,19 @@ class MarcStore:
     #: ``rebucket`` changes it in place as the store grows
     N_BUCKETS = 16
 
+    #: the backend table group of the store's tables (live, history,
+    #: token index, deleted summary): one manifest log, so every write
+    #: is one commit.  The ``*_idalloc`` counters stay outside it, so
+    #: id allocation never contends with commits.
+    GROUP = "marc"
+
+    #: the per-table logs earlier releases wrote under ``_v/tables``
+    _PRE_GROUP_TABLES = ("bibs", "auths", "bibs_tokens", "auths_tokens",
+                         "bib_history", "auth_history", "bib_deleted",
+                         "auth_deleted")
+
     def __init__(self, spark: SparkSession, root: str,
-                 n_buckets: int | None = None,
-                 marker_grace_seconds: float | None = None):
+                 n_buckets: int | None = None):
         self.spark = spark
         self.root = root
         import uuid as _uuid
@@ -290,26 +299,30 @@ class MarcStore:
         self._scratch = _uuid.uuid4().hex[:12]
         # heading-dimension broadcast gate memo (see headings_hint)
         self._headings_hint_memo: bool | None = None
-        if marker_grace_seconds is not None:
-            # deployment-tuned in-flight horizon (see the class attr's
-            # docstring): set it above the longest plausible commit for
-            # this store's batch sizes.  The ``committed`` marker rewrite
-            # refreshes the marker's mtime when the source CAS lands, so
-            # the horizon only needs to cover ONE phase (pre-CAS segment
-            # upload, or post-CAS refresh) — not the whole commit
-            self.MARKER_INFLIGHT_GRACE_SECONDS = float(marker_grace_seconds)
         self._auth_index: AuthIndex | None = None
         self._query_ctxs: dict = {}
         self._default_n_buckets = int(n_buckets or self.N_BUCKETS)
         self.backend = VersionedTableBackend(root=fsio.join(root, "_v"))
         self._mor: dict[str, MergeOnReadTable] = {}
         fsio.mkdirs(spark, root)
-        self._recover()
+        self.backend.check_format(
+            spark, list(self._PRE_GROUP_TABLES),
+            "Export the records with the release that wrote the store "
+            "and import them into a fresh root (scripts/marc_import.py); "
+            "derived tables rebuild with build_search_index / "
+            "build_deleted_summary.")
 
     # --- paths / raw IO -----------------------------------------------------
 
     def _path(self, name: str) -> str:
         return fsio.join(self.root, name)
+
+    def _t(self, name: str) -> str:
+        """Table ``name`` of the store's backend group."""
+        return f"{self.GROUP}/{name}"
+
+    def _history_name(self, record_type: str) -> str:
+        return self._t(f"{record_type}_history")
 
     def _live_name(self, record_type: str) -> str:
         return "bibs" if record_type == "bib" else "auths"
@@ -331,7 +344,7 @@ class MarcStore:
         return out
 
     def _live(self, record_type: str) -> MergeOnReadTable:
-        name = self._live_name(record_type)
+        name = self._t(self._live_name(record_type))
         if name not in self._mor:
             self._mor[name] = MergeOnReadTable(
                 self.backend, name, key="_id", partition_cols=["pt"],
@@ -339,7 +352,7 @@ class MarcStore:
         return self._mor[name]
 
     def _tokens(self, record_type: str) -> MergeOnReadTable:
-        name = self._tokens_name(record_type)
+        name = self._t(self._tokens_name(record_type))
         if name not in self._mor:
             # cluster by value_norm, not the key: the index's hot
             # filters are exact-value predicates on value_norm (scalar
@@ -386,7 +399,7 @@ class MarcStore:
         return self.table("auth")
 
     def history_df(self, record_type: str) -> DataFrame:
-        name = f"{record_type}_history"
+        name = self._history_name(record_type)
         if not self.backend.exists(self.spark, name):
             return self._empty(schemas.HISTORY)
         return self.backend.read(self.spark, name).drop("pt")
@@ -395,7 +408,7 @@ class MarcStore:
         """One record's history, pruned to its ``pt`` partition (the
         modulus is the HISTORY table's own, fixed at creation — live
         rebuckets never touch it)."""
-        name = f"{record_type}_history"
+        name = self._history_name(record_type)
         if not self.backend.exists(self.spark, name):
             return self._empty(schemas.HISTORY)
         manifest = self.backend.latest_manifest(self.spark, name)
@@ -615,151 +628,129 @@ class MarcStore:
     # ``_index_{tag}`` collections (dlx/marc/query.py:112-148): one
     # merge-on-read table per record type, hive-partitioned by TAG so a
     # fielded term (``245__a:...``) prunes to its tag's files at the
-    # listing level, maintained O(batch) on every commit/delete under a
-    # write-ahead dirty marker.  The marker brackets the live→token
-    # commit pair: it records the live table's segment list BEFORE the
-    # live commit, so replay can read back EXACTLY the crashed batch
-    # (the segments added since) and re-derive its token rows — O(batch)
-    # recovery, run lazily by the next search (_search_index_df) or
-    # store open (_recover).
+    # listing level, maintained O(batch) by every write in the same
+    # group commit as the live delta it indexes.  What a batch cannot
+    # refresh itself — records OTHER than the batch's that denormalize
+    # a heading it changed — is named by the token table's heading
+    # flag, a manifest ``extra`` field committed with the auth change
+    # and cleared by the commit that refreshes those records.
 
     def _tokens_name(self, record_type: str) -> str:
         return ("bibs" if record_type == "bib" else "auths") + "_tokens"
 
-    def _markers_for(self, name: str) -> list[str]:
-        return fsio.glob(
-            self.spark, fsio.join(self.root, f"_dirty_{name}*.json"))
+    #: the token tables' heading-staleness flag (a manifest ``extra``
+    #: key): the auth ids whose heading changed since the token rows of
+    #: the records linking to them were derived, or ``"full"``
+    STALE_HEADINGS = "stale_headings"
 
-    def _write_marker_for(self, name: str, payload: dict) -> str:
-        """Write a PER-COMMIT dirty marker (uuid-named) for derived
-        table ``name`` and return its path.  Per-commit files — not one
-        shared marker — because two drivers committing concurrently
-        must each bracket their own batch: with a single file, writer
-        A's successful clear would erase crashed writer B's pending
-        marker and the derived table would go silently stale.  Each
-        writer clears exactly the file it wrote; replay walks whatever
-        markers remain."""
-        import json as _json
-        import uuid as _uuid
-        path = fsio.join(
-            self.root, f"_dirty_{name}.{_uuid.uuid4().hex}.json")
-        fsio.write_text_atomic(self.spark, path, _json.dumps(payload))
-        return path
+    #: the heading flag names the CHANGED auth ids up to this many, so
+    #: the search-time refresh re-derives only the records linking to
+    #: them (O(batch + attached) — one xref semi-join on the token
+    #: table) instead of rebuilding the whole index.  Past the cap the
+    #: id list would bloat every manifest and the targeted refresh
+    #: approaches a rebuild anyway, so the flag degrades to ``full``.
+    HEADING_FLAG_MAX_XREFS = 10_000
 
-    def _clear_markers_for(self, name: str) -> None:
-        for m in self._markers_for(name):
-            fsio.remove(self.spark, m)
-
-    #: a write-ahead marker precedes its writer's live commit, so a
-    #: marker with NO source segments beyond its snapshot is ambiguous:
-    #: the writer may be mid-commit (segment upload in flight) or dead
-    #: before committing.  Younger than this horizon it is treated as
-    #: in-flight and kept; older, the writer is presumed dead and the
-    #: marker is garbage (nothing landed to index) — the same
-    #: retention-guard reasoning as the backend vacuum's
-    #: ``min_age_seconds``, and the same caveat: keep it comfortably
-    #: above the longest plausible commit.
-    MARKER_INFLIGHT_GRACE_SECONDS = 3600.0
-
-    def _marker_expired(self, marker: str) -> bool:
-        import time as _time
-        try:
-            return (_time.time() - fsio.mtime(self.spark, marker)
-                    > self.MARKER_INFLIGHT_GRACE_SECONDS)
-        except Exception:
-            return False
-
-    def _mark_marker_committed(self, marker: str) -> None:
-        """Stamp ``committed: true`` onto the owner's own marker right
-        after its source-table CAS lands.  This is the proof OTHER
-        writers' replays need before settling a foreign marker: without
-        it, a replay that merely observed new segments could be seeing
-        a DIFFERENT writer's commit while this marker's own batch is
-        still a segment-upload in flight — settling then would lose the
-        batch if the owner crashes between its CAS and its refresh.
-        The atomic rewrite also refreshes the marker's mtime, so the
-        in-flight grace horizon restarts at commit-land (a bulk commit
-        whose upload alone approaches the horizon is not expired out
-        from under its post-CAS refresh).  Best-effort: a failure here
-        only defers settlement of a crashed owner to grace expiry."""
-        import json as _json
-        try:
-            payload = _json.loads(fsio.read_text(self.spark, marker))
-            payload["committed"] = True
-            fsio.write_text_atomic(self.spark, marker,
-                                   _json.dumps(payload))
-        except Exception:      # pragma: no cover - fs-dependent
-            pass
-
-    @staticmethod
-    def _marker_payload_committed(payload: dict | None) -> bool:
-        return bool(payload and payload.get("committed"))
-
-    def _settleable_markers(self, marker_name: str) -> list[str]:
-        """The markers a derivation STARTING NOW will provably cover —
-        read this snapshot BEFORE constructing the rebuild's source
-        DataFrames, and remove exactly these paths (``_remove_markers``)
-        once the overwrite + tail fold land.  Settleable as of this
-        read:
-
-        - ``committed``-stamped: the owner's source CAS landed before
-          this read, hence before the derivation's manifest read — the
-          rebuild sees its batch.  A stamp that lands AFTER this
-          snapshot is deliberately ignored: the owner's segment may
-          postdate the derivation read, and removing its marker then
-          would lose the batch if the owner crashed before its own
-          refresh (the r11.2 hole: with a settle-time stamp check, a
-          commit landing between the tail fold's manifest read and the
-          marker scan was settled uncovered).
-        - TORN (unparseable JSON — the object-store mid-copy window):
-          the owner's atomic marker write RAISED, so it either never
-          reached its source CAS (the marker brackets nothing) or had
-          already committed before the tear (covered as above).  The
-          residual exposure is a transient torn READ of a healthy
-          in-flight write composed with that owner later crashing
-          between its CAS and its fold — accepted: keeping torn
-          markers would cost a wholesale rebuild on every read until
-          grace expiry.
-        - grace-EXPIRED: the owner is presumed dead; anything it landed
-          predates this read and the rebuild covers it.
-
-        An uncommitted, unexpired marker is kept even when segments
-        past its base are visible: those may all be OTHER writers'
-        commits while this marker's own batch is still a
-        segment-upload in flight (the r10 premature-settle hole)."""
-        import json as _json
-        out: list[str] = []
-        for marker in self._markers_for(marker_name):
-            payload = None
-            torn = False
-            try:
-                payload = _json.loads(fsio.read_text(self.spark, marker))
-            except (ValueError, TypeError):
-                torn = True
-            if torn or self._marker_payload_committed(payload) \
-                    or self._marker_expired(marker):
-                out.append(marker)
+    def _flagged(self, head: dict | None, add=(), covered=None) -> dict:
+        """Token-table metadata ``head`` with its heading flag updated:
+        the ids a refresh covered removed (``covered="full"``: all),
+        then ``add`` added (``full`` past the cap).  Flags other
+        writers added meanwhile survive: only auth commits add flags,
+        and every refresh publishes against an auths snapshot."""
+        out = dict(head or {})
+        flag = out.pop(self.STALE_HEADINGS, None)
+        if covered == "full":
+            flag = None
+        elif covered and isinstance(flag, list):
+            flag = sorted(set(flag) - set(covered)) or None
+        if add and flag != "full":
+            flag = sorted(set(flag or ()) | {int(i) for i in add})
+            if len(flag) > self.HEADING_FLAG_MAX_XREFS:
+                flag = "full"
+        if flag:
+            out[self.STALE_HEADINGS] = flag
         return out
 
-    def _remove_markers(self, markers: list[str]) -> None:
-        for marker in markers:
+    def _stage_flag(self, record_type: str, add=(), covered=None):
+        """The metadata-only change of a token table's heading flag."""
+        return self.backend.stage_extra(
+            self._tokens(record_type).table,
+            lambda head: self._flagged(head, add, covered), create=False)
+
+    def _token_sources(self, record_type: str) -> list[str]:
+        """The live tables a token table derives from: its own records,
+        and the auths whose headings it overlays."""
+        return sorted({self._live(record_type).table,
+                       self._live("auth").table})
+
+    def _snapshot(self, tables: list[str]) -> dict:
+        return {t: self.backend.snapshot_token(self.spark, t)
+                for t in tables}
+
+    #: how many times a derivation (index build, heading refresh)
+    #: folds the commits that raced it and publishes again
+    DERIVE_ATTEMPTS = 8
+
+    def _publish_against(self, snap: dict, staged: list, gap) -> None:
+        """Publish a derivation only against ``snap`` ({member: segment
+        list or None}), the snapshot of its sources, checked in the
+        commit.  On a raced commit ``gap(old, new)`` stages what the
+        commits between the snapshots add, and it publishes again."""
+        for _ in range(self.DERIVE_ATTEMPTS):
             try:
-                fsio.remove(self.spark, marker)
-            except OSError:    # pragma: no cover - fs-dependent
-                pass           # already settled by its owner / a replay
+                self.backend.publish(self.spark, staged + [
+                    self.backend.stage_check(t, segs)
+                    for t, segs in snap.items()])
+                return
+            except ConcurrentWriteError:
+                new = self._snapshot(list(snap))
+                if new == snap:
+                    raise       # a raced rewrite of the derived table
+                staged = staged + gap(snap, new)
+                snap = new
+        raise ConcurrentWriteError(
+            f"commits kept landing while deriving from {sorted(snap)} — "
+            f"re-run when the store is quieter")
 
-    def _dirty_markers(self, record_type: str) -> list[str]:
-        return self._markers_for(self._tokens_name(record_type))
+    def _token_delta(self, record_type: str, batch: DataFrame | None,
+                     removed_ids: DataFrame | None):
+        """The staged token delta of a batch: a tombstone per touched
+        record_id (stale and deleted rows die) plus fresh token rows."""
+        fresh, stones = None, removed_ids
+        if batch is not None:
+            fresh = mdf.subfield_token_rows(batch, record_type,
+                                            headings=self.headings(),
+                                            hint=self.headings_hint())
+            touched = batch.select(F.col("_id").alias("record_id"))
+            stones = touched if stones is None \
+                else stones.unionByName(touched)
+        return self._tokens(record_type).stage_upsert(
+            rows=fresh, tombstone_keys=stones)
 
-    def _has_dirty_marker(self, record_type: str) -> bool:
-        return bool(self._dirty_markers(record_type))
-
-    def _write_dirty_marker(self, record_type: str, payload: dict) -> str:
-        return self._write_marker_for(self._tokens_name(record_type),
-                                      payload)
-
-    def _clear_dirty_markers(self, record_type: str) -> None:
-        self._clear_markers_for(self._tokens_name(record_type))
+    def _token_gap(self, record_type: str, old: dict, new: dict) -> list:
+        """What the commits between snapshots ``old`` and ``new`` owe a
+        token derivation: their live batches' token deltas, and a flag
+        naming every auth they wrote (a superset of changed headings)."""
+        live, auth = self._live(record_type), self._live("auth")
+        out = []
+        if new[live.table] is not None:
+            batch = live.read_segments_since(self.spark,
+                                             old[live.table] or [])
+            if batch is not None:
+                alive = batch.filter(~F.col(_MOR_DELETED))
+                out.append(self._token_delta(
+                    record_type, alive.drop(_MOR_DELETED, "pt"),
+                    batch.select(F.col("_id").alias("record_id"))))
+        if new[auth.table] is not None \
+                and new[auth.table] != old[auth.table]:
+            written = auth.read_segments_since(self.spark,
+                                               old[auth.table] or [])
+            ids = [] if written is None else [
+                r["_id"] for r in written.select("_id").distinct()
+                .limit(self.HEADING_FLAG_MAX_XREFS + 1).collect()]
+            if ids:
+                out.append(self._stage_flag(record_type, add=ids))
+        return out
 
     def build_search_index(self, record_type: str) -> None:
         """Materialize the tokenized subfield view as a PERSISTED,
@@ -772,72 +763,27 @@ class MarcStore:
         tag-pruned parquet scan, and the stemming UDF leaves the QUERY
         plan entirely — across sessions, which is what matters at
         100 TB where a per-session rebuild would be hours.  Maintenance
-        afterwards is O(batch): each commit appends the batch's token
-        rows plus per-record tombstones (see ``_upsert``)."""
+        afterwards is O(batch): each write commits the batch's token
+        rows plus per-record tombstones (see ``_write``).  The rebuild
+        clears the heading flag and publishes against the live snapshot
+        it derived from, folding raced commits (``_publish_against``)."""
         live = self._live(record_type)
         if not live.exists(self.spark):
             return
-        # marker snapshot FIRST: only markers already settleable before
-        # the derivation's source reads are provably covered by it
-        # (see _settleable_markers — a stamp landing later may belong
-        # to a commit the derivation never saw)
-        settleable = self._settleable_markers(
-            self._tokens_name(record_type))
-        derived_from = live.segments(self.spark)
+        tokens = self._tokens(record_type)
+        snap = self._snapshot(self._token_sources(record_type))
+        token = tokens.segments(self.spark) \
+            if tokens.exists(self.spark) else None
         rows = mdf.subfield_token_rows(self.table(record_type), record_type,
                                        headings=self.headings(),
                                        hint=self.headings_hint())
-        self._tokens(record_type).overwrite(rows)
-        # fold the tail: commits that landed between the derivation
-        # read and this point are missing from the overwritten index,
-        # and their writers may have observed NO index when they
-        # re-checked after their own CAS (the build's overwrite had not
-        # landed yet) — without this fold their batches would be
-        # bridged only by their markers until the next replay.  A
-        # writer whose re-check DID see the index refreshes itself;
-        # double-folding is idempotent (latest-segment precedence).
-        self._fold_token_tail(record_type, derived_from)
-        self._remove_markers(settleable)
+        self._publish_against(
+            snap, [tokens.stage_overwrite(
+                rows, token,
+                extra_merge=lambda new, head: self._flagged(
+                    head, covered="full"))],
+            lambda old, new: self._token_gap(record_type, old, new))
         self._invalidate_query_contexts()
-
-    def _fold_token_tail(self, record_type: str,
-                         base_segments: list[str]) -> None:
-        """Upsert into the token index the live batches committed since
-        ``base_segments`` (tombstones for every touched id + fresh
-        token rows) — the build's read-race closer and the owner's
-        direct fold share this shape with marker replay."""
-        live = self._live(record_type)
-        if not live.exists(self.spark):
-            return
-        batch = live.read_segments_since(self.spark, base_segments)
-        if batch is None:
-            return
-        ids = batch.select(F.col("_id").alias("record_id")).distinct()
-        alive = batch.filter(~F.col(_MOR_DELETED)).drop(_MOR_DELETED, "pt")
-        fresh = mdf.subfield_token_rows(alive, record_type,
-                                        headings=self.headings(),
-                                        hint=self.headings_hint())
-        self._tokens(record_type).upsert(rows=fresh, tombstone_keys=ids)
-
-    def _refresh_tokens_for_batch(self, record_type: str,
-                                  new_df: DataFrame | None = None,
-                                  removed_ids: list[int] = ()) -> None:
-        """O(batch) index maintenance: tombstone every touched
-        record_id (so stale rows — and deleted records' rows — die) and
-        append the batch's freshly-derived token rows in ONE delta
-        segment."""
-        fresh = stones = None
-        if removed_ids:
-            stones = self.spark.createDataFrame(
-                [(int(i),) for i in removed_ids], "record_id long")
-        if new_df is not None:
-            fresh = mdf.subfield_token_rows(new_df, record_type,
-                                            headings=self.headings(),
-                                            hint=self.headings_hint())
-            touched = new_df.select(F.col("_id").alias("record_id")).distinct()
-            stones = touched if stones is None else stones.unionByName(touched)
-        if stones is not None:
-            self._tokens(record_type).upsert(rows=fresh, tombstone_keys=stones)
 
     #: affected-record sets up to this size are collected to the driver
     #: and pushed into the live scan as an ``_id IN (...)`` predicate
@@ -851,20 +797,19 @@ class MarcStore:
     def _refresh_tokens_for_xrefs(self, record_type: str,
                                   xrefs: list[int]) -> None:
         """Refresh the token rows of every record LINKING to the given
-        auth ids — the targeted repair for a heading change that did
-        not propagate.  The affected set comes from the token table's
-        own ``xref`` column (xrefs never change with heading VALUES, so
-        the stale rows still identify their records correctly — a
-        2-column pruned scan); the refresh re-derives those records
-        from live with CURRENT headings.  O(batch + attached): the
-        affected ids push into the live scan as an IN predicate with
-        pt-bucket pruning (key-sorted segments -> row-group skipping),
-        so the expensive nested datafields column is read only for the
-        attached records."""
+        auth ids — the targeted repair a heading flag asks for — and
+        clear those ids from the flag in the same commit.  The affected
+        set comes from the token table's own ``xref`` column (xrefs
+        never change with heading VALUES — a 2-column pruned scan);
+        those records re-derive from live with CURRENT headings, their
+        ids pushed into the live scan as an IN predicate with pt-bucket
+        pruning, so the nested datafields column is read only for the
+        attached records: O(batch + attached)."""
         tokens = self._tokens(record_type)
         live = self._live(record_type)
         if not tokens.exists(self.spark) or not live.exists(self.spark):
             return
+        snap = self._snapshot(self._token_sources(record_type))
         xdf = self.spark.createDataFrame(
             [(int(x),) for x in xrefs], "x long")
         affected = (tokens.read(self.spark)
@@ -874,140 +819,44 @@ class MarcStore:
                     .select(F.col("record_id").alias("_id")).distinct())
         cap = self.XREF_REPAIR_ISIN_MAX
         head = affected.limit(cap + 1).collect()
+        delta = None
         if len(head) <= cap:
             ids = sorted(int(r["_id"]) for r in head)
-            if not ids:
-                return
-            n = self.n_buckets(record_type)
-            raw = (self._raw(record_type)
-                   .filter(F.col("pt").isin(sorted({i % n for i in ids}))
-                           & F.col("_id").isin(ids))
-                   .drop("pt"))
-            batch = raw
-            stones = self.spark.createDataFrame(
-                [(i,) for i in ids], "record_id long")
+            if ids:
+                n = self.n_buckets(record_type)
+                batch = (self._raw(record_type)
+                         .filter(F.col("pt").isin(sorted({i % n for i in ids}))
+                                 & F.col("_id").isin(ids))
+                         .drop("pt"))
+                delta = self._token_delta(
+                    record_type, batch, self.spark.createDataFrame(
+                        [(i,) for i in ids], "record_id long"))
         else:
-            batch = self.table(record_type).join(affected, "_id",
-                                                 "leftsemi")
-            stones = affected.withColumnRenamed("_id", "record_id")
-        fresh = mdf.subfield_token_rows(batch, record_type,
-                                        headings=self.headings(),
-                                        hint=self.headings_hint())
-        tokens.upsert(rows=fresh, tombstone_keys=stones)
-
-    def _replay_dirty_marker(self, record_type: str) -> None:
-        """Re-converge the token index after a crash between a live
-        commit and its index commit.  Each surviving marker's
-        pre-commit segment snapshot identifies exactly the batch it
-        bracketed (the live segments added since), so replay re-derives
-        that batch's token rows — O(batch).  A heading-staleness marker
-        (``heading_xrefs``: the auth ids whose headings changed without
-        propagation) refreshes only the records LINKING to them — one
-        xref semi-join on the token table, O(batch + attached).  A
-        marker with neither (``full``: an over-cap heading change, or a
-        torn write) rebuilds the index wholesale from live — always
-        safe, and settles every other pending marker with it.
-        Idempotent: re-running appends a duplicate delta segment whose
-        rows win by precedence over the identical rows below them;
-        concurrent writers' segments caught inside a batch window are
-        re-derived from live, which is also idempotent."""
-        import json as _json
-        markers = self._dirty_markers(record_type)
-        if not markers:
-            return
-        tokens = self._tokens(record_type)
-        if not tokens.exists(self.spark):
-            # markers without an index bridge only an in-flight
-            # build_search_index (whose own tail fold covers the
-            # commits it raced) — sweep provably-dead ones, keep the
-            # rest for the build's settled-only clearing
-            for marker in markers:
-                if self._marker_expired(marker):
-                    fsio.remove(self.spark, marker)
-            return
-        batches: list[tuple[str, list, dict | None]] = []
-        targeted: list[tuple[str, list, dict]] = []
-        full = False
-        for marker in markers:
-            try:
-                payload = _json.loads(fsio.read_text(self.spark, marker))
-                base = payload.get("base_segments")
-                xrefs = payload.get("heading_xrefs")
-                if isinstance(base, list):
-                    batches.append((marker, base, payload))
-                elif isinstance(xrefs, list) and xrefs:
-                    targeted.append((marker, xrefs, payload))
-                else:
-                    full = True
-            except (ValueError, TypeError):
-                full = True
-        if full:
-            # rebuild from the source of truth (cross-type heading
-            # staleness has no per-batch identity: the affected rows
-            # are whatever links to the changed auths) — covers every
-            # batch whose commit the derivation saw, folds the tail it
-            # raced, and settles provably-covered markers
-            self.build_search_index(record_type)
-        else:
-            for marker, xrefs, payload in targeted:
-                # refresh exactly the records linking to the changed
-                # auths — same O(batch)-shaped upsert as a per-commit
-                # refresh, not an O(store) rebuild (the pre-r11 ``full``
-                # marker stalled the next innocent search for a whole
-                # rebuild at scale)
-                self._refresh_tokens_for_xrefs(record_type,
-                                               [int(x) for x in xrefs])
-                if self._marker_payload_committed(payload) \
-                        or self._marker_expired(marker):
-                    # same owner-aware settlement as batch markers: the
-                    # committed stamp follows the auth upsert, so a
-                    # refresh that saw the stamp derived from
-                    # post-commit headings; an uncommitted flag's auth
-                    # commit may still be in flight — keep it and
-                    # re-refresh once it lands (or expires)
-                    fsio.remove(self.spark, marker)
-            live = self._live(record_type)
-            for marker, base, payload in batches:
-                if live.exists(self.spark):
-                    # fold everything since the snapshot so the index
-                    # serves LANDED commits; idempotent (latest-segment
-                    # precedence), no-op when nothing landed
-                    self._fold_token_tail(record_type, base)
-                if self._marker_payload_committed(payload) \
-                        or self._marker_expired(marker):
-                    # settle only when the owner's commit provably
-                    # landed (its post-CAS ``committed`` stamp — the
-                    # fold above then covered it) or the owner is
-                    # presumed dead past the grace horizon.  New
-                    # segments alone are NOT proof: they may all be
-                    # OTHER writers' commits while this marker's own
-                    # batch is still a segment-upload in flight —
-                    # removing then would lose the batch if its owner
-                    # crashed right after its CAS (the owner's inline
-                    # replay would find no marker left to heal from)
-                    fsio.remove(self.spark, marker)
-                # else: the owner may be MID-commit (marker precedes
-                # its live CAS by up to a segment upload) — keep the
-                # marker; the owner settles it itself on success, or a
-                # later replay does once it is committed/expired
-        self._invalidate_query_contexts()
+            delta = self._token_delta(
+                record_type,
+                self.table(record_type).join(affected, "_id", "leftsemi"),
+                affected.withColumnRenamed("_id", "record_id"))
+        self._publish_against(
+            snap, [delta, self._stage_flag(record_type, covered=xrefs)],
+            lambda old, new: self._token_gap(record_type, old, new))
 
     def _search_index_df(self, record_type: str) -> DataFrame | None:
         tokens = self._tokens(record_type)
         if not tokens.exists(self.spark):
             return None
-        if self._has_dirty_marker(record_type):
-            # a pending marker means the persisted index may trail the
-            # live table (a crashed or failed refresh).  Replay it here
-            # — not just on store open — so the SAME in-process store
-            # never serves stale index results; if the replay itself
-            # fails, fall back to the derived per-session token view
-            # (correct, just slower) rather than serving wrong rows.
+        flag = tokens.meta(self.spark).get(self.STALE_HEADINGS)
+        if flag:
+            # refresh what the flag names before serving the index; on
+            # failure serve the derived view (slower, never wrong)
             try:
-                self._replay_dirty_marker(record_type)
+                if flag == "full":
+                    self.build_search_index(record_type)
+                else:
+                    self._refresh_tokens_for_xrefs(record_type, flag)
+                self._invalidate_query_contexts()
             except Exception as exc:       # pragma: no cover - env-dependent
                 warnings.warn(
-                    f"search index replay for {record_type} failed "
+                    f"search index refresh for {record_type} failed "
                     f"({exc}); serving tokenized view derived from live "
                     f"until it succeeds")
                 return None
@@ -1036,9 +885,9 @@ class MarcStore:
         keeps it from rolling back under raced compactions), so id
         assignment is O(1) metadata instead of a max over live ∪
         history — at 100 TB those are full column scans of the store
-        and its (larger) version log, paid per commit batch.  Stores
-        written before the hint fall back to the scan; their first
-        hinted commit starts the fast path."""
+        and its (larger) version log, paid per commit batch.  Only a
+        store with no live table yet scans (its history may hold
+        deletes of ids that never lived)."""
         live = self._live(record_type)
         if live.exists(self.spark):
             hint = live.meta(self.spark).get("max_id")
@@ -1110,10 +959,18 @@ class MarcStore:
                                update_attached=update_attached)
             return out
 
-        record_type = records[0].record_type
+        return self._commit_records(records, records[0].record_type, user,
+                                    now, auth_check, update_attached)
+
+    def _commit_records(self, records: list[Marc], record_type: str,
+                        user: str, now: datetime, auth_check: bool,
+                        update_attached: bool,
+                        history: DataFrame | None = None) -> list[int]:
+        """``commit`` of one record type; extra ``history`` rows (the
+        restore action) ride in the batch's commit."""
         try:
             return self._commit_batch(records, record_type, user, now,
-                                      auth_check, update_attached)
+                                      auth_check, update_attached, history)
         except Exception:
             # the memoized auth index is mutated in step with the commit;
             # a failed commit leaves it desynchronized — drop it
@@ -1122,7 +979,8 @@ class MarcStore:
             raise
 
     def _commit_batch(self, records: list[Marc], record_type: str, user: str,
-                      now: datetime, auth_check: bool, update_attached: bool) -> list[int]:
+                      now: datetime, auth_check: bool, update_attached: bool,
+                      history: DataFrame | None) -> list[int]:
         idx = self.auth_index()
         if record_type == "auth":
             # heading changes detected against the pre-commit state
@@ -1194,23 +1052,17 @@ class MarcStore:
                            if prev_headings.get(r.id) is not None
                            and prev_headings[r.id] != self._heading_signature(r)]
 
-        # 5. history, heading flags, live commit (the shared tail)
+        # 5. history, live delta, token rows, heading flags: one commit
         staged = self._stage(derived, f"stage_commit_{name}")
-        heading_markers = self._publish(
-            record_type, staged, prev_id_df, user, now, all_new=False,
-            small=True, batch_max=max(ids), changed_ids=changed_ids)
+        self._publish(record_type, staged, prev_id_df, user, now,
+                      all_new=False, small=True, batch_max=max(ids),
+                      changed_ids=changed_ids, history=history)
 
-        # 6. heading-change propagation (reference 1154-1232)
+        # 6. heading-change propagation (reference 1154-1232): its
+        # commits refresh the attached records and clear the flags the
+        # heading commit wrote
         if changed_ids and update_attached:
             self._propagate_heading_changes(changed_ids, user, now)
-            # propagation recommitted every attached record (both
-            # types), refreshing their token rows through its own
-            # per-commit marker dance (a failed refresh there leaves
-            # ITS marker) — the flags the tail wrote are superseded; a
-            # crash before this line costs one extra, safe, rebuild on
-            # replay
-            for m in heading_markers:
-                fsio.remove(self.spark, m)
         return ids
 
     #: the commit heads' scratch stages (suffixed by live table name)
@@ -1224,67 +1076,43 @@ class MarcStore:
     def _publish(self, record_type: str, staged: DataFrame,
                  prev_id_df: DataFrame, user: str, now: datetime, *,
                  all_new: bool, small: bool, batch_max: int,
-                 changed_ids: list[int]) -> list[str]:
-        """The publish tail both commit heads share: history append →
-        heading-staleness flags → live commit (``_upsert``: write-ahead
-        marker, geometry-checked CAS, token refresh) → flags stamped
-        committed.  The heads' scratch stages are removed on every
-        exit, success or failure.
+                 changed_ids: list[int], refreshed=(),
+                 history: DataFrame | None = None) -> None:
+        """The publish tail both commit heads share: the batch's
+        history rows (plus ``history``) and the batch itself land
+        through ``_write`` as one group commit.  The heads' scratch
+        stages are removed on every exit, success or failure.
 
         ``staged`` is the head's derived, staged batch; ``prev_id_df``
         (one ``record_id`` column) the ids that existed pre-commit;
         ``batch_max`` the batch's exact max id; ``changed_ids`` the
-        pre-existing auth ids whose heading the batch changes.  Returns
-        the heading flags written, so a caller that propagates the
-        change can remove the flags its propagation supersedes."""
+        pre-existing auth ids whose heading the batch changes;
+        ``refreshed`` the auth ids whose attached records the batch
+        re-derives (a propagation)."""
         try:
-            self._append_history_frame(record_type, staged, user, now,
+            hist = self._history_frame(record_type, staged, user, now,
                                        prev_id_df=prev_id_df,
                                        all_new=all_new, small=small)
-            # heading changes affect the token indexes through values
-            # they denormalize (bibs through 6xx/7xx links, auths
-            # through 5xx see-also links): flag both BEFORE the auth
-            # commit lands.  Without the flag the persisted index would
-            # keep old heading-overlaid values while the derived view
-            # overlays current ones.  The flag carries the changed ids,
-            # so replay refreshes only the ATTACHED records (one xref
-            # semi-join) instead of rebuilding the whole index
-            heading_markers: list[str] = []
-            if changed_ids:
-                payload = self._heading_marker_payload(changed_ids)
-                for rt2 in ("bib", "auth"):
-                    if self._tokens(rt2).exists(self.spark):
-                        heading_markers.append(self._write_dirty_marker(
-                            rt2, dict(payload)))
-            try:
-                self._upsert(record_type, staged, batch_max=batch_max)
-            finally:
-                # stamped committed whether or not the upsert raised:
-                # it MAY still have landed (e.g. the post-publish
-                # inline fold raised), so the flags cannot be
-                # dropped.  If it landed the staleness is real; if not,
-                # the replay's refresh derives from unchanged headings
-                # (a no-op) and settles the flag instead of
-                # re-refreshing on every search until grace expiry.  A
-                # rebuild racing the commit (derivation read before
-                # this point) leaves them for the next replay
-                for m in heading_markers:
-                    self._mark_marker_committed(m)
-            return heading_markers
+            if history is not None:
+                hist = hist.unionByName(history)
+            self._write(record_type, rows=staged, hist=hist,
+                        batch_max=batch_max, changed_ids=changed_ids,
+                        refreshed=refreshed)
         finally:
             self._unstage_commit_scratch(self._live_name(record_type))
 
     def commit_frame(self, df: DataFrame, record_type: str = "bib",
                      user: str = "admin", now: datetime | None = None,
                      auth_check: bool = True,
-                     prev_ids: DataFrame | None = None) -> int:
+                     prev_ids: DataFrame | None = None,
+                     _refreshed: list[int] = ()) -> int:
         """Bulk-ingest commit, the frame head of the store's one write
         protocol.  Id assignment, auth validation, audit stamps and
         derived columns (linked values resolved by a headings join) run
         as distributed jobs over a MARC-schema DataFrame — record rows
         never materialize on the driver — and then the publish tail
-        the record API's ``commit`` shares (``_publish``: history,
-        heading-staleness flags, the live commit, committed stamps,
+        the record API's ``commit`` shares (``_publish``: history, the
+        live delta, token rows and heading flags in one group commit,
         scratch cleanup) lands the batch.  This is the 100 TB path
         used by ``scripts/marc_import.py`` and the streaming ingest
         sink.  ``commit`` keeps its own driver-side head (validation
@@ -1308,6 +1136,8 @@ class MarcStore:
         when omitted it is derived from the live table.  A replaying
         caller (the streaming sink) passes the snapshot it took before
         its first attempt so a re-run stamps history identically.
+        ``_refreshed`` is propagation's: the changed auth ids whose
+        attached records this frame re-derives.
         """
         from pyspark.sql import Window
 
@@ -1452,7 +1282,7 @@ class MarcStore:
                 prev_id_df = self._prev_id_frame(staged, prev_source,
                                                  small=small)
             # commit_frame NEVER propagates heading changes (structural
-            # recursion guard), so the tail flags the token indexes an
+            # recursion guard), so the commit flags the token indexes an
             # auth frame's heading changes leave stale.  The diff is
             # O(batch): the staged frame joined to the pre-commit live
             # rows on _id, heading signatures compared
@@ -1469,23 +1299,15 @@ class MarcStore:
         try:
             self._publish(record_type, staged, prev_id_df, user, now,
                           all_new=all_new, small=small, batch_max=frame_max,
-                          changed_ids=changed_ids)
+                          changed_ids=changed_ids, refreshed=_refreshed)
         finally:
             if record_type == "auth":
                 self._invalidate_auth_index()
         return n_rows
 
-    #: heading-staleness markers carry the CHANGED auth ids up to this
-    #: many, so replay can refresh only the records linking to them
-    #: (O(batch + attached) — one xref semi-join on the token table)
-    #: instead of rebuilding the whole index.  Past the cap the id list
-    #: would bloat the marker file and the targeted refresh approaches
-    #: a rebuild anyway, so the marker degrades to ``full``.
-    HEADING_MARKER_MAX_XREFS = 10_000
-
     def _frame_changed_heading_ids(self, staged: DataFrame) -> list[int]:
         """The PRE-EXISTING auth ids whose heading (first 1xx field)
-        this frame changes, up to ``HEADING_MARKER_MAX_XREFS + 1`` of
+        this frame changes, up to ``HEADING_FLAG_MAX_XREFS + 1`` of
         them.  One O(batch) join: staged ids against the pre-commit
         live rows (a merge-on-read snapshot — still readable after the
         upsert), signatures compared as JSON of (tag, code, value)
@@ -1504,15 +1326,8 @@ class MarcStore:
         rows = (new.join(old, "_id")
                 .filter(~F.col("_h0").eqNullSafe(F.col("_h1")))
                 .select("_id")
-                .limit(self.HEADING_MARKER_MAX_XREFS + 1).collect())
+                .limit(self.HEADING_FLAG_MAX_XREFS + 1).collect())
         return [int(r["_id"]) for r in rows]
-
-    def _heading_marker_payload(self, changed_ids: list[int]) -> dict:
-        """Targeted when the changed set fits the marker cap, ``full``
-        otherwise (replay then rebuilds wholesale — always safe)."""
-        if 0 < len(changed_ids) <= self.HEADING_MARKER_MAX_XREFS:
-            return {"heading_xrefs": sorted(changed_ids)}
-        return {"full": True}
 
     @staticmethod
     def _heading_signature(rec: Marc | None):
@@ -1544,110 +1359,102 @@ class MarcStore:
             "pt", F.pmod(F.col(key),
                          F.lit(self.n_buckets(record_type))).cast("int"))
 
-    def _upsert(self, record_type: str, rows: DataFrame | None = None,
-                removed_ids: list[int] = (), *, batch_max: int) -> None:
-        """The one live-commit step: every write (both commit heads,
-        ``delete``, ``scripts/rebuild_derived.py``) reaches the live
-        table here.  ``rows`` replace their ids' records,
-        ``removed_ids`` are deleted as tombstones, and both land as ONE
-        appended merge-on-read delta segment — O(batch) I/O at any
-        store size (the Delta/Iceberg MERGE-on-read shape; the
-        backend's manifest CAS is the commit point).  ``batch_max`` is
-        the batch's exact max id, folded into the manifest's monotonic
-        ``max_id`` hint so the next commit's id assignment is O(1)
-        metadata instead of a live ∪ history scan (the hint never
-        decreases, so a tombstone-only batch passes 0).
-
-        When a persisted token index exists, its O(batch) refresh
-        follows under a write-ahead dirty marker recording the live
-        table's PRE-commit segment list: a crash between the two
-        commits replays exactly the batch (the segments added since) on
-        the next search or store open.  A refresh FAILURE after the
-        durable live commit does not fail the commit — the marker stays
-        and the index re-converges on replay ('committed, index
-        pending'), because callers observing an error for a commit that
-        actually persisted would retry and double-apply."""
-        live = self._live(record_type)
-        # the marker is UNCONDITIONAL (not just when an index exists):
-        # a build_search_index whose derivation read predates this
-        # commit's CAS but whose overwrite lands after the existence
-        # re-check below would otherwise miss this batch with nothing
-        # bridging it — the marker survives the build's settled-only
-        # clearing (its gap is not in the derivation) and the next
-        # replay folds the batch.  On a store with no index the owner
-        # removes it at the end of this method; steady state is zero
-        # marker files either way.
-        marker = self._write_dirty_marker(
-            record_type,
-            {"base_segments": (live.segments(self.spark)
-                               if live.exists(self.spark) else [])})
+    def _write(self, record_type: str, *, rows: DataFrame | None = None,
+               removed_ids: list[int] = (), hist: DataFrame | None = None,
+               batch_max: int, changed_ids=(), refreshed=()) -> None:
+        """The one store write (both commit heads, ``delete``,
+        ``restore``, ``scripts/rebuild_derived.py``): ONE version of
+        the store's table group holding ``hist`` (history rows, and
+        their deleted-summary rows when a summary exists), the live
+        delta (``rows`` replace their ids' records, ``removed_ids``
+        become tombstones — one merge-on-read segment, O(batch) at any
+        store size) with its token rows when a token index exists, and
+        the token indexes' heading flags (``changed_ids``: auth ids
+        whose heading the batch changes, added; ``refreshed``: auth
+        ids whose attached records the batch re-derives, cleared).  A
+        crash before the commit leaves every table as it was.
+        ``batch_max`` folds into the live manifest's monotonic
+        ``max_id`` hint (a tombstone-only batch passes 0).  A derived
+        table absent at staging is checked absent in the commit, so a
+        build racing the write either sees the batch or makes it
+        re-stage."""
+        hist_stage = summary_rows = None
+        if hist is not None:
+            hist_stage, summary_rows = self._stage_history(record_type, hist)
+        stones = None
+        if removed_ids:
+            stones = self.spark.createDataFrame(
+                [(int(i),) for i in removed_ids], "record_id long")
         for attempt in (0, 1):
-            # existence, modulus, and metadata are ALL re-derived per
-            # attempt: a lost creation race or raced rebucket changes
-            # every one of them, and reusing a stale extra would stamp
-            # this writer's geometry over the winner's
-            exists = live.exists(self.spark)
-            nb = self.n_buckets(record_type)
-            bmax = batch_max
-            if exists and live.meta(self.spark).get("max_id") is None:
-                # pre-hint manifest: seed from the scan once — the
-                # batch max alone could understate an existing higher
-                # id and a low hint would reuse ids
-                bmax = max(bmax, self.max_id(record_type))
-            # appends claim ONLY the hint: re-asserting n_buckets on an
-            # existing table would let a commit racing a rebucket roll
-            # the new geometry's modulus back in the merge
-            extra = ({"max_id": bmax} if exists
-                     else {"n_buckets": nb, "max_id": bmax})
-            stones = (self.spark.createDataFrame(
-                [(int(i), int(i) % nb) for i in removed_ids],
-                "_id long, pt int") if removed_ids else None)
+            # existence, modulus and metadata are ALL re-derived per
+            # attempt: a lost creation race, a raced rebucket or a raced
+            # index build changes them, and reusing a stale extra would
+            # stamp this writer's geometry over the winner's
+            staged = [hist_stage]
+            if summary_rows is not None:
+                staged.append(self._derived_stage(
+                    self._deleted_summary(record_type),
+                    lambda: self._summary_delta(record_type, summary_rows)))
+            if rows is not None or removed_ids:
+                staged.append(self._stage_live(record_type, rows,
+                                               removed_ids, batch_max))
+                staged.append(self._derived_stage(
+                    self._tokens(record_type),
+                    lambda: self._token_delta(record_type, rows, stones)))
+            if changed_ids:
+                # heading changes affect the token indexes through
+                # values they denormalize (bibs through 6xx/7xx links,
+                # auths through 5xx see-also links): flag both in the
+                # auth change's own version
+                for rt in ("bib", "auth"):
+                    staged.append(self._derived_stage(
+                        self._tokens(rt),
+                        lambda rt=rt: self._stage_flag(rt, add=changed_ids)))
+            if refreshed:
+                staged.append(self._stage_flag(record_type,
+                                               covered=list(refreshed)))
             try:
-                live.upsert(rows=(self._with_bucket(rows, record_type)
-                                  if rows is not None else None),
-                            tombstone_keys=stones,
-                            extra=extra,
-                            expect_meta=({"n_buckets": nb}
-                                         if exists else None),
-                            expect_create=not exists)
+                self.backend.publish(self.spark, staged)
                 break
             except ConcurrentWriteError:
                 if attempt:
                     raise
-                # a rebucket (or a winning creation) from another
-                # driver landed between the modulus read and this
-                # commit: the rows' pt values are wrong under the
-                # committed geometry — re-derive and retry (without the
-                # in-commit check, the mis-bucketed segment would
-                # publish and pruned point reads would silently miss
-                # its rows)
-        self._mark_marker_committed(marker)
         if record_type == "auth":
             # the auths table grew/changed: the broadcast-gate estimate
             # must re-derive (record-API commits never rebuild the auth
             # index, so _invalidate_auth_index does not run here)
             self._headings_hint_memo = None
         self._invalidate_query_contexts()
-        # index existence is re-checked AFTER the live CAS: an index
-        # created by a concurrent build between the old pre-commit
-        # check and the commit would have gone stale (the build's
-        # derivation read can only have missed this batch if its
-        # overwrite landed before this point — in which case the
-        # re-check sees it and the refresh below covers the batch;
-        # when the overwrite lands later, the build's own tail fold
-        # covers it instead)
-        if self._tokens(record_type).exists(self.spark):
-            try:
-                self._refresh_tokens_for_batch(record_type, new_df=rows,
-                                               removed_ids=removed_ids)
-            except Exception as exc:
-                warnings.warn(
-                    f"commit of {record_type} batch is durable but the "
-                    f"search index refresh failed ({exc}); the index "
-                    f"re-converges from the dirty marker on the next "
-                    f"search or store open")
-                return
-        fsio.remove(self.spark, marker)
+
+    def _derived_stage(self, table: MergeOnReadTable, stage):
+        """``stage()`` if the derived ``table`` exists, else a check
+        that it is still absent at the commit."""
+        if table.exists(self.spark):
+            return stage()
+        return self.backend.stage_check(table.table, None)
+
+    def _stage_live(self, record_type: str, rows: DataFrame | None,
+                    removed_ids: list[int], batch_max: int):
+        """The live delta, checked in the commit against the modulus
+        its pt values were derived under (a raced rebucket would
+        otherwise publish rows pruned reads silently miss)."""
+        live = self._live(record_type)
+        exists = live.exists(self.spark)
+        nb = self.n_buckets(record_type)
+        # appends claim ONLY the hint: re-asserting n_buckets on an
+        # existing table would let a commit racing a rebucket roll the
+        # new geometry's modulus back in the merge
+        extra = ({"max_id": batch_max} if exists
+                 else {"n_buckets": nb, "max_id": batch_max})
+        stones = (self.spark.createDataFrame(
+            [(int(i), int(i) % nb) for i in removed_ids],
+            "_id long, pt int") if removed_ids else None)
+        return live.stage_upsert(
+            rows=(self._with_bucket(rows, record_type)
+                  if rows is not None else None),
+            tombstone_keys=stones, extra=extra,
+            expect_meta={"n_buckets": nb} if exists else None,
+            expect_create=not exists)
 
     def compact(self, record_type: str, minor: bool = False) -> None:
         """Fold each table's delta segments into one — the maintenance
@@ -1675,7 +1482,7 @@ class MarcStore:
         self._live(record_type).compact(self.spark)
         if self._tokens(record_type).exists(self.spark):
             self._tokens(record_type).compact(self.spark)
-        hname = f"{record_type}_history"
+        hname = self._history_name(record_type)
         if self.backend.exists(self.spark, hname):
             self.backend.compact_segments(self.spark, hname)
         if self._deleted_summary(record_type).exists(self.spark):
@@ -1693,16 +1500,14 @@ class MarcStore:
         backend's retention-guarded vacuum (default 1 h horizon — safe
         to run concurrently with writers; pass ``min_age_seconds=0``
         only with writers quiesced).  Also sweeps aged ``stage_*``
-        scratch directories orphaned by crashed drivers, and aged
-        ``_stage_*`` ones, the name earlier releases used (scratch names
+        scratch directories orphaned by crashed drivers (scratch names
         are per-store-instance unique, so a dead driver's staging is
         never reclaimed by a live one's ``_unstage``; the same age
         horizon protects in-flight commits).  Returns the reclaimed
         segment ids."""
         import time as _time
         horizon = _time.time() - min_age_seconds
-        for p in (fsio.glob(self.spark, fsio.join(self.root, "stage_*"))
-                  + fsio.glob(self.spark, fsio.join(self.root, "_stage_*"))):
+        for p in fsio.glob(self.spark, fsio.join(self.root, "stage_*")):
             try:
                 if fsio.newest_mtime(self.spark, p) <= horizon:
                     fsio.rmtree(self.spark, p)
@@ -1734,28 +1539,6 @@ class MarcStore:
                 "pt", F.pmod(F.col("_id"), F.lit(int(n_buckets))).cast("int")),
             extra={"n_buckets": int(n_buckets)})
         self._invalidate_query_contexts()
-
-    def _recover(self) -> None:
-        """Replay pending token-index markers on open (live-table crash
-        consistency is the backend's job — every commit, rewrites
-        included, is one atomic manifest commit, so a rewrite that
-        crashed before it has simply not happened).  Markers are ALSO
-        checked lazily by ``_search_index_df``, so recovery here only
-        matters for stores that go straight to writing."""
-        pending = {("bib" if fsio.basename(m).startswith("_dirty_bibs")
-                    else "auth")
-                   for m in fsio.glob(
-                       self.spark,
-                       fsio.join(self.root, "_dirty_*_tokens*.json"))}
-        for record_type in sorted(pending):
-            self._replay_dirty_marker(record_type)
-        pending = {("bib" if fsio.basename(m).startswith("_dirty_bib_")
-                    else "auth")
-                   for m in fsio.glob(
-                       self.spark,
-                       fsio.join(self.root, "_dirty_*_deleted*.json"))}
-        for record_type in sorted(pending):
-            self._replay_deleted_markers(record_type)
 
     def _stage(self, df: DataFrame, name: str) -> DataFrame:
         # scratch paths carry a per-STORE-INSTANCE suffix: two driver
@@ -1820,19 +1603,18 @@ class MarcStore:
                                     "left_semi")
         return ids.join(prev_source, "record_id", "left_semi")
 
-    def _append_history_frame(self, record_type: str, df: DataFrame,
-                              user: str, now: datetime,
-                              prev_id_df: DataFrame, *, all_new: bool,
-                              small: bool) -> None:
-        """History append as ONE distributed job over the committed
-        frame: per-id version bases come from a semi-join-filtered
+    def _history_frame(self, record_type: str, df: DataFrame,
+                       user: str, now: datetime,
+                       prev_id_df: DataFrame, *, all_new: bool,
+                       small: bool) -> DataFrame:
+        """The history rows of a committed frame, ONE distributed job
+        when staged: per-id version bases come from a semi-join-filtered
         aggregate of the existing history, new-vs-update from a left
         join against ``prev_id_df`` (ids that existed pre-commit).  No
         record rows touch the driver; for broadcast-sized batches the
         id set is explicitly broadcast so the history log never
         shuffles, and ``all_new`` (freshly-assigned ids — nothing can
         have history) skips the version-base scan entirely."""
-        name = f"{record_type}_history"
         doc = F.struct(*[F.col(f.name) for f in schemas.MARC.fields]).alias("doc")
         if all_new:
             small = False
@@ -1868,80 +1650,32 @@ class MarcStore:
             F.lit(None).cast("long").alias("merged_into"),
             F.lit(None).cast("timestamp").alias("merged_time"),
         )
-        self._append_history_rows(record_type, hist)
+        return hist
 
     #: bucket modulus of NEW history tables (fixed at creation in the
     #: table's own manifest; per-record history reads prune on it —
     #: independent of the live table's rebucketable modulus)
     HISTORY_BUCKETS = 16
 
-    def _append_history_rows(self, record_type: str,
-                             hist: DataFrame) -> None:
-        """Append version rows to the history table: one immutable
-        segment per commit (atomic manifest publish), partitioned by
-        pt = record_id % HISTORY_BUCKETS so per-record history reads
-        prune, folded by the append itself (the backend's suffix fold at
-        ``AUTO_COMPACT_AT`` segments, segment 0 kept) so a long commit
-        history never accretes unbounded scan roots.
-
-        When a persisted deleted-records summary exists it is
-        maintained here — the one choke point every history write
-        (commit, delete, restore, merge) flows through — under the same
-        write-ahead marker protocol as the search index: the marker
-        snapshots the history segment list BEFORE the append, so a
-        crash between the append and the summary upsert replays exactly
-        the bracketed batch on the next ``find_deleted`` or store
-        open."""
-        name = f"{record_type}_history"
+    def _stage_history(self, record_type: str, hist: DataFrame):
+        """Stage version rows as one history segment, partitioned by
+        pt = record_id % HISTORY_BUCKETS so per-record reads prune and
+        folded at ``AUTO_COMPACT_AT`` segments (segment 0 kept).
+        Returns the staged append and its rows read back (what the
+        deleted summary derives from, not a second run of ``hist``)."""
+        name = self._history_name(record_type)
+        mod = self.HISTORY_BUCKETS
         if self.backend.exists(self.spark, name):
             mod = int((self.backend.latest_manifest(self.spark, name)
-                       .get("extra") or {}).get("n_buckets")
-                      or self.HISTORY_BUCKETS)
-            base_segments = self.backend.latest_manifest(
-                self.spark, name)["segments"]
-        else:
-            mod = self.HISTORY_BUCKETS
-            base_segments = []
+                       .get("extra") or {}).get("n_buckets") or mod)
         out = hist.withColumn(
             "pt", F.pmod(F.col("record_id"), F.lit(mod)).cast("int"))
-        # unconditional marker (not just when a summary exists): a
-        # build_deleted_summary whose history read predates this append
-        # but whose overwrite lands after the existence re-check below
-        # would otherwise lose this batch with nothing bridging it (the
-        # pre-r11 TOCTOU) — the marker survives the build's settled-only
-        # clearing and the next replay folds the batch
-        marker = self._write_marker_for(
-            self._summary_name(record_type),
-            {"base_segments": base_segments})
-        self.backend.append(out, name, partition_cols=["pt"],
-                            extra={"n_buckets": mod}, sort_col="record_id")
-        self._mark_marker_committed(marker)
-        try:
-            # summary existence re-checked AFTER the append: if a
-            # concurrent build's overwrite landed before this point its
-            # derivation may have missed the batch — the direct fold
-            # below covers it; if the overwrite lands later, the
-            # build's own tail fold does (this re-check happening
-            # before the overwrite implies the append did too, so the
-            # batch is inside the tail the build re-reads)
-            if self._deleted_summary(record_type).exists(self.spark):
-                # the owner folds its OWN batch directly — it holds the
-                # rows and depends on nothing another writer's replay
-                # could have settled out from under it
-                self._refresh_deleted_summary(record_type, hist)
-            fsio.remove(self.spark, marker)
-            if self._markers_for(self._summary_name(record_type)):
-                # opportunistic healing of other writers' crashed
-                # markers at the one choke point every history write
-                # passes through (settled-only: provably-covered or
-                # grace-expired markers are removed, in-flight kept)
-                self._replay_deleted_markers(record_type)
-        except Exception as exc:
-            warnings.warn(
-                f"history append for {record_type} is durable but "
-                f"the deleted-summary refresh failed ({exc}); the "
-                f"summary re-converges from the dirty marker on the "
-                f"next find_deleted or store open")
+        staged = self.backend.stage_append(
+            out, name, partition_cols=["pt"], extra={"n_buckets": mod},
+            sort_col="record_id")
+        return staged, self.backend.segment_df(
+            self.spark, {"segments": [staged.segment],
+                         "schema": out.schema.json()}, 0)
 
     # --- deleted-records summary ----------------------------------------------
     #
@@ -1950,18 +1684,13 @@ class MarcStore:
     # (at 100 TB the history table dwarfs the live store: every version
     # of every record).  The summary is a tiny merge-on-read table
     # holding ONE row per currently-deleted record (deleted, not since
-    # restored or recommitted), maintained O(batch) at the history
-    # choke point above, so the sweep reads O(deleted set) instead.
-    # Optional, like the search index: built once with
-    # ``build_deleted_summary``, self-healing through the same
-    # write-ahead markers, rebuilt wholesale when history compaction
-    # makes a crashed batch unidentifiable.
-
-    def _summary_name(self, record_type: str) -> str:
-        return f"{record_type}_deleted"
+    # restored or recommitted), maintained O(batch) in the same commit
+    # as every history write, so the sweep reads O(deleted set)
+    # instead.  Optional, like the search index: built once with
+    # ``build_deleted_summary``.
 
     def _deleted_summary(self, record_type: str) -> MergeOnReadTable:
-        name = self._summary_name(record_type)
+        name = self._t(f"{record_type}_deleted")
         if name not in self._mor:
             self._mor[name] = MergeOnReadTable(
                 self.backend, name, key="record_id", partition_cols=[])
@@ -1991,139 +1720,48 @@ class MarcStore:
     def build_deleted_summary(self, record_type: str) -> None:
         """Materialize the deleted-records summary from the full
         history log (one O(history) aggregate — the same job a single
-        un-summarized ``find_deleted`` runs).  Settles every pending
-        marker: the rebuild derives from current history, which covers
-        any crashed batch."""
-        hname = f"{record_type}_history"
-        # marker snapshot FIRST (see _settleable_markers): a stamp
-        # landing after this read may belong to an append the
-        # derivation never saw — its marker must survive for replay
-        settleable = self._settleable_markers(
-            self._summary_name(record_type))
-        derived_from = ([] if not self.backend.exists(self.spark, hname)
-                        else list(self.backend.latest_manifest(
-                            self.spark, hname)["segments"]))
+        un-summarized ``find_deleted`` runs), published against the
+        history snapshot it derived from; appends that race it are
+        folded in as its gap."""
+        hname = self._history_name(record_type)
+        summary = self._deleted_summary(record_type)
+        snap = self._snapshot([hname])
+        token = summary.segments(self.spark) \
+            if summary.exists(self.spark) else None
         latest = self._latest_action(self.history_df(record_type))
-        self._deleted_summary(record_type).overwrite(
-            self._currently_deleted(latest))
-        # fold the tail: appends that landed between the history read
-        # and this point are missing from the overwritten summary, and
-        # their writers may have re-checked summary existence BEFORE
-        # this overwrite landed (skipping their own fold) — the tail
-        # fold closes that window; a writer whose re-check came after
-        # the overwrite folds itself, and double-folds are idempotent
-        self._fold_history_tail(record_type, derived_from)
-        self._remove_markers(settleable)
 
-    def _fold_history_tail(self, record_type: str,
-                           base_segments: list[str]) -> None:
-        """Upsert into the deleted summary the history rows of every
-        segment committed since ``base_segments`` — the build's
-        read-race closer, shared with marker replay.  Idempotent:
-        re-deriving a record's latest action from a superset of its
-        rows lands the same summary row."""
-        hname = f"{record_type}_history"
-        if not self.backend.exists(self.spark, hname) \
-                or not self._deleted_summary(record_type).exists(self.spark):
-            return
-        manifest = self.backend.latest_manifest(self.spark, hname)
-        known = set(base_segments)
-        new_rows = None
-        for i, seg in enumerate(manifest["segments"]):
-            if seg in known:
-                continue
-            part = self.backend.segment_df(self.spark, manifest, i)
-            new_rows = part if new_rows is None \
-                else new_rows.unionByName(part)
-        if new_rows is not None:
-            self._refresh_deleted_summary(record_type, new_rows)
+        def gap(old: dict, new: dict) -> list:
+            manifest = (self.backend.latest_manifest(self.spark, hname)
+                        if new[hname] is not None else {"segments": []})
+            parts = [self.backend.segment_df(self.spark, manifest, i)
+                     for i, seg in enumerate(manifest["segments"])
+                     if seg not in set(old[hname] or ())]
+            return [self._summary_delta(record_type, reduce(
+                DataFrame.unionByName, parts))] if parts else []
 
-    def _refresh_deleted_summary(self, record_type: str,
-                                 new_rows: DataFrame) -> None:
-        """O(batch) maintenance: every record the new history rows
-        touch gets its summary row replaced — upserted when its latest
-        action is an unrestored delete, tombstoned otherwise (versions
-        are monotonic, so the batch's rows decide each touched
-        record)."""
+        self._publish_against(
+            snap, [summary.stage_overwrite(self._currently_deleted(latest),
+                                           token)], gap)
+
+    def _summary_delta(self, record_type: str, new_rows: DataFrame):
+        """O(batch) maintenance, staged: every record the new history
+        rows touch gets its summary row replaced — upserted when its
+        latest action is an unrestored delete, tombstoned otherwise
+        (versions are monotonic, so the batch's rows decide each
+        touched record)."""
         latest = self._latest_action(new_rows)
-        self._deleted_summary(record_type).upsert(
+        return self._deleted_summary(record_type).stage_upsert(
             rows=self._currently_deleted(latest),
             tombstone_keys=latest.select("record_id"))
-
-    def _replay_deleted_markers(self, record_type: str) -> None:
-        """Fold history segments not yet reflected in the summary —
-        the inline maintenance step AND crash recovery (same code: the
-        marker's pre-append segment snapshot identifies the batch).
-        Out-of-order markers are safe because each replay processes
-        every segment added since ITS snapshot — a superset of the
-        bracketed batch — and re-deriving a record's latest from more
-        (newer) rows is idempotent.  A snapshot segment missing from
-        the current manifest means compaction folded it: the batch is
-        no longer identifiable, so rebuild wholesale."""
-        import json as _json
-        name = self._summary_name(record_type)
-        markers = self._markers_for(name)
-        if not markers:
-            return
-        summary = self._deleted_summary(record_type)
-        hname = f"{record_type}_history"
-        if not summary.exists(self.spark) \
-                or not self.backend.exists(self.spark, hname):
-            # markers without a summary bridge only an in-flight
-            # build_deleted_summary (whose own tail fold covers the
-            # appends it raced) — sweep provably-dead ones, keep the
-            # rest for the build's settled-only clearing
-            for marker in markers:
-                if self._marker_expired(marker):
-                    fsio.remove(self.spark, marker)
-            return
-        manifest = self.backend.latest_manifest(self.spark, hname)
-        current = list(manifest["segments"])
-        for marker in markers:
-            base = None
-            payload = None
-            try:
-                payload = _json.loads(fsio.read_text(self.spark, marker))
-                base = payload.get("base_segments")
-            except (ValueError, TypeError):
-                pass
-            if base is None or not isinstance(base, list) \
-                    or any(s not in current for s in base):
-                self.build_deleted_summary(record_type)
-                return
-            # fold everything since the snapshot (idempotent, no-op
-            # when nothing landed) so the summary serves LANDED appends
-            self._fold_history_tail(record_type, base)
-            if self._marker_payload_committed(payload) \
-                    or self._marker_expired(marker):
-                # settle only on the owner's post-CAS ``committed``
-                # stamp (the fold above then covered its batch) or past
-                # the grace horizon (owner presumed dead; anything it
-                # landed was folded above).  New segments alone are NOT
-                # proof — they may all be OTHER writers' appends while
-                # this marker's own append is still in flight; the
-                # pre-r11 rule settled on that and lost the batch when
-                # its owner crashed between its CAS and its fold
-                fsio.remove(self.spark, marker)
-            # else: the owner may be mid-append — keep the marker; the
-            # owner settles it itself, or a later replay does
 
     # --- delete / restore / history -------------------------------------------
 
     def delete(self, record_type: str, rid: int, user: str = "admin",
                now: datetime | None = None) -> None:
         """Guarded delete with history 'deleted' action (reference
-        dlx/marc/__init__.py:1236-1310).
-
-        Crash window, stated honestly: the history 'deleted' row and
-        the live tombstone are two separate manifest commits (in that
-        order — same shape as the reference's two Mongo operations).
-        A crash between them leaves the record LIVE with a dangling
-        delete action; ``find_deleted`` lists it while ``get`` still
-        returns it.  Re-running the delete reconciles (idempotent:
-        another history row, then the tombstone lands).  The reverse
-        order would be worse — a record gone with no history row has
-        nothing to ``restore`` from."""
+        dlx/marc/__init__.py:1236-1310): the history row and the live
+        tombstone land in one commit (the reference's two Mongo
+        operations, without the window between them)."""
         now = now or datetime.now(timezone.utc).replace(tzinfo=None)
         if record_type == "auth":
             if mdf.in_use(self.bibs(), rid).limit(1).count() > 0 \
@@ -2144,10 +1782,9 @@ class MarcStore:
             "actions": [action],
             "merged_into": None, "merged_time": None,
         }]
-        self._append_history_rows(
-            record_type,
-            self.spark.createDataFrame(hist_rows, schema=schemas.HISTORY))
-        self._upsert(record_type, removed_ids=[rid], batch_max=0)
+        self._write(record_type, removed_ids=[rid], batch_max=0,
+                    hist=self.spark.createDataFrame(hist_rows,
+                                                    schema=schemas.HISTORY))
         if record_type == "auth":
             # the memoized index tracks commits incrementally (commit
             # mutates it in step with the upsert); deletes drop the whole
@@ -2168,7 +1805,6 @@ class MarcStore:
             raise Exception(f"no history for {record_type} {rid}")
         doc = versions[0]["doc"]
         rec = _RECORD_CLASS[record_type].from_row(doc)
-        self.commit([rec], user=user, now=now, auth_check=False, update_attached=False)
         action = {"type": "restore", "user": user, "time": now}
         hist_rows = [{
             "record_id": rid, "version": versions[0]["version"] + 1, "doc": None,
@@ -2177,9 +1813,12 @@ class MarcStore:
             "restored_user": user, "restored_time": now,
             "actions": [action], "merged_into": None, "merged_time": None,
         }]
-        self._append_history_rows(
-            record_type,
-            self.spark.createDataFrame(hist_rows, schema=schemas.HISTORY))
+        # the restored version and the restore action: one commit
+        self._commit_records(
+            [rec], record_type, user, now, auth_check=False,
+            update_attached=False,
+            history=self.spark.createDataFrame(hist_rows,
+                                               schema=schemas.HISTORY))
         return rec
 
     def revert(self, record_type: str, rid: int, version: int,
@@ -2211,22 +1850,11 @@ class MarcStore:
 
         Over a store with a built ``build_deleted_summary``, the sweep
         reads the O(deleted set) summary table instead of aggregating
-        the full history log (pending markers replayed first, so an
-        in-process store never serves a stale summary; a failed replay
-        falls back to the full aggregate — slower, never wrong)."""
-        out = None
+        the full history log."""
         if self._deleted_summary(record_type).exists(self.spark):
-            try:
-                self._replay_deleted_markers(record_type)
-                out = (self._deleted_summary(record_type).read(self.spark)
-                       .select("record_id", "deleted_time"))
-            except Exception as exc:    # pragma: no cover - env-dependent
-                warnings.warn(
-                    f"deleted-summary replay for {record_type} failed "
-                    f"({exc}); aggregating the full history log until "
-                    f"it succeeds")
-                out = None
-        if out is None:
+            out = (self._deleted_summary(record_type).read(self.spark)
+                   .select("record_id", "deleted_time"))
+        else:
             h = self.history_df(record_type)
             latest = (h.groupBy("record_id")
                       .agg(F.max(F.struct("version", "deleted_time",
@@ -2336,6 +1964,11 @@ class MarcStore:
             if rtype == "auth":
                 attached = attached.filter(~F.col("_id").isin(changed_ids))
             if attached.limit(1).count() == 0:
+                tokens = self._tokens(rtype)
+                if tokens.exists(self.spark) and tokens.meta(
+                        self.spark).get(self.STALE_HEADINGS):
+                    self.backend.publish(self.spark, [self._stage_flag(
+                        rtype, covered=changed_ids)])
                 continue
             self.commit_frame(attached, record_type=rtype, user=user, now=now,
-                              auth_check=False)
+                              auth_check=False, _refreshed=changed_ids)

@@ -37,10 +37,11 @@ indexes persist the corpus's dedup STATE instead:
                         state: every candidate ranked by exact cosine.
 
 All indexes are append-only: after a batch is deduped, its survivors'
-state is appended (one segment per append, clustered by the table's key
+state is appended (one segment per table, clustered by the table's key
 and sized to its rows — a few-hundred-doc increment writes one file per
-table — and folded by ``compact``, one backend ``compact_segments``
-commit per table), so tomorrow's batch sees today's survivors.
+table — all published in one commit of the index's table group, and
+folded by ``compact``, one backend ``compact_segments`` commit per
+table), so tomorrow's batch sees today's survivors.
 
 The near-dup families (MinHash, SimHash, Embedding) share one candidate
 kernel, ``_Grouping``, and one increment body, ``_dedup_increment``.
@@ -331,44 +332,54 @@ def _dedup_increment(g: _Grouping, batch: DataFrame, id_col: str,
     return clean, kept
 
 
+def _table(name: str, suffix: str) -> str:
+    """An index table: member ``{name}{suffix}`` of the index's table
+    group ``name`` (one manifest log, so one append is one commit)."""
+    return f"{name}/{name}{suffix}"
+
+
 def _write_meta(spark: SparkSession, name: str, params: dict) -> None:
     get_backend().write(
         spark.createDataFrame([(json.dumps(params),)], "params string"),
-        f"{name}_meta")
+        _table(name, "_meta"))
 
 
 def _read_meta(spark: SparkSession, name: str) -> dict:
-    meta = get_backend().read(spark, f"{name}_meta")
+    meta = get_backend().read(spark, _table(name, "_meta"))
     return json.loads(meta.first()["params"])
 
 
 class _Index:
-    """What every index shares: ``{name}_meta`` parameters read on open,
-    and ``_TABLES`` (suffix → whether ``compact`` drops duplicate rows,
-    which a crash between an append's two writes can leave in a key
-    table).  ``compact`` folds each table to one segment, one backend
+    """What every index shares: one backend table group ``name`` whose
+    members are the ``_TABLES`` suffixes and ``_meta`` (parameters read
+    on open).  ``compact`` folds each table to one segment, one backend
     commit each (run it every N appended batches)."""
 
-    _TABLES: dict[str, bool] = {}
+    _TABLES: tuple[str, ...] = ()
 
     def __init__(self, spark: SparkSession, name: str):
         self.spark = spark
         self.name = name
+        get_backend().check_format(
+            spark, [f"{name}{s}" for s in (*self._TABLES, "_meta")],
+            f"Rebuild the index with {type(self).__name__}.create from "
+            f"its source corpus.")
         self.params = _read_meta(spark, name)
 
+    def _t(self, suffix: str) -> str:
+        return _table(self.name, suffix)
+
     def compact(self) -> None:
-        for suffix, distinct in self._TABLES.items():
-            get_backend().compact_segments(self.spark, f"{self.name}{suffix}",
-                                           distinct=distinct)
+        for suffix in self._TABLES:
+            get_backend().compact_segments(self.spark, self._t(suffix))
 
     def drop(self) -> None:
-        for suffix in (*self._TABLES, "_meta"):
-            get_backend().drop(self.spark, f"{self.name}{suffix}")
+        get_backend().drop(self.spark, self.name)
 
     def _absent(self, rows: DataFrame, suffix: str, col: str) -> DataFrame:
         """``rows`` whose ``col`` is not in the ``suffix`` table yet,
         pinned: the anti-join must not re-run against the grown table."""
-        existing = get_backend().read(self.spark, f"{self.name}{suffix}")
+        existing = get_backend().read(self.spark, self._t(suffix))
         return rows.join(existing.select(col), col, "left_anti") \
                    .localCheckpoint(eager=True)
 
@@ -379,7 +390,7 @@ class DigestIndex(_Index):
     the digest table while it is under the broadcast threshold (no
     shuffle of index rows); above it, both sides shuffle on digest."""
 
-    _TABLES = {"_digests": False}
+    _TABLES = ("_digests",)
 
     @classmethod
     def create(cls, df: DataFrame, name: str, text_col: str = "text",
@@ -390,7 +401,7 @@ class DigestIndex(_Index):
                       F.col(id_col).alias("id"))
             .groupBy("digest").agg(F.min("id").alias("keep_id"))
         )
-        get_backend().write(digests, f"{name}_digests", "digest")
+        get_backend().write(digests, _table(name, "_digests"), "digest")
         _write_meta(spark, name, {"text_col": text_col, "id_col": id_col})
         return cls(spark, name)
 
@@ -414,7 +425,7 @@ class DigestIndex(_Index):
         the replay).  Requires doc ids unique across the stream's
         lifetime, like ``MinHashIndex.dedup_batch``."""
         p = self.params
-        idx = get_backend().read(self.spark, f"{self.name}_digests")
+        idx = get_backend().read(self.spark, self._t("_digests"))
         if replay_safe:
             own = batch.select(F.col(p["id_col"]).alias("keep_id"))
             idx = idx.join(own, "keep_id", "left_anti")
@@ -438,7 +449,7 @@ class DigestIndex(_Index):
                    .groupBy("digest").agg(F.min("keep_id").alias("keep_id")))
         if if_absent:
             digests = self._absent(digests, "_digests", "digest")
-        get_backend().append(digests, f"{self.name}_digests", "digest")
+        get_backend().append(digests, self._t("_digests"), "digest")
 
     def dedup_batch(self, batch: DataFrame,
                     replay_safe: bool = False) -> DataFrame:
@@ -471,7 +482,7 @@ class MinHashIndex(_Index):
     never read.
     """
 
-    _TABLES = {"_sigs": False, "_bands": True}
+    _TABLES = ("_sigs", "_bands")
 
     # -- construction -------------------------------------------------
 
@@ -487,10 +498,10 @@ class MinHashIndex(_Index):
                                         shingle_n, seed)
         # one pass computes signatures; bands derive from the stored sigs
         # (a cheap re-read of the compact table, not a re-shingle)
-        get_backend().write(sigs, f"{name}_sigs", "id")
-        stored = get_backend().read(spark, f"{name}_sigs")
-        get_backend().write(dedup.band_buckets(stored, bands), f"{name}_bands",
-                            "bucket")
+        get_backend().write(sigs, _table(name, "_sigs"), "id")
+        stored = get_backend().read(spark, _table(name, "_sigs"))
+        get_backend().write(dedup.band_buckets(stored, bands),
+                            _table(name, "_bands"), "bucket")
         _write_meta(spark, name, params)
         return cls(spark, name)
 
@@ -540,8 +551,8 @@ class MinHashIndex(_Index):
         bsigs, n = _pinned(self._batch_sigs(batch))
         be = get_backend()
         return bsigs, _Grouping(
-            be.read(self.spark, f"{self.name}_bands"),
-            be.read(self.spark, f"{self.name}_sigs")
+            be.read(self.spark, self._t("_bands")),
+            be.read(self.spark, self._t("_sigs"))
             .withColumnRenamed("sig", "pay"),
             dedup.band_buckets(bsigs, p["bands"]),
             bsigs.withColumnRenamed("sig", "pay"),
@@ -562,27 +573,20 @@ class MinHashIndex(_Index):
         ``if_absent=True`` makes the append idempotent (only ids not
         already indexed are added) — required for at-least-once stream
         sinks, where a crashed micro-batch replays its append.  The
-        batch signatures are checkpointed before the first write so the
-        anti-join is not re-evaluated against the just-updated table
-        (which would silently empty the second write).
-
-        Crash-safety across the two table writes: bands are written
-        FIRST and the replay guard keys on the LAST-written table
-        (_sigs).  A crash between the writes leaves band keys without
-        signatures; the replay's anti-join still sees those ids as
-        absent, so both writes re-run — at worst duplicating band rows,
-        which probe() dedups (one row per pair) and compact()
-        physically drops.  The reverse order would lose the
-        batch's band keys forever (the guard would see the sigs and
-        skip), silently disabling dedup against those documents."""
+        batch signatures are checkpointed before the segments are
+        written so the anti-join is not re-evaluated against a grown
+        table.  Both tables' segments publish in ONE commit: a crash
+        leaves neither or both."""
         p = self.params
         if sigs is None:
             sigs = self._batch_sigs(batch_survivors).localCheckpoint(eager=True)
         if if_absent:
             sigs = self._absent(sigs, "_sigs", "id")
-        get_backend().append(dedup.band_buckets(sigs, p["bands"]),
-                             f"{self.name}_bands", "bucket")
-        get_backend().append(sigs, f"{self.name}_sigs", "id")
+        be = get_backend()
+        be.publish(self.spark, [
+            be.stage_append(dedup.band_buckets(sigs, p["bands"]),
+                            self._t("_bands"), "bucket"),
+            be.stage_append(sigs, self._t("_sigs"), "id")])
 
     def dedup_batch(self, batch: DataFrame, threshold: float = 0.8,
                     bucket_cap: int | None = BUCKET_CAP,
@@ -644,14 +648,14 @@ class SimHashIndex(_Index):
     ``simhash_near_duplicates``.
     """
 
-    _TABLES = {"_fps": True}
+    _TABLES = ("_fps",)
 
     @classmethod
     def create(cls, df: DataFrame, name: str, text_col: str = "text",
                id_col: str = "doc_id") -> "SimHashIndex":
         spark = df.sparkSession
         get_backend().write(cls._banded_fps(df, text_col, id_col),
-                            f"{name}_fps", "key")
+                            _table(name, "_fps"), "key")
         _write_meta(spark, name, {"text_col": text_col, "id_col": id_col})
         return cls(spark, name)
 
@@ -684,7 +688,7 @@ class SimHashIndex(_Index):
         dedup.check_simhash_hamming(max_hamming)
         p = self.params
         bfps, n = _pinned(self._banded_fps(batch, p["text_col"], p["id_col"]))
-        idx = get_backend().read(self.spark, f"{self.name}_fps")
+        idx = get_backend().read(self.spark, self._t("_fps"))
         keys = lambda df: df.select("band", F.col("key").alias("bucket"), "id")
         pay = lambda df: (df.filter(F.col("band") == 0)
                           .select("id", F.col("simhash").alias("pay")))
@@ -703,7 +707,7 @@ class SimHashIndex(_Index):
                 else self._banded_fps(batch_survivors, p["text_col"], p["id_col"]))
         if if_absent:
             rows = self._absent(rows, "_fps", "id")
-        get_backend().append(rows, f"{self.name}_fps", "key")
+        get_backend().append(rows, self._t("_fps"), "key")
 
     def dedup_batch(self, batch: DataFrame, max_hamming: int = 3,
                     replay_safe: bool = False,
@@ -760,30 +764,15 @@ class EmbeddingIndex(_Index):
     planes and seed.
     """
 
-    _TABLES = {"_vecs": False, "_buckets": True}
+    _TABLES = ("_vecs", "_buckets")
 
     def __init__(self, spark: SparkSession, name: str):
-        self.spark = spark
-        self.name = name
-        be = get_backend()
-        try:
-            buckets = be.latest_manifest(spark, f"{name}_buckets")
-        except FileNotFoundError:
-            if be.exists(spark, f"{name}_vecs"):
-                raise RuntimeError(
-                    f"index {name!r} uses the pre-round single-table layout "
-                    "((id, vec, bucket), no _buckets table) — rebuild it "
-                    "with EmbeddingIndex.create from the source vectors "
-                    "(the old layout stored no ordering signature, so it "
-                    "cannot be migrated in place)") from None
-            buckets = {}
-        self.params = _read_meta(spark, name)
-        # meta written before the banded layout carries no bands key
-        self.params.setdefault("bands", 1)
+        super().__init__(spark, name)
         # the key geometry a rebucket committed rides in the buckets
         # manifest, so keys and planes flip in one commit; an index
         # never rebucketed keeps its create-time geometry in the meta
-        self.params.update(buckets.get("extra") or {})
+        self.params.update(get_backend().latest_manifest(
+            spark, self._t("_buckets")).get("extra") or {})
 
     def rebucket(self, n_planes: int | None = None,
                  bands: int | None = None) -> None:
@@ -813,12 +802,12 @@ class EmbeddingIndex(_Index):
                     "bands": int(bands or p["bands"])}
         p.update(geometry)
         be = get_backend()
-        token = be.snapshot_token(self.spark, f"{self.name}_buckets")
-        vecs = be.read(self.spark, f"{self.name}_vecs")
+        token = be.snapshot_token(self.spark, self._t("_buckets"))
+        vecs = be.read(self.spark, self._t("_vecs"))
         keys = similarity.banded_lsh_keys(vecs, p["bands"], p["n_planes"],
                                           p["seed"], vec_col="vec",
                                           id_col="id", dim=p["dim"])
-        if not be.rewrite(keys, f"{self.name}_buckets", token, exact=True,
+        if not be.rewrite(keys, self._t("_buckets"), token, exact=True,
                           extra=geometry):
             raise tableio.ConcurrentWriteError(
                 f"rebucket({self.name}): index was appended to while "
@@ -840,14 +829,14 @@ class EmbeddingIndex(_Index):
                           similarity._order_sig_expr(vec_col, oplanes)
                           .alias("osig"))
         be = get_backend()
-        be.write(vrows, f"{name}_vecs", "id")
+        be.write(vrows, _table(name, "_vecs"), "id")
         # band keys derive from the stored vectors (a cheap columnar
         # re-read, not a second pass over the source)
-        stored = be.read(spark, f"{name}_vecs")
+        stored = be.read(spark, _table(name, "_vecs"))
         be.write(similarity.banded_lsh_keys(stored, bands, n_planes, seed,
                                             vec_col="vec", id_col="id",
                                             dim=dim),
-                 f"{name}_buckets", "bucket")
+                 _table(name, "_buckets"), "bucket")
         _write_meta(spark, name, params)
         return cls(spark, name)
 
@@ -944,8 +933,8 @@ class EmbeddingIndex(_Index):
         be = get_backend()
         pay = lambda df: df.select("id", F.col("vec").alias("pay"), "osig")
         return bvecs, _Grouping(
-            be.read(self.spark, f"{self.name}_buckets"),
-            pay(be.read(self.spark, f"{self.name}_vecs")), bb, pay(bvecs),
+            be.read(self.spark, self._t("_buckets")),
+            pay(be.read(self.spark, self._t("_vecs"))), bb, pay(bvecs),
             similarity.pairwise_cosine_expr("pay_b", "pay_a"),
             F.lit(True) if threshold is None else F.col("score") >= threshold,
             n * p["bands"] * (len(masks) + 1), bucket_cap, broadcast_row_cap,
@@ -955,20 +944,18 @@ class EmbeddingIndex(_Index):
                vecs: DataFrame | None = None) -> None:
         """``vecs``: precomputed, materialized (id, vec, osig) rows of
         EXACTLY the survivor rows (``dedup_batch`` passes them; they are
-        written without a second checkpoint unless ``if_absent``).
-
-        Crash-safety across the two table writes mirrors
-        ``MinHashIndex.append``: band keys are written FIRST and the
-        replay guard keys on the LAST-written table (_vecs), so a crash
-        between the writes at worst duplicates band rows (probe dedups
-        candidates; compact physically drops them)."""
+        written without a second checkpoint unless ``if_absent``).  The
+        vectors and their band keys publish in ONE commit, as in
+        ``MinHashIndex.append``."""
         rows = vecs if vecs is not None else \
             self._batch_vecs(batch_survivors).localCheckpoint(eager=True)
         if if_absent:
             rows = self._absent(rows, "_vecs", "id")
-        get_backend().append(self._band_keys(rows), f"{self.name}_buckets",
-                             "bucket")
-        get_backend().append(rows, f"{self.name}_vecs", "id")
+        be = get_backend()
+        be.publish(self.spark, [
+            be.stage_append(self._band_keys(rows), self._t("_buckets"),
+                            "bucket"),
+            be.stage_append(rows, self._t("_vecs"), "id")])
 
     def dedup_batch(self, batch: DataFrame, threshold: float = 0.9,
                     multiprobe_hamming: int = 0,
@@ -1012,7 +999,7 @@ class SegmentIndex(_Index):
     ``spans.segment_dedup`` output, because the global first-occurrence
     order (doc_id, seg_idx) is the batch arrival order."""
 
-    _TABLES = {"_segments": False}
+    _TABLES = ("_segments",)
 
     @classmethod
     def create_empty(cls, spark: SparkSession, name: str,
@@ -1025,7 +1012,7 @@ class SegmentIndex(_Index):
             raise ValueError("unit_words must be >= 1")
         empty = spark.createDataFrame(
             [], "digest string, keep_id long")
-        get_backend().write(empty, f"{name}_segments", "digest")
+        get_backend().write(empty, _table(name, "_segments"), "digest")
         _write_meta(spark, name, {
             "text_col": text_col, "id_col": id_col,
             "unit_words": unit_words, "normalize": normalize})
@@ -1046,7 +1033,7 @@ class SegmentIndex(_Index):
                    .select(F.md5("seg_text").alias("digest"),
                            F.col("doc_id").cast("long").alias("keep_id"))
                    .groupBy("digest").agg(F.min("keep_id").alias("keep_id")))
-        get_backend().append(digests, f"{name}_segments", "digest")
+        get_backend().append(digests, _table(name, "_segments"), "digest")
         return idx
 
     def _batch_segments(self, batch: DataFrame) -> DataFrame:
@@ -1060,7 +1047,7 @@ class SegmentIndex(_Index):
                           replay_safe: bool) -> tuple[DataFrame, DataFrame]:
         from dlx_spark.operators import spans as _spans
         p = self.params
-        idx = get_backend().read(self.spark, f"{self.name}_segments")
+        idx = get_backend().read(self.spark, self._t("_segments"))
         if replay_safe:
             own = batch.select(F.col(p["id_col"]).cast("long")
                                .alias("keep_id"))
@@ -1096,7 +1083,7 @@ class SegmentIndex(_Index):
                    .groupBy("digest").agg(F.min("keep_id").alias("keep_id")))
         if if_absent:
             digests = self._absent(digests, "_segments", "digest")
-        get_backend().append(digests, f"{self.name}_segments", "digest")
+        get_backend().append(digests, self._t("_segments"), "digest")
 
     def dedup_batch(self, batch: DataFrame,
                     replay_safe: bool = False) -> DataFrame:
@@ -1137,7 +1124,7 @@ class SpanIndex(_Index):
     because a window's global first occurrence is its first arrival.
     """
 
-    _TABLES = {"_windows": False}
+    _TABLES = ("_windows",)
 
     @classmethod
     def create_empty(cls, spark: SparkSession, name: str,
@@ -1147,7 +1134,7 @@ class SpanIndex(_Index):
             raise ValueError("k must be >= 1")
         empty = spark.createDataFrame(
             [], "digest string, keep_id long, keep_pos long")
-        get_backend().write(empty, f"{name}_windows", "digest")
+        get_backend().write(empty, _table(name, "_windows"), "digest")
         _write_meta(spark, name, {
             "text_col": text_col, "id_col": id_col, "k": k,
             "normalize": normalize})
@@ -1167,7 +1154,7 @@ class SpanIndex(_Index):
                   .select("digest",
                           F.col("_f.doc_id").cast("long").alias("keep_id"),
                           F.col("_f.pos").cast("long").alias("keep_pos")))
-        get_backend().append(firsts, f"{name}_windows", "digest")
+        get_backend().append(firsts, _table(name, "_windows"), "digest")
         return idx
 
     def _cut_and_fresh(self, batch: DataFrame,
@@ -1175,7 +1162,7 @@ class SpanIndex(_Index):
                                                    DataFrame, DataFrame]:
         from dlx_spark.operators import spans as _spans
         p = self.params
-        idx = get_backend().read(self.spark, f"{self.name}_windows")
+        idx = get_backend().read(self.spark, self._t("_windows"))
         if replay_safe:
             own = batch.select(F.col(p["id_col"]).cast("long")
                                .alias("keep_id"))
@@ -1218,7 +1205,7 @@ class SpanIndex(_Index):
         ``if_absent=True`` makes replays idempotent."""
         if if_absent:
             firsts = self._absent(firsts, "_windows", "digest")
-        get_backend().append(firsts, f"{self.name}_windows", "digest")
+        get_backend().append(firsts, self._t("_windows"), "digest")
 
     def dedup_batch(self, batch: DataFrame,
                     replay_safe: bool = False) -> DataFrame:

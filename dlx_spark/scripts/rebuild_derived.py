@@ -45,12 +45,12 @@ def run(argv=None) -> int:
             continue
         t0 = time.time()
         # refresh linked-value caches from current headings, then derive;
-        # the result lands through the store's live-commit step as one
-        # delta segment superseding every record (no history version:
-        # the records' content is unchanged, only what derives from it)
+        # the result lands through the store's one write as one delta
+        # segment superseding every record (no history version: the
+        # records' content is unchanged, only what derives from it)
         derived = mdf.derive_text_words(base, headings=headings)
         derived = mdf.derive_logical_fields(derived, rtype, headings=None)
-        store._upsert(rtype, derived, batch_max=store.max_id(rtype))
+        store._write(rtype, rows=derived, batch_max=store.max_id(rtype))
         print(f"{rtype}: rebuilt derived state for {n} records "
               f"in {time.time() - t0:.1f}s")
     return 0

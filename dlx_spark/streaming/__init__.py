@@ -518,8 +518,7 @@ def make_commit_batch_fn(store, record_type: str, checkpoint: str,
        replay that finds the marker first rolls the history table back
        to that version (``restore_version`` — the crashed attempt's
        appended segments become unreferenced, valid even if a
-       compaction folded them in between), lets the store's own
-       recovery re-converge the token index, then re-runs the commit
+       compaction folded them in between), then re-runs the commit
        from the stage — which is now idempotent (explicit ids, fixed
        ``now``, snapshot ``prev_ids``; the live re-append supersedes
        the crashed attempt's identical rows by merge-on-read
@@ -545,7 +544,7 @@ def make_commit_batch_fn(store, record_type: str, checkpoint: str,
 
     cls = Bib if record_type == "bib" else Auth
     commits_log = fsio.join(store.root, f"_stream_commits_{record_type}")
-    hist_table = f"{record_type}_history"
+    hist_table = store._history_name(record_type)
     _key_cache: dict[str, str] = {}
 
     def stream_key(session) -> str:
@@ -561,23 +560,14 @@ def make_commit_batch_fn(store, record_type: str, checkpoint: str,
             # file:///x derive the SAME persisted ledger key
             raw = f"{fsio.qualified(session, checkpoint)}:{run_id}"
             _key_cache["k"] = hashlib.md5(raw.encode()).hexdigest()[:16]
-            # ledger rows persisted before the qualified-spelling change
-            # were keyed on os.path.abspath(checkpoint) ('/x', no scheme);
-            # accept that spelling on READ so a stream resuming across the
-            # upgrade still recognizes its own committed batches instead
-            # of re-committing a redelivered one
-            import os
-            legacy = f"{os.path.abspath(checkpoint)}:{run_id}"
-            _key_cache["legacy"] = hashlib.md5(legacy.encode()).hexdigest()[:16]
         return _key_cache["k"]
 
     def ledger_has(session, key: str, batch_id: int) -> bool:
         if not any(f.endswith(".parquet")
                    for f in fsio.listdir(session, commits_log)):
             return False
-        keys = {key, _key_cache.get("legacy", key)}
         return bool(session.read.parquet(commits_log)
-                    .filter(F.col("stream").isin(sorted(keys))
+                    .filter((F.col("stream") == key)
                             & (F.col("batch_id") == batch_id))
                     .limit(1).count())
 
@@ -610,22 +600,6 @@ def make_commit_batch_fn(store, record_type: str, checkpoint: str,
         fsio.mkdirs(session, commits_log)
         marker_path = fsio.join(commits_log, f"_intent_{key}_{batch_id}.json")
         stage_path = fsio.join(commits_log, f"_batch_{key}_{batch_id}")
-        # a batch that crashed mid-commit BEFORE the qualified-spelling
-        # upgrade left its intent marker and stage dir under the legacy
-        # abspath-derived key; if the current-key marker is absent,
-        # adopt the legacy-named attempt so its recovery (history undo +
-        # idempotent re-run from ITS stage) runs instead of a fresh
-        # commit duplicating the crashed attempt's history appends.
-        # Probed before the ledger check too, so a crash between ledger
-        # append and cleanup doesn't strand the legacy-named files.
-        legacy_key = _key_cache.get("legacy", key)
-        if legacy_key != key and not fsio.exists(session, marker_path):
-            legacy_marker = fsio.join(
-                commits_log, f"_intent_{legacy_key}_{batch_id}.json")
-            if fsio.exists(session, legacy_marker):
-                marker_path = legacy_marker
-                stage_path = fsio.join(commits_log,
-                                       f"_batch_{legacy_key}_{batch_id}")
 
         if ledger_has(session, key, batch_id):
             # crash landed between ledger append and cleanup: finish it
@@ -638,21 +612,15 @@ def make_commit_batch_fn(store, record_type: str, checkpoint: str,
             # pre-commit manifest version (the attempt's appended
             # segments become unreferenced — valid even if compaction
             # folded them, since restored manifests reference the
-            # original immutable segments), re-converge the token
-            # index, then fall through to the idempotent re-run
+            # original immutable segments), then fall through to the
+            # idempotent re-run
             marker = json.loads(fsio.read_text(session, marker_path))
-            if "history_version" not in marker:
-                raise RuntimeError(
-                    f"stream intent marker {marker_path} predates the "
-                    f"versioned history layout — repair it manually "
-                    f"before resuming this stream")
             hv = marker["history_version"]
             if hv is None:
                 if store.backend.exists(session, hist_table):
                     store.backend.drop(session, hist_table)
             else:
                 store.backend.restore_version(session, hist_table, hv)
-            store._recover()
         else:
             # fresh attempt: parse executor-side with the SAME chunk
             # parser as the corresponding batch reader — the batch never

@@ -38,7 +38,9 @@ precedence) using only that backend's primitives:
   the commit point is the backend's manifest CAS (atomic rename /
   external CAS service), readers are snapshot-isolated, ``vacuum``
   reclaims superseded segments and the orphan segment of a rewrite
-  that crashed before its commit.
+  that crashed before its commit.  Every write has a ``stage_*`` form,
+  so a table that is one member of a backend table group can publish a
+  batch in the same commit as its sibling members' changes.
 
 Tombstones ride as rows with ``_mor_deleted = true`` and NULL payload
 columns, so one uniform resolution covers upsert, delete, and
@@ -135,8 +137,8 @@ class MergeOnReadTable:
 
     def segments(self, spark: SparkSession) -> list[str]:
         """Current segment ids in precedence order ([] for no table) —
-        callers snapshot this before a multi-table commit so recovery
-        can identify exactly the segments a crashed batch added."""
+        the snapshot a derivation from this table is published
+        against."""
         if not self.exists(spark):
             return []
         return list(self.manifest(spark)["segments"])
@@ -155,38 +157,64 @@ class MergeOnReadTable:
         (correct for a rebuild-from-live); a raced rewrite that
         replaced the segment list raises ConcurrentWriteError."""
         spark = df.sparkSession
+        token = self.segments(spark) if self.exists(spark) else None
+        self.backend.publish(spark, [self.stage_overwrite(df, token,
+                                                          extra=extra)])
+
+    def stage_overwrite(self, df: DataFrame, token: list[str] | None, *,
+                        extra: dict | None = None, extra_merge=None):
+        """Stage ``overwrite`` against ``token``, the segment list ``df``
+        was derived from (None: absent — the write replaces whatever is
+        there); ``extra_merge`` overrides the table's own."""
         out = df.withColumn(DELETED, F.lit(False))
-        if self.exists(spark):
-            token = list(self.manifest(spark)["segments"])
-            self._rewrite(out, token, extra=extra)
-        else:
-            self.backend.write(
+        if token is None:
+            return self.backend.stage_write(
                 out, self.table, partition_cols=self.partition_cols,
                 extra=extra, sort_col=self.sort_col)
+        return self.backend.stage_rewrite(
+            out, self.table, token, extra=extra,
+            extra_merge=extra_merge or self.extra_merge,
+            sort_col=self.sort_col)
 
     def upsert(self, rows: DataFrame | None = None,
                tombstone_keys: DataFrame | None = None,
                extra: dict | None = None,
                expect_meta: dict | None = None,
                expect_create: bool = False) -> None:
-        """Commit one batch: ``rows`` replace each touched key's row
+        """Commit one batch (``stage_upsert``, published alone)."""
+        staged = self.stage_upsert(rows, tombstone_keys, extra=extra,
+                                   expect_meta=expect_meta,
+                                   expect_create=expect_create)
+        if staged is not None:
+            self.backend.publish((rows if rows is not None
+                                  else tombstone_keys).sparkSession, [staged])
+
+    def stage_upsert(self, rows: DataFrame | None = None,
+                     tombstone_keys: DataFrame | None = None, *,
+                     extra: dict | None = None,
+                     expect_meta: dict | None = None,
+                     expect_create: bool = False):
+        """Stage one batch: ``rows`` replace each touched key's row
         set; ``tombstone_keys`` (key + partition columns, one row per
         key) delete keys.  For multi-row-per-key tables the caller must
         tombstone every touched key (rows alone only SUPERSEDE a key's
         previous rows because the tombstone marks the mention — see
-        module docstring).  O(batch) I/O; appends one segment.
+        module docstring).  O(batch) I/O; appends one segment, and once
+        the commit leaves ``AUTO_COMPACT_AT`` segments the table folds
+        itself (minor while ``_should_minor_compact``, else full).
         ``expect_meta`` asserts the table metadata the batch's
         partition values were derived under (e.g. the bucket modulus)
         inside the commit — raising ConcurrentWriteError instead of
         publishing mis-partitioned rows when a geometry change raced
-        this batch."""
+        this batch.  Returns None for deletes against a table that
+        never existed (nothing to stage)."""
         if rows is None and tombstone_keys is None:
             raise ValueError("upsert needs rows and/or tombstone_keys")
         spark = (rows if rows is not None else tombstone_keys).sparkSession
         if self.exists(spark):
             schema = self._schema(self.manifest(spark))
         elif rows is None:
-            return      # deletes against a table that never existed
+            return None
         else:
             schema = rows.withColumn(DELETED, F.lit(False)).schema
         parts = []
@@ -197,19 +225,22 @@ class MergeOnReadTable:
             parts.append(self.backend._conform(
                 tombstone_keys.withColumn(DELETED, F.lit(True)), schema))
         delta = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-        n_after = self.backend.append(
+        staged = self.backend.stage_append(
             delta, self.table, partition_cols=self.partition_cols,
             extra=extra, extra_merge=self.extra_merge,
             expect_extra=expect_meta, expect_create=expect_create,
             sort_col=self.sort_col, fold=False)
-        if n_after >= self.backend.AUTO_COMPACT_AT:
-            self.auto_compactions += 1
-            manifest = self.manifest(spark)
-            if self._should_minor_compact(spark, manifest):
-                self.auto_compactions_minor += 1
-                self.compact_deltas(spark)
-            else:
-                self.compact(spark)
+        staged.fold = lambda: self._fold(spark)
+        return staged
+
+    def _fold(self, spark: SparkSession) -> None:
+        """The inline fold an upsert's commit triggers."""
+        self.auto_compactions += 1
+        if self._should_minor_compact(spark, self.manifest(spark)):
+            self.auto_compactions_minor += 1
+            self.compact_deltas(spark)
+        else:
+            self.compact(spark)
 
     # ------------------------------------------------------------ read
 
@@ -287,10 +318,9 @@ class MergeOnReadTable:
                             base_segments: list[str]) -> DataFrame | None:
         """The rows (tombstones included, ``_mor_deleted`` exposed) of
         every segment NOT in ``base_segments`` — i.e. the batches
-        committed since a caller's ``segments()`` snapshot.  This is
-        the recovery primitive: a crashed multi-table protocol replays
-        exactly the batch content its marker brackets, O(batch).
-        Returns None when nothing was added."""
+        committed since a caller's ``segments()`` snapshot — the gap a
+        derivation that raced those commits folds before it publishes,
+        O(batch).  Returns None when nothing was added."""
         manifest = self.manifest(spark)
         known = set(base_segments)
         out = None
@@ -326,7 +356,7 @@ class MergeOnReadTable:
         of the world.  Latest-mention precedence is applied AMONG the
         deltas (per key, the highest delta's rows win); tombstones
         SURVIVE the merge, since they still shadow base rows — so reads,
-        crash-replay over ``read_segments_since``, and a later full
+        a gap fold over ``read_segments_since``, and a later full
         ``compact()`` all see exactly the same resolved content, with
         segment-list length back to 2.
 
@@ -399,15 +429,10 @@ class MergeOnReadTable:
         ConcurrentWriteError is raised and the caller re-derives."""
         manifest = self.manifest(spark)
         df = derive(self._resolve(spark, manifest, hint=False))
-        self._rewrite(df.withColumn(DELETED, F.lit(False)),
-                      list(manifest["segments"]), exact=True, extra=extra)
-
-    def _rewrite(self, df: DataFrame, token: list[str], **kw) -> None:
-        """A re-derive's rewrite: one backend ``rewrite`` whose conflict
-        raises instead of returning."""
-        if not self.backend.rewrite(df, self.table, token,
-                                    extra_merge=self.extra_merge,
-                                    sort_col=self.sort_col, **kw):
+        if not self.backend.rewrite(
+                df.withColumn(DELETED, F.lit(False)), self.table,
+                list(manifest["segments"]), exact=True, extra=extra,
+                extra_merge=self.extra_merge, sort_col=self.sort_col):
             raise ConcurrentWriteError(
                 f"{self.table}: the segment list changed while the "
                 f"rewrite was derived — re-derive and retry")

@@ -12,17 +12,23 @@ Stores", VLDB 2020):
   ``append`` adds one, conformed to the head's schema.  Both take the
   layout as arguments (a clustering ``key``, hive ``partition_cols``,
   a within-partition ``sort_col``) and caller-owned ``extra`` metadata.
-- **The commit point is one file rename.**  A table version is a JSON
-  manifest ``<root>/tables/<name>/v<NNNNNNNNNN>.json`` listing the
-  segment ids that make up that version (plus layout + schema).  A
-  commit writes the manifest to a ``.tmp-*`` sibling and renames it to
-  its version-numbered name.  Hadoop's rename never overwrites, so two
+- **One manifest log per table group.**  ``"<group>/<member>"`` names
+  a member of a group (a MARC store's tables; an index's); a plain name
+  is a group of one.  A group version is one JSON manifest
+  ``<root>/tables/<group>/v<NNNNNNNNNN>.json`` holding every member's
+  entry (segments, layout, schema, caller ``extra``) — Delta keeps one
+  log per table; this widens it to the tables one write touches.
+- **The commit point is one file rename.**  A write is staged
+  (``stage_*``: the segment is written, nothing published), then
+  ``publish`` commits every staged member of one group as ONE version.
+  A commit writes the manifest to a ``.tmp-*`` sibling and renames it
+  to its version-numbered name.  Hadoop's rename never overwrites, so two
   writers racing for the same version number produce exactly one
   winner; the loser re-reads the new latest and retries with the next
   number — optimistic concurrency, which makes concurrent APPENDS to
   the same table safe (each retry re-merges its segment list onto the
   fresh head).  A crash before the rename leaves only an invisible tmp
-  file: no torn state is ever readable.
+  file and unreferenced segments: members land all-or-nothing.
 - **Readers are snapshot-isolated.**  ``read`` resolves the latest
   manifest at call time and pins its segment paths into the plan; later
   commits add new manifests and segments but never touch resolved
@@ -76,8 +82,12 @@ large write splits at ``spark.sql.adaptive.advisoryPartitionSizeInBytes``)
 are path-based, so there is no catalog bucketing metadata and a join
 against an index table that is too big to broadcast shuffles both
 sides.  (Delta/Iceberg recover the clustering benefit with their own
-mechanisms — Z-ordering, sorted manifests.)  Manifests written before
-this layout carry an ``n_buckets`` field; it is never read.
+mechanisms — Z-ordering, sorted manifests.)
+
+Every group manifest carries ``"format": FORMAT``.  A log without it
+is in the per-table layout of earlier releases: reading it raises
+``LayoutError`` (a ``ValueError``), and ``check_format`` raises it up
+front for a caller's tables, so an old root never reads as empty.
 
 ``vacuum`` is safe to run concurrently with writers under its default
 retention horizon (``min_age_seconds``): in-flight commits — a data
@@ -90,6 +100,7 @@ the writers-quiesced fast path.
 from __future__ import annotations
 
 import json
+import os
 import time
 import uuid
 
@@ -101,11 +112,35 @@ from dlx_spark.tableio import ConcurrentWriteError
 
 _MANIFEST_WIDTH = 10
 _MAX_COMMIT_RETRIES = 20
-#: table-name suffixes of the staged-swap protocol earlier releases
-#: used for rewrites; ``vacuum`` drops aged tables with these names
-_RETIRED_STAGE_SUFFIXES = ("__morstage", "__morfold", "__compactseg",
-                           "__compact", "__refresh", "__rebucket",
-                           "_rebucket_intent")
+#: the manifest format: one log per table group (the per-table layout
+#: of earlier releases, format 1, carries no format field)
+FORMAT = 2
+
+
+class LayoutError(ValueError):
+    """A table log in the per-table manifest layout of earlier
+    releases (see the module docstring)."""
+
+
+def _split(table: str) -> tuple[str, str]:
+    """``"<group>/<member>"`` -> (group, member); a plain name is a
+    group of one."""
+    group, sep, member = table.partition("/")
+    return (group, member) if sep else (table, table)
+
+
+class Staged:
+    """One member's part of a group commit: its written ``segment`` and
+    ``payload``, mapping the member's head entry (None: absent) to the
+    entry to publish (None: absent), re-applied on each CAS retry;
+    ``entry`` is what committed, ``fold`` runs once it holds
+    ``AUTO_COMPACT_AT`` segments."""
+
+    def __init__(self, table: str, payload, segment: str | None = None,
+                 fold=None):
+        self.table, self.payload = table, payload
+        self.segment, self.fold = segment, fold
+        self.entry: dict | None = None
 
 
 class VersionedTableBackend:
@@ -120,6 +155,7 @@ class VersionedTableBackend:
         #: lifetime — the observable the contention probe reports
         #: (tools/scale_probe.py --contention); advisory, not synchronized
         self.races_lost = 0
+        self._local_root: str | None = None
 
     # ---------------------------------------------------------- paths
 
@@ -130,7 +166,8 @@ class VersionedTableBackend:
         return self._root
 
     def _table_dir(self, spark: SparkSession, table: str) -> str:
-        return fsio.join(self.root(spark), "tables", table)
+        """The directory of ``table``'s group log."""
+        return fsio.join(self.root(spark), "tables", _split(table)[0])
 
     def _data_dir(self, spark: SparkSession, segment: str) -> str:
         return fsio.join(self.root(spark), "data", segment)
@@ -140,18 +177,36 @@ class VersionedTableBackend:
         return fsio.join(self._table_dir(spark, table),
                          f"v{version:0{_MANIFEST_WIDTH}d}.json")
 
+    def _local(self, spark: SparkSession, path: str) -> str | None:
+        """``path`` (under the root) as a local path when the root is on
+        the driver's local filesystem, else None: every read lists and
+        reads its table's head, which through the JVM costs a round trip
+        per listed file and tens of ms per manifest."""
+        if self._local_root is None:
+            self._local_root = fsio.local_path(spark, self.root(spark)) or ""
+        if not self._local_root:
+            return None
+        return os.path.join(self._local_root,
+                            path[len(self.root(spark)):].lstrip("/"))
+
     # ------------------------------------------------------ manifests
 
     def versions(self, spark: SparkSession, table: str) -> list[int]:
-        """Committed version numbers, ascending ([] for no table).
-        The listing first settles any commit whose destination file
-        never materialized (crash right after an external-CAS acquire:
-        committed, but invisible to a plain listing until completed
-        from the commit record) — a no-op on rename-commit schemes."""
-        fsio.get_commit_scheme().settle_pending(
-            spark, self._table_dir(spark, table))
+        """Committed version numbers of ``table``'s group log, ascending
+        ([] for no log).  The listing first settles any commit whose
+        destination file never materialized (crash right after an
+        external-CAS acquire: committed, but invisible to a plain
+        listing until completed from the commit record) — a no-op on
+        rename-commit schemes."""
+        table_dir = self._table_dir(spark, table)
+        fsio.get_commit_scheme().settle_pending(spark, table_dir)
+        local = self._local(spark, table_dir)
+        if local is None:
+            names = fsio.listdir(spark, table_dir)
+        else:
+            names = os.listdir(local) if os.path.isdir(local) else []
         out = []
-        for name in fsio.listdir(spark, self._table_dir(spark, table)):
+        for name in names:
             if name.startswith("v") and name.endswith(".json"):
                 try:
                     out.append(int(name[1:-len(".json")]))
@@ -161,24 +216,36 @@ class VersionedTableBackend:
                         f"table {table!r}") from None
         return sorted(out)
 
-    def _read_manifest(self, spark: SparkSession, table: str,
-                       version: int) -> dict:
+    def _read_log(self, spark: SparkSession, table: str,
+                  version: int) -> dict:
+        """One group version of ``table``'s log, as committed."""
         path = self._manifest_path(spark, table, version)
         try:
-            doc = json.loads(fsio.read_text(spark, path))
+            local = self._local(spark, path)
+            if local is None:
+                text = fsio.read_text(spark, path)
+            else:
+                with open(local, encoding="utf-8") as fh:
+                    text = fh.read()
+            doc = json.loads(text)
         except Exception as exc:
             # a committed manifest can only be torn by external
             # corruption (the rename publishes all-or-nothing) — never
             # mask that by treating the table as absent
             raise ValueError(
                 f"corrupt manifest {path}: {exc}") from exc
-        if not isinstance(doc, dict) or "segments" not in doc:
-            raise ValueError(f"corrupt manifest {path}: missing segments")
+        if isinstance(doc, dict) and doc.get("format") != FORMAT \
+                and ("format" in doc or "segments" in doc):
+            raise LayoutError(f"{path} is in manifest format "
+                              f"{doc.get('format', 1)}, not {FORMAT}")
+        if not isinstance(doc, dict) or not isinstance(
+                doc.get("members"), dict):
+            raise ValueError(f"corrupt manifest {path}: missing members")
         return doc
 
-    def _manifest_or_none(self, spark: SparkSession, table: str,
-                          version: int) -> dict | None:
-        """``_read_manifest``, with the scheme-dependent torn-file rule:
+    def _log_or_none(self, spark: SparkSession, table: str,
+                     version: int) -> dict | None:
+        """``_read_log``, with the scheme-dependent torn-file rule:
         under a non-atomic-publish commit scheme an unparseable manifest
         is first offered to the scheme's ``read_repair`` — schemes whose
         commit point lives OUTSIDE the store (``fsio.ExternalCASScheme``)
@@ -190,7 +257,9 @@ class VersionedTableBackend:
         back/skips.  Under an atomic-publish scheme a torn file can only
         be external corruption and stays a loud ValueError."""
         try:
-            return self._read_manifest(spark, table, version)
+            return self._read_log(spark, table, version)
+        except LayoutError:
+            raise
         except ValueError:
             scheme = fsio.get_commit_scheme()
             if scheme.atomic_publish:
@@ -200,27 +269,67 @@ class VersionedTableBackend:
             if text is None:
                 return None
             doc = json.loads(text)
-            if not isinstance(doc, dict) or "segments" not in doc:
+            if not isinstance(doc, dict) or "members" not in doc:
                 raise ValueError(
                     f"corrupt manifest {path}: repaired content is "
-                    f"missing segments")
+                    f"missing members")
             return doc
 
-    def _latest(self, spark: SparkSession, table: str) -> tuple[int, dict]:
+    def _head(self, spark: SparkSession, table: str) -> tuple[int, dict]:
+        """The latest readable version of ``table``'s group log."""
         vs = self.versions(spark, table)
         for v in reversed(vs):
-            manifest = self._manifest_or_none(spark, table, v)
-            if manifest is not None:
-                return v, manifest
+            doc = self._log_or_none(spark, table, v)
+            if doc is not None:
+                return v, doc
         raise FileNotFoundError(f"versioned table {table} not found "
                                 f"under {self.root(spark)}")
 
+    @staticmethod
+    def _member(doc: dict, table: str) -> dict | None:
+        """``table``'s entry in group version ``doc``, stamped with the
+        version's number and id (None when the member is absent)."""
+        entry = doc["members"].get(_split(table)[1])
+        if entry is None:
+            return None
+        return {**entry, "version": doc["version"], "id": doc["id"]}
+
+    def _latest(self, spark: SparkSession, table: str) -> tuple[int, dict]:
+        v, doc = self._head(spark, table)
+        entry = self._member(doc, table)
+        if entry is None:
+            raise FileNotFoundError(f"versioned table {table} not found "
+                                    f"under {self.root(spark)}")
+        return v, entry
+
+    def check_format(self, spark: SparkSession, tables: list[str],
+                     rebuild: str) -> None:
+        """Raise ``LayoutError`` naming those of ``tables`` (plain
+        names) whose log is in the per-table layout of earlier releases
+        (a group log under another name would read past them as
+        empty), with ``rebuild``, the way back."""
+        present = set(fsio.listdir(spark, fsio.join(self.root(spark),
+                                                     "tables")))
+        old = []
+        for name in sorted(present & set(tables)):
+            vs = self.versions(spark, name)
+            try:
+                if vs:
+                    self._read_log(spark, name, vs[-1])
+            except LayoutError:
+                old.append(name)
+        if old:
+            raise LayoutError(
+                f"{self.root(spark)} holds {', '.join(old)} in the "
+                f"per-table manifest layout of earlier releases, which "
+                f"this release (format {FORMAT}) cannot read.  {rebuild}")
+
     def _commit(self, spark: SparkSession, table: str, payload_fn) -> int:
-        """Commit the next version of ``table``.  ``payload_fn(latest)``
-        receives the current latest manifest (None for a new table) and
-        returns the manifest dict to publish; it is re-invoked on every
-        retry so appends re-merge onto the fresh head after losing a
-        race.
+        """Commit the next version of ``table``'s group log.
+        ``payload_fn(members)`` receives the head version's member
+        entries ({} for a new log) and returns the member entries to
+        publish; it is re-invoked on every retry so appends re-merge
+        onto the fresh head after losing a race.
 
         The publish is ``fsio.put_if_absent`` — a compare-and-swap on
         the version-numbered name.  A scheme that cannot provide the CAS
@@ -250,7 +359,7 @@ class VersionedTableBackend:
                 vs = self.versions(spark, table)
                 latest = None
                 for v in reversed(vs):
-                    latest = self._manifest_or_none(spark, table, v)
+                    latest = self._log_or_none(spark, table, v)
                     if latest is not None:
                         break
                 # new versions are allocated above ALL existing names,
@@ -258,11 +367,12 @@ class VersionedTableBackend:
                 # reused, so a reader can never confuse it with a live
                 # commit
                 version = (vs[-1] if vs else 0) + 1
-                doc = dict(payload_fn(latest))
-                doc["version"] = version
+                members = payload_fn(dict(latest["members"])
+                                     if latest else {})
                 # globally-unique commit identity: version numbers
-                # restart at 1 whenever a table is dropped and rebuilt
-                doc["id"] = uuid.uuid4().hex
+                # restart at 1 whenever a group is dropped and rebuilt
+                doc = {"format": FORMAT, "version": version,
+                       "id": uuid.uuid4().hex, "members": members}
                 dest = self._manifest_path(spark, table, version)
                 tmp = fsio.join(self._table_dir(spark, table),
                                 f".tmp-{uuid.uuid4().hex}.json")
@@ -275,6 +385,35 @@ class VersionedTableBackend:
             f"versioned commit on {table}: lost {_MAX_COMMIT_RETRIES} "
             f"version races — contention too high")
 
+    def publish(self, spark: SparkSession, staged: list) -> int:
+        """Publish the staged member changes (``None`` skipped) as ONE
+        version of their group's log: all of them or, on a crash or a
+        failed check (ConcurrentWriteError; the segments stay for
+        ``vacuum``), none.  Changes apply in order, so two to one member
+        compose; then the due ``fold``s run.  Returns the version."""
+        staged = [s for s in staged if s is not None]
+        groups = {_split(s.table)[0] for s in staged}
+        if len(groups) != 1:
+            raise ValueError(f"one commit publishes one group, got "
+                             f"{sorted(groups)}")
+
+        def payload(members: dict) -> dict:
+            for s in staged:
+                member = _split(s.table)[1]
+                s.entry = s.payload(members.get(member))
+                if s.entry is None:
+                    members.pop(member, None)
+                else:
+                    members[member] = s.entry
+            return members
+
+        version = self._commit(spark, staged[0].table, payload)
+        for s in staged:
+            if s.fold is not None and s.entry is not None \
+                    and len(s.entry["segments"]) >= self.AUTO_COMPACT_AT:
+                s.fold()
+        return version
+
     # ---------------------------------------------------- segment I/O
 
     def _write_segment(self, spark: SparkSession, df: DataFrame,
@@ -284,8 +423,8 @@ class VersionedTableBackend:
         # the table name keeps segment directories legible (executed
         # plans and disk usage are attributable to their table — plan
         # tests pin "bibs_tokens" in scan paths); uniqueness comes from
-        # the uuid
-        seg = f"{table}-{uuid.uuid4().hex}"
+        # the uuid.  A group member's segments carry the member name
+        seg = f"{_split(table)[1]}-{uuid.uuid4().hex}"
         if partition_cols:
             # hive-partitioned segment dirs: readers resolving the
             # manifest get listing-time partition pruning per segment.
@@ -333,6 +472,18 @@ class VersionedTableBackend:
 
     # ------------------------------------------- tableio interface
 
+    def stage_write(self, df: DataFrame, table: str, key: str | None = None,
+                    *, partition_cols: list[str] | None = None,
+                    sort_col: str | None = None,
+                    extra: dict | None = None) -> Staged:
+        """Stage ``write``: the segment is written, the replacement of
+        the table is ``publish``'s."""
+        spark = df.sparkSession
+        seg = self._write_segment(spark, df, table, key, partition_cols,
+                                  sort_col=sort_col)
+        return Staged(table, lambda latest: self._layout(
+            df, key, [seg], partition_cols, extra, sort_col=sort_col), seg)
+
     def write(self, df: DataFrame, table: str, key: str | None = None, *,
               partition_cols: list[str] | None = None,
               sort_col: str | None = None,
@@ -341,13 +492,66 @@ class VersionedTableBackend:
         ``key`` when given, hive-partitioned by ``partition_cols`` (and
         sorted by ``sort_col`` within each partition) when given, plain
         otherwise.  ``extra`` is the new version's table metadata."""
+        self.publish(df.sparkSession, [self.stage_write(
+            df, table, key, partition_cols=partition_cols,
+            sort_col=sort_col, extra=extra)])
+
+    def stage_append(self, df: DataFrame, table: str,
+                     key: str | None = None, *,
+                     partition_cols: list[str] | None = None,
+                     sort_col: str | None = None,
+                     extra: dict | None = None,
+                     extra_merge=None,
+                     expect_extra: dict | None = None,
+                     expect_create: bool = False,
+                     fold: bool = True) -> Staged:
+        """Stage ``append`` (see there): the conformed segment is
+        written, the checks and the metadata merge run inside
+        ``publish``'s commit."""
         spark = df.sparkSession
+        try:
+            _, head = self._latest(spark, table)
+        except FileNotFoundError:
+            head = None
+        if head is not None and head["segments"]:
+            df = self._conform(df, T.StructType.fromJson(
+                json.loads(head["schema"])))
         seg = self._write_segment(spark, df, table, key, partition_cols,
                                   sort_col=sort_col)
-        self._commit(spark, table,
-                     lambda latest: self._layout(df, key, [seg],
-                                                 partition_cols, extra,
-                                                 sort_col=sort_col))
+
+        def payload(latest):
+            segs = (latest["segments"] if latest else []) + [seg]
+            head = (latest.get("extra") if latest else None) or {}
+            if expect_create and latest is not None:
+                # the caller derived its rows (and metadata) believing
+                # it was CREATING the table; another writer's creation
+                # won the race — publishing now would stamp the loser's
+                # geometry over the winner's while the rows carry
+                # whichever bucketing the loser computed
+                raise ConcurrentWriteError(
+                    f"append({table}): the table was created by a "
+                    f"concurrent writer after this caller observed it "
+                    f"absent; re-derive against the committed metadata "
+                    f"and retry")
+            if expect_extra and latest is not None:
+                for k, v in expect_extra.items():
+                    if head.get(k) != v:
+                        raise ConcurrentWriteError(
+                            f"append({table}): rows were derived under "
+                            f"{k}={v!r} but the table's head now has "
+                            f"{k}={head.get(k)!r} — a concurrent "
+                            f"geometry change landed; re-derive the "
+                            f"rows and retry")
+            if extra_merge is not None:
+                keep = extra_merge(extra, dict(head))
+            else:
+                keep = latest.get("extra") if latest else extra
+            sc = sort_col or (latest.get("sort_col") if latest else None)
+            return self._layout(df, key, segs, partition_cols,
+                                keep, sort_col=sc)
+
+        return Staged(table, payload, seg, fold=(
+            (lambda: self._fold(spark, table)) if fold else None))
 
     def append(self, df: DataFrame, table: str, key: str | None = None, *,
                partition_cols: list[str] | None = None,
@@ -383,55 +587,13 @@ class VersionedTableBackend:
         leaves ``AUTO_COMPACT_AT`` segments; a layered table whose
         segment order carries precedence (merge-on-read) passes False
         and folds with its own resolution."""
-        spark = df.sparkSession
-        try:
-            _, head = self._latest(spark, table)
-        except FileNotFoundError:
-            head = None
-        if head is not None and head["segments"]:
-            df = self._conform(df, T.StructType.fromJson(
-                json.loads(head["schema"])))
-        seg = self._write_segment(spark, df, table, key, partition_cols,
-                                  sort_col=sort_col)
-        n_after = 0
-
-        def payload(latest):
-            nonlocal n_after
-            segs = (latest["segments"] if latest else []) + [seg]
-            n_after = len(segs)
-            head = (latest.get("extra") if latest else None) or {}
-            if expect_create and latest is not None:
-                # the caller derived its rows (and metadata) believing
-                # it was CREATING the table; another writer's creation
-                # won the race — publishing now would stamp the loser's
-                # geometry over the winner's while the rows carry
-                # whichever bucketing the loser computed
-                raise ConcurrentWriteError(
-                    f"append({table}): the table was created by a "
-                    f"concurrent writer after this caller observed it "
-                    f"absent; re-derive against the committed metadata "
-                    f"and retry")
-            if expect_extra and latest is not None:
-                for k, v in expect_extra.items():
-                    if head.get(k) != v:
-                        raise ConcurrentWriteError(
-                            f"append({table}): rows were derived under "
-                            f"{k}={v!r} but the table's head now has "
-                            f"{k}={head.get(k)!r} — a concurrent "
-                            f"geometry change landed; re-derive the "
-                            f"rows and retry")
-            if extra_merge is not None:
-                keep = extra_merge(extra, dict(head))
-            else:
-                keep = latest.get("extra") if latest else extra
-            sc = sort_col or (latest.get("sort_col") if latest else None)
-            return self._layout(df, key, segs, partition_cols,
-                                keep, sort_col=sc)
-
-        self._commit(spark, table, payload)
-        if fold and n_after >= self.AUTO_COMPACT_AT:
-            self._fold(spark, table)
-        return n_after
+        staged = self.stage_append(
+            df, table, key, partition_cols=partition_cols,
+            sort_col=sort_col, extra=extra, extra_merge=extra_merge,
+            expect_extra=expect_extra, expect_create=expect_create,
+            fold=fold)
+        self.publish(df.sparkSession, [staged])
+        return len(staged.entry["segments"])
 
     @staticmethod
     def _conform(df: DataFrame, schema: T.StructType) -> DataFrame:
@@ -471,8 +633,8 @@ class VersionedTableBackend:
         store's history log) accumulates segments without bound and
         every read pays the amplification.
 
-        It runs AFTER the append's own commit, so the appended rows are
-        durable before any fold work starts — a crash mid-fold loses
+        It runs AFTER the append's own commit (``publish`` calls it), so
+        the appended rows are durable before any fold work starts — a crash mid-fold loses
         only an unreferenced segment (vacuum reclaims it), and the next
         threshold-crossing append re-folds.  The fold is the same
         one-commit ``rewrite`` as manual compaction, so appends racing
@@ -497,8 +659,7 @@ class VersionedTableBackend:
             self.compact_segments(spark, table)
 
     def compact_segment_suffix(self, spark: SparkSession, table: str,
-                               keep: int = 1,
-                               distinct: bool = False) -> int:
+                               keep: int = 1) -> int:
         """Fold ``segments[keep:]`` into ONE segment, leaving the
         prefix untouched — the MINOR-compaction analog for plain and
         partitioned append tables, whose reads union segments with no
@@ -506,8 +667,7 @@ class VersionedTableBackend:
         content-preserving by construction).  O(folded suffix) I/O;
         bounds scan-root amplification exactly like the full
         ``compact_segments`` while never rewriting the table-sized
-        base.  One ``rewrite(keep=...)``; ``distinct=True`` also folds
-        exact-duplicate rows of the suffix.  Returns the number of
+        base.  One ``rewrite(keep=...)``.  Returns the number of
         segments folded (0 when there is nothing to fold or a raced
         full rewrite replaced the list — the abort leaves the raced
         rewrite's result standing)."""
@@ -524,39 +684,48 @@ class VersionedTableBackend:
             return 0
         df = self._read_manifest_df(spark,
                                     {**manifest, "segments": token[keep:]})
-        if distinct:
-            df = df.dropDuplicates()
         ok = self.rewrite(df, table, token, keep)
         return len(token) - keep if ok else 0
 
-    def update_extra(self, spark: SparkSession, table: str, fn) -> dict:
-        """Metadata-only commit: publish a new version of ``table``
-        whose segment list and layout are the head's, unchanged, and
-        whose ``extra`` becomes ``fn(head_extra_or_None)``.  ``fn`` is
-        re-invoked on every CAS retry, so the read-modify-write is
-        serialized by the commit CAS — the atomic-counter primitive a
-        multi-driver id allocator needs (two drivers bumping a counter
-        concurrently each observe the OTHER's committed value on retry;
-        with a plain read-then-append, both would read the same head
-        and publish overlapping ranges).  A missing table is created as
-        a zero-segment manifest (pure metadata carrier — ``exists``
-        and ``latest_manifest`` work on it; there is nothing to read).
-        Returns the extra dict that actually committed."""
-        out: dict = {}
-
+    def stage_extra(self, table: str, fn, create: bool = True) -> Staged:
+        """Stage a metadata-only change: the member's ``extra`` becomes
+        ``fn(head_extra_or_None)``, re-invoked on every CAS retry so the
+        read-modify-write is serialized by the CAS.  A missing member is
+        created as a zero-segment metadata carrier when ``create``,
+        else left absent."""
         def payload(latest):
-            nonlocal out
-            out = dict(fn(latest.get("extra") if latest else None))
+            if latest is None and not create:
+                return None
+            extra = dict(fn(latest.get("extra") if latest else None))
             if latest is not None:
-                doc = {k: v for k, v in latest.items()
-                       if k not in ("version", "id")}
-                doc["extra"] = out
-                return doc
+                return {**latest, "extra": extra}
             return {"segments": [], "key": None,
-                    "schema": T.StructType([]).json(), "extra": out}
+                    "schema": T.StructType([]).json(), "extra": extra}
 
-        self._commit(spark, table, payload)
-        return out
+        return Staged(table, payload)
+
+    def stage_check(self, table: str, segments: list[str] | None) -> Staged:
+        """A check, not a change: the commit raises ConcurrentWriteError
+        unless the member's segment list equals ``segments`` (None:
+        absent) — a derivation publishing only against its source's
+        snapshot."""
+        def payload(latest):
+            if (None if latest is None else list(latest["segments"])) \
+                    != segments:
+                raise ConcurrentWriteError(
+                    f"{table} changed after the caller's snapshot — "
+                    f"re-derive and retry")
+            return latest
+
+        return Staged(table, payload)
+
+    def update_extra(self, spark: SparkSession, table: str, fn) -> dict:
+        """Metadata-only commit (``stage_extra``, published alone): the
+        atomic counter a multi-driver id allocator needs (racing bumps
+        each see the other's on retry).  Returns the committed extra."""
+        staged = self.stage_extra(table, fn)
+        self.publish(spark, [staged])
+        return staged.entry["extra"]
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         _, manifest = self._latest(spark, table)
@@ -582,16 +751,25 @@ class VersionedTableBackend:
                      version: int) -> DataFrame:
         """Time travel: the table exactly as committed at ``version``.
         Raises FileNotFoundError if that version was vacuumed."""
+        return self._read_manifest_df(
+            spark, self._read_manifest(spark, table, version))
+
+    def _read_manifest(self, spark: SparkSession, table: str,
+                       version: int) -> dict:
+        """``table``'s entry at ``version``, or FileNotFoundError when
+        that version was vacuumed, is a torn remnant, or lacks the
+        member."""
         if version not in self.versions(spark, table):
             raise FileNotFoundError(
                 f"version {version} of {table} does not exist "
                 f"(vacuumed or never committed)")
-        manifest = self._manifest_or_none(spark, table, version)
-        if manifest is None:
+        doc = self._log_or_none(spark, table, version)
+        entry = None if doc is None else self._member(doc, table)
+        if entry is None:
             raise FileNotFoundError(
-                f"version {version} of {table} is a torn crash remnant "
-                f"(its commit was never acknowledged)")
-        return self._read_manifest_df(spark, manifest)
+                f"version {version} of {table} is unreadable: a torn "
+                f"crash remnant, or the table is absent there")
+        return entry
 
     def _read_manifest_df(self, spark: SparkSession,
                           manifest: dict) -> DataFrame:
@@ -615,40 +793,34 @@ class VersionedTableBackend:
     def restore_version(self, spark: SparkSession, table: str,
                         version: int) -> None:
         """Roll the table's HEAD back to ``version``'s exact content by
-        publishing that manifest's segment list as the next version —
-        the undo primitive for a caller that appended and then needs
-        its own unacknowledged appends gone (e.g. a streaming sink
-        replaying a crashed batch).  Works even if a compaction folded
-        the table in between: the restored manifest references the
-        ORIGINAL segments, which stay in the data pool until vacuum
-        (so keep the vacuum retention horizon above the longest
-        plausible replay window, the same contract as Delta's).
-        Appends committed by OTHER writers after ``version`` are
-        dropped too — single-logical-writer per table, by contract."""
-        manifest = self._manifest_or_none(spark, table, version)
-        if manifest is None:
-            raise FileNotFoundError(
-                f"restore_version({table}, {version}): that version is "
-                f"not readable (vacuumed or torn) — cannot roll back")
-
-        def payload(latest):
-            doc = {k: manifest[k] for k in
-                   ("segments", "key", "schema")}
-            for opt in ("partition_cols", "extra"):
-                if opt in manifest:
-                    doc[opt] = manifest[opt]
-            return doc
-
-        self._commit(spark, table, payload)
+        publishing that entry's segment list as the next group version
+        (the group's other members are untouched) — the undo primitive
+        for a caller that appended and then needs its own
+        unacknowledged appends gone (e.g. a streaming sink replaying a
+        crashed batch).  Works even if a compaction folded the table in
+        between: the restored entry references the ORIGINAL segments,
+        which stay in the data pool until vacuum (so keep the vacuum
+        retention horizon above the longest plausible replay window,
+        the same contract as Delta's).  Appends committed by OTHER
+        writers after ``version`` are dropped too —
+        single-logical-writer per table, by contract."""
+        entry = {k: v for k, v in self._read_manifest(
+            spark, table, version).items() if k not in ("version", "id")}
+        self.publish(spark, [Staged(table, lambda latest: dict(entry))])
 
     def exists(self, spark: SparkSession, table: str) -> bool:
-        return bool(self.versions(spark, table))
+        try:
+            self._latest(spark, table)
+            return True
+        except FileNotFoundError:
+            return False
 
     def drop(self, spark: SparkSession, table: str) -> None:
-        """Remove the table's manifests.  Its segments stay in the data
+        """Remove a member from its group in one commit, or — for a
+        plain name — the whole group log.  Segments stay in the data
         pool until vacuum.
-        Any external commit records for the removed names are dropped
-        too — a recreated table restarts at version 1, and a stale
+        Any external commit records for a removed log are dropped too —
+        a recreated group restarts at version 1, and a stale
         acknowledged claim for the OLD v1 would make every new
         external-CAS acquire lose forever (the recreate livelock;
         regression-tested in test_commit_schemes.py).  Claims go FIRST:
@@ -656,6 +828,10 @@ class VersionedTableBackend:
         the version allocator already tolerates and a re-run of drop
         clears), never orphan CLAIMS (which would reintroduce the
         livelock the release exists to prevent)."""
+        if "/" in table:
+            if self.exists(spark, table):
+                self.publish(spark, [Staged(table, lambda latest: None)])
+            return
         fsio.get_commit_scheme().forget_prefix(
             spark, self._table_dir(spark, table))
         fsio.rmtree(spark, self._table_dir(spark, table))
@@ -673,8 +849,7 @@ class VersionedTableBackend:
 
     # --------------------------------------------------- maintenance
 
-    def compact_segments(self, spark: SparkSession, table: str,
-                         distinct: bool = False) -> int:
+    def compact_segments(self, spark: SparkSession, table: str) -> int:
         """Fold a multi-segment table into ONE fresh segment (the
         OPTIMIZE analog for this backend): ``compact_segment_suffix``
         with ``keep=0``.  Matters most for partitioned tables, whose
@@ -684,18 +859,16 @@ class VersionedTableBackend:
         what table formats schedule as OPTIMIZE.  Appends racing the
         fold are carried (their segments are simply not compacted yet),
         and a raced rewrite that replaced the list wins — this fold then
-        commits nothing.  ``distinct=True`` also folds exact-duplicate
-        rows (e.g. band keys a crashed append replayed).  Returns the
-        number of segments folded (0 = already compact, or a raced
-        rewrite already did the work)."""
-        return self.compact_segment_suffix(spark, table, keep=0,
-                                           distinct=distinct)
+        commits nothing.  Returns the number of segments folded (0 =
+        already compact, or a raced rewrite already did the work)."""
+        return self.compact_segment_suffix(spark, table, keep=0)
 
     def rewrite(self, df: DataFrame, table: str, token: list[str],
                 keep: int = 0, *, exact: bool = False,
                 extra: dict | None = None, extra_merge=None,
                 sort_col: str | None = None) -> bool:
-        """The one rewrite primitive: every fold and re-derive publishes
+        """The one rewrite primitive (``stage_rewrite``, published
+        alone): every fold and re-derive publishes
         through it.  Writes ``df`` as ONE segment in the head's layout
         (key / partition_cols / sort_col) and makes ONE manifest commit
         of ``token[:keep] + [seg] + gained``, where ``token`` is the
@@ -726,6 +899,26 @@ class VersionedTableBackend:
         given, else ``extra`` when given, else the head's.  The schema
         is ``df``'s for a whole-table rewrite (``keep=0``) and the
         head's otherwise."""
+        staged = self.stage_rewrite(df, table, token, keep, exact=exact,
+                                    extra=extra, extra_merge=extra_merge,
+                                    sort_col=sort_col)
+        try:
+            self.publish(df.sparkSession, [staged])
+            return True
+        except ConcurrentWriteError:
+            try:
+                fsio.rmtree(df.sparkSession,
+                            self._data_dir(df.sparkSession, staged.segment))
+            except Exception:   # pragma: no cover - best-effort cleanup
+                pass            # vacuum reclaims unreferenced segments
+            return False
+
+    def stage_rewrite(self, df: DataFrame, table: str, token: list[str],
+                      keep: int = 0, *, exact: bool = False,
+                      extra: dict | None = None, extra_merge=None,
+                      sort_col: str | None = None) -> Staged:
+        """Stage ``rewrite``: the segment is written; the token check
+        raises ConcurrentWriteError inside ``publish``'s commit."""
         if not 0 <= keep < len(token):
             raise ValueError(f"keep must be in [0, {len(token)}), "
                              f"got {keep}")
@@ -758,21 +951,14 @@ class VersionedTableBackend:
                 doc["extra"] = dict(merged)
             return doc
 
-        try:
-            self._commit(spark, table, payload)
-            return True
-        except ConcurrentWriteError:
-            try:
-                fsio.rmtree(spark, self._data_dir(spark, seg))
-            except Exception:   # pragma: no cover - best-effort cleanup
-                pass            # vacuum reclaims unreferenced segments
-            return False
+        return Staged(table, payload, seg)
 
     def vacuum(self, spark: SparkSession, keep_last: int = 1,
                min_age_seconds: float = 3600.0) -> list[str]:
         """Reclaim space: retain only the last ``keep_last`` committed
-        manifests of every table, then delete data segments referenced
-        by no retained manifest.  Returns the deleted segment ids.
+        versions of every group log, then delete data segments
+        referenced by no member of a retained version.  Returns the
+        deleted segment ids.
 
         ``min_age_seconds`` is the retention guard that makes vacuum
         safe to run CONCURRENTLY with writers: an in-flight commit is
@@ -805,7 +991,7 @@ class VersionedTableBackend:
         horizon = time.time() - min_age_seconds
         age_skipped = 0
         # counts EVERY reclamation kind (superseded manifests, torn
-        # remnants, stale .tmp files, retired stages), not just data
+        # remnants, stale .tmp files), not just data
         # segments: a run that cleaned real garbage but no segments
         # must not warn that nothing was reclaimed
         other_reclaimed = 0
@@ -829,29 +1015,19 @@ class VersionedTableBackend:
                     raise
                 return False
 
+        def segments(doc: dict) -> set[str]:
+            return {s for entry in doc["members"].values()
+                    for s in entry["segments"]}
+
         tables_dir = fsio.join(self.root(spark), "tables")
-        # ONE manifest read per (table, version) for the whole vacuum:
-        # the retired-stage pass, head resolution, and retention logic
-        # all reuse this map (each read is a driver round-trip — tripling
-        # them tripled vacuum wall time on many-table warehouses)
+        # ONE manifest read per (group, version) for the whole vacuum:
+        # head resolution and retention logic both reuse this map (each
+        # read is a driver round-trip)
         manifests_by_table: dict[str, dict[int, dict | None]] = {
-            table: {v: self._manifest_or_none(spark, table, v)
+            table: {v: self._log_or_none(spark, table, v)
                     for v in self.versions(spark, table)}
             for table in fsio.listdir(spark, tables_dir)
         }
-
-        for table, manifests in manifests_by_table.items():
-            if (table.endswith(_RETIRED_STAGE_SUFFIXES) and manifests
-                    and old_enough(self._manifest_path(spark, table,
-                                                       max(manifests)))):
-                # a stage table of the retired staged-swap protocol
-                # (written by an earlier release; no rewrite stages
-                # anything now): aged, it is a crash leftover whose
-                # content was either published or never acknowledged —
-                # drop it so it stops pinning its segments
-                self.drop(spark, table)
-                manifests_by_table[table] = {}
-                other_reclaimed += 1
         referenced: set[str] = set()
         for table, manifests in manifests_by_table.items():
             vs = sorted(manifests)
@@ -868,14 +1044,14 @@ class VersionedTableBackend:
                         spark, self._manifest_path(spark, table, v))
                     other_reclaimed += 1
             for v in live[-keep_last:]:
-                referenced.update(manifests[v]["segments"])
+                referenced.update(segments(manifests[v]))
             # manifests retained only by the age gate still pin their
             # segments — reclaiming a superseded-but-young version's
             # files while its manifest stays readable would be worse
             for v in live[:-keep_last]:
                 if fsio.exists(spark,
                                self._manifest_path(spark, table, v)):
-                    referenced.update(manifests[v]["segments"])
+                    referenced.update(segments(manifests[v]))
             for v in vs:
                 # torn remnants below the committed head can never be
                 # read or re-targeted; age-gated like tmp files because

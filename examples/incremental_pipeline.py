@@ -100,10 +100,10 @@ def main() -> None:
 
         # ---- maintenance: fold appended files ------------------------
         be = tableio.get_backend()
-        before = len(be.read(spark, "demo_mh_sigs").inputFiles())
+        before = len(be.read(spark, "demo_mh/demo_mh_sigs").inputFiles())
         mh.compact()
         ei.compact()
-        after = len(be.read(spark, "demo_mh_sigs").inputFiles())
+        after = len(be.read(spark, "demo_mh/demo_mh_sigs").inputFiles())
         print(f"compaction: signature table {before} -> {after} files")
 
         # ---- the production posture, in one stanza --------------------
@@ -115,7 +115,7 @@ def main() -> None:
         #   from dlx_spark import fsio, tableio
         #   fsio.set_commit_scheme(fsio.SingleDriverCASScheme())  # s3a
         #   be = tableio.get_backend()
-        #   be.compact_segments(spark, "demo_mh_sigs")   # fold appends
+        #   be.compact_segments(spark, "demo_mh/demo_mh_sigs")   # fold appends
         #   be.vacuum(spark, keep_last=2)                # retention-gated
         #
         # tests/test_commit_schemes.py runs this composition end-to-end.
@@ -125,7 +125,7 @@ def main() -> None:
         from dlx_spark.operators.dedup_index import EmbeddingIndex
         for cls, name in ((MinHashIndex, "demo_mh"), (DigestIndex, "demo_dg"),
                           (EmbeddingIndex, "demo_emb")):
-            if tableio.get_backend().exists(spark, f"{name}_meta"):
+            if tableio.get_backend().exists(spark, f"{name}/{name}_meta"):
                 cls(spark, name).drop()
         shutil.rmtree(work, ignore_errors=True)
     print("done")

@@ -51,10 +51,10 @@ def main() -> None:
         be = VersionedTableBackend(root=os.path.join(workdir, "vroot"))
         tableio.set_backend(be)
         idx = MinHashIndex.create(docs, "demo_idx")
-        snapshot = be.read(spark, "demo_idx_sigs")   # pinned snapshot
+        snapshot = be.read(spark, "demo_idx/demo_idx_sigs")   # pinned snapshot
         idx.append(docs.withColumn("doc_id", F.col("doc_id") + 1000))
         print(f"snapshot still v1: {snapshot.count()} rows; "
-              f"head: {be.read(spark, 'demo_idx_sigs').count()} rows")
+              f"head: {be.read(spark, 'demo_idx/demo_idx_sigs').count()} rows")
         idx.drop()
 
         # ---- 2. append-heavy ingest: the appends fold themselves

@@ -62,7 +62,7 @@ def touched_buckets():
         keys = similarity.banded_lsh_keys(
             probes, p["bands"], p["n_planes"], p["seed"], p["vec_col"],
             p["id_col"], p["dim"]).select("band", "bucket").distinct()
-        brute = get_backend().read(idx.spark, f"{idx.name}_buckets") \
+        brute = get_backend().read(idx.spark, f"{idx.name}/{idx.name}_buckets") \
             .join(keys, ["band", "bucket"])
         return tuple(sorted(tuple(r) for r in df.select(
             "band", "bucket", "id").collect()) for df in (grouped, brute))

@@ -127,7 +127,7 @@ def test_embedding_index_ranks_an_over_cap_bucket_whole(spark):
     probes = spark.createDataFrame([(100_000 + i, vec()) for i in range(8)],
                                    "vec_id long, embedding array<double>")
     idx = EmbeddingIndex.create(corpus, "t_emb_overcap", n_planes=2, dim=8)
-    largest = (tableio.get_backend().read(spark, "t_emb_overcap_buckets")
+    largest = (tableio.get_backend().read(spark, "t_emb_overcap/t_emb_overcap_buckets")
                .groupBy("bucket").count().agg(F.max("count")).first()[0])
     assert largest > BUCKET_CAP
 
@@ -193,8 +193,8 @@ def test_banded_embedding_index_layout_and_recall(spark):
     # storage: vectors once, one key row per band
     be = tableio.get_backend()
     for name, keys in (("t_emb_single", 240), ("t_emb_banded", 4 * 240)):
-        assert be.read(spark, f"{name}_vecs").count() == 240
-        assert be.read(spark, f"{name}_buckets").count() == keys
+        assert be.read(spark, f"{name}/{name}_vecs").count() == 240
+        assert be.read(spark, f"{name}/{name}_buckets").count() == keys
 
     # an indexed copy of the probe ranks first, so k=2 finds the twin
     # iff SOME band put it in a probed bucket

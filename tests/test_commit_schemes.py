@@ -99,39 +99,6 @@ def test_crash_between_copy_and_delete_leaves_complete_marker(
     assert not fsio.exists(spark, p + ".tmp")
 
 
-@pytest.mark.slow
-def test_torn_marker_from_midcopy_crash_reads_as_safe(spark, tmp_path):
-    """The harsh window: a crash mid-copy tears the destination.  The
-    store's open-time recovery — a REAL marker consumer — must treat a
-    torn token-index dirty marker as 'rebuild wholesale' (always safe),
-    never act on the garbage payload, now produced by the simulated
-    scheme instead of hand-written garbage."""
-    from dlx_spark.marc.record import Bib
-    from dlx_spark.marc.store import MarcStore
-
-    root = str(tmp_path / "wh")
-    st = MarcStore(spark, root)               # clean open, no markers
-    st.commit(Bib({"_id": 3, "245": [{"indicators": [" ", " "],
-                                      "subfields": [{"code": "a",
-                                                     "value": "Torn probe"}]}]}))
-    st.build_search_index("bib")
-    fsio.set_commit_scheme(fsio.NonAtomicRenameScheme(
-        fault=crash_at("mid_copy")))
-    marker = fsio.join(st.root, "_dirty_bibs_tokens.json")
-    with pytest.raises(SimulatedCrash):
-        fsio.write_text_atomic(spark, marker,
-                               json.dumps({"base_segments": ["x" * 64]}))
-    torn = fsio.read_text(spark, marker)
-    with pytest.raises(ValueError):
-        json.loads(torn)                      # genuinely torn JSON
-    fsio.set_commit_scheme(fsio.HadoopRenameScheme())
-    st2 = MarcStore(spark, root)              # recovery runs on open
-    assert not fsio.exists(spark, marker)     # settled, not acted on
-    assert st2.bibs().count() == 1
-    assert [r["_id"] for r in
-            st2.search("bib", "245__a:torn").collect()] == [3]
-
-
 # ------------------------------------------- versioned backend + schemes
 
 
@@ -294,7 +261,7 @@ def test_torn_manifest_skipped_and_number_never_reused(spark, be):
 
     assert be.versions(spark, "t_torn") == [1, 2]       # remnant listed
     with pytest.raises(ValueError):
-        be._read_manifest(spark, "t_torn", 2)           # genuinely torn
+        be._read_log(spark, "t_torn", 2)                # genuinely torn
     # reader never sees the torn manifest — resolves v1
     assert [r["id"] for r in be.read(spark, "t_torn").collect()] == [1]
     with pytest.raises(FileNotFoundError, match="torn"):
@@ -442,7 +409,7 @@ def test_streaming_ingest_composes_all_three_seams(spark, be, tmp_path):
         for i in range(20)
     ], "doc_id long, text string")
     MinHashIndex.create(corpus, "t_cas_stream")
-    v0 = be.versions(spark, "t_cas_stream_sigs")[-1]
+    v0 = be.versions(spark, "t_cas_stream/t_cas_stream_sigs")[-1]
 
     indir = tmp_path / "in"
     indir.mkdir()
@@ -457,7 +424,7 @@ def test_streaming_ingest_composes_all_three_seams(spark, be, tmp_path):
         str(tmp_path / "ckpt"), threshold=0.7)
     q.awaitTermination(120)
     assert {r["doc_id"] for r in spark.read.parquet(out).collect()} == {101}
-    assert be.versions(spark, "t_cas_stream_sigs")[-1] > v0
+    assert be.versions(spark, "t_cas_stream/t_cas_stream_sigs")[-1] > v0
 
     # batch 2 near-dups batch 1's survivor: cross-batch state holds,
     # and the dedup decision came through CAS-committed manifests
@@ -470,7 +437,7 @@ def test_streaming_ingest_composes_all_three_seams(spark, be, tmp_path):
     q.awaitTermination(120)
     assert {r["doc_id"] for r in spark.read.parquet(out)
             .filter(F.col("batch") == 1).collect()} == set()
-    assert be.read(spark, "t_cas_stream_sigs").count() == 21
+    assert be.read(spark, "t_cas_stream/t_cas_stream_sigs").count() == 21
     MinHashIndex(spark, "t_cas_stream").drop()
 
 
@@ -744,11 +711,11 @@ def test_streaming_ingest_auto_compaction_bounds_segments(
     assert kept == {2000 + b for b in range(8)}
     # the bound: 1 create + 8 appends would be 9 segments unbounded —
     # the inline fold kept every index table under the threshold
-    for t in ("t_ac_stream_sigs", "t_ac_stream_bands"):
+    for t in ("t_ac_stream/t_ac_stream_sigs", "t_ac_stream/t_ac_stream_bands"):
         assert be.exists(spark, t), t
         n_seg = len(be.snapshot_token(spark, t))
         assert n_seg < 3, (t, n_seg)
-    assert be.read(spark, "t_ac_stream_sigs").count() == 10 + 8
+    assert be.read(spark, "t_ac_stream/t_ac_stream_sigs").count() == 10 + 8
     MinHashIndex(spark, "t_ac_stream").drop()
 
 

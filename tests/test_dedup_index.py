@@ -140,7 +140,7 @@ def test_minhash_dedup_batch_job_budget(spark, split_corpus, count_jobs):
             assert n <= budget, (name, n)
             assert clean.count() > 0
             be = tableio.get_backend()
-            for t in (f"{name}_sigs", f"{name}_bands"):
+            for t in (f"{name}/{name}_sigs", f"{name}/{name}_bands"):
                 manifest = be.latest_manifest(spark, t)
                 assert len(manifest["segments"]) == 2
                 assert len(be.segment_df(spark, manifest, 1).inputFiles()) == 1
@@ -221,7 +221,7 @@ def test_digest_antijoin_broadcasts_index_side(spark, split_corpus):
     idx = DigestIndex.create(corpus, "t_dg_idx2")
     try:
         fresh = idx._batch_digests(batch).join(
-            _tbl(spark, "t_dg_idx2_digests"), "digest", "left_anti")
+            _tbl(spark, "t_dg_idx2/t_dg_idx2_digests"), "digest", "left_anti")
         assert {r["doc_id"] for r in fresh.collect()} >= set(range(240, 250))
         plan = fresh._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
@@ -301,7 +301,7 @@ def test_streaming_neardedup_ingest(spark, split_corpus, tmp_path):
 
         # replay batch 1 through the raw fn (simulating a foreachBatch
         # redelivery): output identical, index unchanged
-        n_sigs = _tbl(spark, "t_mh_stream_sigs").count()
+        n_sigs = _tbl(spark, "t_mh_stream/t_mh_stream_sigs").count()
         assert n_sigs > 120  # corpus + batch-0 survivors + doc 600
         # same checkpoint → same run id.  Committed-marker path: the
         # redelivery of the fully committed batch skips entirely.
@@ -314,7 +314,7 @@ def test_streaming_neardedup_ingest(spark, split_corpus, tmp_path):
             "doc_id long, text string")
         fn(replay_df, 0)
         assert read_batch(0) == clean1
-        assert _tbl(spark, "t_mh_stream_sigs").count() == n_sigs
+        assert _tbl(spark, "t_mh_stream/t_mh_stream_sigs").count() == n_sigs
 
         # crash-window path through the REAL sink: strip the committed
         # marker and plant the attempt marker (as a crashed first
@@ -328,7 +328,7 @@ def test_streaming_neardedup_ingest(spark, split_corpus, tmp_path):
         assert read_batch(0) == clean1
         assert os.path.exists(os.path.join(rdir, "_committed_batch_0"))
         assert not os.path.exists(os.path.join(rdir, "_attempt_batch_0"))
-        assert _tbl(spark, "t_mh_stream_sigs").count() == n_sigs
+        assert _tbl(spark, "t_mh_stream/t_mh_stream_sigs").count() == n_sigs
 
         # deleted-and-recreated checkpoint: batch ids restart at 0 but
         # land under a NEW run= directory — the old output is intact and
@@ -392,7 +392,7 @@ def test_streaming_neardedup_crash_window(spark, split_corpus, tmp_path):
         assert got == want
         assert not os.path.exists(out + "/run=default/_attempt_batch_0")
         # and the index holds exactly one signature row per survivor
-        dup_ids = (_tbl(spark, "t_mh_crash_sigs").groupBy("id").count()
+        dup_ids = (_tbl(spark, "t_mh_crash/t_mh_crash_sigs").groupBy("id").count()
                    .filter("count > 1").count())
         assert dup_ids == 0
     finally:
@@ -417,7 +417,7 @@ def test_append_after_failed_compaction_survives_reopen(spark, monkeypatch):
         commit = VersionedTableBackend._commit
 
         def fail_on_digests(self, spark, table, payload_fn):
-            if table == f"{name}_digests":
+            if table == f"{name}/{name}_digests":
                 raise RuntimeError("simulated crash at the compaction commit")
             return commit(self, spark, table, payload_fn)
 
@@ -446,7 +446,7 @@ def test_compact_folds_appended_files(spark, split_corpus):
         for i in range(3):
             idx.append(batch.withColumn(
                 "doc_id", F.col("doc_id") + (1000 * (i + 1))))
-        tables = ("t_mh_cpt_sigs", "t_mh_cpt_bands")
+        tables = ("t_mh_cpt/t_mh_cpt_sigs", "t_mh_cpt/t_mh_cpt_bands")
         assert all(_segments(spark, t) == 4 for t in tables)
         before_files = {t: len(_tbl(spark, t).inputFiles()) for t in tables}
         clone = corpus.limit(1).withColumn("doc_id", F.lit(777_777).cast("long"))
@@ -470,41 +470,43 @@ def test_compact_folds_appended_files(spark, split_corpus):
 
 
 @pytest.mark.slow
-def test_append_crash_between_band_and_sig_writes(spark, split_corpus):
-    """append writes bands first and keys the replay guard on sigs: a
-    crash between the two writes must NOT lose the batch's band keys —
-    the replayed append re-runs both writes, at worst duplicating band
-    rows, which probe() dedups and compact() physically removes."""
-    from dlx_spark.operators import dedup
+def test_append_crash_between_band_and_sig_writes(spark, split_corpus,
+                                                  monkeypatch):
+    """An append's band keys and signatures publish in ONE commit of the
+    index's table group: a crash at that publish leaves both tables as
+    they were (no band rows without signatures, no duplicate band rows
+    for a replay to fold), and the replayed append indexes the batch
+    fully in one more commit."""
+    from dlx_spark import fsio
 
     _, corpus, batch = split_corpus
     idx = MinHashIndex.create(corpus, "t_mh_crash2")
+    be = tableio.get_backend()
     try:
-        # simulate the crashed first attempt: bands written, sigs not
-        p = idx.params
-        sigs = idx._batch_sigs(batch)
-        tableio.get_backend().append(dedup.band_buckets(sigs, p["bands"]),
-                                     "t_mh_crash2_bands", "bucket")
+        tables = ("t_mh_crash2/t_mh_crash2_sigs",
+                  "t_mh_crash2/t_mh_crash2_bands")
+        before = {t: be.snapshot_token(spark, t) for t in tables}
+        real = fsio.put_if_absent
 
-        # the replayed append must still index the batch fully
+        def boom(spark_, tmp, dest):
+            if "/tables/t_mh_crash2/" in dest:
+                raise RuntimeError("crash at the index publish")
+            return real(spark_, tmp, dest)
+
+        monkeypatch.setattr(fsio, "put_if_absent", boom)
+        with pytest.raises(RuntimeError, match="index publish"):
+            idx.append(batch)
+        monkeypatch.undo()
+        assert {t: be.snapshot_token(spark, t) for t in tables} == before
+
+        # the replayed append indexes the batch fully, in one commit
+        v0 = be.versions(spark, tables[0])[-1]
         idx.append(batch, if_absent=True)
+        assert be.versions(spark, tables[0])[-1] == v0 + 1
         batch_ids = {r["doc_id"] for r in batch.collect()}
-        indexed = {r["id"] for r in _tbl(spark, "t_mh_crash2_sigs").collect()}
-        assert batch_ids <= indexed
-
-        # duplicate band rows exist but probe results are still unique
-        clone = batch.limit(1).withColumn("doc_id", F.lit(444_444).cast("long"))
-        hits = idx.probe(clone, 0.99).collect()
-        keys = [(r["corpus_id"], r["batch_id"]) for r in hits]
-        assert len(keys) == len(set(keys)) and len(keys) >= 1
-
-        # compaction folds the duplicates away
-        before_files = len(_tbl(spark, "t_mh_crash2_bands").inputFiles())
-        idx.compact()
-        bands = _tbl(spark, "t_mh_crash2_bands")
+        assert batch_ids <= {r["id"] for r in _tbl(spark, tables[0]).collect()}
+        bands = _tbl(spark, tables[1])
         assert bands.count() == bands.distinct().count()
-        assert _segments(spark, "t_mh_crash2_bands") == 1
-        assert len(bands.inputFiles()) < before_files
     finally:
         idx.drop()
 
@@ -600,10 +602,10 @@ def test_simhash_index_probe_equals_full_cross_pairs(spark, split_corpus):
         one = clean.limit(1).withColumn("doc_id", F.lit(555_555).cast("long"))
         assert idx.probe(one, max_hamming=0).count() >= 1
 
-        before_files = len(_tbl(spark, "t_sh_idx_fps").inputFiles())
+        before_files = len(_tbl(spark, "t_sh_idx/t_sh_idx_fps").inputFiles())
         idx.compact()
-        assert _segments(spark, "t_sh_idx_fps") == 1
-        assert len(_tbl(spark, "t_sh_idx_fps").inputFiles()) < before_files
+        assert _segments(spark, "t_sh_idx/t_sh_idx_fps") == 1
+        assert len(_tbl(spark, "t_sh_idx/t_sh_idx_fps").inputFiles()) < before_files
 
         # the 4-band pigeonhole cannot guarantee recall beyond hamming
         # 3: larger thresholds must refuse, not silently miss pairs
@@ -735,7 +737,7 @@ def test_reader_during_compaction(spark, split_corpus):
     _, corpus, _ = split_corpus
     idx = MinHashIndex.create(corpus, "t_mh_reader")
     try:
-        before = _tbl(spark, "t_mh_reader_sigs")
+        before = _tbl(spark, "t_mh_reader/t_mh_reader_sigs")
         want = {r["id"] for r in before.select("id").collect()}
         idx.append(corpus.withColumn("doc_id", F.col("doc_id") + 5000))
         idx.compact()
@@ -743,7 +745,7 @@ def test_reader_during_compaction(spark, split_corpus):
         assert got_old == want
         want |= {i + 5000 for i in want}
         fresh = {r["id"] for r in
-                 _tbl(spark, "t_mh_reader_sigs").select("id").collect()}
+                 _tbl(spark, "t_mh_reader/t_mh_reader_sigs").select("id").collect()}
         assert fresh == want
     finally:
         idx.drop()
@@ -761,15 +763,15 @@ def test_digest_index_replay_safe(spark, split_corpus):
         first = idx.dedup_batch(batch, replay_safe=False)
         want = sorted(r["doc_id"] for r in first.collect())
         assert want
-        n_rows = _tbl(spark, "t_dg_replay_digests").count()
+        n_rows = _tbl(spark, "t_dg_replay/t_dg_replay_digests").count()
 
         # naive replay (no replay_safe): everything looks ingested
         assert idx.filter_new(batch).count() == 0
         # replay_safe replay: identical output, no index growth, no dups
         again = idx.dedup_batch(batch, replay_safe=True)
         assert sorted(r["doc_id"] for r in again.collect()) == want
-        assert _tbl(spark, "t_dg_replay_digests").count() == n_rows
-        dups = (_tbl(spark, "t_dg_replay_digests").groupBy("digest").count()
+        assert _tbl(spark, "t_dg_replay/t_dg_replay_digests").count() == n_rows
+        dups = (_tbl(spark, "t_dg_replay/t_dg_replay_digests").groupBy("digest").count()
                 .filter("count > 1").count())
         assert dups == 0
     finally:
@@ -798,8 +800,8 @@ def test_streaming_two_stage_exact_then_near_dedup(spark, split_corpus, tmp_path
         # dups (215-221) die in stage 2; fresh docs survive
         assert got and not any(200 <= d < 205 for d in got)
         assert not any(215 <= d <= 221 for d in got)
-        n_dg = _tbl(spark, "t_dg_two_digests").count()
-        n_mh = _tbl(spark, "t_mh_two_sigs").count()
+        n_dg = _tbl(spark, "t_dg_two/t_dg_two_digests").count()
+        n_mh = _tbl(spark, "t_mh_two/t_mh_two_sigs").count()
 
         # crash window: strip committed, plant attempt, replay
         fsio.remove(spark, out + "/run=default/_committed_batch_0")
@@ -807,8 +809,8 @@ def test_streaming_two_stage_exact_then_near_dedup(spark, split_corpus, tmp_path
         fn(batch, 0)
         assert {r["doc_id"] for r in
                 spark.read.parquet(out + "/run=default/batch=0").collect()} == got
-        assert _tbl(spark, "t_dg_two_digests").count() == n_dg
-        assert _tbl(spark, "t_mh_two_sigs").count() == n_mh
+        assert _tbl(spark, "t_dg_two/t_dg_two_digests").count() == n_dg
+        assert _tbl(spark, "t_mh_two/t_mh_two_sigs").count() == n_mh
     finally:
         DigestIndex(spark, "t_dg_two").drop()
         MinHashIndex(spark, "t_mh_two").drop()
@@ -898,7 +900,7 @@ def test_embedding_dedup_batch_and_replay(spark, emb_split):
         # clusters share members across the split, so MOST of the batch
         # is recognized as already ingested
         assert len(got) < batch.count() / 2
-        n_rows = _tbl(spark, "t_emb_idx2_vecs").count()
+        n_rows = _tbl(spark, "t_emb_idx2/t_emb_idx2_vecs").count()
 
         # a genuinely new direction survives and is appended
         dim = len(_emb_rows()[0][1])
@@ -908,12 +910,12 @@ def test_embedding_dedup_batch_and_replay(spark, emb_split):
                                       "vec_id long, embedding array<double>")
         clean2 = idx.dedup_batch(novel, threshold=0.9)
         assert [r["vec_id"] for r in clean2.collect()] == [500]
-        assert _tbl(spark, "t_emb_idx2_vecs").count() == n_rows + 1
+        assert _tbl(spark, "t_emb_idx2/t_emb_idx2_vecs").count() == n_rows + 1
 
         # crash replay of the same batch: identical output, no growth
         replay = idx.dedup_batch(novel, threshold=0.9, replay_safe=True)
         assert [r["vec_id"] for r in replay.collect()] == [500]
-        assert _tbl(spark, "t_emb_idx2_vecs").count() == n_rows + 1
+        assert _tbl(spark, "t_emb_idx2/t_emb_idx2_vecs").count() == n_rows + 1
     finally:
         idx.drop()
 
@@ -970,7 +972,7 @@ def test_embedding_ingest_stream_end_to_end(spark, emb_split, tmp_path):
                  .filter(F.col("batch") == 0).collect()}
         # most batch vectors duplicate corpus cluster members
         assert len(clean) < len(rows) / 2
-        n_vecs = _tbl(spark, "t_emb_stream_vecs").count()
+        n_vecs = _tbl(spark, "t_emb_stream/t_emb_stream_vecs").count()
 
         # crash-window replay through the raw fn: identical output
         import glob as globmod
@@ -988,7 +990,7 @@ def test_embedding_ingest_stream_end_to_end(spark, emb_split, tmp_path):
         fn(replay_df, 0)
         assert {r["vec_id"] for r in spark.read.parquet(out)
                 .filter(F.col("batch") == 0).collect()} == clean
-        assert _tbl(spark, "t_emb_stream_vecs").count() == n_vecs
+        assert _tbl(spark, "t_emb_stream/t_emb_stream_vecs").count() == n_vecs
     finally:
         EmbeddingIndex(spark, "t_emb_stream").drop()
 
@@ -1016,8 +1018,8 @@ def test_embedding_rebucket_regrows_plane_count(spark, emb_split):
                 for r in fresh.probe(batch, threshold=0.9).collect()}
         assert got == want and len(want) >= 20
         # key table rewritten once per band, payload untouched
-        assert (_tbl(spark, "t_emb_rb_buckets").count()
-                == 2 * _tbl(spark, "t_emb_rb_vecs").count())
+        assert (_tbl(spark, "t_emb_rb/t_emb_rb_buckets").count()
+                == 2 * _tbl(spark, "t_emb_rb/t_emb_rb_vecs").count())
 
         # a crash at the commit of a second rebucket: nothing lands,
         # the committed geometry still answers identically on reopen
@@ -1129,9 +1131,9 @@ def test_rebucket_geometry_rides_the_key_table_manifest(spark):
     be = tableio.get_backend()
     idx = EmbeddingIndex.create(corpus, "t_rbg", n_planes=4, dim=6)
     try:
-        assert "extra" not in be.latest_manifest(spark, "t_rbg_buckets")
+        assert "extra" not in be.latest_manifest(spark, "t_rbg/t_rbg_buckets")
         idx.rebucket(n_planes=5)
-        assert (be.latest_manifest(spark, "t_rbg_buckets")["extra"]
+        assert (be.latest_manifest(spark, "t_rbg/t_rbg_buckets")["extra"]
                 == {"n_planes": 5, "bands": 1})
         idx.append(extra)
         idx.compact()
@@ -1144,11 +1146,11 @@ def test_rebucket_geometry_rides_the_key_table_manifest(spark):
         # an append racing the re-key (it reads the vectors after the
         # key table's snapshot) fails the rebucket; the append's keys
         # stay under the committed geometry, findable
-        token = be.snapshot_token(spark, "t_rbg_buckets")
+        token = be.snapshot_token(spark, "t_rbg/t_rbg_buckets")
         read = be.read
 
         def read_then_append(spark, table):
-            if table == "t_rbg_vecs":
+            if table == "t_rbg/t_rbg_vecs":
                 be.read = read
                 reopened.append(extra.withColumn("vec_id", F.lit(600).cast("long")))
             return read(spark, table)
@@ -1159,7 +1161,7 @@ def test_rebucket_geometry_rides_the_key_table_manifest(spark):
                 reopened.rebucket(n_planes=7)
         finally:
             be.__dict__.pop("read", None)
-        assert be.snapshot_token(spark, "t_rbg_buckets")[:len(token)] \
+        assert be.snapshot_token(spark, "t_rbg/t_rbg_buckets")[:len(token)] \
             == token
         again = EmbeddingIndex(spark, "t_rbg")
         assert again.params["n_planes"] == 5
@@ -1233,11 +1235,11 @@ def test_segment_index_replay_safe_idempotent(spark, split_corpus):
     try:
         first = _seg_rows(idx.dedup_batch(batch, replay_safe=True))
         n_after_first = tableio.get_backend().read(
-            spark, "t_seg_rpl_segments").count()
+            spark, "t_seg_rpl/t_seg_rpl_segments").count()
         replay = _seg_rows(idx.dedup_batch(batch, replay_safe=True))
         assert replay == first
         n_after_replay = tableio.get_backend().read(
-            spark, "t_seg_rpl_segments").count()
+            spark, "t_seg_rpl/t_seg_rpl_segments").count()
         assert n_after_replay == n_after_first
     finally:
         idx.drop()
@@ -1338,11 +1340,11 @@ def test_span_index_replay_safe_idempotent(spark, split_corpus):
     try:
         first = _cut_rows(idx.dedup_batch(batch, replay_safe=True))
         n1 = tableio.get_backend().read(
-            spark, "t_spn_rpl_windows").count()
+            spark, "t_spn_rpl/t_spn_rpl_windows").count()
         replay = _cut_rows(idx.dedup_batch(batch, replay_safe=True))
         assert replay == first
         n2 = tableio.get_backend().read(
-            spark, "t_spn_rpl_windows").count()
+            spark, "t_spn_rpl/t_spn_rpl_windows").count()
         assert n2 == n1
     finally:
         idx.drop()

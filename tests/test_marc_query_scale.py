@@ -185,36 +185,38 @@ def test_persisted_index_heading_change_propagates(store):
 
 @pytest.mark.slow
 def test_persisted_index_crash_recovery_reconverges(spark, store):
-    """A failure between the live commit and the index refresh leaves
-    the write-ahead dirty marker AND the commit durable ('committed,
-    index pending' — a caller observing an error for a persisted commit
-    would retry and double-apply).  Recovery is O(batch): the marker's
-    pre-commit segment snapshot brackets exactly the crashed batch.
+    """A crash at the commit point — the store's one group publish, with
+    the live and token segments already staged — leaves the live table
+    and the persisted index exactly as they were: the same in-process
+    store and a fresh open both serve the pre-crash record from the
+    index, and re-running the commit lands it in both."""
+    from dlx_spark import fsio
 
-    Both replay points are exercised: the SAME in-process store must
-    not serve stale index results (the marker is checked on every
-    index read, not just on open), and a fresh open replays it too."""
     store.build_search_index("bib")
-    orig = MarcStore._refresh_tokens_for_batch
-    MarcStore._refresh_tokens_for_batch = (
-        lambda self, rt, new_df=None, removed_ids=None: (_ for _ in ()).throw(
-            RuntimeError("simulated crash")))
+    real = fsio.put_if_absent
+
+    def boom(spark_, tmp, dest):
+        if "/tables/marc/" in dest:
+            raise RuntimeError("simulated crash")
+        return real(spark_, tmp, dest)
+    rec = store.get("bib", 2)
+    rec.set("245", "a", "Crashed edit", auth_control=False)
+    fsio.put_if_absent = boom
     try:
-        rec = store.get("bib", 2)
-        rec.set("245", "a", "Crashed edit", auth_control=False)
-        with pytest.warns(UserWarning, match="index"):
+        with pytest.raises(RuntimeError, match="simulated crash"):
             store.commit([rec], user="editor", now=T1)
     finally:
-        MarcStore._refresh_tokens_for_batch = orig
-    # the commit IS durable
-    assert store.get("bib", 2).get_value("245", "a") == "Crashed edit"
-    # same-process search replays the marker lazily — never stale
+        fsio.put_if_absent = real
+    assert store.get("bib", 2).get_value("245", "a") != "Crashed edit"
+    assert store.search("bib", "245__a:crashed").count() == 0
     assert [r["_id"] for r in
-            store.search("bib", "245__a:crashed").collect()] == [2]
-    assert store.search("bib", "245__a:another").count() == 0  # old tokens gone
+            store.search("bib", "245__a:another").collect()] == [2]
     reopened = MarcStore(spark, store.root)       # and reopen agrees
+    assert reopened.search("bib", "245__a:crashed").count() == 0
+    reopened.commit([rec], user="editor", now=T1)
     assert [r["_id"] for r in
             reopened.search("bib", "245__a:crashed").collect()] == [2]
+    assert reopened.search("bib", "245__a:another").count() == 0
 
 
 @pytest.mark.slow
@@ -223,8 +225,8 @@ def test_nonpropagating_auth_writes_mark_bib_index_dirty(spark, store):
     (commit_frame for auths; commit(update_attached=False)) must not
     leave the persisted bib token index serving the OLD denormalized
     heading values while the derived view overlays current ones: the
-    write marks the bib index dirty and the next bib search rebuilds
-    it."""
+    write flags the changed headings in the bib index's manifest and
+    the next bib search refreshes the records linking to them."""
     store.build_search_index("bib")
     assert store.search("bib", "650__a:header").count() == 2
 
@@ -253,14 +255,15 @@ def test_nonpropagating_auth_writes_mark_bib_index_dirty(spark, store):
 
 @pytest.mark.slow
 def test_unchanged_auth_bulk_write_skips_bib_rebuild(spark, store):
-    """The cross-type dirty marker is written only when a heading
+    """The cross-type heading flag is written only when a heading
     actually changed — re-ingesting identical auths must not force a
-    bib index rebuild."""
+    bib index refresh."""
     store.build_search_index("bib")
     same = store.auths().filter(F.col("_id") == 1)
     store.commit_frame(same, record_type="auth", user="bulk",
                        auth_check=False)
-    assert not store._has_dirty_marker("bib")
+    assert MarcStore.STALE_HEADINGS not in store._tokens("bib").meta(
+        store.spark)
 
 
 @pytest.mark.slow

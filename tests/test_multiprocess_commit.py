@@ -226,10 +226,11 @@ for _ in range(1200):
 else:
     raise SystemExit("main process never said go")
 
-# die BETWEEN the live commit and the token-index refresh — a real
-# process death (os._exit: no unwind, no warning path, no cleanup)
-MarcStore._refresh_tokens_for_batch = (
-    lambda self, rt, new_df=None, removed_ids=None: os._exit(42))
+# die AT the store's group publish, after every segment is staged — a
+# real process death (os._exit: no unwind, no cleanup)
+_put = fsio.put_if_absent
+fsio.put_if_absent = lambda spark_, tmp, dest: (
+    os._exit(42) if "/tables/marc/" in dest else _put(spark_, tmp, dest))
 rec = Bib({"_id": 501, "245": [{"indicators": [" ", " "],
                                 "subfields": [{"code": "a",
                                                "value": "Worker orphan"}]}]})
@@ -241,19 +242,17 @@ raise SystemExit("unreachable: commit should have exited the process")
 @pytest.mark.slow
 def test_token_index_reconverges_after_crashed_writer_under_contention(
         spark, tmp_path):
-    """The token-index marker protocol composed with the multi-driver
+    """The store's one group commit composed with the multi-driver
     commit scheme (VERDICT r9 item 7): two OS processes commit to ONE
     indexed MarcStore through ExternalCASScheme; the second driver dies
-    (os._exit) between its live commit and its index refresh while the
-    first keeps committing.  Requirements proven:
+    (os._exit) at its group publish, with its live, history and token
+    segments staged, while the first keeps committing.  Requirements
+    proven:
 
-    - no lost update on the live table (both batches present — the
-      manifest CAS serialized the contending appends);
-    - the dead writer's PER-COMMIT dirty marker survives the survivor's
-      own successful marker dance (a single shared marker file would
-      have been cleared by the survivor, going silently stale);
-    - the next search re-converges the index from the marker — the
-      orphan batch becomes searchable with no manual repair."""
+    - all-or-nothing: nothing of the dead writer's batch is visible in
+      any table, and the survivor's commit landed whole;
+    - no pending commit is left behind, and re-running the dead
+      writer's commit lands it — searchable with no repair."""
     from dlx_spark.fsio import ExternalCASScheme, FileExternalCAS
     from dlx_spark.marc.record import Bib
     from dlx_spark.marc.store import MarcStore
@@ -289,8 +288,7 @@ def test_token_index_reconverges_after_crashed_writer_under_contention(
                     pytest.fail(f"worker never came up:\n{out[-3000:]}")
                 time.sleep(0.2)
             fsio.touch(spark, root + "/_go")
-            # the survivor commits CONCURRENTLY with the dying writer —
-            # its own marker dance must not settle the victim's marker
+            # the survivor commits CONCURRENTLY with the dying writer
             rec = Bib({"_id": 601,
                        "245": [{"indicators": [" ", " "],
                                 "subfields": [{"code": "a",
@@ -303,19 +301,23 @@ def test_token_index_reconverges_after_crashed_writer_under_contention(
             if proc.poll() is None:
                 proc.kill()
 
-        # the dead writer's live commit survived the contention...
+        # the dead writer's batch is in no table; the survivor's is
         reader = MarcStore(spark, root)
         ids = sorted(r["_id"] for r in reader.bibs().select("_id").collect())
-        assert 501 in ids and 601 in ids and len(ids) == 10
-        # ...and the index re-converged from its surviving marker: the
-        # orphan batch is searchable, with no stale leftovers
-        assert [r["_id"] for r in
-                reader.search("bib", "245__a:orphan").collect()] == [501]
+        assert 501 not in ids and 601 in ids and len(ids) == 9
+        assert reader.history_df("bib").filter("record_id = 501").count() == 0
+        assert reader.search("bib", "245__a:orphan").count() == 0
         assert [r["_id"] for r in
                 reader.search("bib", "245__a:survivor").collect()] == [601]
-        assert not reader._has_dirty_marker("bib")
         # every CAS claim settled — no pending commits anywhere
         assert FileExternalCAS(casdir).pending("") == []
+        # and the dead writer's commit, re-run, lands whole
+        reader.commit([Bib({"_id": 501, "245": [{
+            "indicators": [" ", " "],
+            "subfields": [{"code": "a", "value": "Worker orphan"}]}]})],
+            auth_check=False)
+        assert [r["_id"] for r in
+                reader.search("bib", "245__a:orphan").collect()] == [501]
     finally:
         fsio.set_commit_scheme(fsio.HadoopRenameScheme())
 
@@ -344,12 +346,12 @@ for _ in range(1200):
 else:
     raise SystemExit("main process never said go")
 
-# die BETWEEN the durable history append and the deleted-summary
-# refresh (os._exit: no unwind, no warning path, no cleanup) while
-# recommitting a previously-deleted id — the transition the summary
-# must tombstone
-MarcStore._refresh_deleted_summary = (
-    lambda self, rt, rows: os._exit(42))
+# die AT the store's group publish (os._exit: no unwind, no cleanup)
+# while recommitting a previously-deleted id — the transition the
+# summary must tombstone
+_put = fsio.put_if_absent
+fsio.put_if_absent = lambda spark_, tmp, dest: (
+    os._exit(42) if "/tables/marc/" in dest else _put(spark_, tmp, dest))
 rec = Bib({"_id": 3, "245": [{"indicators": [" ", " "],
                               "subfields": [{"code": "a",
                                              "value": "Back from the dead"}]}]})
@@ -361,16 +363,14 @@ raise SystemExit("unreachable: commit should have exited the process")
 @pytest.mark.slow
 def test_deleted_summary_reconverges_after_crashed_writer_under_contention(
         spark, tmp_path):
-    """The deleted-summary marker protocol composed with the
-    multi-driver commit scheme, mirroring the token-index proof: two OS
-    processes write to ONE summarized store through ExternalCASScheme.
-    The victim recommits a deleted id and dies (os._exit) between its
-    durable history append and its summary refresh; the survivor
-    deletes another record concurrently.  Proven: the victim's
-    PER-COMMIT marker survives the survivor's own successful marker
-    dance, and the next store open replays it — the recommitted id
-    leaves the summary, the survivor's delete is in it, no markers or
-    pending CAS claims remain."""
+    """The store's one group commit composed with the multi-driver
+    commit scheme, mirroring the token-index proof: two OS processes
+    write to ONE summarized store through ExternalCASScheme.  The
+    victim recommits a deleted id and dies (os._exit) at its group
+    publish; the survivor deletes another record concurrently.  Proven:
+    the victim's recommit is in neither history, live nor the summary;
+    the survivor's delete is; no pending CAS claims remain; and the
+    recommit, re-run, leaves the summary."""
     from dlx_spark.fsio import ExternalCASScheme, FileExternalCAS
     from dlx_spark.marc.record import Bib
     from dlx_spark.marc.store import MarcStore
@@ -409,8 +409,7 @@ def test_deleted_summary_reconverges_after_crashed_writer_under_contention(
                     pytest.fail(f"worker never came up:\n{out[-3000:]}")
                 time.sleep(0.2)
             fsio.touch(spark, root + "/_go")
-            # survivor deletes CONCURRENTLY with the dying writer — its
-            # successful dance must not settle the victim's marker
+            # survivor deletes CONCURRENTLY with the dying writer
             store.delete("bib", 4, user="main")
             out, _ = proc.communicate(timeout=240)
             assert proc.returncode == 42, f"worker did not die at the " \
@@ -419,15 +418,20 @@ def test_deleted_summary_reconverges_after_crashed_writer_under_contention(
             if proc.poll() is None:
                 proc.kill()
 
-        # fresh open replays the victim's surviving marker in _recover
         reader = MarcStore(spark, root)
-        assert not reader._markers_for("bib_deleted")
         got = sorted(r["record_id"] for r in
                      reader.find_deleted("bib").collect())
-        # id 3's latest history action is the victim's (durable) plain
-        # recommit -> out of the summary; id 4 is the survivor's delete
-        assert got == [4], got
+        # the victim's recommit of id 3 never landed; id 4 is the
+        # survivor's delete
+        assert got == [3, 4], got
+        assert reader.get("bib", 3) is None
         assert FileExternalCAS(casdir).pending("") == []
+        reader.commit([Bib({"_id": 3, "245": [{
+            "indicators": [" ", " "],
+            "subfields": [{"code": "a", "value": "Back from the dead"}]}]})],
+            auth_check=False)
+        assert [r["record_id"] for r in
+                reader.find_deleted("bib").collect()] == [4]
     finally:
         fsio.set_commit_scheme(fsio.HadoopRenameScheme())
 
@@ -667,8 +671,6 @@ def test_maintenance_races_concurrent_commits(spark, tmp_path, minor):
         # history intact: seeds + worker batches + the delete action
         assert reader.history_df("bib").count() == 8 + 8 + 1
         # nothing pending anywhere
-        assert not reader._markers_for("bibs_tokens")
-        assert not reader._markers_for("bib_deleted")
         assert FileExternalCAS(casdir).pending("") == []
     finally:
         fsio.set_commit_scheme(fsio.HadoopRenameScheme())

@@ -88,16 +88,16 @@ def test_index_create_reclaims_orphans(spark, docs, vecs, family, suffixes):
     try:
         if family == "digest":
             idx = DigestIndex.create(docs, name)
-            assert be.read(spark, f"{name}_digests").count() > 0
+            assert be.read(spark, f"{name}/{name}_digests").count() > 0
         elif family == "minhash":
             idx = MinHashIndex.create(docs, name)
-            assert be.read(spark, f"{name}_sigs").count() == 40
+            assert be.read(spark, f"{name}/{name}_sigs").count() == 40
         elif family == "simhash":
             idx = SimHashIndex.create(docs, name)
-            assert be.read(spark, f"{name}_fps").count() > 0
+            assert be.read(spark, f"{name}/{name}_fps").count() > 0
         else:
             idx = EmbeddingIndex.create(vecs, name)
-            assert be.read(spark, f"{name}_vecs").count() == 40
+            assert be.read(spark, f"{name}/{name}_vecs").count() == 40
         idx  # created green over every planted remnant
     finally:
         for sfx in suffixes:

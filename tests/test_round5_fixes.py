@@ -195,82 +195,6 @@ def test_refresh_ivf_fails_clean_on_concurrent_append(spark, tmp_path):
         tableio.set_backend(prev)
 
 
-# ---------------------------------------------------------------------------
-# Legacy ledger-key acceptance across the qualified-spelling upgrade
-# ---------------------------------------------------------------------------
-
-@pytest.mark.slow
-def test_commit_stream_accepts_legacy_ledger_key(spark, tmp_path):
-    """Ledger rows persisted before the fsio.qualified key change were
-    keyed on os.path.abspath(checkpoint); a stream resuming across the
-    upgrade must still recognize those batches as committed instead of
-    re-committing a redelivered one."""
-    from dlx_spark import streaming
-    from dlx_spark.marc.store import MarcStore
-
-    store = MarcStore(spark, str(tmp_path / "wh_legacy"))
-    ck = str(tmp_path / "ck_legacy")
-    doc = {"245": [{"indicators": [" ", " "],
-                    "subfields": [{"code": "a", "value": "Legacy keyed"}]}]}
-    batch = spark.createDataFrame([(json.dumps(doc),)], "value string")
-
-    # simulate a pre-upgrade ledger: batch 0 committed under the legacy
-    # abspath-keyed spelling (run_id is empty for direct-driven batches)
-    legacy_key = hashlib.md5(
-        f"{os.path.abspath(ck)}:".encode()).hexdigest()[:16]
-    commits_log = fsio.join(store.root, "_stream_commits_bib")
-    (spark.createDataFrame([(legacy_key, 0)], "stream string, batch_id long")
-     .write.mode("append").parquet(commits_log))
-
-    fn = streaming.make_commit_batch_fn(store, "bib", ck)
-    fn(batch, 0)                       # redelivered batch 0: must be skipped
-    assert store.bibs().count() == 0
-    fn(batch, 1)                       # batch 1 is genuinely new: commits
-    assert store.bibs().count() == 1
-
-
-# ---------------------------------------------------------------------------
-# Torn-marker recovery (fsio docstring claims, now tested)
-# ---------------------------------------------------------------------------
-
-@pytest.mark.slow
-def test_store_recover_tolerates_torn_dirty_marker(spark, tmp_path):
-    """A truncated / garbage token-index dirty marker (the s3a
-    torn-write window: rename is copy+delete, so a reader can see a
-    prefix) must read as 'rebuild wholesale' — always safe — never
-    crash recovery or corrupt committed state."""
-    from dlx_spark.marc.record import Bib
-    from dlx_spark.marc.store import MarcStore
-
-    store = MarcStore(spark, str(tmp_path / "wh_torn"))
-    store.commit(Bib({"_id": 7, "245": [{"indicators": [" ", " "],
-                                         "subfields": [{"code": "a",
-                                                        "value": "First"}]}]}))
-    store.build_search_index("bib")
-    assert store.bibs().count() == 1
-
-    # truncated-JSON garbage where the marker should be
-    fsio.write_text(spark, fsio.join(store.root, "_dirty_bibs_tokens.json"),
-                    '{"base_segments": ["seg', )
-
-    # a fresh store open runs _recover over the root; the torn marker
-    # must neither crash it nor leave the index stale or the store torn
-    store2 = MarcStore(spark, str(tmp_path / "wh_torn"))
-    assert store2.bibs().count() == 1
-    assert store2.get("bib", 7).get_value("245", "a") == "First"
-    assert not fsio.exists(spark,
-                           fsio.join(store.root, "_dirty_bibs_tokens.json"))
-    assert [r["_id"] for r in
-            store2.search("bib", "245__a:first").collect()] == [7]
-    # committing through the reopened store still works
-    store2.commit(Bib({"_id": 8, "245": [{"indicators": [" ", " "],
-                                          "subfields": [{"code": "a",
-                                                         "value": "Second"}]}]}))
-    assert store2.bibs().count() == 2
-    assert [r["_id"] for r in
-            store2.search("bib", "245__a:second").collect()] == [8]
-
-
 def test_dedup_index_meta_garbage_raises_clearly(spark, tmp_path):
     """_read_meta over a corrupted params payload must raise a clear
     parse error, never act on garbage parameters."""
@@ -279,12 +203,12 @@ def test_dedup_index_meta_garbage_raises_clearly(spark, tmp_path):
     name = "torn_meta_idx"
     _be().write(
         spark.createDataFrame([("{not json",)], "params string"),
-        f"{name}_meta")
+        f"{name}/{name}_meta")
     try:
         with pytest.raises(ValueError):
             dedup_index._read_meta(spark, name)
     finally:
-        _be().drop(spark, f"{name}_meta")
+        _be().drop(spark, name)
 
 
 @pytest.mark.slow
@@ -408,7 +332,8 @@ def test_table_backend_seam_routes_every_index_operation(spark):
     ops = {op for op, _ in rec.calls}
     assert {"write", "append", "read", "rewrite", "drop"} <= ops
     tables = {t for _, t in rec.calls}
-    assert "t_seam_idx_digests" in tables and "t_seam_idx_meta" in tables
+    assert {"t_seam_idx/t_seam_idx_digests",
+            "t_seam_idx/t_seam_idx_meta"} <= tables
 
 
 # ---------------------------------------------------------------------------
@@ -416,21 +341,21 @@ def test_table_backend_seam_routes_every_index_operation(spark):
 # ---------------------------------------------------------------------------
 
 def test_embedding_index_legacy_layout_raises_clearly(spark):
-    """Opening an EmbeddingIndex whose tables predate the two-table
-    layout must raise a clear rebuild error, not probe a nonexistent
-    buckets table."""
-    from dlx_spark.operators.dedup_index import EmbeddingIndex, _write_meta
+    """Opening an EmbeddingIndex whose tables are in the per-table
+    manifest layout of earlier releases must raise a clear rebuild
+    error naming them, not read the index as empty."""
+    from dlx_spark.operators.dedup_index import EmbeddingIndex
 
-    _be().write(
-        spark.createDataFrame([(1, [1.0, 0.0], 3)],
-                              "id long, vec array<double>, bucket long"),
-        "t_legacy_emb_vecs")
-    _write_meta(spark, "t_legacy_emb",
-                {"vec_col": "embedding", "id_col": "vec_id",
-                 "n_planes": 8, "seed": 42, "dim": 2, "n_buckets": 32})
+    names = ("t_legacy_emb_vecs", "t_legacy_emb_meta")
+    for t in names:
+        fsio.write_text(
+            spark, _be()._manifest_path(spark, t, 1),
+            json.dumps({"segments": [], "key": None, "version": 1,
+                        "schema": '{"type":"struct","fields":[]}'}))
     try:
-        with pytest.raises(RuntimeError, match="rebuild"):
+        with pytest.raises(ValueError, match="(?i)rebuild") as err:
             EmbeddingIndex(spark, "t_legacy_emb")
+        assert all(t in str(err.value) for t in names)
     finally:
-        for t in ("t_legacy_emb_vecs", "t_legacy_emb_meta"):
+        for t in names:
             _be().drop(spark, t)

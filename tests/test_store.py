@@ -308,7 +308,7 @@ def test_compact_folds_segments(spark, tmp_path):
     assert store.get("bib", 1).get_value("245", "a") == "w0 r0"
     # history folded too (one segment per commit before the fold)
     assert len(store.backend.latest_manifest(spark,
-                                             "bib_history")["segments"]) == 1
+                                             "marc/bib_history")["segments"]) == 1
     assert store.history_df("bib").count() == 24
 
 
@@ -401,7 +401,8 @@ def test_history_log_takes_the_suffix_fold(spark, tmp_path, monkeypatch):
                               auth_check=False, now=T0) == 50
 
     def segments():
-        return store.backend.latest_manifest(spark, "bib_history")["segments"]
+        return store.backend.latest_manifest(
+            spark, "marc/bib_history")["segments"]
 
     base = segments()[0]
     before = [v.get_value("245", "a") for v in store.history("bib", 7)]
@@ -558,17 +559,18 @@ def _seed_plain(spark, tmp_path, name, n=8):
 @pytest.mark.slow
 def test_crash_before_live_commit_leaves_store_untouched(
         spark, tmp_path, monkeypatch):
-    """The commit point is ONE manifest publish: a crash anywhere before
-    it leaves the live table exactly as it was (no torn buckets to
-    repair — segments are immutable and invisible until committed), and
-    re-running the commit succeeds."""
+    """The commit point is ONE manifest publish of the store's table
+    group: a crash anywhere before it leaves the live table (and its
+    history) exactly as it was (no torn buckets to repair — segments are
+    immutable and invisible until committed), and re-running the commit
+    succeeds."""
     from dlx_spark.tableio_versioned import VersionedTableBackend
 
     st = _seed_plain(spark, tmp_path, "wh_crash1")
     real = VersionedTableBackend._commit
 
     def boom(self, spark_, table, payload_fn):
-        if table == "bibs":
+        if table.startswith("marc"):
             raise RuntimeError("crash before manifest publish")
         return real(self, spark_, table, payload_fn)
     monkeypatch.setattr(VersionedTableBackend, "_commit", boom)
@@ -600,7 +602,7 @@ def test_commit_after_failed_rebucket_survives_reopen(
     real = VersionedTableBackend._commit
 
     def boom(self, spark_, table, payload_fn):
-        if table == "bibs":
+        if table.startswith("marc"):
             raise RuntimeError("crash at the rebucket commit")
         return real(self, spark_, table, payload_fn)
     monkeypatch.setattr(VersionedTableBackend, "_commit", boom)
@@ -628,7 +630,7 @@ def test_crash_mid_rebucket_leaves_store_untouched(spark, tmp_path,
     real = VersionedTableBackend._commit
 
     def boom(self, spark_, table, payload_fn):
-        if table == "bibs":
+        if table.startswith("marc"):
             raise RuntimeError("crash before the rewrite commit")
         return real(self, spark_, table, payload_fn)
     monkeypatch.setattr(VersionedTableBackend, "_commit", boom)
@@ -654,7 +656,7 @@ def test_upsert_tombstones_ids(spark, tmp_path):
     ids again (including after a compaction folds the tombstones
     away)."""
     st = _seed_plain(spark, tmp_path, "wh_rm", n=32)
-    st._upsert("bib", removed_ids=[1, 17, 2], batch_max=0)
+    st._write("bib", removed_ids=[1, 17, 2], batch_max=0)
     ids = sorted(r["_id"] for r in st.bibs().select("_id").collect())
     assert ids == sorted(set(range(1, 33)) - {1, 17, 2})
     st.compact("bib")
@@ -664,12 +666,12 @@ def test_upsert_tombstones_ids(spark, tmp_path):
 
 @pytest.mark.slow
 def test_warehouse_under_file_scheme_uri(spark, tmp_path, monkeypatch):
-    """The whole store lifecycle — seed, upsert, index-marker recovery —
-    must work when ``root`` is a ``file://``-scheme Hadoop URI rather
-    than a driver-local path: every marker/manifest/segment operation
-    goes through the Hadoop FileSystem API (dlx_spark.fsio / the
-    versioned backend), not os/shutil (which would silently look at the
-    driver's disk on hdfs:// or s3a:// roots)."""
+    """The whole store lifecycle — seed, upsert, a crash at the group
+    publish, reopen — must work when ``root`` is a ``file://``-scheme
+    Hadoop URI rather than a driver-local path: every manifest/segment
+    operation goes through the Hadoop FileSystem API (dlx_spark.fsio /
+    the versioned backend), not os/shutil (which would silently look at
+    the driver's disk on hdfs:// or s3a:// roots)."""
     from dlx_spark import fsio
 
     root = "file://" + str(tmp_path / "wh_uri")
@@ -680,23 +682,27 @@ def test_warehouse_under_file_scheme_uri(spark, tmp_path, monkeypatch):
     assert st.bibs().count() == 8
     st.build_search_index("bib")
 
-    # crash between the live commit and the index refresh: the
-    # write-ahead marker lands on the URI filesystem; the commit is
-    # durable ('committed, index pending') and the reopen replays it
-    def boom(self, record_type, new_df=None, removed_ids=None):
-        raise RuntimeError("crash before index refresh")
-    monkeypatch.setattr(MarcStore, "_refresh_tokens_for_batch", boom)
+    # crash at the group publish: the staged segments land on the URI
+    # filesystem, nothing is published, and the reopen sees the store
+    # as it was
+    real = fsio.put_if_absent
+
+    def boom(spark_, tmp, dest):
+        if "/tables/marc/" in dest:
+            raise RuntimeError("crash at the group publish")
+        return real(spark_, tmp, dest)
+    monkeypatch.setattr(fsio, "put_if_absent", boom)
     rec = st.get("bib", 1)
     rec.set("245", "a", "Changed via URI", auth_control=False)
-    with pytest.warns(UserWarning, match="index"):
+    with pytest.raises(RuntimeError, match="group publish"):
         st.commit([rec], user="u2", now=T1)
     monkeypatch.undo()
-    assert st._has_dirty_marker("bib")
 
-    st2 = MarcStore(spark, root)              # recovery replays the marker
+    st2 = MarcStore(spark, root)
+    assert st2.get("bib", 1).get_value("245", "a") == "Doc 0"
+    st2.commit([rec], user="u2", now=T1)
     assert st2.get("bib", 1).get_value("245", "a") == "Changed via URI"
     assert st2.bibs().count() == 8
-    assert not st2._has_dirty_marker("bib")
     assert [r["_id"] for r in
             st2.search("bib", "245__a:changed").collect()] == [1]
 
@@ -734,68 +740,51 @@ def test_deleted_summary_serves_find_deleted(store):
     rec.id = 2
     store.commit([rec], now=T2, auth_check=False)
     assert store.find_deleted("bib").count() == 0
-    assert not store._markers_for("bib_deleted")   # all settled inline
+
+
+def _crash_at_group_publish(monkeypatch):
+    """Make every publish of a MARC store's table group raise."""
+    from dlx_spark import fsio
+
+    real = fsio.put_if_absent
+
+    def boom(spark_, tmp, dest):
+        if "/tables/marc/" in dest:
+            raise RuntimeError("crash at the group publish")
+        return real(spark_, tmp, dest)
+    monkeypatch.setattr(fsio, "put_if_absent", boom)
 
 
 @pytest.mark.slow
 def test_deleted_summary_crash_replay_and_reopen(spark, tmp_path, store,
                                                  monkeypatch):
-    """A refresh failure after the durable history append leaves the
-    marker; the same in-process store replays it lazily on the next
-    find_deleted, and a fresh store open replays it in _recover."""
+    """A delete and a restore that crash at their one commit leave the
+    summary, history and live table as they were — nothing to replay —
+    and re-running them (in process, then after a reopen) lands each
+    whole."""
     store.build_deleted_summary("bib")
-    orig = MarcStore._refresh_deleted_summary
-    monkeypatch.setattr(
-        MarcStore, "_refresh_deleted_summary",
-        lambda self, rt, rows: (_ for _ in ()).throw(RuntimeError("boom")))
-    with pytest.warns(UserWarning, match="deleted-summary refresh failed"):
+    n_hist = store.history_df("bib").count()
+    _crash_at_group_publish(monkeypatch)
+    with pytest.raises(RuntimeError, match="group publish"):
         store.delete("bib", 2, user="d", now=T1)
-    assert store._markers_for("bib_deleted")
-    monkeypatch.setattr(MarcStore, "_refresh_deleted_summary", orig)
-    # lazy in-process replay: find_deleted never serves the stale summary
-    assert [r.record_id for r in store.find_deleted("bib").collect()] == [2]
-    assert not store._markers_for("bib_deleted")
-
-    # crash again, then recover via store open instead
-    monkeypatch.setattr(
-        MarcStore, "_refresh_deleted_summary",
-        lambda self, rt, rows: (_ for _ in ()).throw(RuntimeError("boom")))
-    with pytest.warns(UserWarning, match="deleted-summary refresh failed"):
-        store.restore("bib", 2, user="r", now=T2)
-    assert store._markers_for("bib_deleted")
-    monkeypatch.setattr(MarcStore, "_refresh_deleted_summary", orig)
-    reopened = MarcStore(spark, store.root)
-    assert not reopened._markers_for("bib_deleted")
-    assert reopened.find_deleted("bib").count() == 0
-
-
-@pytest.mark.slow
-def test_deleted_summary_rebuilds_when_batch_unidentifiable(store):
-    """A marker whose snapshot segments vanished (history compaction
-    folded them) cannot identify its batch: replay rebuilds the summary
-    wholesale from history — always safe.  An UNCOMMITTED such marker
-    survives the rebuild (its owner's append may still be in flight —
-    r11 owner-aware settlement) and is swept once the in-flight grace
-    expires; a COMMITTED one is settled by the rebuild immediately."""
-    store.build_deleted_summary("bib")
+    monkeypatch.undo()
+    assert store.find_deleted("bib").count() == 0
+    assert store.get("bib", 2) is not None
+    assert store.history_df("bib").count() == n_hist
     store.delete("bib", 2, user="d", now=T1)
-    m = store._write_marker_for("bib_deleted", {"base_segments": ["gone"]})
     assert [r.record_id for r in store.find_deleted("bib").collect()] == [2]
-    # uncommitted + unexpired: the rebuild served correct results but
-    # the marker stays (nothing proves its owner's batch landed)
-    import os as _os
-    assert [_os.path.basename(x)
-            for x in store._markers_for("bib_deleted")] \
-        == [_os.path.basename(m)]
-    # once the owner's commit provably landed, the rebuild settles it
-    store._mark_marker_committed(m)
-    assert [r.record_id for r in store.find_deleted("bib").collect()] == [2]
-    assert not store._markers_for("bib_deleted")
-    # and a dead owner's marker is swept at grace expiry
-    store._write_marker_for("bib_deleted", {"base_segments": ["gone"]})
-    store.MARKER_INFLIGHT_GRACE_SECONDS = -1.0
-    assert [r.record_id for r in store.find_deleted("bib").collect()] == [2]
-    assert not store._markers_for("bib_deleted")
+
+    _crash_at_group_publish(monkeypatch)
+    with pytest.raises(RuntimeError, match="group publish"):
+        store.restore("bib", 2, user="r", now=T2)
+    monkeypatch.undo()
+    reopened = MarcStore(spark, store.root)
+    assert [r.record_id for r in reopened.find_deleted("bib").collect()] \
+        == [2]
+    assert reopened.get("bib", 2) is None
+    reopened.restore("bib", 2, user="r", now=T2)
+    assert reopened.find_deleted("bib").count() == 0
+    assert reopened.get("bib", 2) is not None
 
 
 @pytest.mark.slow
@@ -825,8 +814,7 @@ def test_store_vacuum_reclaims_superseded_segments(store):
 def test_max_id_served_from_manifest_hint(store, tmp_path):
     """Id assignment reads the live manifest's monotonic max_id hint
     (O(1) metadata) instead of scanning live ∪ history; the hint never
-    understates — explicit low-id upserts keep it, deletes keep it,
-    and a pre-hint (legacy) manifest seeds it from the scan once."""
+    understates — explicit low-id upserts keep it, deletes keep it."""
     live = store._live("bib")
     assert live.meta(store.spark).get("max_id") == 2
     assert store.max_id("bib") == 2
@@ -842,30 +830,6 @@ def test_max_id_served_from_manifest_hint(store, tmp_path):
     assert live.meta(store.spark)["max_id"] == 3
     store.delete("bib", 3, user="d", now=T1)
     assert store.max_id("bib") == 3        # deleted id still reserved
-
-    # legacy manifest (no hint): strip it, next commit re-seeds from
-    # the live ∪ history scan — never from the batch max alone
-    import glob as _glob
-    import json as _json
-    import os as _os
-    mdir = _os.path.join(store.root, "_v", "tables", "bibs")
-    def _vnum(path):
-        return int(_os.path.basename(path).split(".")[0].lstrip("v"))
-    latest = max(_glob.glob(_os.path.join(mdir, "*.json")), key=_vnum)
-    doc = _json.loads(open(latest).read())
-    doc["extra"].pop("max_id")
-    nxt_name = _os.path.basename(latest).replace(
-        f"{_vnum(latest):010d}", f"{_vnum(latest) + 1:010d}")
-    with open(_os.path.join(mdir, nxt_name), "w") as fh:
-        fh.write(_json.dumps(doc))
-    assert live.meta(store.spark).get("max_id") is None
-    assert store.max_id("bib") == 3        # scan fallback
-    low2 = Bib().set("245", "a", "Low again", auth_control=False)
-    low2.id = 2
-    store.commit([low2], now=T2)           # batch max 2 < store max 3
-    assert live.meta(store.spark)["max_id"] == 3   # seeded from scan
-    nxt = Bib().set("245", "a", "Fourth", auth_control=False)
-    assert store.commit([nxt], now=T2) == [4]
 
 
 @pytest.mark.slow
@@ -980,8 +944,8 @@ def test_lost_creation_race_rederives_geometry(spark, tmp_path,
 def test_auth_heading_change_marks_auth_token_index_too(store):
     """Auth→auth 5xx see-also links denormalize the linked heading into
     the AUTH token index as well: a heading change without propagation
-    must mark it dirty (not just the bib index), or indexed auth
-    searches keep matching the old heading."""
+    must flag it (not just the bib index) in the change's own commit,
+    or indexed auth searches keep matching the old heading."""
     from dlx_spark.marc.record import Datafield, Linked
 
     a3 = Auth().set("150", "a", "Topic three", auth_control=False)
@@ -999,70 +963,46 @@ def test_auth_heading_change_marks_auth_token_index_too(store):
     a3 = store.get("auth", 3)
     a3.set("150", "a", "Topic renamed", auth_control=False)
     store.commit([a3], now=T1, update_attached=False)   # NO propagation
+    assert store._tokens("auth").meta(store.spark)[
+        MarcStore.STALE_HEADINGS] == [3]
 
-    # the marker forces a rebuild: new heading matches, old one doesn't
+    # the flag drives a targeted refresh: new heading matches, old
+    # one doesn't, and the refresh's commit clears the flag
     assert [r["_id"] for r in
             store.search("auth", "550__a:renamed").collect()] == [4]
     assert store.search("auth", "550__a:three").count() == 0
+    assert MarcStore.STALE_HEADINGS not in store._tokens("auth").meta(
+        store.spark)
 
 
-def test_full_rebuild_keeps_markers_for_commits_it_did_not_see(store):
-    """Settlement-snapshot semantics (r11 owner-aware, r11.2 snapshot
-    ordering): (a) a marker whose OWNER provably committed (post-CAS
-    ``committed`` stamp) BEFORE the settlement snapshot is removed —
-    its batch landed before the derivation read, so the rebuild covers
-    it; (a') an uncommitted marker is kept even when other writers'
-    segments are visible past its base — those may all be foreign
-    commits while this marker's own batch is still in flight (the
-    pre-r11 gap-nonempty rule settled here and lost the batch when its
-    owner crashed after its CAS); (b) a stamp that lands AFTER the
-    snapshot is ignored — the owner's segment may postdate the
-    derivation read, and removing its marker would drop that crashed
-    batch (the r11.2 hole: a settle-time stamp check removed it); (c)
-    an uncommitted marker is swept once the in-flight grace expires
-    (owner presumed dead; the rebuild covered everything current)."""
+def test_full_rebuild_folds_commits_it_did_not_see(store, monkeypatch):
+    """A rebuild publishes only against the live snapshot it derived
+    from: a commit landing between its derivation and its publish fails
+    that check, and the rebuild folds the commit's batch (and flags the
+    auths it wrote) before publishing again — the index serves the
+    commit, and nothing is left behind for a later replay."""
+    real = MarcStore._publish_against
+    state = {"raced": False}
+
+    def racing(self, snap, staged, gap):
+        if not state["raced"]:
+            state["raced"] = True
+            rec = self.get("bib", 1)
+            rec.set("245", "a", "Raced title", auth_control=False)
+            self.commit([rec], now=T1, auth_check=False)
+        return real(self, snap, staged, gap)
+
+    monkeypatch.setattr(MarcStore, "_publish_against", racing)
     store.build_search_index("bib")
-    live = store._live("bib")
-    current = live.segments(store.spark)
-
-    import os as _os
-
-    def names():
-        return {_os.path.basename(m)
-                for m in store._markers_for("bibs_tokens")}
-
-    settled_path = store._write_marker_for(
-        "bibs_tokens", {"base_segments": current[:-1]})
-    store._mark_marker_committed(settled_path)
-    settled = _os.path.basename(settled_path)
-    uncommitted = _os.path.basename(store._write_marker_for(
-        "bibs_tokens", {"base_segments": current[:-1]}))
-    inflight = _os.path.basename(store._write_marker_for(
-        "bibs_tokens", {"base_segments": current}))
-    settleable = store._settleable_markers("bibs_tokens")
-    assert {_os.path.basename(m) for m in settleable} == {settled}
-    store._remove_markers(settleable)
-    assert settled not in names()       # (a) committed pre-snapshot
-    assert uncommitted in names()       # (a') no proof -> kept
-    assert inflight in names()          # may still commit
-
-    # (b) the stamp lands AFTER the settlement snapshot: the owner's
-    # segment may postdate the derivation read — its marker survives
-    late_path = store._write_marker_for(
-        "bibs_tokens", {"base_segments": current})
-    snapshot = store._settleable_markers("bibs_tokens")
-    store._mark_marker_committed(late_path)       # stamp after snapshot
-    late = _os.path.basename(late_path)
-    assert late not in {_os.path.basename(m) for m in snapshot}
-    store._remove_markers(snapshot)
-    assert late in names()
-
-    # (c) grace expiry: uncommitted markers are swept once the horizon
-    # passes (the next rebuild's derivation covers everything a dead
-    # owner ever landed); the (b) marker goes with them
-    store.MARKER_INFLIGHT_GRACE_SECONDS = -1.0
-    store._remove_markers(store._settleable_markers("bibs_tokens"))
-    assert store._markers_for("bibs_tokens") == []
+    monkeypatch.undo()
+    assert state["raced"]
+    assert MarcStore.STALE_HEADINGS not in store._tokens("bib").meta(
+        store.spark)
+    tokens = store._tokens("bib").read(store.spark)
+    assert tokens.filter((F.col("record_id") == 1)
+                         & (F.col("value") == "Raced title")).count() == 1
+    assert [r["_id"] for r in
+            store.search("bib", "245__a:raced").collect()] == [1]
 
 
 @pytest.mark.slow
@@ -1168,46 +1108,40 @@ def test_failed_record_commit_leaves_no_scratch(store, monkeypatch):
     def boom(self, *args, **kwargs):
         raise RuntimeError("injected upsert failure")
 
-    monkeypatch.setattr(MarcStore, "_upsert", boom)
+    monkeypatch.setattr(MarcStore, "_write", boom)
     bib1 = store.get("bib", 1)
     bib1.set("245", "a", "Never lands", auth_control=False)
     with pytest.raises(RuntimeError, match="injected"):
         store.commit([bib1], now=T1)
-    for prefix in ("stage_*", "_stage_*"):
-        assert fsio.glob(store.spark, fsio.join(store.root, prefix)) == []
-
-
-def test_vacuum_reclaims_aged_old_prefix_scratch(store):
-    """Scratch stages named ``_stage_*`` (the name earlier releases
-    used) are swept by vacuum once aged, like ``stage_*`` ones."""
-    import os
-    import time
-
-    from dlx_spark import fsio
-
-    old = os.path.join(store.root, "_stage_commit_bibs.deadbeef")
-    os.makedirs(old)
-    with open(os.path.join(old, "part-0.parquet"), "wb") as fh:
-        fh.write(b"orphan")
-    aged = time.time() - 7200
-    os.utime(os.path.join(old, "part-0.parquet"), (aged, aged))
-    os.utime(old, (aged, aged))
-    store.vacuum()
-    assert not os.path.exists(old)
-    assert fsio.glob(store.spark, fsio.join(store.root, "_stage_*")) == []
+    assert fsio.glob(store.spark, fsio.join(store.root, "stage_*")) == []
 
 
 def test_propagated_heading_change_leaves_no_markers(store):
-    """Propagation supersedes the heading flags the publish tail wrote:
-    the record head removes them, leaving no marker on either type."""
+    """No store write path leaves a file at the store root besides the
+    backend's ``_v/`` and ``merge_log/``: commit, commit_frame, delete,
+    a propagated heading change and both builds.  Propagation's commits
+    clear the heading flags the heading commit wrote."""
+    import os
+
+    def root_files():
+        return sorted(set(os.listdir(store.root)) - {"_v", "merge_log"})
+
     store.build_search_index("bib")
+    store.build_search_index("auth")
+    store.build_deleted_summary("bib")
+    assert root_files() == []
     a1 = store.get("auth", 1)
     a1.set("150", "a", "Propagated header", auth_control=False)
     store.commit([a1], user="editor", now=T1)
-    assert store._dirty_markers("bib") == []
-    assert store._dirty_markers("auth") == []
+    assert root_files() == []
+    for rt in ("bib", "auth"):
+        assert MarcStore.STALE_HEADINGS not in store._tokens(rt).meta(
+            store.spark)
     assert sorted(r["_id"] for r in
                   store.search("bib", "650__a:propagated").collect()) == [1, 2]
+    store.commit_frame(store.bibs(), now=T2)
+    store.delete("bib", 2, user="d", now=T2)
+    assert root_files() == []
 
 
 def test_rebuild_derived_script_refreshes_linked_values(store):
@@ -1227,3 +1161,69 @@ def test_rebuild_derived_script_refreshes_linked_values(store):
         assert sub["value"] == "Rebuilt heading"
         assert "rebuilt" in list(row["words"])
     assert store.history_df("bib").count() == n_versions
+
+
+def test_summary_build_race_covers_append_via_tail_fold(store, monkeypatch):
+    """A delete landing between build_deleted_summary's history read
+    and its publish fails the build's snapshot check (checked inside
+    the commit); the build folds the delete's history rows — its gap —
+    and publishes again, so the summary lists the delete."""
+    real = MarcStore._publish_against
+    state = {"raced": False}
+
+    def racing(self, snap, staged, gap):
+        if not state["raced"]:
+            state["raced"] = True
+            self.delete("bib", 2, user="w", now=T1)
+        return real(self, snap, staged, gap)
+
+    monkeypatch.setattr(MarcStore, "_publish_against", racing)
+    store.build_deleted_summary("bib")
+    monkeypatch.undo()
+    assert state["raced"]
+    assert [r.record_id for r in store.find_deleted("bib").collect()] == [2]
+    summary = store._deleted_summary("bib").read(store.spark)
+    assert [r.record_id for r in summary.collect()] == [2]
+
+
+@pytest.mark.slow
+def test_heading_flag_is_targeted_not_full(store, monkeypatch):
+    """A non-propagating heading change flags the changed auth ids in
+    the token table's manifest, and the search-time refresh re-derives
+    only the attached records — the wholesale rebuild must not run.
+    Pinned by making build_search_index raise: the search below
+    succeeds only through the targeted path."""
+    store.build_search_index("bib")
+    a = store.get("auth", 1)
+    a.set("150", "a", "Precise rename", auth_control=False)
+    store.commit([a], user="e", now=T1, update_attached=False)
+    assert store._tokens("bib").meta(store.spark)[
+        MarcStore.STALE_HEADINGS] == [1]
+
+    def boom(self, record_type):
+        raise AssertionError("targeted refresh must not rebuild wholesale")
+
+    monkeypatch.setattr(MarcStore, "build_search_index", boom)
+    assert sorted(r["_id"] for r in
+                  store.search("bib", "650__a:precise").collect()) == [1, 2]
+    assert store.search("bib", "650__a:header").count() == 0
+    assert MarcStore.STALE_HEADINGS not in store._tokens("bib").meta(
+        store.spark)
+
+
+@pytest.mark.slow
+def test_heading_flag_over_cap_degrades_to_full(store):
+    """Past HEADING_FLAG_MAX_XREFS the changed-id list would bloat every
+    manifest and the targeted refresh approaches a rebuild anyway — the
+    flag degrades to ``full`` (the search-time refresh rebuilds)."""
+    store.build_search_index("bib")
+    store.HEADING_FLAG_MAX_XREFS = 0
+    a = store.get("auth", 1)
+    a.set("150", "a", "Bulk-scale rename", auth_control=False)
+    store.commit([a], user="e", now=T1, update_attached=False)
+    assert store._tokens("bib").meta(store.spark)[
+        MarcStore.STALE_HEADINGS] == "full"
+    assert sorted(r["_id"] for r in
+                  store.search("bib", "650__a:bulk").collect()) == [1, 2]
+    assert MarcStore.STALE_HEADINGS not in store._tokens("bib").meta(
+        store.spark)

@@ -314,10 +314,10 @@ def test_stream_replay_after_crash_between_commit_and_ledger(spark, tmp_path, mo
 
 @pytest.mark.slow
 def test_stream_replay_after_crash_mid_commit(spark, tmp_path, monkeypatch):
-    """Crash BETWEEN the history append and the live upsert inside
-    commit_frame: the replay undoes the half-committed history and
-    re-runs from the deterministic stage — final state matches a clean
-    single run exactly."""
+    """Crash inside commit_frame before its one group commit: nothing of
+    the batch is published, and the replay re-runs from the
+    deterministic stage — final state matches a clean single run
+    exactly."""
     from dlx_spark.marc.store import MarcStore
 
     store = MarcStore(spark, str(tmp_path / "wh_mc"))
@@ -328,19 +328,19 @@ def test_stream_replay_after_crash_mid_commit(spark, tmp_path, monkeypatch):
                                   "value string")
     fn = streaming.make_commit_batch_fn(store, "bib", str(tmp_path / "ck_mc"))
 
-    real_upsert = MarcStore._upsert
+    real_write = MarcStore._write
     state = {"raised": False}
 
-    def upsert_boom(self, *a, **k):
+    def write_boom(self, *a, **k):
         if not state["raised"]:
             state["raised"] = True
             raise RuntimeError("crash mid-commit")
-        return real_upsert(self, *a, **k)
-    monkeypatch.setattr(MarcStore, "_upsert", upsert_boom)
+        return real_write(self, *a, **k)
+    monkeypatch.setattr(MarcStore, "_write", write_boom)
     with pytest.raises(RuntimeError):
         fn(batch, 0)
-    # history was appended by the crashed attempt; live was not
-    assert store.history_df("bib").count() == 4
+    # neither history nor live: the commit is all-or-nothing
+    assert store.history_df("bib").count() == 0
     assert store.bibs().count() == 0
 
     fn(batch, 0)                              # crash-replay -> recovery
@@ -446,71 +446,6 @@ def test_commit_stream_under_file_scheme_root(spark, tmp_path):
     fn(batch, 0)
     assert store.bibs().count() == 3
     assert len(store.history("bib", 1)) == 1
-
-
-@pytest.mark.slow
-def test_stream_replay_of_pre_upgrade_crashed_attempt(spark, tmp_path,
-                                                      monkeypatch):
-    """A batch that crashed mid-commit BEFORE the qualified-spelling
-    upgrade left its intent marker and stage dir under the legacy
-    abspath-derived key.  The replay (now running post-upgrade) must
-    adopt that legacy-named attempt — undo its half-committed history
-    and re-run from ITS stage — instead of treating the batch as fresh
-    and duplicating the history appends (ADVICE r5, streaming legacy
-    keys were accepted only on ledger READS)."""
-    import hashlib
-    import os
-
-    from dlx_spark import fsio
-    from dlx_spark.marc.store import MarcStore
-
-    store = MarcStore(spark, str(tmp_path / "wh_legacy"))
-    docs = [{"245": [{"indicators": [" ", " "],
-                      "subfields": [{"code": "a", "value": f"Leg doc {i}"}]}]}
-            for i in range(3)]
-    batch = spark.createDataFrame([(json.dumps(d),) for d in docs],
-                                  "value string")
-    ck = tmp_path / "ck_legacy"
-    ck.mkdir()
-    (ck / "metadata").write_text(json.dumps({"id": "run-legacy"}))
-    fn = streaming.make_commit_batch_fn(store, "bib", str(ck))
-
-    # crash the first attempt mid-commit (history appended, live not)
-    real_upsert = MarcStore._upsert
-    state = {"raised": False}
-
-    def upsert_boom(self, *a, **k):
-        if not state["raised"]:
-            state["raised"] = True
-            raise RuntimeError("crash mid-commit")
-        return real_upsert(self, *a, **k)
-    monkeypatch.setattr(MarcStore, "_upsert", upsert_boom)
-    with pytest.raises(RuntimeError):
-        fn(batch, 0)
-    assert store.history_df("bib").count() == 3
-    assert store.bibs().count() == 0
-
-    # rewrite the crash artifacts under the PRE-upgrade (abspath) key
-    new_key = hashlib.md5(
-        f"{fsio.qualified(spark, str(ck))}:run-legacy".encode()
-    ).hexdigest()[:16]
-    old_key = hashlib.md5(
-        f"{os.path.abspath(str(ck))}:run-legacy".encode()).hexdigest()[:16]
-    assert new_key != old_key
-    log = fsio.join(store.root, "_stream_commits_bib")
-    fsio.rename(spark, fsio.join(log, f"_intent_{new_key}_0.json"),
-                fsio.join(log, f"_intent_{old_key}_0.json"))
-    fsio.rename(spark, fsio.join(log, f"_batch_{new_key}_0"),
-                fsio.join(log, f"_batch_{old_key}_0"))
-
-    fn(batch, 0)   # replay post-upgrade: must adopt the legacy attempt
-    assert store.bibs().count() == 3
-    hist = store.history_df("bib")
-    assert hist.count() == 3                      # NOT duplicated
-    assert sorted(r["version"] for r in hist.collect()) == [1, 1, 1]
-    # legacy-named artifacts cleaned up by the completed commit
-    assert not fsio.exists(spark, fsio.join(log, f"_intent_{old_key}_0.json"))
-    assert not fsio.exists(spark, fsio.join(log, f"_batch_{old_key}_0"))
 
 
 @pytest.mark.slow
@@ -658,7 +593,7 @@ def test_segment_dedup_ingest_stream_cross_batch_and_replay(spark, tmp_path):
         # committed batch id must reproduce the output and leave the
         # index row count unchanged
         n_before = tableio.get_backend().read(
-            spark, f"{name}_segments").count()
+            spark, f"{name}/{name}_segments").count()
         fn = make_segment_dedup_batch_fn(name, out,
                                          checkpoint=str(tmp_path / "ckpt"))
         replay_df = spark.createDataFrame(
@@ -668,7 +603,7 @@ def test_segment_dedup_ingest_stream_cross_batch_and_replay(spark, tmp_path):
                for r in spark.read.parquet(out).collect()}
         assert got[20] == "m n o"
         n_after = tableio.get_backend().read(
-            spark, f"{name}_segments").count()
+            spark, f"{name}/{name}_segments").count()
         assert n_after == n_before
     finally:
         SegmentIndex(spark, name).drop()

@@ -117,9 +117,11 @@ def test_commit_retries_after_losing_version_race(spark, be):
     # simulate a concurrent append committing version 2 under us:
     # write its segment through the backend, then hand-commit a manifest
     other_seg = be._write_segment(spark, _df(spark, [(2, "b")]), "t4", "id")
-    m1 = be._read_manifest(spark, "t4", 1)
+    log = be._read_log(spark, "t4", 1)
+    entry = dict(log["members"]["t4"])
+    entry["segments"] = entry["segments"] + [other_seg]
     fsio.write_text(spark, be._manifest_path(spark, "t4", 2), json.dumps(
-        {**m1, "version": 2, "segments": m1["segments"] + [other_seg]}))
+        {**log, "version": 2, "members": {"t4": entry}}))
     be.append(_df(spark, [(3, "c")]), "t4", "id")
     assert be.versions(spark, "t4") == [1, 2, 3]
     # the append merged onto the competing head: all three rows live
@@ -215,10 +217,10 @@ def test_replace_fail_mode_raises_on_concurrent_append(spark, be):
 
 
 def test_compaction_keeps_append_racing_the_stage_build(spark, be):
-    """End-to-end through an index-style ``compact_segments(distinct=
-    True)``: an append that lands while the compacted segment is being
-    written (injected via a backend hook on the segment write) is
-    carried through the rewrite's commit."""
+    """End-to-end through an index-style ``compact_segments``: an append
+    that lands while the compacted segment is being written (injected
+    via a backend hook on the segment write) is carried through the
+    rewrite's commit."""
     class RacingBackend(VersionedTableBackend):
         def _write_segment(self, spark, df, table, key, *a, **kw):
             if getattr(self, "_armed", False) and not getattr(
@@ -229,11 +231,11 @@ def test_compaction_keeps_append_racing_the_stage_build(spark, be):
 
     rb = RacingBackend(root=be._root)
     rb.write(_df(spark, [(1, "a"), (2, "b")]), "tr", "id")
-    rb.append(_df(spark, [(1, "a")]), "tr", "id")
+    rb.append(_df(spark, [(3, "c")]), "tr", "id")
     rb._armed = True
-    assert rb.compact_segments(spark, "tr", distinct=True) == 2
+    assert rb.compact_segments(spark, "tr") == 2
     got = sorted(r["id"] for r in rb.read(spark, "tr").collect())
-    assert got == [1, 2, 99]   # dupes folded AND the raced row kept
+    assert got == [1, 2, 3, 99]   # folded AND the raced row kept
     assert rb._raced
 
 
@@ -325,10 +327,10 @@ def test_rebucket_conflict_fails_clean_on_concurrent_append(spark, be):
         assert rb._raced
         # live geometry unchanged, raced append present, no side table
         assert sorted(fsio.listdir(spark, fsio.join(be._root, "tables"))) \
-            == ["t_rbc_buckets", "t_rbc_meta", "t_rbc_vecs"]
+            == ["t_rbc"]
         reopened = EmbeddingIndex(spark, "t_rbc")
         assert reopened.params["n_planes"] == 4
-        assert rb.read(spark, "t_rbc_vecs").count() == 21
+        assert rb.read(spark, "t_rbc/t_rbc_vecs").count() == 21
         # the re-run (no race this time) succeeds
         reopened.rebucket(n_planes=6)
         assert EmbeddingIndex(spark, "t_rbc").params["n_planes"] == 6
@@ -510,7 +512,7 @@ def test_streaming_ingest_appends_through_versioned_backend(
     tableio.set_backend(be)
     try:
         MinHashIndex.create(corpus, "t_v_stream")
-        v_before = be.versions(spark, "t_v_stream_sigs")[-1]
+        v_before = be.versions(spark, "t_v_stream/t_v_stream_sigs")[-1]
         indir = tmp_path / "in"
         indir.mkdir()
         out = str(tmp_path / "clean")
@@ -539,9 +541,9 @@ def test_streaming_ingest_appends_through_versioned_backend(
         assert clean2 == set()   # dropped against the appended survivor
         # each committed micro-batch appended exactly one version; no
         # refreshTable was ever issued (reads re-resolve manifests)
-        assert be.versions(spark, "t_v_stream_sigs")[-1] > v_before
+        assert be.versions(spark, "t_v_stream/t_v_stream_sigs")[-1] > v_before
         idx = MinHashIndex(spark, "t_v_stream")
-        assert be.read(spark, "t_v_stream_sigs").count() == 21  # 20 + 101
+        assert be.read(spark, "t_v_stream/t_v_stream_sigs").count() == 21  # 20 + 101
         idx.drop()
     finally:
         tableio.set_backend(prev)
@@ -564,7 +566,7 @@ def test_digest_index_recovery_path_on_versioned_backend(spark, be):
         idx = DigestIndex.create(corpus, "t_v_dg")
         idx.append(_df(spark, [(3, "eta theta")],
                        "doc_id long, text string"))
-        head = be.snapshot_token(spark, "t_v_dg_digests")
+        head = be.snapshot_token(spark, "t_v_dg/t_v_dg_digests")
 
         def crash(spark, table, payload_fn):
             raise RuntimeError("simulated crash at the compaction commit")
@@ -574,16 +576,16 @@ def test_digest_index_recovery_path_on_versioned_backend(spark, be):
             idx.compact()
         del be._commit
         idx = DigestIndex(spark, "t_v_dg")
-        assert be.snapshot_token(spark, "t_v_dg_digests") == head
+        assert be.snapshot_token(spark, "t_v_dg/t_v_dg_digests") == head
         be.vacuum(spark, keep_last=1, min_age_seconds=0)
         assert sorted(fsio.listdir(spark, fsio.join(be._root, "data"))) \
-            == sorted(be.snapshot_token(spark, "t_v_dg_digests")
-                      + be.snapshot_token(spark, "t_v_dg_meta"))
+            == sorted(be.snapshot_token(spark, "t_v_dg/t_v_dg_digests")
+                      + be.snapshot_token(spark, "t_v_dg/t_v_dg_meta"))
         clean = sorted(r["doc_id"] for r in idx.filter_new(batch).collect())
         assert clean == [6]
         # and a full normal compaction still works end-to-end
         idx.compact()
-        assert len(be.snapshot_token(spark, "t_v_dg_digests")) == 1
+        assert len(be.snapshot_token(spark, "t_v_dg/t_v_dg_digests")) == 1
         assert sorted(r["doc_id"] for r in idx.filter_new(batch).collect()) \
             == [6]
         idx.drop()
@@ -665,14 +667,14 @@ def test_partition_pruning_survives_versioned_segments(spark, be):
         tableio.set_backend(prev)
 
 
-def test_vacuum_age_gates_superseded_manifests_and_compactseg_stages(
+def test_vacuum_age_gates_superseded_manifests_and_dropped_members(
         spark, be):
     """Review fixes: (a) superseded manifests younger than the horizon
     survive vacuum — a concurrent committer that listed the old head
     must be able to read it and retry, not die on a vanished file;
-    (b) an aged stage table of the retired staged-swap protocol (an
-    earlier release's crashed compact_segments or rebucket) is dropped
-    by vacuum, freeing its segments."""
+    (b) a member dropped from its table group keeps its segments while
+    any retained group version references them, and vacuum reclaims
+    them once none does — the group's other members untouched."""
     be.write(_df(spark, [(1, "v1")]), "t_age", "id")
     be.write(_df(spark, [(2, "v2")]), "t_age", "id")
     be.vacuum(spark, keep_last=1)                 # default horizon
@@ -683,24 +685,23 @@ def test_vacuum_age_gates_superseded_manifests_and_compactseg_stages(
     # zero horizon: trimmed as before
     be.vacuum(spark, keep_last=1, min_age_seconds=0)
     assert be.versions(spark, "t_age") == [2]
+    be.write(_df(spark, [(1, "a")]), "g_cs/keep", "id")
+    be.write(_df(spark, [(2, "b")]), "g_cs/gone", "id")
+    segs = be.snapshot_token(spark, "g_cs/gone")
 
-    # an earlier release's crashed stages: the tables exist, their
-    # swap never committed -> aged vacuum drops them and reclaims the
-    # segments
-    be.write(_df(spark, [(1, "a")]), "t_cs", "id")
-    be.append(_df(spark, [(2, "b")]), "t_cs", "id")
-    stages = ("t_cs__compactseg", "t_cs_rebucket_intent")
-    for stage in stages:
-        be.write(be.read(spark, "t_cs"), stage, "id")
-    segs = [be.snapshot_token(spark, t)[0] for t in stages]
-    be.vacuum(spark, keep_last=1)                 # young: stages kept
-    assert all(be.exists(spark, t) for t in stages)
+    def present():
+        return [fsio.exists(spark, be._data_dir(spark, s)) for s in segs]
+
     be.vacuum(spark, keep_last=1, min_age_seconds=0)
-    assert not any(be.exists(spark, t) for t in stages)
-    assert not any(fsio.exists(spark, be._data_dir(spark, seg))
-                   for seg in segs)
-    # the live table is untouched
-    assert sorted(r["id"] for r in be.read(spark, "t_cs").collect()) == [1, 2]
+    assert all(present())                         # the head references them
+    be.drop(spark, "g_cs/gone")
+    assert not be.exists(spark, "g_cs/gone")
+    be.vacuum(spark, keep_last=1)                 # young: version kept
+    assert all(present())
+    be.vacuum(spark, keep_last=1, min_age_seconds=0)
+    assert not any(present())
+    # the group's other member is untouched
+    assert [r["id"] for r in be.read(spark, "g_cs/keep").collect()] == [1]
 
 
 @pytest.mark.slow
@@ -845,14 +846,14 @@ def test_multisegment_ann_probes_never_full_scan(spark, be, touched_buckets):
         for j in range(2):
             idx.append(df.withColumn("vec_id",
                                      F.col("vec_id") + (j + 1) * 1000))
-        assert len(be.snapshot_token(spark, "t_ms_emb_vecs")) == 3
-        assert len(be.snapshot_token(spark, "t_ms_emb_buckets")) == 3
+        assert len(be.snapshot_token(spark, "t_ms_emb/t_ms_emb_vecs")) == 3
+        assert len(be.snapshot_token(spark, "t_ms_emb/t_ms_emb_buckets")) == 3
         probes = df.filter(F.col("vec_id") % 10 == 0).select(
             (F.col("vec_id") + 9000).alias("vec_id"), "embedding")
         got = idx.knn(probes, k=3)
         grouped, brute = touched_buckets(idx, probes)
         assert grouped == brute
-        assert 0 < len(brute) < be.read(spark, "t_ms_emb_buckets").count()
+        assert 0 < len(brute) < be.read(spark, "t_ms_emb/t_ms_emb_buckets").count()
         # appended rows are probeable (same seeded hyperplane family):
         # compare against on-the-fly knn over the SAME corpus the index
         # holds — limit(20) of the write + the two appended replicas
